@@ -9,17 +9,19 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
 /** dbt-docs-style lineage/catalog artifact (reference: the DAG's
   * `dbt docs generate` task, dags/weatherstack_full_pipeline.py:165-169,
   * and the exposures block in dbt/models/marts/schema.yml:44-72): one
-  * entry per model with its layer, output schema, and upstream
-  * dependencies.
+  * entry per model with its layer, output schema, upstream dependencies
+  * and data-quality tests.
   *
   * Schemas are derived from the REAL pipeline transforms applied to an
-  * empty payload frame — the manifest can never drift from the code the
+  * empty payload frame, and tests are the names of the contracts
+  * `runBatch` gates on — the manifest can never drift from the code the
   * way a hand-written YAML can.
   */
 object ModelManifest {
 
   final case class Model(name: String, layer: String,
-                         columns: Seq[(String, String)], dependsOn: Seq[String])
+                         columns: Seq[(String, String)], dependsOn: Seq[String],
+                         tests: Seq[String])
 
   /** The three-layer lineage: source → raw → staging → {dim, fct}. */
   def models(spark: SparkSession): Seq[Model] = {
@@ -34,10 +36,13 @@ object ModelManifest {
     def cols(df: org.apache.spark.sql.DataFrame): Seq[(String, String)] =
       df.schema.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
     Seq(
-      Model("raw.weather", "raw", cols(raw), Seq("source.weatherstack_api")),
-      Model("staging.stg_weather", "staging", cols(stg), Seq("raw.weather")),
-      Model("marts.dim_locations", "marts", cols(dim), Seq("staging.stg_weather")),
-      Model("marts.fct_weather_observations", "marts", cols(fct), Seq("staging.stg_weather")))
+      Model("raw.weather", "raw", cols(raw), Seq("source.weatherstack_api"),
+        WeatherPipeline.rawWeatherTests.map(_.name)),
+      Model("staging.stg_weather", "staging", cols(stg), Seq("raw.weather"), Nil),
+      Model("marts.dim_locations", "marts", cols(dim), Seq("staging.stg_weather"),
+        WeatherPipeline.dimLocationsTests.map(_.name)),
+      Model("marts.fct_weather_observations", "marts", cols(fct), Seq("staging.stg_weather"),
+        WeatherPipeline.fctWeatherObservationsTests.map(_.name)))
   }
 
   /** Render the manifest as JSON (no external libs; names/types contain
@@ -48,8 +53,9 @@ object ModelManifest {
       val cols = m.columns.map { case (n, t) => s"{${q("name")}:${q(n)},${q("type")}:${q(t)}}" }
         .mkString("[", ",", "]")
       val deps = m.dependsOn.map(q).mkString("[", ",", "]")
+      val tests = m.tests.map(q).mkString("[", ",", "]")
       s"{${q("name")}:${q(m.name)},${q("layer")}:${q(m.layer)}," +
-        s"${q("columns")}:$cols,${q("depends_on")}:$deps}"
+        s"${q("columns")}:$cols,${q("depends_on")}:$deps,${q("tests")}:$tests}"
     }.mkString("{\"models\":[", ",", "]}")
   }
 

@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.ops.Relational
+import graft.quality.Checks
+import graft.quality.Checks._
 
 /** The reference pipeline (bronze → silver → gold) re-expressed as pure
   * DataFrame functions. Reference: caphey/weather-api-automate-etl —
@@ -15,10 +17,11 @@ import graft.ops.Relational
   * `dbt/models/marts/` (dim_locations.sql, fct_weather_observations.sql).
   *
   * Orchestration collapses to function composition (SURVEY.md §3.1): the
-  * Airflow task chain becomes `ingest → stg → {dim, fct}` with the dbt
-  * tests as violation-DataFrame assertions between stages. At scale the
-  * mart writes partition by `extraction_date` so daily re-runs overwrite
-  * one partition instead of the table.
+  * Airflow task chain becomes `ingest → stg → {dim, fct}`, gated by the
+  * models' dbt tests declared as `quality.Checks` contracts
+  * (`rawWeatherTests`, `dimLocationsTests`, `fctWeatherObservationsTests`).
+  * At scale the mart writes partition by `extraction_date` so daily
+  * re-runs overwrite one partition instead of the table.
   */
 object WeatherPipeline {
 
@@ -68,7 +71,10 @@ object WeatherPipeline {
     * :51-72); Spark's job starts at the payload.
     *
     * Semantics preserved from the reference:
-    *  - error payloads are routed out, never fail the batch (:75-77)
+    *  - error payloads are routed out, never fail the batch (:75-77);
+    *    so are payloads without a `current` block: a truncated payload
+    *    parses to a partial struct, where the reference's `.json()`
+    *    raises and the city is skipped
     *  - location.name falls back to the queried city (:97)
     *  - weather_descriptions[0] (:100)
     *  - extracted_at default (DDL :39); injectable `now` keeps tests and
@@ -79,7 +85,7 @@ object WeatherPipeline {
     val j = from_json(col("raw_json"), payloadSchema)
     payloads
       .withColumn("j", j)
-      .filter(col("j").isNotNull && col("j.error").isNull)
+      .filter(col("j.error").isNull && col("j.current").isNotNull)
       .select(
         // Deterministic surrogate for the reference's SERIAL id
         // (dags/weatherstack_full_pipeline.py:27): hash of the natural key
@@ -164,37 +170,23 @@ object WeatherPipeline {
       col("extracted_at"),
       col("data_interval_start"))
 
-  /** dbt test suite (SURVEY.md §2.9) as violation DataFrames; the pipeline
-    * gate is `violations.isEmpty`, exactly like `dbt test` returning 0
-    * rows. */
-  object Tests {
-    val TemperatureCategories = Seq("Freezing", "Cold", "Mild", "Warm", "Hot")
+  val TemperatureCategories = Seq("Freezing", "Cold", "Mild", "Warm", "Hot")
 
-    def uniqueLocationKey(dim: DataFrame): DataFrame =
-      Relational.duplicates(dim, Seq("location_key"))
+  /** Source-tier tests (`dbt/models/staging/_staging__sources.yml`), the
+    * gate the DAG runs as `dbt test --select staging` (step 4) BEFORE
+    * `dbt run --select marts` (step 5). */
+  val rawWeatherTests: Seq[Check] = Seq(
+    Unique(Seq("id")), NotNull("id"), NotNull("city"), NotNull("extracted_at"))
 
-    def notNull(df: DataFrame, cols: Seq[String]): DataFrame =
-      cols.map(Relational.nullViolations(df, _)).reduce(_ unionByName _)
-
-    def acceptedTemperatureCategories(fct: DataFrame): DataFrame =
-      Relational.acceptedValuesViolations(fct, "temperature_category", TemperatureCategories)
-
-    /** Source-tier tests (`dbt/models/staging/_staging__sources.yml`:
-      * raw.weather id unique + not_null, city not_null, extracted_at
-      * not_null) — the gate the DAG runs as `dbt test --select staging`
-      * (step 4) BEFORE `dbt run --select marts` (step 5): a source-tier
-      * failure must short-circuit the chain before any mart is built. */
-    def sourceTests(raw: DataFrame): Map[String, DataFrame] = Map(
-      "unique_raw_weather_id" -> Relational.duplicates(raw, Seq("id")),
-      "not_null_raw_weather" -> notNull(raw, Seq("id", "city", "extracted_at")))
-
-    /** All gates; pipeline proceeds iff every frame is empty. */
-    def all(dim: DataFrame, fct: DataFrame): Map[String, DataFrame] = Map(
-      "unique_dim_locations_location_key" -> uniqueLocationKey(dim),
-      "not_null_dim_locations" -> notNull(dim, Seq("location_key", "total_observations")),
-      "not_null_fct" -> notNull(fct, Seq("observation_id", "location_key", "extracted_at")),
-      "accepted_values_temperature_category" -> acceptedTemperatureCategories(fct))
-  }
+  /** Mart tests (`dbt/models/marts/schema.yml`), plus the temperature
+    * plausibility range the reference left on its roadmap: it pins
+    * staging's -50..60 filter as a declared invariant of the fact. */
+  val dimLocationsTests: Seq[Check] = Seq(
+    Unique(Seq("location_key")), NotNull("location_key"), NotNull("total_observations"))
+  val fctWeatherObservationsTests: Seq[Check] = Seq(
+    NotNull("observation_id"), NotNull("location_key"), NotNull("extracted_at"),
+    AcceptedValues("temperature_category", TemperatureCategories),
+    InRange("temperature", -50, 60))
 
   /** Structured Streaming variant (SURVEY.md §7.2-5): the SAME ingest +
     * staging transforms run incrementally over a JSON landing directory —
@@ -226,12 +218,14 @@ object WeatherPipeline {
   }
 
   /** End-to-end batch run mirroring the DAG's task chain
-    * (dags/weatherstack_full_pipeline.py:172): ingest → staging → test →
-    * marts → test → write. Throws on test failure like the DAG's failing
-    * dbt_test task.
+    * (dags/weatherstack_full_pipeline.py:172): ingest → raw write →
+    * source gate → staging → marts → mart gate → mart writes. Each gate
+    * is one `Checks.assertAll` action, which throws an
+    * IllegalArgumentException naming every failing `<model>.<check>`,
+    * like the DAG's failing dbt_test task.
     *
-    * Scale posture: `raw` is persisted across its four consumers (raw
-    * append + two marts + tests) instead of re-parsing the payloads per
+    * Scale posture: `raw` is persisted across its consumers (raw append,
+    * both gates, both marts) instead of re-parsing the payloads per
     * sink, and the fact write goes through DYNAMIC partition overwrite
     * (graft.sources.IO.writePartitioned) — a daily re-run replaces only
     * the `extraction_date` partitions present in the batch, O(day) not
@@ -239,25 +233,21 @@ object WeatherPipeline {
     */
   def runBatch(payloads: DataFrame, dataIntervalStart: Timestamp, now: Timestamp,
                outDir: String): Unit = {
-    def gate(tests: Map[String, DataFrame]): Unit =
-      tests.foreach { case (name, violations) =>
-        val n = violations.limit(1).count()
-        require(n == 0, s"data-quality test failed: $name")
-      }
     val raw = ingest(payloads, dataIntervalStart, now)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       raw.write.mode("append").parquet(s"$outDir/raw/weather")
       // GATE 1 — source-tier tests (DAG step 4): a failure short-circuits
       // here, before any mart is BUILT, mirroring dbt_test >> dbt_run_marts.
-      gate(Tests.sourceTests(raw))
+      Checks.assertAll(("raw_weather", raw, rawWeatherTests))
       val stg = stgWeather(raw)
       val dim = dimLocations(stg)
       val fct = fctWeatherObservations(stg)
       // GATE 2 — marts-tier tests (DAG step 6). Stricter than the DAG by
       // design: dbt writes the marts in step 5 and validates after; here
       // the tests gate the WRITES, so a failing mart never goes live.
-      gate(Tests.all(dim, fct))
+      Checks.assertAll(("dim_locations", dim, dimLocationsTests),
+        ("fct_weather_observations", fct, fctWeatherObservationsTests))
       dim.write.mode("overwrite").parquet(s"$outDir/marts/dim_locations")
       graft.sources.IO.writePartitioned(fct, Seq("extraction_date"),
         s"$outDir/marts/fct_weather_observations")

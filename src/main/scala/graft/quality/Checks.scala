@@ -12,13 +12,14 @@ import graft.ops.Relational
   *
   *   val checks = Seq(Unique(Seq("id")), NotNull("city"),
   *                    AcceptedValues("cat", Seq("a", "b")), InRange("t", -50, 60))
-  *   Checks.report(df, checks)     // one row per check with violation count
-  *   Checks.assertAll(df, checks)  // throw on first failure (pipeline gate)
+  *   Checks.reportDf(df, checks)                  // (check, n_violations, passed)
+  *   Checks.assertAll(("model", df, checks), ...)  // throw naming every failure
   *
   * Each check compiles to a violations DataFrame (the dbt "test query
-  * returns 0 rows" contract) — fully distributed, nothing collects
-  * besides the per-check limit-1 existence probe in assertAll and the
-  * aggregated counts in report.
+  * returns 0 rows" contract). Counting goes through `reportDf` only, so
+  * the report and the gate cannot disagree: every row-level check fuses
+  * into one conditional aggregate and each Unique adds one grouping
+  * branch; nothing reaches the driver but the counts.
   */
 object Checks {
 
@@ -27,7 +28,7 @@ object Checks {
     def violations(df: DataFrame): DataFrame
 
     /** Row-level violation predicate, when the check is expressible per
-      * row: lets `report` fuse every such check into ONE conditional
+      * row: lets `reportDf` fuse every such check into ONE conditional
       * aggregate pass. None for checks that need grouping (Unique). */
     def rowViolation: Option[Column] = None
   }
@@ -72,33 +73,12 @@ object Checks {
     override def rowViolation: Option[Column] = Some(not(expr(predicateSql)))
   }
 
-  /** One row per check: (check, n_violations, passed). All row-predicate
-    * checks (not_null / accepted_values / in_range / satisfies) fuse into
-    * a SINGLE conditional-aggregate scan — one job however many checks —
-    * and only grouping checks (Unique) cost an extra aggregation each. */
-  def report(df: DataFrame, checks: Seq[Check]): Seq[(String, Long, Boolean)] = {
-    val fused = checks.zipWithIndex
-      .collect { case (c, i) => c.rowViolation.map(p => (i, c, p)) }.flatten
-    val fusedCounts: Map[Int, Long] =
-      if (fused.isEmpty) Map.empty
-      else {
-        val aggs = fused.map { case (i, _, p) =>
-          coalesce(sum(when(p, 1L).otherwise(0L)), lit(0L)).as(s"c_$i")
-        }
-        val row = df.agg(aggs.head, aggs.tail: _*).head()
-        fused.map { case (i, _, _) => i -> row.getAs[Long](s"c_$i") }.toMap
-      }
-    checks.zipWithIndex.map { case (c, i) =>
-      val n = fusedCounts.getOrElse(i, c.violations(df).count())
-      (c.name, n, n == 0)
-    }
-  }
-
-  /** [[report]] as a DataFrame — the form a contract dashboard or a
-    * downstream gate table consumes, and the form the oracle can verify.
-    * Same fusion contract: every row-predicate check becomes one entry of
-    * an array-of-structs built in a SINGLE conditional-aggregate scan
-    * (one job however many checks, map-side partials) and exploded to
+  /** One row per check: (check, n_violations, passed) — the form a
+    * contract dashboard or a downstream gate table consumes, and the form
+    * the oracle can verify. Every row-predicate check (not_null /
+    * accepted_values / in_range / satisfies) becomes one entry of an
+    * array-of-structs built in a SINGLE conditional-aggregate scan (one
+    * job however many checks, map-side partials) and exploded to
     * (check, n_violations) rows; each grouping check (Unique) contributes
     * its own aggregate branch, unioned — at scale the branches
     * parallelize and none reads more than its key columns. */
@@ -124,14 +104,21 @@ object Checks {
       .withColumn("passed", col("n_violations") === 0L)
   }
 
-  /** Pipeline gate: throws on the first failing check (mirrors the
-    * reference DAG failing on dbt test, dags/weatherstack_full_pipeline
-    * .py:147-151). Uses a limit-1 existence probe, not a full count. */
-  def assertAll(df: DataFrame, checks: Seq[Check]): Unit =
-    checks.foreach { c =>
-      require(c.violations(df).limit(1).count() == 0,
-        s"data-quality check failed: ${c.name}")
-    }
+  /** Pipeline gate over one or more (model, frame, contract) triples:
+    * the models' [[reportDf]]s are unioned and collected in one action,
+    * and any violation throws an IllegalArgumentException naming every
+    * failing `<model>.<check>` (mirrors the reference DAG failing on dbt
+    * test, dags/weatherstack_full_pipeline.py:147-151). */
+  def assertAll(contract: (String, DataFrame, Seq[Check]),
+                more: (String, DataFrame, Seq[Check])*): Unit = {
+    val failing = (contract +: more)
+      .map { case (model, df, checks) =>
+        reportDf(df, checks).filter(!col("passed"))
+          .select(concat_ws(".", lit(model), col("check"))) }
+      .reduce(_.unionAll(_))
+      .collect().map(_.getString(0)).sorted
+    require(failing.isEmpty, s"data-quality check failed: ${failing.mkString(", ")}")
+  }
 
   /** Per-column data PROFILE — the table-summary report of dbt docs /
     * Deequ-style profilers: one row per profiled column with row count,

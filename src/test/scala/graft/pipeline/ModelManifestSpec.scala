@@ -18,6 +18,12 @@ class ModelManifestSpec extends SparkSpec {
     assert(byName("marts.dim_locations").columns.map(_._1).contains("location_key"))
     assert(byName("marts.fct_weather_observations").columns
       .exists(_ == ("day_of_week", "int")))
+    // tests are the contracts runBatch gates on
+    assert(byName("marts.fct_weather_observations").tests == Seq(
+      "not_null_observation_id", "not_null_location_key", "not_null_extracted_at",
+      "accepted_values_temperature_category", "in_range_temperature"))
+    assert(byName("raw.weather").tests.contains("unique_id"))
+    assert(byName("staging.stg_weather").tests.isEmpty)
   }
 
   test("manifest.json is written and structurally sound") {
@@ -28,5 +34,6 @@ class ModelManifestSpec extends SparkSpec {
     assert(json.contains("\"name\":\"marts.fct_weather_observations\""))
     assert(json.contains("\"depends_on\":[\"staging.stg_weather\"]"))
     assert(json.contains("\"layer\":\"raw\""))
+    assert(json.contains("\"tests\":[\"unique_location_key\""))
   }
 }

@@ -28,8 +28,13 @@ class WeatherPipelineSpec extends SparkSpec {
   ).toDF("city", "raw_json")
 
   test("ingest routes error payloads out and extracts nested fields") {
-    val raw = WeatherPipeline.ingest(payloads, t0, now)
-    assert(raw.count() == 4) // ErrCity dropped
+    // a truncated payload parses (PERMISSIVE from_json) to a partial
+    // struct: location set, current null — it must not land in raw
+    val truncated = Seq(("Oslo", payload("Oslo", "Norway", 5, "sunny").take(60)))
+      .toDF("city", "raw_json")
+    val raw = WeatherPipeline.ingest(payloads.union(truncated), t0, now)
+    assert(raw.count() == 4) // ErrCity and the truncated Oslo payload dropped
+    assert(raw.filter($"city" === "Oslo").isEmpty)
     val paris = raw.filter($"city" === "Paris").collect().head
     assert(paris.getAs[String]("country") == "France")
     assert(paris.getAs[Int]("temperature") == 18)
@@ -68,15 +73,20 @@ class WeatherPipelineSpec extends SparkSpec {
   }
 
   test("data-quality gates pass on clean data and catch violations") {
-    val stg = WeatherPipeline.stgWeather(WeatherPipeline.ingest(payloads, t0, now))
+    val raw = WeatherPipeline.ingest(payloads, t0, now)
+    val stg = WeatherPipeline.stgWeather(raw)
     val dim = WeatherPipeline.dimLocations(stg)
     val fct = WeatherPipeline.fctWeatherObservations(stg)
-    WeatherPipeline.Tests.all(dim, fct).foreach { case (name, violations) =>
-      assert(violations.isEmpty, s"unexpected violations in $name")
-    }
-    // inject a bad category → accepted_values must flag it
+    graft.quality.Checks.assertAll(
+      ("raw_weather", raw, WeatherPipeline.rawWeatherTests),
+      ("dim_locations", dim, WeatherPipeline.dimLocationsTests),
+      ("fct_weather_observations", fct, WeatherPipeline.fctWeatherObservationsTests))
+    // inject a bad category → accepted_values must count every row
     val bad = fct.withColumn("temperature_category", lit("Scorching"))
-    assert(WeatherPipeline.Tests.acceptedTemperatureCategories(bad).count() == bad.count())
+    val n = graft.quality.Checks.reportDf(bad, WeatherPipeline.fctWeatherObservationsTests)
+      .filter($"check" === "accepted_values_temperature_category")
+      .select("n_violations").as[Long].collect()
+    assert(n.toSeq == Seq(bad.count()))
   }
 
   test("end-to-end: JSON landing files → permissive source → pipeline → partitioned marts") {
@@ -159,7 +169,7 @@ class WeatherPipelineSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       WeatherPipeline.runBatch(dup, t0, now, dir2)
     }
-    assert(e.getMessage.contains("unique_raw_weather_id"))
+    assert(e.getMessage.contains("raw_weather.unique_id"))
     assert(new java.io.File(s"$dir2/raw/weather").exists()) // raw landed (step 2 ran)
     assert(!new java.io.File(s"$dir2/marts").exists(),
       "a failing staging test must short-circuit before any mart write")

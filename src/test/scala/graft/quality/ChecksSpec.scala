@@ -20,9 +20,12 @@ class ChecksSpec extends SparkSpec {
     InRange("temperature", -50, 60),
     Satisfies("temp_int_range", "temperature BETWEEN -273 AND 1000"))
 
+  private def counts(df: org.apache.spark.sql.DataFrame, checks: Seq[Check]) =
+    Checks.reportDf(df, checks).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))).toSet
+
   test("report counts violations per check") {
-    val rep = Checks.report(df, contract).map { case (n, c, p) => (n, c, p) }
-    assert(rep == Seq(
+    assert(counts(df, contract) == Set(
       ("unique_id", 1L, false),          // id 3 twice
       ("not_null_city", 1L, false),
       ("accepted_values_category", 1L, false), // Scorching
@@ -30,19 +33,27 @@ class ChecksSpec extends SparkSpec {
       ("temp_int_range", 0L, true)))
   }
 
-  test("reportDf matches report row-for-row (fused + grouped branches)") {
-    val fromDf = Checks.reportDf(df, contract).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getBoolean(2))).toSet
-    val fromSeq = Checks.report(df, contract).toSet
-    assert(fromDf == fromSeq)
+  test("reportDf matches each check's own violations count") {
+    val own = contract.map { c =>
+      val n = c.violations(df).count()
+      (c.name, n, n == 0)
+    }
+    assert(counts(df, contract) == own.toSet)
     // every contract check is present exactly once
-    assert(fromDf.map(_._1) == contract.map(_.name).toSet)
+    assert(Checks.reportDf(df, contract).count() == contract.size)
   }
 
   test("assertAll passes a clean frame and names the failing check") {
-    Checks.assertAll(df.limit(2), contract) // first two rows are clean
-    val e = intercept[IllegalArgumentException](Checks.assertAll(df, contract))
-    assert(e.getMessage.contains("unique_id"))
+    Checks.assertAll(("clean", df.limit(2), contract)) // first two rows are clean
+    val e = intercept[IllegalArgumentException](Checks.assertAll(("t", df, contract)))
+    assert(e.getMessage.contains("t.unique_id"))
+    assert(e.getMessage.contains("t.in_range_temperature"))
+    assert(!e.getMessage.contains("temp_int_range")) // a passing check is not named
+    // one call over two models names the failures of both
+    val ids = Seq(1L, 1L).toDF("id")
+    val e2 = intercept[IllegalArgumentException](Checks.assertAll(
+      ("a", df, Seq(NotNull("city"))), ("b", ids, Seq(Unique(Seq("id"))))))
+    assert(e2.getMessage.contains("a.not_null_city") && e2.getMessage.contains("b.unique_id"))
   }
 
   test("profile reports rows, nulls, distincts, and stringified min/max per column") {
