@@ -1,11 +1,13 @@
 package graft
+
+import graft.obs.Trace
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    val spark = Sessions.build(cpus, Map(
-      "spark.sql.adaptive.enabled" -> sys.env.getOrElse("SPARK_GRAFT_AQE", "true")))
+    val spark = Sessions.build(cpus)
     spark.sparkContext.setLogLevel("WARN")
     // REGIME CANARY (r12 judge protocol): the round-12 driver bench read
     // 2× its quiet-host figure because the host disk was busy digesting
@@ -123,27 +125,18 @@ object Bench {
       // that ride those paths are cold-timed like every other
       // private-artifact biller; warm reuse flattered them 2–3×.
       "q_curriculum", "q_pareto_front")
-    // HARNESS-FLOOR FUSION (r15 verdict item 1, pre-built behind a flag):
-    // the registry floor (rows × ~0.1 s of per-action engine constants)
-    // read 24.0% of the r15 close total and rises with every row; the
-    // PLANS.md floor audit maps three families whose rows share one scan
-    // or one persisted artifact. SPARK_GRAFT_BENCH_FUSE=true replaces
-    // those rows with ONE timed unit per family: the union of every
-    // member's (count, content-hash) aggregate, collected as a single
-    // Spark action — the member plans still run in full (fusion changes
-    // the HARNESS shape, never a query's contract; Verify/CORRECTNESS
-    // are untouched), but the per-row job-submit/collect floor is paid
-    // once per family instead of once per member.
-    // DEFAULT = ON since r17 (the r16 verdict's item 1: the floor
-    // fraction crossed the agreed 25% trigger at the r16 close — 26.2%
-    // — and the A/B was measured in SCALE_r16 study 4). The headline
-    // `queries` object carries the three fused keys in place of their
-    // member rows; member-level visibility moves to bench_full.json
-    // (`fused_families` = the unit→members mapping, `fused_member_sec` =
-    // one untimed-headline individual pass per member, recorded AFTER
-    // the timed suite so per-row tuning stays possible). Export
-    // SPARK_GRAFT_BENCH_FUSE=false for the historical per-row shape.
-    val fuseMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_FUSE", "true").toBoolean
+    // HARNESS-FLOOR FUSION: the registry floor (rows × ~0.1 s of
+    // per-action engine constants) is paid once per family, not once per
+    // member, for three families whose rows share one scan or one
+    // persisted artifact (PLANS.md floor audit). Each family is ONE timed
+    // unit: the union of every member's (count, content-hash) aggregate,
+    // collected as a single Spark action — the member plans still run in
+    // full (fusion changes the HARNESS shape, never a query's contract;
+    // Verify/CORRECTNESS are untouched). The headline `queries` object
+    // carries the three fused keys in place of their member rows;
+    // member-level visibility is in bench_full.json (`fused_families` =
+    // the unit→members mapping, `fused_member_sec` = one untimed-headline
+    // individual pass per member, recorded AFTER the timed suite).
     val fusedFamilies: Map[String, Seq[String]] = Map(
       // calendar-bounded day-table profiles: one events → (day, n)
       // aggregate feeds all four readouts
@@ -156,8 +149,7 @@ object Bench {
       // ANN rows share the persisted index artifacts (Caches.memo)
       "fused:ann" -> Seq("q_ann_lsh", "q_ann_lsh_mp", "q_ann_lsh_mp_r2",
         "q_ann_ivf", "q_ann_ivf_trained", "q_ann_recall"))
-    val fusedMembers: Set[String] =
-      if (fuseMode) fusedFamilies.values.flatten.toSet else Set.empty
+    val fusedMembers: Set[String] = fusedFamilies.values.flatten.toSet
     // One action per family: each member reduces to one row
     // (name, n_rows, order-insensitive content hash) — the same two
     // quantities the correctness gate compares — and the rows union into
@@ -198,6 +190,8 @@ object Bench {
       if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
     val failed = scala.collection.mutable.ListBuffer[String]()
+    // per-row engine counts of the final timed pass (graft.obs.Trace)
+    val traces = scala.collection.mutable.Map[String, Trace.Report]()
     // r16 (r15 advice): prewarm failures carry tag-formatted provenance
     // ("prewarm:<producer>:for:<consumer>"), not registered query names —
     // downstream tooling reads `failed` entries AS query names, so the
@@ -231,8 +225,7 @@ object Bench {
       "q_knn_triangles" -> "q_knn_graph")
     val regimeSegments = scala.collection.mutable.ListBuffer[(String, Double, Double, Double)]()
     val sortedQueries: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)] =
-      if (!fuseMode) SparkEntry.queries.toSeq.sortBy(_._1)
-      else (SparkEntry.queries.toSeq.filterNot { case (n, _) => fusedMembers(n) } ++
+      (SparkEntry.queries.toSeq.filterNot { case (n, _) => fusedMembers(n) } ++
         fusedFamilies.toSeq.map { case (fam, members) =>
           fam -> ((_: org.apache.spark.sql.SparkSession, _: String) => fusedUnit(members))
         }).sortBy(_._1)
@@ -247,7 +240,7 @@ object Bench {
           .getOperatingSystemMXBean.getSystemLoadAverage
         regimeSegments += ((name, ioCanary(), cpuCanary(), load))
       }
-      val times = (1 to passes).map { _ =>
+      val times = (1 to passes).map { pass =>
         if (cachingQueries(name)) {
           spark.catalog.clearCache(); Caches.release()
           familyPrewarm.get(name).foreach { producer =>
@@ -267,13 +260,19 @@ object Bench {
         }
         System.gc() // don't bill one run's garbage to the next
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable =>
+        def run(): Double = { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+        // the final pass is traced; its time is read before the trace
+        // drains the listener bus
+        try {
+          if (pass < passes) run()
+          else { val (secs, report) = Trace.around(spark)(run()); traces(name) = report; secs }
+        } catch { case e: Throwable =>
           // the elapsed time is captured HERE, before any attribution
           // re-run below executes (r16 advice: the member re-runs used
           // to sit inside the timed region, so a fused row's failure
           // path billed up to N extra member executions to its median)
           val elapsed = (System.nanoTime() - t0) / 1e9
+          e match { case f: Trace.Failed => traces(name) = f.report; case _ => () }
           // `failed` holds REGISTERED QUERY NAMES only (the prewarm-tag
           // lesson). A fused unit's single action can't attribute its
           // own failure, so re-run the members individually OUTSIDE the
@@ -281,7 +280,7 @@ object Bench {
           // passes alone (a harness-shape bug), the family tag goes to
           // the provenance list instead.
           fusedFamilies.get(name) match {
-            case Some(members) if fuseMode =>
+            case Some(members) =>
               val culprits = members.filter { m =>
                 try { SparkEntry.queries(m)(spark, sfDir).count(); false }
                 catch { case _: Throwable => true }
@@ -327,8 +326,7 @@ object Bench {
     // records the -1.0 sentinel rather than an elapsed-until-throw time
     // masquerading as a clean run.
     val fusedMemberSec: Seq[(String, Double)] =
-      if (!fuseMode) Seq.empty
-      else fusedFamilies.toSeq.sortBy(_._1).flatMap(_._2).map { m =>
+      fusedFamilies.toSeq.sortBy(_._1).flatMap(_._2).map { m =>
         System.gc()
         val t0 = System.nanoTime()
         try { SparkEntry.queries(m)(spark, sfDir).count()
@@ -401,29 +399,28 @@ object Bench {
       val segs = regimeSegments.map { case (name, c, cc, l) =>
         s"""{"before":"$name","io_canary_sec":$c,"cpu_canary_sec":$cc,"loadavg":$l}"""
       }.mkString("[", ",", "]")
-      val fusedProv =
-        if (!fuseMode) ""
-        else {
-          val fams = fusedFamilies.toSeq.sortBy(_._1).map { case (fam, ms) =>
-            "\"" + fam + "\":" + ms.map("\"" + _ + "\"").mkString("[", ",", "]")
-          }.mkString("{", ",", "}")
-          val members = fusedMemberSec.map { case (m, v) =>
-            "\"" + m + "\":" + v
-          }.mkString("{", ",", "}")
-          s""""fused_families":$fams,"fused_member_sec":$members,""" +
-            // the label travels IN the artifact (r17 verdict nit): these
-            // are attribution numbers, not medians — say so where they
-            // are read, not only in the source
-            s""""fused_member_sec_note":"single pass, +/-30% noise; """ +
-            s"""attribution only, not a median; -1.0 = member flake","""
-        }
+      val fams = fusedFamilies.toSeq.sortBy(_._1).map { case (fam, ms) =>
+        "\"" + fam + "\":" + ms.map("\"" + _ + "\"").mkString("[", ",", "]")
+      }.mkString("{", ",", "}")
+      val members = fusedMemberSec.map { case (m, v) =>
+        "\"" + m + "\":" + v
+      }.mkString("{", ",", "}")
+      val fusedProv = s""""fused_families":$fams,"fused_member_sec":$members,""" +
+        // the label travels IN the artifact: these are attribution
+        // numbers, not medians — say so where they are read, not only in
+        // the source
+        s""""fused_member_sec_note":"single pass, +/-30% noise; """ +
+        s"""attribution only, not a median; -1.0 = member flake","""
       val prov = s""""provenance":{"host":"$host","cpus":"$cpus",$fusedProv""" +
         s""""io_canary_sec":$ioCanarySec,"io_canary_finish_sec":$ioCanaryFinishSec,""" +
         s""""cpu_canary_sec":$cpuCanarySec,"cpu_canary_finish_sec":$cpuCanaryFinishSec,""" +
         s""""regime_segments":$segs,"segment_row_sec":$segSumsJson,"loadavg_start":$loadStart,""" +
         s""""loadavg_finish":$loadFinish,"recorded_at":"${java.time.Instant.now()}"}"""
+      val trace = results.flatMap { case (k, _) => traces.get(k).map { r =>
+        "\"" + k + "\":" + r.counts.map { case (f, v) => "\"" + f + "\":" + v }.mkString("{", ",", "}")
+      } }.mkString("{", ",", "}")
       java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_full.json"),
-        s"""{"total":$total,"passes":$passes,"agg":"median",$prov,"queries":$full,"failed":$fl,"prewarm_failed":$pwf,"sf":"$sfDir"}""")
+        s"""{"total":$total,"passes":$passes,"agg":"median",$prov,"queries":$full,"trace":$trace,"failed":$fl,"prewarm_failed":$pwf,"sf":"$sfDir"}""")
     } catch { case _: Throwable => () }
     println(out)
     spark.stop()

@@ -216,13 +216,13 @@ object Graphs {
     val w = graft.Par.widthFor(und)
     val spark = edges.sparkSession
     graft.Caches.withModelLoopConf(spark, w) {
-      // ONE action for the WHOLE peel (r13 verdict item 5, measured):
-      // the per-round (id, deg) tables stay persist()-marked — round
-      // N+1's joins and the final fringe union read each exactly once —
-      // but no round runs its own eager count() anymore. StageCost on
-      // the three-materialize-per-round form read total=4.3 s with
-      // stageSum=1.1 s at sf0.1: ~3 s was nothing but driver job-
-      // submission constants across 15 jobs, so the fold collapses the
+      // ONE action for the WHOLE peel: the per-round (id, deg) tables
+      // stay persist()-marked — round N+1's joins and the final fringe
+      // union read each exactly once — but no round runs its own eager
+      // count(). A per-round materialize costs a driver job-submission
+      // constant per job (the three-materialize-per-round form spent
+      // ~3 s of a 4.3 s run at sf0.1 across 15 jobs, against 1.1 s of
+      // stage time), so the fold collapses the
       // loop to the und build + one assembled-output job whose stage
       // graph shares the round shuffles (caches fill mid-job; the
       // bounded 3-round lineage needs no checkpoint truncation). The

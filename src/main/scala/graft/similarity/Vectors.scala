@@ -144,7 +144,7 @@ object Vectors {
   }
 
   /** [[AutoBits]] → [[bitsFor]] on the corpus; any explicit width passes
-    * through (the tuned-knob escape hatch BitsStudy uses). */
+    * through unchanged (the explicit-width override). */
   private def resolveBits(corpus: DataFrame, bits: Int): Int =
     if (bits == AutoBits) bitsFor(corpus) else bits
 

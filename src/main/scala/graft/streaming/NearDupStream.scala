@@ -139,8 +139,8 @@ object NearDupStream {
     * clustering, store matching — runs driver-side ([[admitLocal]]),
     * collapsing the ~7 Spark jobs of per-plan scheduling constants a
     * micro-batch paid (sigCount + pair persist/count/collect +
-    * admit-materialize + broadcast builds; measured by JobProf at
-    * sf0.1: 23 jobs / 2.6 s jobSum for a 2-batch drain) to ONE bounded
+    * admit-materialize + broadcast builds; at sf0.1 a 2-batch drain
+    * ran 23 jobs / 2.6 s of job time) to ONE bounded
     * collect plus the two per-batch-file commit writes. The sig table
     * is ~(72 B)/row — the 1M default is ~75 MB of driver heap, the
     * CAPACITY.md envelope. Above the bound (production-sized batches or
@@ -365,9 +365,9 @@ object NearDupStream {
     out
   }
 
-  /** Tag the Spark jobs `body` triggers with a phase label (read back by
-    * tools.JobProf via spark.job.description) — profiling provenance
-    * only, no semantics. */
+  /** Tag the Spark jobs `body` triggers with a phase label: the tag is
+    * the jobs' `spark.job.description`, so it names them in
+    * [[graft.obs.Trace]]'s job timeline. Provenance only, no semantics. */
   private def tagged[A](s: SparkSession, tag: String)(body: => A): A = {
     s.sparkContext.setJobDescription(tag)
     try body finally s.sparkContext.setJobDescription(null)
@@ -689,9 +689,9 @@ object NearDupStream {
     * docSchema); an mtime-set failure ABORTS (a silently unset mtime
     * would invert batch order — the determinism contract the oracle's
     * parity split relies on), and a parity class with no documents
-    * simply lands no file. Shared by the gate harnesses and
-    * tools.NearDup16Probe so measurement and lifecycle stage batches
-    * identically.
+    * simply lands no file. Every harness that drains a near-dup stream
+    * stages its batches through here, so all of them see identical
+    * batches.
     *
     * CAVEAT — the `coalesce(1)` below is a HARNESS-ONLY single-task
     * write: the gate contract needs exactly ONE parquet file per parity

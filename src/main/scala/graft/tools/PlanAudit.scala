@@ -4,12 +4,15 @@ import graft.{Caches, Sessions, SparkEntry}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.WindowExec
 
-/** One-line physical-plan audit of every registry query (r18
-  * optimization round, guide §7.2): Exchange counts, join strategies,
-  * and scans whose ReadSchema is wide or whose filters did not push
-  * down. Plans are derived, not executed (initial AQE plan — the
-  * static shuffle inventory; AQE can only remove/convert at runtime).
+/** One-line physical-plan audit of every registry query: Exchange
+  * counts, join strategies, scans and whether their filters pushed
+  * down, and `win1p`, the number of `WindowExec` nodes with an empty
+  * partition spec — a window over the whole input, which Spark runs
+  * in ONE task after moving every row to a single partition. Plans
+  * are derived, not executed (initial AQE plan — the static shuffle
+  * inventory; AQE can only remove/convert at runtime).
   *
   * Usage: runMain graft.tools.PlanAudit <outFile> [sfDir] [q1,q2,...]
   */
@@ -34,6 +37,10 @@ object PlanAudit {
           val nodes = walk(df.queryExecution.executedPlan)
           val shuffles = nodes.count(_.isInstanceOf[ShuffleExchangeExec])
           val bcasts = nodes.count(_.isInstanceOf[BroadcastExchangeExec])
+          val singlePartWindows = nodes.count {
+            case w: WindowExec => w.partitionSpec.isEmpty
+            case _ => false
+          }
           val joins = nodes.map(_.nodeName).filter(_.contains("Join"))
             .groupBy(identity).map { case (k, v) => s"$k×${v.size}" }
             .toSeq.sorted.mkString(",")
@@ -43,7 +50,7 @@ object PlanAudit {
               val pushed = str.contains("PushedFilters: [") && !str.contains("PushedFilters: []")
               if (pushed) "scan+pf" else "scan"
           }
-          out.println(f"$name%-28s sh=$shuffles%-3d bc=$bcasts%-3d " +
+          out.println(f"$name%-28s sh=$shuffles%-3d bc=$bcasts%-3d win1p=$singlePartWindows%-2d " +
             f"scans=${scans.size}%-3d(${scans.count(_ == "scan+pf")} pushed) " +
             s"joins=[$joins]")
         } catch {

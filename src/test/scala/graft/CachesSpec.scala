@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.graft.Bus
 import org.apache.spark.storage.StorageLevel
 import graft.dedup.Dedup
 
@@ -71,24 +72,19 @@ class CachesSpec extends SparkSpec {
     // persist() alone already reports a non-NONE storage level, so the
     // eager count() and the once-per-epoch dedup are observed through the
     // job tracker: the first call submits build job(s) under its job
-    // group, the repeat submits none.
+    // group, the repeat submits none. The tracker is fed by the listener
+    // bus, so it is drained before each read.
     val sc = spark.sparkContext
-    def jobs(g: String): Int = sc.statusTracker.getJobIdsForGroup(g).length
-    def await(g: String, atLeast: Int): Int = {
-      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (jobs(g) < atLeast && System.nanoTime() < deadline) Thread.sleep(50)
-      jobs(g)
-    }
+    def jobs(g: String): Int = { Bus.drain(sc); sc.statusTracker.getJobIdsForGroup(g).length }
     val base = Seq(1, 2, 3).toDF("x")
     val df = base.persist(StorageLevel.MEMORY_AND_DISK)
     sc.setJobGroup("graft-mat-1", "first materialize")
     try Caches.materialize(df) finally sc.clearJobGroup()
-    assert(await("graft-mat-1", 1) >= 1, "eager build must submit a job")
+    assert(jobs("graft-mat-1") >= 1, "eager build must submit a job")
     assert(df.storageLevel != StorageLevel.NONE)
     // same canonical plan again within the epoch: registered, NOT re-counted
     sc.setJobGroup("graft-mat-2", "repeat materialize")
     try Caches.materialize(df) finally sc.clearJobGroup()
-    Thread.sleep(300) // async listener delivery: let any stray job surface
     assert(jobs("graft-mat-2") == 0, "repeat within the epoch must not re-count")
     Caches.release()
     assert(df.storageLevel == StorageLevel.NONE)
@@ -96,7 +92,7 @@ class CachesSpec extends SparkSpec {
     val df2 = base.persist(StorageLevel.MEMORY_AND_DISK)
     sc.setJobGroup("graft-mat-3", "fresh epoch materialize")
     try Caches.materialize(df2) finally sc.clearJobGroup()
-    assert(await("graft-mat-3", 1) >= 1, "fresh epoch must rebuild")
+    assert(jobs("graft-mat-3") >= 1, "fresh epoch must rebuild")
     assert(df2.storageLevel != StorageLevel.NONE)
     Caches.release()
   }

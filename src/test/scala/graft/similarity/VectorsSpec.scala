@@ -92,8 +92,8 @@ class VectorsSpec extends SparkSpec {
       // oracle mirrors (OracleSql.bucket4Expr) to the engine resolution
       assert(Vectors.bitsFor(embOf(500L)) == 4)
       assert(Vectors.bitsFor(embOf(2000L)) == 4)
-      // past the floor the width tracks ceil(log2 n) - 7: the BitsStudy
-      // rule (bits + ceil(log2 N) at a xN corpus) falls out exactly
+      // past the floor the width tracks ceil(log2 n) - 7, so a xN corpus
+      // resolves to the base width + ceil(log2 N) exactly
       assert(Vectors.bitsFor(embOf(20000L)) == 8,   "x10 of sf0.1 -> 4 + ceil(log2 10)")
       assert(Vectors.bitsForCount(200000L) == 11,   "x100 -> 4 + ceil(log2 100)")
       // average occupancy n / 2^bits stays <= 2^7 = 128 once past the
@@ -107,7 +107,7 @@ class VectorsSpec extends SparkSpec {
       // the cap: even a planet-scale corpus cannot explode the
       // multi-probe expansion or the key space
       assert(Vectors.bitsForCount(4000000000L) == 24)
-      // explicit widths pass through untouched (the BitsStudy knob)
+      // explicit widths pass through untouched (the override)
       val out = Vectors.knnGraph(vecs, "vec_id", "embedding", k = 2, bits = 3)
       assert(out.columns.toSeq == Seq("src_id", "dst_id", "cosine", "rank"))
     } finally graft.Caches.release()
