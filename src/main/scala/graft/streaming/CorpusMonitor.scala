@@ -63,21 +63,10 @@ object CorpusMonitor {
     // (pinned into the checkpoint at first run, like the event streams);
     // Complete mode re-emits the full result every data batch, so the
     // trailing no-data batch is skipped (EventStream.boundedLifecycleConfs)
-    EventStream.withConf(spark, EventStream.lifecycleConfs(spark): _*) {
+    EventStream.withConf(spark, EventStream.boundedLifecycleConfs: _*) {
       val schema = spark.read.parquet(landing.getAbsolutePath).schema
       val raw = spark.readStream.schema(schema).parquet(landing.getAbsolutePath)
-      val agg = qualityDrift(raw)
-      val name = "stream_quality_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      val q = agg.writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Complete())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val sink = spark.table(name)
-      val (rows, outSchema) = (sink.collect(), sink.schema)
-      spark.catalog.dropTempView(name)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), outSchema)
+      EventStream.drainToMemory(qualityDrift(raw), OutputMode.Complete())
     }
   }
 }

@@ -182,25 +182,14 @@ object EventStream {
             StructField("props", StringType)))
     }
 
-  /** Run [[windowedCounts]] through the REAL streaming engine — file
-    * source → event-time window aggregation → memory sink, Trigger
-    * .AvailableNow, complete mode — and hand back the final result as a
-    * local batch frame. This is what puts the STREAMING operator (not
-    * just its unified-semantics batch twin) under the DuckDB correctness
-    * gate: bounded input + complete mode make the streaming answer
-    * deterministic and equal to the batch aggregation of the same files.
-    * The collected result is the windowed AGGREGATE (hours × types —
-    * tiny by construction); the aggregation itself ran distributed.
-    */
   /** Scoped conf override shared by the lifecycle runners: set `kvs`,
     * run `body`, restore the previous values (unset where there were
-    * none) even on failure — the manual save/restore each runner used to
-    * carry, factored so adding a conf can't miss a restore path.
+    * none) even on failure, so no runner can miss a restore path.
     *
-    * SESSION-SCOPED LOCK (r13 advice): SQL confs are session-global
+    * SESSION-SCOPED LOCK: SQL confs are session-global
     * mutable state, so two lifecycles interleaving set/restore on the
-    * same session could leave `spark.sql.shuffle.partitions` or the
-    * state-store provider wrong for one of them (or permanently, if the
+    * same session could leave `spark.sql.shuffle.partitions` or
+    * `spark.sql.adaptive.enabled` wrong for one of them (or permanently, if the
     * loser restores the winner's override as "previous"). Every runner
     * funnels through here, so serializing per session closes the race;
     * lifecycles on DIFFERENT sessions still run concurrently. The lock
@@ -231,7 +220,7 @@ object EventStream {
     * state-store commit rounds (each round = every store partition
     * writing + fsyncing a delta file into the checkpoint), which is
     * exactly the cost that blows up 5-10x when the host disk is busy
-    * (the r12 regime finding: q_stream_join 20s driver vs 2.3s quiet on
+    * (measured: q_stream_join 20 s on a busy disk vs 2.3 s quiet, on
     * unchanged code). Event-time-TIMEOUT lifecycles (sessionize) MUST
     * NOT use this — their final emissions fire in that trailing batch.
     *
@@ -242,29 +231,6 @@ object EventStream {
   private[streaming] def boundedLifecycleConfs: Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> "8",
     "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
-
-  /** The r12 verdict's OTHER regime lever, wired as an opt-in: setting
-    * session conf `spark.graft.streaming.rocksdb=true` runs every
-    * lifecycle's state on the RocksDB state store provider instead of
-    * the default HDFS-backed one. RocksDB keeps state off-heap with
-    * changelog-style deltas — on a busy-disk host its commit path
-    * amortizes better than one-delta-file-per-partition-per-batch
-    * fsyncs, and at production state volumes it is the provider
-    * Structured Streaming deployments standardize on. OPT-IN rather
-    * than default because each lifecycle here holds KB-scale state,
-    * where the HDFS store's simplicity wins on a quiet host and
-    * RocksDB adds per-query native-store spin-up the bounded gate runs
-    * would pay for nothing, and because a provider is pinned per
-    * CHECKPOINT —
-    * the runners' temp checkpoints make switching safe, but a real
-    * deployment chooses once. Output is provider-independent
-    * (EventStreamSpec pins default == RocksDB on the stream-stream
-    * join, the most state-bound lifecycle). */
-  private[streaming] def lifecycleConfs(spark: SparkSession): Seq[(String, String)] =
-    if (spark.conf.getOption("spark.graft.streaming.rocksdb").contains("true"))
-      boundedLifecycleConfs :+ ("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    else boundedLifecycleConfs
 
   /** Stage a single driver file into its own landing DIRECTORY (the file
     * source consumes directories; at scale this is the producers' append
@@ -291,28 +257,48 @@ object EventStream {
     landing
   }
 
-  /** Start + drain a one-shot AvailableNow query with its TEMP checkpoint
-    * on the ephemeral volume ([[graft.Fs.ephemeralDir]] — tmpfs when the
-    * host has one), deleted after the drain. Spark's own no-checkpoint
-    * path creates (and deletes) a temp checkpoint under `java.io.tmpdir`
-    * — disk-backed on this host, so its per-batch offset/commit-log
-    * fsyncs paid the disk-writeback tax that made the streaming bucket
-    * the bench's regime amplifier (r16 verdict item 3). Same lifecycle,
-    * same deletion, no durability claim changed: a temp checkpoint never
-    * survives the query either way. Lifecycles that RESUME from their
-    * checkpoint (the near-dup runners) manage their own paths and must
-    * not use this. */
-  private def drainOnce[T](
-      w: org.apache.spark.sql.streaming.DataStreamWriter[T]): Unit = {
+  /** Drain `df` once (AvailableNow) into a uniquely named memory sink in
+    * `mode` and hand back the sink's final rows as a local batch frame;
+    * the sink's view is dropped, so repeated runs leave no tables behind.
+    * The query's TEMP checkpoint lives on the ephemeral volume
+    * ([[graft.Fs.ephemeralDir]] — tmpfs when the host has one) and is
+    * deleted after the drain. Spark's own no-checkpoint path creates (and
+    * deletes) a temp checkpoint under `java.io.tmpdir` — disk-backed on
+    * many hosts, where its per-batch offset/commit-log fsyncs pay the
+    * disk-writeback tax that dominates a streaming query's run time when
+    * the disk is busy. No durability claim changes: a temp checkpoint
+    * never survives the query either way. Lifecycles that RESUME from
+    * their checkpoint (the near-dup runners) manage their own paths and
+    * must not use this. */
+  private[streaming] def drainToMemory(df: DataFrame, mode: OutputMode): DataFrame = {
+    val spark = df.sparkSession
+    val name = "stream_sink_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val ckpt = graft.Fs.ephemeralDir("graft_ckpt_")
-    // start() is INSIDE the try (review finding): an AnalysisException
-    // from query planning would otherwise leak the checkpoint dir on a
-    // RAM-backed volume
-    try w.option("checkpointLocation", ckpt.getAbsolutePath)
+    // start() is INSIDE the try: an AnalysisException from query
+    // planning would otherwise leak the checkpoint dir on a RAM-backed
+    // volume
+    try df.writeStream.format("memory").queryName(name).outputMode(mode)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", ckpt.getAbsolutePath)
       .start().awaitTermination()
     finally graft.Fs.deleteRecursively(ckpt)
+    try {
+      val sink = spark.table(name)
+      val (rows, schema) = (sink.collect(), sink.schema)
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    } finally spark.catalog.dropTempView(name)
   }
 
+  /** Run [[windowedCounts]] through the REAL streaming engine — file
+    * source → event-time window aggregation → memory sink, Trigger
+    * .AvailableNow, complete mode — and hand back the final result as a
+    * local batch frame. This is what puts the STREAMING operator (not
+    * just its unified-semantics batch twin) under the DuckDB correctness
+    * gate: bounded input + complete mode make the streaming answer
+    * deterministic and equal to the batch aggregation of the same files.
+    * The collected result is the windowed AGGREGATE (hours × types —
+    * tiny by construction); the aggregation itself ran distributed.
+    */
   def runWindowedCountsOnce(spark: SparkSession, eventsPath: String): DataFrame = {
     val landing = stageLanding(eventsPath)
     // Streaming aggregation state is partitioned by the shuffle width AT
@@ -320,20 +306,12 @@ object EventStream {
     // setup; the window×type state here is tiny, so size it like any
     // other small shuffle (graft.Par's floor) instead of the session
     // default (see boundedLifecycleConfs for the no-data-batch skip).
-    withConf(spark, lifecycleConfs(spark): _*) {
-    val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
-    val agg = windowedCounts(batchEvents(raw))
-      .select(unix_micros(col("window_start")).as("window_start_us"),
-        col("event_type"), col("n_events"), col("value_cents"))
-    val name = "stream_counts_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    drainOnce(agg.writeStream
-      .format("memory").queryName(name)
-      .outputMode(OutputMode.Complete())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-    val sink = spark.table(name)
-    val (rows, schema) = (sink.collect(), sink.schema)
-    spark.catalog.dropTempView(name)
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    withConf(spark, boundedLifecycleConfs: _*) {
+      val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
+      drainToMemory(windowedCounts(batchEvents(raw))
+        .select(unix_micros(col("window_start")).as("window_start_us"),
+          col("event_type"), col("n_events"), col("value_cents")),
+        OutputMode.Complete())
     }
   }
 
@@ -361,18 +339,10 @@ object EventStream {
     * unbounded-retention scale. */
   def runStreamDedupOnce(spark: SparkSession, eventsPath: String): DataFrame = {
     val landing = stageDupLanding(eventsPath)
-    withConf(spark, lifecycleConfs(spark): _*) {
+    withConf(spark, boundedLifecycleConfs: _*) {
       val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
-      val dd = dedupedEvents(batchEvents(raw)).select(col("event_id"))
-      val name = "stream_dedup_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      drainOnce(dd.writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      val sink = spark.table(name)
-      val (rows, schema) = (sink.collect(), sink.schema)
-      spark.catalog.dropTempView(name)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+      drainToMemory(dedupedEvents(batchEvents(raw)).select(col("event_id")),
+        OutputMode.Append())
     }
   }
 
@@ -406,23 +376,14 @@ object EventStream {
     val landing = stageLanding(eventsPath)
     // The join keeps FOUR state stores per partition (keyToNumValues +
     // keyWithIndexToValue, each side) — by far the most commit-I/O-bound
-    // lifecycle in the registry, and the one the r12 regime hit 10x.
-    // boundedLifecycleConfs halves its commit rounds.
-    withConf(spark, lifecycleConfs(spark): _*) {
+    // lifecycle in the registry, and the one a busy disk slows most
+    // (10x measured). boundedLifecycleConfs halves its commit rounds.
+    withConf(spark, boundedLifecycleConfs: _*) {
       val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
       val ev = batchEvents(raw)
-      val joined = attributedPurchases(
+      drainToMemory(attributedPurchases(
         ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "purchase"))
-      val name = "stream_attr_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      drainOnce(joined.writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      val sink = spark.table(name)
-      val (rows, schema) = (sink.collect(), sink.schema)
-      spark.catalog.dropTempView(name)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+        ev.filter(col("event_type") === "purchase")), OutputMode.Append())
     }
   }
 
@@ -436,20 +397,12 @@ object EventStream {
                             dim: DataFrame, dimKey: String,
                             dimAttr: String): DataFrame = {
     val landing = stageLanding(eventsPath)
-    withConf(spark, lifecycleConfs(spark): _*) {
+    withConf(spark, boundedLifecycleConfs: _*) {
       val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
-      val agg = enrichedWindowedCounts(batchEvents(raw), dim, dimKey, dimAttr)
+      drainToMemory(enrichedWindowedCounts(batchEvents(raw), dim, dimKey, dimAttr)
         .select(unix_micros(col("window_start")).as("window_start_us"),
-          col("segment"), col("n_events"), col("value_cents"))
-      val name = "stream_enrich_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      drainOnce(agg.writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Complete())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      val sink = spark.table(name)
-      val (rows, schema) = (sink.collect(), sink.schema)
-      spark.catalog.dropTempView(name)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+          col("segment"), col("n_events"), col("value_cents")),
+        OutputMode.Complete())
     }
   }
 
@@ -472,30 +425,22 @@ object EventStream {
     // NOT the no-data-batch skip: the event-time TIMEOUT fires in the
     // trailing no-data micro-batch — skipping it would suppress every
     // final-session emission (the one lifecycle whose output DEPENDS on
-    // the post-data watermark batch). The RocksDB opt-in still applies
-    // (take lifecycleConfs minus the no-data flag).
-    withConf(spark, lifecycleConfs(spark)
+    // the post-data watermark batch), so boundedLifecycleConfs minus
+    // the no-data flag.
+    withConf(spark, boundedLifecycleConfs
       .filterNot(_._1 == "spark.sql.streaming.noDataMicroBatches.enabled"): _*) {
       val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
       val ev = batchEvents(raw)
         .withColumn("value", round(col("value") * 100))
         .select("event_id", "ts", "user_id", "event_type", "value")
         .as[Event]
-      val sessions = sessionize(ev, gapMs, s"$delayMs milliseconds")
+      drainToMemory(sessionize(ev, gapMs, s"$delayMs milliseconds")
         .select(col("user_id"),
           unix_millis(col("session_start")).as("start_ms"),
           unix_millis(col("session_end")).as("end_ms"),
           col("n_events"),
-          col("total_value").cast("long").as("total_cents"))
-      val name = "stream_sessions_" + java.util.UUID.randomUUID().toString.replace("-", "")
-      drainOnce(sessions.writeStream
-        .format("memory").queryName(name)
-        .outputMode(OutputMode.Append())
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      val sink = spark.table(name)
-      val (rows, schema) = (sink.collect(), sink.schema)
-      spark.catalog.dropTempView(name)
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+          col("total_value").cast("long").as("total_cents")),
+        OutputMode.Append())
     }
   }
 
@@ -506,8 +451,8 @@ object EventStream {
     * — a crash mid-write never leaves a half table, and the merge (which
     * READS the live directory) is fully evaluated before its input
     * disappears. The swap is the plain-parquet stand-in for a table
-    * format's transactional commit; the merge itself is the X51 plan
-    * (WindowGroupLimit dedup + anti join, AQE broadcasts small batches).
+    * format's transactional commit; the merge plan is a WindowGroupLimit
+    * dedup + anti join (AQE broadcasts small batches).
     * Keyed merge ⇒ re-applying the same batch is a no-op (idempotent).
     */
   def upsertBatchIntoParquet(batch: DataFrame, target: String,
@@ -521,9 +466,7 @@ object EventStream {
       else graft.ops.Relational.latestPerKey(batch, keys, order)
     val stage = new java.io.File(target + ".stage")
     merged.write.mode("overwrite").parquet(stage.getAbsolutePath)
-    if (live.exists()) graft.Fs.deleteRecursively(live)
-    if (!stage.renameTo(live))
-      throw new IllegalStateException(s"swap failed: $stage -> $live")
+    graft.Fs.swap(stage, live)
   }
 
   /** Streaming MERGE sink — foreachBatch + [[upsertBatchIntoParquet]]:
@@ -541,7 +484,7 @@ object EventStream {
                             maxFilesPerTrigger: Int = 1): Unit = {
     // Stateless foreachBatch (no watermark state) — boundedLifecycleConfs
     // for uniformity; the no-data-batch skip is vacuous here.
-    withConf(spark, lifecycleConfs(spark): _*) {
+    withConf(spark, boundedLifecycleConfs: _*) {
       val raw = spark.readStream.schema(rawEventSchema(spark, landingDir))
         .option("maxFilesPerTrigger", maxFilesPerTrigger)
         .parquet(landingDir)

@@ -12,8 +12,8 @@ import graft.dedup.Dedup
   * ever admitted) are dropped, and the store grows by the admitted
   * signatures.
   *
-  * Why foreachBatch and not a stateful operator: the near-dup decision
-  * for one document spans its (maxDist+1) chunk buckets, so a
+  * Why a per-batch sink and not a stateful operator: the near-dup
+  * decision for one document spans its (maxDist+1) chunk buckets, so a
   * flatMapGroupsWithState keyed by bucket cannot decide locally and
   * would need a second stateful combine per doc; the batch formulation
   * reuses the verified cluster/match machinery, keeps the decision
@@ -36,19 +36,19 @@ object NearDupStream {
     StructField("doc_id", LongType),
     StructField("text", StringType)))
 
-  /** Pure batch core (also the foreachBatch body): near-dup admission of
-    * one batch against a signature store. Within-batch clusters keep
-    * their min doc id; survivors with any store signature within
-    * `maxDist` are dropped. Returns the admitted (id, simhash) rows. */
+  /** Pure batch core (also the 16-bit runner's distributed path):
+    * near-dup admission of one batch against a signature store.
+    * Within-batch clusters keep their min doc id; survivors with any
+    * store signature within `maxDist` are dropped. Returns the admitted
+    * (id, simhash) rows. */
   def admitBatch(batch: DataFrame, storeSigs: DataFrame, maxDist: Int): DataFrame = {
     val sigs = Dedup.simhash(batch, "doc_id", "text")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // measured-guard clustering (the X231 lesson back-ported to the
-    // 16-bit lifecycle): the analytic worst-case guard prices the whole
-    // 2^16 space and sent every micro-batch — graphs of a few edges —
-    // through iterated distributed CC, ~4× the lifecycle's data cost in
-    // per-round scheduling constants; the measured pair count routes
-    // batch-sized graphs to the driver union-find instead
+    // measured-guard clustering: the analytic worst-case guard prices
+    // the whole 2^16 space and sends every micro-batch — graphs of a few
+    // edges — through iterated distributed CC, ~4× the lifecycle's data
+    // cost in per-round scheduling constants; the measured pair count
+    // routes batch-sized graphs to the driver union-find instead
     val dropped = Dedup.simhashClustersMeasured(sigs, maxDist)
       .filter(col("id") =!= col("cluster_id")).select(col("id"))
     val survivors = sigs.join(dropped, Seq("id"), "left_anti")
@@ -60,8 +60,7 @@ object NearDupStream {
     out
   }
 
-  /** PER-BATCH FILE COMMITS (round 18, the X231 doc's deployment sketch
-    * made the implementation): both output tables are laid out as one
+  /** PER-BATCH FILE COMMITS: both output tables are laid out as one
     * Hive-style partition directory per micro-batch
     * (`<dir>/seq_batch=N/`), so a batch commits O(batch) rows — stage a
     * sibling dot-dir, one atomic rename — instead of rewriting
@@ -70,12 +69,11 @@ object NearDupStream {
     * (`spark.read.parquet(dir)` partition-discovers `seq_batch`; the
     * store's window filter `seq_batch < N` becomes a partition-PRUNED
     * listing), and the cross-batch admitted dedup/distinct shuffles the
-    * old whole-table rewrites paid per batch are gone: per-batch
+    * whole-table rewrites would pay per batch are avoided: per-batch
     * admitted id sets are disjoint under the file source's exactly-once
     * offsets, and an admitted SIGNATURE never recurs while in the match
     * window (distance 0 ≤ maxDist always matches), so the union of the
-    * committed dirs IS the deduped table. At 100 TB this is the commit
-    * shape that makes the lifecycle deployable: per-batch cost is
+    * committed dirs IS the deduped table. Per-batch cost is therefore
     * independent of how many documents ever streamed. */
 
   /** Stage `df` under `<dir>/.stage_<seq>` (dot-prefixed — invisible to
@@ -88,10 +86,7 @@ object NearDupStream {
     base.mkdirs()
     val stage = new java.io.File(base, s".stage_$seq")
     df.write.mode("overwrite").parquet(stage.getAbsolutePath)
-    val live = new java.io.File(base, s"seq_batch=$seq")
-    if (live.exists()) graft.Fs.deleteRecursively(live)
-    if (!stage.renameTo(live))
-      throw new IllegalStateException(s"swap failed: $stage -> $live")
+    graft.Fs.swap(stage, new java.io.File(base, s"seq_batch=$seq"))
   }
 
   /** The committed batch ids under a per-batch table dir (the
@@ -132,9 +127,9 @@ object NearDupStream {
       }.sum
   }
 
-  /** Collect cutover for the per-micro-batch admission (r19, the
-    * union-find / `maxCollectWords` precedent applied to the streaming
-    * tier): when the batch's signatures AND the match window both fit
+  /** Collect cutover for the per-micro-batch admission (the same
+    * driver-side cutover as the union-find and `maxCollectWords`
+    * bounds): when the batch's signatures AND the match window both fit
     * under this bound, the whole admission decision — within-batch
     * clustering, store matching — runs driver-side ([[admitLocal]]),
     * collapsing the ~7 Spark jobs of per-plan scheduling constants a
@@ -308,10 +303,7 @@ object NearDupStream {
         org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
       .build()
     try groups.foreach(writer.write) finally writer.close()
-    val live = new java.io.File(base, s"seq_batch=$seq")
-    if (live.exists()) graft.Fs.deleteRecursively(live)
-    if (!stage.renameTo(live))
-      throw new IllegalStateException(s"swap failed: $stage -> $live")
+    graft.Fs.swap(stage, new java.io.File(base, s"seq_batch=$seq"))
   }
 
   private def commitAdmittedLocal(dir: String, seq: Long,
@@ -414,11 +406,23 @@ object NearDupStream {
     cutoff
   }
 
+  /** Drain the landing zone once (AvailableNow, one file per micro-batch)
+    * maintaining `admittedDir` (id, simhash — the clean corpus index) and
+    * `storeDir` (distinct admitted 16-bit signatures). Resumable: the
+    * checkpoint skips committed batches on restart. The store is bounded
+    * by the 2^16 signature space, so every older batch stays in the match
+    * window and nothing is evicted. */
+  def runNearDupStreamOnce(spark: SparkSession, landingDir: String,
+                           admittedDir: String, storeDir: String,
+                           checkpoint: String, maxDist: Int): Unit =
+    runLifecycle(spark, landingDir, admittedDir, storeDir, checkpoint, maxDist,
+      Long.MaxValue, "nd16", Dedup.simhash(_, "doc_id", "text"),
+      admitBatch(_, _, maxDist))
+
   /** Drain the landing zone once through the BOUNDED 64-bit admission
     * lifecycle: same landing/admitted/store/checkpoint contract as
-    * [[runNearDupStreamOnce]], with the production signature width
-    * (X229) and a store bounded by `capacity` (schema: simhash,
-    * seq_batch) — the r13 forward-plan design note, now code.
+    * [[runNearDupStreamOnce]], with 64-bit signatures and a store bounded
+    * by `capacity` (schema: simhash, seq_batch).
     *
     * POLICY — sliding-window FIFO admission, seq_batch = the
     * checkpoint's own batchId:
@@ -428,12 +432,12 @@ object NearDupStream {
     *     exactly the batch's own admissions on a replay).
     *   - Commit (PER-BATCH-FILE): the `seq_batch=N` store dir := rows
     *     already at seq N ∪ (newly admitted at seq N) — one O(batch)
-    *     staged-rename — then every store dir with seq outside
-    *     WINDOW_N ∪ {N} is DELETED. Storage therefore still holds
-    *     exactly rows(seq = N) ∪ WINDOW_N ∪ (new at N), and eviction
-    *     LAGS one batch as before: a batch leaves the match window once
-    *     capacity is covered without it, and leaves storage (by whole-
-    *     directory delete) on the next commit.
+    *     staged-rename — then every store dir with seq < N outside
+    *     WINDOW_N is DELETED. Dirs with seq > N are never touched.
+    *     Storage therefore holds rows(seq = N) ∪ WINDOW_N ∪ (new at N),
+    *     and eviction LAGS one batch: a batch leaves the match window
+    *     once capacity is covered without it, and leaves storage (by
+    *     whole-directory delete) on the next commit.
     *
     * Properties:
     *   - SIZE BOUND: < capacity + 2·(largest batch's admissions) rows —
@@ -451,18 +455,21 @@ object NearDupStream {
     *     dropped doc re-drops against the same window sig, and every
     *     originally admitted doc now matches its own stored signature
     *     at distance 0. Zero admissions with the batch's dirs already
-    *     committed → the commit is SKIPPED outright (nothing to add)
-    *     and only the idempotent eviction deletes re-run; a crash
-    *     BEFORE the store commit replays to the identical admitted
-    *     rows, which the per-batch commit unions with the batch's own
-    *     dir and dedups by id — O(batch), and the only dedup left
-    *     anywhere in the lifecycle. Evicted dirs a crashed attempt
-    *     already deleted cannot change the replayed window: they are
-    *     the OLDEST seqs, below any retained cutoff. A naive "trim
-    *     after union" policy FAILS
-    *     this: the new batch's own count can push a window batch out in
-    *     the same commit that matched against it, and the replay
-    *     silently admits what the original run dropped.
+    *     committed → the commit is SKIPPED outright and the eviction
+    *     re-deletes only what the original run deleted, so no file
+    *     changes. A crash BEFORE the store commit replays to the
+    *     identical admitted rows, which the per-batch commit unions with
+    *     the batch's own dir and dedups by id — O(batch), and the only
+    *     dedup left anywhere in the lifecycle. Evicted dirs a crashed
+    *     attempt already deleted cannot change the replayed window: they
+    *     are the OLDEST seqs, below any retained cutoff. A replay of an
+    *     older batch after later batches ran (a lost checkpoint) sees
+    *     its window minus the dirs those later batches evicted, and is
+    *     exact while none of them was evicted. A naive "trim after
+    *     union" policy FAILS the crash replay: the new batch's own count
+    *     can push a window batch out in the same commit that matched
+    *     against it, and the replay silently admits what the original
+    *     run dropped.
     *   - DETERMINISM: eviction depends only on per-batch admission
     *     counts and batchIds (no clock, no touch-on-hit LRU whose state
     *     would depend on query pattern).
@@ -470,18 +477,33 @@ object NearDupStream {
   def runNearDup64StreamOnce(spark: SparkSession, landingDir: String,
                              admittedDir: String, storeDir: String,
                              checkpoint: String, maxDist: Int,
-                             capacity: Long): Unit = {
+                             capacity: Long): Unit =
+    runLifecycle(spark, landingDir, admittedDir, storeDir, checkpoint, maxDist,
+      capacity, "nd64", Dedup.simhash64(_, "doc_id", "text"),
+      admitBatch64(_, _, maxDist, capacity))
+
+  /** The one near-dup streaming lifecycle behind both widths: `sign` is
+    * the width's signer, `admit` its distributed admission (batch docs,
+    * match set) → persisted admitted rows, `tag` the job-label prefix.
+    * The policy is the one documented on [[runNearDup64StreamOnce]]; a
+    * `capacity` of Long.MaxValue keeps every older batch in the window,
+    * so nothing is ever evicted. */
+  private def runLifecycle(spark: SparkSession, landingDir: String,
+                           admittedDir: String, storeDir: String,
+                           checkpoint: String, maxDist: Int, capacity: Long,
+                           tag: String, sign: DataFrame => DataFrame,
+                           admit: (DataFrame, DataFrame) => DataFrame): Unit = {
     require(capacity >= 1, s"capacity=$capacity must be >= 1")
     // AQE OFF for the lifecycle: the engine disables AQE inside the
-    // streaming plan itself, but foreachBatch body actions are plain
+    // streaming plan itself, but the per-batch sink's actions are plain
     // batch queries under the SESSION conf — and on micro-batch-sized
     // frames every adaptive exchange re-plan spawns driver sub-jobs
     // whose scheduling constants dwarf the data (measured on the gate
     // harness: 69 jobs / 7.6 s with AQE, most of it 150-290 ms 1-task
-    // stages; the withModelLoopConf lesson applied to streaming). A
-    // deployment with corpus-sized batches would re-enable it per batch.
-    EventStream.withConf(spark, EventStream.lifecycleConfs(spark) ++ Seq(
-      "spark.sql.adaptive.enabled" -> "false"): _*) {
+    // stages). A deployment with corpus-sized batches would re-enable it
+    // per batch.
+    EventStream.withConf(spark, EventStream.boundedLifecycleConfs :+
+      ("spark.sql.adaptive.enabled" -> "false"): _*) {
       val raw = spark.readStream.schema(docSchema)
         .option("maxFilesPerTrigger", 1).parquet(landingDir)
       val storeSchema = StructType(Seq(StructField("simhash", StringType),
@@ -504,15 +526,21 @@ object NearDupStream {
           val ownStoreDir = new java.io.File(storeDir, s"seq_batch=$batchId")
           val ownStoreRows =
             if (ownStoreDir.isDirectory) footerRowCount(ownStoreDir) else 0L
-          // DRIVER CUTOVER (r19): gate on the footer-counted window size
-          // (zero jobs) first, then on the bounded batch-sig collect —
-          // both under [[MaxCollectSigsConf]] → the whole admission runs
-          // driver-side; either over → the distributed path unchanged.
+          // REPLAY cases: no own admitted dir → first run, commit the
+          // admitted rows as they are; own dir present and nothing
+          // re-admitted → both commits landed, skip them; own dir present
+          // with re-admissions → crash between the two commits, union
+          // with the own dir, first row per id wins (O(batch))
+          val ownAdmittedDir = new java.io.File(admittedDir, s"seq_batch=$batchId")
+          val replay = ownAdmittedDir.isDirectory
+          // DRIVER CUTOVER: gate on the footer-counted window size (zero
+          // jobs) first, then on the bounded batch-sig collect — both
+          // under [[MaxCollectSigsConf]] → the whole admission runs
+          // driver-side; either over → the distributed path.
           val maxSigs = maxCollectSigs(s)
           val localBatch: Option[Array[(Long, String)]] =
             if (maxSigs <= 0 || retained.map(_._2).sum + ownStoreRows > maxSigs) None
-            else collectBatchSigs(Dedup.simhash64(b.toDF(), "doc_id", "text"),
-              maxSigs, "nd64:sigs-collect")
+            else collectBatchSigs(sign(b.toDF()), maxSigs, s"$tag:sigs-collect")
           localBatch match {
             case Some(batchSigs) =>
               val windowSigs = retained.map(_._1)
@@ -524,82 +552,64 @@ object NearDupStream {
               val ownSigs: Seq[String] =
                 if (ownStoreRows > 0) readSeqSigs(s, ownStoreDir) else Seq.empty
               val admitted = admitLocal(batchSigs.toSeq, windowSigs ++ ownSigs, maxDist)
-              // normal path (no own dir yet): commit the admitted rows
-              // directly. REPLAY path (own dir exists): a replay without
-              // its store commit re-derives the identical admitted rows
-              // — union with the batch's own dir, id-keyed (O(batch));
-              // a full replay re-admits nothing and skips the commits.
-              val ownAdmittedDir = new java.io.File(admittedDir, s"seq_batch=$batchId")
-              val ownAdmitted: Option[Seq[(Long, String)]] =
-                if (!ownAdmittedDir.isDirectory) Some(admitted)
-                else if (admitted.isEmpty) None
-                else {
-                  val prior = s.read.parquet(ownAdmittedDir.getAbsolutePath)
-                    .select(col("id"), col("simhash")).collect()
-                    .map(r => (r.getLong(0), r.getString(1)))
-                  val seen = scala.collection.mutable.HashSet.empty[Long]
-                  Some((prior ++ admitted).filter(r => seen.add(r._1)))
-                }
-              ownAdmitted.foreach { adm =>
+              if (!replay || admitted.nonEmpty) {
+                val adm =
+                  if (!replay) admitted
+                  else {
+                    val prior = s.read.parquet(ownAdmittedDir.getAbsolutePath)
+                      .select(col("id"), col("simhash")).collect()
+                      .map(r => (r.getLong(0), r.getString(1)))
+                    val seen = scala.collection.mutable.HashSet.empty[Long]
+                    (prior ++ admitted).filter(r => seen.add(r._1)).toSeq
+                  }
                 commitAdmittedLocal(admittedDir, batchId, adm)
+                // per-batch admitted signatures are globally distinct BY
+                // ADMISSION (a stored signature re-arriving is a
+                // distance-0 match and never re-admits; within a batch,
+                // colliding signatures cluster to one survivor), so the
+                // union of the seq dirs needs no distinct
                 val storeRows = ownSigs ++ admitted.map(_._2)
                 commitStoreLocal(storeDir, batchId, storeRows)
                 sigCache(batchId) = storeRows
               }
-              committedSeqs(storeDir)
-                .filter(seq => seq < cutoff && seq != batchId)
-                .foreach { seq =>
-                  graft.Fs.deleteRecursively(
-                    new java.io.File(storeDir, s"seq_batch=$seq"))
-                  sigCache.remove(seq)
-                }
             case None =>
               val store = readSeqTable(s, storeDir, storeSchema)
               val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
               val window = store
                 .filter(col("seq_batch") < batchId && col("seq_batch") >= cutoff)
                 .persist(lvl)
-              // own-seq rows exist only on a REPLAY (crash after the store
-              // commit): matching against them sends every originally
-              // admitted doc to a distance-0 drop, reproducing the original
-              // decision exactly
+              // own-seq rows: see the driver branch
               val ownSeq = store.filter(col("seq_batch") === batchId).persist(lvl)
               val matchSet = window.select(col("simhash"))
                 .unionByName(ownSeq.select(col("simhash")))
-              // admitBatch64 hands back an already-persisted, materialized frame
-              val admitted = admitBatch64(b.toDF(), matchSet, maxDist, capacity)
+              // `admit` hands back an already-persisted, materialized frame
+              val admitted = admit(b.toDF(), matchSet)
               try {
-                // commit-path case analysis: see the driver branch above
-                val ownAdmittedDir = new java.io.File(admittedDir, s"seq_batch=$batchId")
-                val ownAdmitted =
-                  if (!ownAdmittedDir.isDirectory) Some(admitted)
-                  else if (admitted.isEmpty) None
-                  else Some(s.read.parquet(ownAdmittedDir.getAbsolutePath)
-                    .unionByName(admitted).dropDuplicates("id"))
-                ownAdmitted.foreach { adm =>
-                  tagged(s, "nd64:commit-admitted") {
+                if (!replay || !admitted.isEmpty) {
+                  val adm =
+                    if (!replay) admitted
+                    else s.read.parquet(ownAdmittedDir.getAbsolutePath)
+                      .unionByName(admitted).dropDuplicates("id")
+                  tagged(s, s"$tag:commit-admitted") {
                     commitSeqDir(adm, admittedDir, batchId)
                   }
-                  tagged(s, "nd64:commit-store") {
+                  tagged(s, s"$tag:commit-store") {
                     commitSeqDir(
                       ownSeq.select(col("simhash"))
                         .unionByName(admitted.select(col("simhash"))),
                       storeDir, batchId)
                   }
                 }
-                // eviction = whole-directory deletes, LAGGING one batch as
-                // before: storage keeps window_N ∪ {N}; batches that fell
-                // out of the window leave disk here (idempotent on replay)
-                committedSeqs(storeDir)
-                  .filter(seq => seq < cutoff && seq != batchId)
-                  .foreach { seq =>
-                    graft.Fs.deleteRecursively(
-                      new java.io.File(storeDir, s"seq_batch=$seq"))
-                    sigCache.remove(seq)
-                  }
               } finally {
                 admitted.unpersist(); window.unpersist(); ownSeq.unpersist()
               }
+          }
+          // eviction = whole-directory deletes of the older batches that
+          // fell out of WINDOW_N (idempotent on replay); seqs ≥ N are
+          // never candidates, so a replay leaves later batches untouched
+          olderCounts.map(_._1).filter(_ < cutoff).foreach { seq =>
+            graft.Fs.deleteRecursively(new java.io.File(storeDir, s"seq_batch=$seq"))
+            sigCache.remove(seq)
           }
         }
         .option("checkpointLocation", checkpoint)
@@ -630,7 +640,7 @@ object NearDupStream {
         new java.io.File(root, "ckpt").getAbsolutePath, maxDist, capacity)
     }
 
-  /** EVICTION gate harness (the r14-verdict ask): same staged lifecycle
+  /** EVICTION gate harness: same staged lifecycle
     * as [[runDocNearDup64GateOnce]] but THREE parity batches
     * (doc_id % 3) at capacity = max(1, n_docs/4) — BELOW one batch's
     * admissions at every test SF (measured: |adm1| = 165 of 500 docs at
@@ -670,8 +680,7 @@ object NearDupStream {
     * plain sequential admission at 16-bit width (within-batch exact
     * Hamming≤d CC keeps min id; batch-1 survivors drop against ALL
     * batch-0 admissions — window=everything ALWAYS, the width's
-    * semantic, not a gate clamp). Closes the r15 verdict's "last
-    * spec-only streaming lifecycle" item. */
+    * semantic, not a gate clamp). */
   def runDocNearDup16GateOnce(spark: SparkSession, docsPath: String,
                               maxDist: Int): DataFrame =
     withStagedParityRun(spark, docsPath, nBatches = 2) { (landing, root) =>
@@ -726,8 +735,8 @@ object NearDupStream {
   }
 
   /** Session-lifetime memo of staged parity landings, keyed by
-    * (docsPath, nBatches) — the r16 PLANS "shared gate-session" lever:
-    * every gate RUN needs a fresh admitted/store/checkpoint root, but
+    * (docsPath, nBatches): every gate RUN needs a fresh
+    * admitted/store/checkpoint root, but
     * the staged LANDING (docs read + 1-task parity write) is a pure
     * function of the input table, and Bench re-pays it on every pass of
     * every near-dup row (~0.3 s × ~12 stagings per bench run at sf0.1).
@@ -788,8 +797,8 @@ object NearDupStream {
                                  (body: (java.io.File, java.io.File) => Unit): DataFrame = {
     // gate roots (landing + admitted + store + checkpoint) are EPHEMERAL
     // run state — tmpfs when available (Fs.ephemeralDir): the lifecycle's
-    // fsync rounds against a disk-backed /tmp were the streaming bucket's
-    // dominant regime amplifier (r16 verdict item 3)
+    // fsync rounds against a disk-backed /tmp dominate its run time when
+    // the disk is busy
     val root = graft.Fs.ephemeralDir("graft_nd64_gate_")
     try {
       val landing = landingFromTemplate(
@@ -800,107 +809,5 @@ object NearDupStream {
       val (rows, schema) = (out.collect(), out.schema)
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     } finally graft.Fs.deleteRecursively(root)
-  }
-
-  /** Drain the landing zone once (AvailableNow, one file per micro-batch)
-    * maintaining `admittedDir` (id, simhash — the clean corpus index) and
-    * `storeDir` (distinct admitted signatures). Resumable: the checkpoint
-    * skips committed batches on restart. */
-  def runNearDupStreamOnce(spark: SparkSession, landingDir: String,
-                           admittedDir: String, storeDir: String,
-                           checkpoint: String, maxDist: Int): Unit = {
-    // Stateless foreachBatch (no watermark state) — boundedLifecycleConfs
-    // for uniformity; the no-data-batch skip is vacuous here. AQE OFF in
-    // the body, as in [[runNearDup64StreamOnce]]: on micro-batch-sized
-    // frames every adaptive exchange re-plan spawns driver sub-jobs
-    // whose scheduling constants dwarf the data (the 69→29-job lesson).
-    EventStream.withConf(spark, EventStream.lifecycleConfs(spark) ++ Seq(
-      "spark.sql.adaptive.enabled" -> "false"): _*) {
-      val raw = spark.readStream.schema(docSchema)
-        .option("maxFilesPerTrigger", 1).parquet(landingDir)
-      val storeSchema = StructType(Seq(StructField("simhash", StringType),
-        StructField("seq_batch", LongType)))
-      // per-invocation store-sig cache for the driver path (see
-      // [[storeSeqSigs]]) — dead with the drain, so no cross-run state
-      val sigCache = scala.collection.mutable.Map.empty[Long, Seq[String]]
-      val q = raw.writeStream
-        .foreachBatch { (b: Dataset[Row], batchId: Long) =>
-          val s = b.sparkSession
-          // the 16-bit match window is EVERYTHING (the signature space
-          // bounds the store) — including the batch's own seq dir, which
-          // exists only on a replay and sends every originally admitted
-          // doc to a distance-0 drop
-          val seqs = committedSeqs(storeDir)
-          // DRIVER CUTOVER (r19): same gate as the 64-bit runner — the
-          // store is 2^16-space-bounded, so at any knob ≥ 65536 the
-          // window side always fits and only the batch collect decides
-          val maxSigs = maxCollectSigs(s)
-          val storeRowsTotal = seqs.map(seq => footerRowCount(
-            new java.io.File(storeDir, s"seq_batch=$seq"))).sum
-          val localBatch: Option[Array[(Long, String)]] =
-            if (maxSigs <= 0 || storeRowsTotal > maxSigs) None
-            else collectBatchSigs(Dedup.simhash(b.toDF(), "doc_id", "text"),
-              maxSigs, "nd16:sigs-collect")
-          localBatch match {
-            case Some(batchSigs) =>
-              // own-seq rows (replay only) are read fresh, never cached
-              val ownStoreSigs: Seq[String] =
-                if (seqs.contains(batchId))
-                  readSeqSigs(s, new java.io.File(storeDir, s"seq_batch=$batchId"))
-                else Seq.empty
-              val matchSigs = seqs.filter(_ != batchId)
-                .flatMap(seq => storeSeqSigs(s, storeDir, seq, sigCache)) ++ ownStoreSigs
-              val admitted = admitLocal(batchSigs.toSeq, matchSigs, maxDist)
-              val ownAdmittedDir = new java.io.File(admittedDir, s"seq_batch=$batchId")
-              val ownAdmitted: Option[Seq[(Long, String)]] =
-                if (!ownAdmittedDir.isDirectory) Some(admitted)
-                else if (admitted.isEmpty) None
-                else {
-                  val prior = s.read.parquet(ownAdmittedDir.getAbsolutePath)
-                    .select(col("id"), col("simhash")).collect()
-                    .map(r => (r.getLong(0), r.getString(1)))
-                  val seen = scala.collection.mutable.HashSet.empty[Long]
-                  Some((prior ++ admitted).filter(r => seen.add(r._1)))
-                }
-              ownAdmitted.foreach { adm =>
-                commitAdmittedLocal(admittedDir, batchId, adm)
-                // per-batch admitted signatures are globally distinct BY
-                // ADMISSION (a stored signature re-arriving is a
-                // distance-0 match and never re-admits; within a batch,
-                // colliding signatures cluster to one survivor), so the
-                // union of the seq dirs needs no distinct — a replay's
-                // own-seq rows re-drop the same way
-                val storeRows = ownStoreSigs ++ admitted.map(_._2)
-                commitStoreLocal(storeDir, batchId, storeRows)
-                sigCache(batchId) = storeRows
-              }
-            case None =>
-              val store = readSeqTable(s, storeDir, storeSchema)
-              // admitBatch hands back an already-persisted, materialized frame
-              val admitted = admitBatch(b.toDF(), store, maxDist)
-              try {
-                // commit-path case analysis: see the 64-bit runner
-                val ownAdmittedDir = new java.io.File(admittedDir, s"seq_batch=$batchId")
-                val ownAdmitted =
-                  if (!ownAdmittedDir.isDirectory) Some(admitted)
-                  else if (admitted.isEmpty) None
-                  else Some(s.read.parquet(ownAdmittedDir.getAbsolutePath)
-                    .unionByName(admitted).dropDuplicates("id"))
-                ownAdmitted.foreach { adm =>
-                  commitSeqDir(adm, admittedDir, batchId)
-                  commitSeqDir(
-                    store.filter(col("seq_batch") === batchId)
-                      .select(col("simhash"))
-                      .unionByName(admitted.select(col("simhash"))),
-                    storeDir, batchId)
-                }
-              } finally admitted.unpersist()
-          }
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
   }
 }

@@ -147,26 +147,30 @@ class EventStreamSpec extends SparkSpec {
     // dedup state at memory scale; RocksDB spills state to local disk.
     // The provider is a pluggable conf — the SAME query must return the
     // SAME result under either, which is what this pins (plus that the
-    // provider actually loads — rocksdbjni ships with Spark).
+    // provider actually loads — rocksdbjni ships with Spark), on the
+    // windowed aggregate and on the stream-stream join, the most
+    // state-bound lifecycle (keyToNumValues + keyWithIndexToValue per
+    // join side).
     val path = "/root/testdata/sf0.001/events.parquet"
     assume(new java.io.File(path).exists())
+    def answers(): Seq[Seq[org.apache.spark.sql.Row]] = Seq(
+      EventStream.runWindowedCountsOnce(spark, path)
+        .orderBy("window_start_us", "event_type").collect().toSeq,
+      EventStream.runAttributionOnce(spark, path)
+        .orderBy("click_id", "purchase_id").collect().toSeq)
     val key = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val rocks = EventStream.runWindowedCountsOnce(spark, path)
-        .orderBy("window_start_us", "event_type")
-        .as[(Long, String, Long, Long)].collect().toSeq
+      val rocks = answers()
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
       }
-      val default = EventStream.runWindowedCountsOnce(spark, path)
-        .orderBy("window_start_us", "event_type")
-        .as[(Long, String, Long, Long)].collect().toSeq
+      val default = answers()
       assert(rocks == default)
-      assert(rocks.nonEmpty)
+      assert(rocks.forall(_.nonEmpty))
     } finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => if (spark.conf.getOption(key).isDefined) spark.conf.unset(key)
@@ -208,27 +212,6 @@ class EventStreamSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSeq
     assert(streamed == batch)
     assert(streamed.nonEmpty)
-  }
-
-  test("the spark.graft.streaming.rocksdb opt-in routes the stream-stream join's four state stores through RocksDB, same answer") {
-    // The flag-based form of the provider-parity pin above, on the most
-    // state-bound lifecycle (keyToNumValues + keyWithIndexToValue per
-    // join side): lifecycleConfs appends the RocksDB provider for every
-    // runner when the session flag is set, so an operator doesn't need
-    // per-query conf surgery to change the state engine.
-    val path = "/root/testdata/sf0.001/events.parquet"
-    assume(new java.io.File(path).exists())
-    val default = EventStream.runAttributionOnce(spark, path)
-      .orderBy("click_id", "purchase_id")
-      .as[(Long, Long)].collect().toSeq
-    spark.conf.set("spark.graft.streaming.rocksdb", "true")
-    try {
-      val rocks = EventStream.runAttributionOnce(spark, path)
-        .orderBy("click_id", "purchase_id")
-        .as[(Long, Long)].collect().toSeq
-      assert(rocks == default)
-      assert(rocks.nonEmpty)
-    } finally spark.conf.unset("spark.graft.streaming.rocksdb")
   }
 
   test("checkpointed AvailableNow runs resume incrementally and stay exactly-once") {

@@ -2,15 +2,13 @@ package graft.streaming
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
 import graft.dedup.Dedup
 
-/** Bounded-store 64-bit streaming admission (the r13 forward-plan design
-  * note, now code): within-batch, cross-batch, eviction, sliding-window
-  * re-admission, restart, no-op, and replay — the 16-bit
-  * NearDupStreamSpec scenario pattern plus the store-bound behaviors the
-  * 64-bit signature width forces. */
-class NearDup64StreamSpec extends SparkSpec {
+/** Bounded-store 64-bit streaming admission: within-batch, cross-batch,
+  * eviction, sliding-window re-admission, restart, no-op, and replay —
+  * the 16-bit NearDupStreamSpec scenario pattern plus the store-bound
+  * behaviors the 64-bit signature width forces. */
+class NearDup64StreamSpec extends NearDupRunnerScenarios {
   import spark.implicits._
 
   // Fixture texts with pinned 64-BIT simhash geometry at maxDist = 5:
@@ -134,57 +132,11 @@ class NearDup64StreamSpec extends SparkSpec {
       Set(0L, 3L, 6L, 1L, 5L, 8L))
   }
 
+  private val run64: Runner = NearDupStream.runNearDup64StreamOnce(
+    spark, _, _, _, _, maxDist = 5, capacity = 1)
+
   test("per-batch-file commits: layout, and runner-level replay of every crash point") {
-    val root = java.nio.file.Files.createTempDirectory("neardup64-replay")
-    val (landing, admitted, store, ckpt) =
-      (s"$root/landing", s"$root/admitted", s"$root/store", s"$root/ckpt")
-    new java.io.File(landing).mkdirs()
-    def land(rows: Seq[(Long, String)]): Unit =
-      rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(landing)
-    def run(): Unit = NearDupStream.runNearDup64StreamOnce(
-      spark, landing, admitted, store, ckpt, maxDist = 5, capacity = 1)
-    def snap(dir: String): Set[(Long, String, Long)] =
-      spark.read.parquet(dir).select($"id", $"simhash", $"seq_batch")
-        .as[(Long, String, Long)].collect().toSet
-    def snapStore(): Set[(String, Long)] =
-      spark.read.parquet(store).select($"simhash", $"seq_batch")
-        .as[(String, Long)].collect().toSet
-
-    land(Seq((1L, A), (3L, C)))
-    run()
-    land(Seq((10L, F), (11L, C))) // 11 = exact dup of 3 → dropped cross-batch
-    run()
-    val (admitted0, store0) = (snap(admitted), snapStore())
-    assert(admitted0.map(_._1) == Set(1L, 3L, 10L))
-    // LAYOUT: one partition dir per batch, only for batches that admitted
-    def seqDirs(dir: String): Set[String] =
-      new java.io.File(dir).listFiles().filter(_.isDirectory).map(_.getName).toSet
-    assert(seqDirs(admitted) == Set("seq_batch=0", "seq_batch=1"))
-    assert(seqDirs(store) == Set("seq_batch=0", "seq_batch=1"))
-
-    // REPLAY: a fresh checkpoint reprocesses the whole landing, sending
-    // every batch back through the foreachBatch body against whatever a
-    // "crashed attempt" left in the output dirs — the same commit-path
-    // cases a lost checkpoint commit produces, without racing the
-    // engine's commit-log internals. Each variant must reproduce the
-    // tables bit-for-bit.
-    def rm(dir: String): Unit =
-      graft.Fs.deleteRecursively(new java.io.File(dir))
-
-    // both commits landed: every batch re-derives zero admissions
-    // (distance-0 self matches against its own seq dir) and SKIPS the
-    // rewrite entirely
-    rm(ckpt); run()
-    assert(snap(admitted) == admitted0 && snapStore() == store0)
-    // crash BETWEEN the admitted and store commits of batch 1: own
-    // admitted dir present, own store rows absent — the replay
-    // re-derives the identical admitted rows, dedups against the
-    // batch's own dir (no doubling), and recommits both dirs
-    rm(ckpt); rm(s"$store/seq_batch=1"); run()
-    assert(snap(admitted) == admitted0 && snapStore() == store0)
-    // crash BEFORE any commit of batch 1: plain re-execution
-    rm(ckpt); rm(s"$store/seq_batch=1"); rm(s"$admitted/seq_batch=1"); run()
-    assert(snap(admitted) == admitted0 && snapStore() == store0)
+    perBatchCommitReplay(run64, A, C, F)
   }
 
   test("admitBatch64 with an empty match set admits cluster minima only") {
@@ -233,34 +185,7 @@ class NearDup64StreamSpec extends SparkSpec {
   }
 
   test("runner over-bound fallback (maxCollectSigs=0) runs the distributed path with identical tables") {
-    def lifecycle(): (Set[(Long, String, Long)], Set[(String, Long)]) = {
-      val root = java.nio.file.Files.createTempDirectory("neardup64-fb")
-      val (landing, admitted, store, ckpt) =
-        (s"$root/landing", s"$root/admitted", s"$root/store", s"$root/ckpt")
-      new java.io.File(landing).mkdirs()
-      def land(rows: Seq[(Long, String)]): Unit =
-        rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(landing)
-      land(Seq((1L, A), (2L, A), (3L, C)))
-      NearDupStream.runNearDup64StreamOnce(spark, landing, admitted, store,
-        ckpt, maxDist = 5, capacity = 1)
-      land(Seq((10L, F), (11L, C), (12L, A2)))
-      NearDupStream.runNearDup64StreamOnce(spark, landing, admitted, store,
-        ckpt, maxDist = 5, capacity = 1)
-      (spark.read.parquet(admitted).select($"id", $"simhash", $"seq_batch")
-        .as[(Long, String, Long)].collect().toSet,
-        spark.read.parquet(store).select($"simhash", $"seq_batch")
-          .as[(String, Long)].collect().toSet)
-    }
-    val viaLocal = lifecycle()
-    val prev = spark.conf.getOption(NearDupStream.MaxCollectSigsConf)
-    spark.conf.set(NearDupStream.MaxCollectSigsConf, "0")
-    try {
-      val viaDistributed = lifecycle()
-      assert(viaLocal == viaDistributed)
-    } finally prev match {
-      case Some(v) => spark.conf.set(NearDupStream.MaxCollectSigsConf, v)
-      case None => spark.conf.unset(NearDupStream.MaxCollectSigsConf)
-    }
+    overBoundFallback(run64, A, A2, C, F)
   }
 
   test("trimToCapacity keeps the newest batches covering capacity, whole batches only") {

@@ -1,0 +1,99 @@
+package graft.streaming
+
+import graft.SparkSpec
+
+/** Runner-level near-dup lifecycle scenarios shared by both signature
+  * widths. Each takes the width's runner over (landing, admitted, store,
+  * checkpoint) dirs and fixture texts at that runner's maxDist: `a2` is a
+  * near-dup of `a`; `c` and `f` are far from each other and from `a`. */
+trait NearDupRunnerScenarios extends SparkSpec {
+  import spark.implicits._
+
+  type Runner = (String, String, String, String) => Unit
+
+  private def dirs(prefix: String): (String, String, String, String) = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    new java.io.File(s"$root/landing").mkdirs()
+    (s"$root/landing", s"$root/admitted", s"$root/store", s"$root/ckpt")
+  }
+
+  private def land(landing: String, rows: Seq[(Long, String)]): Unit =
+    rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(landing)
+
+  private def admittedRows(dir: String): Set[(Long, String, Long)] =
+    spark.read.parquet(dir).select($"id", $"simhash", $"seq_batch")
+      .as[(Long, String, Long)].collect().toSet
+
+  private def storeRows(dir: String): Set[(String, Long)] =
+    spark.read.parquet(dir).select($"simhash", $"seq_batch")
+      .as[(String, Long)].collect().toSet
+
+  /** Per-batch-file layout, then a replay of every crash point. A fresh
+    * checkpoint reprocesses the whole landing, sending every batch back
+    * through the foreachBatch body against whatever a "crashed attempt"
+    * left in the output dirs — the same commit-path cases a lost
+    * checkpoint commit produces, without racing the engine's commit-log
+    * internals. Each variant must reproduce the tables bit-for-bit, and
+    * the replay over fully committed dirs must not rewrite any file. */
+  def perBatchCommitReplay(run: Runner, a: String, c: String, f: String): Unit = {
+    val (landing, admitted, store, ckpt) = dirs("neardup-replay")
+    def go(): Unit = run(landing, admitted, store, ckpt)
+    land(landing, Seq((1L, a), (3L, c)))
+    go()
+    land(landing, Seq((10L, f), (11L, c))) // 11 = exact dup of 3 → dropped cross-batch
+    go()
+    val (admitted0, store0) = (admittedRows(admitted), storeRows(store))
+    assert(admitted0.map(_._1) == Set(1L, 3L, 10L))
+    // LAYOUT: one partition dir per batch, each holding its parquet files
+    def files(dir: String): Map[String, Set[String]] =
+      new java.io.File(dir).listFiles().filter(_.isDirectory).map { d =>
+        d.getName -> d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
+      }.toMap
+    val (admittedFiles0, storeFiles0) = (files(admitted), files(store))
+    assert(admittedFiles0.keySet == Set("seq_batch=0", "seq_batch=1"))
+    assert(storeFiles0.keySet == Set("seq_batch=0", "seq_batch=1"))
+    def rm(dir: String): Unit = graft.Fs.deleteRecursively(new java.io.File(dir))
+
+    // both commits landed: every batch re-derives zero admissions
+    // (distance-0 self matches against its own seq dir), SKIPS the
+    // rewrite, and evicts nothing at or after its own seq — every
+    // parquet file stays in place
+    rm(ckpt); go()
+    assert(admittedRows(admitted) == admitted0 && storeRows(store) == store0)
+    assert(files(admitted) == admittedFiles0 && files(store) == storeFiles0)
+    // crash BETWEEN the admitted and store commits of batch 1: own
+    // admitted dir present, own store rows absent — the replay
+    // re-derives the identical admitted rows, dedups against the
+    // batch's own dir (no doubling), and recommits both dirs
+    rm(ckpt); rm(s"$store/seq_batch=1"); go()
+    assert(admittedRows(admitted) == admitted0 && storeRows(store) == store0)
+    // crash BEFORE any commit of batch 1: plain re-execution
+    rm(ckpt); rm(s"$store/seq_batch=1"); rm(s"$admitted/seq_batch=1"); go()
+    assert(admittedRows(admitted) == admitted0 && storeRows(store) == store0)
+  }
+
+  /** The same two-batch lifecycle through the driver path and, with the
+    * collect cutover disabled, through the distributed path: both must
+    * commit identical admitted and store tables. */
+  def overBoundFallback(run: Runner, a: String, a2: String, c: String,
+                        f: String): Unit = {
+    def lifecycle(): (Set[(Long, String, Long)], Set[(String, Long)]) = {
+      val (landing, admitted, store, ckpt) = dirs("neardup-fb")
+      land(landing, Seq((1L, a), (2L, a), (3L, c)))
+      run(landing, admitted, store, ckpt)
+      land(landing, Seq((10L, f), (11L, c), (12L, a2)))
+      run(landing, admitted, store, ckpt)
+      (admittedRows(admitted), storeRows(store))
+    }
+    val viaLocal = lifecycle()
+    val prev = spark.conf.getOption(NearDupStream.MaxCollectSigsConf)
+    spark.conf.set(NearDupStream.MaxCollectSigsConf, "0")
+    try {
+      val viaDistributed = lifecycle()
+      assert(viaLocal == viaDistributed)
+    } finally prev match {
+      case Some(v) => spark.conf.set(NearDupStream.MaxCollectSigsConf, v)
+      case None => spark.conf.unset(NearDupStream.MaxCollectSigsConf)
+    }
+  }
+}
