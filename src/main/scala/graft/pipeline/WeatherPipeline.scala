@@ -3,6 +3,7 @@ package graft.pipeline
 import java.sql.Timestamp
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -20,8 +21,12 @@ import graft.quality.Checks._
   * Airflow task chain becomes `ingest → stg → {dim, fct}`, gated by the
   * models' dbt tests declared as `quality.Checks` contracts
   * (`rawWeatherTests`, `dimLocationsTests`, `fctWeatherObservationsTests`).
-  * At scale the mart writes partition by `extraction_date` so daily
-  * re-runs overwrite one partition instead of the table.
+  * `runBatch` runs a batch as two waves of two concurrent actions: the
+  * raw append beside one gate over all three contracts, then the two
+  * mart writes. A driver-local batch (the `runDaily` path) is one
+  * partition, so each action is one task with no shuffle. The fact
+  * write partitions by `extraction_date`, so a daily re-run overwrites
+  * one partition instead of the table.
   */
 object WeatherPipeline {
 
@@ -218,40 +223,74 @@ object WeatherPipeline {
   }
 
   /** End-to-end batch run mirroring the DAG's task chain
-    * (dags/weatherstack_full_pipeline.py:172): ingest → raw write →
-    * source gate → staging → marts → mart gate → mart writes. Each gate
-    * is one `Checks.assertAll` action, which throws an
-    * IllegalArgumentException naming every failing `<model>.<check>`,
-    * like the DAG's failing dbt_test task.
+    * (dags/weatherstack_full_pipeline.py:172) in two waves; each wave
+    * waits for both of its actions before it returns or throws:
     *
-    * Scale posture: `raw` is persisted across its consumers (raw append,
-    * both gates, both marts) instead of re-parsing the payloads per
-    * sink, and the fact write goes through DYNAMIC partition overwrite
-    * (graft.sources.IO.writePartitioned) — a daily re-run replaces only
-    * the `extraction_date` partitions present in the batch, O(day) not
-    * O(table).
+    *  1. the raw append beside the gate. The gate is ONE
+    *     `Checks.assertTiers` action over the source contract
+    *     (`raw_weather`, DAG step 4) and the mart contracts
+    *     (`dim_locations`, `fct_weather_observations`, step 6). If a
+    *     source check fails, the IllegalArgumentException names only the
+    *     failing `raw_weather.*` checks, because the DAG never runs the
+    *     mart tests then; otherwise it names every failing mart check,
+    *     sorted. A raw-write error is thrown before a gate error.
+    *  2. the dim write beside the fact write, only if every check passed.
+    *     Stricter than the DAG by design: dbt writes the marts in step 5
+    *     and validates after; here the tests gate the WRITES, so a
+    *     failing mart never goes live. The two writes are independent
+    *     idempotent overwrites (the fact through DYNAMIC partition
+    *     overwrite, graft.sources.IO.writePartitioned, O(day) not
+    *     O(table)), so a re-run repairs a wave in which one of them
+    *     failed.
+    *
+    * A batch whose ingest optimizes to a `LocalRelation` (the driver-
+    * fetched payloads of `runDaily`) is coalesced to ONE partition and
+    * not cached: every aggregate, `Unique` check and `distinct` is then
+    * satisfied without an exchange and each action is a single task. The
+    * coalesce comes after `ingest`, not on the payload frame: over the
+    * payloads it would stop `ConvertToLocalRelation` from folding
+    * `ingest` on the driver, which leaves the per-day `now` and
+    * `dataIntervalStart` literals in generated code, recompiled every
+    * day. Any other batch (JSON landing files, a backfill) keeps its scan
+    * parallelism and is persisted across its consumers instead of
+    * re-parsing the payloads per action.
     */
   def runBatch(payloads: DataFrame, dataIntervalStart: Timestamp, now: Timestamp,
                outDir: String): Unit = {
-    val raw = ingest(payloads, dataIntervalStart, now)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ingested = ingest(payloads, dataIntervalStart, now)
+    val local = ingested.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    val raw = if (local) ingested.coalesce(1)
+      else ingested.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      raw.write.mode("append").parquet(s"$outDir/raw/weather")
-      // GATE 1 — source-tier tests (DAG step 4): a failure short-circuits
-      // here, before any mart is BUILT, mirroring dbt_test >> dbt_run_marts.
-      Checks.assertAll(("raw_weather", raw, rawWeatherTests))
       val stg = stgWeather(raw)
       val dim = dimLocations(stg)
       val fct = fctWeatherObservations(stg)
-      // GATE 2 — marts-tier tests (DAG step 6). Stricter than the DAG by
-      // design: dbt writes the marts in step 5 and validates after; here
-      // the tests gate the WRITES, so a failing mart never goes live.
-      Checks.assertAll(("dim_locations", dim, dimLocationsTests),
-        ("fct_weather_observations", fct, fctWeatherObservationsTests))
-      dim.write.mode("overwrite").parquet(s"$outDir/marts/dim_locations")
-      graft.sources.IO.writePartitioned(fct, Seq("extraction_date"),
-        s"$outDir/marts/fct_weather_observations")
-    } finally { raw.unpersist(); () }
+      inParallel(
+        raw.write.mode("append").parquet(s"$outDir/raw/weather"),
+        Checks.assertTiers(Seq(("raw_weather", raw, rawWeatherTests)),
+          Seq(("dim_locations", dim, dimLocationsTests),
+            ("fct_weather_observations", fct, fctWeatherObservationsTests))))
+      inParallel(
+        dim.write.mode("overwrite").parquet(s"$outDir/marts/dim_locations"),
+        graft.sources.IO.writePartitioned(fct, Seq("extraction_date"),
+          s"$outDir/marts/fct_weather_observations"))
+    } finally if (!local) raw.unpersist()
+  }
+
+  /** Runs `a` on the calling thread and `b` on a new thread, and returns
+    * once both have ended; then throws `a`'s error, else `b`'s. The
+    * thread is started outside any Spark action, so it inherits no
+    * `spark.sql.execution.id` and `b` runs as its own SQL execution. */
+  private def inParallel(a: => Unit, b: => Unit): Unit = {
+    var bErr: Option[Throwable] = None // published to this thread by join
+    val t = new Thread(() => try b catch { case e: Throwable => bErr = Some(e) },
+      "weather-pipeline-wave")
+    t.setDaemon(true)
+    t.start()
+    val aErr = try { a; None } catch { case e: Throwable => Some(e) }
+    t.join()
+    for (ea <- aErr; eb <- bErr) ea.addSuppressed(eb)
+    aErr.orElse(bErr).foreach(e => throw e)
   }
 
   /** The full daily run the reference's DAG schedules: per-city fetch

@@ -14,6 +14,7 @@ import graft.ops.Relational
   *                    AcceptedValues("cat", Seq("a", "b")), InRange("t", -50, 60))
   *   Checks.reportDf(df, checks)                  // (check, n_violations, passed)
   *   Checks.assertAll(("model", df, checks), ...)  // throw naming every failure
+  *   Checks.assertTiers(sources, marts)           // ...of the first failing tier
   *
   * Each check compiles to a violations DataFrame (the dbt "test query
   * returns 0 rows" contract). Counting goes through `reportDf` only, so
@@ -104,20 +105,35 @@ object Checks {
       .withColumn("passed", col("n_violations") === 0L)
   }
 
-  /** Pipeline gate over one or more (model, frame, contract) triples:
-    * the models' [[reportDf]]s are unioned and collected in one action,
-    * and any violation throws an IllegalArgumentException naming every
-    * failing `<model>.<check>` (mirrors the reference DAG failing on dbt
-    * test, dags/weatherstack_full_pipeline.py:147-151). */
-  def assertAll(contract: (String, DataFrame, Seq[Check]),
-                more: (String, DataFrame, Seq[Check])*): Unit = {
-    val failing = (contract +: more)
-      .map { case (model, df, checks) =>
+  /** A model's contract: (model name, frame, checks). */
+  type Contract = (String, DataFrame, Seq[Check])
+
+  /** Pipeline gate over one or more contracts: [[assertTiers]] with one
+    * tier, so any violation throws an IllegalArgumentException naming
+    * every failing `<model>.<check>` (mirrors the reference DAG failing
+    * on dbt test, dags/weatherstack_full_pipeline.py:147-151). */
+  def assertAll(contract: Contract, more: Contract*): Unit =
+    assertTiers(contract +: more)
+
+  /** Gate over tiers of contracts in DAG order (sources before marts).
+    * Every tier's [[reportDf]]s are unioned, coalesced to one partition
+    * and collected in ONE action. Every branch ends in a global
+    * aggregate, so the coalesce merges only the branches' one-row
+    * final tasks into one task. The IllegalArgumentException names the
+    * failing `<model>.<check>`s of the FIRST failing tier only, sorted:
+    * the DAG never runs a later tier's tests once an earlier tier
+    * failed. */
+  def assertTiers(tiers: Seq[Contract]*): Unit = {
+    val failing = tiers.zipWithIndex
+      .flatMap { case (tier, i) => tier.map { case (model, df, checks) =>
         reportDf(df, checks).filter(!col("passed"))
-          .select(concat_ws(".", lit(model), col("check"))) }
+          .select(lit(i).as("tier"), concat_ws(".", lit(model), col("check"))) } }
       .reduce(_.unionAll(_))
-      .collect().map(_.getString(0)).sorted
-    require(failing.isEmpty, s"data-quality check failed: ${failing.mkString(", ")}")
+      .coalesce(1)
+      .collect().map(r => (r.getInt(0), r.getString(1)))
+    val firstTier = failing.map(_._1).minOption
+    val named = failing.collect { case (i, name) if firstTier.contains(i) => name }.sorted
+    require(named.isEmpty, s"data-quality check failed: ${named.mkString(", ")}")
   }
 
   /** Per-column data PROFILE — the table-summary report of dbt docs /

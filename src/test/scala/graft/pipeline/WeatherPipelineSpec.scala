@@ -163,16 +163,70 @@ class WeatherPipelineSpec extends SparkSpec {
     // double-fetched city collides on the deterministic raw id, the
     // staging-tier test fails, and NO mart output exists ---
     val dir2 = java.nio.file.Files.createTempDirectory("wp-dag-fail").toString
-    val dup = Seq(
-      ("Paris", payload("Paris", "France", 18, "sunny")),
-      ("Paris", payload("Paris", "France", 19, "sunny"))).toDF("city", "raw_json")
     val e = intercept[IllegalArgumentException] {
-      WeatherPipeline.runBatch(dup, t0, now, dir2)
+      WeatherPipeline.runBatch(dupParis, t0, now, dir2)
     }
     assert(e.getMessage.contains("raw_weather.unique_id"))
+    // the mart tests never ran in the DAG: only source-tier checks are named
+    assert(failedChecks(e).forall(_.startsWith("raw_weather.")), e.getMessage)
     assert(new java.io.File(s"$dir2/raw/weather").exists()) // raw landed (step 2 ran)
     assert(!new java.io.File(s"$dir2/marts").exists(),
       "a failing staging test must short-circuit before any mart write")
+  }
+
+  /** The `<model>.<check>` names of a gate failure. */
+  private def failedChecks(e: Throwable): Seq[String] =
+    e.getMessage.split("data-quality check failed: ", 2).last.split(", ").toSeq
+
+  private def dupParis: DataFrame = Seq(
+    ("Paris", payload("Paris", "France", 18, "sunny")),
+    ("Paris", payload("Paris", "France", 19, "sunny"))).toDF("city", "raw_json")
+
+  test("a raw-write error is thrown before the gate's, and no mart is written") {
+    val dir = java.nio.file.Files.createTempDirectory("wp-rawfail").toString
+    new java.io.File(s"$dir/raw").mkdirs()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/raw/weather"), "not a dir")
+    // the gate fails too (duplicate raw id), in the same wave as the write
+    val e = intercept[Exception](WeatherPipeline.runBatch(dupParis, t0, now, dir))
+    assert(!e.getMessage.contains("data-quality check failed"), e.getMessage)
+    assert(e.getSuppressed.exists(_.getMessage.contains("raw_weather.unique_id")))
+    assert(!new java.io.File(s"$dir/marts").exists())
+  }
+
+  test("a runDaily day is single-task jobs with no shuffle and one file per mart; " +
+    "a file-sourced batch keeps its scan parallelism") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import graft.pipeline.WeatherFetcher.FakeFetcher
+    val dir = java.nio.file.Files.createTempDirectory("wp-shape").toString
+    val fetcher = new FakeFetcher(Map(
+      "Paris" -> payload("Paris", "France", 18, "Partly sunny"),
+      "London" -> payload("London", "United Kingdom", -3, "light rain"),
+      "Tokyo" -> payload("Tokyo", "Japan", 35, "Overcast Clouds")))
+    val cities = Seq("Paris", "London", "Tokyo")
+    WeatherPipeline.runDaily(spark, fetcher, cities, t0, now, dir) // warm-up day
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // the next day, with its own interval and `now` literals
+    val (_, r) = graft.obs.Trace.around(spark) {
+      WeatherPipeline.runDaily(spark, fetcher, cities, Timestamp.valueOf("2024-06-03 08:30:00"),
+        Timestamp.valueOf("2024-06-03 09:00:00"), dir)
+    }
+    // raw append, gate, dim write, fct write
+    assert(r.jobs <= 4 && r.tasks == r.jobs && r.shuffleBytes == 0, r.summary)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+      "a warm day compiled generated code")
+    def dataFiles(d: String): Int =
+      new java.io.File(d).listFiles().count(_.getName.endsWith(".parquet"))
+    assert(dataFiles(s"$dir/marts/dim_locations") == 1)
+    assert(dataFiles(s"$dir/marts/fct_weather_observations/extraction_date=2024-06-03") == 1)
+
+    // JSON landing files: the scan keeps one partition per file
+    payloads.limit(2).write.json(s"$dir/landing")
+    payloads.limit(3).filter($"city" === "Tokyo").write.mode("append").json(s"$dir/landing")
+    assert(new java.io.File(s"$dir/landing").listFiles().count(_.getName.endsWith(".json")) >= 2)
+    val landed = spark.read.schema("city STRING, raw_json STRING").json(s"$dir/landing")
+    WeatherPipeline.runBatch(landed, t0, now, s"$dir/file")
+    assert(dataFiles(s"$dir/file/raw/weather") >= 2)
+    assert(spark.read.parquet(s"$dir/file/marts/fct_weather_observations").count() == 3)
   }
 
   test("re-running a day overwrites only that extraction_date partition") {

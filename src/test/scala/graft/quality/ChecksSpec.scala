@@ -56,6 +56,21 @@ class ChecksSpec extends SparkSpec {
     assert(e2.getMessage.contains("a.not_null_city") && e2.getMessage.contains("b.unique_id"))
   }
 
+  test("assertTiers names only the first failing tier's checks") {
+    val ids = Seq(1L, 1L).toDF("id")
+    val marts = Seq(("m", df, contract))
+    // the source tier fails: the failing mart checks are not named
+    val e = intercept[IllegalArgumentException](Checks.assertTiers(
+      Seq(("src", ids, Seq(Unique(Seq("id"))))), marts))
+    assert(e.getMessage.endsWith("data-quality check failed: src.unique_id"), e.getMessage)
+    // the source tier passes: every failing mart check is named, sorted
+    val e2 = intercept[IllegalArgumentException](Checks.assertTiers(
+      Seq(("src", ids, Seq(NotNull("id")))), marts))
+    assert(e2.getMessage.endsWith("data-quality check failed: m.accepted_values_category, " +
+      "m.in_range_temperature, m.not_null_city, m.unique_id"), e2.getMessage)
+    Checks.assertTiers(Seq(("src", ids, Seq(NotNull("id")))), Seq(("m", df.limit(2), contract)))
+  }
+
   test("profile reports rows, nulls, distincts, and stringified min/max per column") {
     import org.apache.spark.sql.functions.col
     val data = Seq((1L, Some("a")), (2L, None), (3L, Some("a")), (4L, Some("b")))
