@@ -5,7 +5,7 @@ import graft.obs.Trace
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.cpus
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     val spark = Sessions.build(cpus)
     spark.sparkContext.setLogLevel("WARN")
@@ -54,8 +54,8 @@ object Bench {
     val cachingQueries = Set("q_ngram_jaccard", "q_minhash_lsh",
       "q_simhash", "q_simhash_dedup", "q_simhash_pairs", "q_dedup_clusters",
       "q_dedup_apply", "q_corpus_pipeline",
-      "q_bigram_fluency", // persists the shared pair expansion since r8
-      // r10: these persist private artifacts (LSH bucket table, scored
+      "q_bigram_fluency", // persists the shared pair expansion
+      // these persist private artifacts (LSH bucket table, scored
       // projections, doc×feature profile, canonical edge set) — warm
       // reuse would flatter them, so they are cold-timed like the rest.
       // Incremental-admission rows stay warm-timed ON PURPOSE: their
@@ -64,19 +64,17 @@ object Bench {
       "q_dedup_eval", "q_quality_calibrated", "q_dsir_weights",
       "q_lm_bucket", "q_knn_triangles", "q_hard_negatives",
       "q_vocab_coverage",
-      // r11: the BPE merge chain (train loop + merged corpus) is one
+      // the BPE merge chain (train loop + merged corpus) is one
       // memoized persisted artifact (Caches.memo) shared by
       // q_bpe_train / q_bpe_apply / q_token_fertility. q_bpe_apply
-      // cold-bills the build and the ADJACENT q_bpe_train reuses it —
-      // but q_token_fertility runs far later, after many caching
-      // queries whose per-pass release() cleared the memo, so its
-      // pass-1 rebuilt the chain silently and the median hid that
-      // cost (the r11 advice finding). It is cold-timed too now:
-      // its reported number honestly includes the chain build a fresh
-      // session would pay.
+      // cold-bills the build and the ADJACENT q_bpe_train reuses it.
+      // q_token_fertility runs far later, after caching queries whose
+      // per-pass release() cleared the memo, so it rebuilds the chain:
+      // it is cold-timed too, and its number includes the chain build a
+      // fresh session would pay.
       "q_bpe_apply", "q_token_fertility",
-      // r12: every tokenizer chain is cold-billed exactly once, on its
-      // own family's apply row — q_bpe_apply (BPE), q_unigram_apply
+      // every tokenizer chain is cold-billed exactly once, on its own
+      // family's apply row — q_bpe_apply (BPE), q_unigram_apply
       // (unigram EM), q_wordpiece_apply (WordPiece merges). The
       // three-family comparison row q_tokenizer_families is NOT in this
       // set ON PURPOSE: its pass-1 rebuilds the unigram+WordPiece memos
@@ -87,27 +85,26 @@ object Bench {
       // over the memoized chains), which is what a session that already
       // trained the tokenizers pays for the comparison.
       "q_unigram_apply", "q_wordpiece_apply",
-      // r11: the PCA pair (X176/X177) shares the memoized covariance
-      // collect — cold-bill it on q_pca_power, q_pca_project reuses.
+      // the PCA pair shares the memoized covariance collect —
+      // cold-bill it on q_pca_power, q_pca_project reuses.
       "q_pca_power",
-      // r12: graph-loop rows persist per-round state frames and the
+      // graph-loop rows persist per-round state frames and the
       // canonical edge set (CacheManager reuses same-plan persisted
       // buffers across passes, which would flatter passes 2–3), and
       // q_sorted_blocking persists its two rank tables + the shared
       // shingle-set table — all cold-timed like their family peers.
       "q_label_prop", "q_kcore", "q_sorted_blocking",
-      // r12: per-step funnel state frames are persisted
+      // per-step funnel state frames are persisted
       "q_funnel_steps",
-      // r12: both PageRank-family rows materialize the degree-annotated
-      // edge table + node set (q_domain_rank predates the cold-billing
-      // sweep — brought in for consistency)
+      // both PageRank-family rows materialize the degree-annotated
+      // edge table + node set
       "q_domain_rank", "q_trust_rank",
-      // r12: rfm persists the per-user aggregate for its 3 rank passes
+      // rfm persists the per-user aggregate for its 3 rank passes
       "q_rfm_segments",
-      // r12: k-center seeding persists the projected fixed-point table
+      // k-center seeding persists the projected fixed-point table
       // its k argmax rounds re-read
       "q_kcenter_seeds",
-      // r12: the kNN edge table is one memoized persisted artifact
+      // the kNN edge table is one memoized persisted artifact
       // (Vectors.knnGraph) shared by the whole graph-diagnostics family
       // (triangles, census, label-prop, k-core, link prediction,
       // clustering coeff, assortativity). The alphabetically-FIRST
@@ -116,14 +113,13 @@ object Bench {
       // ON PURPOSE — the artifact existing is the deployment semantic
       // (a production pipeline materializes the graph once).
       "q_clustering_coeff",
-      // r13: groupedLowerMedian materializes its ranked frame (the r12
-      // advice fix — stats aggregate + join probe read it twice)
+      // groupedLowerMedian materializes its ranked frame (the stats
+      // aggregate and the join probe both read it)
       "q_grouped_median",
-      // r16 (r15 advice): globalRankByKey / skyline2d persist their
-      // partition-id frame since the r15 flake fix (Caches.materialize at
-      // Relational.scala / Dedup.scala) — a private artifact, so the rows
-      // that ride those paths are cold-timed like every other
-      // private-artifact biller; warm reuse flattered them 2–3×.
+      // globalRankByKey / skyline2d persist their partition-id frame
+      // (Caches.materialize in Relational / Dedup) — a private artifact,
+      // so the rows that ride those paths are cold-timed like every
+      // other private-artifact biller; warm reuse flattered them 2–3×.
       "q_curriculum", "q_pareto_front")
     // HARNESS-FLOOR FUSION: the registry floor (rows × ~0.1 s of
     // per-action engine constants) is paid once per family, not once per
@@ -150,6 +146,23 @@ object Bench {
       "fused:ann" -> Seq("q_ann_lsh", "q_ann_lsh_mp", "q_ann_lsh_mp_r2",
         "q_ann_ivf", "q_ann_ivf_trained", "q_ann_recall"))
     val fusedMembers: Set[String] = fusedFamilies.values.flatten.toSet
+    // FAMILY-ARTIFACT PRE-WARM: a cold row is cold to re-bill its
+    // PRIVATE artifacts — not to re-bill the shared FAMILY artifact its
+    // family already cold-bills once per pass on a designated row
+    // (q_clustering_coeff is the kNN graph's biller, the q_bpe_apply
+    // precedent). Without this, the graph-loop rows below would rebuild
+    // the cleared kNN memo INSIDE their timed runs, billing the same
+    // ~1.3 s / 7-job build up to four times per pass set and burying the
+    // loop costs. After each of their cache clears, the named producer
+    // rebuilds the family artifact OUTSIDE the timer; the build still
+    // appears in the total exactly once, in its designated row.
+    val familyPrewarm: Map[String, String] = Map(
+      "q_kcore" -> "q_knn_graph",
+      "q_label_prop" -> "q_knn_graph",
+      "q_knn_triangles" -> "q_knn_graph")
+    val unknown = (cachingQueries ++ fusedMembers ++ familyPrewarm.keys ++ familyPrewarm.values)
+      .filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"not registry queries: ${unknown.toSeq.sorted.mkString(", ")}")
     // One action per family: each member reduces to one row
     // (name, n_rows, order-insensitive content hash) — the same two
     // quantities the correctness gate compares — and the rows union into
@@ -207,22 +220,6 @@ object Bench {
     // mid-run canary triple to the headline regime object, so one
     // artifact can answer "which quarter of the run was the regime bad
     // in" instead of bracketing with re-runs.
-    // FAMILY-ARTIFACT PRE-WARM (r14): a cold row is cold to re-bill its
-    // PRIVATE artifacts — not to re-bill the shared FAMILY artifact its
-    // family already cold-bills once per pass on a designated row
-    // (q_clustering_coeff is the kNN graph's biller, the q_bpe_apply
-    // precedent; "the artifact existing is the deployment semantic — a
-    // production pipeline materializes the graph once"). The graph-loop
-    // rows below were rebuilding the cleared kNN memo INSIDE their timed
-    // runs, billing the same ~1.3 s / 7-job build up to four times per
-    // pass set and burying the loop costs the r13 verdict asked to tune.
-    // After each of their cache clears, the named producer rebuilds the
-    // family artifact OUTSIDE the timer; the build still appears in the
-    // total exactly once, in its designated row.
-    val familyPrewarm: Map[String, String] = Map(
-      "q_kcore" -> "q_knn_graph",
-      "q_label_prop" -> "q_knn_graph",
-      "q_knn_triangles" -> "q_knn_graph")
     val regimeSegments = scala.collection.mutable.ListBuffer[(String, Double, Double, Double)]()
     val sortedQueries: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)] =
       (SparkEntry.queries.toSeq.filterNot { case (n, _) => fusedMembers(n) } ++

@@ -2,11 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One place for the engine's session defaults — Verify, Bench and the
-  * dev tools build from here so config can't drift between entry points
-  * (the round-1 TIMESTAMP(NANOS) read failure was exactly such a drift).
+/** One place for the engine's session defaults — Verify, Bench, the dev
+  * tools and the specs build from here so config can't drift between
+  * entry points (a session without nanosAsLong cannot read the
+  * TIMESTAMP(NANOS) events table).
   */
 object Sessions {
+  /** Local cores for the mains: `SPARK_GRAFT_CPUS`, else every core the
+    * JVM sees. */
+  def cpus: String =
+    sys.env.getOrElse("SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
+
   def build(cpus: String, extra: Map[String, String] = Map.empty): SparkSession = {
     val b = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -47,14 +53,13 @@ object Sessions {
       // keep their data-sized widths — AQE only merges below the 8 MB
       // advisory target above.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // SCRATCH placement (r16 verdict item 3): spark.local.dir —
+      // SCRATCH placement: spark.local.dir —
       // shuffle files, broadcast blocks, disk-spilled cache — defaults
       // to /tmp, which is DISK-backed on this host, so every shuffle
       // write and spill paid the disk-writeback tax that made degraded
-      // windows read 2-10× on unchanged binaries (the r12-r16 regime
-      // findings; fsync-bound streaming rows amplified worst). Scratch
-      // is by definition reconstructable-from-lineage state with no
-      // durability claim, so place it on the fastest ephemeral volume
+      // windows read 2-10× on unchanged binaries (fsync-bound streaming
+      // rows amplified worst). Scratch is by definition reconstructable-
+      // from-lineage state with no durability claim, so place it on the fastest ephemeral volume
       // (tmpfs when the host has one — Fs.ephemeralDir). A CLUSTER
       // deployment sets spark.local.dir to its local NVMe array
       // explicitly; SPARK_GRAFT_EPHEMERAL_ROOT overrides here.
@@ -62,9 +67,9 @@ object Sessions {
     extra.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }.getOrCreate()
   }
 
-  /** ONE scratch root per JVM — lazy (review finding: getOrCreate
-    * ignores configs on an existing session, so a per-call dir would
-    * orphan a tmpfs dir + a shutdown hook on every repeat build()).
+  /** ONE scratch root per JVM — lazy (getOrCreate ignores configs on
+    * an existing session, so a per-call dir would orphan a tmpfs dir +
+    * a shutdown hook on every repeat build()).
     * Spark cleans its blockmgr/spark-* subdirs on clean shutdown; the
     * hook removes the wrapper — both deletes are idempotent, so hook
     * order vs Spark's own doesn't matter. */

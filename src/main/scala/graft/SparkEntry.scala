@@ -1,4367 +1,21 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
-import graft.functions.{ArraySumFp, MisraGries, MultiPatternCount}
-import graft.ops.Relational
-import graft.text.TextOps
-import graft.dedup.Dedup
-import graft.similarity.Vectors
+import graft.registry.Registry
 
-/** Driver contract — one entry per operator from SURVEY.md §2 plus the
-  * extension tier (dedup / similarity / text analysis). Every query is
-  * deterministic (no current_timestamp, no monotonically_increasing_id,
-  * total ORDER BY, exact integer arithmetic for any aggregated doubles) so
-  * it hash-matches the DuckDB oracle at any partitioning.
-  */
+/** Driver contract: the flagship query plus every registry query by
+  * name, and each query's DuckDB oracle SQL (`graft.registry`). */
 object SparkEntry {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
-  /** The driver's document/embedding files are single-row-group parquet —
-    * one input split no matter the cluster size — so CPU-heavy per-row
-    * pipelines (md5 chains, shingle explosion, regex scans) would run on
-    * one core. Hash-repartitioning by id first costs a sub-MB shuffle and
-    * spreads the narrow work across all cores; content is unchanged. On a
-    * real multi-file corpus the scan already yields enough splits and this
-    * becomes a cheap no-op-ish rebalance. */
-  private[graft] def spread(df: DataFrame, idCol: String): DataFrame =
-    df.repartition(Par.widthFor(df), col(idCol))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * the multi-way star join + aggregate (SURVEY.md §2.3). */
   def entry(spark: SparkSession): DataFrame =
-    qJoinFactDim(spark, "/root/testdata/sf0.001")
+    queries("q_join_fact_dim")(spark, "/root/testdata/sf0.001")
 
-  // ---------------------------------------------------------------- core
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Registry.all.map(q => q.name -> q.spark).toMap
 
-  private def qScan(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem").orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  private def qProject(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_extendedprice"), col("l_discount"),
-        (col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("net_price"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  private def qFilterNull(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .filter(col("l_returnflag").isNotNull && col("l_quantity").isNotNull)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_returnflag"), col("l_quantity"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  private def qFilterRange(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .filter(col("l_quantity").between(10, 30) &&
-        col("l_shipdate") < to_timestamp(lit("1998-01-01")))
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"), col("l_shipdate"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  private def qStringNorm(s: SparkSession, d: String): DataFrame =
-    t(s, d, "part")
-      .select(col("p_partkey"), Relational.normString(col("p_name")).as("name_norm"))
-      .orderBy(col("p_partkey"))
-
-  private def qCaseIlike(s: SparkSession, d: String): DataFrame =
-    t(s, d, "part")
-      .select(col("p_partkey"), col("p_type"),
-        Relational.categorize(col("p_type"),
-          Seq("economy" -> "Value", "standard" -> "Mainstream", "promo" -> "Promoted"))
-          .as("type_category"))
-      .orderBy(col("p_partkey"))
-
-  private def qCaseBands(s: SparkSession, d: String): DataFrame =
-    t(s, d, "part")
-      .select(col("p_partkey"), col("p_size"),
-        Relational.bands(col("p_size"),
-          Seq((Int.MinValue, 4, "Tiny"), (5, 14, "Small"), (15, 29, "Medium"), (30, 49, "Large")),
-          "Huge").as("size_band"))
-      .orderBy(col("p_partkey"))
-
-  private def qDateTrunc(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
-      .select(col("o_orderkey"), to_date(col("o_orderdate")).as("order_date"))
-      .orderBy(col("o_orderkey"))
-
-  /** E5/E6 — date parts; Spark dayofweek is 1=Sunday..7, the reference's
-    * Postgres DATE_PART('dow') is 0=Sunday..6 → subtract 1. */
-  private def qDatePart(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
-      .select(col("o_orderkey"),
-        year(col("o_orderdate")).as("order_year"),
-        month(col("o_orderdate")).as("order_month"),
-        hour(col("o_orderdate")).as("order_hour"),
-        (dayofweek(col("o_orderdate")) - 1).as("order_dow"))
-      .orderBy(col("o_orderkey"))
-
-  private def qSurrogateKey(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .select(col("l_orderkey"), col("l_linenumber"),
-        Relational.surrogateKey(col("l_orderkey"), col("l_linenumber")).as("row_key"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  private def qDistinct(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .select(col("l_returnflag"), col("l_linestatus"))
-      .distinct()
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-
-  private def qGroupbyMinMaxCount(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        count(lit(1)).as("n_rows"),
-        sum(col("l_quantity")).as("sum_qty"),
-        min(col("l_shipdate")).as("first_ship"),
-        max(col("l_shipdate")).as("last_ship"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-
-  private def qCountDistinct(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(
-        countDistinct(col("l_suppkey")).as("n_supp"),
-        countDistinct(col("l_partkey")).as("n_part"))
-      .orderBy(col("l_returnflag"))
-
-  /** Ordered-set aggregates: EXACT continuous percentiles (both engines
-    * implement the same (n−1)·p rank interpolation; quantities are
-    * integral so the arithmetic is bit-stable). */
-  private def qPercentiles(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(
-        expr("percentile(l_quantity, 0.5)").as("p50"),
-        expr("percentile(l_quantity, 0.95)").as("p95"))
-      .orderBy(col("l_returnflag"))
-
-  private def qHaving(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
-      .groupBy(col("o_custkey"))
-      .agg(count(lit(1)).as("order_count"))
-      .filter(col("order_count") > 1)
-      .orderBy(col("o_custkey"))
-
-  private def qRollup(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .rollup(col("l_returnflag"), col("l_linestatus"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("l_quantity")).as("sum_qty"))
-      .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
-
-  /** PIVOT — long→wide conditional aggregation with an explicit value
-    * list (explicit values keep the plan single-pass; Spark's value
-    * discovery would add a collect). */
-  private def qPivot(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .pivot("l_linestatus", Seq("F", "O"))
-      .agg(sum(col("l_quantity")))
-      .withColumnRenamed("F", "qty_f")
-      .withColumnRenamed("O", "qty_o")
-      .orderBy(col("l_returnflag"))
-
-  /** Approximate distinct (HyperLogLog++) — the cardinality sketch a
-    * 100 TB pipeline uses instead of exact countDistinct. Raw sketch
-    * values are engine-specific, so the VERIFIED output is the
-    * engine-independent contract instead: the exact count plus a BOOLEAN
-    * that the sketch landed within 5% relative error of it (Spark's
-    * sketch on the Spark side, DuckDB's on the oracle side — both inside
-    * tolerance ⇒ identical rows, hash-matchable). */
-  private def qApproxCountDistinct(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(
-        approx_count_distinct(col("l_partkey"), 0.02).as("approx"),
-        countDistinct(col("l_partkey")).as("n_part_exact"))
-      .select(col("l_returnflag"), col("n_part_exact"),
-        (abs(col("approx") - col("n_part_exact"))
-          <= lit(0.05) * col("n_part_exact")).as("within_tolerance"))
-      .orderBy(col("l_returnflag"))
-
-  /** Re-aggregatable cardinality sketches (Apache DataSketches HLL via
-    * Spark's hll_sketch_agg / hll_union_agg) — the 100 TB distinct-count
-    * pattern X21's one-shot sketch can't express: per-shard sketch
-    * PARTIALS are materialized (here: customers split by c_custkey
-    * parity), then UNIONED and estimated in a later, cheaper pass —
-    * exactly how a pre-aggregated sketch table rolls up across days or
-    * partitions without touching raw data again. Verified EXACTLY
-    * against DuckDB's count(DISTINCT): per-nation segment cardinalities
-    * (≤ 5) sit deep inside the sketch's coupon-list regime, where the
-    * DataSketches estimator is exact by construction — the contract is
-    * documented as cardinality ≪ 2^lgK; at real scale the same plan
-    * returns ±1.6% estimates. */
-  private def qHllDistinct(s: SparkSession, d: String): DataFrame =
-    t(s, d, "customer")
-      .groupBy(col("c_nationkey"), (col("c_custkey") % 2).as("shard"))
-      .agg(expr("hll_sketch_agg(c_mktsegment)").as("sk"))
-      .groupBy(col("c_nationkey"))
-      .agg(expr("hll_sketch_estimate(hll_union_agg(sk))").as("n_segments"))
-      .orderBy(col("c_nationkey"))
-
-  private def qIntersect(s: SparkSession, d: String): DataFrame =
-    t(s, d, "customer").select(col("c_nationkey").as("nationkey"))
-      .intersect(t(s, d, "supplier").select(col("s_nationkey").as("nationkey")))
-      .orderBy(col("nationkey"))
-
-  private def qExcept(s: SparkSession, d: String): DataFrame =
-    t(s, d, "customer").select(col("c_nationkey").as("nationkey"))
-      .except(t(s, d, "supplier").select(col("s_nationkey").as("nationkey")))
-      .orderBy(col("nationkey"))
-
-  private def qCube(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
-      .cube(col("o_orderstatus"), col("o_orderpriority"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(Relational.cents(col("o_totalprice"))).as("total_cents"))
-      .orderBy(asc_nulls_first("o_orderstatus"), asc_nulls_first("o_orderpriority"))
-
-  private def qUnion(s: SparkSession, d: String): DataFrame = {
-    val c = t(s, d, "customer")
-      .select(col("c_name").as("name"), col("c_acctbal").as("acctbal"), lit("customer").as("kind"))
-    val sup = t(s, d, "supplier")
-      .select(col("s_name").as("name"), col("s_acctbal").as("acctbal"), lit("supplier").as("kind"))
-    c.unionByName(sup).orderBy(col("kind"), col("name"))
-  }
-
-  /** §2.3 — the implied star join: lineitem ⋈ orders ⋈ customer ⋈ nation ⋈
-    * region, dims broadcast; revenue summed as exact integer cents. */
-  private def qJoinFactDim(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .join(t(s, d, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .join(t(s, d, "customer"), col("o_custkey") === col("c_custkey"))
-      .join(broadcast(t(s, d, "nation")), col("c_nationkey") === col("n_nationkey"))
-      .join(broadcast(t(s, d, "region")), col("n_regionkey") === col("r_regionkey"))
-      .groupBy(col("r_name").as("region_name"), col("n_name").as("nation_name"))
-      .agg(
-        count(lit(1)).as("n_lines"),
-        sum(Relational.cents(col("l_extendedprice") * (lit(1.0) - col("l_discount"))))
-          .as("revenue_cents"))
-      .orderBy(col("region_name"), col("nation_name"))
-
-  /** LEFT SEMI join (EXISTS shape): orders having at least one
-    * high-quantity line. The semi join streams the fact side and never
-    * duplicates it per matching line — the planner broadcasts the
-    * (filtered, projected) existence set. */
-  private def qSemiJoin(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
-      .join(t(s, d, "lineitem").filter(col("l_quantity") > 45).select(col("l_orderkey")),
-        col("o_orderkey") === col("l_orderkey"), "left_semi")
-      .select(col("o_orderkey"), col("o_custkey"))
-      .orderBy(col("o_orderkey"))
-
-  /** FULL OUTER join with keys exclusive to BOTH sides (the parity
-    * filters guarantee left-only and right-only rows exist, so both
-    * null-extension paths are actually exercised): customers without
-    * orders carry n_orders = 0, order keys without a customer row carry
-    * a NULL name. */
-  private def qOuterJoin(s: SparkSession, d: String): DataFrame = {
-    val c = t(s, d, "customer").filter(col("c_custkey") % 2 === 0)
-      .select(col("c_custkey"), col("c_name"))
-    val o = t(s, d, "orders").filter(col("o_custkey") % 3 === 0)
-      .groupBy(col("o_custkey")).agg(count(lit(1)).as("cnt"))
-    c.join(o, col("c_custkey") === col("o_custkey"), "full")
-      .select(coalesce(col("c_custkey"), col("o_custkey")).as("custkey"),
-        col("c_name"), coalesce(col("cnt"), lit(0L)).as("n_orders"))
-      .orderBy(col("custkey"))
-  }
-
-  /** Salted join under the correctness gate: the skew remedy must be
-    * RESULT-TRANSPARENT — the oracle is the plain join, so any salt
-    * routing error (missed bucket, duplicated replica) shows up as a
-    * hash mismatch. orders is the "skewed" big side, nation-sized
-    * customer slice the replicated small side. */
-  private def qSaltedJoin(s: SparkSession, d: String): DataFrame =
-    Relational.saltedJoin(
-      t(s, d, "orders").select(col("o_custkey"), col("o_totalprice")),
-      t(s, d, "customer").select(col("c_custkey").as("o_custkey"), col("c_mktsegment")),
-      Seq("o_custkey"), buckets = 8)
-      .groupBy(col("c_mktsegment"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(Relational.cents(col("o_totalprice"))).as("revenue_cents"))
-      .orderBy(col("c_mktsegment"))
-
-  /** RANGE-frame window: running revenue per customer over a DATE range
-    * frame (all earlier-or-same-date orders, ties summed TOGETHER —
-    * the semantic difference from a ROWS frame that makes this a
-    * distinct operator). */
-  private def qWindowRange(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate").cast("date"))
-      .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, d, "orders")
-      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-        sum(Relational.cents(col("o_totalprice"))).over(w).as("running_cents"))
-      .orderBy(col("o_custkey"), col("o_orderdate"), col("o_orderkey"))
-  }
-
-  private def qTopK(s: SparkSession, d: String): DataFrame =
-    Relational.topK(
-      t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"), col("o_totalprice")),
-      100, col("o_totalprice").desc, col("o_orderkey").asc)
-
-  private def qWindowRank(s: SparkSession, d: String): DataFrame =
-    Relational.latestPerKey(
-      t(s, d, "orders"),
-      Seq("o_custkey"),
-      Seq(col("o_orderdate").desc, col("o_orderkey").desc))
-      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
-      .orderBy(col("o_custkey"))
-
-  /** Top-3 orders per customer through the BOUNDED map-side top-k
-    * aggregate (graft.functions.TopKByScore): partial aggregation trims
-    * each map task to ≤ k rows per key before the shuffle — the exchange
-    * moves O(keys·k) rows where the window row_number formulation
-    * shuffles the entire input. */
-  private def qTopkPerKey(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
-      .groupBy(col("o_custkey"))
-      .agg(graft.functions.TopKByScore(col("o_totalprice"), col("o_orderkey"), 3).as("top"))
-      .select(col("o_custkey"), explode(col("top")).as("p"))
-      .select(col("o_custkey"), col("p.id").as("o_orderkey"), col("p.score").as("o_totalprice"))
-      .orderBy(col("o_custkey"), col("o_totalprice").desc, col("o_orderkey"))
-
-  private def qWindowRunning(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey"))
-      .orderBy(col("o_orderdate"), col("o_orderkey"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    t(s, d, "orders")
-      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-        sum(Relational.cents(col("o_totalprice"))).over(w).as("running_spend_cents"))
-      .orderBy(col("o_custkey"), col("o_orderdate"), col("o_orderkey"))
-  }
-
-  /** lag/lead window family: days since the customer's previous order
-    * (NULL for the first). */
-  private def qWindowLag(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_orderdate"), col("o_orderkey"))
-    t(s, d, "orders")
-      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-        datediff(col("o_orderdate"), lag(col("o_orderdate"), 1).over(w))
-          .as("days_since_prev"))
-      .orderBy(col("o_custkey"), col("o_orderdate"), col("o_orderkey"))
-  }
-
-  private def qAntiAcceptedValues(s: SparkSession, d: String): DataFrame =
-    Relational.acceptedValuesViolations(
-      t(s, d, "events"), "event_type", Seq("click", "view", "purchase", "signup"))
-      .select(col("event_id"), col("event_type"))
-      .orderBy(col("event_id"))
-
-  /** Time-series rollup: monthly revenue (date_trunc grain). */
-  // One year-partitioned copy of orders per (session, sf dir), written
-  // through IO.writePartitioned on first use (deterministic content, so a
-  // leftover directory from a previous JVM is equally valid). This is the
-  // layout a daily-rebuilt fact table has at scale; q_partition_prune
-  // reads it back WITH a partition predicate so the scan's partition
-  // pruning — the single most scale-critical I/O behavior — sits under
-  // the correctness gate rather than only under a plan spec.
-  private val partDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-  private[graft] def partitionedOrdersDir(s: SparkSession, d: String): String =
-    partDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_orders_by_year_${java.lang.Integer.toHexString(d.hashCode)}").getAbsolutePath
-      if (!new java.io.File(dir, "_SUCCESS").exists())
-        graft.sources.IO.writePartitioned(
-          t(s, d, "orders").withColumn("o_year", year(col("o_orderdate"))),
-          Seq("o_year"), dir)
-      dir
-    })
-
-  // Z-ordered lineitem layout, written once per (session, sfDir): rows
-  // clustered by the Morton interleave of two derived dimensions so
-  // either-dimension filters row-group-skip (IOSpec measures the skip;
-  // this registry query proves result transparency under the gate).
-  private val zorderDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-  private[graft] def zorderedLineitemDir(s: SparkSession, d: String): String =
-    zorderDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_lineitem_zorder_${java.lang.Integer.toHexString(d.hashCode)}").getAbsolutePath
-      if (!new java.io.File(dir, "_SUCCESS").exists())
-        graft.sources.IO.writeZOrdered(
-          t(s, d, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
-            pmod(col("l_partkey"), lit(1024L)).cast("int").as("zx"),
-            pmod(col("l_suppkey"), lit(1024L)).cast("int").as("zy"),
-            col("l_quantity")),
-          "zx", "zy", bits = 10, nFiles = 16, dir)
-      dir
-    })
-
-  // CSV landing copy of orders (one-time per session+sf): the text-source
-  // read must round-trip schema-exactly against the parquet base table.
-  private val csvDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-  private[graft] def csvOrdersDir(s: SparkSession, d: String): String =
-    csvDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_orders_csv_${java.lang.Integer.toHexString(d.hashCode)}").getAbsolutePath
-      if (!new java.io.File(dir, "_SUCCESS").exists())
-        t(s, d, "orders")
-          .select(col("o_orderkey"), col("o_custkey"),
-            col("o_orderpriority"), col("o_totalprice"),
-            col("o_orderdate").cast("date").as("o_date"))
-          .write.mode("overwrite").option("header", "true").csv(dir)
-      dir
-    })
-
-  /** CSV source round-trip (schema-pinned read of the text landing copy;
-    * doubles survive because Java's shortest-repr formatting parses back
-    * bit-exact) — the oracle reads the parquet base table, so any
-    * serialization drift breaks the hash. */
-  private def qCsvScan(s: SparkSession, d: String): DataFrame =
-    s.read
-      .schema("o_orderkey LONG, o_custkey LONG, o_orderpriority STRING, o_totalprice DOUBLE, o_date DATE")
-      .option("header", "true").csv(csvOrdersDir(s, d))
-      .orderBy(col("o_orderkey"))
-
-  /** Native session_window sessionization (the built-in merging session
-    * operator — one exchange; an event at exactly gap distance starts a
-    * NEW session, the strictness the oracle mirrors). */
-  private def qSessionWindow(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events")
-      .select(col("user_id"), timestamp_micros(expr("ts div 1000")).as("tsc"))
-      .groupBy(col("user_id"), session_window(col("tsc"), "30 minutes").as("w"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("user_id"), unix_micros(col("w.start")).as("start_us"),
-        unix_micros(col("w.end")).as("end_us"), col("n_events"))
-      .orderBy(col("user_id"), col("start_us"))
-
-  // Fragmented-then-compacted lineitem copy (one-time per session+sf):
-  // 32 shard files rewritten by IO.compact into size-targeted files.
-  private val compactDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-  private[graft] def compactedLineitemDir(s: SparkSession, d: String): String =
-    compactDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val frag = new java.io.File(tmp, s"graft_li_frag_$tag").getAbsolutePath
-      val out = new java.io.File(tmp, s"graft_li_compact_$tag").getAbsolutePath
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        t(s, d, "lineitem")
-          .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-          .repartition(32)
-          .write.mode("overwrite").parquet(frag)
-        graft.sources.IO.compact(s, frag, out, targetBytes = 64L << 20)
-      }
-      out
-    })
-
-  /** Read of the compacted layout against the base-table oracle (result
-    * transparency: compaction must preserve every row exactly). */
-  private def qCompactScan(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(compactedLineitemDir(s, d))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  // One-time export of documents as raw TEXT LINES ("doc_id\ttext", line
-  // breaks sanitized to spaces) — the native landing format of a web/LLM
-  // corpus, and the one source format the matrix was missing.
-  private val textDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-  private[graft] def textLinesDir(s: SparkSession, d: String): String =
-    textDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val tmp = System.getProperty("java.io.tmpdir")
-      // The directory tag carries a CONTENT fingerprint (row count + max
-      // doc_id), not just the path hash: a cross-run _SUCCESS sentinel
-      // alone would silently serve a stale export if the dataset at the
-      // same path were regenerated (the one cheap aggregate per JVM is
-      // the price of that staleness guard).
-      // coalesce: max() is NULL on an empty documents table and
-      // Row.getLong throws on null — a degenerate dataset dir must
-      // still export (as an empty text dir), not crash the fingerprint
-      val fpRow = t(s, d, "documents")
-        .agg(count(lit(1)).as("n"),
-          coalesce(max(col("doc_id")), lit(-1L)).as("mx")).collect()(0)
-      val tag = java.lang.Integer.toHexString(
-        (d, fpRow.getLong(0), fpRow.getLong(1)).hashCode)
-      val out = new java.io.File(tmp, s"graft_txtlines_$tag").getAbsolutePath
-      if (!new java.io.File(out, "_SUCCESS").exists())
-        spread(t(s, d, "documents"), "doc_id")
-          .select(concat(col("doc_id").cast("string"), lit("\t"),
-            regexp_replace(col("text"), "[\\t\\n\\r]", " ")).as("value"))
-          .write.mode("overwrite").text(out)
-      out
-    })
-
-  /** Raw text-lines source (`spark.read.text`): one line per document,
-    * id and payload split at the first tab. Result transparency is the
-    * gate — the oracle recomputes the same (chars, tokens) projection
-    * from the base table through the identical sanitization, so any
-    * line-splitting or encoding corruption in the round trip shows as a
-    * hash mismatch. At scale this is the HTTP-dump landing zone read:
-    * splittable line format, schema applied at read time. */
-  private def qTextScan(s: SparkSession, d: String): DataFrame =
-    s.read.text(textLinesDir(s, d))
-      .select(split(col("value"), "\t", 2).as("p"))
-      .select(element_at(col("p"), 1).cast("long").as("doc_id"),
-        element_at(col("p"), 2).as("line"))
-      .select(col("doc_id"), length(col("line")).as("n_chars"),
-        TextOps.tokenCount(col("line")).as("n_tokens"))
-      .orderBy(col("doc_id"))
-
-  /** Product-quantization codes over the embedding store: 4 subspaces of
-    * 16 dims, 16-entry seeded codebooks — exact integer argmin, exploded
-    * to (vec_id, subspace, code) for the compare. */
-  private def qPqCodes(s: SparkSession, d: String): DataFrame =
-    Vectors.pqCodes(t(s, d, "embeddings"), "vec_id", "embedding", m = 4, k = 16)
-      .orderBy(col("id"), col("subspace"))
-      .withColumnRenamed("id", "vec_id")
-
-  /** TRAINED-PQ codes: two per-subspace L2 Lloyd iterations
-    * (Vectors.trainPqCodebooks — exact integer sums and truncating
-    * integer means, so training is deterministic and the oracle can
-    * mirror it CTE-for-CTE) refine the seeded codebooks, then the same
-    * in-row assignment as q_pq_codes emits (vec_id, subspace, code)
-    * against the trained book via the pqCodesWith seam. Only k·dim
-    * aggregate rows reach the driver per round. */
-  private def qPqTrained(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
-    val cb = Vectors.trainPqCodebooks(emb, "vec_id", "embedding",
-      m = 4, k = 16, iters = 2)
-    Vectors.pqCodesWith(emb, "vec_id", "embedding", m = 4, cb)
-      .orderBy(col("id"), col("subspace"))
-      .withColumnRenamed("id", "vec_id")
-  }
-
-  /** PQ asymmetric-distance top-10 around corpus vector 42: the serving
-    * query over the PQ-compressed store — driver-side LUT, in-row ADC sum,
-    * TakeOrderedAndProject. */
-  private def qPqTopK(s: SparkSession, d: String): DataFrame =
-    Vectors.pqTopK(t(s, d, "embeddings"), "vec_id", "embedding",
-        queryId = 42L, m = 4, k = 16, topK = 10)
-      .withColumnRenamed("id", "vec_id")
-
-  /** Correlated scalar subqueries through the SQL entry point — Catalyst
-    * rewrites each into a left-outer aggregate join
-    * (RewriteCorrelatedScalarSubquery); the 1.5×-average predicate is
-    * exact integer arithmetic (2·cents·count > 3·sum_cents), so both
-    * engines agree bit-for-bit. The SAME SQL text is the oracle. */
-  private def qScalarSubquery(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "orders").createOrReplaceTempView("orders")
-    s.sql(OracleSql.all("q_scalar_subquery"))
-  }
-
-  /** Recursive CTE through the SQL entry point (X207): bounded-depth
-    * multi-source reachability (min hop distance ≤ 5 from every node)
-    * over the 20-node synthetic domain graph — the same SQL text runs
-    * verbatim on both engines (Spark 4's WITH RECURSIVE executes as a
-    * driver-coordinated loop of per-level jobs under UnionLoopExec;
-    * DuckDB iterates natively). The recursion fence is structural:
-    * depth < 5 bounds the loop regardless of cycles, and the edge table
-    * is 40-row bounded (two arithmetic generators over 20 residues), so
-    * every level is model-sized. At 100 TB the corpus-sized part is the
-    * DISTINCT edge/node derivation — one map-side aggregate each —
-    * and the loop never touches the corpus again. */
-  private def qRecursiveCte(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "documents").createOrReplaceTempView("documents")
-    s.sql(OracleSql.all("q_recursive_cte"))
-  }
-
-  /** Correlated LATERAL subquery with per-group LIMIT through the SQL
-    * entry point (X208): top-2 orders per market segment — Catalyst
-    * decorrelates the LIMIT-per-group into a per-segment row_number
-    * window over the orders⋈customer join filtered to rn ≤ 2
-    * (plan-read at the gate; no WindowGroupLimit fires on the
-    * decorrelated form, so the window ranks every order per segment —
-    * at 100 TB the hand-optimized shape is the X27 bounded
-    * top-k-per-key aggregate, and this row is the SQL-surface parity
-    * for it, not the scale path). The SAME text is the oracle; exact
-    * integer cents; ties inside the LIMIT break on orderkey so the
-    * selected SET is deterministic. */
-  private def qLateralTopn(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "orders").createOrReplaceTempView("orders")
-    t(s, d, "customer").createOrReplaceTempView("customer")
-    s.sql(OracleSql.all("q_lateral_topn"))
-  }
-
-  /** The REFERENCE-CORE pipeline (ingest → stg_weather) under the hard
-    * oracle gate: raw Weatherstack payloads are synthesized closed-form
-    * from doc_id (ref: dags/weatherstack_full_pipeline.py:80-107 payload
-    * shape), pushed through the REAL from_json ingest and the staging
-    * model (dbt/models/staging/stg_weather.sql), and the oracle recomputes
-    * every staged column from the same arithmetic — so JSON parsing,
-    * error-envelope routing (doc_id%9), malformed-payload routing
-    * (doc_id%11), the -50..60 plausibility filter (temps span -55..64),
-    * all four ILIKE categories and every temperature band are all
-    * result-verified, not just spec'd. `id` (xxhash64 surrogate) is
-    * excluded: not portably recomputable — its uniqueness is dbt-tested. */
-  private def qWeatherStg(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents").select(col("doc_id"))
-    val descs = array(lit("sunny spells"), lit("light rain"), lit("cloudy sky"), lit("mist"))
-    val dirs = array(Seq("N", "NE", "E", "SE", "S", "SW", "W", "NW").map(lit(_)): _*)
-    def m(n: Int): org.apache.spark.sql.Column = pmod(col("doc_id"), lit(n.toLong))
-    val payload = struct(
-      struct(concat(lit("City "), col("doc_id")).as("name"),
-        concat(lit("Country "), m(7)).as("country")).as("location"),
-      struct((m(120) - 55).cast("int").as("temperature"),
-        array(element_at(descs, m(4).cast("int") + 1)).as("weather_descriptions"),
-        m(101).cast("int").as("humidity"),
-        m(40).cast("int").as("wind_speed"),
-        element_at(dirs, m(8).cast("int") + 1).as("wind_dir"),
-        (m(60) + 980).cast("int").as("pressure"),
-        m(16).cast("int").as("visibility"),
-        m(12).cast("int").as("uv_index"),
-        concat(lpad((m(12) + 1).cast("string"), 2, "0"), lit(":"),
-          lpad(m(60).cast("string"), 2, "0"),
-          when(m(2) === 0, lit(" AM")).otherwise(lit(" PM"))).as("observation_time"))
-        .as("current"))
-    val raw = docs.select(
-      concat(lit("City "), col("doc_id")).as("city"),
-      when(m(9) === 0, lit("""{"error":{"code":615,"info":"no data"}}"""))
-        .when(m(11) === 1, lit("this is not json {"))
-        .otherwise(to_json(payload)).as("raw_json"))
-    val dis = java.sql.Timestamp.from(java.time.Instant.parse("2026-03-01T09:00:00Z"))
-    val now = java.sql.Timestamp.from(java.time.Instant.parse("2026-03-01T10:30:00Z"))
-    pipeline.WeatherPipeline.stgWeather(pipeline.WeatherPipeline.ingest(raw, dis, now))
-      .drop("id")
-      .orderBy(col("city_clean"))
-  }
-
-  /** URL decomposition — the crawl-pipeline step before any per-domain
-    * policy (dedup scope, robots groups, domain mixing): host, registered
-    * domain, TLD, path and a query param extracted with the engine's
-    * parse_url over closed-form synthesized URLs, so the oracle can
-    * rebuild every component from the same arithmetic — a parse_url
-    * regression (or a URL component leaking into the wrong field)
-    * hash-mismatches. Scan-linear codegen, no shuffle before the
-    * per-TLD rollup, which is a broadcastable |TLD|-row aggregate. */
-  private def qUrlParse(s: SparkSession, d: String): DataFrame = {
-    def m(n: Int): org.apache.spark.sql.Column = pmod(col("doc_id"), lit(n.toLong))
-    val subs = array(Seq("www", "api", "cdn", "blog").map(lit(_)): _*)
-    val doms = array(Seq("example", "sample", "data", "corp", "site").map(lit(_)): _*)
-    val tlds = array(Seq("com", "org", "net").map(lit(_)): _*)
-    val url = concat(lit("https://"),
-      element_at(subs, m(4).cast("int") + 1), lit("."),
-      element_at(doms, m(5).cast("int") + 1), lit("."),
-      element_at(tlds, m(3).cast("int") + 1),
-      lit("/p/"), col("doc_id"),
-      lit("?page="), m(7), lit("&ref=r"), m(11))
-    t(s, d, "documents").select(col("doc_id"), url.as("url"))
-      .select(col("doc_id"),
-        parse_url(col("url"), lit("HOST")).as("host"),
-        substring_index(parse_url(col("url"), lit("HOST")), ".", -2).as("reg_domain"),
-        substring_index(parse_url(col("url"), lit("HOST")), ".", -1).as("tld"),
-        parse_url(col("url"), lit("PATH")).as("path"),
-        parse_url(col("url"), lit("QUERY"), lit("page")).cast("int").as("page"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Robots-policy filtering — the admission decision every crawl
-    * pipeline makes per URL: match the URL's path against its domain's
-    * robots rule group and apply the LONGEST-matching-prefix rule
-    * (most-specific-wins, the documented robots.txt evaluation order).
-    * The rule table is a per-domain dim (|domains|·|rules| rows) built
-    * engine-side from the corpus's own registered domains, so the join
-    * is a BROADCAST prefix-predicate join (equi on domain +
-    * `startswith` residual) — the URL scan never shuffles, and the
-    * winning rule per URL is a deterministic arg-max over an ordered
-    * (prefix-length, rule, allow) struct: two distinct prefixes of the
-    * same path and length must be equal, so the length key alone is
-    * already unique per group. The oracle rebuilds URLs, rules and the
-    * longest-prefix winner from the same closed-form arithmetic. */
-  private def qRobotsFilter(s: SparkSession, d: String): DataFrame = {
-    def m(n: Int): org.apache.spark.sql.Column = pmod(col("doc_id"), lit(n.toLong))
-    val doms = array(Seq("example", "sample", "data", "corp", "site").map(lit(_)): _*)
-    val tlds = array(Seq("com", "org", "net").map(lit(_)): _*)
-    val urls = t(s, d, "documents").select(col("doc_id"),
-      concat(element_at(doms, m(5).cast("int") + 1), lit("."),
-        element_at(tlds, m(3).cast("int") + 1)).as("reg_domain"),
-      concat(when(m(3) === 1, lit("/img/")).otherwise(lit("/p/")),
-        expr("doc_id div 3")).as("path"))
-    // per-domain rule group: default-allow root, blocked image dir, a
-    // domain-keyed policy on /p/ (closed-form: first-letter parity), and
-    // a specific /p/3 override that outranks /p/ by length
-    val rules = urls.select(col("reg_domain")).distinct()
-      .select(col("reg_domain"), explode(array(
-        struct(lit("/").as("rule_path"), lit(true).as("allow")),
-        struct(lit("/img/").as("rule_path"), lit(false).as("allow")),
-        struct(lit("/p/").as("rule_path"),
-          (ascii(substring(col("reg_domain"), 1, 1)) % 2 === 0).as("allow")),
-        struct(lit("/p/3").as("rule_path"), lit(true).as("allow")))).as("r"))
-      .select(col("reg_domain"), col("r.rule_path"), col("r.allow"))
-    urls.as("u").join(broadcast(rules.as("r")),
-        col("u.reg_domain") === col("r.reg_domain") &&
-          col("u.path").startsWith(col("r.rule_path")))
-      .groupBy(col("doc_id"), col("u.reg_domain").as("reg_domain"), col("u.path").as("path"))
-      .agg(max(struct(length(col("r.rule_path")).as("l"),
-        col("r.rule_path").as("p"), col("r.allow").as("a"))).as("w"))
-      .select(col("doc_id"), col("reg_domain"), col("path"),
-        col("w.p").as("rule_path"), col("w.a").as("allowed"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** URL canonicalization + dedup — the crawl-frontier normalization
-    * every web pipeline runs before per-URL dedup (tracking params,
-    * host case, trailing slashes and fragments all alias the same
-    * resource): three synthesized variants per base URL (mixed-case
-    * host + utm param; trailing slash + fragment; clean) are REALLY
-    * parsed back with the engine's parse_url, the host lowercased, the
-    * fragment/tracking params dropped by whitelist reassembly, the
-    * trailing slash trimmed — then grouped by the canonical form. The
-    * oracle recomputes the expected canonical URL and group size from
-    * the same doc_id arithmetic, so any parse/normalize slip
-    * hash-mismatches. Scan-linear codegen into ONE group-by exchange on
-    * the canonical key; group cardinality = |base URLs|, never skewed
-    * beyond the 3-variant fan-in. */
-  private def qUrlCanonical(s: SparkSession, d: String): DataFrame = {
-    val b = expr("doc_id div 3")
-    def mb(n: Int): org.apache.spark.sql.Column = pmod(b, lit(n.toLong))
-    val m3 = pmod(col("doc_id"), lit(3L))
-    val subs = array(Seq("www", "api", "cdn", "blog").map(lit(_)): _*)
-    val doms = array(Seq("example", "sample", "data", "corp", "site").map(lit(_)): _*)
-    val tlds = array(Seq("com", "org", "net").map(lit(_)): _*)
-    val host = concat(
-      element_at(subs, mb(4).cast("int") + 1), lit("."),
-      element_at(doms, mb(5).cast("int") + 1), lit("."),
-      element_at(tlds, mb(3).cast("int") + 1))
-    val url = concat(lit("https://"),
-      when(m3 === 1, upper(host)).otherwise(host),
-      lit("/p/"), b,
-      when(m3 === 2, lit("/")).otherwise(lit("")),
-      lit("?page="), mb(7),
-      when(m3 === 1, lit("&utm_source=feed")).otherwise(lit("")),
-      when(m3 === 2, lit("#sec")).otherwise(lit("")))
-    t(s, d, "documents").select(col("doc_id"), url.as("url"))
-      .select(col("doc_id"), concat(lit("https://"),
-        lower(parse_url(col("url"), lit("HOST"))),
-        rtrim(parse_url(col("url"), lit("PATH")), "/"),
-        lit("?page="), parse_url(col("url"), lit("QUERY"), lit("page")))
-        .as("canonical_url"))
-      .groupBy(col("canonical_url"))
-      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_variants"))
-      .orderBy(col("canonical_url"))
-  }
-
-  /** Crawl-prioritization domain ranking — integer-exact PageRank
-    * (ops.Graphs.pageRankInt) over a synthesized domain link graph
-    * (src = doc_id%20, dst = (7·doc_id+3)%20, self-loops dropped,
-    * edges distinct). Three iterations, each ONE node-keyed join + ONE
-    * destination-keyed aggregation over the persisted degree-annotated
-    * edge list; all arithmetic is order-free integer math (rank div
-    * outdeg, damping as (17·s) div 20), which is the only way an
-    * iterative float algorithm can sit under an exact-hash gate — the
-    * oracle unrolls the same three rounds CTE-for-CTE. */
-  private def qDomainRank(s: SparkSession, d: String): DataFrame = {
-    val edges = t(s, d, "documents").select(
-      pmod(col("doc_id"), lit(20L)).as("src"),
-      pmod(col("doc_id") * 7 + 3, lit(20L)).as("dst"))
-    ops.Graphs.pageRankInt(edges, "src", "dst", iters = 3)
-      .select(col("v").as("domain"), col("r").as("rank"))
-      .orderBy(col("domain"))
-  }
-
-  /** Seed-personalized PageRank / TrustRank (X187 — ops.Graphs
-    * .personalizedPageRankInt): teleport mass lands only on the trusted
-    * seed domains (v ≡ 0 mod 5), 3 exact-integer rounds over the same
-    * synthetic domain graph as q_domain_rank — the crawl-frontier
-    * prioritizer / spam demoter next to raw PageRank. */
-  private def qTrustRank(s: SparkSession, d: String): DataFrame = {
-    val edges = t(s, d, "documents").select(
-      pmod(col("doc_id"), lit(20L)).as("src"),
-      pmod(col("doc_id") * 7 + 3, lit(20L)).as("dst"))
-    val seeds = s.range(4).select((col("id") * 5).as("v"))
-    ops.Graphs.personalizedPageRankInt(edges, "src", "dst", seeds, iters = 3)
-      .select(col("v").as("domain"), col("trust"))
-      .orderBy(col("domain"))
-  }
-
-  /** Ingest-volume anomaly detection — the monitoring query a
-    * continuous-ingest deployment runs over its own landing table: daily
-    * event counts z-scored against the trailing 7 full days. The daily
-    * aggregate is ONE map-side-partial exchange whose output is
-    * calendar-bounded (days, not events), so the unpartitioned ordered
-    * window over it is safe at ANY corpus scale; all window sums are
-    * exact integers and the mean/variance/z doubles are computed with
-    * the identical expression tree on both engines (sum/div/sqrt are
-    * correctly-rounded IEEE ops ⇒ bit-equal hashes). Variance uses the
-    * integer power sums (s7, ss7) cast to double BEFORE the arithmetic —
-    * n_day can reach 1e9 at web scale and s7² would overflow BIGINT. */
-  private def qAnomalyZscore(s: SparkSession, d: String): DataFrame = {
-    val daily = t(s, d, "events")
-      .select(expr("(ts div 1000) div 86400000000").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("n"))
-    val w = Window.orderBy(col("day")).rowsBetween(-7, -1)
-    val st = daily.select(col("day"), col("n"),
-      sum(col("n")).over(w).as("s7"),
-      sum(col("n") * col("n")).over(w).as("ss7"),
-      count(col("n")).over(w).as("c7"))
-      .filter(col("c7") === 7)
-    val mean = col("s7").cast("double") / col("c7")
-    val variance = (col("ss7").cast("double") -
-      col("s7").cast("double") * col("s7").cast("double") / col("c7")) / (col("c7") - 1)
-    st.select(col("day"), col("n"), mean.as("mean7"),
-        when(variance > 0,
-          (col("n").cast("double") - mean) / sqrt(variance)).as("z"))
-      .withColumn("is_anomaly", col("z").isNotNull && abs(col("z")) >= 2.0)
-      .orderBy(col("day"))
-  }
-
-  /** MAD-based robust ingest anomaly detection (X193): daily event
-    * counts flagged by MEDIAN ± k·MAD instead of mean ± k·σ — the
-    * robust twin of q_anomaly_zscore (one bad day inflates σ and hides
-    * itself; the median absolute deviation is breakdown-point-0.5,
-    * Hampel's rule). INTEGER-EXACT end to end: lower median = the
-    * element at rank (D+1) div 2 ordering (value ASC, day ASC), MAD =
-    * lower median of |n − med|, flag = dev > 3·mad. The day table is
-    * TIME-BOUNDED (one row per day regardless of corpus size), so its
-    * single-partition rank windows are bounded like the Par-width
-    * offset tables — the corpus-sized work is only the day aggregate. */
-  private def qMadOutliers(s: SparkSession, d: String): DataFrame = {
-    val daily = t(s, d, "events")
-      .select(expr("(ts div 1000) div 86400000000").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("n"))
-    def lowerMedian(df: DataFrame, vCol: String): DataFrame = {
-      val r = df.withColumn("__r",
-        row_number().over(Window.orderBy(col(vCol), col("day"))))
-      val cnt = df.agg(count(lit(1)).as("__d"))
-      r.crossJoin(broadcast(cnt))
-        .filter(col("__r") === expr("(__d + 1) div 2"))
-        .select(col(vCol).as("m"))
-    }
-    val med = lowerMedian(daily, "n")
-    val dev = daily.crossJoin(broadcast(med))
-      .select(col("day"), col("n"), abs(col("n") - col("m")).as("dev"))
-    val mad = lowerMedian(dev.select(col("day"), col("dev")), "dev")
-      .select(col("m").as("mad"))
-    dev.crossJoin(broadcast(med)).crossJoin(broadcast(mad))
-      .select(col("day"), col("n"), col("m").as("med"), col("dev"),
-        col("mad"), (col("dev") > lit(3L) * col("mad")).as("is_outlier"))
-      .orderBy(col("day"))
-  }
-
-  /** kNN-graph DEGREE DIAGNOSTICS (X194): the undirected degree
-    * histogram plus the reciprocity rate (share of directed edges whose
-    * reverse also exists) — the two cheapest health signals of a
-    * near-neighbor graph (a healthy kNN graph is strongly reciprocal
-    * and its undirected degrees concentrate just above k; a flat or
-    * heavy-tailed histogram says the embedding space or the candidate
-    * generator broke). One edge scan for reciprocity (self-join on the
-    * reversed key — vertex-keyed hash join), one for degrees; output is
-    * histogram-sized. Integer-exact permille. */
-  private def qGraphDegreeStats(s: SparkSession, d: String): DataFrame = {
-    val e = Vectors.knnGraph(t(s, d, "embeddings"), "vec_id", "embedding", k = 3)
-      .select(col("src_id").as("src"), col("dst_id").as("dst"))
-    val und = e.select(least(col("src"), col("dst")).as("a"),
-        greatest(col("src"), col("dst")).as("b")).distinct()
-    val deg = und.select(col("a").as("v")).unionAll(und.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val recip = e.as("x").join(e.as("y"),
-        col("x.src") === col("y.dst") && col("x.dst") === col("y.src"),
-        "left_semi")
-      .agg(count(lit(1)).as("n_recip"))
-    val nEdges = e.agg(count(lit(1)).as("n_dir"))
-    deg.groupBy(col("deg")).agg(count(lit(1)).as("n_vertices"))
-      .crossJoin(broadcast(recip)).crossJoin(broadcast(nEdges))
-      .select(col("deg"), col("n_vertices"),
-        expr("(1000 * n_recip) div n_dir").as("recip_permille"))
-      .orderBy(col("deg"))
-  }
-
-  /** Curriculum phase assignment (X216 — see Mixing.curriculumPhases):
-    * exact length-quartile phases over the corpus (easy-to-hard
-    * ordering), the rfm-quintile rank pattern on documents. */
-  private def qCurriculum(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents").select(col("doc_id"),
-      size(filter(split(col("text"), " "), w => length(w) > 0))
-        .cast("long").as("n_tokens"))
-    corpus.Mixing.curriculumPhases(docs, "doc_id", "n_tokens", phases = 4)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
-  }
-
-  /** Luhn card-number audit (X217 — see TextOps.luhnValid): the
-    * checksum-validation stage of the PII scrub — 13-19-digit runs are
-    * extracted and mod-10-validated, reported per source as candidate /
-    * valid / flagged-doc counts. Like q_pii_redact, the corpus has no
-    * natural card numbers, so one deterministic 16-digit run per doc is
-    * synthesized closed-form from doc_id (≈10% Luhn-valid by
-    * arithmetic accident — both branches exercised) and the REAL
-    * extraction + validation runs over it. Scan-linear explode into a
-    * (source, doc)-keyed aggregate then a source roll-up. */
-  private def qLuhnAudit(s: SparkSession, d: String): DataFrame = {
-    val withNum = t(s, d, "documents").select(col("source"), col("doc_id"),
-      concat(col("text"), lit(" card "),
-        (lit(4000000000000000L) + col("doc_id") * 9973L).cast("string"))
-        .as("t"))
-    val cand = withNum.select(col("source"), col("doc_id"),
-      explode(regexp_extract_all(col("t"), lit("[0-9]{13,19}"), lit(0)))
-        .as("num"))
-    cand.withColumn("ok", TextOps.luhnValid(col("num")))
-      .groupBy(col("source"), col("doc_id"))
-      .agg(count(lit(1)).as("nc"),
-        sum(when(col("ok"), 1L).otherwise(0L)).as("nv"))
-      .groupBy(col("source"))
-      .agg(sum(col("nc")).as("n_candidates"), sum(col("nv")).as("n_valid"),
-        sum(when(col("nv") > 0, 1L).otherwise(0L)).as("n_docs_flagged"))
-      .orderBy(col("source"))
-  }
-
-  /** Vocabulary coverage curve (X224): the cumulative corpus-token
-    * share of the top-20 words in exact permille — the how-small-can-
-    * the-vocab-be readout a tokenizer budget decision starts from
-    * (Zipfian corpora saturate fast; a flat curve says the corpus is
-    * template-free). ONE word-keyed map-side count off the explode,
-    * top-20 as TakeOrderedAndProject, then a 20-row running window +
-    * broadcast 1-row total — everything after the count is
-    * model-sized. */
-  private def qCoverageCurve(s: SparkSession, d: String): DataFrame = {
-    val counts = t(s, d, "documents")
-      .select(explode(filter(split(col("text"), " "), w => length(w) > 0))
-        .as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("n"))
-    val total = counts.agg(sum(col("n")).as("nt"))
-    val top = counts.orderBy(col("n").desc, col("word")).limit(20)
-      .withColumn("rank", row_number().over(
-        Window.orderBy(col("n").desc, col("word"))))
-    top.withColumn("cum_n", sum(col("n")).over(
-        Window.orderBy(col("n").desc, col("word"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .crossJoin(broadcast(total))
-      .select(col("rank"), col("word"), col("n"),
-        expr("(1000 * cum_n) div nt").as("cum_coverage_permille"))
-      .orderBy(col("rank"))
-  }
-
-  /** Lexical diversity per source (X214): type-token ratio and hapax
-    * share in exact permille — the vocabulary-richness screen that
-    * separates template/boilerplate sources (low TTR, few hapax
-    * legomena) from organic text before corpus mixing weights them.
-    * Two-level aggregate: ONE (source, word)-keyed map-side count off
-    * the token explode, then ONE source-keyed roll-up — the shuffles
-    * carry distinct (source, word) pairs and #sources rows, never raw
-    * tokens. Integer-exact; NULL (not div-0) on degenerate groups. */
-  private def qLexicalDiversity(s: SparkSession, d: String): DataFrame = {
-    val words = t(s, d, "documents")
-      .select(col("source"),
-        explode(filter(split(col("text"), " "), w => length(w) > 0)).as("word"))
-    words.groupBy(col("source"), col("word")).agg(count(lit(1)).as("n"))
-      .groupBy(col("source"))
-      .agg(sum(col("n")).as("n_tokens"), count(lit(1)).as("n_types"),
-        sum(when(col("n") === 1, 1L).otherwise(0L)).as("n_hapax"))
-      .select(col("source"), col("n_tokens"), col("n_types"), col("n_hapax"),
-        when(col("n_tokens") > 0, expr("(1000 * n_types) div n_tokens"))
-          .as("ttr_permille"),
-        when(col("n_types") > 0, expr("(1000 * n_hapax) div n_types"))
-          .as("hapax_permille"))
-      .orderBy(col("source"))
-  }
-
-  /** Embedding L2-norm spectrum (X215): the squared-norm histogram in
-    * ⌊log₂⌋ buckets (the bin()-length trick, X206) plus the
-    * zero-vector bucket (−1) — the cheapest embedding-store health
-    * check: a collapsed or mis-scaled encoder concentrates the
-    * spectrum, zero rows mean upstream nulls. One narrow codegen pass
-    * (fixed-point + exact integer norm) into ONE map-side aggregate;
-    * output ≤ ~50 rows with exact min/max fences per bucket. */
-  private def qNormHistogram(s: SparkSession, d: String): DataFrame = {
-    val v = t(s, d, "embeddings").filter(col("embedding").isNotNull)
-      .select(Vectors.normSqFp(Vectors.fixedPoint(col("embedding"))).as("nn"))
-    v.groupBy(when(col("nn") === 0, lit(-1))
-        .otherwise(length(bin(col("nn"))) - 1).cast("int").as("log2_bucket"))
-      .agg(count(lit(1)).as("n_vectors"),
-        min(col("nn")).as("min_normsq_fp"), max(col("nn")).as("max_normsq_fp"))
-      .orderBy(col("log2_bucket"))
-  }
-
-  /** LIX readability per source (X201 — see TextOps.lixReport): exact
-    * summed counts + the integer ×100 index derived from the sums. */
-  private def qReadability(s: SparkSession, d: String): DataFrame =
-    TextOps.lixReport(t(s, d, "documents"), "text", "source")
-      .orderBy(col("source"))
-
-  /** RAKE keyword extraction (X202 — see TextOps.rakeWordScores): the
-    * top-20 words by degree/freq permille (score DESC, word ASC
-    * tie-break → deterministic TakeOrderedAndProject). */
-  private def qRakeKeywords(s: SparkSession, d: String): DataFrame =
-    TextOps.rakeWordScores(t(s, d, "documents"), "text",
-        TextOps.Stopwords.toMap.apply("en"))
-      .orderBy(col("score_permille").desc, col("word"))
-      .limit(20)
-
-  /** Salted COUNT DISTINCT (X225): exact distinct users per event type
-    * through a TWO-LEVEL aggregate — level 1 groups by (type, salt)
-    * with salt DERIVED FROM THE DISTINCT KEY (user_id mod 16), so the
-    * salt buckets partition each type's user space disjointly and the
-    * level-2 sums are exactly the distinct counts. This is the
-    * skew-proof shape for distinct-aggregation hot keys: a plain
-    * count(distinct) funnels a hot group's whole key set through one
-    * reducer (distinct can't map-side-combine across the group),
-    * while the salted form bounds any reducer at |group|/16 — the
-    * aggregation twin of q_salted_join, and like it the oracle is the
-    * PLAIN aggregate, so a salt-routing error hash-mismatches. */
-  private def qSaltedDistinct(s: SparkSession, d: String): DataFrame = {
-    val lvl1 = t(s, d, "events")
-      .select(col("event_type"), col("user_id"),
-        pmod(col("user_id"), lit(16L)).as("salt"))
-      .groupBy(col("event_type"), col("salt"))
-      .agg(countDistinct(col("user_id")).as("d"))
-    lvl1.groupBy(col("event_type")).agg(sum(col("d")).as("n_users"))
-      .orderBy(col("event_type"))
-  }
-
-  /** NOT IN vs NOT EXISTS three-valued-logic parity (X226): the
-    * classic SQL-semantics trap under the hash gate — a NOT IN whose
-    * subquery contains a NULL returns ZERO rows (every comparison is
-    * UNKNOWN), while the NOT EXISTS form anti-joins normally. The SAME
-    * text runs on both engines (the q_scalar_subquery discipline);
-    * Catalyst plans the NOT IN as a null-aware anti join
-    * (NullAwareAntiJoin) and the NOT EXISTS as a plain left-anti. A
-    * dialect that silently rewrote one into the other would
-    * hash-mismatch here. */
-  private def qNullSemantics(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "orders").createOrReplaceTempView("orders")
-    t(s, d, "customer").createOrReplaceTempView("customer")
-    s.sql(OracleSql.all("q_null_semantics"))
-  }
-
-  /** GROWTH ACCOUNTING (X218): the social-analytics decomposition of
-    * daily actives into NEW (first-ever day), RETAINED (previous active
-    * day ≤ 14 days back) and RESURRECTED (returned after > 14 days) —
-    * plus the cumulative user count — the DAU movement every growth
-    * team reads first. One (user, day) distinct off the scan, one
-    * user-keyed lag window over the per-user DAY list (bounded by
-    * active days, tighter than raw events), one map-side day aggregate;
-    * the running cumulative sum is a window over the calendar-bounded
-    * day table (the q_anomaly_zscore bound). Integer-exact. */
-  private def qGrowthAccounting(s: SparkSession, d: String): DataFrame = {
-    val ud = t(s, d, "events")
-      .select(col("user_id"), expr("(ts div 1000) div 86400000000").as("day"))
-      .distinct()
-    val w = Window.partitionBy(col("user_id")).orderBy(col("day"))
-    val st = ud.withColumn("prev", lag(col("day"), 1).over(w))
-      .select(col("day"),
-        when(col("prev").isNull, "new")
-          .when(col("day") - col("prev") <= 14, "retained")
-          .otherwise("resurrected").as("status"))
-    val daily = st.groupBy(col("day"))
-      .agg(count(lit(1)).as("n_active"),
-        sum(when(col("status") === "new", 1L).otherwise(0L)).as("n_new"),
-        sum(when(col("status") === "retained", 1L).otherwise(0L)).as("n_retained"),
-        sum(when(col("status") === "resurrected", 1L).otherwise(0L))
-          .as("n_resurrected"))
-    daily.withColumn("cum_users",
-        sum(col("n_new")).over(Window.orderBy(col("day"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .orderBy(col("day"))
-  }
-
-  /** Window DISTRIBUTION functions (X227): percent_rank, cume_dist and
-    * ntile(4) of daily event volumes — the remaining ANSI window
-    * family beyond rank/lag/running/range/stats/ntile rows, exercised
-    * over the CALENDAR-BOUNDED day table (the only place an
-    * unpartitioned ordered window is scale-safe — the q_anomaly_zscore
-    * bound). percent_rank/cume_dist are single IEEE divisions of exact
-    * integer ranks ((r−1)/(n−1), r/n) — correctly rounded, identical
-    * expression tree both engines ⇒ hash-stable doubles. */
-  private def qWindowDistribution(s: SparkSession, d: String): DataFrame = {
-    val daily = t(s, d, "events")
-      .select(expr("(ts div 1000) div 86400000000").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("n"))
-    val w = Window.orderBy(col("n"), col("day"))
-    daily.select(col("day"), col("n"),
-        percent_rank().over(w).as("pct_rank"),
-        cume_dist().over(w).as("cume"),
-        ntile(4).over(w).as("quartile"))
-      .orderBy(col("day"))
-  }
-
-  /** Top user JOURNEYS (X228): the most frequent event-type TRIGRAMS
-    * along each user's timeline — the "what paths do users actually
-    * take" product readout one order above the X195 transition matrix
-    * (a Markov chain cannot distinguish view→click→purchase from
-    * view→click→error; the trigram table can). ONE user-keyed window
-    * exchange evaluates both leads (same partition order — Spark
-    * collapses them into a single Window node), then one map-side
-    * aggregate to the ≤\|types\|³ path table; top-20 by (count DESC,
-    * path) runs as TakeOrderedAndProject. */
-  private def qUserJourneys(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("us"), col("event_id"))
-    t(s, d, "events")
-      .select(col("event_id"), col("user_id"), expr("ts div 1000").as("us"),
-        col("event_type"))
-      .withColumn("t2", lead(col("event_type"), 1).over(w))
-      .withColumn("t3", lead(col("event_type"), 2).over(w))
-      .filter(col("t3").isNotNull)
-      .groupBy(concat_ws(">", col("event_type"), col("t2"), col("t3"))
-        .as("path"))
-      .agg(count(lit(1)).as("n"))
-      .orderBy(col("n").desc, col("path"))
-      .limit(20)
-  }
-
-  /** Day-of-week ingest seasonality profile (X205): per weekday-slot
-    * (epoch-day mod 7 — a pure integer phase, no calendar/tz surface)
-    * the day count, total events, truncating-integer mean and min/max
-    * day volumes — the baseline the anomaly rows (z-score/MAD) should
-    * be read against: a "spike" that is just the weekly rhythm isn't
-    * one. ONE map-side corpus aggregate to the calendar-bounded day
-    * table, then a 7-row profile aggregate. Integer-exact. */
-  private def qDowProfile(s: SparkSession, d: String): DataFrame = {
-    val daily = t(s, d, "events")
-      .select(expr("(ts div 1000) div 86400000000").as("day"))
-      .groupBy(col("day")).agg(count(lit(1)).as("n"))
-    daily.groupBy(pmod(col("day"), lit(7L)).as("dow"))
-      .agg(count(lit(1)).as("n_days"), sum(col("n")).as("total_events"),
-        min(col("n")).as("min_day"), max(col("n")).as("max_day"))
-      .select(col("dow"), col("n_days"), col("total_events"),
-        expr("total_events div n_days").as("mean_per_day"),
-        col("min_day"), col("max_day"))
-      .orderBy(col("dow"))
-  }
-
-  /** Inter-event gap spectrum (X206): per event type, the histogram of
-    * consecutive same-type gaps per user in log₂(µs) buckets — the
-    * burstiness/periodicity readout (bot traffic concentrates in one
-    * bucket; a healthy human mix spreads). The bucket is the BINARY
-    * DIGIT COUNT minus one — length(bin(gap)) − 1 = ⌊log₂ gap⌋ for
-    * gap ≥ 1 and 0 for the equal-timestamp gap — the transcendental-
-    * free log that hashes identically across engines (bin() renders
-    * unpadded in both). One (user, type)-keyed lag window (the
-    * sequence-analytics partition bound), one map-side aggregate to
-    * the ~40·|types|-row histogram with exact min/max gap fences. */
-  private def qIntereventGaps(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id"), col("event_type"))
-      .orderBy(col("us"), col("event_id"))
-    t(s, d, "events")
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        expr("ts div 1000").as("us"))
-      .withColumn("gap", col("us") - lag(col("us"), 1).over(w))
-      .filter(col("gap").isNotNull)
-      .groupBy(col("event_type"),
-        (length(bin(col("gap"))) - 1).cast("int").as("log2_bucket"))
-      .agg(count(lit(1)).as("n_gaps"),
-        min(col("gap")).as("min_gap_us"), max(col("gap")).as("max_gap_us"))
-      .orderBy(col("event_type"), col("log2_bucket"))
-  }
-
-  /** kNN-graph LINK PREDICTION by common neighbors (X203): for every
-    * non-adjacent vertex pair sharing AT LEAST TWO neighbors (the
-    * cn ≥ 2 support threshold — single-wedge pairs are noise for a
-    * k=3 graph and are deliberately dropped, so this is NOT full
-    * distance-2 coverage), the shared-neighbor count
-    * and the Jaccard of their neighbor sets in exact permille
-    * (Liben-Nowell & Kleinberg 2003's strongest cheap predictors) —
-    * the "these two documents should probably be neighbors" candidate
-    * generator that repairs a kNN graph's missed edges before
-    * clustering. Wedge enumeration is the oriented two-hop self-join
-    * of the symmetric edge list — the same vertex-keyed equi-join
-    * family as q_knn_triangles, fan-out bounded by Σdeg² which the
-    * kNN construction caps near k²·n; the adjacency check is one
-    * left-anti join, degrees one census aggregate. Integer-exact:
-    * jaccard = 1000·cn div (deg_a + deg_b − cn). */
-  private def qCommonNeighbors(s: SparkSession, d: String): DataFrame = {
-    val e = Vectors.knnGraph(t(s, d, "embeddings"), "vec_id", "embedding", k = 3)
-      .select(col("src_id").as("src"), col("dst_id").as("dst"))
-    val und = e.select(least(col("src"), col("dst")).as("a"),
-      greatest(col("src"), col("dst")).as("b")).distinct()
-    val sym = und.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(und.select(col("b").as("u"), col("a").as("v")))
-    val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-    val cn = sym.as("l").join(sym.as("r"),
-        col("l.u") === col("r.u") && col("l.v") < col("r.v"))
-      .groupBy(col("l.v").as("a"), col("r.v").as("b"))
-      .agg(count(lit(1)).as("cn"))
-      .filter(col("cn") >= 2)
-    cn.join(und, Seq("a", "b"), "left_anti")
-      .join(deg.select(col("u").as("a"), col("deg").as("da")), Seq("a"))
-      .join(deg.select(col("u").as("b"), col("deg").as("db")), Seq("b"))
-      .select(col("a"), col("b"), col("cn"),
-        expr("(1000 * cn) div (da + db - cn)").as("jaccard_permille"))
-      .orderBy(col("a"), col("b"))
-  }
-
-  /** Per-vertex LOCAL CLUSTERING COEFFICIENT (X209): triangles through
-    * each vertex over C(deg,2) in exact permille (Watts & Strogatz
-    * 1998) — the per-point "is my neighborhood coherent" signal that
-    * separates tight semantic clusters (→1000‰) from hub-like bridge
-    * vectors (→0‰) before a density-based selector trusts the graph.
-    * Triangle enumeration is the oriented a<b<c two-join (the
-    * q_knn_triangles shape, fan-out capped by forward degree); each
-    * triangle credits its three corners via a 3-way unionAll into ONE
-    * vertex-keyed count, degrees come from the census aggregate, and
-    * deg<2 vertices report NULL (no pair to close — never div-0). */
-  private def qClusteringCoeff(s: SparkSession, d: String): DataFrame = {
-    val und = Vectors.knnGraph(t(s, d, "embeddings"), "vec_id", "embedding", k = 3)
-      .select(least(col("src_id"), col("dst_id")).as("a"),
-        greatest(col("src_id"), col("dst_id")).as("b")).distinct()
-    val deg = und.select(col("a").as("v")).unionAll(und.select(col("b").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("deg"))
-    val tri = und.as("e1").join(und.as("e2"), col("e1.b") === col("e2.a"))
-      .join(und.as("e3"),
-        col("e3.a") === col("e1.a") && col("e3.b") === col("e2.b"), "left_semi")
-      .select(col("e1.a").as("x"), col("e1.b").as("y"), col("e2.b").as("z"))
-    val triV = tri.select(col("x").as("v"))
-      .unionAll(tri.select(col("y").as("v")))
-      .unionAll(tri.select(col("z").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).as("tri"))
-    deg.join(triV, Seq("v"), "left")
-      .select(col("v"), col("deg"), coalesce(col("tri"), lit(0L)).as("tri"))
-      .withColumn("coeff_permille",
-        when(col("deg") >= 2, expr("(2000 * tri) div (deg * (deg - 1))")))
-      .orderBy(col("v"))
-  }
-
-  /** Degree ASSORTATIVITY sufficient statistics (X210, Newman 2002):
-    * does the kNN graph wire similar-degree vertices together
-    * (assortative, r>0) or hubs to leaves (disassortative, r<0)?
-    * Exact integer sufficient statistics over the both-direction edge
-    * list — n, Σx, Σx² and Σxy of endpoint degrees (symmetric
-    * counting makes Σx=Σy, so these four determine Pearson's r, which
-    * derives OUTSIDE the hash gate — the centroid-cosine numeric
-    * discipline). Two vertex-keyed degree joins + ONE 1-row aggregate;
-    * everything is edge-table-sized. */
-  private def qDegreeAssortativity(s: SparkSession, d: String): DataFrame = {
-    val und = Vectors.knnGraph(t(s, d, "embeddings"), "vec_id", "embedding", k = 3)
-      .select(least(col("src_id"), col("dst_id")).as("a"),
-        greatest(col("src_id"), col("dst_id")).as("b")).distinct()
-    val sym = und.select(col("a").as("u"), col("b").as("v"))
-      .unionAll(und.select(col("b").as("u"), col("a").as("v")))
-    val deg = sym.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-    sym.join(deg.select(col("u"), col("deg").as("dx")), Seq("u"))
-      .join(deg.select(col("u").as("v"), col("deg").as("dy")), Seq("v"))
-      .agg(count(lit(1)).as("n_endpoints"),
-        sum(col("dx")).as("sum_x"),
-        sum(col("dx") * col("dx")).as("sum_x2"),
-        sum(col("dx") * col("dy")).as("sum_xy"))
-  }
-
-  /** Gonzalez farthest-point k-center seeding (X204 — see
-    * Vectors.kcenterSeeds): 4 deterministic rounds, exact integer
-    * squared-L2, one aggregate per round. */
-  private def qKcenterSeeds(s: SparkSession, d: String): DataFrame =
-    Vectors.kcenterSeeds(t(s, d, "embeddings"), "vec_id", "embedding", k = 4)
-      .orderBy(col("seed_idx"))
-
-  /** Blocklist / phrase-filter audit — the crawl-hygiene pass that
-    * screens every document against a phrase blocklist and reports
-    * per-source hit totals. The portable formulation is P chained
-    * contains/replace passes (P full scans of every document; a real
-    * blocklist is thousands of phrases); the
-    * [[graft.functions.MultiPatternCount]] Aho-Corasick kernel matches
-    * ALL patterns in ONE byte-level walk — O(len + matches) per document
-    * regardless of blocklist size — and returns the per-pattern count
-    * vector in row. Per-pattern corpus totals then flow through the
-    * array_sum_fp elementwise aggregate (one d-length array per
-    * (source, map task) crosses the exchange, never d× exploded rows).
-    * Scan-linear into ONE group-by exchange on `source`; the oracle
-    * recomputes each count portably as the replace-delta (equal to the
-    * automaton's all-occurrence count because the phrases are
-    * border-free, so occurrences cannot self-overlap). */
-  private def qBlocklist(s: SparkSession, d: String): DataFrame = {
-    val pats = Seq("scan query", "fast join", "table scan", "slow query", "big data")
-    val total = pats.indices.map(i => element_at(col("c"), i + 1)).reduce(_ + _)
-    t(s, d, "documents")
-      .select(col("source"), MultiPatternCount(col("text"), pats).as("c"))
-      .select(col("source"), col("c"), total.as("hits"))
-      .groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("hits") > 0, 1L).otherwise(0L)).as("n_flagged"),
-        sum(col("hits")).as("total_hits"),
-        array_join(ArraySumFp(col("c")).cast("array<string>"), ",")
-          .as("pattern_totals_csv"))
-      .orderBy(col("source"))
-  }
-
-  /** The SQL surface of the REGISTERED native kernels (GraftExtensions:
-    * shingle_array, sorted_intersect_count, dot_fp, fixed_point,
-    * quantize_int8, simhash_fp, minhash_sigs_fp, multi_pattern_count,
-    * and the array_sum_fp aggregate) —
-    * result transparency for the extension registry itself: the oracle
-    * recomputes every output from portable SQL (sorted-distinct n-gram
-    * strings, list intersection counts, fixed-point dots, the proven
-    * quantizer formula, token-vote simhash bits, double-hash minhash
-    * minima, grouped elementwise vector sums), so a registration or
-    * kernel regression hash-mismatches. Adjacent-id pairs keep it one
-    * broadcastable join per table; the aggregate groups 49 vectors into
-    * 5 residue classes. */
-  private def qSqlKernels(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "documents").createOrReplaceTempView("documents")
-    t(s, d, "embeddings").createOrReplaceTempView("embeddings")
-    s.sql("""
-      WITH pair AS (
-        SELECT a.doc_id, a.text AS ta, b.text AS tb
-        FROM documents a JOIN documents b ON b.doc_id = a.doc_id + 1
-        WHERE a.doc_id < 50),
-      emb AS (
-        SELECT ea.vec_id,
-               fixed_point(ea.embedding) AS fa,
-               fixed_point(eb.embedding) AS fb,
-               quantize_int8(ea.embedding) AS qa
-        FROM embeddings ea JOIN embeddings eb ON eb.vec_id = ea.vec_id + 1
-        WHERE ea.vec_id < 50),
-      gs AS (
-        SELECT vec_id % 5 AS g,
-               array_sum_fp(transform(embedding, x -> cast(round(cast(x AS double) * 1000000) AS bigint))) AS s
-        FROM embeddings WHERE vec_id < 50 GROUP BY vec_id % 5)
-      SELECT p.doc_id,
-             size(shingle_array(p.ta, 3)) AS n_shingles,
-             sorted_intersect_count(shingle_array(p.ta, 3), shingle_array(p.tb, 3)) AS n_common,
-             dot_fp(e.fa, e.fb) AS dot,
-             array_join(e.qa.codes, ',') AS codes_csv,
-             simhash_fp(p.ta) AS simhash,
-             array_join(transform(minhash_sigs_fp(shingle_array(p.ta, 3), 4),
-                                  x -> cast(x AS string)), ',') AS sigs_csv,
-             array_join(transform(multi_pattern_count(p.ta, 'scan query', 'big data'),
-                                  x -> cast(x AS string)), ',') AS mpc_csv,
-             array_join(transform(gs.s, x -> cast(x AS string)), ',') AS gsum_csv
-      FROM pair p
-      JOIN emb e ON e.vec_id = p.doc_id
-      JOIN gs ON gs.g = p.doc_id % 5
-      ORDER BY p.doc_id""")
-  }
-
-  /** Ranking-window breadth: ntile, percent_rank, cume_dist, and the
-    * unbounded-frame first/last. percent_rank/cume_dist divide small
-    * exact integers — IEEE division is correctly rounded, so the doubles
-    * match the oracle bit-for-bit. */
-  private def qWindowStats(s: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))
-    val full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    t(s, d, "orders")
-      .select(col("o_orderkey"), col("o_custkey"),
-        ntile(4).over(w).as("nt"),
-        percent_rank().over(w).as("pr"),
-        cume_dist().over(w).as("cd"),
-        first(col("o_orderkey")).over(full).as("fv"),
-        last(col("o_orderkey")).over(full).as("lv"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** Deterministic arg-min/arg-max (the min_by/max_by family): the
-    * extreme is taken over an ORDERED STRUCT (value, tie-break key), so
-    * ties resolve identically everywhere — the raw min_by/arg_min picks
-    * an arbitrary row on equal values, which can never sit under an
-    * exact-hash gate. One hash aggregate with map-side partials; the
-    * struct comparison is codegen'd lexicographic. */
-  private def qArgExtreme(s: SparkSession, d: String): DataFrame = {
-    val keyed = struct(Relational.cents(col("o_totalprice")).as("c"),
-      col("o_orderkey").as("k"))
-    t(s, d, "orders")
-      .groupBy(col("o_orderpriority"))
-      .agg(min(keyed).as("mn"), max(keyed).as("mx"),
-        count(lit(1)).as("n_orders"))
-      .select(col("o_orderpriority"),
-        col("mn.k").as("cheapest_key"), col("mn.c").as("cheapest_cents"),
-        col("mx.k").as("priciest_key"), col("mx.c").as("priciest_cents"),
-        col("n_orders"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  /** Bitwise aggregates (bit_and/bit_or/bit_xor): the xor aggregate is
-    * the classic order-independent set checksum (pair-cancelling, so a
-    * re-sent row cancels out) — cheap reconciliation across pipeline
-    * stages at any scale; all three combine map-side. */
-  private def qBitwiseAgg(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .groupBy(col("l_returnflag"))
-      .agg(expr("bit_and(l_orderkey)").as("and_keys"),
-        expr("bit_or(l_orderkey)").as("or_keys"),
-        expr("bit_xor(l_orderkey)").as("xor_keys"),
-        count(lit(1)).as("n_rows"))
-      .orderBy(col("l_returnflag"))
-
-  /** NULL-preserving generator (explode_outer): a group whose collected
-    * array is EMPTY still yields one row with a NULL element — the outer
-    * join of generators, and the semantics plain explode silently drops.
-    * collect_list skips the when()-nulls, so non-qualifying groups
-    * produce genuinely empty arrays. */
-  private def qExplodeOuter(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
-      .groupBy(col("o_custkey"))
-      .agg(sort_array(collect_list(
-        when(col("o_totalprice") > 450000.0, col("o_orderkey")))).as("big"))
-      .select(col("o_custkey"), explode_outer(col("big")).as("big_orderkey"))
-      .orderBy(col("o_custkey"), col("big_orderkey"))
-
-  /** Join-strategy HINTS are result-transparent: the merge hint forces a
-    * sort-merge join where the planner would broadcast, and the answer
-    * must not move — the oracle is the plain join. The plan assertion
-    * lives in PlanInvariantsSpec; at 100 TB hints are the operator-level
-    * escape hatch when statistics mislead the planner. */
-  private def qJoinHints(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
-      .join(t(s, d, "customer").hint("merge"),
-        col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment"))
-      .agg(min(col("o_orderkey")).as("first_key"),
-        max(Relational.cents(col("o_totalprice"))).as("max_cents"),
-        count(lit(1)).as("n_orders"))
-      .orderBy(col("c_mktsegment"))
-
-  /** Cartesian product (explicit crossJoin — the one join type with no
-    * key): bounded to dimension tables, where it is legitimate. */
-  private def qCrossJoin(s: SparkSession, d: String): DataFrame =
-    t(s, d, "region").select(col("r_name"))
-      .crossJoin(t(s, d, "nation").select(col("n_name")))
-      .orderBy(col("r_name"), col("n_name"))
-
-  /** Null-safe equality join (`<=>` / IS NOT DISTINCT FROM): a NULL key
-    * matches exactly the NULL key, unlike `=` which drops it. */
-  private def qNullsafeJoin(s: SparkSession, d: String): DataFrame = {
-    val a = t(s, d, "orders")
-      .groupBy(when(col("o_orderpriority") === "1-URGENT", lit(null))
-        .otherwise(col("o_orderpriority")).as("k"))
-      .agg(count(lit(1)).as("n"))
-    val b = a.select(col("k").as("kb"), col("n").as("n_b"))
-    a.join(b, col("k") <=> col("kb"))
-      .select(col("k"), col("n").as("n_a"), col("n_b"))
-      .orderBy(asc_nulls_first("k"))
-  }
-
-  /** Date arithmetic breadth: day offset, end-of-month, day difference,
-    * quarter, day-of-year. */
-  private def qDateArith(s: SparkSession, d: String): DataFrame = {
-    val od = col("o_orderdate").cast("date")
-    t(s, d, "orders")
-      .select(col("o_orderkey"),
-        date_add(od, 30).as("plus30"),
-        last_day(od).as("eom"),
-        datediff(lit(java.sql.Date.valueOf("1995-01-01")), od).as("dd"),
-        quarter(od).as("qtr"),
-        dayofyear(od).as("doy"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** Approximate median under the own-sketch/own-check contract (the
-    * q_approx_count_distinct pattern): each engine runs ITS OWN sketch
-    * (Spark: Greenwald-Khanna percentile_approx; DuckDB: t-digest) and
-    * asserts the result's RANK lands within tolerance of n/2 — both
-    * inside ⇒ identical boolean rows, hash-matchable. */
-  private def qApproxPercentile(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
-    val p = li.groupBy(col("l_returnflag").as("rf"))
-      .agg(percentile_approx(col("l_extendedprice"), lit(0.5), lit(10000)).as("ap"),
-        count(lit(1)).as("n"))
-    li.join(broadcast(p), col("l_returnflag") === col("rf"))
-      .groupBy(col("rf"))
-      .agg(first(col("n")).as("n"),
-        sum(when(col("l_extendedprice") <= col("ap"), 1L).otherwise(0L)).as("below"))
-      .select(col("rf"), col("n"),
-        (abs(col("below") - col("n").cast("double") / 2)
-          <= col("n").cast("double") / 100 + 1).as("within_tolerance"))
-      .orderBy(col("rf"))
-  }
-
-  /** MapType surface: parse the JSON props column into map<string,int>,
-    * expose keys and a value lookup — scan-linear, no shuffle beyond the
-    * output ordering. The key list is serialized (array_join) so the
-    * verified output carries no raw ARRAY column: the driver's comparer
-    * sorts every column before hashing and cannot hash arrays. */
-  private def qMapOps(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events")
-      .select(col("event_id"),
-        from_json(col("props"), org.apache.spark.sql.types.MapType(
-          org.apache.spark.sql.types.StringType,
-          org.apache.spark.sql.types.IntegerType)).as("m"))
-      .select(col("event_id"),
-        array_join(map_keys(col("m")), ",").as("ks"),
-        col("m").getItem("k").as("kv"))
-      .orderBy(col("event_id"))
-
-  /** Array + string aggregation with a deterministic contract: the
-    * collected list is SORTED before it ever leaves the aggregate, so the
-    * result is partition-order-independent (bare collect_list is not).
-    * The verified output serializes the sorted list (concat_ws) rather
-    * than emitting the raw array — same semantics, hashable by the
-    * driver's column-sorting comparer. */
-  private def qArrayAgg(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
-      .groupBy(col("o_custkey"))
-      .agg(sort_array(collect_list(col("o_orderpriority"))).as("prios"),
-        count(lit(1)).as("n"))
-      .select(col("o_custkey"),
-        concat_ws(",", col("prios")).as("prio_csv"), col("n"))
-      .orderBy(col("o_custkey"))
-
-  /** Unpivot (melt): wide measures → (measure, value) rows — the inverse
-    * of q_pivot; a pure in-row Expand, no shuffle beyond the ordering. */
-  private def qUnpivot(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .select(col("l_orderkey"), col("l_linenumber"),
-        Relational.cents(col("l_extendedprice")).as("price_cents"),
-        Relational.cents(col("l_discount")).as("disc_cents"))
-      .unpivot(
-        Array(col("l_orderkey"), col("l_linenumber")),
-        Array(col("price_cents"), col("disc_cents")),
-        "measure", "cents")
-      .orderBy(col("l_orderkey"), col("l_linenumber"), col("measure"))
-
-  /** Higher-order array functions over the token arrays: filter, exists,
-    * aggregate (fold), transform+max — all codegen-friendly in-row work. */
-  private def qArrayHof(s: SparkSession, d: String): DataFrame = {
-    val toks = split(col("text"), " ")
-    t(s, d, "documents")
-      .select(col("doc_id"),
-        size(filter(toks, t => length(t) > 4)).as("n_long"),
-        exists(toks, t => t === "data").as("has_data"),
-        aggregate(toks, lit(0L), (acc, t) => acc + length(t)).as("chars_sum"),
-        array_max(transform(toks, t => length(t))).as("max_len"))
-      .orderBy(col("doc_id"))
-  }
-
-  // JSON-lines landing copy of orders (one-time per session+sf), the
-  // text-source sibling of csvOrdersDir.
-  private val jsonDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-  private[graft] def jsonOrdersDir(s: SparkSession, d: String): String =
-    jsonDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_orders_json_${java.lang.Integer.toHexString(d.hashCode)}").getAbsolutePath
-      if (!new java.io.File(dir, "_SUCCESS").exists())
-        t(s, d, "orders")
-          .select(col("o_orderkey"), col("o_custkey"),
-            col("o_orderpriority"), col("o_totalprice"),
-            col("o_orderdate").cast("date").as("o_date"))
-          .write.mode("overwrite").json(dir)
-      dir
-    })
-
-  /** JSON-lines source round-trip against the parquet base table. */
-  private def qJsonScan(s: SparkSession, d: String): DataFrame =
-    s.read
-      .schema("o_orderkey LONG, o_custkey LONG, o_orderpriority STRING, o_totalprice DOUBLE, o_date DATE")
-      .json(jsonOrdersDir(s, d))
-      .orderBy(col("o_orderkey"))
-
-  // ORC landing copy (one-time per session+sf) — the columnar sibling.
-  private val orcDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-  private[graft] def orcOrdersDir(s: SparkSession, d: String): String =
-    orcDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_orders_orc_${java.lang.Integer.toHexString(d.hashCode)}").getAbsolutePath
-      if (!new java.io.File(dir, "_SUCCESS").exists())
-        t(s, d, "orders")
-          .select(col("o_orderkey"), col("o_custkey"),
-            col("o_orderpriority"), col("o_totalprice"),
-            col("o_orderdate").cast("date").as("o_date"))
-          .write.mode("overwrite").orc(dir)
-      dir
-    })
-
-  /** ORC source round-trip against the parquet base table. */
-  private def qOrcScan(s: SparkSession, d: String): DataFrame =
-    s.read.orc(orcOrdersDir(s, d)).orderBy(col("o_orderkey"))
-
-  // One binary FILE per document (doc-id-named synthetic image payloads),
-  // written once per (session, sf) by the executors — the landing shape
-  // of a real media corpus.
-  private val binDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-  private[graft] def binaryMediaDir(s: SparkSession, d: String): String =
-    binDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_media_bin_${java.lang.Integer.toHexString(d.hashCode)}")
-      val done = new java.io.File(dir, "_DONE")
-      if (!done.exists()) {
-        dir.mkdirs()
-        val p = dir.getAbsolutePath
-        graft.multimodal.SynthImages.packSynth(t(s, d, "documents"), "doc_id", "text")
-          .foreachPartition {
-            (rows: Iterator[graft.multimodal.Multimodal.MediaRow]) =>
-              rows.foreach { r =>
-                java.nio.file.Files.write(
-                  java.nio.file.Paths.get(p, s"doc_${r.doc_id}.bin"), r.bytes)
-              }
-          }
-        java.nio.file.Files.write(done.toPath, Array.emptyByteArray)
-      }
-      dir.getAbsolutePath
-    })
-
-  /** binaryFile source over the per-document media files — the ingest
-    * path of an image/audio corpus: doc identity parsed from the file
-    * name, payload length verified against the closed-form synthesis
-    * contract (any write or read corruption breaks the hash). */
-  private def qBinaryScan(s: SparkSession, d: String): DataFrame =
-    s.read.format("binaryFile")
-      .option("pathGlobFilter", "*.bin")
-      .load(binaryMediaDir(s, d))
-      .select(
-        regexp_extract(col("path"), "doc_(\\d+)\\.bin", 1).cast("long").as("doc_id"),
-        length(col("content")).as("byte_len"))
-      .orderBy(col("doc_id"))
-
-  /** Deterministic training shuffle + sharding: a pseudo-random global
-    * order from md5(doc_id), hash-sharded so each shard assigns its
-    * positions in an INDEPENDENT window — at 100 TB this parallelizes
-    * per shard instead of funneling the corpus through one global sort,
-    * and the (shard, pos) assignment is reproducible run-over-run (the
-    * property a training job needs to resume mid-epoch). */
-  private def qShardShuffle(s: SparkSession, d: String): DataFrame = {
-    val h = md5(concat(lit("shuf:"), col("doc_id").cast("string")))
-    val w = Window.partitionBy(col("shard")).orderBy(col("h"), col("doc_id"))
-    t(s, d, "documents")
-      .select(col("doc_id"), h.as("h"),
-        pmod(conv(substring(h, 1, 8), 16, 10).cast("long"), lit(8)).cast("int").as("shard"))
-      .withColumn("pos", row_number().over(w) - 1)
-      .select(col("doc_id"), col("shard"), col("pos"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Incremental aggregate maintenance (the dbt incremental-model
-    * pattern): the base table holds PARTIAL aggregate states (count,
-    * sum), a delta batch arrives, and the merge is a union + re-aggregate
-    * over the states — O(|delta| + |affected keys|), never a rescan of
-    * the full history. Verified against the full-table aggregate, which
-    * is exactly the mergeability contract of algebraic aggregates. */
-  private def qIncrementalAgg(s: SparkSession, d: String): DataFrame = {
-    def partial(df: DataFrame): DataFrame =
-      df.groupBy(col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-          sum(Relational.cents(col("o_totalprice"))).as("cents"))
-    val cut = lit(java.sql.Date.valueOf("1996-01-01"))
-    val base = partial(t(s, d, "orders").filter(col("o_orderdate") < cut))
-    val delta = partial(t(s, d, "orders").filter(col("o_orderdate") >= cut))
-    base.unionAll(delta)
-      .groupBy(col("o_orderpriority"))
-      .agg(sum(col("n")).as("n"), sum(col("cents")).as("cents"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  /** Snapshot diff (CDC-style drift report): two keyed snapshots FULL
-    * OUTER joined, each key classified added / removed / changed /
-    * unchanged by comparing exact cent values. Both snapshots derive
-    * deterministically from the base table. */
-  private def qSnapshotDiff(s: SparkSession, d: String): DataFrame = {
-    val o = t(s, d, "orders")
-      .select(col("o_orderkey").as("k"), Relational.cents(col("o_totalprice")).as("cents"))
-    val snapA = o.filter(col("k") % 11 =!= 0)
-    val snapB = o.filter(col("k") % 13 =!= 0)
-      .select(col("k").as("kb"),
-        (col("cents") + when(col("k") % 7 === 0, 1L).otherwise(0L)).as("cents_b"))
-    snapA.join(snapB, col("k") === col("kb"), "full_outer")
-      .select(
-        when(col("k").isNull, lit("added"))
-          .when(col("kb").isNull, lit("removed"))
-          .when(col("cents") =!= col("cents_b"), lit("changed"))
-          .otherwise(lit("unchanged")).as("status"))
-      .groupBy(col("status")).agg(count(lit(1)).as("n"))
-      .orderBy(col("status"))
-  }
-
-  /** Keyset-free pagination: total order + LIMIT/OFFSET. (At 100 TB the
-    * right pagination is keyset — WHERE key > last — but OFFSET is the
-    * API surface users reach for first; a total order makes it exact.) */
-  private def qPagination(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
-      .select(col("o_orderkey"), col("o_custkey"))
-      .orderBy(col("o_orderkey"))
-      .offset(40).limit(20)
-
-  /** Multiset set-ops: INTERSECT ALL / EXCEPT ALL keep duplicate
-    * multiplicities (the bag semantics DISTINCT-based set ops destroy). */
-  private def qIntersectAll(s: SparkSession, d: String): DataFrame = {
-    val hi = t(s, d, "orders").filter(col("o_totalprice") > 100000.0)
-      .select(col("o_orderpriority"))
-    val lo = t(s, d, "orders").filter(col("o_totalprice") <= 200000.0)
-      .select(col("o_orderpriority"))
-    hi.intersectAll(lo)
-      .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  private def qExceptAll(s: SparkSession, d: String): DataFrame = {
-    val all = t(s, d, "orders").select(col("o_orderpriority"))
-    val urgent = t(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT")
-      .select(col("o_orderpriority"))
-    all.exceptAll(urgent)
-      .groupBy(col("o_orderpriority")).agg(count(lit(1)).as("n"))
-      .orderBy(col("o_orderpriority"))
-  }
-
-  /** Error-tolerant parsing (try_cast): malformed numerics become NULL
-    * instead of failing the job — the ingest posture for dirty text
-    * feeds; the malformed slice is synthesized deterministically. */
-  private def qTryCast(s: SparkSession, d: String): DataFrame =
-    t(s, d, "documents")
-      .select(col("doc_id"),
-        when(col("doc_id") % 3 === 0, lit("junk"))
-          .otherwise(col("doc_id").cast("string")).as("raw"))
-      .select(col("doc_id"), col("raw"),
-        expr("try_cast(raw AS BIGINT)").as("parsed"),
-        expr("try_cast(raw AS BIGINT)").isNull.as("malformed"))
-      .orderBy(col("doc_id"))
-
-  /** IVF-PQ two-stage ANN serving around corpus vector 42: coarse lists
-    * prune the corpus to 2 of 16 probe lists, PQ-ADC re-ranks within. */
-  private def qIvfPqTopK(s: SparkSession, d: String): DataFrame =
-    Vectors.ivfPqTopK(t(s, d, "embeddings"), "vec_id", "embedding",
-        queryId = 42L, nCentroids = 16, probes = 2, m = 4, k = 16, topK = 10)
-      .withColumnRenamed("id", "vec_id")
-
-  /** GROUPING SETS with grouping() markers — the one grouping construct
-    * `.rollup`/`.cube` can't express (arbitrary mixed sets). SQL entry
-    * point over a temp view; the plan is a single Expand + hash
-    * aggregate, same as rollup/cube. */
-  private def qGroupingSets(s: SparkSession, d: String): DataFrame = {
-    t(s, d, "lineitem").createOrReplaceTempView("li_gs")
-    s.sql(
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(grouping(l_returnflag) AS INT) AS g_rf,
-        |       CAST(grouping(l_linestatus) AS INT) AS g_ls,
-        |       count(1) AS n_rows,
-        |       sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS price_cents
-        |FROM li_gs
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        |ORDER BY g_rf, g_ls, l_returnflag, l_linestatus""".stripMargin)
-  }
-
-  /** Edit-distance fuzzy matching over the (small by construction)
-    * distinct domain values — the catalog-cleaning join that catches
-    * near-identical source labels. The distinct set is tiny relative to
-    * the corpus, so the pairwise comparison is bounded by #domains², not
-    * rows². */
-  private def qFuzzyMatch(s: SparkSession, d: String): DataFrame = {
-    val src = t(s, d, "documents").select(col("source")).distinct()
-    src.as("a").join(src.as("b"), col("a.source") < col("b.source"))
-      .select(col("a.source").as("src_a"), col("b.source").as("src_b"),
-        levenshtein(col("a.source"), col("b.source")).as("dist"))
-      .filter(col("dist") <= 2)
-      .orderBy(col("src_a"), col("src_b"))
-  }
-
-  /** Scan of the z-ordered layout with a second-dimension filter — the
-    * oracle is the same predicate over the base table, so any clustering
-    * or write error breaks the hash compare (result transparency, like
-    * the salted join). */
-  private def qZorderScan(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(zorderedLineitemDir(s, d))
-      .filter(col("zy") < 5)
-      .select(col("l_orderkey"), col("l_linenumber"), col("zx"), col("zy"),
-        col("l_quantity"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-
-  /** Partition-pruned scan: monthly revenue for ONE year read from the
-    * year-partitioned layout. The o_year predicate is a partition filter —
-    * the scan lists and reads only that year's directory (PartitionFilters
-    * in the plan; asserted by IOSpec and recorded in PLANS.md), which at
-    * 100 TB is the difference between reading a day and reading the
-    * table. */
-  private def qPartitionPrune(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(partitionedOrdersDir(s, d))
-      .filter(col("o_year") === 1996)
-      .groupBy(col("o_year"), month(col("o_orderdate")).as("o_month"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(Relational.cents(col("o_totalprice"))).as("revenue_cents"))
-      .orderBy(col("o_month"))
-
-  // File-backed year dim for the DPP row. It must be FILE-backed: with a
-  // LocalRelation dim the selective filter constant-folds away before the
-  // PartitionPruning rule looks for it, and no DPP subquery is planted.
-  private val yearDimMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-  // testdata orders span 1995–2001; keep = {1996, 1999} so the DPP run
-  // prunes 7 partition dirs down to 2. The dim CONTENT is versioned into
-  // the directory name — a content change must never be served by a
-  // stale cross-run _SUCCESS directory.
-  private val YearDimKeep = Set(1996, 1999)
-  private[graft] def yearDimDir(s: SparkSession, d: String): String =
-    yearDimMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val tag = java.lang.Integer.toHexString(
-        (d, 1995 to 2001, YearDimKeep).hashCode)
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_year_dim_$tag").getAbsolutePath
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
-        import s.implicits._
-        (1995 to 2001)
-          .map(y => (y, if (YearDimKeep(y)) "keep" else "dead"))
-          .toDF("yy", "tag")
-          .coalesce(1).write.mode("overwrite").parquet(dir)
-      }
-      dir
-    })
-
-  /** DYNAMIC partition pruning under the correctness gate: the year
-    * filter lives on the DIM (tag = 'keep'), not the fact — the fact
-    * scan learns which o_year directories survive only at runtime, from
-    * the broadcast dim's join keys (`dynamicpruning` subquery in
-    * PartitionFilters; planted-and-pruned asserted by IOSpec and
-    * SparkEntryPlanSpec). At 100 TB this is THE selective-star-join
-    * lever: static pruning can't see through a join, so without DPP the
-    * fact side reads every partition. Oracle = the same join over the
-    * base table with a VALUES dim. */
-  private[graft] def qDppScan(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(partitionedOrdersDir(s, d))
-      .join(s.read.parquet(yearDimDir(s, d)).filter(col("tag") === "keep"),
-        col("o_year") === col("yy"))
-      .groupBy(col("o_year"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(Relational.cents(col("o_totalprice"))).as("revenue_cents"))
-      .orderBy(col("o_year"))
-
-  // Bloom-join session: a child session (shared SparkContext and table
-  // cache, separate SQLConf) whose conf makes the runtime bloom filter
-  // real at registry scale — broadcast off so the join actually
-  // shuffles, application-side size floor dropped so sf-scale facts
-  // qualify. Conf must live on the session the returned frame is BOUND
-  // to (Verify/Bench re-plan at action time, long after this function
-  // returns), and a child session keeps it off every other query's plan.
-  private val bloomSessionMemo =
-    new java.util.concurrent.ConcurrentHashMap[Int, SparkSession]()
-  private def bloomSession(s: SparkSession): SparkSession =
-    bloomSessionMemo.computeIfAbsent(System.identityHashCode(s), _ => {
-      val s2 = s.newSession()
-      s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-      s2.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "10MB")
-      s2
-    })
-
-  /** RUNTIME bloom-filter join under the correctness gate: lineitem ⋈ a
-    * selectively-filtered part dim as a SHUFFLE join — the optimizer
-    * compresses the dim's surviving keys into a bloom filter evaluated
-    * INSIDE the fact scan stage (`might_contain` in the plan), so
-    * non-candidate fact rows never enter the exchange. At 100 TB this is
-    * the shuffle-volume killer for selective joins too big to broadcast.
-    * The filter is advisory (false positives only) — the join is exact,
-    * which is precisely what the oracle hash-compare proves. */
-  private[graft] def qBloomJoin(s: SparkSession, d: String): DataFrame = {
-    val s2 = bloomSession(s)
-    val li = s2.read.parquet(s"$d/lineitem.parquet")
-    val p = s2.read.parquet(s"$d/part.parquet").filter(col("p_size") <= 2)
-    li.join(p, col("l_partkey") === col("p_partkey"))
-      .groupBy(col("p_size"))
-      .agg(count(lit(1)).as("n_lines"),
-        sum(Relational.cents(col("l_extendedprice"))).as("revenue_cents"))
-      .orderBy(col("p_size"))
-  }
-
-  private def qMonthlyRevenue(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
-      .groupBy(date_trunc("month", col("o_orderdate")).as("month"))
-      .agg(count(lit(1)).as("n_orders"),
-        sum(Relational.cents(col("o_totalprice"))).as("revenue_cents"))
-      .orderBy(col("month"))
-
-  /** RANGE JOIN (equi + interval): same-user event pairs within 5
-    * minutes — burst detection. With the equi key the plan is an
-    * ordinary hash join plus a range filter (scales like any equi
-    * join); comparisons run on µs-truncated event time so they agree
-    * exactly with the oracle's TIMESTAMP precision. */
-  private def qRangeJoin(s: SparkSession, d: String): DataFrame = {
-    val e = t(s, d, "events")
-      .select(col("event_id"), col("user_id"), expr("ts div 1000").as("us"))
-    e.as("a").join(e.as("b"),
-        col("a.user_id") === col("b.user_id") &&
-          col("b.us") > col("a.us") &&
-          col("b.us") <= col("a.us") + lit(300000000L)) // 5 min in µs
-      .select(col("a.event_id").as("id_a"), col("b.event_id").as("id_b"),
-        (col("b.us") - col("a.us")).as("gap_us"))
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** Gap-based sessionization of the event stream (batch): 30-minute
-    * inactivity gap per user, one row per session with its bounds and
-    * event count (Relational.sessionize — single window shuffle on the
-    * user key). Times compared at µs precision (`ts div 1000`) so Spark's
-    * nanos-as-long read and DuckDB's µs-truncated parquet timestamps
-    * agree. */
-  /** TPC-H Q1-shaped pricing summary (X191): per (returnflag,
-    * linestatus) quantity/price/discount/charge roll-up with EXACT
-    * fixed-point money — cents for base price, hundredths for
-    * discount/tax, so disc price is fp4 and charge fp6, all BIGINT
-    * sums (order-free, engine-exact); averages are truncating integer
-    * means DERIVED from the sums. One map-side-combining aggregate
-    * over the filtered scan — the canonical whole-stage-codegen shape.
-    * 100 TB note: fp6 row terms reach ~1e11, so a 1e12-row group would
-    * overflow BIGINT — ANSI mode fails LOUDLY there, and the deploy
-    * rule (knobs audit) is two-level aggregation into DECIMAL(38,0). */
-  private def qPricingSummary(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp_ntz"))
-      .select(col("l_returnflag"), col("l_linestatus"),
-        round(col("l_quantity")).cast("long").as("qty"),
-        Relational.cents(col("l_extendedprice")).as("base_c"),
-        round(col("l_discount") * 100).cast("long").as("disc_c"),
-        round(col("l_tax") * 100).cast("long").as("tax_c"))
-      .withColumn("disc_fp4", col("base_c") * (lit(100L) - col("disc_c")))
-      .withColumn("charge_fp6", col("disc_fp4") * (lit(100L) + col("tax_c")))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(sum(col("qty")).as("sum_qty"),
-        sum(col("base_c")).as("sum_base_cents"),
-        sum(col("disc_fp4")).as("sum_disc_fp4"),
-        sum(col("charge_fp6")).as("sum_charge_fp6"),
-        sum(col("disc_c")).as("sum_disc_c"),
-        count(lit(1)).as("count_order"))
-      .select(col("l_returnflag"), col("l_linestatus"),
-        col("sum_qty"), col("sum_base_cents"), col("sum_disc_fp4"),
-        col("sum_charge_fp6"), col("count_order"),
-        expr("sum_qty div count_order").as("avg_qty"),
-        expr("sum_base_cents div count_order").as("avg_price_cents"),
-        expr("sum_disc_c div count_order").as("avg_disc_c"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
-
-  /** TPC-H Q3-shaped shipping priority (X192): top-10 unshipped-revenue
-    * orders for one market segment — revenue in exact fp4 (cents ×
-    * (100−disc_c)) summed as BIGINT. Plan: the tiny filtered customer
-    * dim broadcasts, orders filter-pushes its date bound and joins it,
-    * lineitem (date-filtered at the scan) equi-joins on orderkey, one
-    * map-side-combining per-order aggregate, then TakeOrderedAndProject
-    * — the fact table shuffles once, on the join key, and only the
-    * top-10 crosses to the driver. */
-  private def qShippingPriority(s: SparkSession, d: String): DataFrame = {
-    val cutoff = lit("1998-03-15").cast("timestamp_ntz")
-    val cust = t(s, d, "customer")
-      .filter(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
-    val ord = t(s, d, "orders").filter(col("o_orderdate") < cutoff)
-      .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-      .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-    t(s, d, "lineitem").filter(col("l_shipdate") > cutoff)
-      .select(col("l_orderkey"),
-        (Relational.cents(col("l_extendedprice")) *
-          (lit(100L) - round(col("l_discount") * 100).cast("long")))
-          .as("rev_fp4"))
-      .join(ord, col("l_orderkey") === col("o_orderkey"))
-      .groupBy(col("l_orderkey"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"),
-        col("o_orderpriority"))
-      .agg(sum(col("rev_fp4")).as("revenue_fp4"))
-      .orderBy(col("revenue_fp4").desc, col("order_date"), col("l_orderkey"))
-      .limit(10)
-  }
-
-  /** TPC-H Q18-shaped large-volume customers (X198): orders whose total
-    * line quantity exceeds 300, with their customer, date, and exact
-    * integer totals — the "whales" report. The HAVING aggregate is ONE
-    * map-side-combining per-order sum off the lineitem scan; its
-    * surviving set is tiny by construction (selective threshold), so
-    * AQE broadcasts it into orders and nothing else shuffles — at
-    * 100 TB the per-order aggregate is the single fact exchange, the
-    * customer dim broadcasts, and the top-100 runs as
-    * TakeOrderedAndProject (only 100 rows reach the driver). Quantities
-    * sum as exact integers, money as cents, dates as ISO strings
-    * (timestamps hash differently across engines). */
-  private def qBigOrders(s: SparkSession, d: String): DataFrame = {
-    val bigQ = t(s, d, "lineitem").groupBy(col("l_orderkey"))
-      .agg(sum(round(col("l_quantity")).cast("long")).as("total_qty"))
-      .filter(col("total_qty") > 300)
-    t(s, d, "orders").join(bigQ, col("o_orderkey") === col("l_orderkey"))
-      .join(broadcast(t(s, d, "customer")), col("o_custkey") === col("c_custkey"))
-      .select(col("c_name"), col("o_custkey"), col("o_orderkey"),
-        date_format(col("o_orderdate"), "yyyy-MM-dd").as("order_date"),
-        Relational.cents(col("o_totalprice")).as("totalprice_cents"),
-        col("total_qty"))
-      .orderBy(col("totalprice_cents").desc, col("o_orderkey"))
-      .limit(100)
-  }
-
-  /** TPC-H Q5-shaped local-supplier revenue (X199): per-nation revenue
-    * for ASIA-region customers served by a SAME-nation supplier within
-    * one order year — the classic multi-dim star probe. Dim chain
-    * region→nation broadcasts into customer and supplier; the
-    * date-filtered orders⋈customer edge produces the (orderkey,
-    * cust-nation) probe set (AQE broadcasts it at gate scale; at 100 TB
-    * it is the one custkey shuffle, and lineitem⋈orders the one
-    * orderkey shuffle); the supplier side broadcasts with the
-    * same-nation equality folded into the join condition, so mismatched
-    * rows never reach the aggregate. Revenue in exact fp4 BIGINT. */
-  private def qRegionRevenue(s: SparkSession, d: String): DataFrame = {
-    val natAsia = t(s, d, "nation")
-      .join(broadcast(t(s, d, "region").filter(col("r_name") === "ASIA")),
-        col("n_regionkey") === col("r_regionkey"))
-      .select(col("n_nationkey"), col("n_name"))
-    val custAsia = t(s, d, "customer")
-      .join(broadcast(natAsia), col("c_nationkey") === col("n_nationkey"))
-      .select(col("c_custkey"), col("c_nationkey"))
-    val suppAsia = t(s, d, "supplier")
-      .join(broadcast(natAsia), col("s_nationkey") === col("n_nationkey"))
-      .select(col("s_suppkey"), col("s_nationkey"), col("n_name"))
-    val ordAsia = t(s, d, "orders")
-      .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
-        col("o_orderdate") < lit("1997-01-01").cast("timestamp_ntz"))
-      .join(custAsia, col("o_custkey") === col("c_custkey"))
-      .select(col("o_orderkey"), col("c_nationkey"))
-    t(s, d, "lineitem")
-      .select(col("l_orderkey"), col("l_suppkey"),
-        (Relational.cents(col("l_extendedprice")) *
-          (lit(100L) - round(col("l_discount") * 100).cast("long")))
-          .as("rev_fp4"))
-      .join(ordAsia, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(suppAsia),
-        col("l_suppkey") === col("s_suppkey") &&
-          col("s_nationkey") === col("c_nationkey"))
-      .groupBy(col("n_name"))
-      .agg(sum(col("rev_fp4")).as("revenue_fp4"))
-      .orderBy(col("revenue_fp4").desc, col("n_name"))
-  }
-
-  /** TPC-H Q6-shaped revenue band (X211): the canonical full-pushdown
-    * aggregate — one scan with ALL THREE predicates (date window,
-    * discount band, quantity cap) in PushedFilters feeding a single
-    * 1-row map-side aggregate; no join, no shuffle beyond the final
-    * 1-row combine. The raw-double band compare is identical on both
-    * engines (same parquet doubles, same IEEE comparison); the money
-    * aggregates in exact fp4 (cents × discount-cents). */
-  private def qRevenueBand(s: SparkSession, d: String): DataFrame =
-    t(s, d, "lineitem")
-      .filter(col("l_shipdate") >= lit("1996-01-01").cast("timestamp_ntz") &&
-        col("l_shipdate") < lit("1997-01-01").cast("timestamp_ntz") &&
-        col("l_discount").between(0.05, 0.07) && col("l_quantity") < 24)
-      .agg(sum(Relational.cents(col("l_extendedprice")) *
-          round(col("l_discount") * 100).cast("long")).as("revenue_fp4"),
-        count(lit(1)).as("n_items"))
-
-  /** TPC-H Q14-shaped promo revenue share (X212): the conditional-
-    * aggregate-over-a-dim-join shape — one month of lineitem joined to
-    * the broadcast part dim, promo vs total revenue in ONE aggregate
-    * (two conditional sums, never two scans), share derived as exact
-    * integer permille. At 100 TB part exceeds broadcast and the
-    * partkey equi-join is the single fact shuffle. */
-  private def qPromoShare(s: SparkSession, d: String): DataFrame = {
-    val li = t(s, d, "lineitem")
-      .filter(col("l_shipdate") >= lit("1996-09-01").cast("timestamp_ntz") &&
-        col("l_shipdate") < lit("1996-10-01").cast("timestamp_ntz"))
-      .select(col("l_partkey"),
-        (Relational.cents(col("l_extendedprice")) *
-          (lit(100L) - round(col("l_discount") * 100).cast("long")))
-          .as("rev_fp4"))
-    li.join(broadcast(t(s, d, "part")
-        .select(col("p_partkey"), (col("p_type") === "PROMO").as("is_promo"))),
-        col("l_partkey") === col("p_partkey"))
-      .agg(coalesce(sum(when(col("is_promo"), col("rev_fp4"))), lit(0L))
-          .as("promo_fp4"),
-        sum(col("rev_fp4")).as("total_fp4"))
-      .select(col("promo_fp4"), col("total_fp4"),
-        expr("(1000 * promo_fp4) div total_fp4").as("promo_permille"))
-  }
-
-  /** TPC-H Q16-shaped supplier-per-part census (X213): distinct
-    * suppliers per (brand, size) excluding one brand and the promo
-    * type — the count-distinct-over-dim-join shape. The filtered part
-    * dim broadcasts (its equality/inequality predicates push into the
-    * scan); the distinct runs as Spark's two-level aggregate (partial
-    * distinct on (group, supp) before the group shuffle). */
-  private def qSupplierParts(s: SparkSession, d: String): DataFrame = {
-    val pt = t(s, d, "part")
-      .filter(col("p_type") =!= "PROMO" && col("p_brand") =!= "Brand#4")
-      .select(col("p_partkey"), col("p_brand"), col("p_size"))
-    t(s, d, "lineitem").select(col("l_partkey"), col("l_suppkey"))
-      .join(broadcast(pt), col("l_partkey") === col("p_partkey"))
-      .groupBy(col("p_brand"), col("p_size"))
-      .agg(countDistinct(col("l_suppkey")).as("supplier_cnt"))
-      .orderBy(col("supplier_cnt").desc, col("p_brand"), col("p_size"))
-  }
-
-  /** Benford first-digit audit (X200): the leading-significant-digit
-    * distribution of order totals — the classic fabricated-data /
-    * ingest-corruption screen (organic multiplicative amounts follow
-    * Benford's law; flat or spiked first digits say synthetic or
-    * truncated money). Exact integer cents (the leading digit of
-    * cents equals the leading digit of the positive amount — decimal
-    * shifts preserve it), digit via one substring on the cast — ONE
-    * map-side-combining aggregate to 9 rows plus a broadcast total.
-    * The expected-frequency comparison (log₁₀(1+1/d)) stays out of the
-    * hash gate — transcendental-free discipline. */
-  private def qBenford(s: SparkSession, d: String): DataFrame = {
-    val counts = t(s, d, "orders")
-      .select(substring(Relational.cents(col("o_totalprice")).cast("string"),
-        1, 1).as("digit"))
-      .groupBy(col("digit")).agg(count(lit(1)).as("n"))
-    val tot = counts.agg(sum(col("n")).as("nt"))
-    counts.crossJoin(broadcast(tot))
-      .select(col("digit"), col("n"), expr("(1000 * n) div nt").as("permille"))
-      .orderBy(col("digit"))
-  }
-
-  /** RFM user segmentation (X189 — see Relational.rfmSegments): exact
-    * population quintiles on recency/frequency/monetary via three
-    * global ranks of the user table; integer cents, packed rfm_code. */
-  private def qRfmSegments(s: SparkSession, d: String): DataFrame = {
-    val e = t(s, d, "events").select(col("user_id"),
-      expr("ts div 1000").as("us"), col("value"))
-    Relational.rfmSegments(e, "user_id", "us", "value")
-      .withColumnRenamed("u", "user_id")
-      .orderBy(col("user_id"))
-  }
-
-  /** Per-label embedding centroid drift between store halves (X190 —
-    * see Vectors.centroidDrift): id-parity split, exact integer
-    * centroids, L1 + dot/norm sufficient statistics per label. */
-  private def qEmbeddingDrift(s: SparkSession, d: String): DataFrame =
-    Vectors.centroidDrift(t(s, d, "embeddings"), "label", "vec_id", "embedding")
-      .orderBy(col("label"))
-
-  /** Ordered conversion funnel (X185 — see Relational.funnelSteps):
-    * view → click → purchase, each step the earliest qualifying event
-    * strictly after the previous step within 24 h; per-step user counts
-    * + exact integer latency sums. */
-  private def qFunnelSteps(s: SparkSession, d: String): DataFrame = {
-    val e = t(s, d, "events").select(col("user_id"),
-      expr("ts div 1000").as("us"), col("event_type"))
-    Relational.funnelSteps(e, "user_id", "us", "event_type",
-        Seq("view", "click", "purchase"), stepWindow = 86400000000L)
-      .orderBy(col("step"))
-  }
-
-  /** Cohort retention matrix (X186 — see Relational.cohortRetention):
-    * users cohorted by the epoch-week (integer µs div) of their first
-    * event; (cohort_week, week_offset) active-user counts. */
-  private def qCohortRetention(s: SparkSession, d: String): DataFrame = {
-    val e = t(s, d, "events").select(col("user_id"),
-      expr("ts div 1000").as("us"))
-    Relational.cohortRetention(e, "user_id", "us")
-      .orderBy(col("cohort_week"), col("week_offset"))
-  }
-
-  /** First-order Markov event-transition matrix (X195 — see
-    * Relational.eventTransitions): per-user consecutive event-type
-    * pairs, counts + exact out-share permille. One user-keyed window
-    * exchange, matrix-sized output. */
-  private def qEventTransitions(s: SparkSession, d: String): DataFrame = {
-    val e = t(s, d, "events").select(col("event_id"), col("user_id"),
-      expr("ts div 1000").as("us"), col("event_type"))
-    Relational.eventTransitions(e, "user_id", "us", "event_type",
-        tieBreak = col("event_id"))
-      .orderBy(col("from_type"), col("to_type"))
-  }
-
-  /** Last-touch conversion attribution (X196 — see
-    * Relational.lastTouchAttribution): each purchase credited to the
-    * user's latest preceding non-purchase event type ('direct' when
-    * none); conversions, exact revenue cents, share permille. */
-  private def qAttribution(s: SparkSession, d: String): DataFrame = {
-    val e = t(s, d, "events").select(col("event_id"), col("user_id"),
-      expr("ts div 1000").as("us"), col("event_type"), col("value"))
-    Relational.lastTouchAttribution(e, "user_id", "us", "event_type",
-        "value", convType = "purchase", tieBreak = col("event_id"))
-      .orderBy(col("touch_type"))
-  }
-
-  /** DAU/WAU stickiness (X197): per-day distinct actives over the
-    * enclosing epoch-week's distinct actives, in exact integer permille
-    * — the engagement-health ratio (how much of the weekly audience
-    * shows up on a given day). Weeks are integer µs division like
-    * q_cohort_retention (no calendar surface). Two distinct aggregates
-    * over the event scan — both map-side combining on (period, user) —
-    * then a broadcast join of the calendar-bounded week table onto the
-    * calendar-bounded day table. At any corpus size the output is
-    * bounded by days, and the corpus-sized work is the two distincts. */
-  private def qStickiness(s: SparkSession, d: String): DataFrame = {
-    val e = t(s, d, "events")
-      .select(expr("(ts div 1000) div 86400000000").as("day"), col("user_id"))
-    val dau = e.distinct().groupBy(col("day")).agg(count(lit(1)).as("dau"))
-    val wau = e.select(expr("day div 7").as("week"), col("user_id")).distinct()
-      .groupBy(col("week")).agg(count(lit(1)).as("wau"))
-    dau.withColumn("week", expr("day div 7"))
-      .join(broadcast(wau), Seq("week"))
-      .select(col("day"), col("dau"), col("wau"),
-        expr("(1000 * dau) div wau").as("stickiness_permille"))
-      .orderBy(col("day"))
-  }
-
-  /** Exact per-group median at scale (X222 — see
-    * Relational.groupedLowerMedian): median order total cents per
-    * priority via ONE composite-key global range rank — never a
-    * corpus-sized single-task group window. */
-  private def qGroupedMedian(s: SparkSession, d: String): DataFrame =
-    Relational.groupedLowerMedian(
-        t(s, d, "orders").select(col("o_orderkey"), col("o_orderpriority"),
-          Relational.cents(col("o_totalprice")).as("cents")),
-        "o_orderkey", "o_orderpriority", "cents")
-      .withColumnRenamed("median", "median_cents")
-      .orderBy(col("o_orderpriority"))
-
-  /** Session market-basket affinity (X223): which event types co-occur
-    * within a session beyond chance — lift·1000 = 1000·n_ab·n_sessions
-    * div (n_a·n_b), the classic association readout (Agrawal & Srikant
-    * 1994's support/lift, computed exactly). Sessions from the gap
-    * sessionizer; per-session DISTINCT items (one row per (session,
-    * type) — support semantics); the pair join is session-keyed with
-    * fan-out ≤ |types|² per session (bounded), singles and the session
-    * total are broadcast model-sized tables. Integer-exact UNDER THE
-    * FENCE: Spark wraps a Long product silently where the oracle
-    * (128-bit multiply) stays exact, so both products are
-    * raise_error-fenced PER ROW at the overflow condition via
-    * division-only bounds (n_ab > (2⁶³−1 div 1000) div n_sess, or
-    * n_a > (2⁶³−1) div n_b — conservative by at most one unit of the
-    * nested floor, and the fence arithmetic itself cannot wrap; the
-    * unigram maxWordLen pattern): a violating corpus fails loudly
-    * instead of hash-mismatching. The pair table this rides is
-    * |types|²-bounded, so the fence costs two comparisons on a
-    * model-sized frame. */
-  private def qBasketAffinity(s: SparkSession, d: String): DataFrame = {
-    val e = t(s, d, "events")
-      .select(col("event_id"), col("user_id"), expr("ts div 1000").as("us"),
-        col("event_type"))
-    val items = Relational.sessionize(e, "user_id", "us",
-        gap = 30L * 60 * 1000000, tieBreak = col("event_id"))
-      .select(col("user_id"), col("session_idx"), col("event_type")).distinct()
-    val nSess = items.select(col("user_id"), col("session_idx")).distinct()
-      .agg(count(lit(1)).as("n_sess"))
-    val singles = items.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-    val pairs = items.as("a").join(items.as("b"),
-        col("a.user_id") === col("b.user_id") &&
-          col("a.session_idx") === col("b.session_idx") &&
-          col("a.event_type") < col("b.event_type"))
-      .groupBy(col("a.event_type").as("type_a"), col("b.event_type").as("type_b"))
-      .agg(count(lit(1)).as("n_ab"))
-    pairs
-      .join(broadcast(singles.select(col("event_type").as("type_a"),
-        col("n").as("n_a"))), Seq("type_a"))
-      .join(broadcast(singles.select(col("event_type").as("type_b"),
-        col("n").as("n_b"))), Seq("type_b"))
-      .crossJoin(broadcast(nSess))
-      .withColumn("_fence",
-        // r13 advice: Column `/` is floating-point Divide — long operands
-        // cast to double, and both bounds exceed 2^53, so the rounded
-        // comparison could miss (or spuriously raise) near the boundary.
-        // SQL `div` keeps the guard in LongType end to end; nested floor
-        // stays conservative by at most one unit, and cannot wrap.
-        when(expr("n_ab > (9223372036854775807L div 1000) div n_sess") ||
-          expr("n_a > 9223372036854775807L div n_b"),
-          raise_error(lit("qBasketAffinity: lift product exceeds Long "
-            + "exactness (1000*n_ab*n_sess or n_a*n_b overflows)")).cast("int"))
-          .otherwise(lit(0)))
-      .select(col("type_a"), col("type_b"), col("n_ab"), col("n_a"), col("n_b"),
-        (expr("(1000 * n_ab * n_sess) div (n_a * n_b)") + col("_fence"))
-          .as("lift_x1000"))
-      .orderBy(col("type_a"), col("type_b"))
-  }
-
-  private def qSessionize(s: SparkSession, d: String): DataFrame = {
-    val e = t(s, d, "events")
-      .select(col("event_id"), col("user_id"), expr("ts div 1000").as("us"))
-    Relational.sessionize(e, "user_id", "us",
-        gap = 30L * 60 * 1000000, tieBreak = col("event_id"))
-      .groupBy(col("user_id"), col("session_idx"))
-      .agg(min(col("us")).as("session_start_us"),
-        max(col("us")).as("session_end_us"),
-        count(lit(1)).as("n_events"))
-      .orderBy(col("user_id"), col("session_idx"))
-  }
-
-  /** The STREAMING engine under the correctness gate: tumbling-window
-    * counts computed by an actual Structured Streaming run (file source →
-    * watermark + event-time window → memory sink, AvailableNow) over the
-    * events parquet, verified against the plain SQL aggregation — see
-    * EventStream.runWindowedCountsOnce. */
-  private def qStreamWindowCounts(s: SparkSession, d: String): DataFrame =
-    graft.streaming.EventStream.runWindowedCountsOnce(s, s"$d/events.parquet")
-      .orderBy(col("window_start_us"), col("event_type"))
-
-  /** STREAMING corpus-quality drift monitor (X165): the ingestion
-    * guardrail of a continuously-fed training pipeline — per-(window,
-    * language) volume + chars/token stats through the REAL engine (file
-    * source → watermarked window aggregation → memory sink,
-    * AvailableNow) — see streaming.CorpusMonitor. */
-  private def qStreamQuality(s: SparkSession, d: String): DataFrame =
-    graft.streaming.CorpusMonitor.runQualityDriftOnce(s, s"$d/documents.parquet")
-      .orderBy(col("window_start_s"), col("lang"))
-
-  /** STREAMING stream-static enrichment: event stream × broadcast
-    * customer dimension → per-(hour, market segment) counts and exact
-    * cent totals, through the real engine (AvailableNow + complete —
-    * deterministic over bounded input, see EventStream). */
-  private def qStreamEnrich(s: SparkSession, d: String): DataFrame =
-    graft.streaming.EventStream.runEnrichedCountsOnce(s, s"$d/events.parquet",
-        t(s, d, "customer"), "c_custkey", "c_mktsegment")
-      .orderBy(col("window_start_us"), col("segment"))
-
-  /** STREAMING stream-stream self-join: purchases attributed to the same
-    * user's clicks within the preceding hour, through the real engine
-    * (watermark-bounded state on BOTH sides, append mode). */
-  private def qStreamJoin(s: SparkSession, d: String): DataFrame =
-    graft.streaming.EventStream.runAttributionOnce(s, s"$d/events.parquet")
-      .orderBy(col("click_id"), col("purchase_id"))
-
-  /** STREAMING bounded-store 64-bit near-dup admission under the gate
-    * (X231 — the r13 forward-plan design note as a gated lifecycle):
-    * the documents table drains through the REAL bounded lifecycle as
-    * two doc_id-parity micro-batches (within-batch 64-bit banded
-    * clusters keep min id; batch-1 survivors are matched against the
-    * capacity-trimmed window of batch-0 admissions), and the admitted
-    * (id, simhash) index is the verified output. Gate capacity (2^20)
-    * pins the window=everything regime so the oracle replays plain
-    * sequential admission; eviction/replay semantics are spec-pinned
-    * (NearDup64StreamSpec). */
-  private def qStreamNearDup64(s: SparkSession, d: String): DataFrame =
-    graft.streaming.NearDupStream.runDocNearDup64GateOnce(
-        s, s"$d/documents.parquet", maxDist = 3, capacity = 1L << 20)
-      .orderBy(col("id"))
-
-  /** X232 — the bounded store's FIFO EVICTION under the hash gate: three
-    * parity batches at capacity = n_docs/4, so batch 2's match window is
-    * trimmed to batch 1 (whenever batch 1 admitted ≥ capacity — the
-    * oracle replays that CONDITION, not an assumed outcome; at n/4 it
-    * holds at every test SF: 4 re-admissions at sf0.01, 68 at sf0.1)
-    * and batch-0 near-dups in batch 2 are re-admitted past the evicted
-    * signatures.
-    * The trim-and-replay contract this pins is the subtlest reasoning in
-    * the streaming tier; q_stream_neardup64 pins the window=everything
-    * regime, this row pins the window=trimmed one. */
-  private def qStreamNearDup64Evict(s: SparkSession, d: String): DataFrame =
-    graft.streaming.NearDupStream.runDocNearDup64EvictGateOnce(
-        s, s"$d/documents.parquet", maxDist = 3)
-      .orderBy(col("id"))
-
-  /** X233 — the 16-bit UNBOUNDED streaming lifecycle under the hash
-    * gate (the r15 verdict's last spec-only streaming lifecycle): two
-    * parity batches through [[graft.streaming.NearDupStream.runNearDupStreamOnce]],
-    * whose store the 2^16 signature SPACE bounds (no capacity, no trim,
-    * no eviction — window=everything is the width's semantic). maxDist=2
-    * matches the 16-bit teaching tier (q_simhash_pairs). The oracle
-    * replays sequential admission with the sh16 CTE. */
-  private def qStreamNearDup16(s: SparkSession, d: String): DataFrame =
-    graft.streaming.NearDupStream.runDocNearDup16GateOnce(
-        s, s"$d/documents.parquet", maxDist = 2)
-      .orderBy(col("id"))
-
-  /** STREAMING in-stream dedup under the gate: the landing directory
-    * holds the events file TWICE, so dropDuplicatesWithinWatermark has
-    * real duplicates to drop; the emitted set is the distinct event ids
-    * (= the oracle's plain scan). */
-  private def qStreamDedup(s: SparkSession, d: String): DataFrame =
-    graft.streaming.EventStream.runStreamDedupOnce(s, s"$d/events.parquet")
-      .orderBy(col("event_id"))
-
-  /** STREAMING sessionization (flatMapGroupsWithState + event-time
-    * timeout) through an actual bounded streaming run — the emitted set
-    * is deterministic (see EventStream.runSessionizeOnce) and the oracle
-    * replays the same contract in SQL: every non-final session plus
-    * finals that time out under the final watermark. */
-  private def qStreamSessionize(s: SparkSession, d: String): DataFrame =
-    graft.streaming.EventStream.runSessionizeOnce(s, s"$d/events.parquet",
-        gapMs = 30L * 60 * 1000, delayMs = 10L * 60 * 1000)
-      .orderBy(col("user_id"), col("start_ms"))
-
-  /** E8 — JSON serialization (`to_json`): rows re-encoded as compact JSON
-    * objects, the payload-envelope shape the reference keeps in its
-    * raw_json column. Non-null fields only: Spark omits null fields where
-    * DuckDB emits them, so the verified contract covers the common
-    * (non-null) encoding both engines agree on byte-for-byte. */
-  private def qJsonSerialize(s: SparkSession, d: String): DataFrame =
-    t(s, d, "orders")
-      .filter(col("o_orderstatus").isNotNull)
-      .select(col("o_orderkey"),
-        to_json(struct(col("o_orderkey"), col("o_orderstatus"))).as("payload"))
-      .orderBy(col("o_orderkey"))
-
-  private def qJsonExtract(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events")
-      .select(col("event_id"), col("event_type"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))
-      .orderBy(col("event_id"))
-
-  /** AS-OF JOIN: each event picks up the most recent order (at or before
-    * the event time) of the same customer — union + running-last_value,
-    * one shuffle (Relational.asOfJoin). The right side is deduplicated to
-    * one order per (customer, date) so the tie-break is deterministic in
-    * both engines. */
-  private def qAsofJoin(s: SparkSession, d: String): DataFrame = {
-    val events = t(s, d, "events")
-      .select(col("event_id"), col("user_id"),
-        // integer `div`, not `/`: double division loses ulps above 2^53 ns
-        timestamp_micros(expr("ts div 1000")).as("ts"))
-    val orders = Relational.latestPerKey(
-      t(s, d, "orders").select(col("o_custkey"), col("o_orderdate"),
-        col("o_orderkey"), col("o_totalprice")),
-      Seq("o_custkey", "o_orderdate"), Seq(col("o_orderkey").desc))
-      .withColumnRenamed("o_custkey", "user_id")
-    Relational.asOfJoin(events, orders, "user_id", "ts", "o_orderdate",
-      Seq("o_orderkey", "o_totalprice"))
-      .select(col("event_id"), col("user_id"), col("o_orderkey"), col("o_totalprice"))
-      .orderBy(col("event_id"))
-  }
-
-  // ----------------------------------------------------- extension tier
-
-  private def qDedupExact(s: SparkSession, d: String): DataFrame =
-    Dedup.exact(t(s, d, "documents"), "doc_id", "text").orderBy(col("keep_id"))
-
-  private def qTokenCount(s: SparkSession, d: String): DataFrame =
-    t(s, d, "documents")
-      .select(col("doc_id"), TextOps.tokenCount(col("text")).as("n_tokens"))
-      .orderBy(col("doc_id"))
-
-  private def qFingerprint(s: SparkSession, d: String): DataFrame =
-    t(s, d, "documents")
-      .select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
-      .orderBy(col("doc_id"))
-
-  private def qTextQuality(s: SparkSession, d: String): DataFrame = {
-    val en = TextOps.Stopwords.toMap.apply("en")
-    val txt = col("text")
-    t(s, d, "documents")
-      .select(col("doc_id"),
-        TextOps.tokenCount(txt).as("n_tokens"),
-        TextOps.avgTokenLen(txt).as("avg_token_len"),
-        TextOps.punctRatio(txt).as("punct_ratio"),
-        (TextOps.vocabHits(txt, en).cast("double") / TextOps.tokenCount(txt)).as("stopword_ratio"),
-        TextOps.qualityScore(txt, en).as("quality"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Linear quality-classifier APPLY — the model-based filter tier
-    * (fastText-style classifiers in RedPajama-v2/FineWeb-class
-    * pipelines) as distinct from the rule-based Gopher tier
-    * (`q_quality_filter`): an externally-trained weight vector arrives
-    * as a ONE-ROW broadcast model frame (data, not plan literals — the
-    * plan stays constant across model updates, same seam as the trained
-    * PQ codebooks) and every document scores margin = w·f over exact
-    * integer features (token count, stopword hits, mean token length in
-    * milli-chars). Integer arithmetic end-to-end, so the decision
-    * boundary is engine-exact; scan-linear, shuffle-free, one broadcast.
-    * (The sigmoid is monotone, so thresholding the margin IS
-    * thresholding the probability — no float transcendentals needed.) */
-  private def qQualityMargin(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val model = Seq((-30000L, 400L, 2000L, -1L))
-      .toDF("w0", "w_tok", "w_stop", "w_len")
-    val en = TextOps.Stopwords.toMap.apply("en")
-    val txt = col("text")
-    t(s, d, "documents")
-      .select(col("doc_id"),
-        TextOps.tokenCount(txt).cast("long").as("n_tok"),
-        TextOps.vocabHits(txt, en).cast("long").as("n_stop"),
-        length(regexp_replace(txt, " ", "")).cast("long").as("n_cns"))
-      .withColumn("mean_tok_len_milli", expr("n_cns * 1000 div n_tok"))
-      .crossJoin(broadcast(model))
-      .select(col("doc_id"), col("n_tok"), col("n_stop"),
-        col("mean_tok_len_milli"),
-        (col("w0") + col("w_tok") * col("n_tok") + col("w_stop") * col("n_stop")
-          + col("w_len") * col("mean_tok_len_milli")).as("margin"))
-      .withColumn("keep", col("margin") > 0)
-      .orderBy(col("doc_id"))
-  }
-
-  private def qLangId(s: SparkSession, d: String): DataFrame = {
-    val txt = col("text")
-    val best = greatest(TextOps.Stopwords.map { case (_, w) => TextOps.vocabHits(txt, w) }: _*)
-    t(s, d, "documents")
-      .select(col("doc_id"), TextOps.langId(txt).as("lang_pred"), best.as("best_hits"))
-      .orderBy(col("doc_id"))
-  }
-
-  private def qRegexTokens(s: SparkSession, d: String): DataFrame = {
-    val (w, n, o) = TextOps.regexTokenCounts(col("text"))
-    t(s, d, "documents")
-      .select(col("doc_id"), w.as("n_words"), n.as("n_nums"), o.as("n_other"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Gopher-style repetition filters (Rae et al., arXiv:2112.11446):
-    * top-bigram fraction + duplicate-token fraction — the signals that
-    * catch boilerplate/spam documents in corpus cleaning. */
-  private def qRepetition(s: SparkSession, d: String): DataFrame =
-    t(s, d, "documents")
-      .select(col("doc_id"),
-        TextOps.topNgramFrac(col("text"), 2).as("top_2gram_frac"),
-        TextOps.dupTokenFrac(col("text")).as("dup_token_frac"))
-      .orderBy(col("doc_id"))
-
-  /** Deterministic stratified sampling: per-language quota in md5 order —
-    * the reproducible per-source/per-language subsampling step of corpus
-    * assembly. Stable under re-runs and any partitioning (hash order, not
-    * randomSplit). The quota is taken through the BOUNDED
-    * [[graft.functions.MinKByKey]] aggregate, not a window: a window
-    * partition here is an entire language stratum (a dominant language ≈
-    * the corpus) sorted by one task, while the aggregate's partial phase
-    * trims every map task to 50 pairs per stratum before the shuffle. */
-  private def qStratifiedSample(s: SparkSession, d: String): DataFrame =
-    t(s, d, "documents")
-      .select(col("doc_id"), TextOps.langId(col("text")).as("lang"))
-      .withColumn("h", md5(concat(lit("strat|"), col("doc_id").cast("string"))))
-      .groupBy(col("lang"))
-      .agg(graft.functions.MinKByKey(col("h"), col("doc_id"), 50).as("take"))
-      .select(col("lang"), posexplode(col("take")).as(Seq("i", "p")))
-      .select(col("p.id").as("doc_id"), col("lang"),
-        (col("i") + 1).cast("int").as("sample_rank"))
-      .orderBy(col("lang"), col("sample_rank"))
-
-  /** TF-IDF top-3 terms per document (quantized scores — see
-    * text.Search scaladoc for the cross-engine numeric strategy). */
-  private def qTfidfTopTerms(s: SparkSession, d: String): DataFrame =
-    graft.text.Search.tfidfTopTerms(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text", 3)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"), col("term_rank"))
-
-  /** BM25 keyword search: top-10 documents for a fixed conjunctive bag
-    * of terms, postings pruned before any shuffle. */
-  private def qBm25Search(s: SparkSession, d: String): DataFrame =
-    graft.text.Search.bm25TopDocs(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text",
-      Seq("hash", "join", "scan"), 10)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_rank"))
-
-  /** Hybrid dense+sparse retrieval: cosine (around corpus vector 42) and
-    * BM25 ranked lists fused by reciprocal rank — documents and
-    * embeddings share the id space, so the fusion join is on the doc id.
-    * Each retriever contributes its top-20; the fused top-10 ships. */
-  private def qHybridSearch(s: SparkSession, d: String): DataFrame =
-    graft.text.Search.hybridTopK(
-        spread(t(s, d, "documents"), "doc_id"), t(s, d, "embeddings"),
-        "doc_id", "text", "vec_id", "embedding",
-        queryId = 42L, terms = Seq("hash", "join", "scan"),
-        poolK = 20, topK = 10)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("hybrid_rank"))
-
-  private def qWinnowFingerprint(s: SparkSession, d: String): DataFrame =
-    spread(t(s, d, "documents"), "doc_id")
-      .select(col("doc_id"), TextOps.winnowFingerprint(col("text"), 4).as("winnow_fp"))
-      .orderBy(col("doc_id"))
-
-  /** Exact-substring duplication spans at 5-gram grain (Lee et al.
-    * substring dedup, shingle form — see dedup.Dedup.dupNgramSpans):
-    * per-doc duplicated-gram count, maximal merged spans, and exact
-    * union token coverage. k=5 on this corpus separates the inserted
-    * duplicate passages from chance trigram collisions. */
-  private def qDupSpans(s: SparkSession, d: String): DataFrame =
-    Dedup.dupNgramSpans(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text", k = 5)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
-
-  /** Unigram-LM corpus-frequency scoring (CCNet-style quality signal —
-    * see text.Search.unigramScore): the vocabulary histogram aggregates
-    * to O(vocab) rows and BROADCASTS back over the token stream. */
-  private def qUnigramScore(s: SparkSession, d: String): DataFrame =
-    graft.text.Search.unigramScore(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
-
-  /** Frequency-ranked vocabulary (tokenizer-training stage 1 — see
-    * text.Search.buildVocab): top-V types, deterministic tie-break,
-    * dense rank-order ids. */
-  private def qVocabBuild(s: SparkSession, d: String): DataFrame =
-    graft.text.Search.buildVocab(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text", 32)
-      .orderBy(col("token_id"))
-
-  /** Bigram LM counts with exact-integer MLE conditionals (KenLM count
-    * stage — see text.Search.bigramCondProbs); minCount=5 is the
-    * count-cutoff knob. */
-  private def qBigramLm(s: SparkSession, d: String): DataFrame =
-    graft.text.Search.bigramCondProbs(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text", 5L)
-      .orderBy(col("w1"), col("w2"))
-
-  /** Composed Gopher-rules quality filter (see TextOps.gopherReason):
-    * keep/drop decision + first-failing-rule audit reason per document.
-    * Thresholds chosen so both branches of the length, repetition, and
-    * stopword rules execute on this corpus. */
-  private def qQualityFilter(s: SparkSession, d: String): DataFrame =
-    spread(t(s, d, "documents"), "doc_id")
-      .select(col("doc_id"), TextOps.tokenCount(col("text")).as("n_tokens"),
-        TextOps.gopherReason(col("text"),
-          stopwords = TextOps.Stopwords.toMap.apply("en")).as("reason"))
-      .withColumn("keep", col("reason").isNull)
-      .orderBy(col("doc_id"))
-
-  // One-time bucketed saves of orders+customer on the join key (8
-  // buckets each side): repeated joins on that key read co-located
-  // buckets with NO exchange (the plan property IOSpec asserts); this
-  // registry query proves result transparency of the bucketed layout.
-  private val bucketedMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-  private[graft] def bucketedTables(s: SparkSession, d: String): (String, String) = {
-    val tag = bucketedMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val t0 = java.lang.Integer.toHexString(d.hashCode)
-      // a PREVIOUS session's managed-table files may survive in the
-      // warehouse dir while the fresh in-memory catalog knows nothing of
-      // them — drop both the entry and the location before (re)writing
-      Seq(s"orders_bkt_$t0", s"customer_bkt_$t0").foreach { name =>
-        s.sql(s"DROP TABLE IF EXISTS $name")
-        val loc = new java.io.File(
-          s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), name)
-        if (loc.exists()) graft.Fs.deleteRecursively(loc)
-      }
-      graft.sources.IO.writeBucketed(
-        t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"),
-          Relational.cents(col("o_totalprice")).as("price_cents")),
-        s"orders_bkt_$t0", Seq("o_custkey"), nBuckets = 8)
-      graft.sources.IO.writeBucketed(
-        t(s, d, "customer").select(col("c_custkey"), col("c_mktsegment")),
-        s"customer_bkt_$t0", Seq("c_custkey"), nBuckets = 8)
-      t0
-    })
-    (s"orders_bkt_$tag", s"customer_bkt_$tag")
-  }
-
-  /** Join over the bucketed layout (see [[bucketedTables]]) — verified
-    * against the plain-join oracle over the base tables. */
-  private def qBucketedJoin(s: SparkSession, d: String): DataFrame = {
-    val (ot, ct) = bucketedTables(s, d)
-    s.table(ot).join(s.table(ct), col("o_custkey") === col("c_custkey"))
-      .select(col("o_orderkey"), col("o_custkey"), col("price_cents"),
-        col("c_mktsegment"))
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** Schema-evolution union (`unionByName(allowMissingColumns)`): an
-    * old-generation batch without the price column unions a
-    * new-generation batch that has it — the absent column null-extends,
-    * the DataFrame-level twin of mergeSchema's footer union (spec:
-    * IOSpec "mergeSchema reads a schema-drifted landing directory"). */
-  private def qUnionEvolve(s: SparkSession, d: String): DataFrame = {
-    val orders = t(s, d, "orders")
-    val oldGen = orders.filter(col("o_orderkey") % 2 === 0)
-      .select(col("o_orderkey"), col("o_custkey"))
-    val newGen = orders.filter(col("o_orderkey") % 2 =!= 0)
-      .select(col("o_orderkey"), col("o_custkey"),
-        Relational.cents(col("o_totalprice")).as("price_cents"))
-    oldGen.unionByName(newGen, allowMissingColumns = true)
-      .orderBy(col("o_orderkey"))
-  }
-
-  /** Per-column profile of orders (see quality.Checks.profile):
-    * doubles profiled as exact cents so min/max strings are
-    * engine-portable. */
-  private def qProfile(s: SparkSession, d: String): DataFrame =
-    graft.quality.Checks.profile(
-      t(s, d, "orders").withColumn("price_cents",
-        Relational.cents(col("o_totalprice"))),
-      Seq(
-        "o_orderkey" -> col("o_orderkey"),
-        "o_custkey" -> col("o_custkey"),
-        "price_cents" -> col("price_cents"),
-        "o_orderpriority" -> col("o_orderpriority"),
-        "o_orderdate" -> col("o_orderdate")))
-      .orderBy(col("column"))
-
-  /** Declarative data-contract REPORT over orders (Checks.reportDf): the
-    * dbt generic-test surface as a queryable (check, n_violations,
-    * passed) table. The four row-predicate checks fuse into ONE
-    * conditional-aggregate scan; the two Unique checks each add a
-    * key-pruned aggregate branch. Thresholds are sized so both report
-    * outcomes appear: accepted_values and in_range FAIL on real data
-    * ('P' orders / >200k prices), the rest pass. */
-  private def qQualityReport(s: SparkSession, d: String): DataFrame = {
-    import graft.quality.Checks._
-    reportDf(t(s, d, "orders"), Seq(
-      NotNull("o_orderkey"),
-      Unique(Seq("o_orderkey")),
-      AcceptedValues("o_orderstatus", Seq("O", "F")),
-      InRange("o_totalprice", 0.0, 200000.0),
-      Satisfies("positive_price", "o_totalprice > 0"),
-      Unique(Seq("o_custkey", "o_orderdate"))))
-      .orderBy(col("check"))
-  }
-
-  /** Order-free reconciliation checksum of lineitem per return flag (see
-    * quality.Checks.groupChecksum): the row rendering pins key, line
-    * number, and exact cents. */
-  private def qChecksum(s: SparkSession, d: String): DataFrame =
-    graft.quality.Checks.groupChecksum(
-      t(s, d, "lineitem"), "l_returnflag",
-      concat_ws("|", col("l_orderkey"), col("l_linenumber"),
-        Relational.cents(col("l_extendedprice"))), hexDigits = 10)
-      .orderBy(col("l_returnflag"))
-
-  /** END-TO-END corpus preparation — the composition a training-data
-    * team ships: near-dup dedup survivors (the X44 cluster resolution)
-    * → Gopher-rules quality filter (X100) → deterministic hash split
-    * (X30), emitted as the final manifest (doc_id, n_tokens, split).
-    * Every stage is an already-verified operator; this row puts the
-    * COMPOSITION itself under the gate (the oracle recomputes all three
-    * stages, recursive-CTE clusters included). */
-  private def qCorpusPipeline(s: SparkSession, d: String): DataFrame = {
-    val clusters = Dedup.simhashClusters(simhashShared(s, d), maxDist = 1)
-    val drop = clusters.filter(col("id") =!= col("cluster_id"))
-      .select(col("id").as("doc_id"))
-    // The Gopher predicate is a heavy scan-side expression and Catalyst
-    // pushes filters through Repartition — written naively it lands on
-    // the single-row-group documents scan and the whole regex/token chain
-    // runs as ONE task (measured: a 1-task, ~4.5 s CPU-bound stage that
-    // dominated this query's cold pass; a spread() alone cannot shield a
-    // FILTER the way it shields heavy projections). Materializing the
-    // (cheap to build) survivor set behind an explicitly-widened persist
-    // is the pushdown barrier: the quality pass then evaluates above the
-    // InMemoryRelation, parallel across its pinned partitions — the same
-    // shape as running quality scoring over a materialized post-dedup
-    // corpus table at 100 TB.
-    val survivors = graft.Caches.track(
-      spread(t(s, d, "documents").join(drop, Seq("doc_id"), "left_anti"),
-        "doc_id")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val kept = survivors.filter(
-      TextOps.gopherReason(col("text"), TextOps.Stopwords.toMap.apply("en")).isNull)
-    val h = conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10).cast("long")
-    val pct = pmod(h, lit(100L))
-    kept.select(col("doc_id"), TextOps.tokenCount(col("text")).as("n_tokens"),
-        when(pct < 80, "train").when(pct < 90, "valid").otherwise("test").as("split"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Bigram-LM fluency scores (the APPLY side of q_bigram_lm's model —
-    * see text.Search.bigramFluency): per-doc mean conditional permille,
-    * exact integers end to end. */
-  private def qBigramFluency(s: SparkSession, d: String): DataFrame =
-    graft.text.Search.bigramFluency(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
-
-  /** OUT-OF-CORPUS bigram-LM apply (text.Search.bigramFluencyApply): the
-    * model trains on the 90% of documents with doc_id % 10 ≠ 0 and
-    * scores the held-out 10% — pairs LEFT-join the model, unseen
-    * transitions take the backoff floor (n_oov counts them). This is the
-    * production quality-filter form: score each new crawl shard against
-    * a reference LM it did not train. */
-  private def qBigramFluencyOov(s: SparkSession, d: String): DataFrame = {
-    val docs = spread(t(s, d, "documents"), "doc_id")
-    val model = graft.text.Search.bigramCondProbs(
-      docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text", minCount = 1L)
-    graft.text.Search.bigramFluencyApply(
-        docs.filter(col("doc_id") % 10 === 0), model, "doc_id", "text",
-        backoffMilli = 1L)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
-  }
-
-  /** Trigram STUPID-BACKOFF scoring (text.Search.trigramBackoffApply):
-    * models train on the 90% split, the held-out 10% is scored through
-    * the full backoff ladder — trigram hit, 0.4·bigram, 0.4²·unigram,
-    * OOV floor — all in exact integer permille; the per-level histogram
-    * columns prove every branch executes under the gate. */
-  private def qTrigramBackoff(s: SparkSession, d: String): DataFrame = {
-    // the corpus vocabulary is tiny, so every held-out bigram exists in
-    // train and the lower ladder rungs would never run — append a
-    // shared-residue tail token (unigram known, bigram novel → 0.4² rung)
-    // and a per-doc unique token (true OOV → floor) closed-form, so the
-    // gate exercises all four levels
-    val docs = spread(t(s, d, "documents"), "doc_id")
-      .withColumn("text2", concat(col("text"),
-        lit(" tail"), pmod(col("doc_id"), lit(7L)), lit(" uq"), col("doc_id")))
-    graft.text.Search.trigramBackoffApply(
-        docs.filter(col("doc_id") % 10 === 0),
-        docs.filter(col("doc_id") % 10 =!= 0),
-        "doc_id", "text2", backoffMilli = 1L)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
-  }
-
-  /** SLIDING event-time windows (size 2 h, slide 1 h — each event lands
-    * in size/slide = 2 overlapping windows): the built-in `window()`
-    * generator expands in-row, then ONE hash aggregate; the other window
-    * flavors (tumbling: X16, merging session: X78) are already under the
-    * gate. Exact integer cents keep the overlap-duplicated sums
-    * hash-stable. */
-  private def qSlidingWindow(s: SparkSession, d: String): DataFrame =
-    t(s, d, "events")
-      .select(col("event_type"), col("value"),
-        timestamp_micros(expr("ts div 1000")).as("tts"))
-      .groupBy(window(col("tts"), "2 hours", "1 hour").as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(round(col("value") * 100).cast("long")).as("value_cents"))
-      .select(unix_micros(col("w.start")).as("window_start_us"),
-        unix_micros(col("w.end")).as("window_end_us"),
-        col("event_type"), col("n_events"), col("value_cents"))
-      .orderBy(col("window_start_us"), col("event_type"))
-
-  /** Incremental ingest dedup (see Dedup.incrementalExact): a replayed
-    * batch — genuinely new docs (doc_id%10=0) plus re-keyed copies of
-    * every doc_id%7=0 doc — admitted against the base corpus's
-    * fingerprint store. Copies of BASE docs fall to the anti join;
-    * copies of BATCH docs fall to the within-batch dedup (survivor =
-    * min id, batch_dups = 2 — both paths execute under the gate). */
-  private def qIncrementalDedup(s: SparkSession, d: String): DataFrame = {
-    val docs = spread(t(s, d, "documents"), "doc_id")
-    val base = docs.filter(col("doc_id") % 10 =!= 0)
-    val replay = docs.filter(col("doc_id") % 7 === 0)
-      .select((col("doc_id") + 10000).as("doc_id"), col("text"))
-    val batch = docs.filter(col("doc_id") % 10 === 0)
-      .select(col("doc_id"), col("text")).unionByName(replay)
-    Dedup.incrementalExact(batch,
-        Dedup.fingerprintStore(base, "doc_id", "text"), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
-  }
-
-  /** Deterministic hash-based train/validation/test split — the
-    * reproducible corpus partitioning a training pipeline needs (stable
-    * under re-runs, joins, and repartitioning, unlike randomSplit).
-    * Hash = first 60 bits of md5(doc_id), engine-portable. */
-  private def qTrainTestSplit(s: SparkSession, d: String): DataFrame = {
-    val h = conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10).cast("long")
-    val pct = pmod(h, lit(100L))
-    t(s, d, "documents")
-      .select(col("doc_id"), pct.as("pct"),
-        when(pct < 80, "train").when(pct < 90, "valid").otherwise("test").as("split"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Token-length histogram in 64-token buckets — the packing/batching
-    * statistic for sequence-length-aware training batch assembly. */
-  private def qLengthBuckets(s: SparkSession, d: String): DataFrame = {
-    val n = TextOps.tokenCount(col("text"))
-    t(s, d, "documents")
-      .select(((n / 64).cast("int") * 64).as("bucket_start"), n.as("n_tokens"))
-      .groupBy(col("bucket_start"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens").cast("long")).as("sum_tokens"))
-      .orderBy(col("bucket_start"))
-  }
-
-  /** Generator/UDTF surface: positional explode of the embedding arrays
-    * into (row, ordinal, component) — the lateral-view shape. */
-  private def qPosexplode(s: SparkSession, d: String): DataFrame =
-    t(s, d, "embeddings")
-      .select(col("vec_id"), posexplode(col("embedding")))
-      .withColumnRenamed("col", "component")
-      .orderBy(col("vec_id"), col("pos"))
-
-  /** Multimodal plumbing demo: text payloads packed as binary media rows,
-    * features extracted through the per-partition decode path
-    * (graft.multimodal.Multimodal — decode itself is a deterministic
-    * stub; see that object's scaladoc). */
-  private def qMultimodalDecode(s: SparkSession, d: String): DataFrame =
-    graft.multimodal.Multimodal
-      .extractFeatures(graft.multimodal.Multimodal.packText(t(s, d, "documents"), "doc_id", "text"))
-      .toDF()
-      .orderBy(col("doc_id"))
-
-  /** The REAL image decode path under the correctness gate: synthetic
-    * BMP/PPM payloads generated from each document's text bytes
-    * (graft.multimodal.SynthImages — dimensions closed-form over doc_id,
-    * pixels cycling the text), decoded byte-for-byte by ImageDecoder
-    * through the same per-partition seam as the stub. byte_len / width /
-    * height are oracle-verified (the format arithmetic is closed-form
-    * SQL); the perceptual hash — not expressible in oracle SQL — is
-    * exercised here and pinned by golden values in ImageDecoderSpec. */
-  private def qImageDecode(s: SparkSession, d: String): DataFrame =
-    graft.multimodal.Multimodal
-      .extractFeatures(
-        graft.multimodal.SynthImages.packSynth(t(s, d, "documents"), "doc_id", "text"),
-        graft.multimodal.ImageDecoder)
-      .toDF()
-      .select(col("doc_id"), col("byte_len"), col("width"), col("height"))
-      .orderBy(col("doc_id"))
-
-  /** Image exact-dedup via perceptual-hash equality — the bucket-first
-    * pass of every image dedup pipeline, run end-to-end through the
-    * REAL byte-level decoders: groups of 3 consecutive docs carry
-    * identical pixels but ALTERNATE container formats (BMP vs PPM), so
-    * equal per-group hashes prove the whole decode→gray→aHash path is
-    * format-independent (n_formats = 2 in every full group, yet
-    * n_hashes = 1). The oracle states the spec closed-form — any
-    * decoder or hash regression breaks it. (Corpus-WIDE hash
-    * distinctness is deliberately not asserted: average-hash is
-    * luma-shift invariant by design, so distinct synthetic pixel seeds
-    * can legitimately collide.) Scan-linear decode (one decoder
-    * instance per partition), ONE group-by exchange on the 8-byte
-    * group key. */
-  private def qImageDedup(s: SparkSession, d: String): DataFrame =
-    graft.multimodal.Multimodal
-      .extractFeatures(
-        graft.multimodal.SynthImages.packSynthGrouped(t(s, d, "documents"), "doc_id", 3L),
-        graft.multimodal.ImageDecoder)
-      .toDF()
-      .groupBy(expr("doc_id div 3").as("img_group"))
-      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_docs"),
-        countDistinct(col("phash")).as("n_hashes"),
-        countDistinct(pmod(col("doc_id"), lit(2L))).as("n_formats"))
-      .orderBy(col("img_group"))
-
-  /** REAL audio decode under the gate: synthetic WAV payloads (closed-form
-    * from doc_id + text, SynthAudio) through the byte-level RIFF/PCM
-    * parser; every feature — rate, count, duration, integer mean |amp| —
-    * is recomputed by the oracle from the text column alone. */
-  private def qAudioDecode(s: SparkSession, d: String): DataFrame =
-    graft.multimodal.Multimodal
-      .extractAudioFeatures(
-        graft.multimodal.SynthAudio.packSynth(t(s, d, "documents"), "doc_id", "text"))
-      .toDF()
-      .orderBy(col("doc_id"))
-
-  /** Frame-level audio energy (X219 — see Multimodal.extractAudioFrames):
-    * 256-sample frame energies through the REAL RIFF/PCM decoder —
-    * per-doc frame count, exact-integer peak frame (lowest-index ties)
-    * and total Σs²; every value recomputed by the oracle from the text
-    * column alone (the SynthAudio closed form), so the decoder's frame
-    * walk is result-verified, not just spec'd. */
-  private def qAudioFrames(s: SparkSession, d: String): DataFrame =
-    graft.multimodal.Multimodal
-      .extractAudioFrames(
-        graft.multimodal.SynthAudio.packSynth(t(s, d, "documents"), "doc_id", "text"),
-        frameLen = 256)
-      .toDF()
-      .orderBy(col("doc_id"))
-
-  private def qFrameSample(s: SparkSession, d: String): DataFrame =
-    graft.multimodal.Multimodal
-      .sampleFrames(graft.multimodal.Multimodal.packText(t(s, d, "documents"), "doc_id", "text"), 64)
-      .toDF()
-      .orderBy(col("doc_id"), col("frame_idx"))
-
-  /** Both simhash queries persist this identical plan, so the signature
-    * table materializes ONCE per session (CacheManager dedupes identical
-    * plans) — the in-session analogue of materializing the corpus
-    * signature table that every simhash consumer reads at 100 TB.
-    * Registered with [[graft.Caches]] so `Caches.release()` frees it. */
-  private def simhashShared(s: SparkSession, d: String): DataFrame =
-    graft.Caches.materialize(
-      Dedup.simhash(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-
-  private def qSimhash(s: SparkSession, d: String): DataFrame =
-    simhashShared(s, d)
-      .select(col("id").as("doc_id"), col("simhash"))
-      .orderBy(col("doc_id"))
-
-  /** SimHash-clustered dedup in aggregate shape: one row per 16-bit hash
-    * with the surviving id — O(clusters) output regardless of how large
-    * the near-dup clusters are (the all-PAIRS operator
-    * Dedup.simhashNearDupPairs exists for spot mining but its output is
-    * quadratic in cluster size — wrong shape for a corpus-wide pass). */
-  private def qSimhashDedup(s: SparkSession, d: String): DataFrame =
-    simhashShared(s, d)
-      .groupBy(col("simhash"))
-      .agg(min(col("id")).as("keep_id"), count(lit(1)).as("dup_count"))
-      .orderBy(col("keep_id"))
-
-  /** SimHash near-dup PAIRS over the shared persisted signature table:
-    * pigeonhole chunk banding + streaming bucket equi-self-join + exact
-    * XOR/popcount Hamming verify (Dedup.simhashNearDupPairsFromSigs).
-    * maxDist = 2 → 3 chunks of 6/5/5 bits. */
-  private def qSimhashPairs(s: SparkSession, d: String): DataFrame =
-    Dedup.simhashNearDupPairsFromSigs(simhashShared(s, d), maxDist = 2)
-      .orderBy(col("id_a"), col("id_b"))
-
-  /** X229 — PRODUCTION 64-bit SimHash near-dup pairs (the r12 knobs
-    * audit's named-but-unbuilt deploy rule, closed): SimHash64Fp narrow
-    * signature map → auto-sized pigeonhole bands
-    * (Dedup.simhash64BandWidth: clamp(⌈log₂ n⌉, 14, 64/(maxDist+1)))
-    * → bucket equi-self-join → exact hi/lo XOR-popcount Hamming verify.
-    * maxDist = 3 (Manku/Jain/Sarma WWW'07's operating radius) → the
-    * 500-doc gate corpus sizes to width 14 = 5 chunks of 13/13/13/13/12
-    * bits, and a 2¹⁴⁺-doc corpus widens itself, keeping in-bucket
-    * candidates ~linear by construction rather than by corpus size. */
-  private def qSimhash64Pairs(s: SparkSession, d: String): DataFrame =
-    Dedup.simhash64NearDupPairsFromSigs(
-      Dedup.simhash64(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text"),
-      maxDist = 3)
-      .orderBy(col("id_a"), col("id_b"))
-
-  /** Near-dup CLUSTER resolution: connected components over the simhash
-    * Hamming ≤ 1 graph (off the shared signature table) — one (doc_id,
-    * cluster_id) row per doc in a ≥2-doc component, cluster_id = the
-    * component's min doc_id. Identical signatures contract to one graph
-    * node before the min-label iteration (Dedup.simhashClusters), so the
-    * iterated graph is the distinct-signature graph, not the corpus. */
-  private def qDedupClusters(s: SparkSession, d: String): DataFrame =
-    Dedup.simhashClusters(simhashShared(s, d), maxDist = 1)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
-
-  /** End-to-end dedup APPLY — the write-the-clean-corpus step: drop every
-    * doc that belongs to a near-dup cluster but is not its minimum (the
-    * survivor), keep everything else. Composes the cluster resolution
-    * with one left-anti join against the (tiny) drop list; at scale this
-    * is the final pass that materializes the deduplicated training
-    * corpus. */
-  private def qDedupApply(s: SparkSession, d: String): DataFrame = {
-    val clusters = Dedup.simhashClusters(simhashShared(s, d), maxDist = 1)
-    val drop = clusters.filter(col("id") =!= col("cluster_id"))
-      .select(col("id").as("doc_id"))
-    t(s, d, "documents")
-      .join(drop, Seq("doc_id"), "left_anti")
-      .select(col("doc_id"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Text normalization — the cleanup pass upstream of tokenization /
-    * dedup: control chars → spaces, lowercase, collapse space runs, trim
-    * (TextOps.normalizeText, pure codegen expressions, scan-linear). */
-  private def qNormalize(s: SparkSession, d: String): DataFrame = {
-    val norm = TextOps.normalizeText(col("text"))
-    t(s, d, "documents")
-      .select(col("doc_id"), norm.as("norm_text"),
-        TextOps.tokenCount(norm).as("n_tok"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** PII scrub: the corpus has no natural PII, so deterministic
-    * email/phone/IPv4 payloads are synthesized from doc_id (the
-    * SynthImages pattern — closed-form, oracle-reproducible) and the REAL
-    * detection + redaction runs over them. Counts audit the raw text;
-    * red_md5 pins the full redacted string. Narrow codegen regexp over
-    * the scan; the only exchange is the output ordering. */
-  private def qPiiRedact(s: SparkSession, d: String): DataFrame = {
-    val pii = concat(col("text"),
-      lit(" Contact u"), col("doc_id").cast("string"),
-      lit("@ex"), (col("doc_id") % 7).cast("string"), lit(".com"),
-      when(col("doc_id") % 3 === 0, lit(" cc admin@corp.org")).otherwise(lit("")),
-      lit(" or +1-555-867-"), (lit(1000) + col("doc_id") % 9000).cast("string"),
-      lit(" node 10."), (col("doc_id") % 256).cast("string"),
-      lit(".3."), (col("doc_id") % 250).cast("string"))
-    val (ne, np, ni) = TextOps.piiCounts(col("t"))
-    t(s, d, "documents")
-      .select(col("doc_id"), pii.as("t"))
-      .select(col("doc_id"), ne.as("n_email"), np.as("n_phone"), ni.as("n_ip"),
-        length(TextOps.redactPii(col("t"))).as("red_len"),
-        md5(TextOps.redactPii(col("t"))).as("red_md5"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Eval-set decontamination: corpus docs (doc_id % 50 ≠ 0) sharing any
-    * word trigram with the "benchmark" slice (doc_id % 50 = 0), with the
-    * distinct shared-gram count. Benchmark grams broadcast — the corpus
-    * side never shuffles (Dedup.contamination). */
-  private def qContamination(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents")
-    Dedup.contamination(
-      docs.filter(col("doc_id") % 50 =!= 0),
-      docs.filter(col("doc_id") % 50 === 0),
-      "doc_id", "text", n = 3)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
-  }
-
-  /** Passage chunking: 64-token windows starting every 48 tokens (16
-    * overlap), one row per (doc, chunk) — a narrow in-row expansion
-    * (TextOps.chunks), no shuffle. */
-  private def qChunks(s: SparkSession, d: String): DataFrame =
-    t(s, d, "documents")
-      .select(col("doc_id"),
-        posexplode(graft.text.TextOps.chunks(col("text"), size = 64, overlap = 16)))
-      .select(col("doc_id"), col("pos").cast("int").as("chunk_idx"),
-        col("col.chunk_text").as("chunk_text"), col("col.n_tok").as("n_tok"))
-      .orderBy(col("doc_id"), col("chunk_idx"))
-
-  private def qNgramJaccard(s: SparkSession, d: String): DataFrame =
-    Dedup.ngramJaccardPairs(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text", n = 3, threshold = 0.8)
-      .orderBy(col("id_a"), col("id_b"))
-
-  /** Quality-vs-length Pareto front (X188 — see Relational.skyline2d):
-    * the documents no other document beats on BOTH fp6 quality and
-    * token count — the multi-objective corpus-selection frontier. */
-  private def qParetoFront(s: SparkSession, d: String): DataFrame = {
-    val en = TextOps.Stopwords.toMap.apply("en")
-    val p = t(s, d, "documents").select(col("doc_id"),
-      round(TextOps.qualityScore(col("text"), en) * 1e6).cast("long").as("q_fp6"),
-      TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
-    Relational.skyline2d(p, "q_fp6", "n_tokens").orderBy(col("doc_id"))
-  }
-
-  /** Sorted-neighborhood blocking dedup (X183 — see Dedup
-    * .sortedNeighborhoodPairs): two-pass merge/purge (normalized prefix,
-    * reversed-prefix), window 5, exact-Jaccard verify at 0.8 — the
-    * skew-proof (exactly n·window·2 candidates) member of the blocking
-    * ensemble next to LSH (X3) and PPJoin (X33). */
-  private def qSortedBlocking(s: SparkSession, d: String): DataFrame =
-    Dedup.sortedNeighborhoodPairs(spread(t(s, d, "documents"), "doc_id"),
-      "doc_id", "text", n = 3, window = 5, prefixLen = 12, threshold = 0.8)
-      .orderBy(col("id_a"), col("id_b"))
-
-  private def qMinhashLsh(s: SparkSession, d: String): DataFrame =
-    Dedup.minhashLshPairs(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text",
-      n = 3, k = 6, rowsPerBand = 2, threshold = 0.7)
-      .orderBy(col("id_a"), col("id_b"))
-
-  /** MinHash estimator calibration (X220 — see
-    * Dedup.minhashCalibration): per match-count bucket, the exact
-    * true-Jaccard statistics of the LSH candidate pairs — the
-    * sketch-accuracy readout behind choosing k. Same (n=3, k=6,
-    * rowsPerBand=2) knobs as the dedup family, so the persisted
-    * set/bucket artifacts are shared within an epoch. */
-  private def qMinhashCalibration(s: SparkSession, d: String): DataFrame =
-    Dedup.minhashCalibration(spread(t(s, d, "documents"), "doc_id"),
-        "doc_id", "text", n = 3, k = 6, rowsPerBand = 2)
-      .orderBy(col("n_matches"))
-
-  /** Dedup ENSEMBLE audit — the method-overlap study a production
-    * pipeline runs before choosing its dedup stack: every non-canonical
-    * document flagged by any of the three text methods (exact
-    * fingerprint, MinHash-LSH Jaccard ≥ 0.7, SimHash Hamming ≤ 2) with
-    * a method bitmask (1|2|4), so "what does simhash catch that
-    * minhash misses" is one GROUP BY away. Each method contributes its
-    * already-audited plan; the merge is a 3-way union of (doc, bit)
-    * rows into ONE hash aggregate — flag volume is dup-bounded, never
-    * corpus-bounded. */
-  private def qDedupEnsemble(s: SparkSession, d: String): DataFrame = {
-    val docs = spread(t(s, d, "documents"), "doc_id")
-    val fp = docs.select(col("doc_id"), TextOps.fingerprint(col("text")).as("fp"))
-    val exactDup = fp
-      .join(fp.groupBy(col("fp")).agg(min(col("doc_id")).as("keep")), Seq("fp"))
-      .filter(col("doc_id") =!= col("keep"))
-      .select(col("doc_id"), lit(1L).as("bit"))
-    val minhashDup = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        n = 3, k = 6, rowsPerBand = 2, threshold = 0.7)
-      .select(col("id_b").as("doc_id")).distinct()
-      .select(col("doc_id"), lit(2L).as("bit"))
-    val simhashDup = Dedup.simhashNearDupPairs(docs, "doc_id", "text", maxDist = 2)
-      .select(col("id_b").as("doc_id")).distinct()
-      .select(col("doc_id"), lit(4L).as("bit"))
-    exactDup.union(minhashDup).union(simhashDup)
-      .groupBy(col("doc_id"))
-      .agg(sum(col("bit")).as("method_mask"), count(lit(1)).as("n_methods"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Banding-quality evaluation — the (k, rowsPerBand) knob study every
-    * MinHash deployment runs before committing band parameters at
-    * corpus scale: raw LSH banding candidates (distinct, BEFORE exact
-    * verification) scored against exact-Jaccard ≥ τ truth (PPJoin —
-    * prefix filtering is lossless, so truth is the full all-pairs
-    * answer). One summary row: candidate precision (how much verify
-    * work the bands waste) and recall (which true pairs the bands can
-    * NEVER recover — the unfixable loss). Integer permille via `div`,
-    * engine-exact. All three counters come out of ONE full-outer join of
-    * the two (tiny, dup-bounded) pair tables — each expensive subtree
-    * (PPJoin truth, banding candidates) is evaluated exactly once,
-    * instead of once per counter (the r9 form re-ran the candidate
-    * pipeline for n_cand and again for n_tp — half of the 2.3→5.0 s
-    * driver regression; the persisted bucket table was the other half). */
-  private def qDedupEval(s: SparkSession, d: String): DataFrame = {
-    val docs = spread(t(s, d, "documents"), "doc_id")
-    val truth = Dedup.ngramJaccardPairs(docs, "doc_id", "text", n = 3, threshold = 0.7)
-      .select(col("id_a"), col("id_b"), lit(1L).as("t"))
-    val cand = Dedup.minhashCandidatePairs(docs, "doc_id", "text",
-      n = 3, k = 6, rowsPerBand = 2).distinct()
-      .select(col("id_a"), col("id_b"), lit(1L).as("c"))
-    cand.join(truth, Seq("id_a", "id_b"), "full_outer")
-      .agg(count(col("t")).as("n_truth"), count(col("c")).as("n_cand"),
-        count(when(col("t").isNotNull && col("c").isNotNull, lit(1))).as("n_tp"))
-      .select(col("n_truth"), col("n_cand"), col("n_tp"),
-        expr("n_tp * 1000 div n_cand").as("precision_permille"),
-        expr("n_tp * 1000 div n_truth").as("recall_permille"))
-  }
-
-  /** Incremental near-dup admission: the day's batch (doc_id%10==0)
-    * screened against the standing corpus — O(batch) signatures join
-    * the store's banded buckets, exact verify, so a daily ingest never
-    * re-pairs the historical corpus against itself. */
-  private def qIncrementalNearDup(s: SparkSession, d: String): DataFrame = {
-    val docs = spread(t(s, d, "documents"), "doc_id")
-    Dedup.incrementalMinhashNearDup(
-      docs.filter(pmod(col("doc_id"), lit(10L)) === 0),
-      docs.filter(pmod(col("doc_id"), lit(10L)) =!= 0),
-      "doc_id", "text", n = 3, k = 6, rowsPerBand = 2, threshold = 0.5)
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** word2phrase collocation mining (Search.phraseMining): the
-    * phrase-vocabulary induction step before tokenizer training — lift
-    * score in exact integer permille, top-20 via TakeOrderedAndProject
-    * over the model-sized pair table. */
-  /** BPE merge training under the gate (Search.bpeTrainMerges): three
-    * rounds of most-frequent-adjacent-pair fusion, each applied
-    * corpus-wide through the guarded-string replace before the next
-    * count; the oracle unrolls the rounds CTE-for-CTE. */
-  private def qBpeTrain(s: SparkSession, d: String): DataFrame =
-    graft.text.Search.bpeTrainMerges(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text", nMerges = 3)
-      .orderBy(col("merge_rank"))
-
-  /** The trained tokenizer applied corpus-wide (Search.bpeApply):
-    * per-doc token counts before/after the learned merges — the
-    * compression the tokenizer buys, doc by doc. */
-  private def qBpeApply(s: SparkSession, d: String): DataFrame =
-    graft.text.Search.bpeApply(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text", nMerges = 3)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
-
-  /** Unigram-LM tokenizer TRAINING (Unigram.unigramTrain — Kudo 2018,
-    * SentencePiece's model family, hard-EM variant): substring-seeded
-    * vocabulary, two Viterbi-EM rounds over the DISTINCT-word table
-    * (vocabulary-bounded — the corpus is scanned once for word counts),
-    * single-character pieces protected, final inventory cut to
-    * vocabSize. The mainstream tokenizer family next to BPE; fertility/
-    * coverage comparisons across the two is the production decision. */
-  private def qUnigramTrain(s: SparkSession, d: String): DataFrame =
-    graft.text.Unigram.unigramTrain(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text")
-      .orderBy(col("n_used").desc, col("piece"))
-
-  /** Corpus-wide unigram-tokenizer APPLY (Unigram.unigramApply):
-    * per-document piece counts under the trained vocabulary — one
-    * Viterbi pass over distinct words broadcast back onto the token
-    * stream; shares the memoized trained vocabulary with the train
-    * row (the BPE-chain artifact discipline). */
-  private def qUnigramApply(s: SparkSession, d: String): DataFrame =
-    graft.text.Unigram.unigramApply(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
-
-  /** WordPiece tokenizer TRAINING (X178 — text.WordPiece.wordpieceTrain,
-    * Schuster & Nakajima 2012, the BERT tokenizer family): 10 greedy
-    * merge rounds over the distinct-word table ranked by exact
-    * fixed-point LIKELIHOOD GAIN c_ab·10¹² div (c_a·c_b) instead of
-    * BPE's raw pair frequency — the third mainstream tokenizer family
-    * next to BPE (X117) and the unigram LM (X174). */
-  private def qWordpieceTrain(s: SparkSession, d: String): DataFrame =
-    graft.text.WordPiece.wordpieceTrain(spread(t(s, d, "documents"), "doc_id"),
-        "doc_id", "text", nMerges = 10)
-      .orderBy(col("merge_rank"))
-
-  /** Corpus-wide WordPiece APPLY (X179 — WordPiece.wordpieceApply):
-    * greedy longest-match-first per-word walk (word-level [UNK]) under
-    * the trained vocabulary, broadcast back onto the token stream;
-    * shares the memoized train loop with the train row. */
-  private def qWordpieceApply(s: SparkSession, d: String): DataFrame =
-    graft.text.WordPiece.wordpieceApply(spread(t(s, d, "documents"), "doc_id"),
-        "doc_id", "text", nMerges = 10)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
-
-  /** Three-family tokenizer comparison (X180): corpus-total fertility of
-    * word-level BPE (X159 accounting), the unigram LM, and WordPiece
-    * under one metric — emitted tokens per whitespace word, permille.
-    * This is the production tokenizer decision the triad exists for;
-    * each family's chain is the SAME memoized artifact its own gated
-    * rows use (Caches.memo), so the comparison reuses — never
-    * retrains — the three models within an epoch. */
-  private def qTokenizerFamilies(s: SparkSession, d: String): DataFrame = {
-    val docs = spread(t(s, d, "documents"), "doc_id")
-    def tot(df: DataFrame, fam: String, words: String, toks: String): DataFrame =
-      df.agg(sum(col(words)).as("n_words"), sum(col(toks)).as("n_tokens"))
-        .select(lit(fam).as("family"), col("n_words"), col("n_tokens"))
-    tot(graft.text.Search.bpeApply(docs, "doc_id", "text", nMerges = 3),
-        "bpe", "n_tok_before", "n_tok_after")
-      .unionByName(tot(graft.text.Unigram.unigramApply(docs, "doc_id", "text"),
-        "unigram", "n_words", "n_pieces"))
-      .unionByName(tot(graft.text.WordPiece.wordpieceApply(docs, "doc_id", "text",
-          nMerges = 10),
-        "wordpiece", "n_words", "n_pieces"))
-      .withColumn("fertility_permille", expr("n_tokens * 1000 div n_words"))
-      .orderBy(col("family"))
-  }
-
-  private def qPhraseMining(s: SparkSession, d: String): DataFrame =
-    graft.text.Search.phraseMining(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text",
-      delta = 5, minCount = 10, topK = 20)
-
-  private def qContainment(s: SparkSession, d: String): DataFrame =
-    Dedup.containmentPairs(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text",
-      n = 3, tau = 0.8)
-      .orderBy(col("id_a"), col("id_b"))
-
-  private def qCosineTopK(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
-    Vectors.bruteForceTopK(emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding", 10)
-      .select(col("query_id"), col("match_id"), col("cosine"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  private def qAnnLsh(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
-    Vectors.lshTopK(emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding", 5)
-      .select(col("query_id"), col("match_id"), col("cosine"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Multi-probe variant (query bucket + Hamming-1 neighbors) of the
-    * sign-LSH top-k — higher recall at a bounded (bits+1)x candidate
-    * cost; same index layout. */
-  private def qAnnLshMp(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
-    Vectors.lshTopKMultiProbe(emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding", 5)
-      .select(col("query_id"), col("match_id"), col("cosine"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Radius-2 multi-probe at the AUTO width — the recall knob the
-    * SCALE_r16 recall study exposed, gated (r16 verdict item 2): at the
-    * bits ~ log2 n width rule candidate cost stays constant under corpus
-    * growth but per-neighbor co-bucket probability decays, so a recall
-    * TARGET grows the probe RADIUS on an unchanged index (radius 2
-    * recovered 2-3x recall at x10/x100, SCALE_r16 study 2). Probe set =
-    * 1 + C(w,1) + C(w,2) plan-time keys (11 at the gate corpora's 4-bit
-    * floor); index layout identical to q_ann_lsh / q_ann_lsh_mp. */
-  private def qAnnLshMpR2(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
-    Vectors.lshTopKMultiProbe(emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding", 5,
-      radius = 2)
-      .select(col("query_id"), col("match_id"), col("cosine"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** L = 4 independent LSH tables at the AUTO width — the OTHER end of
-    * the recall-vs-cost deploy trade (r17 verdict item 1, the one
-    * sanctioned row): where q_ann_lsh_mp_r2 widens the probe BALL on one
-    * index, this row adds axis-disjoint hash TABLES (Vectors
-    * .lshTopKMultiTable — table l hashes components [l*w, l*w + w)),
-    * candidates are the union of the query's bucket across all 4 banks,
-    * deduped per (query, match) pair before the shared bounded top-k.
-    * Table 0 is bit-identical to q_ann_lsh's bank, so the candidate set
-    * is a superset of the single-table row's and recall is structurally
-    * >= at equal width. Cost: x4 index rows + 4|bucket| candidates per
-    * query vs the ball's C(w,<=r) probe keys on x1 index — the L knob
-    * stays linear where the ball grows combinatorially past radius 3
-    * (Lv VLDB'07; SCALE_r17 study 4 measured 0.140/0.250/0.430 recall
-    * at L=1/2/4 on the gate corpus). 4 tables x 4 bits = 16 of the 64
-    * embedding components — inside the dimension budget at every SF. */
-  private def qAnnLshT4(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
-    Vectors.lshTopKMultiTable(emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding", 5,
-      tables = 4)
-      .select(col("query_id"), col("match_id"), col("cosine"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  private def qAnnIvf(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
-    Vectors.ivfTopK(emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding",
-      k = 5, nCentroids = 16, nProbe = 4)
-      .select(col("query_id"), col("match_id"), col("cosine"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** IVF with the TRAINED coarse quantizer (Vectors.trainCentroids — two
-    * deterministic Lloyd iterations of integer-mean spherical k-means,
-    * id-seeded init) feeding ivfTopKWith. The spec shows the trained
-    * quantizer beats the seed path on recall (1.00 vs 0.95 @10); this row
-    * puts the trained path itself under the oracle gate — every step
-    * (init, argmax assignment, truncating integer-mean update,
-    * empty-cluster carry-over) is mirrored in DuckDB SQL. */
-  private def qAnnIvfTrained(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
-    val cents = Vectors.trainCentroids(emb, "vec_id", "embedding", k = 8, iters = 2)
-    Vectors.ivfTopKWith(emb.filter(col("vec_id") < 5), emb, "vec_id", "embedding",
-      k = 5, nProbe = 4, cents = cents)
-      .select(col("query_id"), col("match_id"), col("cosine"), col("rank"))
-      .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** Approximate kNN graph over the embedding corpus
-    * (Vectors.knnGraph): bucket equi-self-join + bounded top-k — the
-    * input artifact of graph-based curation. */
-  private def qKnnGraph(s: SparkSession, d: String): DataFrame =
-    Vectors.knnGraph(t(s, d, "embeddings"), "vec_id", "embedding", k = 3)
-      .orderBy(col("src_id"), col("rank"))
-
-  /** Join-key skew diagnostics — the pre-flight a 100 TB join runs
-    * before picking salting/AQE strategy: per-key frequency histogram
-    * (ONE map-side-partial exchange), then the top-5 heavy hitters with
-    * corpus-level shape stats (key count, row count, max frequency,
-    * max/mean skew in milli). The summary is a one-row broadcast onto
-    * the 5-row heavy-hitter table; skew_milli divides by the INTEGER
-    * mean (n_rows div n_keys ≥ 1) so the numerator stays BIGINT-safe at
-    * any scale. */
-  private def qSkewReport(s: SparkSession, d: String): DataFrame = {
-    val c = t(s, d, "events").groupBy(col("user_id")).agg(count(lit(1)).as("c"))
-    val summary = c
-      .agg(count(lit(1)).as("n_keys"), sum(col("c")).as("n_rows"), max(col("c")).as("max_c"))
-      .select(col("n_keys"), col("n_rows"), col("max_c"),
-        expr("max_c * 1000 div (n_rows div n_keys)").as("skew_milli"))
-    c.orderBy(col("c").desc, col("user_id")).limit(5)
-      .crossJoin(broadcast(summary))
-      .select(col("user_id"), col("c").as("n_events"),
-        expr("c * 1000 div n_rows").as("share_permille"),
-        col("n_keys"), col("n_rows"), col("max_c"), col("skew_milli"))
-      .orderBy(col("n_events").desc, col("user_id"))
-  }
-
-  private def qEmbedNearDup(s: SparkSession, d: String): DataFrame =
-    Vectors.nearDupPairs(t(s, d, "embeddings"), "vec_id", "embedding",
-      threshold = 0.4)
-      .orderBy(col("id_a"), col("id_b"))
-
-  /** SemDeDup-style semantic dedup END-TO-END (Abbas et al. 2023,
-    * arXiv:2303.09540): embedding near-duplicate pairs (sign-LSH
-    * bucketed candidate generation — never the n² cross product) feed
-    * the distributed connected-components resolver, and every vector
-    * gets its semantic-cluster id plus the keep/drop decision
-    * (canonical = cluster minimum). This is the curation pass that
-    * removes paraphrases and re-encodings exact/minhash dedup cannot
-    * see. Pair volume is bucket-bounded, the CC loop shuffles only the
-    * near-dup VERTEX set (≪ corpus), and the final decision is one
-    * left join back to the corpus — each stage holds at 100 TB. */
-  private def qSemDedup(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
-    val pairs = Vectors.nearDupPairs(emb, "vec_id", "embedding",
-      threshold = 0.4)
-    val clusters = Dedup.connectedComponents(pairs)
-    emb.select(col("vec_id"))
-      .join(clusters, col("vec_id") === col("id"), "left")
-      .select(col("vec_id"),
-        coalesce(col("cluster_id"), col("vec_id")).as("cluster_id"))
-      .withColumn("keep", col("cluster_id") === col("vec_id"))
-      .orderBy(col("vec_id"))
-  }
-
-  // ------------------------- corpus-mixing / serving tier (round 7)
-
-  /** Per-domain corpus report (counts, token volume, languages, exact
-    * fixed-point mean quality) — one hash-aggregate over the scan. */
-  private def qDomainStats(s: SparkSession, d: String): DataFrame =
-    corpus.Mixing.domainStats(t(s, d, "documents"),
-        "source", "text", "lang", TextOps.Stopwords.toMap.apply("en"))
-      .orderBy(col("source"))
-
-  /** Per-domain Hellinger² divergence vs the corpus unigram distribution
-    * (Mixing.domainDivergence): the domain-shift signal for mix design —
-    * one (source, term) shuffle, re-aggregated totals, matched-terms-only
-    * join with the unmatched mass folded in closed form. */
-  private def qDomainDivergence(s: SparkSession, d: String): DataFrame =
-    corpus.Mixing.domainDivergence(t(s, d, "documents"), "source", "text")
-      .orderBy(col("source"))
-
-  /** Integer largest-remainder budget allocation across domains
-    * (Mixing.budgetAllocation): the mix PLANNING step — ⌊B·w⌋ base
-    * shares on ⌊√count⌋ integer weights plus one-each to the largest
-    * remainders; all-integer, so Σalloc = B exactly on both engines. */
-  private def qBudgetAlloc(s: SparkSession, d: String): DataFrame =
-    corpus.Mixing.budgetAllocation(t(s, d, "documents"), "source", budget = 12345L)
-      .orderBy(col("source"))
-
-  /** Epoch-aware data-constrained mix plan (X184 — see Mixing
-    * .epochMixPlan): greedy by per-epoch marginal value q_s·2^−(e−1)
-    * (mean fp6 quality per source, halving per repeat — Muennighoff et
-    * al. 2023), budget 60k tokens over ≤4 epochs of 20 sources; one
-    * corpus scan, model-sized everything after. Budget is the operand. */
-  private def qEpochMix(s: SparkSession, d: String): DataFrame = {
-    val en = TextOps.Stopwords.toMap.apply("en")
-    corpus.Mixing.epochMixPlan(t(s, d, "documents"), "source", "text",
-        en, budget = 60000L, maxEpochs = 4)
-      .orderBy(col("source"), col("epoch"))
-  }
-
-  /** Sqrt-temperature domain re-weighting (the LLM data-mixing sampler):
-    * deterministic md5-percentile keep decision against a broadcast
-    * per-domain weight table — the corpus never shuffles. */
-  private def qTemperatureSample(s: SparkSession, d: String): DataFrame =
-    corpus.Mixing.temperatureSample(t(s, d, "documents"),
-        "source", "doc_id", baseFrac = 0.5)
-      .select(col("doc_id"), col("source"))
-      .orderBy(col("doc_id"))
-
-  /** Token-budget sequence packing per (domain, shard): contiguous bins
-    * from a running window sum — the batch-assembly step before training
-    * shard writes. */
-  private def qPackSequences(s: SparkSession, d: String): DataFrame =
-    corpus.Mixing.packSequences(t(s, d, "documents"),
-        "source", "doc_id", "text", budget = 2048, nShards = 4)
-      .select(col("source"), col("shard"), col("doc_id"), col("n_tok"),
-        col("cum_tok"), col("bin"))
-      .orderBy(col("source"), col("shard"), col("doc_id"))
-
-  /** Weighted sampling without replacement (exponential clocks), weight
-    * = token count: the subsample where every TOKEN is equally likely to
-    * survive regardless of document chunking. One scan, zero shuffle —
-    * global selection is TakeOrderedAndProject. */
-  private def qWeightedSample(s: SparkSession, d: String): DataFrame =
-    corpus.Mixing.weightedSample(t(s, d, "documents"), "doc_id",
-        text.TextOps.tokenCount(col("text")), k = 50)
-      .orderBy(col("clock_fp9"), col("doc_id"))
-
-  /** Cross-domain quality calibration: per-source percent_rank of the
-    * fixed-point Gopher quality score, computed through the bounded
-    * score histogram (never a per-source window over the corpus) — one
-    * keep-threshold then means the same thing in every domain. */
-  private def qQualityCalibrated(s: SparkSession, d: String): DataFrame = {
-    val en = TextOps.Stopwords.toMap.apply("en")
-    corpus.Mixing.calibrateBySource(t(s, d, "documents"), "source", "doc_id",
-        round(TextOps.qualityScore(col("text"), en) * 1e6).cast("long"))
-      .orderBy(col("doc_id"))
-  }
-
-  /** Count-min sketch build + probe over event actor frequencies: the
-    * d×w counter table is the whole state (one map-combining exchange,
-    * fixed size at any corpus scale, merges by SUM), probes touch only
-    * the sketch. Estimates verified one-sided against the exact counts:
-    * n_est >= n_exact always, and equality where no bucket collision
-    * lands. */
-  private def qCmsFreq(s: SparkSession, d: String): DataFrame = {
-    val ev = t(s, d, "events")
-    val sk = ops.CountMin.build(ev, col("user_id"), depth = 4, width = 512)
-    val probes = ev.filter(col("user_id") <= 25).select(col("user_id")).distinct()
-    val exact = ev.filter(col("user_id") <= 25)
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n_exact"))
-    ops.CountMin.estimate(probes, col("user_id"), sk, depth = 4, width = 512)
-      .select(col("k").cast("long").as("user_id"), col("n_est"))
-      .join(exact, Seq("user_id"))
-      .select(col("user_id"), col("n_exact"), col("n_est"))
-      .orderBy(col("user_id"))
-  }
-
-  /** X230 — AUTO-SIZED count-min sketch (CountMin.widthFor: the r12
-    * knobs audit's documented-only width rule made executable): the
-    * X96 row fixes width=512 as the oracle-teaching shape; here the
-    * width derives from the corpus itself — w = clamp(⌈e·n/t⌉, 2048,
-    * 2²⁴) at target absolute error t = 50 over TOKEN occurrences (the
-    * heavy-tailed key space a 100 TB pipeline actually sketches), so a
-    * ×N corpus keeps ε·N ≈ t instead of degrading ×N. n is the exact
-    * token-occurrence count, memoized per epoch (Caches.memo — one
-    * column-pruned scan-aggregate; a deployment substitutes table
-    * stats, the rule being linear tolerates a few % either way). Every
-    * gate corpus lands on the floor (≈27 k occurrences → 2048 — static
-    * sketch geometry under the hash gate, the simhash64 precedent);
-    * the sf0.1 bench corpus (~271 k) derives ~14 731 and the ×10/×100
-    * studies scale it further. Probes = top-20 exact heavy tokens
-    * (TakeOrderedAndProject — bounded at any scale); readout keeps the
-    * one-sided contract visible (n_est ≥ n_exact always) plus the
-    * derived width as a column, so a wrong derivation hash-mismatches. */
-  private def qCmsAuto(s: SparkSession, d: String): DataFrame = {
-    val toks = t(s, d, "documents")
-      .select(explode(TextOps.tokens(col("text"))).as("tok"))
-    val n = graft.Caches.memo(
-      ("cms-auto-n", toks.queryExecution.logical.canonicalized)) {
-      toks.count()
-    }
-    val w = ops.CountMin.widthFor(n, targetAbsErr = 50)
-    val sk = ops.CountMin.build(toks, col("tok"), depth = 4, width = w)
-    val probes = toks.groupBy(col("tok")).agg(count(lit(1)).as("n_exact"))
-      .orderBy(col("n_exact").desc, col("tok")).limit(20)
-    ops.CountMin.estimate(probes.select(col("tok")), col("tok"), sk,
-        depth = 4, width = w)
-      .select(col("k").as("tok"), col("n_est"))
-      .join(probes, Seq("tok"))
-      .select(col("tok"), col("n_exact"), col("n_est"),
-        lit(w).as("width"))
-      .orderBy(col("tok"))
-  }
-
-  /** Per-label embedding centroids + pairwise inter-label cosine — the
-    * "domain map" of the embedded corpus (Vectors.groupCentroidCosines:
-    * one ArraySumFp hash-aggregate to #labels rows, truncating integer
-    * mean so products stay BIGINT-exact at any group size, pairwise
-    * cosine over the tiny centroid table). The gated output is the exact
-    * integer triple (dot_fp, norm_a_fp, norm_b_fp); the derived `cos`
-    * double stays out of the hash contract (round-9 portability lesson). */
-  private def qCentroidCosine(s: SparkSession, d: String): DataFrame =
-    Vectors.groupCentroidCosines(t(s, d, "embeddings"), "label", "embedding")
-      .drop("cos")
-      .orderBy(col("group_a"), col("group_b"))
-
-  /** Keep the BEST duplicate, not the first: near-dup clusters (shared
-    * simhash signature table) resolved to the member with the highest
-    * Gopher quality score — Dedup.clusterRepresentatives' packed-integer
-    * argmax (totally ordered, deterministic; never max_by's unspecified
-    * tie order). */
-  private def qDedupBest(s: SparkSession, d: String): DataFrame = {
-    val en = TextOps.Stopwords.toMap.apply("en")
-    val clusters = Dedup.simhashClusters(simhashShared(s, d), maxDist = 1)
-    val scored = t(s, d, "documents").select(col("doc_id"),
-      round(TextOps.qualityScore(col("text"), en) * 1e6).cast("long").as("q_fp6"))
-    Dedup.clusterRepresentatives(clusters, scored, "doc_id", "q_fp6")
-      .orderBy(col("cluster_id"))
-  }
-
-  /** Chunk-level dedup over CONTENT-DEFINED chunks (Dedup.cdcChunks —
-    * boundaries from local token hashes, so shared passages keep their
-    * chunk identity under insertions that would shift every fixed-size
-    * chunk): all chunk hashes occurring more than once across the
-    * corpus, with doc-frequency and occurrence counts. The chunker is
-    * in-row (zero exchange); the only shuffle is the final hash
-    * aggregate on chunk_hash. */
-  private def qCdcDedup(s: SparkSession, d: String): DataFrame =
-    Dedup.cdcChunks(t(s, d, "documents"), "doc_id", "text", avgTokens = 16)
-      .groupBy(col("chunk_hash"))
-      .agg(min(col("n_tok")).as("n_tok"),
-        countDistinct(col("doc_id")).as("n_docs"), count(lit(1)).as("n_occ"))
-      .filter(col("n_occ") > 1)
-      .orderBy(col("chunk_hash"))
-
-  /** EXACT heavy hitters at unbounded key cardinality — the two-pass
-    * Misra–Gries pattern: pass 1 reduces the token stream to an O(k)
-    * candidate sketch (guarantee: every key with freq > n/(k+1)
-    * survives; k=512 ≫ the 200 threshold divisor), pass 2 exact-counts
-    * ONLY candidate-matching rows via a broadcast semi-join — the full
-    * token key space is never shuffled, which is the entire point when
-    * distinct keys outnumber what one exchange can move. The output is
-    * the exact counts, so it is deterministic even though the sketch
-    * content is partitioning-dependent. */
-  private def qHeavyHitters(s: SparkSession, d: String): DataFrame = {
-    val toks = t(s, d, "documents")
-      .select(explode(TextOps.tokens(col("text"))).as("tok"))
-    val mg = toks.agg(MisraGries(col("tok"), 512).as("m"))
-      .select(col("m.n").as("n_tot"), explode(col("m.keys")).as("tok"))
-    toks.join(broadcast(mg), Seq("tok"))
-      .groupBy(col("tok"), col("n_tot"))
-      .agg(count(lit(1)).as("n_exact"))
-      .filter(col("n_exact") * 200L > col("n_tot"))
-      .select(col("tok"), col("n_exact"))
-      .orderBy(col("n_exact").desc, col("tok"))
-  }
-
-  /** N-gram novelty of the held-out split vs train
-    * (Dedup.ngramNovelty): per test doc, the fraction of its distinct
-    * 3-grams never seen in train — near-zero novelty means the test set
-    * is memorized training data. Split = the q_train_test_split
-    * md5-percent rule (pct ≥ 80 is held out). */
-  private def qNgramNovelty(s: SparkSession, d: String): DataFrame = {
-    val docs = spread(t(s, d, "documents"), "doc_id")
-    val pct = conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
-      .cast("long") % 100
-    Dedup.ngramNovelty(docs.filter(pct >= 80), docs.filter(pct < 80),
-        "doc_id", "text", n = 3)
-      .orderBy(col("doc_id"))
-  }
-
-  /** ZIPF rank-frequency SLOPE — the vocabulary-health diagnostic
-    * (natural corpora fit slope ≈ −1; a slope collapsing toward 0 means
-    * boilerplate/dedup failure upstream, a cliff past −2 means a
-    * degenerate generator): OLS of ln(freq) on ln(rank) over the vocab
-    * table. Numeric discipline: logs fixed-pointed at 1e3, the six SUMS
-    * exact BIGINTs (Σx·y ≤ V·5.9e8 holds to V ≈ 1.5e10 distinct tokens),
-    * and the FINALE — n·Σxy − Σx·Σy and friends — computed in DOUBLE:
-    * the integer form wraps BIGINT silently around V ≈ 10⁶ (n·sxy ≈
-    * V²·6e8 > 2⁶³), exactly the vocab size a real corpus hits. Each
-    * sum→double cast and product is one correctly-rounded IEEE op in a
-    * fixed order, so both engines still agree bit-for-bit at any V. The
-    * rank window runs over the VOCAB table (model-sized, the
-    * q_vocab_build precedent), never the corpus. */
-  private def qZipfSlope(s: SparkSession, d: String): DataFrame = {
-    def lnFp3(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      round(log(c.cast("double")) * 1e3).cast("long")
-    val vocab = t(s, d, "documents")
-      .select(explode(TextOps.tokens(col("text"))).as("tok"))
-      .groupBy(col("tok")).agg(count(lit(1)).as("freq"))
-    val xy = vocab
-      .withColumn("rank",
-        row_number().over(Window.orderBy(col("freq").desc, col("tok").asc))
-          .cast("long"))
-      .select(lnFp3(col("rank")).as("x"), lnFp3(col("freq")).as("y"))
-    val agg = xy.agg(count(lit(1)).as("n"), sum(col("x")).as("sx"),
-      sum(col("y")).as("sy"), sum(col("x") * col("y")).as("sxy"),
-      sum(col("x") * col("x")).as("sxx"), sum(col("y") * col("y")).as("syy"))
-    def dbl(name: String) = col(name).cast("double")
-    val dn = dbl("n") * dbl("sxy") - dbl("sx") * dbl("sy")
-    val dd = dbl("n") * dbl("sxx") - dbl("sx") * dbl("sx")
-    val de = dbl("n") * dbl("syy") - dbl("sy") * dbl("sy")
-    agg.select(col("n"),
-      round(dn / dd * 1e6).cast("long").as("slope_fp6"),
-      round(dn * dn / (dd * de) * 1e3).cast("long").as("r2_permille"))
-  }
-
-  /** TRAIN/TEST SPLIT LEAKAGE audit — near-dup pairs that STRADDLE the
-    * deterministic split: the eval-contamination failure mode a plain
-    * per-doc split cannot see (a test doc whose near-copy sits in train
-    * inflates every benchmark number). Pairs come off the shared
-    * persisted simhash signature table (no new corpus scan); the split
-    * side is the same md5-percent rule as q_train_test_split; the two
-    * side lookups are broadcast joins of the (doc_id, side) projection.
-    * Clean pipelines return ZERO rows — the audit's pass state. */
-  private def qSplitLeakage(s: SparkSession, d: String): DataFrame = {
-    val pairs = Dedup.simhashNearDupPairsFromSigs(simhashShared(s, d), maxDist = 2)
-    val pct = conv(substring(md5(col("doc_id").cast("string")), 1, 15), 16, 10)
-      .cast("long") % 100
-    val side = when(pct < 80, "train").when(pct < 90, "valid").otherwise("test")
-    val sides = t(s, d, "documents").select(col("doc_id"), side.as("side"))
-    pairs
-      .join(broadcast(sides.select(col("doc_id").as("id_a"), col("side").as("side_a"))),
-        Seq("id_a"))
-      .join(broadcast(sides.select(col("doc_id").as("id_b"), col("side").as("side_b"))),
-        Seq("id_b"))
-      .filter(col("side_a") =!= col("side_b"))
-      .select(col("id_a"), col("id_b"), col("side_a"), col("side_b"),
-        col("hamming"))
-      .orderBy(col("id_a"), col("id_b"))
-  }
-
-  /** PRECISION/RECALL operating-point sweep of the linear quality
-    * classifier against the Gopher composite filter as truth — how a
-    * keep-threshold is actually chosen before deploying the cheap
-    * classifier in place of the full rule set. Ten thresholds, exact
-    * integer TP/FP/FN per threshold, precision/recall in integer
-    * permille. ONE corpus scan: the 10-row threshold table broadcasts
-    * into a cross join and map-side partials collapse to 10 rows per
-    * partition before the only exchange. */
-  private def qQualityPr(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val en = TextOps.Stopwords.toMap.apply("en")
-    val txt = col("text")
-    val scored = t(s, d, "documents")
-      .select(col("doc_id"), txt.as("text"),
-        TextOps.tokenCount(txt).cast("long").as("n_tok"),
-        TextOps.vocabHits(txt, en).cast("long").as("n_stop"),
-        length(regexp_replace(txt, " ", "")).cast("long").as("n_cns"))
-      .withColumn("mean_tok_len_milli", expr("n_cns * 1000 div n_tok"))
-      .withColumn("margin", lit(-30000L) + lit(400L) * col("n_tok")
-        + lit(2000L) * col("n_stop") - col("mean_tok_len_milli"))
-      .withColumn("truth", TextOps.gopherReason(col("text"), en).isNull)
-      .select(col("margin"), col("truth"))
-    val th = (-20000L to 25000L by 5000L).toDF("thr")
-    scored.crossJoin(broadcast(th))
-      .groupBy(col("thr"))
-      .agg(
-        sum(when(col("margin") >= col("thr") && col("truth"), 1L)
-          .otherwise(0L)).as("n_tp"),
-        sum(when(col("margin") >= col("thr") && !col("truth"), 1L)
-          .otherwise(0L)).as("n_fp"),
-        sum(when(col("margin") < col("thr") && col("truth"), 1L)
-          .otherwise(0L)).as("n_fn"))
-      .withColumn("precision_permille",
-        expr("CASE WHEN n_tp + n_fp > 0 THEN n_tp * 1000 div (n_tp + n_fp) END"))
-      .withColumn("recall_permille",
-        expr("CASE WHEN n_tp + n_fn > 0 THEN n_tp * 1000 div (n_tp + n_fn) END"))
-      .orderBy(col("thr"))
-  }
-
-  /** HEAPS'-LAW vocabulary-growth curve (TextOps.vocabGrowth): distinct
-    * vocab vs cumulative corpus size at ten doc-id checkpoints — the
-    * companion corpus-health diagnostic to the Zipf slope (early
-    * flattening = templated corpus, near-linear = ID/noise flood). One
-    * O(V) exchange; the 10-row checkpoint table broadcasts. */
-  private def qVocabGrowth(s: SparkSession, d: String): DataFrame =
-    TextOps.vocabGrowth(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text",
-        nCheckpoints = 10)
-      .orderBy(col("cp_idx"))
-
-  /** Near-dup CLUSTER-SIZE histogram — the dedup report card: how much
-    * of the corpus sits in how-large duplicate families (mass in big
-    * clusters = mirror/template blowup; the singleton row is the clean
-    * remainder). Sizes come off the same shared persisted signature
-    * table as every simhash consumer; the histogram is two tiny
-    * aggregations over the O(clustered-docs) cluster table, and the
-    * singleton count is total − clustered from two one-row aggregates
-    * (never a corpus anti-join). */
-  private def qClusterSizes(s: SparkSession, d: String): DataFrame = {
-    val clusters = Dedup.simhashClusters(simhashShared(s, d), maxDist = 1)
-    val hist = clusters.groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("size"))
-      .groupBy(col("size")).agg(count(lit(1)).as("n_clusters"))
-      .select(col("size"), col("n_clusters"),
-        (col("size") * col("n_clusters")).as("n_docs"))
-    val singletons = t(s, d, "documents").agg(count(lit(1)).as("n_total"))
-      .crossJoin(clusters.agg(count(lit(1)).as("n_clustered")))
-      .select(lit(1L).as("size"),
-        (col("n_total") - col("n_clustered")).as("n_clusters"),
-        (col("n_total") - col("n_clustered")).as("n_docs"))
-    hist.unionByName(singletons).orderBy(col("size"))
-  }
-
-  /** CROSS-SOURCE near-dup overlap matrix — which sources copy which:
-    * the mirror-site/content-farm detector that decides whether a
-    * whole source gets down-weighted before training (the per-PAIR
-    * form of what q_domain_rank aggregates per domain). Pairs ride the
-    * shared simhash signature table. The pair side is usually the
-    * small side of both source lookups but is NOT hard-broadcast: pair
-    * volume is quadratic in cluster size, and the mirror-heavy corpus
-    * this query exists to detect is exactly where it outgrows the
-    * driver — AQE size-gates the join off the ACTUAL post-shuffle
-    * bytes instead (the unigramScore/sizeGated reasoning), degrading
-    * to a shuffle join rather than an OOM. The canonical
-    * least/greatest fold makes the matrix undirected. */
-  private def qSourceOverlap(s: SparkSession, d: String): DataFrame = {
-    val pairs = Dedup.simhashNearDupPairsFromSigs(simhashShared(s, d), maxDist = 2)
-    val src = t(s, d, "documents").select(col("doc_id"), col("source"))
-    src.select(col("doc_id").as("id_a"), col("source").as("src_a"))
-      .join(pairs, Seq("id_a"))
-      .join(src.select(col("doc_id").as("id_b"), col("source").as("src_b")),
-        Seq("id_b"))
-      .select(least(col("src_a"), col("src_b")).as("source_a"),
-        greatest(col("src_a"), col("src_b")).as("source_b"))
-      .groupBy(col("source_a"), col("source_b"))
-      .agg(count(lit(1)).as("n_pairs"))
-      .orderBy(col("source_a"), col("source_b"))
-  }
-
-  /** Per-label embedding DISPERSION sufficient statistics
-    * (Vectors.labelScatterStats): exact integer (n, Σq, Σq²) per
-    * (label, dim) over fp3-quantized components — the intra-class
-    * scatter audit behind SemDeDup-style pruning and label-noise
-    * triage; variance/trace are derived display values outside the
-    * hash gate. One aggregate to #labels rows; posexplode runs after
-    * aggregation. */
-  private def qEmbedDispersion(s: SparkSession, d: String): DataFrame =
-    Vectors.labelScatterStats(t(s, d, "embeddings"), "label", "embedding")
-      .orderBy(col("label"), col("dim"))
-
-  /** TOKENIZER FERTILITY per language — tokens-per-word and
-    * tokens-per-char of the trained BPE (3 merges) by language bucket:
-    * the tokenizer-fairness diagnostic (a language whose fertility runs
-    * hot pays more sequence length per sentence and trains/serves
-    * worse). Reuses the guarded-string BPE train+apply chain; the
-    * per-doc counts join back to the corpus on doc_id (co-partitioned
-    * equi-join) and collapse to #languages rows. Ratios are integer
-    * permille via truncating div — exact in both engines. */
-  private def qTokenFertility(s: SparkSession, d: String): DataFrame = {
-    val docs = spread(t(s, d, "documents"), "doc_id")
-    val applied = graft.text.Search.bpeApply(docs, "doc_id", "text", nMerges = 3)
-      .withColumnRenamed("id", "doc_id")
-    applied
-      .join(t(s, d, "documents")
-        .select(col("doc_id"), col("lang"),
-          length(col("text")).cast("long").as("n_chars")), Seq("doc_id"))
-      .groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("n_chars"),
-        sum(col("n_tok_before")).as("n_tok_word"),
-        sum(col("n_tok_after")).as("n_tok_bpe"))
-      .withColumn("fertility_permille",
-        expr("n_tok_bpe * 1000 div n_tok_word"))
-      .withColumn("chars_per_bpe_permille",
-        expr("n_chars * 1000 div n_tok_bpe"))
-      .orderBy(col("lang"))
-  }
-
-  /** Incremental CDC-chunk admission (Dedup.incrementalCdcAdmit): the
-    * day's batch (doc_id%10==0) chunked in-row and screened against the
-    * standing corpus's chunk-hash store — admit on ≥500‰ novel chunks.
-    * The store streams through one scan with the batch broadcast; a
-    * shifted near-copy of an old page keeps its old chunks' identities
-    * and is rejected without any exact-fingerprint match. */
-  private def qIncrementalCdc(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents")
-    val standing = docs.filter(pmod(col("doc_id"), lit(10L)) =!= 0)
-    val batch = docs.filter(pmod(col("doc_id"), lit(10L)) === 0)
-    val store = Dedup.cdcChunks(standing, "doc_id", "text", avgTokens = 16)
-      .select(col("chunk_hash"))
-    Dedup.incrementalCdcAdmit(batch, store, "doc_id", "text",
-        avgTokens = 16, admitPermille = 500)
-      .orderBy(col("doc_id"))
-  }
-
-  /** ANN RECALL evaluation — recall@10 of the sign-LSH retriever
-    * against brute-force truth, per query, in integer permille: the
-    * acceptance gate every approximate index must pass before it
-    * replaces exact scoring in production. Both retrievers are
-    * deterministic (total (cosine DESC, id) order), so the overlap
-    * count is engine-exact; the eval tables are O(queries·k) rows. */
-  private def qAnnRecall(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
-    val qs = emb.filter(col("vec_id") < 5)
-    val bf = Vectors.bruteForceTopK(qs, emb, "vec_id", "embedding", 10)
-      .select(col("query_id"), col("match_id"))
-    val lsh = Vectors.lshTopK(qs, emb, "vec_id", "embedding", 10)
-      .select(col("query_id"), col("match_id"))
-    val nBf = bf.groupBy(col("query_id")).agg(count(lit(1)).as("n_bf"))
-    val hits = bf.join(lsh, Seq("query_id", "match_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-    nBf.join(hits, Seq("query_id"), "left")
-      .select(col("query_id"), col("n_bf"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-      .withColumn("recall_permille", expr("n_hit * 1000 div n_bf"))
-      .orderBy(col("query_id"))
-  }
-
-  /** IVF recall gate (X221): recall@10 of the seeded IVF index
-    * (nProbe=4 of 16 lists) against brute-force truth for the probe
-    * queries — the q_ann_recall discipline applied to the second index
-    * family, guarding the nProbe/nCentroids knobs the way the LSH row
-    * guards auto-bits. Truth and index candidates are both bounded
-    * top-k aggregates; the compare is a left-semi on (query, match). */
-  private def qIvfRecall(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
-    val qs = emb.filter(col("vec_id") < 5)
-    val bf = Vectors.bruteForceTopK(qs, emb, "vec_id", "embedding", 10)
-      .select(col("query_id"), col("match_id"))
-    val ivf = Vectors.ivfTopK(qs, emb, "vec_id", "embedding",
-        k = 10, nCentroids = 16, nProbe = 4)
-      .select(col("query_id"), col("match_id"))
-    val nBf = bf.groupBy(col("query_id")).agg(count(lit(1)).as("n_bf"))
-    val hits = bf.join(ivf, Seq("query_id", "match_id"), "left_semi")
-      .groupBy(col("query_id")).agg(count(lit(1)).as("n_hit"))
-    nBf.join(hits, Seq("query_id"), "left")
-      .select(col("query_id"), col("n_bf"),
-        coalesce(col("n_hit"), lit(0L)).as("n_hit"))
-      .withColumn("recall_permille", expr("n_hit * 1000 div n_bf"))
-      .orderBy(col("query_id"))
-  }
-
-  /** Rademacher (JL) random projection of the embedding store to 16
-    * dims (Vectors.rademacherProject): compile-time ±1 sign literals,
-    * one codegen DotProductFp per output dim, zero exchange. */
-  private def qRandomProjection(s: SparkSession, d: String): DataFrame =
-    Vectors.rademacherProject(t(s, d, "embeddings"), "vec_id", "embedding",
-        inDim = 64, outDim = 16)
-      .orderBy(col("vec_id"), col("out_dim"))
-
-  /** Per-doc character-histogram quality stats (TextOps.charEntropyFp9):
-    * the gibberish/low-diversity filter, fully in-row (sort + run-length,
-    * zero exchange before the output ordering). The gated output is the
-    * exact integer sufficient statistics (n_chars, n_uniq, md5 histogram
-    * checksum); the fixed-point entropy h_fp9 itself is a derived display
-    * value kept out of the hash gate — libm ln is not cross-engine
-    * portable (round-9 lesson). */
-  private def qCharEntropy(s: SparkSession, d: String): DataFrame =
-    TextOps.charEntropyFp9(t(s, d, "documents"), "doc_id", "text")
-      .drop("h_fp9")
-      .orderBy(col("doc_id"))
-
-  /** SCD1 MERGE: the pre-1997 latest-order-per-customer snapshot upserted
-    * with the 1997+ orders, updates winning per customer. */
-  private def qUpsert(s: SparkSession, d: String): DataFrame = {
-    val o = t(s, d, "orders").select(col("o_custkey"), col("o_orderkey"),
-      col("o_orderdate"), Relational.cents(col("o_totalprice")).as("price_cents"))
-    val cut = to_timestamp(lit("1997-01-01"))
-    val keyOrder = Seq(col("o_orderdate").desc, col("o_orderkey").desc)
-    val base = Relational.latestPerKey(
-      o.filter(col("o_orderdate") < cut), Seq("o_custkey"), keyOrder)
-    Relational.upsert(base, o.filter(col("o_orderdate") >= cut),
-        Seq("o_custkey"), keyOrder)
-      .orderBy(col("o_custkey"))
-  }
-
-  /** Int8 scalar quantization of the embedding store, exploded to
-    * (vec_id, pos, code) for the exact compare. */
-  private def qQuantizeEmbed(s: SparkSession, d: String): DataFrame =
-    Vectors.quantizeInt8(t(s, d, "embeddings"), "vec_id", "embedding")
-      .select(col("id").as("vec_id"), posexplode(col("codes")),
-        col("q_min"), col("q_max"))
-      .withColumnRenamed("col", "code")
-      .orderBy(col("vec_id"), col("pos"))
-
-  /** SCD2 historization of the order log: per customer, each order is
-    * valid until the next one (valid_to NULL = current). */
-  private def qScd2(s: SparkSession, d: String): DataFrame =
-    Relational.historize(
-      t(s, d, "orders").select(col("o_custkey"), col("o_orderkey"),
-        col("o_orderdate").as("valid_from"),
-        Relational.cents(col("o_totalprice")).as("price_cents")),
-      Seq("o_custkey"), "valid_from", col("o_orderkey"))
-      .orderBy(col("o_custkey"), col("valid_from"), col("o_orderkey"))
-
-  /** Hourly resample of the event stream per user with forward-filled
-    * hour totals across gaps. */
-  private def qResampleFfill(s: SparkSession, d: String): DataFrame = {
-    val e = t(s, d, "events")
-      .select(col("user_id"), expr("ts div 1000").as("us"),
-        round(col("value") * 100).cast("long").as("cents"))
-    Relational.resampleHourlyFfill(e, "user_id", "us", col("cents"))
-      .orderBy(col("user_id"), col("h"))
-  }
-
-  /** Percentile winsorization (clip at p1/p99) of the price column —
-    * two-pass: 1-row exact-percentile stats broadcast back over the
-    * scan. */
-  private def qWinsorize(s: SparkSession, d: String): DataFrame = {
-    val base = t(s, d, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
-      Relational.cents(col("l_extendedprice")).as("price_cents"))
-    val stats = base.agg(
-      expr("percentile(price_cents, 0.01)").as("p_lo"),
-      expr("percentile(price_cents, 0.99)").as("p_hi"))
-    base.crossJoin(broadcast(stats))
-      .select(col("l_orderkey"), col("l_linenumber"), col("price_cents"),
-        when(col("price_cents") < col("p_lo"), col("p_lo"))
-          .when(col("price_cents") > col("p_hi"), col("p_hi"))
-          .otherwise(col("price_cents").cast("double")).as("clipped"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
-  }
-
-  /** DSIR-style importance selection (X160 — see corpus.Mixing
-    * .dsirWeights): hashed-bigram feature contrast of the src0 target
-    * slice against the raw corpus, top-40 selected. 64 feature buckets
-    * puts multiple bigram types in every bucket at sf0.01 (the hashing
-    * regime the estimator actually runs in). */
-  private def qDsirWeights(s: SparkSession, d: String): DataFrame =
-    graft.corpus.Mixing.dsirWeights(spread(t(s, d, "documents"), "doc_id"),
-        "doc_id", "text", targetPred = col("source") === "src0",
-        nBuckets = 64, topK = 40)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
-
-  /** CCNet-style per-language head/middle/tail LM buckets (X161 — see
-    * text.Search.lmBuckets): value-tertile boundaries off the score
-    * histogram, never a per-language window. */
-  private def qLmBucket(s: SparkSession, d: String): DataFrame =
-    graft.text.Search.lmBuckets(spread(t(s, d, "documents"), "doc_id"),
-        "doc_id", "text", "lang")
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
-
-  /** MMR diversified rerank (X162 — see similarity.Vectors.mmrRerank):
-    * top-8 cosine pool for query vector 42, greedy λ=0.5 selection of
-    * 4; hashed contract is integer-only (rank, id, rel dot, norm). */
-  private def qMmrRerank(s: SparkSession, d: String): DataFrame =
-    Vectors.mmrRerank(t(s, d, "embeddings"), "vec_id", "embedding",
-        queryId = 42L, poolK = 8, k = 4)
-      .orderBy(col("mmr_rank"))
-
-  /** kNN-graph triangle census (X163 — see ops.Graphs.triangleCounts):
-    * local clustering of the q_knn_graph edge set (k=3, data-sized
-    * sign-LSH candidates — Vectors.bitsFor), per-vertex degree + exact
-    * triangle count. */
-  private def qKnnTriangles(s: SparkSession, d: String): DataFrame =
-    graft.ops.Graphs.triangleCounts(
-        Vectors.knnGraph(t(s, d, "embeddings"), "vec_id", "embedding",
-          k = 3),
-        "src_id", "dst_id")
-      .withColumnRenamed("v", "vec_id")
-      .orderBy(col("vec_id"))
-
-  /** Contrastive triplet mining (X166 — see
-    * similarity.Vectors.contrastiveTriplets): anchors vec_id < 5,
-    * data-sized sign-LSH candidates, positive = in-bucket top-1, hard
-    * negatives = top-3 below cosine 0.9. */
-  private def qHardNegatives(s: SparkSession, d: String): DataFrame =
-    Vectors.contrastiveTriplets(t(s, d, "embeddings"), "vec_id", "embedding",
-        anchorPred = col("vec_id") < 5, posMax = 0.9, k = 3)
-      .orderBy(col("anchor_id"), col("role"), col("rank"))
-
-  /** kNN-graph LABEL PROPAGATION (X181 — ops.Graphs.labelPropagation):
-    * sparse seeds (vec_id % 17 == 0, ~6% of the store) hard-majority
-    * propagate over the auto-bits k=3 kNN graph for 2 unrolled rounds —
-    * the annotate-a-sliver, propagate-the-rest labeling pass of a
-    * large-corpus curation pipeline. Output: every vector's propagated
-    * label + the round it was reached (−1 = unreached). */
-  private def qLabelProp(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
-    graft.ops.Graphs.labelPropagation(
-        emb.select(col("vec_id").as("id"), col("label"),
-          (col("vec_id") % 17 === 0).as("is_seed")),
-        Vectors.knnGraph(emb, "vec_id", "embedding", k = 3),
-        "src_id", "dst_id", rounds = 2)
-      .withColumnRenamed("id", "vec_id")
-      .orderBy(col("vec_id"))
-  }
-
-  /** kNN-graph K-CORE PEEL (X182 — ops.Graphs.kcorePeel): 3 unrolled
-    * peel rounds at k=4 over the undirected auto-bits k=3 kNN graph —
-    * the density filter separating dense semantic clusters (the core)
-    * from the outlier fringe a corpus selector down-weights; peel_round
-    * is the coreness proxy. Vertices = every embedding id (nn=0 rows
-    * are isolated and peel in round 1 with degree 0). */
-  private def qKcore(s: SparkSession, d: String): DataFrame = {
-    val emb = t(s, d, "embeddings")
-    graft.ops.Graphs.kcorePeel(
-        emb.select(col("vec_id").as("id")),
-        Vectors.knnGraph(emb, "vec_id", "embedding", k = 3),
-        "src_id", "dst_id", k = 4, rounds = 3)
-      .withColumnRenamed("id", "vec_id")
-      .orderBy(col("vec_id"))
-  }
-
-  /** Span-corruption mask plan (X167 — see TextOps.spanCorruptionPlan):
-    * T5-style deterministic corruption spans, start rate 1/20, lengths
-    * 1..5, overlap-merged accounting per document. */
-  private def qSpanCorruption(s: SparkSession, d: String): DataFrame =
-    TextOps.spanCorruptionPlan(spread(t(s, d, "documents"), "doc_id"),
-        "doc_id", "text", startMod = 20, maxLen = 5)
-      .withColumnRenamed("id", "doc_id")
-      .orderBy(col("doc_id"))
-
-  /** Tokenizer vocabulary coverage per language (X168 — see
-    * text.Search.vocabCoverage): OOV permille against the top-32
-    * frequency vocab. */
-  private def qVocabCoverage(s: SparkSession, d: String): DataFrame =
-    graft.text.Search.vocabCoverage(spread(t(s, d, "documents"), "doc_id"),
-        "doc_id", "text", "lang", vocabSize = 32)
-      .orderBy(col("lang"))
-
-  /** Packing-efficiency report (X169 — see corpus.Mixing
-    * .packingEfficiency): per-(source, shard, bin) fill accounting over
-    * the q_pack_sequences layout, last bin flagged. */
-  private def qPackEfficiency(s: SparkSession, d: String): DataFrame =
-    corpus.Mixing.packingEfficiency(t(s, d, "documents"),
-        "source", "doc_id", "text", budget = 2048, nShards = 4)
-      .orderBy(col("source"), col("shard"), col("bin"))
-
-  /** Cross-dimension covariance sufficient statistics (X170 — see
-    * similarity.Vectors.covarianceStats): exact-integer (n, Σqᵢ, Σqⱼ,
-    * Σqᵢqⱼ) per dimension pair i ≤ j off ONE OuterProductSumFp pass;
-    * covariance/whitening matrices are derived display values. */
-  private def qEmbedCovariance(s: SparkSession, d: String): DataFrame =
-    Vectors.covarianceStats(spread(t(s, d, "embeddings"), "vec_id"), "embedding")
-
-  /** Dominant covariance eigenvector by integer-renormalized power
-    * iteration (X176 — Vectors.pcaPower): one OuterProductSumFp corpus
-    * pass, O(d²) driver collect, 8 exact-BigInt iterations; plus the
-    * explained-variance share. */
-  private def qPcaPower(s: SparkSession, d: String): DataFrame =
-    Vectors.pcaPower(spread(t(s, d, "embeddings"), "vec_id"), "embedding")
-      .orderBy(col("dim"))
-
-  /** Centered PC1 projection of the whole store (X177 —
-    * Vectors.pcaProject): one narrow scan dotting against the
-    * broadcast-literal direction; shares the memoized covariance
-    * collect with q_pca_power. */
-  private def qPcaProject(s: SparkSession, d: String): DataFrame =
-    Vectors.pcaProject(spread(t(s, d, "embeddings"), "vec_id"), "vec_id", "embedding")
-
-  /** Filter-chain attrition funnel (X171 — see text.TextOps
-    * .filterFunnel): five fixed-order cleaning stages, docs charged to
-    * the FIRST stage that drops them, cumulative keep rate in integer
-    * permille — one scan, one one-row aggregate, in-row unpack.
-    * Thresholds sized so every stage removes documents at sf0.01. */
-  private def qFilterFunnel(s: SparkSession, d: String): DataFrame =
-    TextOps.filterFunnel(t(s, d, "documents"), "text", "n_chars", "lang",
-      minTokens = 15, maxChars = 450, cptLo = 4800, cptHi = 6100,
-      allowedLangs = Seq("en", "es", "de", "fr"), blockTerm = "dup")
-
-  /** Character-class mix per language (X172 — see text.TextOps
-    * .scriptMix): the script-detection proxy; classes deliberately
-    * include an overlapping probe (vowels ⊂ letters) and an empty class
-    * (digits — the corpus has none) so both branches are under the
-    * gate. */
-  private def qScriptMix(s: SparkSession, d: String): DataFrame =
-    TextOps.scriptMix(t(s, d, "documents"), "text", "lang", Seq(
-      "letters" -> "[a-z]",
-      "vowels" -> "[aeiou]",
-      "digits" -> "[0-9]",
-      "spaces" -> " "))
-
-  /** Source-concentration report (X173 — see corpus.Mixing
-    * .sourceBalance): one-row max-share / effective-source-count /
-    * Gini summary in integer permille, DECIMAL(38,0)-promoted so N²
-    * never wraps. */
-  private def qSourceBalance(s: SparkSession, d: String): DataFrame =
-    corpus.Mixing.sourceBalance(t(s, d, "documents"), "source")
-
-  /** One-row corpus dataset card (X164): the header block of a
-    * datasheet — volumes, diversity counts, and the exact-dup rate —
-    * each an O(1)-output aggregate over one documents scan (the
-    * fingerprint distinct is the only exchange). */
-  private def qDatasetCard(s: SparkSession, d: String): DataFrame = {
-    val docs = t(s, d, "documents")
-    docs.select(col("doc_id"), col("lang"), col("source"),
-        col("n_chars"), TextOps.tokenCount(col("text")).cast("long").as("n_tok"),
-        TextOps.fingerprint(col("text")).as("fp"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(col("n_tok")).as("n_tokens"),
-        sum(col("n_chars")).as("n_chars"),
-        countDistinct(col("lang")).as("n_langs"),
-        countDistinct(col("source")).as("n_sources"),
-        countDistinct(col("fp")).as("n_distinct_fp"))
-      .select(col("n_docs"), col("n_tokens"), col("n_chars"),
-        col("n_langs"), col("n_sources"), col("n_distinct_fp"),
-        expr("(1000 * (n_docs - n_distinct_fp)) div n_docs").as("dup_permille"))
-  }
-
-  // ------------------------------------------------------------ registry
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_dsir_weights" -> (qDsirWeights _),
-    "q_stream_quality" -> (qStreamQuality _),
-    "q_hard_negatives" -> (qHardNegatives _),
-    "q_span_corruption" -> (qSpanCorruption _),
-    "q_vocab_coverage" -> (qVocabCoverage _),
-    "q_pack_efficiency" -> (qPackEfficiency _),
-    "q_lm_bucket" -> (qLmBucket _),
-    "q_mmr_rerank" -> (qMmrRerank _),
-    "q_knn_triangles" -> (qKnnTriangles _),
-    "q_dataset_card" -> (qDatasetCard _),
-    "q_embed_covariance" -> (qEmbedCovariance _),
-    "q_pca_power" -> (qPcaPower _),
-    "q_pca_project" -> (qPcaProject _),
-    "q_filter_funnel" -> (qFilterFunnel _),
-    "q_script_mix" -> (qScriptMix _),
-    "q_source_balance" -> (qSourceBalance _),
-    "q_scan" -> (qScan _),
-    "q_project" -> (qProject _),
-    "q_filter_null" -> (qFilterNull _),
-    "q_filter_range" -> (qFilterRange _),
-    "q_string_norm" -> (qStringNorm _),
-    "q_case_ilike" -> (qCaseIlike _),
-    "q_case_bands" -> (qCaseBands _),
-    "q_date_trunc" -> (qDateTrunc _),
-    "q_date_part" -> (qDatePart _),
-    "q_surrogate_key" -> (qSurrogateKey _),
-    "q_distinct" -> (qDistinct _),
-    "q_groupby_minmaxcount" -> (qGroupbyMinMaxCount _),
-    "q_count_distinct" -> (qCountDistinct _),
-    "q_having" -> (qHaving _),
-    "q_percentiles" -> (qPercentiles _),
-    "q_rollup" -> (qRollup _),
-    "q_pivot" -> (qPivot _),
-    "q_approx_count_distinct" -> (qApproxCountDistinct _),
-    "q_union" -> (qUnion _),
-    "q_intersect" -> (qIntersect _),
-    "q_except" -> (qExcept _),
-    "q_cube" -> (qCube _),
-    "q_join_fact_dim" -> (qJoinFactDim _),
-    "q_semi_join" -> (qSemiJoin _),
-    "q_outer_join" -> (qOuterJoin _),
-    "q_salted_join" -> (qSaltedJoin _),
-    "q_window_range" -> (qWindowRange _),
-    "q_topk" -> (qTopK _),
-    "q_window_rank" -> (qWindowRank _),
-    "q_topk_per_key" -> (qTopkPerKey _),
-    "q_window_running" -> (qWindowRunning _),
-    "q_window_lag" -> (qWindowLag _),
-    "q_anti_accepted_values" -> (qAntiAcceptedValues _),
-    "q_json_extract" -> (qJsonExtract _),
-    "q_json_serialize" -> (qJsonSerialize _),
-    "q_monthly_revenue" -> (qMonthlyRevenue _),
-    "q_partition_prune" -> (qPartitionPrune _),
-    "q_dpp_scan" -> (qDppScan _),
-    "q_bloom_join" -> (qBloomJoin _),
-    "q_range_join" -> (qRangeJoin _),
-    "q_asof_join" -> (qAsofJoin _),
-    "q_sessionize" -> (qSessionize _),
-    "q_funnel_steps" -> (qFunnelSteps _),
-    "q_cohort_retention" -> (qCohortRetention _),
-    "q_rfm_segments" -> (qRfmSegments _),
-    "q_event_transitions" -> (qEventTransitions _),
-    "q_attribution" -> (qAttribution _),
-    "q_stickiness" -> (qStickiness _),
-    "q_embedding_drift" -> (qEmbeddingDrift _),
-    "q_pricing_summary" -> (qPricingSummary _),
-    "q_shipping_priority" -> (qShippingPriority _),
-    "q_big_orders" -> (qBigOrders _),
-    "q_region_revenue" -> (qRegionRevenue _),
-    "q_benford" -> (qBenford _),
-    "q_readability" -> (qReadability _),
-    "q_rake_keywords" -> (qRakeKeywords _),
-    "q_common_neighbors" -> (qCommonNeighbors _),
-    "q_kcenter_seeds" -> (qKcenterSeeds _),
-    "q_dow_profile" -> (qDowProfile _),
-    "q_interevent_gaps" -> (qIntereventGaps _),
-    "q_recursive_cte" -> (qRecursiveCte _),
-    "q_lateral_topn" -> (qLateralTopn _),
-    "q_clustering_coeff" -> (qClusteringCoeff _),
-    "q_degree_assortativity" -> (qDegreeAssortativity _),
-    "q_revenue_band" -> (qRevenueBand _),
-    "q_promo_share" -> (qPromoShare _),
-    "q_supplier_parts" -> (qSupplierParts _),
-    "q_lexical_diversity" -> (qLexicalDiversity _),
-    "q_norm_histogram" -> (qNormHistogram _),
-    "q_curriculum" -> (qCurriculum _),
-    "q_luhn_audit" -> (qLuhnAudit _),
-    "q_growth_accounting" -> (qGrowthAccounting _),
-    "q_audio_frames" -> (qAudioFrames _),
-    "q_grouped_median" -> (qGroupedMedian _),
-    "q_basket_affinity" -> (qBasketAffinity _),
-    "q_coverage_curve" -> (qCoverageCurve _),
-    "q_salted_distinct" -> (qSaltedDistinct _),
-    "q_window_distribution" -> (qWindowDistribution _),
-    "q_user_journeys" -> (qUserJourneys _),
-    "q_null_semantics" -> (qNullSemantics _),
-    "q_stream_window_counts" -> (qStreamWindowCounts _),
-    "q_dedup_exact" -> (qDedupExact _),
-    "q_token_count" -> (qTokenCount _),
-    "q_fingerprint" -> (qFingerprint _),
-    "q_text_quality" -> (qTextQuality _),
-    "q_lang_id" -> (qLangId _),
-    "q_regex_tokens" -> (qRegexTokens _),
-    "q_winnow_fingerprint" -> (qWinnowFingerprint _),
-    "q_repetition" -> (qRepetition _),
-    "q_stratified_sample" -> (qStratifiedSample _),
-    "q_tfidf_topterms" -> (qTfidfTopTerms _),
-    "q_bm25_search" -> (qBm25Search _),
-    "q_train_test_split" -> (qTrainTestSplit _),
-    "q_length_buckets" -> (qLengthBuckets _),
-    "q_multimodal_decode" -> (qMultimodalDecode _),
-    "q_image_decode" -> (qImageDecode _),
-    "q_frame_sample" -> (qFrameSample _),
-    "q_simhash" -> (qSimhash _),
-    "q_simhash_dedup" -> (qSimhashDedup _),
-    "q_simhash_pairs" -> (qSimhashPairs _),
-    "q_simhash64_pairs" -> (qSimhash64Pairs _),
-    "q_contamination" -> (qContamination _),
-    "q_dedup_clusters" -> (qDedupClusters _),
-    "q_dedup_apply" -> (qDedupApply _),
-    "q_normalize" -> (qNormalize _),
-    "q_chunks" -> (qChunks _),
-    "q_ngram_jaccard" -> (qNgramJaccard _),
-    "q_sorted_blocking" -> (qSortedBlocking _),
-    "q_pareto_front" -> (qParetoFront _),
-    "q_containment" -> (qContainment _),
-    "q_minhash_lsh" -> (qMinhashLsh _),
-    "q_minhash_calibration" -> (qMinhashCalibration _),
-    "q_posexplode" -> (qPosexplode _),
-    "q_cosine_topk" -> (qCosineTopK _),
-    "q_ann_lsh" -> (qAnnLsh _),
-    "q_ann_lsh_mp" -> (qAnnLshMp _),
-    "q_ann_lsh_mp_r2" -> (qAnnLshMpR2 _),
-    "q_ann_lsh_t4" -> (qAnnLshT4 _),
-    "q_ann_ivf" -> (qAnnIvf _),
-    "q_ann_ivf_trained" -> (qAnnIvfTrained _),
-    "q_embed_neardup" -> (qEmbedNearDup _),
-    "q_semdedup" -> (qSemDedup _),
-    "q_domain_stats" -> (qDomainStats _),
-    "q_domain_divergence" -> (qDomainDivergence _),
-    "q_budget_alloc" -> (qBudgetAlloc _),
-    "q_epoch_mix" -> (qEpochMix _),
-    "q_temperature_sample" -> (qTemperatureSample _),
-    "q_weighted_sample" -> (qWeightedSample _),
-    "q_cms_freq" -> (qCmsFreq _),
-    "q_cms_auto" -> (qCmsAuto _),
-    "q_quality_calibrated" -> (qQualityCalibrated _),
-    "q_centroid_cosine" -> (qCentroidCosine _),
-    "q_dedup_best" -> (qDedupBest _),
-    "q_cdc_dedup" -> (qCdcDedup _),
-    "q_heavy_hitters" -> (qHeavyHitters _),
-    "q_char_entropy" -> (qCharEntropy _),
-    "q_random_projection" -> (qRandomProjection _),
-    "q_ann_recall" -> (qAnnRecall _),
-    "q_ivf_recall" -> (qIvfRecall _),
-    "q_incremental_cdc" -> (qIncrementalCdc _),
-    "q_quality_pr" -> (qQualityPr _),
-    "q_split_leakage" -> (qSplitLeakage _),
-    "q_zipf_slope" -> (qZipfSlope _),
-    "q_ngram_novelty" -> (qNgramNovelty _),
-    "q_vocab_growth" -> (qVocabGrowth _),
-    "q_cluster_sizes" -> (qClusterSizes _),
-    "q_source_overlap" -> (qSourceOverlap _),
-    "q_embed_dispersion" -> (qEmbedDispersion _),
-    "q_token_fertility" -> (qTokenFertility _),
-    "q_pack_sequences" -> (qPackSequences _),
-    "q_upsert" -> (qUpsert _),
-    "q_quantize_embed" -> (qQuantizeEmbed _),
-    "q_scd2" -> (qScd2 _),
-    "q_resample_ffill" -> (qResampleFfill _),
-    "q_winsorize" -> (qWinsorize _),
-    "q_stream_sessionize" -> (qStreamSessionize _),
-    "q_zorder_scan" -> (qZorderScan _),
-    "q_grouping_sets" -> (qGroupingSets _),
-    "q_fuzzy_match" -> (qFuzzyMatch _),
-    "q_pq_codes" -> (qPqCodes _),
-    "q_pq_trained" -> (qPqTrained _),
-    "q_pq_topk" -> (qPqTopK _),
-    "q_pii_redact" -> (qPiiRedact _),
-    "q_stream_enrich" -> (qStreamEnrich _),
-    "q_audio_decode" -> (qAudioDecode _),
-    "q_scalar_subquery" -> (qScalarSubquery _),
-    "q_sql_kernels" -> (qSqlKernels _),
-    "q_trigram_backoff" -> (qTrigramBackoff _),
-    "q_url_parse" -> (qUrlParse _),
-    "q_url_canonical" -> (qUrlCanonical _),
-    "q_anomaly_zscore" -> (qAnomalyZscore _),
-    "q_mad_outliers" -> (qMadOutliers _),
-    "q_graph_degree_stats" -> (qGraphDegreeStats _),
-    "q_blocklist" -> (qBlocklist _),
-    "q_robots_filter" -> (qRobotsFilter _),
-    "q_quality_margin" -> (qQualityMargin _),
-    "q_dedup_eval" -> (qDedupEval _),
-    "q_incremental_neardup" -> (qIncrementalNearDup _),
-    "q_phrase_mining" -> (qPhraseMining _),
-    "q_knn_graph" -> (qKnnGraph _),
-    "q_skew_report" -> (qSkewReport _),
-    "q_image_dedup" -> (qImageDedup _),
-    "q_bpe_train" -> (qBpeTrain _),
-    "q_unigram_train" -> (qUnigramTrain _),
-    "q_unigram_apply" -> (qUnigramApply _),
-    "q_wordpiece_train" -> (qWordpieceTrain _),
-    "q_wordpiece_apply" -> (qWordpieceApply _),
-    "q_tokenizer_families" -> (qTokenizerFamilies _),
-    "q_label_prop" -> (qLabelProp _),
-    "q_kcore" -> (qKcore _),
-    "q_dedup_ensemble" -> (qDedupEnsemble _),
-    "q_bpe_apply" -> (qBpeApply _),
-    "q_domain_rank" -> (qDomainRank _),
-    "q_trust_rank" -> (qTrustRank _),
-    "q_weather_stg" -> (qWeatherStg _),
-    "q_window_stats" -> (qWindowStats _),
-    "q_cross_join" -> (qCrossJoin _),
-    "q_nullsafe_join" -> (qNullsafeJoin _),
-    "q_date_arith" -> (qDateArith _),
-    "q_approx_percentile" -> (qApproxPercentile _),
-    "q_map_ops" -> (qMapOps _),
-    "q_stream_join" -> (qStreamJoin _),
-    "q_csv_scan" -> (qCsvScan _),
-    "q_session_window" -> (qSessionWindow _),
-    "q_stream_dedup" -> (qStreamDedup _),
-    "q_stream_neardup64" -> (qStreamNearDup64 _),
-    "q_stream_neardup64_evict" -> (qStreamNearDup64Evict _),
-    "q_stream_neardup16" -> (qStreamNearDup16 _),
-    "q_array_agg" -> (qArrayAgg _),
-    "q_unpivot" -> (qUnpivot _),
-    "q_array_hof" -> (qArrayHof _),
-    "q_json_scan" -> (qJsonScan _),
-    "q_orc_scan" -> (qOrcScan _),
-    "q_binary_scan" -> (qBinaryScan _),
-    "q_pagination" -> (qPagination _),
-    "q_intersect_all" -> (qIntersectAll _),
-    "q_except_all" -> (qExceptAll _),
-    "q_try_cast" -> (qTryCast _),
-    "q_shard_shuffle" -> (qShardShuffle _),
-    "q_ivfpq_topk" -> (qIvfPqTopK _),
-    "q_incremental_agg" -> (qIncrementalAgg _),
-    "q_snapshot_diff" -> (qSnapshotDiff _),
-    "q_compact_scan" -> (qCompactScan _),
-    "q_dup_spans" -> (qDupSpans _),
-    "q_unigram_score" -> (qUnigramScore _),
-    "q_hll_distinct" -> (qHllDistinct _),
-    "q_vocab_build" -> (qVocabBuild _),
-    "q_bigram_lm" -> (qBigramLm _),
-    "q_quality_filter" -> (qQualityFilter _),
-    "q_incremental_dedup" -> (qIncrementalDedup _),
-    "q_sliding_window" -> (qSlidingWindow _),
-    "q_bigram_fluency" -> (qBigramFluency _),
-    "q_bigram_fluency_oov" -> (qBigramFluencyOov _),
-    "q_corpus_pipeline" -> (qCorpusPipeline _),
-    "q_arg_extreme" -> (qArgExtreme _),
-    "q_bitwise_agg" -> (qBitwiseAgg _),
-    "q_explode_outer" -> (qExplodeOuter _),
-    "q_join_hints" -> (qJoinHints _),
-    "q_hybrid_search" -> (qHybridSearch _),
-    "q_text_scan" -> (qTextScan _),
-    "q_profile" -> (qProfile _),
-    "q_quality_report" -> (qQualityReport _),
-    "q_checksum" -> (qChecksum _),
-    "q_union_evolve" -> (qUnionEvolve _),
-    "q_bucketed_join" -> (qBucketedJoin _))
-
-  def oracleSql: Map[String, String] = OracleSql.all
+  lazy val oracleSql: Map[String, String] =
+    Registry.all.map(q => q.name -> q.oracleSql).toMap
 }

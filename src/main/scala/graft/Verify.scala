@@ -9,7 +9,7 @@ object Verify {
     // the driver always calls with two args = full registry).
     val only: Option[Set[String]] =
       args.drop(2).headOption.map(_.split(",").toSet)
-    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Sessions.build(Sessions.cpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries

@@ -254,11 +254,18 @@ object WeatherPipeline {
     * day. Any other batch (JSON landing files, a backfill) keeps its scan
     * parallelism and is persisted across its consumers instead of
     * re-parsing the payloads per action.
+    *
+    * A driver-local batch with no rows (every city skipped) returns before
+    * any action: the previous day's marts stay as they are, and a fresh
+    * output root gets no `raw` or `marts` dir.
     */
   def runBatch(payloads: DataFrame, dataIntervalStart: Timestamp, now: Timestamp,
                outDir: String): Unit = {
     val ingested = ingest(payloads, dataIntervalStart, now)
-    val local = ingested.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    val local = ingested.queryExecution.optimizedPlan match {
+      case l: LocalRelation if l.data.isEmpty => return // nothing to publish
+      case l => l.isInstanceOf[LocalRelation]
+    }
     val raw = if (local) ingested.coalesce(1)
       else ingested.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {

@@ -30,7 +30,7 @@ object NearDupSoakProbe {
     val docsPath = sfDir + "/documents.parquet"
     val nBatches = if (args.length > 1) args(1).toInt else 100
     val segments = if (args.length > 2) args(2).toInt else 10
-    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Sessions.build(Sessions.cpus)
     spark.sparkContext.setLogLevel("WARN")
     require(nBatches >= segments,
       s"nBatches=$nBatches < segments=$segments: a segment would reveal " +

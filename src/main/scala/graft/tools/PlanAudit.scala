@@ -21,7 +21,7 @@ object PlanAudit {
     val out = new java.io.PrintWriter(args(0))
     val d = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val only = args.lift(2).map(_.split(",").toSet)
-    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Sessions.build(Sessions.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     def walk(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => a +: walk(a.inputPlan)

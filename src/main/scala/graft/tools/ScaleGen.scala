@@ -24,7 +24,7 @@ import graft.Sessions
 object ScaleGen {
   def main(args: Array[String]): Unit = {
     val (base, out, factor) = (args(0), args(1), args(2).toInt)
-    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    val spark = Sessions.build(Sessions.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     val docs = spark.read.parquet(s"$base/documents.parquet")

@@ -26,7 +26,7 @@ object Trace {
     val planDir = args.lift(4).map(new java.io.File(_))
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
-    val spark = Sessions.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = Sessions.build(Sessions.cpus)
     spark.sparkContext.setLogLevel("WARN")
     planDir.foreach(_.mkdirs())
     names.foreach { name =>

@@ -2,22 +2,6 @@ package graft
 
 class OracleSqlSpec extends SparkSpec {
 
-  /** Queries deliberately without a DuckDB oracle (engine-specific
-    * results); the driver records a rows-only check for these. Empty
-    * since round 3: q_approx_count_distinct now verifies through the
-    * engine-independent within-tolerance contract. */
-  private val rowsOnly = Set.empty[String]
-
-  test("every query has either an oracle or is intentionally rows-only") {
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- rowsOnly
-    assert(missing.isEmpty, s"queries without oracle SQL: $missing")
-  }
-
-  test("no oracle entry references a query that does not exist") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")
-  }
-
   test("all queries run and return rows on sf0.001") {
     val dir = "/root/testdata/sf0.001"
     SparkEntry.queries.foreach { case (name, fn) =>

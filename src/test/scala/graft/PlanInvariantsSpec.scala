@@ -10,12 +10,6 @@ class PlanInvariantsSpec extends SparkSpec {
   // their batch-equivalent plans are asserted in their own specs
   private def planCheckable(name: String): Boolean = !name.startsWith("q_stream_")
 
-  test("registry and oracle stay in lockstep (every query verified, no dead oracle)") {
-    assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet,
-      s"mismatch: only-oracle=${SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet} " +
-        s"only-query=${SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet}")
-  }
-
   test("q_join_hints: the merge hint overrides the broadcast-eligible plan") {
     val dir = "/root/testdata/sf0.001"
     val plan = SparkEntry.queries("q_join_hints")(spark, dir)
@@ -33,7 +27,7 @@ class PlanInvariantsSpec extends SparkSpec {
     val prev = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val q = SparkEntry.qDppScan(spark, dir)
+      val q = registry.RelationalQueries.qDppScan(spark, dir)
       assert(q.collect().nonEmpty)
       val scan = q.queryExecution.executedPlan.collectLeaves().collectFirst {
         case s: org.apache.spark.sql.execution.FileSourceScanExec
@@ -42,7 +36,7 @@ class PlanInvariantsSpec extends SparkSpec {
       assert(scan.partitionFilters.mkString.contains("dynamicpruning"),
         s"no DPP filter on the fact scan: ${scan.partitionFilters}")
       // keep-years = {1996, 1999}; the fact side must read exactly those
-      val total = new java.io.File(SparkEntry.partitionedOrdersDir(spark, dir))
+      val total = new java.io.File(registry.RelationalQueries.partitionedOrdersDir(spark, dir))
         .listFiles().count(_.getName.startsWith("o_year="))
       val pruned = scan.metrics.get("numPartitions").map(_.value).getOrElse(-1L)
       assert(pruned == 2 && pruned < total,
@@ -52,7 +46,7 @@ class PlanInvariantsSpec extends SparkSpec {
 
   test("q_bloom_join: the shuffle join carries a runtime bloom filter on the fact side") {
     val dir = "/root/testdata/sf0.001"
-    val q = SparkEntry.qBloomJoin(spark, dir)
+    val q = registry.RelationalQueries.qBloomJoin(spark, dir)
     val plan = q.queryExecution.optimizedPlan.toString.toLowerCase
     assert(plan.contains("might_contain"),
       s"no bloom runtime filter in the optimized plan:\n$plan")

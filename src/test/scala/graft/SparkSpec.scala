@@ -11,15 +11,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    // same extension set as the product session (Sessions.build) — the
-    // registry includes SQL-surface queries that call registered kernels
-    .withExtensions(new graft.functions.GraftExtensions)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  /** The product's session (`Sessions.build`) at 4 cores, so every spec
+    * runs under the configuration the mains use. */
+  lazy val session: SparkSession = Sessions.build("4")
 }

@@ -41,6 +41,12 @@ class WeatherPipelineSpec extends SparkSpec {
     assert(paris.getAs[String]("weather_description") == "Partly sunny")
   }
 
+  test("ingest emits the declared raw.weather DDL (rawSchema), nullability aside") {
+    def fields(t: org.apache.spark.sql.types.StructType) = t.fields.toSeq.map(f => f.name -> f.dataType)
+    assert(fields(WeatherPipeline.ingest(payloads, t0, now).schema) ==
+      fields(WeatherPipeline.rawSchema))
+  }
+
   test("ingest ids are deterministic across re-runs and unique within a batch") {
     val ids1 = WeatherPipeline.ingest(payloads, t0, now).select("id").as[Long].collect().sorted
     val ids2 = WeatherPipeline.ingest(payloads.repartition(3), t0, now)
@@ -227,6 +233,28 @@ class WeatherPipelineSpec extends SparkSpec {
     WeatherPipeline.runBatch(landed, t0, now, s"$dir/file")
     assert(dataFiles(s"$dir/file/raw/weather") >= 2)
     assert(spark.read.parquet(s"$dir/file/marts/fct_weather_observations").count() == 3)
+  }
+
+  test("a day on which every city is skipped publishes nothing") {
+    import graft.pipeline.WeatherFetcher.FakeFetcher
+    val failAll = new FakeFetcher(Map.empty) // every fetch throws
+    val cities = Seq("Paris", "London")
+    val day2 = Timestamp.valueOf("2024-06-03 09:00:00")
+    // after a normal day, the empty day leaves the dim as it was
+    val dir = java.nio.file.Files.createTempDirectory("wp-empty").toString
+    WeatherPipeline.runDaily(spark, new FakeFetcher(Map(
+      "Paris" -> payload("Paris", "France", 18, "sunny"))), Seq("Paris"), t0, now, dir)
+    def dimRows = spark.read.parquet(s"$dir/marts/dim_locations").collect().toSet
+    val before = dimRows
+    assert(before.size == 1)
+    val results = WeatherPipeline.runDaily(spark, failAll, cities, t0, day2, dir, retries = 1)
+    assert(results.map(_.city) == cities && results.forall(_.rawJson.isEmpty))
+    assert(dimRows == before)
+    assert(spark.read.parquet(s"$dir/marts/fct_weather_observations").count() == 1)
+    // as the first day of a fresh root, it creates no marts dir
+    val fresh = java.nio.file.Files.createTempDirectory("wp-empty-fresh").toString
+    WeatherPipeline.runDaily(spark, failAll, cities, t0, now, fresh, retries = 0)
+    assert(!new java.io.File(s"$fresh/marts").exists())
   }
 
   test("re-running a day overwrites only that extraction_date partition") {

@@ -89,7 +89,7 @@ class VectorsSpec extends SparkSpec {
     try {
       // the gate/bench corpora (500 at sf0.01, 2000 at sf0.1) must both
       // resolve to the long-standing 4-bit behavior — this pins the
-      // oracle mirrors (OracleSql.bucket4Expr) to the engine resolution
+      // oracle mirrors (registry.SharedSql.bucket4Expr) to the engine resolution
       assert(Vectors.bitsFor(embOf(500L)) == 4)
       assert(Vectors.bitsFor(embOf(2000L)) == 4)
       // past the floor the width tracks ceil(log2 n) - 7, so a xN corpus
