@@ -1,7 +1,9 @@
 package graft
 
-/** Local-filesystem helpers shared by the gate harnesses, probes and
-  * streaming commits. */
+import org.apache.hadoop.fs.{FileSystem, Path}
+
+/** Filesystem helpers shared by the gate harnesses, probes, streaming
+  * commits and the pipeline's mart publish. */
 object Fs {
   /** Recursive delete. Null-safe: `listFiles()` returns null on an I/O
     * error or a race with another deleter, and the delete proceeds. */
@@ -13,16 +15,25 @@ object Fs {
     f.delete()
   }
 
-  /** Stage-and-swap commit: replace `live` with the fully written `stage`
-    * dir by one rename, so a reader lists either the old table or the new
-    * one, never a half-written one. The delete and the rename are two
-    * steps: a crash between them leaves `stage` complete and `live`
-    * absent. Throws if the rename fails. */
-  def swap(stage: java.io.File, live: java.io.File): Unit = {
-    if (live.exists()) deleteRecursively(live)
-    if (!stage.renameTo(live))
-      throw new IllegalStateException(s"swap failed: $stage -> $live")
+  /** Stage-and-swap commit on any Hadoop `FileSystem`: replace `live`
+    * with the fully written `stage` dir by one rename, so a reader lists
+    * either the old table or the new one, never a half-written one.
+    * `live`'s parent is created if missing. The delete and the rename
+    * are two steps: a crash between them leaves `stage` complete and
+    * `live` absent. Throws if the rename fails. */
+  def publish(fs: FileSystem, stage: Path, live: Path): Unit = {
+    fs.delete(live, true)
+    fs.mkdirs(live.getParent)
+    if (!fs.rename(stage, live))
+      throw new IllegalStateException(s"publish failed: $stage -> $live")
   }
+
+  /** [[publish]] of a local `stage` dir onto a local `live` dir. */
+  def swap(stage: java.io.File, live: java.io.File): Unit =
+    publish(localFs, new Path(stage.getAbsoluteFile.toURI), new Path(live.getAbsoluteFile.toURI))
+
+  private lazy val localFs: FileSystem =
+    FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
 
   /** Root for EPHEMERAL run state (gate-harness roots, one-shot stream
     * checkpoints): tmpfs (`/dev/shm`) when present and writable, else

@@ -53,6 +53,12 @@ object Sessions {
       // keep their data-sized widths — AQE only merges below the 8 MB
       // advisory target above.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+      // no per-session artifact class loaders: the library adds no
+      // session-scoped jars, and with isolation on, every session (each
+      // per-batch clone of WeatherPipeline.runBatch included) runs its
+      // tasks under a class loader of its own, so code generated in its
+      // tasks is compiled again for every clone
+      .config("spark.sql.artifact.isolation.enabled", "false")
       // SCRATCH placement: spark.local.dir —
       // shuffle files, broadcast blocks, disk-spilled cache — defaults
       // to /tmp, which is DISK-backed on this host, so every shuffle

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
 object Tables {
   // `spark.read.parquet` lists files and reads footers for schema at
   // DataFrame-creation time — a fixed per-call driver cost that the
-  // 58-query harness pays hundreds of times for the same ten tables.
+  // 261-query registry pays hundreds of times for the same ten tables.
   // Memoize the analyzed handle per (session, dir, table); the returned
   // plan is immutable, so sharing it is safe, and identical plans also
   // let CacheManager/exchange-reuse kick in across queries.

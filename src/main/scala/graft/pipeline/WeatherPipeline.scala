@@ -2,11 +2,15 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
+import graft.Fs
 import graft.ops.Relational
 import graft.quality.Checks
 import graft.quality.Checks._
@@ -21,12 +25,14 @@ import graft.quality.Checks._
   * Airflow task chain becomes `ingest → stg → {dim, fct}`, gated by the
   * models' dbt tests declared as `quality.Checks` contracts
   * (`rawWeatherTests`, `dimLocationsTests`, `fctWeatherObservationsTests`).
-  * `runBatch` runs a batch as two waves of two concurrent actions: the
-  * raw append beside one gate over all three contracts, then the two
-  * mart writes. A driver-local batch (the `runDaily` path) is one
-  * partition, so each action is one task with no shuffle. The fact
-  * write partitions by `extraction_date`, so a daily re-run overwrites
-  * one partition instead of the table.
+  * `runBatch` runs a batch as one wave of four concurrent actions: the
+  * raw append, one gate over all three contracts, and the two mart
+  * writes into a stage dir; the staged marts are published only if all
+  * four succeeded. A driver-held batch (the `runDaily` path) is one
+  * partition, run interpreted, so each action is one task with no
+  * shuffle and no generated code. The fact partitions by
+  * `extraction_date`, so a daily re-run replaces one partition instead
+  * of the table.
   */
 object WeatherPipeline {
 
@@ -197,16 +203,15 @@ object WeatherPipeline {
     * staging transforms run incrementally over a JSON landing directory —
     * Spark's unified batch/stream semantics means zero operator
     * duplication. Each micro-batch appends cleansed staging rows to a
-    * date-partitioned parquet sink; marts stay periodic batch rebuilds
-    * over the accumulated staging table (aggregating marts in-stream
-    * would need output-mode complete — the daily-rebuild model of the
-    * reference maps cleaner and keeps the sink append-only).
+    * date-partitioned parquet sink, and the stream writes staging only:
+    * no raw table and no marts (aggregating marts in-stream would need
+    * output-mode complete; the sink stays append-only).
     *
     * Returns the started query; callers own the trigger/await policy
     * (tests use processAllAvailable over a static landing dir — the
     * Trigger.AvailableNow catch-up pattern).
     */
-  def startStream(spark: org.apache.spark.sql.SparkSession,
+  def startStream(spark: SparkSession,
                   landingDir: String, checkpointDir: String, outDir: String,
                   dataIntervalStart: Timestamp, now: Timestamp):
       org.apache.spark.sql.streaming.StreamingQuery = {
@@ -223,88 +228,139 @@ object WeatherPipeline {
   }
 
   /** End-to-end batch run mirroring the DAG's task chain
-    * (dags/weatherstack_full_pipeline.py:172) in two waves; each wave
-    * waits for both of its actions before it returns or throws:
+    * (dags/weatherstack_full_pipeline.py:172) as ONE wave of four
+    * concurrent actions, then a publish:
     *
-    *  1. the raw append beside the gate. The gate is ONE
-    *     `Checks.assertTiers` action over the source contract
-    *     (`raw_weather`, DAG step 4) and the mart contracts
-    *     (`dim_locations`, `fct_weather_observations`, step 6). If a
-    *     source check fails, the IllegalArgumentException names only the
-    *     failing `raw_weather.*` checks, because the DAG never runs the
-    *     mart tests then; otherwise it names every failing mart check,
-    *     sorted. A raw-write error is thrown before a gate error.
-    *  2. the dim write beside the fact write, only if every check passed.
-    *     Stricter than the DAG by design: dbt writes the marts in step 5
-    *     and validates after; here the tests gate the WRITES, so a
-    *     failing mart never goes live. The two writes are independent
-    *     idempotent overwrites (the fact through DYNAMIC partition
-    *     overwrite, graft.sources.IO.writePartitioned, O(day) not
-    *     O(table)), so a re-run repairs a wave in which one of them
-    *     failed.
+    *  - the raw append into the live `raw/weather`;
+    *  - the gate: ONE `Checks.assertTiers` action over the source
+    *    contract (`raw_weather`, DAG step 4) and the mart contracts
+    *    (`dim_locations`, `fct_weather_observations`, step 6). If a
+    *    source check fails, the IllegalArgumentException names only the
+    *    failing `raw_weather.*` checks, because the DAG never runs the
+    *    mart tests then; otherwise it names every failing mart check,
+    *    sorted;
+    *  - the dim write and the `extraction_date`-partitioned fact write,
+    *    into a stage dir `_stage/<uuid>/marts/<table>` under `outDir`.
+    *
+    * The wave waits for all four. Only if all four succeeded are the
+    * staged marts published (write–audit–publish, on the Hadoop
+    * `FileSystem` of `outDir`, see `graft.Fs.publish`): the dim replaces
+    * the live dim, and each staged fact partition replaces its live
+    * partition, leaving the others as they are, as a dynamic partition
+    * overwrite does (O(day), not O(table)). Stricter than the DAG by
+    * design: dbt writes the marts in step 5 and validates after; here
+    * the tests gate the PUBLISH, so a failing mart never goes live. The
+    * stage is deleted either way. Otherwise the first error in wave
+    * order (raw, gate, dim, fct) is thrown with the others suppressed.
     *
     * A batch whose ingest optimizes to a `LocalRelation` (the driver-
-    * fetched payloads of `runDaily`) is coalesced to ONE partition and
-    * not cached: every aggregate, `Unique` check and `distinct` is then
-    * satisfied without an exchange and each action is a single task. The
-    * coalesce comes after `ingest`, not on the payload frame: over the
-    * payloads it would stop `ConvertToLocalRelation` from folding
-    * `ingest` on the driver, which leaves the per-day `now` and
-    * `dataIntervalStart` literals in generated code, recompiled every
-    * day. Any other batch (JSON landing files, a backfill) keeps its scan
-    * parallelism and is persisted across its consumers instead of
-    * re-parsing the payloads per action.
+    * held payloads of `runDaily`) runs in a per-batch clone of the
+    * caller's session with whole-stage codegen off and interpreted
+    * expressions: its few rows cost less to interpret than to compile
+    * for. The clone keeps the caller's runtime confs and its
+    * `QueryExecutionListener`s. Code the interpreted operators still
+    * generate in tasks is compiled once per JVM only if the caller's
+    * session turns artifact isolation off, as `graft.Sessions.build`
+    * does; otherwise every clone's tasks get their own class loader and
+    * recompile it. The batch's `raw` is that `LocalRelation`,
+    * coalesced to ONE partition and not cached: every aggregate,
+    * `Unique` check and `distinct` is then satisfied without an exchange
+    * and each action is a single task. The coalesce comes after
+    * `ingest`, not on the payload frame: over the payloads it would stop
+    * `ConvertToLocalRelation` from folding `ingest` on the driver. Any
+    * other batch (JSON landing files, a backfill) runs in the caller's
+    * session with codegen, keeps its scan parallelism and is persisted
+    * across its consumers instead of re-parsing the payloads per action.
     *
-    * A driver-local batch with no rows (every city skipped) returns before
+    * A driver-held batch with no rows (every city skipped) returns before
     * any action: the previous day's marts stay as they are, and a fresh
     * output root gets no `raw` or `marts` dir.
     */
   def runBatch(payloads: DataFrame, dataIntervalStart: Timestamp, now: Timestamp,
                outDir: String): Unit = {
+    val spark = payloads.sparkSession
     val ingested = ingest(payloads, dataIntervalStart, now)
-    val local = ingested.queryExecution.optimizedPlan match {
+    val driverHeld = ingested.queryExecution.optimizedPlan match {
       case l: LocalRelation if l.data.isEmpty => return // nothing to publish
-      case l => l.isInstanceOf[LocalRelation]
+      case l: LocalRelation => Some(l)
+      case _ => None
     }
-    val raw = if (local) ingested.coalesce(1)
-      else ingested.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val raw = driverHeld match {
+      case Some(l) => bridge.frame(interpreted(spark), l).coalesce(1)
+      case None => ingested.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+    val out = new Path(outDir)
+    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val stages = new Path(out, "_stage")
+    val stage = new Path(stages, java.util.UUID.randomUUID().toString)
     try {
       val stg = stgWeather(raw)
       val dim = dimLocations(stg)
       val fct = fctWeatherObservations(stg)
       inParallel(
-        raw.write.mode("append").parquet(s"$outDir/raw/weather"),
-        Checks.assertTiers(Seq(("raw_weather", raw, rawWeatherTests)),
+        () => raw.write.mode("append").parquet(s"$outDir/raw/weather"),
+        () => Checks.assertTiers(Seq(("raw_weather", raw, rawWeatherTests)),
           Seq(("dim_locations", dim, dimLocationsTests),
-            ("fct_weather_observations", fct, fctWeatherObservationsTests))))
-      inParallel(
-        dim.write.mode("overwrite").parquet(s"$outDir/marts/dim_locations"),
-        graft.sources.IO.writePartitioned(fct, Seq("extraction_date"),
-          s"$outDir/marts/fct_weather_observations"))
-    } finally if (!local) raw.unpersist()
+            ("fct_weather_observations", fct, fctWeatherObservationsTests))),
+        () => dim.write.parquet(new Path(stage, DimTable).toString),
+        () => fct.write.partitionBy(FctPartition).parquet(new Path(stage, FctTable).toString))
+      Fs.publish(fs, new Path(stage, DimTable), new Path(out, DimTable))
+      // each staged partition, and the commit marker a dynamic overwrite
+      // leaves in the table dir
+      for (p <- fs.listStatus(new Path(stage, FctTable)).map(_.getPath)
+           if p.getName.startsWith(s"$FctPartition=") || p.getName == "_SUCCESS")
+        Fs.publish(fs, p, new Path(new Path(out, FctTable), p.getName))
+      Seq(DimTable, FctTable).foreach(t => spark.catalog.refreshByPath(new Path(out, t).toString))
+    } finally {
+      if (driverHeld.isEmpty) raw.unpersist()
+      fs.delete(stage, true)
+      // the last batch out removes the stage root; a concurrent batch's
+      // stage keeps it non-empty, and then the delete fails harmlessly
+      scala.util.Try(if (fs.listStatus(stages).isEmpty) fs.delete(stages, false))
+    }
   }
 
-  /** Runs `a` on the calling thread and `b` on a new thread, and returns
-    * once both have ended; then throws `a`'s error, else `b`'s. The
-    * thread is started outside any Spark action, so it inherits no
-    * `spark.sql.execution.id` and `b` runs as its own SQL execution. */
-  private def inParallel(a: => Unit, b: => Unit): Unit = {
-    var bErr: Option[Throwable] = None // published to this thread by join
-    val t = new Thread(() => try b catch { case e: Throwable => bErr = Some(e) },
-      "weather-pipeline-wave")
-    t.setDaemon(true)
-    t.start()
-    val aErr = try { a; None } catch { case e: Throwable => Some(e) }
-    t.join()
-    for (ea <- aErr; eb <- bErr) ea.addSuppressed(eb)
-    aErr.orElse(bErr).foreach(e => throw e)
+  private val DimTable = "marts/dim_locations"
+  private val FctTable = "marts/fct_weather_observations"
+  private val FctPartition = "extraction_date"
+
+  /** A per-batch clone of `spark` that interprets its plans: no
+    * whole-stage codegen and interpreted expressions. */
+  private def interpreted(spark: SparkSession): SparkSession = {
+    val s = bridge.cloneSession(spark)
+    s.conf.set(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.key, "false")
+    s.conf.set(SQLConf.CODEGEN_FACTORY_MODE.key, "NO_CODEGEN")
+    s
+  }
+
+  /** Runs the first action on the calling thread and each other on a new
+    * thread, and returns once all have ended; then throws the first
+    * error in argument order, with the later ones suppressed. The
+    * threads are started outside any Spark action, so they inherit no
+    * `spark.sql.execution.id` and each action runs as its own SQL
+    * execution. */
+  private def inParallel(actions: (() => Unit)*): Unit = {
+    val errs = new Array[Throwable](actions.size) // published to this thread by join
+    def run(i: Int): Unit = try actions(i)() catch { case e: Throwable => errs(i) = e }
+    val threads = actions.indices.tail.map { i =>
+      val t = new Thread(() => run(i), "weather-pipeline-wave")
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    run(0)
+    threads.foreach(_.join())
+    errs.filter(_ != null) match {
+      case Array(first, rest @ _*) => rest.foreach(first.addSuppressed); throw first
+      case _ =>
+    }
   }
 
   /** The full daily run the reference's DAG schedules: per-city fetch
     * (retry + skip-on-error, WeatherFetcher.fetchAll) → payload frame →
     * `runBatch`. Returns the fetch results so callers can log/alert on
     * skipped cities, as the reference prints per-city errors. */
-  def runDaily(spark: org.apache.spark.sql.SparkSession, fetcher: WeatherFetcher,
+  def runDaily(spark: SparkSession, fetcher: WeatherFetcher,
                cities: Seq[String], dataIntervalStart: Timestamp, now: Timestamp,
                outDir: String, retries: Int = 2,
                log: String => Unit = _ => ()): Seq[WeatherFetcher.FetchResult] = {

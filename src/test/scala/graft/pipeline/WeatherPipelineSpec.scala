@@ -2,8 +2,13 @@ package graft.pipeline
 
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSpec
 
 class WeatherPipelineSpec extends SparkSpec {
@@ -95,6 +100,31 @@ class WeatherPipelineSpec extends SparkSpec {
     assert(n.toSeq == Seq(bad.count()))
   }
 
+  /** The executed physical plans of every action `body` runs, from a
+    * listener on the spec's session (a session cloned from it during
+    * `body` carries the listener too). */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.graft.Bus.drain(sc) // no earlier action's event reaches `l`
+    spark.listenerManager.register(l)
+    try { body; org.apache.spark.graft.Bus.drain(sc) }
+    finally spark.listenerManager.unregister(l)
+    plans.asScala.toSeq
+  }
+
+  /** Whole-stage codegen stages in a plan, through adaptive wrappers. */
+  private def codegenStages(p: SparkPlan): Int = p match {
+    case w: WholeStageCodegenExec => 1 + codegenStages(w.child)
+    case a: AdaptiveSparkPlanExec => codegenStages(a.executedPlan)
+    case q: QueryStageExec => codegenStages(q.plan)
+    case other => other.children.map(codegenStages).sum
+  }
+
   test("end-to-end: JSON landing files → permissive source → pipeline → partitioned marts") {
     import graft.sources.IO
     import org.apache.spark.sql.types._
@@ -106,9 +136,28 @@ class WeatherPipelineSpec extends SparkSpec {
       StructField("city", StringType), StructField("raw_json", StringType)))
     val (good, bad) = IO.routeErrors(IO.readJsonPermissive(spark, schema, s"$dir/landing"))
     assert(bad.count() == 1)
-    WeatherPipeline.runBatch(good, t0, now, s"$dir/wh")
+    val filePlans = executedPlans(WeatherPipeline.runBatch(good, t0, now, s"$dir/wh"))
     val fct = spark.read.parquet(s"$dir/wh/marts/fct_weather_observations")
     assert(fct.count() == 3) // error payload + outlier routed out downstream
+    // the same payloads held on the driver run interpreted, with equal output
+    val heldPlans = executedPlans(WeatherPipeline.runBatch(payloads, t0, now, s"$dir/held"))
+    for (t <- Seq("raw/weather", "marts/dim_locations", "marts/fct_weather_observations")) {
+      def rows(root: String) = spark.read.parquet(s"$dir/$root/$t").collect().toSet
+      assert(rows("held") == rows("wh"), t)
+    }
+    assert(heldPlans.size == 4 && heldPlans.forall(codegenStages(_) == 0),
+      heldPlans.mkString("\n"))
+    assert(filePlans.exists(codegenStages(_) > 0), filePlans.mkString("\n"))
+  }
+
+  test("runBatch takes its output root as a URI and publishes through the Hadoop filesystem") {
+    val dir = java.nio.file.Files.createTempDirectory("wp-uri").toFile
+    WeatherPipeline.runBatch(payloads, t0, now, dir.toURI.toString)
+    assert(spark.read.parquet(s"$dir/raw/weather").count() == 4) // the outlier lands in raw
+    assert(spark.read.parquet(s"$dir/marts/dim_locations").count() == 3)
+    assert(spark.read.parquet(s"$dir/marts/fct_weather_observations").count() == 3)
+    assert(new java.io.File(dir, "marts/fct_weather_observations/_SUCCESS").exists())
+    assert(!new java.io.File(dir, "_stage").exists())
   }
 
   test("startStream ingests a landing directory incrementally into partitioned staging") {
@@ -188,6 +237,22 @@ class WeatherPipelineSpec extends SparkSpec {
     ("Paris", payload("Paris", "France", 18, "sunny")),
     ("Paris", payload("Paris", "France", 19, "sunny"))).toDF("city", "raw_json")
 
+  test("a failed gate publishes nothing: the live marts keep their files and no stage remains") {
+    val dir = java.nio.file.Files.createTempDirectory("wp-gate").toString
+    WeatherPipeline.runBatch(payloads, t0, now, dir) // a good day
+    val day1 = s"$dir/marts/fct_weather_observations/extraction_date=2024-06-02"
+    def names(d: String): Set[String] = new java.io.File(d).list().toSet
+    val (dimBefore, fctBefore) = (names(s"$dir/marts/dim_locations"), names(day1))
+    assert(dimBefore.exists(_.endsWith(".parquet")) && fctBefore.exists(_.endsWith(".parquet")))
+    // the same day again, failing the source tier: its marts were staged
+    // beside the gate, and none of them may replace the live ones
+    val e = intercept[IllegalArgumentException](WeatherPipeline.runBatch(dupParis, t0, now, dir))
+    assert(e.getMessage.contains("raw_weather.unique_id"))
+    assert(names(s"$dir/marts/dim_locations") == dimBefore)
+    assert(names(day1) == fctBefore)
+    assert(!new java.io.File(s"$dir/_stage").exists())
+  }
+
   test("a raw-write error is thrown before the gate's, and no mart is written") {
     val dir = java.nio.file.Files.createTempDirectory("wp-rawfail").toString
     new java.io.File(s"$dir/raw").mkdirs()
@@ -216,7 +281,9 @@ class WeatherPipelineSpec extends SparkSpec {
       WeatherPipeline.runDaily(spark, fetcher, cities, Timestamp.valueOf("2024-06-03 08:30:00"),
         Timestamp.valueOf("2024-06-03 09:00:00"), dir)
     }
-    // raw append, gate, dim write, fct write
+    // raw append, gate, dim write, fct write; the actions of the batch's
+    // cloned session reach a listener registered on the caller's
+    assert(r.actions == 4, r.summary)
     assert(r.jobs <= 4 && r.tasks == r.jobs && r.shuffleBytes == 0, r.summary)
     assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
       "a warm day compiled generated code")
