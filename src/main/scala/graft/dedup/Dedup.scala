@@ -504,25 +504,6 @@ object Dedup {
       .agg(count(lit(1)).as("n_shared"))
   }
 
-  /** MinHash signature via double hashing (Kirsch & Mitzenmacher,
-    * ESA'06 — public technique): ONE md5 per shingle split into two 60-bit
-    * integers h1/h2, permutation i = h1 + i·h2. Cuts the hash work from
-    * k×|shingles| to |shingles| while keeping the per-permutation mins
-    * independent enough for LSH. 60-bit halves keep h1 + k·h2 < 2^63 for
-    * k ≤ 7 (max h1 + 7·h2 = 8·(2^60−1) = 2^63−8) — no overflow in Spark
-    * OR the DuckDB oracle (which errors on overflow instead of wrapping);
-    * k = 8 would already wrap for large h1/h2. One group-by computes all
-    * k mins in a single shuffle. Output: (id, sig_1 … sig_k) as BIGINT.
-    */
-  def minhashSignatures(sh: DataFrame, k: Int): DataFrame = {
-    require(k <= 7, s"k=$k: h1 + k*h2 must stay below 2^63 (60-bit halves allow k <= 7)")
-    val base = md5(col("shingle"))
-    val h1 = conv(substring(base, 1, 15), 16, 10).cast("long")
-    val h2 = conv(substring(base, 17, 15), 16, 10).cast("long")
-    val aggs = (1 to k).map(i => min(h1 + lit(i.toLong) * h2).as(s"sig_$i"))
-    sh.groupBy("id").agg(aggs.head, aggs.tail: _*)
-  }
-
   /** LSH banding: concatenate `rowsPerBand` consecutive signature
     * components per band; docs sharing any band key are candidate pairs.
     * The signatures are already uniform 60-bit hashes, so the joined

@@ -48,29 +48,6 @@ object ImageDecoder extends Multimodal.MediaDecoder {
     (w, h, out)
   }
 
-  /** Nearest-neighbor resample of row-major RGB pixels to (ow, oh) — the
-    * standard cheap resize for thumbnailing / model-input normalization;
-    * integer source-index arithmetic keeps it deterministic everywhere. */
-  def resizeRgb(w: Int, h: Int, rgb: Array[Byte], ow: Int, oh: Int): Array[Byte] = {
-    require(w > 0 && h > 0 && ow > 0 && oh > 0, s"bad dims ${w}x$h -> ${ow}x$oh")
-    require(rgb.length >= w * h * 3, "rgb buffer shorter than dims imply")
-    val out = new Array[Byte](ow * oh * 3)
-    var y = 0
-    while (y < oh) {
-      val sy = y * h / oh
-      var x = 0
-      while (x < ow) {
-        val sx = x * w / ow
-        val s = (sy * w + sx) * 3
-        val d = (y * ow + x) * 3
-        out(d) = rgb(s); out(d + 1) = rgb(s + 1); out(d + 2) = rgb(s + 2)
-        x += 1
-      }
-      y += 1
-    }
-    out
-  }
-
   private def bmpPixelAccessor(b: Array[Byte]): (Int, Int, (Int, Int) => (Int, Int, Int)) = {
     require(b.length >= 54, s"truncated BMP: ${b.length} bytes")
     val dataOff = le32(b, 10)

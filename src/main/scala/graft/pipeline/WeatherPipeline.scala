@@ -14,6 +14,7 @@ import graft.Fs
 import graft.ops.Relational
 import graft.quality.Checks
 import graft.quality.Checks._
+import graft.sources.IO
 
 /** The reference pipeline (bronze → silver → gold) re-expressed as pure
   * DataFrame functions. Reference: caphey/weather-api-automate-etl —
@@ -26,7 +27,7 @@ import graft.quality.Checks._
   * models' dbt tests declared as `quality.Checks` contracts
   * (`rawWeatherTests`, `dimLocationsTests`, `fctWeatherObservationsTests`).
   * `runBatch` runs a batch as one wave of four concurrent actions: the
-  * raw append, one gate over all three contracts, and the two mart
+  * raw write, one gate over all three contracts, and the two mart
   * writes into a stage dir; the staged marts are published only if all
   * four succeeded. A driver-held batch (the `runDaily` path) is one
   * partition, run interpreted, so each action is one task with no
@@ -231,7 +232,9 @@ object WeatherPipeline {
     * (dags/weatherstack_full_pipeline.py:172) as ONE wave of four
     * concurrent actions, then a publish:
     *
-    *  - the raw append into the live `raw/weather`;
+    *  - the raw write into the live `raw/weather`, partitioned by
+    *    `data_interval_start`: it replaces this interval's partition, so
+    *    a re-run or retry of an interval leaves one copy of its rows;
     *  - the gate: ONE `Checks.assertTiers` action over the source
     *    contract (`raw_weather`, DAG step 4) and the mart contracts
     *    (`dim_locations`, `fct_weather_observations`, step 6). If a
@@ -298,7 +301,7 @@ object WeatherPipeline {
       val dim = dimLocations(stg)
       val fct = fctWeatherObservations(stg)
       inParallel(
-        () => raw.write.mode("append").parquet(s"$outDir/raw/weather"),
+        () => IO.writePartitioned(raw, Seq("data_interval_start"), s"$outDir/raw/weather"),
         () => Checks.assertTiers(Seq(("raw_weather", raw, rawWeatherTests)),
           Seq(("dim_locations", dim, dimLocationsTests),
             ("fct_weather_observations", fct, fctWeatherObservationsTests))),

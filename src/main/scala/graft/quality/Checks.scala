@@ -27,11 +27,14 @@ object Checks {
   sealed trait Check {
     def name: String
     def violations(df: DataFrame): DataFrame
+  }
 
-    /** Row-level violation predicate, when the check is expressible per
-      * row: lets `reportDf` fuse every such check into ONE conditional
-      * aggregate pass. None for checks that need grouping (Unique). */
-    def rowViolation: Option[Column] = None
+  /** A check stated as one row-level violation predicate: its violations
+    * are the rows it holds for, and `reportDf` fuses every such check
+    * into ONE conditional aggregate pass. */
+  sealed trait RowCheck extends Check {
+    def rowViolation: Column
+    def violations(df: DataFrame): DataFrame = df.filter(rowViolation)
   }
 
   /** dbt `unique` (composite keys allowed). Not a row predicate — its
@@ -42,36 +45,29 @@ object Checks {
   }
 
   /** dbt `not_null`. */
-  final case class NotNull(col0: String) extends Check {
+  final case class NotNull(col0: String) extends RowCheck {
     val name = s"not_null_$col0"
-    def violations(df: DataFrame): DataFrame = Relational.nullViolations(df, col0)
-    override def rowViolation: Option[Column] = Some(col(col0).isNull)
+    def rowViolation: Column = col(col0).isNull
   }
 
   /** dbt `accepted_values` (NULLs pass, like SQL NOT IN). */
-  final case class AcceptedValues(col0: String, values: Seq[String]) extends Check {
+  final case class AcceptedValues(col0: String, values: Seq[String]) extends RowCheck {
     val name = s"accepted_values_$col0"
-    def violations(df: DataFrame): DataFrame =
-      Relational.acceptedValuesViolations(df, col0, values)
-    override def rowViolation: Option[Column] =
-      Some(col(col0).isNotNull && !col(col0).isin(values.map(_.asInstanceOf[Any]): _*))
+    def rowViolation: Column =
+      col(col0).isNotNull && !col(col0).isin(values.map(_.asInstanceOf[Any]): _*)
   }
 
   /** Closed-range test (the reference's unimplemented roadmap item,
     * README.md:126: temperature plausibility). NULLs pass — combine with
     * NotNull to reject them. */
-  final case class InRange(col0: String, lo: Double, hi: Double) extends Check {
+  final case class InRange(col0: String, lo: Double, hi: Double) extends RowCheck {
     val name = s"in_range_$col0"
-    def violations(df: DataFrame): DataFrame =
-      df.filter(col(col0).isNotNull && !col(col0).between(lo, hi))
-    override def rowViolation: Option[Column] =
-      Some(col(col0).isNotNull && !col(col0).between(lo, hi))
+    def rowViolation: Column = col(col0).isNotNull && !col(col0).between(lo, hi)
   }
 
   /** Arbitrary predicate that every row must satisfy. */
-  final case class Satisfies(name: String, predicateSql: String) extends Check {
-    def violations(df: DataFrame): DataFrame = df.filter(s"NOT ($predicateSql)")
-    override def rowViolation: Option[Column] = Some(not(expr(predicateSql)))
+  final case class Satisfies(name: String, predicateSql: String) extends RowCheck {
+    def rowViolation: Column = not(expr(predicateSql))
   }
 
   /** One row per check: (check, n_violations, passed) — the form a
@@ -84,7 +80,7 @@ object Checks {
     * its own aggregate branch, unioned — at scale the branches
     * parallelize and none reads more than its key columns. */
   def reportDf(df: DataFrame, checks: Seq[Check]): DataFrame = {
-    val fused = checks.flatMap(c => c.rowViolation.map(p => (c.name, p)))
+    val fused = checks.collect { case c: RowCheck => (c.name, c.rowViolation) }
     val fusedDf =
       if (fused.isEmpty) Seq.empty[DataFrame]
       else Seq(
@@ -94,11 +90,10 @@ object Checks {
           }: _*).as("cs"))
           .select(explode(col("cs")).as("kv"))
           .select(col("kv.check").as("check"), col("kv.n_violations").as("n_violations")))
-    val grouped = checks.collect {
-      case c if c.rowViolation.isEmpty =>
-        c.violations(df)
-          .agg(count(lit(1)).as("n_violations"))
-          .select(lit(c.name).as("check"), col("n_violations"))
+    val grouped = checks.filterNot(_.isInstanceOf[RowCheck]).map { c =>
+      c.violations(df)
+        .agg(count(lit(1)).as("n_violations"))
+        .select(lit(c.name).as("check"), col("n_violations"))
     }
     (fusedDf ++ grouped)
       .reduce(_.unionAll(_))

@@ -13,6 +13,22 @@ import SharedSql._
   * budgets, curricula and sequence packing. */
 object CorpusQueries extends Module("corpus") {
 
+  /** The token-budget packing layout (mirrors Mixing.packSequences at
+    * nShards = 4): each doc's md5 shard and token count `x`, and its
+    * running token sum within (source, shard) by doc_id as
+    * `c(source, shard, doc_id, n_tok, cum_tok)`. */
+  private val packCte =
+    """x AS (
+      |  SELECT source, doc_id,
+      |         CAST(CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 4 AS INTEGER) AS shard,
+      |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
+      |  FROM documents),
+      |c AS (
+      |  SELECT source, shard, doc_id, n_tok,
+      |         CAST(sum(n_tok) OVER (PARTITION BY source, shard ORDER BY doc_id
+      |                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tok
+      |  FROM x)""".stripMargin
+
   /** Curriculum phase assignment (see Mixing.curriculumPhases):
     * exact length-quartile phases over the corpus (easy-to-hard
     * ordering), the rfm-quintile rank pattern on documents. */
@@ -49,28 +65,20 @@ object CorpusQueries extends Module("corpus") {
   // scores divided once at the end — partition-order-independent on the
   // Spark side, so it hash-matches any engine that mirrors the per-doc
   // expression (which q_text_quality already proves bit-equal).
-  query("q_domain_stats", qDomainStats, {
-    val hits = vocabHits(stop("en"))
+  query("q_domain_stats", qDomainStats,
     s"""WITH t AS (
        |  SELECT source, lang,
-       |         CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
-       |         $hits AS hits,
-       |         CASE WHEN length(text) > 0
-       |              THEN CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS DOUBLE) / length(text)
-       |              ELSE 0.0 END AS punct_ratio
+       |         $qualityFeatures
        |  FROM documents),
        |q AS (
        |  SELECT source, lang, n_tokens,
-       |         CAST(round(((CASE WHEN n_tokens BETWEEN 20 AND 1000 THEN 1.0 ELSE 0.0 END) * 0.4
-       |           + least((CASE WHEN n_tokens > 0 THEN CAST(hits AS DOUBLE) / n_tokens ELSE 0.0 END) * 4.0, 1.0) * 0.4
-       |           + (1.0 - punct_ratio) * 0.2) * 1000000.0) AS BIGINT) AS q_fp6
+       |         $qualityFp6 AS q_fp6
        |  FROM t)
        |SELECT source, count(*) AS n_docs,
        |       CAST(sum(n_tokens) AS BIGINT) AS sum_tokens,
        |       count(DISTINCT lang) AS n_langs,
        |       CAST(sum(q_fp6) AS DOUBLE) / count(*) / 1000000.0 AS avg_quality
-       |FROM q GROUP BY source ORDER BY source""".stripMargin
-  })
+       |FROM q GROUP BY source ORDER BY source""".stripMargin)
 
   /** Per-domain Hellinger² divergence vs the corpus unigram distribution
     * (Mixing.domainDivergence): the domain-shift signal for mix design —
@@ -154,22 +162,15 @@ object CorpusQueries extends Module("corpus") {
   // fp6 quality) → epochs 1..4 exploded, greedily ordered by the
   // integer key q_fp6·2^(4−e) (= q·2^−(e−1) compared without
   // division), budget-prefix allocation with a partial boundary unit.
-  query("q_epoch_mix", qEpochMix, {
-    val hits = vocabHits(stop("en"))
+  query("q_epoch_mix", qEpochMix,
     s"""WITH t AS (
        |  SELECT source,
        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS nt,
-       |         CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
-       |         $hits AS hits,
-       |         CASE WHEN length(text) > 0
-       |              THEN CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS DOUBLE) / length(text)
-       |              ELSE 0.0 END AS punct_ratio
+       |         $qualityFeatures
        |  FROM documents),
        |q AS (
        |  SELECT source, nt,
-       |         CAST(round(((CASE WHEN n_tokens BETWEEN 20 AND 1000 THEN 1.0 ELSE 0.0 END) * 0.4
-       |           + least((CASE WHEN n_tokens > 0 THEN CAST(hits AS DOUBLE) / n_tokens ELSE 0.0 END) * 4.0, 1.0) * 0.4
-       |           + (1.0 - punct_ratio) * 0.2) * 1000000.0) AS BIGINT) AS q6
+       |         $qualityFp6 AS q6
        |  FROM t),
        |s AS (
        |  SELECT source, CAST(sum(nt) AS BIGINT) AS toks,
@@ -190,8 +191,7 @@ object CorpusQueries extends Module("corpus") {
        |       CAST(greatest(0, least(toks, 60000 - cb)) AS BIGINT) AS alloc_tokens
        |FROM c
        |WHERE greatest(0, least(toks, 60000 - cb)) > 0
-       |ORDER BY source, epoch""".stripMargin
-  })
+       |ORDER BY source, epoch""".stripMargin)
 
   /** Sqrt-temperature domain re-weighting (the LLM data-mixing sampler):
     * deterministic md5-percentile keep decision against a broadcast
@@ -228,19 +228,10 @@ object CorpusQueries extends Module("corpus") {
         col("cum_tok"), col("bin"))
       .orderBy(col("source"), col("shard"), col("doc_id"))
   query("q_pack_sequences", qPackSequences,
-    """WITH x AS (
-      |  SELECT source, doc_id,
-      |         CAST(CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 4 AS INTEGER) AS shard,
-      |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-      |  FROM documents),
-      |c AS (
-      |  SELECT source, shard, doc_id, n_tok,
-      |         CAST(sum(n_tok) OVER (PARTITION BY source, shard ORDER BY doc_id
-      |                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tok
-      |  FROM x)
-      |SELECT source, shard, doc_id, n_tok, cum_tok,
-      |       (cum_tok - 1) // 2048 AS bin
-      |FROM c ORDER BY source, shard, doc_id""".stripMargin)
+    s"""WITH $packCte
+       |SELECT source, shard, doc_id, n_tok, cum_tok,
+       |       (cum_tok - 1) // 2048 AS bin
+       |FROM c ORDER BY source, shard, doc_id""".stripMargin)
 
   /** Weighted sampling without replacement (exponential clocks), weight
     * = token count: the subsample where every TOKEN is equally likely to
@@ -283,26 +274,18 @@ object CorpusQueries extends Module("corpus") {
   // histogram (Mixing.calibrateBySource); c_lt/(n-1) is a single
   // double division of exact integers, so the two forms are
   // bit-equal.
-  query("q_quality_calibrated", qQualityCalibrated, {
-    val hits = vocabHits(stop("en"))
+  query("q_quality_calibrated", qQualityCalibrated,
     s"""WITH t AS (
        |  SELECT doc_id, source,
-       |         CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
-       |         $hits AS hits,
-       |         CASE WHEN length(text) > 0
-       |              THEN CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS DOUBLE) / length(text)
-       |              ELSE 0.0 END AS punct_ratio
+       |         $qualityFeatures
        |  FROM documents),
        |q AS (
        |  SELECT doc_id, source,
-       |         CAST(round(((CASE WHEN n_tokens BETWEEN 20 AND 1000 THEN 1.0 ELSE 0.0 END) * 0.4
-       |           + least((CASE WHEN n_tokens > 0 THEN CAST(hits AS DOUBLE) / n_tokens ELSE 0.0 END) * 4.0, 1.0) * 0.4
-       |           + (1.0 - punct_ratio) * 0.2) * 1000000.0) AS BIGINT) AS q_fp6
+       |         $qualityFp6 AS q_fp6
        |  FROM t)
        |SELECT doc_id, source, q_fp6,
        |       percent_rank() OVER (PARTITION BY source ORDER BY q_fp6) AS pctl
-       |FROM q ORDER BY doc_id""".stripMargin
-  })
+       |FROM q ORDER BY doc_id""".stripMargin)
 
   /** DSIR-style importance selection (see corpus.Mixing
     * .dsirWeights): hashed-bigram feature contrast of the src0 target
@@ -361,25 +344,16 @@ object CorpusQueries extends Module("corpus") {
   // Packing-efficiency report over the q_pack_sequences layout: per
   // (source, shard, bin) fill accounting, last bin flagged.
   query("q_pack_efficiency", qPackEfficiency,
-    """WITH x AS (
-      |  SELECT source, doc_id,
-      |         CAST(CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 4 AS INTEGER) AS shard,
-      |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-      |  FROM documents),
-      |c AS (
-      |  SELECT source, shard, doc_id, n_tok,
-      |         CAST(sum(n_tok) OVER (PARTITION BY source, shard ORDER BY doc_id
-      |                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_tok
-      |  FROM x),
-      |b AS (
-      |  SELECT source, shard, (cum_tok - 1) // 2048 AS bin,
-      |         CAST(count(*) AS BIGINT) AS n_docs,
-      |         CAST(sum(n_tok) AS BIGINT) AS bin_tokens
-      |  FROM c GROUP BY 1, 2, 3)
-      |SELECT source, shard, bin, n_docs, bin_tokens,
-      |       CAST((1000 * bin_tokens) // 2048 AS BIGINT) AS fill_permille,
-      |       bin = max(bin) OVER (PARTITION BY source, shard) AS is_last
-      |FROM b ORDER BY source, shard, bin""".stripMargin)
+    s"""WITH $packCte,
+       |b AS (
+       |  SELECT source, shard, (cum_tok - 1) // 2048 AS bin,
+       |         CAST(count(*) AS BIGINT) AS n_docs,
+       |         CAST(sum(n_tok) AS BIGINT) AS bin_tokens
+       |  FROM c GROUP BY 1, 2, 3)
+       |SELECT source, shard, bin, n_docs, bin_tokens,
+       |       CAST((1000 * bin_tokens) // 2048 AS BIGINT) AS fill_permille,
+       |       bin = max(bin) OVER (PARTITION BY source, shard) AS is_last
+       |FROM b ORDER BY source, shard, bin""".stripMargin)
 
   /** Source-concentration report (see corpus.Mixing
     * .sourceBalance): one-row max-share / effective-source-count /

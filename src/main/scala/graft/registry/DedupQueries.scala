@@ -18,6 +18,104 @@ object DedupQueries extends Module("dedup") {
   private val shingleCountsCte =
     "counts AS (SELECT id, count(*) AS n_sh FROM sh GROUP BY id)"
 
+  /** The pigeonhole bands of the 16-bit simhash at Hamming radius
+    * `maxDist` (mirrors Dedup.chunkBounds(16, maxDist + 1)): `sh16`, the
+    * signature as an integer `v`, and `chunks(id, v, chunk, bits)`, one
+    * row per band. */
+  private def simhashBandsCte(maxDist: Int): String = {
+    val bounds = Map(1 -> Seq((1, 8), (9, 8)), 2 -> Seq((1, 6), (7, 5), (12, 5)))(maxDist)
+    val chunks = bounds.zipWithIndex
+      .map { case ((start, len), i) =>
+        s"SELECT id, v, $i AS chunk, substring(simhash, $start, $len) AS bits FROM v" }
+      .mkString("\n  UNION ALL\n  ")
+    s"""$simhashCte,
+       |v AS (SELECT id, simhash, CAST(concat('0b', simhash) AS BIGINT) AS v FROM sh16),
+       |chunks AS (
+       |  $chunks)""".stripMargin
+  }
+
+  /** simhash-16 near-dup pairs `p(id_a, id_b[, hamming])` within Hamming
+    * `maxDist`: the band equi-self-join plus the exact XOR-popcount
+    * verify (mirrors Dedup.simhashNearDupPairsFromSigs). */
+  private def simhashPairsCte(maxDist: Int, hamming: Boolean = false): String = {
+    val hammingCol =
+      if (hamming) ",\n         CAST(bit_count(xor(a.v, b.v)) AS INTEGER) AS hamming" else ""
+    s"""${simhashBandsCte(maxDist)},
+       |p AS (
+       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b$hammingCol
+       |  FROM chunks a JOIN chunks b
+       |    ON a.chunk = b.chunk AND a.bits = b.bits AND a.id < b.id
+       |  WHERE bit_count(xor(a.v, b.v)) <= $maxDist)""".stripMargin
+  }
+
+  /** Connected components of the pair graph `p` → `cl(id, cluster_id)`
+    * for every node of a ≥2-node component, cluster_id = its min id. */
+  private val clustersCte =
+    s"""$reachCte,
+       |cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)""".stripMargin
+
+  /** simhash-16 near-dup clusters at Hamming ≤ 1 as `cl` (mirrors
+    * Dedup.simhashClusters). Needs WITH RECURSIVE. */
+  private val simhashClustersCte = s"${simhashPairsCte(1)},\n$clustersCte"
+
+  /** MinHash signatures and LSH bands over the word-3-gram shingles
+    * (mirrors Dedup.minhashLshPairs at k = 6, rowsPerBand = 2): `sh`,
+    * `counts`, `sigs(id, sig_1..sig_6)` by double hashing (one md5 per
+    * shingle, 60-bit halves h1/h2, permutation i = h1 + i·h2) and
+    * `buckets(id, band, bucket)`. */
+  private val minhashBandsCte: String = {
+    val sigs = (1 to 6)
+      .map(i => s"min(h1 + $i * h2) AS sig_$i")
+      .mkString(",\n         ")
+    val bands = (0 until 3)
+      .map(b => s"SELECT id, $b AS band, concat_ws('|', CAST(sig_${2 * b + 1} AS VARCHAR), CAST(sig_${2 * b + 2} AS VARCHAR)) AS bucket FROM sigs")
+      .mkString("\n  UNION ALL\n  ")
+    s"""$shinglesCte,
+       |$shingleCountsCte,
+       |sigs AS (
+       |  SELECT id,
+       |         $sigs
+       |  FROM (SELECT id,
+       |               CAST(concat('0x', substring(md5(shingle), 1, 15)) AS BIGINT) AS h1,
+       |               CAST(concat('0x', substring(md5(shingle), 17, 15)) AS BIGINT) AS h2
+       |        FROM sh) GROUP BY id),
+       |buckets AS (
+       |  $bands)""".stripMargin
+  }
+
+  /** Pairs that share an LSH bucket: `cand(id_a, id_b)`. */
+  private val bandCandCte =
+    """cand AS (
+      |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
+      |  FROM buckets x JOIN buckets y
+      |    ON x.band = y.band AND x.bucket = y.bucket AND x.id < y.id)""".stripMargin
+
+  /** Shared-shingle count of each candidate pair:
+    * `inter(id_a, id_b, n_inter)` (the exact verify). */
+  private val candInterCte =
+    """inter AS (
+      |  SELECT cand.id_a, cand.id_b, count(*) AS n_inter
+      |  FROM cand
+      |  JOIN sh sa ON sa.id = cand.id_a
+      |  JOIN sh sb ON sb.id = cand.id_b AND sb.shingle = sa.shingle
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** Shared-shingle count of every pair that shares one:
+    * `inter(id_a, id_b, n_inter)`, quadratic (the truth side). */
+  private val allPairsInterCte =
+    """inter AS (
+      |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
+      |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
+      |  GROUP BY 1, 2)""".stripMargin
+
+  /** The `inter` pairs with exact Jaccard ≥ `threshold`, as `name(id_a, id_b)`. */
+  private def jaccardPairsCte(name: String, threshold: Double): String =
+    s"""$name AS (
+       |  SELECT id_a, id_b FROM inter
+       |  JOIN counts ca ON ca.id = id_a
+       |  JOIN counts cb ON cb.id = id_b
+       |  WHERE CAST(n_inter AS DOUBLE) / (ca.n_sh + cb.n_sh - n_inter) >= $threshold)""".stripMargin
+
   private def qDedupExact(s: SparkSession, d: String): DataFrame =
     Dedup.exact(t(s, d, "documents"), "doc_id", "text").orderBy(col("keep_id"))
   query("q_dedup_exact", qDedupExact,
@@ -100,27 +198,8 @@ object DedupQueries extends Module("dedup") {
   // The full prep pipeline: dedup survivors (recursive-CTE clusters,
   // the q_dedup_apply machinery) → quality keep (q_quality_filter's
   // rule chain) → hash split (q_train_test_split's percentile).
-  query("q_corpus_pipeline", qCorpusPipeline, {
-    val chunks = Seq((0, 1, 8), (1, 9, 8))
-      .map { case (i, start, len) =>
-        s"SELECT id, v, $i AS chunk, substring(simhash, $start, $len) AS bits FROM v" }
-      .mkString("\n  UNION ALL\n  ")
-    s"""WITH RECURSIVE $simhashCte,
-       |v AS (SELECT id, simhash, CAST(concat('0b', simhash) AS BIGINT) AS v FROM sh16),
-       |chunks AS (
-       |  $chunks),
-       |p AS (
-       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-       |  FROM chunks a JOIN chunks b
-       |    ON a.chunk = b.chunk AND a.bits = b.bits AND a.id < b.id
-       |  WHERE bit_count(xor(a.v, b.v)) <= 1),
-       |eg AS (SELECT id_a AS src, id_b AS dst FROM p
-       |       UNION ALL SELECT id_b AS src, id_a AS dst FROM p),
-       |reach AS (
-       |  SELECT src AS id, src AS r FROM eg
-       |  UNION
-       |  SELECT eg.dst AS id, reach.r AS r FROM reach JOIN eg ON eg.src = reach.id),
-       |cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+  query("q_corpus_pipeline", qCorpusPipeline,
+    s"""WITH RECURSIVE $simhashClustersCte,
        |surv AS (SELECT d.doc_id, d.text FROM documents d
        |         WHERE NOT EXISTS (SELECT 1 FROM cl
        |                           WHERE cl.id = d.doc_id AND cl.cluster_id <> d.doc_id)),
@@ -148,8 +227,7 @@ object DedupQueries extends Module("dedup") {
        |       CASE WHEN CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 80 THEN 'train'
        |            WHEN CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100 < 90 THEN 'valid'
        |            ELSE 'test' END AS split
-       |FROM q WHERE reason IS NULL ORDER BY doc_id""".stripMargin
-  })
+       |FROM q WHERE reason IS NULL ORDER BY doc_id""".stripMargin)
 
   /** Incremental ingest dedup (see Dedup.incrementalExact): a replayed
     * batch — genuinely new docs (doc_id%10=0) plus re-keyed copies of
@@ -221,25 +299,16 @@ object DedupQueries extends Module("dedup") {
   private def qSimhashPairs(s: SparkSession, d: String): DataFrame =
     Dedup.simhashNearDupPairsFromSigs(simhashShared(s, d), maxDist = 2)
       .orderBy(col("id_a"), col("id_b"))
-  query("q_simhash_pairs", qSimhashPairs, {
-    // chunk layout mirrors Dedup.chunkBounds(16, 3) = (1,6),(7,5),(12,5);
-    // '0b…' binary-literal CAST turns the portable 0/1 hash string into
-    // the integer whose XOR popcount is the Hamming distance
-    val chunks = Seq((0, 1, 6), (1, 7, 5), (2, 12, 5))
-      .map { case (i, start, len) =>
-        s"SELECT id, v, $i AS chunk, substring(simhash, $start, $len) AS bits FROM v" }
-      .mkString("\n  UNION ALL\n  ")
-    s"""WITH $simhashCte,
-       |v AS (SELECT id, simhash, CAST(concat('0b', simhash) AS BIGINT) AS v FROM sh16),
-       |chunks AS (
-       |  $chunks)
+  // '0b…' binary-literal CAST turns the portable 0/1 hash string into
+  // the integer whose XOR popcount is the Hamming distance
+  query("q_simhash_pairs", qSimhashPairs,
+    s"""WITH ${simhashBandsCte(2)}
        |SELECT DISTINCT a.id AS id_a, b.id AS id_b,
        |       CAST(bit_count(xor(a.v, b.v)) AS INTEGER) AS hamming
        |FROM chunks a JOIN chunks b
        |  ON a.chunk = b.chunk AND a.bits = b.bits AND a.id < b.id
        |WHERE bit_count(xor(a.v, b.v)) <= 2
-       |ORDER BY id_a, id_b""".stripMargin
-  })
+       |ORDER BY id_a, id_b""".stripMargin)
 
   /** PRODUCTION 64-bit SimHash near-dup pairs: SimHash64Fp narrow
     * signature map → auto-sized pigeonhole bands
@@ -255,36 +324,14 @@ object DedupQueries extends Module("dedup") {
       maxDist = 3)
       .orderBy(col("id_a"), col("id_b"))
   query("q_simhash64_pairs", qSimhash64Pairs, {
-    // 64-bit signature (mirrors functions.SimHash64Fp): vote for bit j
-    // (1-based, MSB-first) is bit (3 − (j−1)%4) of md5 hex digit
-    // ⌈j/4⌉. Banding mirrors Dedup.simhash64BandWidth(500, 3) = 14 →
-    // chunkBounds(64, 5) = (1,13),(14,13),(27,13),(40,13),(53,12);
-    // Hamming runs on hi/lo 32-bit halves (a sign-bit-set 64-bit value
-    // does not survive a decimal round-trip).
-    val bitSums = (1 to 64).map { j =>
-      val digit = (j - 1) / 4 + 1
-      val bit = 3 - ((j - 1) % 4)
-      s"sum(CASE WHEN ((strpos('0123456789abcdef', substring(h, $digit, 1)) - 1) >> $bit) & 1 = 1 THEN 1 ELSE -1 END) AS b_$j"
-    }.mkString(",\n         ")
-    val bitChars = (1 to 64)
-      .map(j => s"CASE WHEN b_$j > 0 THEN '1' ELSE '0' END")
-      .mkString("concat(", ", ", ")")
+    // Banding mirrors Dedup.simhash64BandWidth(500, 3) = 14 →
+    // chunkBounds(64, 5) = (1,13),(14,13),(27,13),(40,13),(53,12).
     val chunks = Seq((0, 1, 13), (1, 14, 13), (2, 27, 13), (3, 40, 13), (4, 53, 12))
       .map { case (i, start, len) =>
         s"SELECT id, hi, lo, $i AS chunk, substring(simhash, $start, $len) AS bits FROM hl" }
       .mkString("\n  UNION ALL\n  ")
-    s"""WITH e AS (
-       |  SELECT doc_id AS id, md5(unnest(string_split(text, ' '))) AS h FROM documents),
-       |s AS (
-       |  SELECT id,
-       |         $bitSums
-       |  FROM e GROUP BY id),
-       |sh64 AS (SELECT id, $bitChars AS simhash FROM s),
-       |hl AS (
-       |  SELECT id, simhash,
-       |         CAST(concat('0b', substring(simhash, 1, 32)) AS BIGINT) AS hi,
-       |         CAST(concat('0b', substring(simhash, 33, 32)) AS BIGINT) AS lo
-       |  FROM sh64),
+    s"""WITH $simhash64Cte,
+       |${hiLoCte()},
        |chunks AS (
        |  $chunks)
        |SELECT DISTINCT a.id AS id_a, b.id AS id_b,
@@ -305,32 +352,13 @@ object DedupQueries extends Module("dedup") {
     Dedup.simhashClusters(simhashShared(s, d), maxDist = 1)
       .withColumnRenamed("id", "doc_id")
       .orderBy(col("doc_id"))
-  query("q_dedup_clusters", qDedupClusters, {
-    // chunk layout mirrors Dedup.chunkBounds(16, 2) = (1,8),(9,8);
-    // transitive closure via a recursive CTE (UNION dedups → fixpoint),
-    // component id = min reachable node over the undirected edge set
-    val chunks = Seq((0, 1, 8), (1, 9, 8))
-      .map { case (i, start, len) =>
-        s"SELECT id, v, $i AS chunk, substring(simhash, $start, $len) AS bits FROM v" }
-      .mkString("\n  UNION ALL\n  ")
-    s"""WITH RECURSIVE $simhashCte,
-       |v AS (SELECT id, simhash, CAST(concat('0b', simhash) AS BIGINT) AS v FROM sh16),
-       |chunks AS (
-       |  $chunks),
-       |p AS (
-       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-       |  FROM chunks a JOIN chunks b
-       |    ON a.chunk = b.chunk AND a.bits = b.bits AND a.id < b.id
-       |  WHERE bit_count(xor(a.v, b.v)) <= 1),
-       |eg AS (SELECT id_a AS src, id_b AS dst FROM p
-       |       UNION ALL SELECT id_b AS src, id_a AS dst FROM p),
-       |reach AS (
-       |  SELECT src AS id, src AS r FROM eg
-       |  UNION
-       |  SELECT eg.dst AS id, reach.r AS r FROM reach JOIN eg ON eg.src = reach.id)
+  // transitive closure via a recursive CTE, component id = min
+  // reachable node over the undirected edge set
+  query("q_dedup_clusters", qDedupClusters,
+    s"""WITH RECURSIVE ${simhashPairsCte(1)},
+       |$reachCte
        |SELECT id AS doc_id, min(r) AS cluster_id FROM reach GROUP BY id
-       |ORDER BY doc_id""".stripMargin
-  })
+       |ORDER BY doc_id""".stripMargin)
 
   /** End-to-end dedup APPLY — the write-the-clean-corpus step: drop every
     * doc that belongs to a near-dup cluster but is not its minimum (the
@@ -349,32 +377,12 @@ object DedupQueries extends Module("dedup") {
   }
   // same cluster CTEs as q_dedup_clusters; apply = keep docs that are
   // not a non-minimum member of any cluster
-  query("q_dedup_apply", qDedupApply, {
-    val chunks = Seq((0, 1, 8), (1, 9, 8))
-      .map { case (i, start, len) =>
-        s"SELECT id, v, $i AS chunk, substring(simhash, $start, $len) AS bits FROM v" }
-      .mkString("\n  UNION ALL\n  ")
-    s"""WITH RECURSIVE $simhashCte,
-       |v AS (SELECT id, simhash, CAST(concat('0b', simhash) AS BIGINT) AS v FROM sh16),
-       |chunks AS (
-       |  $chunks),
-       |p AS (
-       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-       |  FROM chunks a JOIN chunks b
-       |    ON a.chunk = b.chunk AND a.bits = b.bits AND a.id < b.id
-       |  WHERE bit_count(xor(a.v, b.v)) <= 1),
-       |eg AS (SELECT id_a AS src, id_b AS dst FROM p
-       |       UNION ALL SELECT id_b AS src, id_a AS dst FROM p),
-       |reach AS (
-       |  SELECT src AS id, src AS r FROM eg
-       |  UNION
-       |  SELECT eg.dst AS id, reach.r AS r FROM reach JOIN eg ON eg.src = reach.id),
-       |cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
+  query("q_dedup_apply", qDedupApply,
+    s"""WITH RECURSIVE $simhashClustersCte
        |SELECT d.doc_id FROM documents d
        |WHERE NOT EXISTS (SELECT 1 FROM cl
        |                  WHERE cl.id = d.doc_id AND cl.cluster_id <> d.doc_id)
-       |ORDER BY d.doc_id""".stripMargin
-  })
+       |ORDER BY d.doc_id""".stripMargin)
 
   /** Eval-set decontamination: corpus docs (doc_id % 50 ≠ 0) sharing any
     * word trigram with the "benchmark" slice (doc_id % 50 = 0), with the
@@ -404,10 +412,7 @@ object DedupQueries extends Module("dedup") {
   query("q_ngram_jaccard", qNgramJaccard,
     s"""WITH $shinglesCte,
        |$shingleCountsCte,
-       |inter AS (
-       |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-       |  GROUP BY 1, 2)
+       |$allPairsInterCte
        |${jaccardSelect(0.8)}""".stripMargin)
 
   /** Sorted-neighborhood blocking dedup (see Dedup
@@ -442,12 +447,7 @@ object DedupQueries extends Module("dedup") {
        |    UNION ALL
        |    SELECT x.doc_id AS id_a, y.doc_id AS id_b
        |    FROM r2 x JOIN r2 y ON y.r > x.r AND y.r <= x.r + 5)),
-       |inter AS (
-       |  SELECT cand.id_a, cand.id_b, count(*) AS n_inter
-       |  FROM cand
-       |  JOIN sh sa ON sa.id = cand.id_a
-       |  JOIN sh sb ON sb.id = cand.id_b AND sb.shingle = sa.shingle
-       |  GROUP BY 1, 2)
+       |$candInterCte
        |${jaccardSelect(0.8)}""".stripMargin
   })
 
@@ -455,37 +455,11 @@ object DedupQueries extends Module("dedup") {
     Dedup.minhashLshPairs(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text",
       n = 3, k = 6, rowsPerBand = 2, threshold = 0.7)
       .orderBy(col("id_a"), col("id_b"))
-  query("q_minhash_lsh", qMinhashLsh, {
-    // double-hash permutations: one md5 per shingle, 60-bit halves
-    val sigs = (1 to 6)
-      .map(i => s"min(h1 + $i * h2) AS sig_$i")
-      .mkString(",\n         ")
-    val bands = (0 until 3)
-      .map(b => s"SELECT id, $b AS band, concat_ws('|', CAST(sig_${2 * b + 1} AS VARCHAR), CAST(sig_${2 * b + 2} AS VARCHAR)) AS bucket FROM sigs")
-      .mkString("\n  UNION ALL\n  ")
-    s"""WITH $shinglesCte,
-       |$shingleCountsCte,
-       |sigs AS (
-       |  SELECT id,
-       |         $sigs
-       |  FROM (SELECT id,
-       |               CAST(concat('0x', substring(md5(shingle), 1, 15)) AS BIGINT) AS h1,
-       |               CAST(concat('0x', substring(md5(shingle), 17, 15)) AS BIGINT) AS h2
-       |        FROM sh) GROUP BY id),
-       |buckets AS (
-       |  $bands),
-       |cand AS (
-       |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |  FROM buckets x JOIN buckets y
-       |    ON x.band = y.band AND x.bucket = y.bucket AND x.id < y.id),
-       |inter AS (
-       |  SELECT cand.id_a, cand.id_b, count(*) AS n_inter
-       |  FROM cand
-       |  JOIN sh sa ON sa.id = cand.id_a
-       |  JOIN sh sb ON sb.id = cand.id_b AND sb.shingle = sa.shingle
-       |  GROUP BY 1, 2)
-       |${jaccardSelect(0.7)}""".stripMargin
-  })
+  query("q_minhash_lsh", qMinhashLsh,
+    s"""WITH $minhashBandsCte,
+       |$bandCandCte,
+       |$candInterCte
+       |${jaccardSelect(0.7)}""".stripMargin)
 
   /** MinHash estimator calibration (see
     * Dedup.minhashCalibration): per match-count bucket, the exact
@@ -500,40 +474,16 @@ object DedupQueries extends Module("dedup") {
   // MinHash estimator calibration: per match-count bucket the exact
   // true-Jaccard mean/min/max permille over the candidate pairs.
   query("q_minhash_calibration", qMinhashCalibration, {
-    val sigs = (1 to 6)
-      .map(i => s"min(h1 + $i * h2) AS sig_$i")
-      .mkString(",\n         ")
-    val bands = (0 until 3)
-      .map(b => s"SELECT id, $b AS band, concat_ws('|', CAST(sig_${2 * b + 1} AS VARCHAR), CAST(sig_${2 * b + 2} AS VARCHAR)) AS bucket FROM sigs")
-      .mkString("\n  UNION ALL\n  ")
     val matches = (1 to 6)
       .map(i => s"CASE WHEN a.sig_$i = b.sig_$i THEN 1 ELSE 0 END")
       .mkString(" + ")
-    s"""WITH $shinglesCte,
-       |$shingleCountsCte,
-       |sigs AS (
-       |  SELECT id,
-       |         $sigs
-       |  FROM (SELECT id,
-       |               CAST(concat('0x', substring(md5(shingle), 1, 15)) AS BIGINT) AS h1,
-       |               CAST(concat('0x', substring(md5(shingle), 17, 15)) AS BIGINT) AS h2
-       |        FROM sh) GROUP BY id),
-       |buckets AS (
-       |  $bands),
-       |cand AS (
-       |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |  FROM buckets x JOIN buckets y
-       |    ON x.band = y.band AND x.bucket = y.bucket AND x.id < y.id),
+    s"""WITH $minhashBandsCte,
+       |$bandCandCte,
        |m AS (
        |  SELECT cand.id_a, cand.id_b, CAST($matches AS INTEGER) AS n_matches
        |  FROM cand JOIN sigs a ON a.id = cand.id_a
        |            JOIN sigs b ON b.id = cand.id_b),
-       |inter AS (
-       |  SELECT cand.id_a, cand.id_b, count(*) AS n_inter
-       |  FROM cand
-       |  JOIN sh sa ON sa.id = cand.id_a
-       |  JOIN sh sb ON sb.id = cand.id_b AND sb.shingle = sa.shingle
-       |  GROUP BY 1, 2),
+       |$candInterCte,
        |pj AS (
        |  SELECT m.n_matches,
        |         CAST((1000 * COALESCE(i.n_inter, 0))
@@ -581,64 +531,23 @@ object DedupQueries extends Module("dedup") {
   // Dedup ensemble: the three text-method dup sets (exact fingerprint,
   // minhash jaccard >= 0.7, simhash hamming <= 2) rebuilt from their
   // own oracle CTEs, merged as (doc, bit) rows into one aggregate.
-  query("q_dedup_ensemble", qDedupEnsemble, {
-    val sigs = (1 to 6)
-      .map(i => s"min(h1 + $i * h2) AS sig_$i")
-      .mkString(",\n         ")
-    val bands = (0 until 3)
-      .map(b => s"SELECT id, $b AS band, concat_ws('|', CAST(sig_${2 * b + 1} AS VARCHAR), CAST(sig_${2 * b + 2} AS VARCHAR)) AS bucket FROM sigs")
-      .mkString("\n  UNION ALL\n  ")
-    val chunks = Seq((0, 1, 6), (1, 7, 5), (2, 12, 5))
-      .map { case (i, start, len) =>
-        s"SELECT id, v2, $i AS chunk, substring(simhash, $start, $len) AS bits FROM vv" }
-      .mkString("\n  UNION ALL\n  ")
-    s"""WITH $shinglesCte,
-       |$shingleCountsCte,
-       |sigs AS (
-       |  SELECT id,
-       |         $sigs
-       |  FROM (SELECT id,
-       |               CAST(concat('0x', substring(md5(shingle), 1, 15)) AS BIGINT) AS h1,
-       |               CAST(concat('0x', substring(md5(shingle), 17, 15)) AS BIGINT) AS h2
-       |        FROM sh) GROUP BY id),
-       |buckets AS (
-       |  $bands),
-       |mcand AS (
-       |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |  FROM buckets x JOIN buckets y
-       |    ON x.band = y.band AND x.bucket = y.bucket AND x.id < y.id),
-       |minter AS (
-       |  SELECT mcand.id_a, mcand.id_b, count(*) AS n_inter
-       |  FROM mcand
-       |  JOIN sh sa ON sa.id = mcand.id_a
-       |  JOIN sh sb ON sb.id = mcand.id_b AND sb.shingle = sa.shingle
-       |  GROUP BY 1, 2),
-       |mj AS (
-       |  SELECT id_a, id_b FROM minter
-       |  JOIN counts ca ON ca.id = id_a
-       |  JOIN counts cb ON cb.id = id_b
-       |  WHERE CAST(n_inter AS DOUBLE) / (ca.n_sh + cb.n_sh - n_inter) >= 0.7),
-       |$simhashCte,
-       |vv AS (SELECT id, simhash, CAST(concat('0b', simhash) AS BIGINT) AS v2 FROM sh16),
-       |chunks AS (
-       |  $chunks),
-       |sp AS (
-       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-       |  FROM chunks a JOIN chunks b
-       |    ON a.chunk = b.chunk AND a.bits = b.bits AND a.id < b.id
-       |  WHERE bit_count(xor(a.v2, b.v2)) <= 2),
+  query("q_dedup_ensemble", qDedupEnsemble,
+    s"""WITH $minhashBandsCte,
+       |$bandCandCte,
+       |$candInterCte,
+       |${jaccardPairsCte("mj", 0.7)},
+       |${simhashPairsCte(2)},
        |fpg AS (SELECT doc_id, $fpExpr AS fp FROM documents),
        |fk AS (SELECT fp, min(doc_id) AS keep FROM fpg GROUP BY 1),
        |ex AS (SELECT fpg.doc_id, 1 AS bit FROM fpg JOIN fk USING (fp)
        |       WHERE doc_id <> keep),
        |mh AS (SELECT DISTINCT id_b AS doc_id, 2 AS bit FROM mj),
-       |shd AS (SELECT DISTINCT id_b AS doc_id, 4 AS bit FROM sp),
+       |shd AS (SELECT DISTINCT id_b AS doc_id, 4 AS bit FROM p),
        |u AS (SELECT * FROM ex UNION ALL SELECT * FROM mh
        |      UNION ALL SELECT * FROM shd)
        |SELECT doc_id, CAST(sum(bit) AS BIGINT) AS method_mask,
        |       CAST(count(*) AS BIGINT) AS n_methods
-       |FROM u GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  })
+       |FROM u GROUP BY doc_id ORDER BY doc_id""".stripMargin)
 
   /** Banding-quality evaluation — the (k, rowsPerBand) knob study every
     * MinHash deployment runs before committing band parameters at
@@ -669,37 +578,11 @@ object DedupQueries extends Module("dedup") {
   // Banding-quality eval: q_minhash_lsh's sigs/buckets CTEs generate
   // the DISTINCT candidate set; truth = the full quadratic
   // exact-Jaccard >= 0.7 pairs; integer-permille precision/recall.
-  query("q_dedup_eval", qDedupEval, {
-    val sigs = (1 to 6)
-      .map(i => s"min(h1 + $i * h2) AS sig_$i")
-      .mkString(",\n         ")
-    val bands = (0 until 3)
-      .map(b => s"SELECT id, $b AS band, concat_ws('|', CAST(sig_${2 * b + 1} AS VARCHAR), CAST(sig_${2 * b + 2} AS VARCHAR)) AS bucket FROM sigs")
-      .mkString("\n  UNION ALL\n  ")
-    s"""WITH $shinglesCte,
-       |$shingleCountsCte,
-       |sigs AS (
-       |  SELECT id,
-       |         $sigs
-       |  FROM (SELECT id,
-       |               CAST(concat('0x', substring(md5(shingle), 1, 15)) AS BIGINT) AS h1,
-       |               CAST(concat('0x', substring(md5(shingle), 17, 15)) AS BIGINT) AS h2
-       |        FROM sh) GROUP BY id),
-       |buckets AS (
-       |  $bands),
-       |cand AS (
-       |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
-       |  FROM buckets x JOIN buckets y
-       |    ON x.band = y.band AND x.bucket = y.bucket AND x.id < y.id),
-       |inter AS (
-       |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-       |  GROUP BY 1, 2),
-       |truth AS (
-       |  SELECT id_a, id_b FROM inter
-       |  JOIN counts ca ON ca.id = id_a
-       |  JOIN counts cb ON cb.id = id_b
-       |  WHERE CAST(n_inter AS DOUBLE) / (ca.n_sh + cb.n_sh - n_inter) >= 0.7),
+  query("q_dedup_eval", qDedupEval,
+    s"""WITH $minhashBandsCte,
+       |$bandCandCte,
+       |$allPairsInterCte,
+       |${jaccardPairsCte("truth", 0.7)},
        |tp AS (SELECT 1 FROM cand JOIN truth USING (id_a, id_b)),
        |s AS (SELECT (SELECT CAST(count(*) AS BIGINT) FROM truth) AS n_truth,
        |             (SELECT CAST(count(*) AS BIGINT) FROM cand) AS n_cand,
@@ -707,8 +590,7 @@ object DedupQueries extends Module("dedup") {
        |SELECT n_truth, n_cand, n_tp,
        |       CAST(n_tp * 1000 // n_cand AS BIGINT) AS precision_permille,
        |       CAST(n_tp * 1000 // n_truth AS BIGINT) AS recall_permille
-       |FROM s""".stripMargin
-  })
+       |FROM s""".stripMargin)
 
   /** Incremental near-dup admission: the day's batch (doc_id%10==0)
     * screened against the standing corpus — O(batch) signatures join
@@ -724,37 +606,15 @@ object DedupQueries extends Module("dedup") {
   }
   // Incremental near-dup: same sigs/banding CTEs, but candidates are
   // batch (id%10==0) × store (id%10<>0) only; exact-Jaccard verify.
-  query("q_incremental_neardup", qIncrementalNearDup, {
-    val sigs = (1 to 6)
-      .map(i => s"min(h1 + $i * h2) AS sig_$i")
-      .mkString(",\n         ")
-    val bands = (0 until 3)
-      .map(b => s"SELECT id, $b AS band, concat_ws('|', CAST(sig_${2 * b + 1} AS VARCHAR), CAST(sig_${2 * b + 2} AS VARCHAR)) AS bucket FROM sigs")
-      .mkString("\n  UNION ALL\n  ")
-    s"""WITH $shinglesCte,
-       |$shingleCountsCte,
-       |sigs AS (
-       |  SELECT id,
-       |         $sigs
-       |  FROM (SELECT id,
-       |               CAST(concat('0x', substring(md5(shingle), 1, 15)) AS BIGINT) AS h1,
-       |               CAST(concat('0x', substring(md5(shingle), 17, 15)) AS BIGINT) AS h2
-       |        FROM sh) GROUP BY id),
-       |buckets AS (
-       |  $bands),
+  query("q_incremental_neardup", qIncrementalNearDup,
+    s"""WITH $minhashBandsCte,
        |cand AS (
        |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
        |  FROM buckets x JOIN buckets y
        |    ON x.band = y.band AND x.bucket = y.bucket
        |  WHERE x.id % 10 = 0 AND y.id % 10 <> 0),
-       |inter AS (
-       |  SELECT cand.id_a, cand.id_b, count(*) AS n_inter
-       |  FROM cand
-       |  JOIN sh sa ON sa.id = cand.id_a
-       |  JOIN sh sb ON sb.id = cand.id_b AND sb.shingle = sa.shingle
-       |  GROUP BY 1, 2)
-       |${jaccardSelect(0.5)}""".stripMargin
-  })
+       |$candInterCte
+       |${jaccardSelect(0.5)}""".stripMargin)
 
   private def qContainment(s: SparkSession, d: String): DataFrame =
     Dedup.containmentPairs(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text",
@@ -769,10 +629,7 @@ object DedupQueries extends Module("dedup") {
   query("q_containment", qContainment,
     s"""WITH $shinglesCte,
        |$shingleCountsCte,
-       |inter AS (
-       |  SELECT a.id AS id_a, b.id AS id_b, count(*) AS n_inter
-       |  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.id < b.id
-       |  GROUP BY 1, 2)
+       |$allPairsInterCte
        |SELECT id_a, id_b,
        |       CAST(n_inter AS DOUBLE) / ca.n_sh AS c_ab,
        |       CAST(n_inter AS DOUBLE) / cb.n_sh AS c_ba
@@ -811,21 +668,12 @@ object DedupQueries extends Module("dedup") {
   // cluster; keep = cluster minimum (vectors in no cluster keep
   // themselves).
   query("q_semdedup", qSemDedup,
-    s"""WITH RECURSIVE b AS (
-       |  SELECT vec_id, $bucket4Expr AS bucket FROM embeddings),
-       |$fpVecCte,
-       |v AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN b ON nv.vec_id = b.vec_id),
+    s"""WITH RECURSIVE ${bucketVecCte(nonZero = false)},
        |p AS (
        |  SELECT x.vec_id AS id_a, y.vec_id AS id_b
        |  FROM v x JOIN v y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
        |  WHERE x.nn > 0 AND y.nn > 0 AND ${cosineExpr("x", "y")} >= 0.4),
-       |eg AS (SELECT id_a AS src, id_b AS dst FROM p
-       |       UNION ALL SELECT id_b AS src, id_a AS dst FROM p),
-       |reach AS (
-       |  SELECT src AS id, src AS r FROM eg
-       |  UNION
-       |  SELECT eg.dst AS id, reach.r AS r FROM reach JOIN eg ON eg.src = reach.id),
-       |cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)
+       |$clustersCte
        |SELECT e.vec_id,
        |       COALESCE(cl.cluster_id, e.vec_id) AS cluster_id,
        |       COALESCE(cl.cluster_id, e.vec_id) = e.vec_id AS keep
@@ -849,41 +697,15 @@ object DedupQueries extends Module("dedup") {
   // q_dedup_clusters, quality fp6 from the q_quality_calibrated CTEs,
   // argmax via the packed key q*2^32 + (2^32-1-id) — plain integer
   // max, totally ordered, engine-exact.
-  query("q_dedup_best", qDedupBest, {
-    val hits = vocabHits(stop("en"))
-    val chunks = Seq((0, 1, 8), (1, 9, 8))
-      .map { case (i, start, len) =>
-        s"SELECT id, v, $i AS chunk, substring(simhash, $start, $len) AS bits FROM v" }
-      .mkString("\n  UNION ALL\n  ")
-    s"""WITH RECURSIVE $simhashCte,
-       |v AS (SELECT id, simhash, CAST(concat('0b', simhash) AS BIGINT) AS v FROM sh16),
-       |chunks AS (
-       |  $chunks),
-       |p AS (
-       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-       |  FROM chunks a JOIN chunks b
-       |    ON a.chunk = b.chunk AND a.bits = b.bits AND a.id < b.id
-       |  WHERE bit_count(xor(a.v, b.v)) <= 1),
-       |eg AS (SELECT id_a AS src, id_b AS dst FROM p
-       |       UNION ALL SELECT id_b AS src, id_a AS dst FROM p),
-       |reach AS (
-       |  SELECT src AS id, src AS r FROM eg
-       |  UNION
-       |  SELECT eg.dst AS id, reach.r AS r FROM reach JOIN eg ON eg.src = reach.id),
-       |cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+  query("q_dedup_best", qDedupBest,
+    s"""WITH RECURSIVE $simhashClustersCte,
        |t AS (
        |  SELECT doc_id,
-       |         CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
-       |         $hits AS hits,
-       |         CASE WHEN length(text) > 0
-       |              THEN CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS DOUBLE) / length(text)
-       |              ELSE 0.0 END AS punct_ratio
+       |         $qualityFeatures
        |  FROM documents),
        |q AS (
        |  SELECT doc_id,
-       |         CAST(round(((CASE WHEN n_tokens BETWEEN 20 AND 1000 THEN 1.0 ELSE 0.0 END) * 0.4
-       |           + least((CASE WHEN n_tokens > 0 THEN CAST(hits AS DOUBLE) / n_tokens ELSE 0.0 END) * 4.0, 1.0) * 0.4
-       |           + (1.0 - punct_ratio) * 0.2) * 1000000.0) AS BIGINT) AS q_fp6
+       |         $qualityFp6 AS q_fp6
        |  FROM t),
        |m AS (
        |  SELECT cl.cluster_id,
@@ -893,8 +715,7 @@ object DedupQueries extends Module("dedup") {
        |       4294967295 - (max(pk) % 4294967296) AS best_id,
        |       max(pk) // 4294967296 AS best_q_fp6,
        |       count(*) AS n_docs
-       |FROM m GROUP BY cluster_id ORDER BY cluster_id""".stripMargin
-  })
+       |FROM m GROUP BY cluster_id ORDER BY cluster_id""".stripMargin)
 
   /** Chunk-level dedup over CONTENT-DEFINED chunks (Dedup.cdcChunks —
     * boundaries from local token hashes, so shared passages keep their
@@ -997,21 +818,8 @@ object DedupQueries extends Module("dedup") {
   // q_train_test_split md5-percent sides; pairs straddling the split
   // are the leaks.
   query("q_split_leakage", qSplitLeakage, {
-    val chunks = Seq((0, 1, 6), (1, 7, 5), (2, 12, 5))
-      .map { case (i, start, len) =>
-        s"SELECT id, v, $i AS chunk, substring(simhash, $start, $len) AS bits FROM v" }
-      .mkString("\n  UNION ALL\n  ")
     val pct = "CAST(concat('0x', substring(md5(CAST(doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 100"
-    s"""WITH $simhashCte,
-       |v AS (SELECT id, simhash, CAST(concat('0b', simhash) AS BIGINT) AS v FROM sh16),
-       |chunks AS (
-       |  $chunks),
-       |p AS (
-       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b,
-       |         CAST(bit_count(xor(a.v, b.v)) AS INTEGER) AS hamming
-       |  FROM chunks a JOIN chunks b
-       |    ON a.chunk = b.chunk AND a.bits = b.bits AND a.id < b.id
-       |  WHERE bit_count(xor(a.v, b.v)) <= 2),
+    s"""WITH ${simhashPairsCte(2, hamming = true)},
        |sides AS (
        |  SELECT doc_id,
        |         CASE WHEN $pct < 80 THEN 'train'
@@ -1050,27 +858,8 @@ object DedupQueries extends Module("dedup") {
   // Cluster-size histogram off the q_dedup_clusters recursive closure
   // (Hamming <= 1 → 2 chunks of 8 bits), plus the singleton row from
   // the two scalar counts.
-  query("q_cluster_sizes", qClusterSizes, {
-    val chunks = Seq((0, 1, 8), (1, 9, 8))
-      .map { case (i, start, len) =>
-        s"SELECT id, v, $i AS chunk, substring(simhash, $start, $len) AS bits FROM v" }
-      .mkString("\n  UNION ALL\n  ")
-    s"""WITH RECURSIVE $simhashCte,
-       |v AS (SELECT id, simhash, CAST(concat('0b', simhash) AS BIGINT) AS v FROM sh16),
-       |chunks AS (
-       |  $chunks),
-       |p AS (
-       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-       |  FROM chunks a JOIN chunks b
-       |    ON a.chunk = b.chunk AND a.bits = b.bits AND a.id < b.id
-       |  WHERE bit_count(xor(a.v, b.v)) <= 1),
-       |eg AS (SELECT id_a AS src, id_b AS dst FROM p
-       |       UNION ALL SELECT id_b AS src, id_a AS dst FROM p),
-       |reach AS (
-       |  SELECT src AS id, src AS r FROM eg
-       |  UNION
-       |  SELECT eg.dst AS id, reach.r AS r FROM reach JOIN eg ON eg.src = reach.id),
-       |cl AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id),
+  query("q_cluster_sizes", qClusterSizes,
+    s"""WITH RECURSIVE $simhashClustersCte,
        |sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS size FROM cl GROUP BY cluster_id),
        |h AS (SELECT size, CAST(count(*) AS BIGINT) AS n_clusters FROM sz GROUP BY size),
        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM documents),
@@ -1080,8 +869,7 @@ object DedupQueries extends Module("dedup") {
        |SELECT CAST(1 AS BIGINT) AS size, n_total - n_clustered AS n_clusters,
        |       n_total - n_clustered AS n_docs
        |FROM tot, clu
-       |ORDER BY size""".stripMargin
-  })
+       |ORDER BY size""".stripMargin)
 
   /** CROSS-SOURCE near-dup overlap matrix — which sources copy which:
     * the mirror-site/content-farm detector that decides whether a
@@ -1111,28 +899,15 @@ object DedupQueries extends Module("dedup") {
   // Cross-source overlap matrix: the q_split_leakage pair closure
   // (Hamming <= 2 → 3 chunks) joined to sources, canonicalized
   // undirected via least/greatest.
-  query("q_source_overlap", qSourceOverlap, {
-    val chunks = Seq((0, 1, 6), (1, 7, 5), (2, 12, 5))
-      .map { case (i, start, len) =>
-        s"SELECT id, v, $i AS chunk, substring(simhash, $start, $len) AS bits FROM v" }
-      .mkString("\n  UNION ALL\n  ")
-    s"""WITH $simhashCte,
-       |v AS (SELECT id, simhash, CAST(concat('0b', simhash) AS BIGINT) AS v FROM sh16),
-       |chunks AS (
-       |  $chunks),
-       |p AS (
-       |  SELECT DISTINCT a.id AS id_a, b.id AS id_b
-       |  FROM chunks a JOIN chunks b
-       |    ON a.chunk = b.chunk AND a.bits = b.bits AND a.id < b.id
-       |  WHERE bit_count(xor(a.v, b.v)) <= 2)
+  query("q_source_overlap", qSourceOverlap,
+    s"""WITH ${simhashPairsCte(2)}
        |SELECT least(sa.source, sb.source) AS source_a,
        |       greatest(sa.source, sb.source) AS source_b,
        |       CAST(count(*) AS BIGINT) AS n_pairs
        |FROM p JOIN documents sa ON sa.doc_id = p.id_a
        |       JOIN documents sb ON sb.doc_id = p.id_b
        |GROUP BY 1, 2
-       |ORDER BY source_a, source_b""".stripMargin
-  })
+       |ORDER BY source_a, source_b""".stripMargin)
 
   /** Incremental CDC-chunk admission (Dedup.incrementalCdcAdmit): the
     * day's batch (doc_id%10==0) chunked in-row and screened against the

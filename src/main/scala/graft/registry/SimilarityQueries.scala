@@ -14,6 +14,157 @@ import SharedSql._
   * quantization. */
 object SimilarityQueries extends Module("similarity") {
 
+  /** The seeded PQ codebook (mirrors Vectors.pqCodes at m = 4, k = 16):
+    * `cb(cid, cfv)`, the first 16 vectors of `fp`, and the subspaces
+    * `js(j)`. */
+  private val pqBookCte =
+    """cb AS (SELECT vec_id AS cid, fv AS cfv FROM fp WHERE vec_id < 16),
+      |js AS (SELECT unnest(range(0, 4)) AS j)""".stripMargin
+
+  /** Exact integer squared L2 between subvector js.j of the list `x`
+    * and codebook entry cb. */
+  private def pqSubDist(x: String): String =
+    s"""list_sum(list_transform(range(1, 17), i ->
+       |           ($x[js.j*16 + i] - cb.cfv[js.j*16 + i])
+       |           * ($x[js.j*16 + i] - cb.cfv[js.j*16 + i])))""".stripMargin
+
+  /** Every (vector, subspace, codebook entry) distance as
+    * `pairs(vec_id, j, cid, dist)`; `where` filters the vectors. */
+  private def pqPairsCte(where: String = ""): String =
+    s"""pairs AS (
+       |  SELECT v.vec_id, js.j, cb.cid,
+       |         ${pqSubDist("v.fv")} AS dist
+       |  FROM fp v, js, cb$where)""".stripMargin
+
+  /** Each vector's PQ code per subspace, `codes(vec_id, j, cid)`: the
+    * (dist, cid) argmin over `pairs`. */
+  private val pqCodesCte =
+    """codes AS (
+      |  SELECT vec_id, j, cid FROM (
+      |    SELECT vec_id, j, cid,
+      |           row_number() OVER (PARTITION BY vec_id, j ORDER BY dist, cid) AS rn
+      |    FROM pairs) WHERE rn = 1)""".stripMargin
+
+  /** PQ asymmetric-distance top-10 of `codes` around the query `q(qfv)`:
+    * the query-to-codebook lookup table, then one summed lookup per
+    * vector (mirrors Vectors.pqTopK). */
+  private val pqAdcSelect =
+    s"""lut AS (
+       |  SELECT js.j, cb.cid,
+       |         ${pqSubDist("q.qfv")} AS d
+       |  FROM q, js, cb)
+       |SELECT c.vec_id, CAST(sum(l.d) AS BIGINT) AS adc_dist
+       |FROM codes c JOIN lut l ON c.j = l.j AND c.cid = l.cid
+       |GROUP BY c.vec_id
+       |ORDER BY adc_dist, c.vec_id LIMIT 10""".stripMargin
+
+  /** Top-`k` of the candidate scores `sc(query_id, match_id, cosine)` per
+    * query, by the (cosine DESC, match_id ASC) contract of TopKByScore. */
+  private def topKSelect(k: Int): String =
+    s"""r AS (
+       |  SELECT query_id, match_id, cosine,
+       |         CAST(row_number() OVER (PARTITION BY query_id
+       |                                 ORDER BY cosine DESC, match_id ASC) AS INTEGER) AS "rank"
+       |  FROM sc)
+       |SELECT query_id, match_id, cosine, "rank" FROM r WHERE "rank" <= $k
+       |ORDER BY query_id, "rank"""".stripMargin
+
+  /** Exact top-10 truth for the queries vec_id < 5 over every non-zero
+    * vector (mirrors Vectors.bruteForceTopK): `bf(query_id, match_id)`. */
+  private val bruteForceTop10Cte =
+    s"""bf AS (
+       |  SELECT query_id, match_id FROM (
+       |    SELECT q.vec_id AS query_id, c.vec_id AS match_id,
+       |           row_number() OVER (PARTITION BY q.vec_id
+       |                              ORDER BY ${cosineExpr("q", "c")} DESC, c.vec_id ASC) AS rk
+       |    FROM nv q, nv c
+       |    WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id AND q.nn > 0 AND c.nn > 0)
+       |  WHERE rk <= 10)""".stripMargin
+
+  /** Per-query recall of the index top-k `index(query_id, match_id)`
+    * against `bf`, in integer permille. */
+  private def recallSelect(index: String): String =
+    s"""nb AS (SELECT query_id, count(*) AS n_bf FROM bf GROUP BY query_id),
+       |ht AS (SELECT bf.query_id, count(*) AS n_hit
+       |       FROM bf JOIN $index ON bf.query_id = $index.query_id AND bf.match_id = $index.match_id
+       |       GROUP BY bf.query_id)
+       |SELECT nb.query_id, nb.n_bf, COALESCE(ht.n_hit, 0) AS n_hit,
+       |       COALESCE(ht.n_hit, 0) * 1000 // nb.n_bf AS recall_permille
+       |FROM nb LEFT JOIN ht ON nb.query_id = ht.query_id
+       |ORDER BY nb.query_id""".stripMargin
+
+  /** Cosine of vector `v` (fv, nn) and centroid `c` (cent_v, cent_n). */
+  private def centCos(v: String, c: String): String =
+    s"CAST(list_sum(list_transform(range(1, len($v.fv) + 1), i -> $v.fv[i] * $c.cent_v[i])) AS DOUBLE)" +
+      s" / (sqrt(CAST($v.nn AS DOUBLE)) * sqrt(CAST($c.cent_n AS DOUBLE)))"
+
+  /** The seeded IVF coarse quantizer: the first 16 non-zero vectors as
+    * `cents(cent_id, cent_v, cent_n)`. */
+  private val seedCentsCte =
+    """cents AS (SELECT vec_id AS cent_id, fv AS cent_v, nn AS cent_n
+      |          FROM nv WHERE vec_id < 16 AND nn > 0)""".stripMargin
+
+  /** The IVF scan over `cents` (mirrors Vectors.ivfTopK at nProbe = 4):
+    * each non-zero vector's list `casgn`, the 4 lists each query
+    * vec_id < 5 probes `qasgn`, and the query × list-mate scores
+    * `sc(query_id, match_id, cosine)`. `order` ranks the centroids of a
+    * vector `v`. */
+  private def ivfScanCte(order: String): String = {
+    val cosQC =
+      "CAST(list_sum(list_transform(range(1, len(q_v) + 1), i -> q_v[i] * c_v[i])) AS DOUBLE)" +
+        " / (sqrt(CAST(q_n AS DOUBLE)) * sqrt(CAST(c_n AS DOUBLE)))"
+    s"""casgn AS (
+       |  SELECT c_id, c_v, c_n, cent_id FROM (
+       |    SELECT v.vec_id AS c_id, v.fv AS c_v, v.nn AS c_n, cents.cent_id,
+       |           row_number() OVER (PARTITION BY v.vec_id
+       |                              ORDER BY $order) AS r
+       |    FROM nv v, cents WHERE v.nn > 0)
+       |  WHERE r = 1),
+       |qasgn AS (
+       |  SELECT q_id, q_v, q_n, cent_id FROM (
+       |    SELECT v.vec_id AS q_id, v.fv AS q_v, v.nn AS q_n, cents.cent_id,
+       |           row_number() OVER (PARTITION BY v.vec_id
+       |                              ORDER BY $order) AS r
+       |    FROM nv v, cents WHERE v.nn > 0 AND v.vec_id < 5)
+       |  WHERE r <= 4),
+       |sc AS (
+       |  SELECT DISTINCT q_id AS query_id, c_id AS match_id, $cosQC AS cosine
+       |  FROM qasgn JOIN casgn USING (cent_id) WHERE c_id <> q_id)""".stripMargin
+  }
+
+  /** The seeded quantizer's centroid order for a vector `v`. */
+  private val seedCentOrder = s"${centCos("v", "cents")} DESC, cents.cent_id ASC"
+
+  /** The kNN graph's scored candidates (mirrors Vectors.knnGraph): every
+    * ordered pair of non-zero bucket mates as
+    * `sc(src_id, dst_id, cosine)`, then `r(src_id, dst_id, [cosine,]
+    * "rank")` per source by the (cosine DESC, dst_id ASC) contract of
+    * TopKByScore. `b` names the bucket CTE. */
+  private def knnRankedCte(b: String = "b", withCosine: Boolean = false): String = {
+    val cosine = if (withCosine) " cosine," else ""
+    s"""${bucketVecCte(nonZero = true, b)},
+       |sc AS (
+       |  SELECT x.vec_id AS src_id, y.vec_id AS dst_id,
+       |         ${cosineExpr("x", "y")} AS cosine
+       |  FROM v x JOIN v y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id),
+       |r AS (
+       |  SELECT src_id, dst_id,$cosine
+       |         CAST(row_number() OVER (PARTITION BY src_id
+       |                                 ORDER BY cosine DESC, dst_id ASC) AS INTEGER) AS "rank"
+       |  FROM sc)""".stripMargin
+  }
+
+  /** The kNN graph's DIRECTED edges as `dedges(src, dst)` (rank ≤ `k`)
+    * plus the deduped UNDIRECTED edge list as `und(a, b)`, on top of
+    * `knnRankedCte`. */
+  private def knnUndCte(k: Int): String =
+    s"""${knnRankedCte()},
+       |dedges AS MATERIALIZED (
+       |  SELECT src_id AS src, dst_id AS dst FROM r WHERE "rank" <= $k),
+       |und AS MATERIALIZED (
+       |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+       |  FROM dedges)""".stripMargin
+
   /** Product-quantization codes over the embedding store: 4 subspaces of
     * 16 dims, 16-entry seeded codebooks — exact integer argmin, exploded
     * to (vec_id, subspace, code) for the compare. */
@@ -24,23 +175,14 @@ object SimilarityQueries extends Module("similarity") {
   // PQ codes: same fixed-point scale as every vector oracle; exact
   // integer squared-L2 argmin per (vector, subspace), tie → lowest cid.
   query("q_pq_codes", qPqCodes,
-    """WITH fp AS (
-      |  SELECT vec_id,
-      |         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS fv
-      |  FROM embeddings),
-      |cb AS (SELECT vec_id AS cid, fv AS cfv FROM fp WHERE vec_id < 16),
-      |js AS (SELECT unnest(range(0, 4)) AS j),
-      |pairs AS (
-      |  SELECT v.vec_id, js.j, cb.cid,
-      |         list_sum(list_transform(range(1, 17), i ->
-      |           (v.fv[js.j*16 + i] - cb.cfv[js.j*16 + i])
-      |           * (v.fv[js.j*16 + i] - cb.cfv[js.j*16 + i]))) AS dist
-      |  FROM fp v, js, cb),
-      |r AS (SELECT vec_id, j, cid,
-      |        row_number() OVER (PARTITION BY vec_id, j ORDER BY dist, cid) AS rn
-      |      FROM pairs)
-      |SELECT vec_id, CAST(j AS INTEGER) AS subspace, CAST(cid AS INTEGER) AS code
-      |FROM r WHERE rn = 1 ORDER BY vec_id, subspace""".stripMargin)
+    s"""WITH $fpCte,
+       |$pqBookCte,
+       |${pqPairsCte()},
+       |r AS (SELECT vec_id, j, cid,
+       |        row_number() OVER (PARTITION BY vec_id, j ORDER BY dist, cid) AS rn
+       |      FROM pairs)
+       |SELECT vec_id, CAST(j AS INTEGER) AS subspace, CAST(cid AS INTEGER) AS code
+       |FROM r WHERE rn = 1 ORDER BY vec_id, subspace""".stripMargin)
 
   /** TRAINED-PQ codes: two per-subspace L2 Lloyd iterations
     * (Vectors.trainPqCodebooks — exact integer sums and truncating
@@ -87,10 +229,7 @@ object SimilarityQueries extends Module("similarity") {
          |cbs$i AS (SELECT p.cid, p.j, coalesce(m.csv, p.csv) AS csv
          |          FROM cbs${i - 1} p LEFT JOIN m$i m
          |            ON p.cid = m.cid AND p.j = m.j)""".stripMargin
-    s"""WITH fp AS (
-       |  SELECT vec_id,
-       |         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS fv
-       |  FROM embeddings),
+    s"""WITH $fpCte,
        |js AS (SELECT unnest(range(0, 4)) AS j),
        |cb0 AS (
        |  SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cid, fv
@@ -120,34 +259,12 @@ object SimilarityQueries extends Module("similarity") {
   // between the query (vec_id 42) subvectors and each codebook entry;
   // score = sum of per-subspace LUT hits; total order (dist, id).
   query("q_pq_topk", qPqTopK,
-    """WITH fp AS (
-      |  SELECT vec_id,
-      |         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS fv
-      |  FROM embeddings),
-      |cb AS (SELECT vec_id AS cid, fv AS cfv FROM fp WHERE vec_id < 16),
-      |js AS (SELECT unnest(range(0, 4)) AS j),
-      |pairs AS (
-      |  SELECT v.vec_id, js.j, cb.cid,
-      |         list_sum(list_transform(range(1, 17), i ->
-      |           (v.fv[js.j*16 + i] - cb.cfv[js.j*16 + i])
-      |           * (v.fv[js.j*16 + i] - cb.cfv[js.j*16 + i]))) AS dist
-      |  FROM fp v, js, cb),
-      |codes AS (
-      |  SELECT vec_id, j, cid FROM (
-      |    SELECT vec_id, j, cid,
-      |           row_number() OVER (PARTITION BY vec_id, j ORDER BY dist, cid) AS rn
-      |    FROM pairs) WHERE rn = 1),
-      |q AS (SELECT fv AS qfv FROM fp WHERE vec_id = 42),
-      |lut AS (
-      |  SELECT js.j, cb.cid,
-      |         list_sum(list_transform(range(1, 17), i ->
-      |           (q.qfv[js.j*16 + i] - cb.cfv[js.j*16 + i])
-      |           * (q.qfv[js.j*16 + i] - cb.cfv[js.j*16 + i]))) AS d
-      |  FROM q, js, cb)
-      |SELECT c.vec_id, CAST(sum(l.d) AS BIGINT) AS adc_dist
-      |FROM codes c JOIN lut l ON c.j = l.j AND c.cid = l.cid
-      |GROUP BY c.vec_id
-      |ORDER BY adc_dist, c.vec_id LIMIT 10""".stripMargin)
+    s"""WITH $fpCte,
+       |$pqBookCte,
+       |${pqPairsCte()},
+       |$pqCodesCte,
+       |q AS (SELECT fv AS qfv FROM fp WHERE vec_id = 42),
+       |$pqAdcSelect""".stripMargin)
 
   /** kNN-graph DEGREE DIAGNOSTICS: the undirected degree
     * histogram plus the reciprocity rate (share of directed edges whose
@@ -179,24 +296,7 @@ object SimilarityQueries extends Module("similarity") {
   // kNN-graph degree histogram + reciprocity permille: the q_knn_graph
   // edge CTE, undirected census + reversed-key existence count.
   query("q_graph_degree_stats", qGraphDegreeStats,
-    s"""WITH b AS (
-       |  SELECT vec_id, $bucket4Expr AS bucket FROM embeddings),
-       |$fpVecCte,
-       |v AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN b ON nv.vec_id = b.vec_id
-       |      WHERE nn > 0),
-       |sc AS (
-       |  SELECT x.vec_id AS src_id, y.vec_id AS dst_id,
-       |         ${cosineExpr("x", "y")} AS cosine
-       |  FROM v x JOIN v y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id),
-       |r AS (
-       |  SELECT src_id, dst_id,
-       |         CAST(row_number() OVER (PARTITION BY src_id
-       |                                 ORDER BY cosine DESC, dst_id ASC) AS INTEGER) AS "rank"
-       |  FROM sc),
-       |dedges AS MATERIALIZED (
-       |  SELECT src_id AS src, dst_id AS dst FROM r WHERE "rank" <= 3),
-       |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-       |        FROM dedges),
+    s"""WITH ${knnUndCte(3)},
        |deg AS (SELECT vtx, CAST(count(*) AS BIGINT) AS deg FROM (
        |          SELECT a AS vtx FROM und UNION ALL SELECT b AS vtx FROM und)
        |        GROUP BY 1),
@@ -278,25 +378,7 @@ object SimilarityQueries extends Module("similarity") {
   // self-join of the symmetric edge list, adjacency anti-check,
   // Jaccard of neighbor sets in exact permille.
   query("q_common_neighbors", qCommonNeighbors,
-    s"""WITH b AS (
-       |  SELECT vec_id, $bucket4Expr AS bucket FROM embeddings),
-       |$fpVecCte,
-       |v AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN b ON nv.vec_id = b.vec_id
-       |      WHERE nn > 0),
-       |sc AS (
-       |  SELECT x.vec_id AS src_id, y.vec_id AS dst_id,
-       |         ${cosineExpr("x", "y")} AS cosine
-       |  FROM v x JOIN v y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id),
-       |r AS (
-       |  SELECT src_id, dst_id,
-       |         CAST(row_number() OVER (PARTITION BY src_id
-       |                                 ORDER BY cosine DESC, dst_id ASC) AS INTEGER) AS "rank"
-       |  FROM sc),
-       |dedges AS MATERIALIZED (
-       |  SELECT src_id AS src, dst_id AS dst FROM r WHERE "rank" <= 3),
-       |und AS MATERIALIZED (
-       |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-       |  FROM dedges),
+    s"""WITH ${knnUndCte(3)},
        |sym AS (SELECT a AS uu, b AS vv FROM und
        |        UNION ALL SELECT b AS uu, a AS vv FROM und),
        |deg AS (SELECT uu, CAST(count(*) AS BIGINT) AS deg FROM sym GROUP BY 1),
@@ -451,11 +533,9 @@ object SimilarityQueries extends Module("similarity") {
   // PQ-ADC re-rank within the probed lists only
   query("q_ivfpq_topk", qIvfPqTopK,
     s"""WITH $fpVecCte,
-       |cb AS (SELECT vec_id AS cid, fv AS cfv FROM fp WHERE vec_id < 16),
-       |js AS (SELECT unnest(range(0, 4)) AS j),
+       |$pqBookCte,
        |q AS (SELECT fv AS qfv, nn AS qn FROM nv WHERE vec_id = 42),
-       |cents AS (SELECT vec_id AS cent_id, fv AS cent_v, nn AS cent_n
-       |          FROM nv WHERE vec_id < 16 AND nn > 0),
+       |$seedCentsCte,
        |probe AS (
        |  SELECT cent_id FROM (
        |    SELECT cents.cent_id,
@@ -475,27 +555,9 @@ object SimilarityQueries extends Module("similarity") {
        |    FROM nv v, cents WHERE v.nn > 0)
        |  WHERE r = 1),
        |cand AS (SELECT c_id FROM casgn JOIN probe USING (cent_id)),
-       |pairs AS (
-       |  SELECT v.vec_id, js.j, cb.cid,
-       |         list_sum(list_transform(range(1, 17), i ->
-       |           (v.fv[js.j*16 + i] - cb.cfv[js.j*16 + i])
-       |           * (v.fv[js.j*16 + i] - cb.cfv[js.j*16 + i]))) AS dist
-       |  FROM fp v, js, cb WHERE v.vec_id IN (SELECT c_id FROM cand)),
-       |codes AS (
-       |  SELECT vec_id, j, cid FROM (
-       |    SELECT vec_id, j, cid,
-       |           row_number() OVER (PARTITION BY vec_id, j ORDER BY dist, cid) AS rn
-       |    FROM pairs) WHERE rn = 1),
-       |lut AS (
-       |  SELECT js.j, cb.cid,
-       |         list_sum(list_transform(range(1, 17), i ->
-       |           (q.qfv[js.j*16 + i] - cb.cfv[js.j*16 + i])
-       |           * (q.qfv[js.j*16 + i] - cb.cfv[js.j*16 + i]))) AS d
-       |  FROM q, js, cb)
-       |SELECT c.vec_id, CAST(sum(l.d) AS BIGINT) AS adc_dist
-       |FROM codes c JOIN lut l ON c.j = l.j AND c.cid = l.cid
-       |GROUP BY c.vec_id
-       |ORDER BY adc_dist, c.vec_id LIMIT 10""".stripMargin)
+       |${pqPairsCte(" WHERE v.vec_id IN (SELECT c_id FROM cand)")},
+       |$pqCodesCte,
+       |$pqAdcSelect""".stripMargin)
 
   /** Per-label embedding centroid drift between store halves (see
     * Vectors.centroidDrift): id-parity split, exact integer
@@ -540,13 +602,7 @@ object SimilarityQueries extends Module("similarity") {
        |         ${cosineExpr("q", "c")} AS cosine
        |  FROM nv q, nv c
        |  WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id AND q.nn > 0 AND c.nn > 0),
-       |r AS (
-       |  SELECT query_id, match_id, cosine,
-       |         CAST(row_number() OVER (PARTITION BY query_id
-       |                                 ORDER BY cosine DESC, match_id ASC) AS INTEGER) AS "rank"
-       |  FROM sc)
-       |SELECT query_id, match_id, cosine, "rank" FROM r WHERE "rank" <= 10
-       |ORDER BY query_id, "rank"""".stripMargin)
+       |${topKSelect(10)}""".stripMargin)
 
   private def qAnnLsh(s: SparkSession, d: String): DataFrame = {
     val emb = t(s, d, "embeddings")
@@ -555,22 +611,33 @@ object SimilarityQueries extends Module("similarity") {
       .orderBy(col("query_id"), col("rank"))
   }
   query("q_ann_lsh", qAnnLsh,
-    s"""WITH b AS (
-       |  SELECT vec_id, $bucket4Expr AS bucket FROM embeddings),
-       |$fpVecCte,
-       |v AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN b ON nv.vec_id = b.vec_id),
+    s"""WITH ${bucketVecCte(nonZero = false)},
        |sc AS (
        |  SELECT q.vec_id AS query_id, c.vec_id AS match_id,
        |         ${cosineExpr("q", "c")} AS cosine
        |  FROM v q JOIN v c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
        |  WHERE q.vec_id < 5 AND q.nn > 0 AND c.nn > 0),
-       |r AS (
-       |  SELECT query_id, match_id, cosine,
-       |         CAST(row_number() OVER (PARTITION BY query_id
-       |                                 ORDER BY cosine DESC, match_id ASC) AS INTEGER) AS "rank"
-       |  FROM sc)
-       |SELECT query_id, match_id, cosine, "rank" FROM r WHERE "rank" <= 5
-       |ORDER BY query_id, "rank"""".stripMargin)
+       |${topKSelect(5)}""".stripMargin)
+
+  /** Multi-probe sign-LSH top-5 for the queries vec_id < 5 (mirrors
+    * Vectors.lshTopKMultiProbe): each query probes its own bucket and
+    * the `flips` keys; the corpus keeps one bucket per vector. */
+  private def multiProbeSql(flips: String): String =
+    s"""WITH b AS (
+       |  SELECT vec_id, $bucket4Expr AS bucket FROM embeddings),
+       |probes AS (
+       |  SELECT vec_id, bucket FROM b WHERE vec_id < 5
+       |  UNION ALL
+       |  $flips),
+       |$fpVecCte,
+       |q AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN probes ON nv.vec_id = probes.vec_id),
+       |c AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN b ON nv.vec_id = b.vec_id),
+       |sc AS (
+       |  SELECT q.vec_id AS query_id, c.vec_id AS match_id,
+       |         ${cosineExpr("q", "c")} AS cosine
+       |  FROM q JOIN c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
+       |  WHERE q.nn > 0 AND c.nn > 0),
+       |${topKSelect(5)}""".stripMargin
 
   /** Multi-probe variant (query bucket + Hamming-1 neighbors) of the
     * sign-LSH top-k — higher recall at a bounded (bits+1)x candidate
@@ -588,27 +655,7 @@ object SimilarityQueries extends Module("similarity") {
       val flipped = s"CASE substring(bucket, $i, 1) WHEN '1' THEN '0' ELSE '1' END"
       s"SELECT vec_id, concat(substring(bucket, 1, ${i - 1}), $flipped, substring(bucket, ${i + 1})) AS bucket FROM b WHERE vec_id < 5"
     }.mkString("\n  UNION ALL\n  ")
-    s"""WITH b AS (
-       |  SELECT vec_id, $bucket4Expr AS bucket FROM embeddings),
-       |probes AS (
-       |  SELECT vec_id, bucket FROM b WHERE vec_id < 5
-       |  UNION ALL
-       |  $flips),
-       |$fpVecCte,
-       |q AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN probes ON nv.vec_id = probes.vec_id),
-       |c AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN b ON nv.vec_id = b.vec_id),
-       |sc AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS match_id,
-       |         ${cosineExpr("q", "c")} AS cosine
-       |  FROM q JOIN c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
-       |  WHERE q.nn > 0 AND c.nn > 0),
-       |r AS (
-       |  SELECT query_id, match_id, cosine,
-       |         CAST(row_number() OVER (PARTITION BY query_id
-       |                                 ORDER BY cosine DESC, match_id ASC) AS INTEGER) AS "rank"
-       |  FROM sc)
-       |SELECT query_id, match_id, cosine, "rank" FROM r WHERE "rank" <= 5
-       |ORDER BY query_id, "rank"""".stripMargin
+    multiProbeSql(flips)
   })
 
   /** Radius-2 multi-probe at the AUTO width — the recall knob: at the
@@ -649,27 +696,7 @@ object SimilarityQueries extends Module("similarity") {
       (1 to 4).combinations(2).map(_.toSeq)).map { pos =>
       s"SELECT vec_id, ${flipExpr(pos)} AS bucket FROM b WHERE vec_id < 5"
     }.mkString("\n  UNION ALL\n  ")
-    s"""WITH b AS (
-       |  SELECT vec_id, $bucket4Expr AS bucket FROM embeddings),
-       |probes AS (
-       |  SELECT vec_id, bucket FROM b WHERE vec_id < 5
-       |  UNION ALL
-       |  $flips),
-       |$fpVecCte,
-       |q AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN probes ON nv.vec_id = probes.vec_id),
-       |c AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN b ON nv.vec_id = b.vec_id),
-       |sc AS (
-       |  SELECT q.vec_id AS query_id, c.vec_id AS match_id,
-       |         ${cosineExpr("q", "c")} AS cosine
-       |  FROM q JOIN c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
-       |  WHERE q.nn > 0 AND c.nn > 0),
-       |r AS (
-       |  SELECT query_id, match_id, cosine,
-       |         CAST(row_number() OVER (PARTITION BY query_id
-       |                                 ORDER BY cosine DESC, match_id ASC) AS INTEGER) AS "rank"
-       |  FROM sc)
-       |SELECT query_id, match_id, cosine, "rank" FROM r WHERE "rank" <= 5
-       |ORDER BY query_id, "rank"""".stripMargin
+    multiProbeSql(flips)
   })
 
   /** L = 4 independent LSH tables at the AUTO width — the OTHER end of
@@ -719,13 +746,7 @@ object SimilarityQueries extends Module("similarity") {
        |         ${cosineExpr("q", "c")} AS cosine
        |  FROM q JOIN c ON q.tbl = c.tbl AND q.bucket = c.bucket AND c.vec_id <> q.vec_id
        |  WHERE q.nn > 0 AND c.nn > 0),
-       |r AS (
-       |  SELECT query_id, match_id, cosine,
-       |         CAST(row_number() OVER (PARTITION BY query_id
-       |                                 ORDER BY cosine DESC, match_id ASC) AS INTEGER) AS "rank"
-       |  FROM sc)
-       |SELECT query_id, match_id, cosine, "rank" FROM r WHERE "rank" <= 5
-       |ORDER BY query_id, "rank"""".stripMargin
+       |${topKSelect(5)}""".stripMargin
   })
 
   private def qAnnIvf(s: SparkSession, d: String): DataFrame = {
@@ -735,41 +756,11 @@ object SimilarityQueries extends Module("similarity") {
       .select(col("query_id"), col("match_id"), col("cosine"), col("rank"))
       .orderBy(col("query_id"), col("rank"))
   }
-  query("q_ann_ivf", qAnnIvf, {
-    val cosQC =
-      "CAST(list_sum(list_transform(range(1, len(q_v) + 1), i -> q_v[i] * c_v[i])) AS DOUBLE)" +
-        " / (sqrt(CAST(q_n AS DOUBLE)) * sqrt(CAST(c_n AS DOUBLE)))"
-    val centCos =
-      "CAST(list_sum(list_transform(range(1, len(v.fv) + 1), i -> v.fv[i] * cents.cent_v[i])) AS DOUBLE)" +
-        " / (sqrt(CAST(v.nn AS DOUBLE)) * sqrt(CAST(cents.cent_n AS DOUBLE)))"
+  query("q_ann_ivf", qAnnIvf,
     s"""WITH $fpVecCte,
-       |cents AS (SELECT vec_id AS cent_id, fv AS cent_v, nn AS cent_n
-       |          FROM nv WHERE vec_id < 16 AND nn > 0),
-       |casgn AS (
-       |  SELECT c_id, c_v, c_n, cent_id FROM (
-       |    SELECT v.vec_id AS c_id, v.fv AS c_v, v.nn AS c_n, cents.cent_id,
-       |           row_number() OVER (PARTITION BY v.vec_id
-       |                              ORDER BY $centCos DESC, cents.cent_id ASC) AS r
-       |    FROM nv v, cents WHERE v.nn > 0)
-       |  WHERE r = 1),
-       |qasgn AS (
-       |  SELECT q_id, q_v, q_n, cent_id FROM (
-       |    SELECT v.vec_id AS q_id, v.fv AS q_v, v.nn AS q_n, cents.cent_id,
-       |           row_number() OVER (PARTITION BY v.vec_id
-       |                              ORDER BY $centCos DESC, cents.cent_id ASC) AS r
-       |    FROM nv v, cents WHERE v.nn > 0 AND v.vec_id < 5)
-       |  WHERE r <= 4),
-       |sc AS (
-       |  SELECT DISTINCT q_id AS query_id, c_id AS match_id, $cosQC AS cosine
-       |  FROM qasgn JOIN casgn USING (cent_id) WHERE c_id <> q_id),
-       |r AS (
-       |  SELECT query_id, match_id, cosine,
-       |         CAST(row_number() OVER (PARTITION BY query_id
-       |                                 ORDER BY cosine DESC, match_id ASC) AS INTEGER) AS "rank"
-       |  FROM sc)
-       |SELECT query_id, match_id, cosine, "rank" FROM r WHERE "rank" <= 5
-       |ORDER BY query_id, "rank"""".stripMargin
-  })
+       |$seedCentsCte,
+       |${ivfScanCte(seedCentOrder)},
+       |${topKSelect(5)}""".stripMargin)
 
   /** IVF with the TRAINED coarse quantizer (Vectors.trainCentroids — two
     * deterministic Lloyd iterations of integer-mean spherical k-means,
@@ -794,19 +785,13 @@ object SimilarityQueries extends Module("similarity") {
   // their previous centroid), then the IVF probe/scan of q_ann_ivf
   // against the trained centroids.
   query("q_ann_ivf_trained", qAnnIvfTrained, {
-    def vcCos(v: String, c: String) =
-      s"CAST(list_sum(list_transform(range(1, len($v.fv) + 1), i -> $v.fv[i] * $c.cent_v[i])) AS DOUBLE)" +
-        s" / (sqrt(CAST($v.nn AS DOUBLE)) * sqrt(CAST($c.cent_n AS DOUBLE)))"
-    val cosQC =
-      "CAST(list_sum(list_transform(range(1, len(q_v) + 1), i -> q_v[i] * c_v[i])) AS DOUBLE)" +
-        " / (sqrt(CAST(q_n AS DOUBLE)) * sqrt(CAST(c_n AS DOUBLE)))"
     // one Lloyd iteration: assign to prev centroids, integer-mean update
     def iter(i: Int, prev: String): String =
       s"""a$i AS (
          |  SELECT c_id, c_v, cent_id FROM (
          |    SELECT v.vec_id AS c_id, v.fv AS c_v, c.cent_id,
          |           row_number() OVER (PARTITION BY v.vec_id
-         |                              ORDER BY ${vcCos("v", "c")} DESC,
+         |                              ORDER BY ${centCos("v", "c")} DESC,
          |                                       c.cent_id ASC) AS r
          |    FROM nv v, $prev c WHERE v.nn > 0)
          |  WHERE r = 1),
@@ -829,32 +814,8 @@ object SimilarityQueries extends Module("similarity") {
        |${iter(1, "c0")},
        |${iter(2, "c1")},
        |cents AS (SELECT cent_id, cent_v, cent_n FROM c2 WHERE cent_n > 0),
-       |casgn AS (
-       |  SELECT c_id, c_v, c_n, cent_id FROM (
-       |    SELECT v.vec_id AS c_id, v.fv AS c_v, v.nn AS c_n, cents.cent_id,
-       |           row_number() OVER (PARTITION BY v.vec_id
-       |                              ORDER BY ${vcCos("v", "cents")} DESC,
-       |                                       cents.cent_id ASC) AS r
-       |    FROM nv v, cents WHERE v.nn > 0)
-       |  WHERE r = 1),
-       |qasgn AS (
-       |  SELECT q_id, q_v, q_n, cent_id FROM (
-       |    SELECT v.vec_id AS q_id, v.fv AS q_v, v.nn AS q_n, cents.cent_id,
-       |           row_number() OVER (PARTITION BY v.vec_id
-       |                              ORDER BY ${vcCos("v", "cents")} DESC,
-       |                                       cents.cent_id ASC) AS r
-       |    FROM nv v, cents WHERE v.nn > 0 AND v.vec_id < 5)
-       |  WHERE r <= 4),
-       |sc AS (
-       |  SELECT DISTINCT q_id AS query_id, c_id AS match_id, $cosQC AS cosine
-       |  FROM qasgn JOIN casgn USING (cent_id) WHERE c_id <> q_id),
-       |r AS (
-       |  SELECT query_id, match_id, cosine,
-       |         CAST(row_number() OVER (PARTITION BY query_id
-       |                                 ORDER BY cosine DESC, match_id ASC) AS INTEGER) AS "rank"
-       |  FROM sc)
-       |SELECT query_id, match_id, cosine, "rank" FROM r WHERE "rank" <= 5
-       |ORDER BY query_id, "rank"""".stripMargin
+       |${ivfScanCte(s"${centCos("v", "cents")} DESC,\n                                       cents.cent_id ASC")},
+       |${topKSelect(5)}""".stripMargin
   })
 
   /** Approximate kNN graph over the embedding corpus
@@ -866,20 +827,7 @@ object SimilarityQueries extends Module("similarity") {
   // kNN graph: bucket-mate scoring mirrored, per-source row_number
   // with the (cosine DESC, id ASC) contract of TopKByScore.
   query("q_knn_graph", qKnnGraph,
-    s"""WITH b AS (
-       |  SELECT vec_id, $bucket4Expr AS bucket FROM embeddings),
-       |$fpVecCte,
-       |v AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN b ON nv.vec_id = b.vec_id
-       |      WHERE nn > 0),
-       |sc AS (
-       |  SELECT x.vec_id AS src_id, y.vec_id AS dst_id,
-       |         ${cosineExpr("x", "y")} AS cosine
-       |  FROM v x JOIN v y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id),
-       |r AS (
-       |  SELECT src_id, dst_id, cosine,
-       |         CAST(row_number() OVER (PARTITION BY src_id
-       |                                 ORDER BY cosine DESC, dst_id ASC) AS INTEGER) AS "rank"
-       |  FROM sc)
+    s"""WITH ${knnRankedCte(withCosine = true)}
        |SELECT src_id, dst_id, cosine, "rank" FROM r WHERE "rank" <= 3
        |ORDER BY src_id, "rank"""".stripMargin)
 
@@ -888,10 +836,7 @@ object SimilarityQueries extends Module("similarity") {
       threshold = 0.4)
       .orderBy(col("id_a"), col("id_b"))
   query("q_embed_neardup", qEmbedNearDup,
-    s"""WITH b AS (
-       |  SELECT vec_id, $bucket4Expr AS bucket FROM embeddings),
-       |$fpVecCte,
-       |v AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN b ON nv.vec_id = b.vec_id)
+    s"""WITH ${bucketVecCte(nonZero = false)}
        |SELECT x.vec_id AS id_a, y.vec_id AS id_b,
        |       ${cosineExpr("x", "y")} AS cosine
        |FROM v x JOIN v y ON x.bucket = y.bucket AND x.vec_id < y.vec_id
@@ -987,18 +932,8 @@ object SimilarityQueries extends Module("similarity") {
   // ANN recall eval: both retrievers are deterministic total orders,
   // so recall@10 is an exact integer ratio.
   query("q_ann_recall", qAnnRecall,
-    s"""WITH b AS (
-       |  SELECT vec_id, $bucket4Expr AS bucket FROM embeddings),
-       |$fpVecCte,
-       |v AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN b ON nv.vec_id = b.vec_id),
-       |bf AS (
-       |  SELECT query_id, match_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS match_id,
-       |           row_number() OVER (PARTITION BY q.vec_id
-       |                              ORDER BY ${cosineExpr("q", "c")} DESC, c.vec_id ASC) AS rk
-       |    FROM nv q, nv c
-       |    WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id AND q.nn > 0 AND c.nn > 0)
-       |  WHERE rk <= 10),
+    s"""WITH ${bucketVecCte(nonZero = false)},
+       |$bruteForceTop10Cte,
        |ls AS (
        |  SELECT query_id, match_id FROM (
        |    SELECT q.vec_id AS query_id, c.vec_id AS match_id,
@@ -1007,14 +942,7 @@ object SimilarityQueries extends Module("similarity") {
        |    FROM v q JOIN v c ON q.bucket = c.bucket AND c.vec_id <> q.vec_id
        |    WHERE q.vec_id < 5 AND q.nn > 0 AND c.nn > 0)
        |  WHERE rk <= 10),
-       |nb AS (SELECT query_id, count(*) AS n_bf FROM bf GROUP BY query_id),
-       |ht AS (SELECT bf.query_id, count(*) AS n_hit
-       |       FROM bf JOIN ls ON bf.query_id = ls.query_id AND bf.match_id = ls.match_id
-       |       GROUP BY bf.query_id)
-       |SELECT nb.query_id, nb.n_bf, COALESCE(ht.n_hit, 0) AS n_hit,
-       |       COALESCE(ht.n_hit, 0) * 1000 // nb.n_bf AS recall_permille
-       |FROM nb LEFT JOIN ht ON nb.query_id = ht.query_id
-       |ORDER BY nb.query_id""".stripMargin)
+       |${recallSelect("ls")}""".stripMargin)
 
   /** IVF recall gate: recall@10 of the seeded IVF index
     * (nProbe=4 of 16 lists) against brute-force truth for the probe
@@ -1041,41 +969,11 @@ object SimilarityQueries extends Module("similarity") {
   }
   // IVF recall gate: brute-force truth vs the seeded-IVF candidate
   // top-10 (q_ann_ivf's CTEs at k=10), integer-permille recall.
-  query("q_ivf_recall", qIvfRecall, {
-    val cosQC =
-      "CAST(list_sum(list_transform(range(1, len(q_v) + 1), i -> q_v[i] * c_v[i])) AS DOUBLE)" +
-        " / (sqrt(CAST(q_n AS DOUBLE)) * sqrt(CAST(c_n AS DOUBLE)))"
-    val centCos =
-      "CAST(list_sum(list_transform(range(1, len(v.fv) + 1), i -> v.fv[i] * cents.cent_v[i])) AS DOUBLE)" +
-        " / (sqrt(CAST(v.nn AS DOUBLE)) * sqrt(CAST(cents.cent_n AS DOUBLE)))"
+  query("q_ivf_recall", qIvfRecall,
     s"""WITH $fpVecCte,
-       |bf AS (
-       |  SELECT query_id, match_id FROM (
-       |    SELECT q.vec_id AS query_id, c.vec_id AS match_id,
-       |           row_number() OVER (PARTITION BY q.vec_id
-       |                              ORDER BY ${cosineExpr("q", "c")} DESC, c.vec_id ASC) AS rk
-       |    FROM nv q, nv c
-       |    WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id AND q.nn > 0 AND c.nn > 0)
-       |  WHERE rk <= 10),
-       |cents AS (SELECT vec_id AS cent_id, fv AS cent_v, nn AS cent_n
-       |          FROM nv WHERE vec_id < 16 AND nn > 0),
-       |casgn AS (
-       |  SELECT c_id, c_v, c_n, cent_id FROM (
-       |    SELECT v.vec_id AS c_id, v.fv AS c_v, v.nn AS c_n, cents.cent_id,
-       |           row_number() OVER (PARTITION BY v.vec_id
-       |                              ORDER BY $centCos DESC, cents.cent_id ASC) AS r
-       |    FROM nv v, cents WHERE v.nn > 0)
-       |  WHERE r = 1),
-       |qasgn AS (
-       |  SELECT q_id, q_v, q_n, cent_id FROM (
-       |    SELECT v.vec_id AS q_id, v.fv AS q_v, v.nn AS q_n, cents.cent_id,
-       |           row_number() OVER (PARTITION BY v.vec_id
-       |                              ORDER BY $centCos DESC, cents.cent_id ASC) AS r
-       |    FROM nv v, cents WHERE v.nn > 0 AND v.vec_id < 5)
-       |  WHERE r <= 4),
-       |sc AS (
-       |  SELECT DISTINCT q_id AS query_id, c_id AS match_id, $cosQC AS cosine
-       |  FROM qasgn JOIN casgn USING (cent_id) WHERE c_id <> q_id),
+       |$bruteForceTop10Cte,
+       |$seedCentsCte,
+       |${ivfScanCte(seedCentOrder)},
        |iv AS (
        |  SELECT query_id, match_id FROM (
        |    SELECT query_id, match_id,
@@ -1083,15 +981,7 @@ object SimilarityQueries extends Module("similarity") {
        |                              ORDER BY cosine DESC, match_id ASC) AS rk
        |    FROM sc)
        |  WHERE rk <= 10),
-       |nb AS (SELECT query_id, count(*) AS n_bf FROM bf GROUP BY query_id),
-       |ht AS (SELECT bf.query_id, count(*) AS n_hit
-       |       FROM bf JOIN iv ON bf.query_id = iv.query_id AND bf.match_id = iv.match_id
-       |       GROUP BY bf.query_id)
-       |SELECT nb.query_id, nb.n_bf, COALESCE(ht.n_hit, 0) AS n_hit,
-       |       COALESCE(ht.n_hit, 0) * 1000 // nb.n_bf AS recall_permille
-       |FROM nb LEFT JOIN ht ON nb.query_id = ht.query_id
-       |ORDER BY nb.query_id""".stripMargin
-  })
+       |${recallSelect("iv")}""".stripMargin)
 
   /** Rademacher (JL) random projection of the embedding store to 16
     * dims (Vectors.rademacherProject): compile-time ±1 sign literals,
@@ -1103,21 +993,18 @@ object SimilarityQueries extends Module("similarity") {
   // JL projection: the ±1 matrix regenerates from md5("j:i") parity in
   // any engine; components are exact integer dots of fp6 vectors.
   query("q_random_projection", qRandomProjection,
-    """WITH fp AS (
-      |  SELECT vec_id,
-      |         list_transform(embedding, x -> CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT)) AS fv
-      |  FROM embeddings),
-      |m AS (
-      |  SELECT j.j AS j, i.i AS i,
-      |         CASE WHEN CAST(concat('0x', substring(md5(j.j || ':' || i.i), 1, 15)) AS BIGINT) % 2 = 0
-      |              THEN 1 ELSE -1 END AS s
-      |  FROM range(16) j(j), range(64) i(i)),
-      |e AS (SELECT vec_id, i.i AS i, fv[i.i + 1] AS v FROM fp, range(64) i(i))
-      |SELECT e.vec_id, CAST(m.j AS INTEGER) AS out_dim,
-      |       CAST(SUM(e.v * m.s) AS BIGINT) AS comp_fp6
-      |FROM e JOIN m ON m.i = e.i
-      |GROUP BY e.vec_id, m.j
-      |ORDER BY vec_id, out_dim""".stripMargin)
+    s"""WITH $fpCte,
+       |m AS (
+       |  SELECT j.j AS j, i.i AS i,
+       |         CASE WHEN CAST(concat('0x', substring(md5(j.j || ':' || i.i), 1, 15)) AS BIGINT) % 2 = 0
+       |              THEN 1 ELSE -1 END AS s
+       |  FROM range(16) j(j), range(64) i(i)),
+       |e AS (SELECT vec_id, i.i AS i, fv[i.i + 1] AS v FROM fp, range(64) i(i))
+       |SELECT e.vec_id, CAST(m.j AS INTEGER) AS out_dim,
+       |       CAST(SUM(e.v * m.s) AS BIGINT) AS comp_fp6
+       |FROM e JOIN m ON m.i = e.i
+       |GROUP BY e.vec_id, m.j
+       |ORDER BY vec_id, out_dim""".stripMargin)
 
   /** Int8 scalar quantization of the embedding store, exploded to
     * (vec_id, pos, code) for the exact compare. */
@@ -1212,20 +1099,7 @@ object SimilarityQueries extends Module("similarity") {
   // canonicalized to distinct low<high pairs, triangles via the
   // ordered two-join enumeration, per-vertex corner counts.
   query("q_knn_triangles", qKnnTriangles,
-    s"""WITH bk AS (
-       |  SELECT vec_id, $bucket4Expr AS bucket FROM embeddings),
-       |$fpVecCte,
-       |v AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN bk ON nv.vec_id = bk.vec_id
-       |      WHERE nn > 0),
-       |sc AS (
-       |  SELECT x.vec_id AS src_id, y.vec_id AS dst_id,
-       |         ${cosineExpr("x", "y")} AS cosine
-       |  FROM v x JOIN v y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id),
-       |r AS (
-       |  SELECT src_id, dst_id,
-       |         CAST(row_number() OVER (PARTITION BY src_id
-       |                                 ORDER BY cosine DESC, dst_id ASC) AS INTEGER) AS "rank"
-       |  FROM sc),
+    s"""WITH ${knnRankedCte("bk")},
        |ed AS (
        |  SELECT DISTINCT least(src_id, dst_id) AS a, greatest(src_id, dst_id) AS z
        |  FROM r WHERE "rank" <= 3),
@@ -1258,11 +1132,7 @@ object SimilarityQueries extends Module("similarity") {
   // Contrastive triplet mining: in-bucket candidates, positive = top-1,
   // hard negatives = top-3 below cosine 0.9 (exact-int-ratio doubles).
   query("q_hard_negatives", qHardNegatives,
-    s"""WITH bk AS (
-       |  SELECT vec_id, $bucket4Expr AS bucket FROM embeddings),
-       |$fpVecCte,
-       |v AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN bk ON nv.vec_id = bk.vec_id
-       |      WHERE nn > 0),
+    s"""WITH ${bucketVecCte(nonZero = true, "bk")},
        |sc AS (
        |  SELECT q.vec_id AS anchor_id, c.vec_id AS match_id,
        |         ${cosineExpr("q", "c")} AS cosine
@@ -1323,20 +1193,7 @@ object SimilarityQueries extends Module("similarity") {
          |         CASE WHEN p.lab IS NOT NULL THEN p.rnd
          |              WHEN w.wlab IS NOT NULL THEN $r ELSE -1 END AS rnd
          |  FROM lp${r - 1} p LEFT JOIN w$r w ON w.id = p.id)""".stripMargin
-    s"""WITH b AS (
-       |  SELECT vec_id, $bucket4Expr AS bucket FROM embeddings),
-       |$fpVecCte,
-       |v AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN b ON nv.vec_id = b.vec_id
-       |      WHERE nn > 0),
-       |sc AS (
-       |  SELECT x.vec_id AS src_id, y.vec_id AS dst_id,
-       |         ${cosineExpr("x", "y")} AS cosine
-       |  FROM v x JOIN v y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id),
-       |r AS (
-       |  SELECT src_id, dst_id,
-       |         CAST(row_number() OVER (PARTITION BY src_id
-       |                                 ORDER BY cosine DESC, dst_id ASC) AS INTEGER) AS "rank"
-       |  FROM sc),
+    s"""WITH ${knnRankedCte()},
        |edges AS MATERIALIZED (SELECT src_id AS src, dst_id AS dst FROM r WHERE "rank" <= 3),
        |lp0 AS MATERIALIZED (
        |  SELECT vec_id AS id,
@@ -1386,20 +1243,7 @@ object SimilarityQueries extends Module("similarity") {
          |p$r AS MATERIALIZED (
          |  SELECT id, $r AS peel_round, deg AS last_deg FROM d$r WHERE deg < 4),
          |s$r AS MATERIALIZED (SELECT id, deg FROM d$r WHERE deg >= 4)""".stripMargin
-    s"""WITH b AS (
-       |  SELECT vec_id, $bucket4Expr AS bucket FROM embeddings),
-       |$fpVecCte,
-       |v AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN b ON nv.vec_id = b.vec_id
-       |      WHERE nn > 0),
-       |sc AS (
-       |  SELECT x.vec_id AS src_id, y.vec_id AS dst_id,
-       |         ${cosineExpr("x", "y")} AS cosine
-       |  FROM v x JOIN v y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id),
-       |r AS (
-       |  SELECT src_id, dst_id,
-       |         CAST(row_number() OVER (PARTITION BY src_id
-       |                                 ORDER BY cosine DESC, dst_id ASC) AS INTEGER) AS "rank"
-       |  FROM sc),
+    s"""WITH ${knnRankedCte()},
        |und AS MATERIALIZED (
        |  SELECT DISTINCT least(src_id, dst_id) AS a, greatest(src_id, dst_id) AS b
        |  FROM r WHERE "rank" <= 3 AND src_id <> dst_id),
@@ -1465,30 +1309,6 @@ object SimilarityQueries extends Module("similarity") {
   private def qPcaProject(s: SparkSession, d: String): DataFrame =
     Vectors.pcaProject(spread(t(s, d, "embeddings"), "vec_id"), "vec_id", "embedding")
   query("q_pca_project", qPcaProject, pcaSql(projectMode = true))
-
-  /** Shared CTE prefix for the kNN-graph diagnostics: the auto-bits
-    * (4 at every gate corpus) k-nearest-neighbor DIRECTED edges as
-    * `dedges` plus the deduped UNDIRECTED edge list as `und(a, b)`. */
-  private def knnUndCte(k: Int): String =
-    s"""b AS (
-       |  SELECT vec_id, $bucket4Expr AS bucket FROM embeddings),
-       |$fpVecCte,
-       |v AS (SELECT nv.vec_id, fv, nn, bucket FROM nv JOIN b ON nv.vec_id = b.vec_id
-       |      WHERE nn > 0),
-       |sc AS (
-       |  SELECT x.vec_id AS src_id, y.vec_id AS dst_id,
-       |         ${cosineExpr("x", "y")} AS cosine
-       |  FROM v x JOIN v y ON x.bucket = y.bucket AND x.vec_id <> y.vec_id),
-       |r AS (
-       |  SELECT src_id, dst_id,
-       |         CAST(row_number() OVER (PARTITION BY src_id
-       |                                 ORDER BY cosine DESC, dst_id ASC) AS INTEGER) AS "rank"
-       |  FROM sc),
-       |dedges AS MATERIALIZED (
-       |  SELECT src_id AS src, dst_id AS dst FROM r WHERE "rank" <= $k),
-       |und AS MATERIALIZED (
-       |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-       |  FROM dedges)""".stripMargin
 
   /** Exact integer squared L2 between two fixed-point list columns. */
   private def sqDistExpr(p: String, c: String): String =

@@ -11,6 +11,40 @@ import SharedSql._
   * file source and compared to its batch equivalent. */
 object StreamingQueries extends Module("streaming") {
 
+  /** Sequential near-dup admission, as the streaming lifecycle runs it:
+    * over the in-batch pairs `p` of `hl`, the surviving cluster minima
+    * (`minima`, a doc in no cluster keeps itself) and batch 0's
+    * admissions `adm0`. Needs WITH RECURSIVE. */
+  private val minimaCte =
+    s"""$reachCte,
+       |minima AS (
+       |  SELECT hl.* FROM hl
+       |  LEFT JOIN (SELECT id, min(r) AS m FROM reach GROUP BY id) c ON c.id = hl.id
+       |  WHERE c.m IS NULL OR c.m = hl.id),
+       |adm0 AS (SELECT * FROM minima WHERE b = 0)""".stripMargin
+
+  /** Batch `b`'s 64-bit admissions `adm$b`: its minima with no signature
+    * within Hamming 3 of the `window` store. */
+  private def admit64(b: Int, window: String): String =
+    s"""adm$b AS (
+       |  SELECT m.* FROM minima m WHERE m.b = $b AND NOT EXISTS (
+       |    SELECT 1 FROM $window a
+       |    WHERE bit_count(xor(a.hi, m.hi)) + bit_count(xor(a.lo, m.lo)) <= 3))""".stripMargin
+
+  /** The 64-bit store over `nBatches` doc_id-residue batches, through
+    * batch 1's admissions: `hl` with b = id % nBatches, the exact
+    * in-batch Hamming ≤ 3 pairs (the engine's banding is candidate
+    * pruning only — pigeonhole makes its pair set exactly the
+    * brute-force set), `minima`, `adm0` and `adm1`. */
+  private def store64Cte(nBatches: Int): String =
+    s"""${hiLoCte(s"id % $nBatches AS b, ")},
+       |p AS (
+       |  SELECT x.id AS id_a, y.id AS id_b
+       |  FROM hl x JOIN hl y ON x.b = y.b AND x.id < y.id
+       |  WHERE bit_count(xor(x.hi, y.hi)) + bit_count(xor(x.lo, y.lo)) <= 3),
+       |$minimaCte,
+       |${admit64(1, "adm0")}""".stripMargin
+
   /** The STREAMING engine under the correctness gate: tumbling-window
     * counts computed by an actual Structured Streaming run (file source →
     * watermark + event-time window → memory sink, AvailableNow) over the
@@ -107,56 +141,14 @@ object StreamingQueries extends Module("streaming") {
   // Bounded-store 64-bit streaming near-dup admission, replayed as
   // plain sequential batch admission (gate capacity = the
   // window=everything regime): batch b = doc_id % 2; within-batch
-  // clusters = connected components of the exact Hamming<=3 pair graph
-  // (the engine's banding is candidate pruning only — pigeonhole
-  // makes its pair set exactly the brute-force set, so the oracle
-  // skips the bands); batch-1 minima are then dropped against batch-0
-  // admissions. 64-bit signature mirrors functions.SimHash64Fp (the
-  // q_simhash64_pairs CTE machinery).
-  query("q_stream_neardup64", qStreamNearDup64, {
-    val bitSums = (1 to 64).map { j =>
-      val digit = (j - 1) / 4 + 1
-      val bit = 3 - ((j - 1) % 4)
-      s"sum(CASE WHEN ((strpos('0123456789abcdef', substring(h, $digit, 1)) - 1) >> $bit) & 1 = 1 THEN 1 ELSE -1 END) AS b_$j"
-    }.mkString(",\n         ")
-    val bitChars = (1 to 64)
-      .map(j => s"CASE WHEN b_$j > 0 THEN '1' ELSE '0' END")
-      .mkString("concat(", ", ", ")")
-    s"""WITH RECURSIVE e AS (
-       |  SELECT doc_id AS id, md5(unnest(string_split(text, ' '))) AS h FROM documents),
-       |s AS (
-       |  SELECT id,
-       |         $bitSums
-       |  FROM e GROUP BY id),
-       |sh64 AS (SELECT id, $bitChars AS simhash FROM s),
-       |hl AS (
-       |  SELECT id, id % 2 AS b, simhash,
-       |         CAST(concat('0b', substring(simhash, 1, 32)) AS BIGINT) AS hi,
-       |         CAST(concat('0b', substring(simhash, 33, 32)) AS BIGINT) AS lo
-       |  FROM sh64),
-       |p AS (
-       |  SELECT x.id AS id_a, y.id AS id_b
-       |  FROM hl x JOIN hl y ON x.b = y.b AND x.id < y.id
-       |  WHERE bit_count(xor(x.hi, y.hi)) + bit_count(xor(x.lo, y.lo)) <= 3),
-       |eg AS (SELECT id_a AS src, id_b AS dst FROM p
-       |       UNION ALL SELECT id_b AS src, id_a AS dst FROM p),
-       |reach AS (
-       |  SELECT src AS id, src AS r FROM eg
-       |  UNION
-       |  SELECT eg.dst AS id, reach.r AS r FROM reach JOIN eg ON eg.src = reach.id),
-       |minima AS (
-       |  SELECT hl.* FROM hl
-       |  LEFT JOIN (SELECT id, min(r) AS m FROM reach GROUP BY id) c ON c.id = hl.id
-       |  WHERE c.m IS NULL OR c.m = hl.id),
-       |adm0 AS (SELECT * FROM minima WHERE b = 0),
-       |adm1 AS (
-       |  SELECT m.* FROM minima m WHERE m.b = 1 AND NOT EXISTS (
-       |    SELECT 1 FROM adm0 a
-       |    WHERE bit_count(xor(a.hi, m.hi)) + bit_count(xor(a.lo, m.lo)) <= 3))
+  // clusters = connected components of the exact Hamming<=3 pair
+  // graph; batch-1 minima are then dropped against batch-0 admissions.
+  query("q_stream_neardup64", qStreamNearDup64,
+    s"""WITH RECURSIVE $simhash64Cte,
+       |${store64Cte(2)}
        |SELECT id, simhash FROM adm0
        |UNION ALL SELECT id, simhash FROM adm1
-       |ORDER BY id""".stripMargin
-  })
+       |ORDER BY id""".stripMargin)
 
   /** the bounded store's FIFO EVICTION under the hash gate: three
     * parity batches at capacity = n_docs/4, so batch 2's match window is
@@ -182,61 +174,20 @@ object StreamingQueries extends Module("streaming") {
   // ONLY IF |adm1| < capacity (the engine's trimToCapacity conditional,
   // not an assumed outcome). Same signature/CC machinery as
   // q_stream_neardup64.
-  query("q_stream_neardup64_evict", qStreamNearDup64Evict, {
-    val bitSums = (1 to 64).map { j =>
-      val digit = (j - 1) / 4 + 1
-      val bit = 3 - ((j - 1) % 4)
-      s"sum(CASE WHEN ((strpos('0123456789abcdef', substring(h, $digit, 1)) - 1) >> $bit) & 1 = 1 THEN 1 ELSE -1 END) AS b_$j"
-    }.mkString(",\n         ")
-    val bitChars = (1 to 64)
-      .map(j => s"CASE WHEN b_$j > 0 THEN '1' ELSE '0' END")
-      .mkString("concat(", ", ", ")")
-    s"""WITH RECURSIVE e AS (
-       |  SELECT doc_id AS id, md5(unnest(string_split(text, ' '))) AS h FROM documents),
-       |s AS (
-       |  SELECT id,
-       |         $bitSums
-       |  FROM e GROUP BY id),
-       |sh64 AS (SELECT id, $bitChars AS simhash FROM s),
+  query("q_stream_neardup64_evict", qStreamNearDup64Evict,
+    s"""WITH RECURSIVE $simhash64Cte,
        |cap AS (SELECT GREATEST(1, count(*) // 4) AS c FROM documents),
-       |hl AS (
-       |  SELECT id, id % 3 AS b, simhash,
-       |         CAST(concat('0b', substring(simhash, 1, 32)) AS BIGINT) AS hi,
-       |         CAST(concat('0b', substring(simhash, 33, 32)) AS BIGINT) AS lo
-       |  FROM sh64),
-       |p AS (
-       |  SELECT x.id AS id_a, y.id AS id_b
-       |  FROM hl x JOIN hl y ON x.b = y.b AND x.id < y.id
-       |  WHERE bit_count(xor(x.hi, y.hi)) + bit_count(xor(x.lo, y.lo)) <= 3),
-       |eg AS (SELECT id_a AS src, id_b AS dst FROM p
-       |       UNION ALL SELECT id_b AS src, id_a AS dst FROM p),
-       |reach AS (
-       |  SELECT src AS id, src AS r FROM eg
-       |  UNION
-       |  SELECT eg.dst AS id, reach.r AS r FROM reach JOIN eg ON eg.src = reach.id),
-       |minima AS (
-       |  SELECT hl.* FROM hl
-       |  LEFT JOIN (SELECT id, min(r) AS m FROM reach GROUP BY id) c ON c.id = hl.id
-       |  WHERE c.m IS NULL OR c.m = hl.id),
-       |adm0 AS (SELECT * FROM minima WHERE b = 0),
-       |adm1 AS (
-       |  SELECT m.* FROM minima m WHERE m.b = 1 AND NOT EXISTS (
-       |    SELECT 1 FROM adm0 a
-       |    WHERE bit_count(xor(a.hi, m.hi)) + bit_count(xor(a.lo, m.lo)) <= 3)),
+       |${store64Cte(3)},
        |w2 AS (
        |  SELECT hi, lo FROM adm1
        |  UNION ALL
        |  SELECT hi, lo FROM adm0
        |  WHERE (SELECT count(*) FROM adm1) < (SELECT c FROM cap)),
-       |adm2 AS (
-       |  SELECT m.* FROM minima m WHERE m.b = 2 AND NOT EXISTS (
-       |    SELECT 1 FROM w2 a
-       |    WHERE bit_count(xor(a.hi, m.hi)) + bit_count(xor(a.lo, m.lo)) <= 3))
+       |${admit64(2, "w2")}
        |SELECT id, simhash FROM adm0
        |UNION ALL SELECT id, simhash FROM adm1
        |UNION ALL SELECT id, simhash FROM adm2
-       |ORDER BY id""".stripMargin
-  })
+       |ORDER BY id""".stripMargin)
 
   /** The 16-bit UNBOUNDED streaming lifecycle under the hash
     * gate: two
@@ -269,17 +220,7 @@ object StreamingQueries extends Module("streaming") {
        |  SELECT x.id AS id_a, y.id AS id_b
        |  FROM hl x JOIN hl y ON x.b = y.b AND x.id < y.id
        |  WHERE bit_count(xor(x.v, y.v)) <= 2),
-       |eg AS (SELECT id_a AS src, id_b AS dst FROM p
-       |       UNION ALL SELECT id_b AS src, id_a AS dst FROM p),
-       |reach AS (
-       |  SELECT src AS id, src AS r FROM eg
-       |  UNION
-       |  SELECT eg.dst AS id, reach.r AS r FROM reach JOIN eg ON eg.src = reach.id),
-       |minima AS (
-       |  SELECT hl.* FROM hl
-       |  LEFT JOIN (SELECT id, min(r) AS m FROM reach GROUP BY id) c ON c.id = hl.id
-       |  WHERE c.m IS NULL OR c.m = hl.id),
-       |adm0 AS (SELECT * FROM minima WHERE b = 0),
+       |$minimaCte,
        |adm1 AS (
        |  SELECT m.* FROM minima m WHERE m.b = 1 AND NOT EXISTS (
        |    SELECT 1 FROM adm0 a WHERE bit_count(xor(a.v, m.v)) <= 2))

@@ -17,6 +17,74 @@ import SharedSql._
   * text-level sketches. */
 object TextQueries extends Module("text") {
 
+  /** The adjacent token pairs of every doc with ≥ 2 tokens (the bigram
+    * stream of Search.bigramCondProbs): `bg(doc_id, w1, w2)`. */
+  private val bigramsCte =
+    """t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents
+      |           WHERE len(string_split(text, ' ')) >= 2),
+      |p AS (SELECT doc_id, unnest(range(1, len(toks))) AS i, toks FROM t),
+      |bg AS (SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2 FROM p)""".stripMargin
+
+  /** The bigram LM over the pair counts `cab(w1, w2, c_ab)`: each
+    * pair's conditional probability in integer permille,
+    * `m(w1, w2, cm)` (mirrors Search.bigramCondProbs). */
+  private val bigramModelCte =
+    """ca AS (SELECT w1, sum(c_ab) AS c_a FROM cab GROUP BY w1),
+      |m AS (SELECT w1, w2, (1000 * c_ab) // c_a AS cm
+      |      FROM cab JOIN ca USING (w1))""".stripMargin
+
+  /** BM25 scoring of the query terms ('hash', 'join', 'scan') (mirrors
+    * Search.bm25TopDocs, k1 = 1.2, b = 0.75): per-term weights
+    * `${prefix}sc(doc_id, w_fp)` in ×1e6 fixed point, summed per doc as
+    * `${prefix}agg(doc_id, score_fp)`. */
+  private def bm25Cte(prefix: String = ""): String =
+    s"""tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+       |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
+       |       WHERE term IN ('hash', 'join', 'scan') GROUP BY 1, 2),
+       |dfx AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
+       |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
+       |       FROM documents WHERE len(string_split(text, ' ')) > 0),
+       |st AS (SELECT count(*) AS n_docs,
+       |              CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
+       |${prefix}sc AS (
+       |  SELECT tf.doc_id,
+       |         CAST(round(
+       |           ln((st.n_docs - dfx.df + 0.5) / (dfx.df + 0.5) + 1.0)
+       |             * (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl))
+       |             * 1000000.0) AS BIGINT) AS w_fp
+       |  FROM tf JOIN dfx ON tf.term = dfx.term JOIN dl ON tf.doc_id = dl.doc_id, st),
+       |${prefix}agg AS (SELECT doc_id, CAST(sum(w_fp) AS BIGINT) AS score_fp FROM ${prefix}sc GROUP BY 1)""".stripMargin
+
+  /** The BPE merge chain, three rounds unrolled CTE-for-CTE (mirrors
+    * Search.bpeTrainMerges): `s0` wraps every token in guards, and round
+    * t counts the adjacent pairs of `s${t-1}` (`p$t`, `c$t`), takes the
+    * most frequent (`m$t`) and applies it corpus-wide (`s$t`). The guards
+    * make the merge a plain leftmost non-overlapping replace, the same
+    * greedy semantics on both engines. `carry` keeps doc_id and text
+    * through the rounds. */
+  private def bpeMergesCte(carry: Boolean): String = {
+    val s0 =
+      if (carry) """s0 AS (SELECT doc_id, text,
+                   |                   '(' || replace(text, ' ', ')(') || ')' AS s
+                   |            FROM documents)""".stripMargin
+      else "s0 AS (SELECT '(' || replace(text, ' ', ')(') || ')' AS s FROM documents)"
+    def round(t: Int) = {
+      val cols = if (carry) s"s${t - 1}.doc_id, s${t - 1}.text,\n               " else ""
+      s"""p$t AS (
+         |  SELECT toks, unnest(range(1, len(toks))) AS i
+         |  FROM (SELECT string_split(substr(s, 2, length(s) - 2), ')(') AS toks
+         |        FROM s${t - 1})
+         |  WHERE len(toks) >= 2),
+         |c$t AS (SELECT toks[i] AS w1, toks[i + 1] AS w2,
+         |               CAST(count(*) AS BIGINT) AS c FROM p$t GROUP BY 1, 2),
+         |m$t AS (SELECT w1, w2, c FROM c$t ORDER BY c DESC, w1, w2 LIMIT 1),
+         |s$t AS (SELECT ${cols}replace(s${t - 1}.s, '(' || m$t.w1 || ')(' || m$t.w2 || ')',
+         |                       '(' || m$t.w1 || ' ' || m$t.w2 || ')') AS s
+         |        FROM s${t - 1}, m$t)""".stripMargin
+    }
+    (s0 +: (1 to 3).map(round)).mkString(",\n")
+  }
+
   // One-time export of documents as raw TEXT LINES ("doc_id\ttext", line
   // breaks sanitized to spaces) — the native landing format of a web/LLM
   // corpus, and the one source format the matrix was missing.
@@ -215,15 +283,10 @@ object TextQueries extends Module("text") {
         TextOps.qualityScore(txt, en).as("quality"))
       .orderBy(col("doc_id"))
   }
-  query("q_text_quality", qTextQuality, {
-    val hits = vocabHits(stop("en"))
+  query("q_text_quality", qTextQuality,
     s"""WITH t AS (
        |  SELECT doc_id, text,
-       |         CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
-       |         $hits AS hits,
-       |         CASE WHEN length(text) > 0
-       |              THEN CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS DOUBLE) / length(text)
-       |              ELSE 0.0 END AS punct_ratio
+       |         $qualityFeatures
        |  FROM documents)
        |SELECT doc_id, n_tokens,
        |       CASE WHEN n_tokens > 0
@@ -234,8 +297,7 @@ object TextQueries extends Module("text") {
        |       (CASE WHEN n_tokens BETWEEN 20 AND 1000 THEN 1.0 ELSE 0.0 END) * 0.4
        |         + least((CASE WHEN n_tokens > 0 THEN CAST(hits AS DOUBLE) / n_tokens ELSE 0.0 END) * 4.0, 1.0) * 0.4
        |         + (1.0 - punct_ratio) * 0.2 AS quality
-       |FROM t ORDER BY doc_id""".stripMargin
-  })
+       |FROM t ORDER BY doc_id""".stripMargin)
 
   /** Linear quality-classifier APPLY — the model-based filter tier
     * (fastText-style classifiers in RedPajama-v2/FineWeb-class
@@ -437,28 +499,13 @@ object TextQueries extends Module("text") {
       .withColumnRenamed("id", "doc_id")
       .orderBy(col("doc_rank"))
   query("q_bm25_search", qBm25Search,
-    """WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-      |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
-      |       WHERE term IN ('hash', 'join', 'scan') GROUP BY 1, 2),
-      |dfx AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-      |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
-      |       FROM documents WHERE len(string_split(text, ' ')) > 0),
-      |st AS (SELECT count(*) AS n_docs,
-      |              CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-      |sc AS (
-      |  SELECT tf.doc_id,
-      |         CAST(round(
-      |           ln((st.n_docs - dfx.df + 0.5) / (dfx.df + 0.5) + 1.0)
-      |             * (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl))
-      |             * 1000000.0) AS BIGINT) AS w_fp
-      |  FROM tf JOIN dfx ON tf.term = dfx.term JOIN dl ON tf.doc_id = dl.doc_id, st),
-      |agg AS (SELECT doc_id, CAST(sum(w_fp) AS BIGINT) AS score_fp FROM sc GROUP BY 1),
-      |r AS (
-      |  SELECT doc_id, score_fp,
-      |         CAST(row_number() OVER (ORDER BY score_fp DESC, doc_id ASC) AS INTEGER) AS doc_rank
-      |  FROM agg)
-      |SELECT doc_id, score_fp, doc_rank FROM r WHERE doc_rank <= 10
-      |ORDER BY doc_rank""".stripMargin)
+    s"""WITH ${bm25Cte()},
+       |r AS (
+       |  SELECT doc_id, score_fp,
+       |         CAST(row_number() OVER (ORDER BY score_fp DESC, doc_id ASC) AS INTEGER) AS doc_rank
+       |  FROM agg)
+       |SELECT doc_id, score_fp, doc_rank FROM r WHERE doc_rank <= 10
+       |ORDER BY doc_rank""".stripMargin)
 
   /** Hybrid dense+sparse retrieval: cosine (around corpus vector 42) and
     * BM25 ranked lists fused by reciprocal rank — documents and
@@ -484,22 +531,7 @@ object TextQueries extends Module("text") {
        |dr AS (
        |  SELECT id, row_number() OVER (ORDER BY cosine DESC, id ASC) AS r
        |  FROM dsc QUALIFY r <= 20),
-       |tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-       |tf AS (SELECT doc_id, term, count(*) AS tf FROM tok
-       |       WHERE term IN ('hash', 'join', 'scan') GROUP BY 1, 2),
-       |dfx AS (SELECT term, count(*) AS df FROM tf GROUP BY 1),
-       |dl AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS dl
-       |       FROM documents WHERE len(string_split(text, ' ')) > 0),
-       |st AS (SELECT count(*) AS n_docs,
-       |              CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-       |ssc AS (
-       |  SELECT tf.doc_id,
-       |         CAST(round(
-       |           ln((st.n_docs - dfx.df + 0.5) / (dfx.df + 0.5) + 1.0)
-       |             * (tf.tf * 2.2) / (tf.tf + 1.2 * (0.25 + 0.75 * dl.dl / st.avgdl))
-       |             * 1000000.0) AS BIGINT) AS w_fp
-       |  FROM tf JOIN dfx ON tf.term = dfx.term JOIN dl ON tf.doc_id = dl.doc_id, st),
-       |sagg AS (SELECT doc_id, CAST(sum(w_fp) AS BIGINT) AS score_fp FROM ssc GROUP BY 1),
+       |${bm25Cte("s")},
        |sr AS (
        |  SELECT doc_id AS id, row_number() OVER (ORDER BY score_fp DESC, doc_id ASC) AS r
        |  FROM sagg QUALIFY r <= 20),
@@ -627,20 +659,15 @@ object TextQueries extends Module("text") {
       .withColumnRenamed("id", "doc_id")
       .orderBy(col("doc_id"))
   query("q_bigram_fluency", qBigramFluency,
-    """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-      |           WHERE len(string_split(text, ' ')) >= 2),
-      |p AS (SELECT doc_id, unnest(range(1, len(toks))) AS i, toks FROM t),
-      |bg AS (SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2 FROM p),
-      |cab AS (SELECT w1, w2, count(*) AS c_ab FROM bg GROUP BY w1, w2),
-      |ca AS (SELECT w1, sum(c_ab) AS c_a FROM cab GROUP BY w1),
-      |m AS (SELECT w1, w2, (1000 * c_ab) // c_a AS cm
-      |      FROM cab JOIN ca USING (w1))
-      |SELECT doc_id,
-      |       CAST(count(*) AS BIGINT) AS n_bigrams,
-      |       CAST(sum(cm) AS BIGINT) AS sum_cond_milli,
-      |       CAST(sum(cm) // count(*) AS BIGINT) AS mean_cond_milli
-      |FROM bg JOIN m USING (w1, w2)
-      |GROUP BY doc_id ORDER BY doc_id""".stripMargin)
+    s"""WITH $bigramsCte,
+       |cab AS (SELECT w1, w2, count(*) AS c_ab FROM bg GROUP BY w1, w2),
+       |$bigramModelCte
+       |SELECT doc_id,
+       |       CAST(count(*) AS BIGINT) AS n_bigrams,
+       |       CAST(sum(cm) AS BIGINT) AS sum_cond_milli,
+       |       CAST(sum(cm) // count(*) AS BIGINT) AS mean_cond_milli
+       |FROM bg JOIN m USING (w1, w2)
+       |GROUP BY doc_id ORDER BY doc_id""".stripMargin)
 
   /** OUT-OF-CORPUS bigram-LM apply (text.Search.bigramFluencyApply): the
     * model trains on the 90% of documents with doc_id % 10 ≠ 0 and
@@ -662,23 +689,18 @@ object TextQueries extends Module("text") {
   // 10% scored via LEFT join; unseen transitions take the backoff floor
   // of 1 permille and are counted in n_oov.
   query("q_bigram_fluency_oov", qBigramFluencyOov,
-    """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-      |           WHERE len(string_split(text, ' ')) >= 2),
-      |p AS (SELECT doc_id, unnest(range(1, len(toks))) AS i, toks FROM t),
-      |bg AS (SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2 FROM p),
-      |cab AS (SELECT w1, w2, count(*) AS c_ab FROM bg
-      |        WHERE doc_id % 10 <> 0 GROUP BY w1, w2),
-      |ca AS (SELECT w1, sum(c_ab) AS c_a FROM cab GROUP BY w1),
-      |m AS (SELECT w1, w2, (1000 * c_ab) // c_a AS cm
-      |      FROM cab JOIN ca USING (w1)),
-      |h AS (SELECT doc_id, w1, w2 FROM bg WHERE doc_id % 10 = 0)
-      |SELECT doc_id,
-      |       CAST(count(*) AS BIGINT) AS n_bigrams,
-      |       CAST(sum(CASE WHEN m.cm IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-      |       CAST(CAST(sum(coalesce(m.cm, 1)) AS BIGINT) // count(*) AS BIGINT)
-      |         AS mean_cond_milli
-      |FROM h LEFT JOIN m USING (w1, w2)
-      |GROUP BY doc_id ORDER BY doc_id""".stripMargin)
+    s"""WITH $bigramsCte,
+       |cab AS (SELECT w1, w2, count(*) AS c_ab FROM bg
+       |        WHERE doc_id % 10 <> 0 GROUP BY w1, w2),
+       |$bigramModelCte,
+       |h AS (SELECT doc_id, w1, w2 FROM bg WHERE doc_id % 10 = 0)
+       |SELECT doc_id,
+       |       CAST(count(*) AS BIGINT) AS n_bigrams,
+       |       CAST(sum(CASE WHEN m.cm IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
+       |       CAST(CAST(sum(coalesce(m.cm, 1)) AS BIGINT) // count(*) AS BIGINT)
+       |         AS mean_cond_milli
+       |FROM h LEFT JOIN m USING (w1, w2)
+       |GROUP BY doc_id ORDER BY doc_id""".stripMargin)
 
   /** Trigram STUPID-BACKOFF scoring (text.Search.trigramBackoffApply):
     * models train on the 90% split, the held-out 10% is scored through
@@ -867,21 +889,14 @@ object TextQueries extends Module("text") {
   // Quality-vs-length Pareto front: the naive NOT-EXISTS dominance
   // check (quadratic — fine at oracle scale; the engine runs the
   // sorted-scan skyline instead).
-  query("q_pareto_front", qParetoFront, {
-    val hits = vocabHits(stop("en"))
+  query("q_pareto_front", qParetoFront,
     s"""WITH t AS (
        |  SELECT doc_id,
-       |         CAST(len(string_split(text, ' ')) AS INTEGER) AS n_tokens,
-       |         $hits AS hits,
-       |         CASE WHEN length(text) > 0
-       |              THEN CAST(length(regexp_replace(text, '[^.,!?;:]', '', 'g')) AS DOUBLE) / length(text)
-       |              ELSE 0.0 END AS punct_ratio
+       |         $qualityFeatures
        |  FROM documents),
        |p AS (
        |  SELECT doc_id,
-       |         CAST(round(((CASE WHEN n_tokens BETWEEN 20 AND 1000 THEN 1.0 ELSE 0.0 END) * 0.4
-       |           + least((CASE WHEN n_tokens > 0 THEN CAST(hits AS DOUBLE) / n_tokens ELSE 0.0 END) * 4.0, 1.0) * 0.4
-       |           + (1.0 - punct_ratio) * 0.2) * 1000000.0) AS BIGINT) AS q_fp6,
+       |         $qualityFp6 AS q_fp6,
        |         CAST(n_tokens AS BIGINT) AS n_tokens
        |  FROM t)
        |SELECT doc_id, q_fp6, n_tokens FROM p
@@ -889,8 +904,7 @@ object TextQueries extends Module("text") {
        |  SELECT 1 FROM p d
        |  WHERE d.q_fp6 >= p.q_fp6 AND d.n_tokens >= p.n_tokens
        |    AND (d.q_fp6 > p.q_fp6 OR d.n_tokens > p.n_tokens))
-       |ORDER BY doc_id""".stripMargin
-  })
+       |ORDER BY doc_id""".stripMargin)
 
   /** word2phrase collocation mining (Search.phraseMining): the
     * phrase-vocabulary induction step before tokenizer training — lift
@@ -903,29 +917,12 @@ object TextQueries extends Module("text") {
   private def qBpeTrain(s: SparkSession, d: String): DataFrame =
     graft.text.Search.bpeTrainMerges(spread(t(s, d, "documents"), "doc_id"), "doc_id", "text", nMerges = 3)
       .orderBy(col("merge_rank"))
-  // BPE training, three rounds unrolled CTE-for-CTE: the guard-wrapped
-  // string makes the merge apply a plain leftmost non-overlapping
-  // replace (identical greedy semantics on both engines).
-  query("q_bpe_train", qBpeTrain, {
-    def round(t: Int) =
-      s"""p$t AS (
-         |  SELECT toks, unnest(range(1, len(toks))) AS i
-         |  FROM (SELECT string_split(substr(s, 2, length(s) - 2), ')(') AS toks
-         |        FROM s${t - 1})
-         |  WHERE len(toks) >= 2),
-         |c$t AS (SELECT toks[i] AS w1, toks[i + 1] AS w2,
-         |               CAST(count(*) AS BIGINT) AS c FROM p$t GROUP BY 1, 2),
-         |m$t AS (SELECT w1, w2, c FROM c$t ORDER BY c DESC, w1, w2 LIMIT 1),
-         |s$t AS (SELECT replace(s${t - 1}.s, '(' || m$t.w1 || ')(' || m$t.w2 || ')',
-         |                       '(' || m$t.w1 || ' ' || m$t.w2 || ')') AS s
-         |        FROM s${t - 1}, m$t)""".stripMargin
-    s"""WITH s0 AS (SELECT '(' || replace(text, ' ', ')(') || ')' AS s FROM documents),
-       |${(1 to 3).map(round).mkString(",\n")}
+  query("q_bpe_train", qBpeTrain,
+    s"""WITH ${bpeMergesCte(carry = false)}
        |SELECT CAST(1 AS INTEGER) AS merge_rank, w1, w2, c AS pair_count FROM m1
        |UNION ALL SELECT CAST(2 AS INTEGER), w1, w2, c FROM m2
        |UNION ALL SELECT CAST(3 AS INTEGER), w1, w2, c FROM m3
-       |ORDER BY merge_rank""".stripMargin
-  })
+       |ORDER BY merge_rank""".stripMargin)
 
   /** The trained tokenizer applied corpus-wide (Search.bpeApply):
     * per-doc token counts before/after the learned merges — the
@@ -936,29 +933,12 @@ object TextQueries extends Module("text") {
       .orderBy(col("doc_id"))
   // BPE apply: same unrolled merge chain, with doc_id carried through
   // the per-round replace; before/after token counts per document.
-  query("q_bpe_apply", qBpeApply, {
-    def round(t: Int) =
-      s"""p$t AS (
-         |  SELECT toks, unnest(range(1, len(toks))) AS i
-         |  FROM (SELECT string_split(substr(s, 2, length(s) - 2), ')(') AS toks
-         |        FROM s${t - 1})
-         |  WHERE len(toks) >= 2),
-         |c$t AS (SELECT toks[i] AS w1, toks[i + 1] AS w2,
-         |               CAST(count(*) AS BIGINT) AS c FROM p$t GROUP BY 1, 2),
-         |m$t AS (SELECT w1, w2, c FROM c$t ORDER BY c DESC, w1, w2 LIMIT 1),
-         |s$t AS (SELECT s${t - 1}.doc_id, s${t - 1}.text,
-         |               replace(s${t - 1}.s, '(' || m$t.w1 || ')(' || m$t.w2 || ')',
-         |                       '(' || m$t.w1 || ' ' || m$t.w2 || ')') AS s
-         |        FROM s${t - 1}, m$t)""".stripMargin
-    s"""WITH s0 AS (SELECT doc_id, text,
-       |                   '(' || replace(text, ' ', ')(') || ')' AS s
-       |            FROM documents),
-       |${(1 to 3).map(round).mkString(",\n")}
+  query("q_bpe_apply", qBpeApply,
+    s"""WITH ${bpeMergesCte(carry = true)}
        |SELECT doc_id,
        |       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok_before,
        |       CAST(len(string_split(substr(s, 2, length(s) - 2), ')(')) AS BIGINT) AS n_tok_after
-       |FROM s3 ORDER BY doc_id""".stripMargin
-  })
+       |FROM s3 ORDER BY doc_id""".stripMargin)
 
   /** Unigram-LM tokenizer TRAINING (Unigram.unigramTrain — Kudo 2018,
     * SentencePiece's model family, hard-EM variant): substring-seeded
@@ -1039,8 +1019,7 @@ object TextQueries extends Module("text") {
   // Three-family tokenizer comparison (BPE / unigram-LM / WordPiece):
   // the three apply pipelines' corpus totals in ONE statement —
   // each family's CTE block is the same generator its own gated row
-  // uses (uni*/wp* helpers; the BPE block mirrors q_bpe_apply's
-  // 3-round merge with bp-prefixed CTE names).
+  // uses (uni*/wp* helpers and bpeMergesCte).
   query("q_tokenizer_families", qTokenizerFamilies, tokenizerFamiliesSql)
 
   private def qPhraseMining(s: SparkSession, d: String): DataFrame =
@@ -1383,24 +1362,8 @@ object TextQueries extends Module("text") {
   // Tokenizer fertility per language: the q_bpe_apply 3-round merge
   // CTEs grouped by lang; ratios via truncating // on BIGINT-cast
   // sums (HUGEINT never reaches the output).
-  query("q_token_fertility", qTokenFertility, {
-    def round(t: Int) =
-      s"""p$t AS (
-         |  SELECT toks, unnest(range(1, len(toks))) AS i
-         |  FROM (SELECT string_split(substr(s, 2, length(s) - 2), ')(') AS toks
-         |        FROM s${t - 1})
-         |  WHERE len(toks) >= 2),
-         |c$t AS (SELECT toks[i] AS w1, toks[i + 1] AS w2,
-         |               CAST(count(*) AS BIGINT) AS c FROM p$t GROUP BY 1, 2),
-         |m$t AS (SELECT w1, w2, c FROM c$t ORDER BY c DESC, w1, w2 LIMIT 1),
-         |s$t AS (SELECT s${t - 1}.doc_id, s${t - 1}.text,
-         |               replace(s${t - 1}.s, '(' || m$t.w1 || ')(' || m$t.w2 || ')',
-         |                       '(' || m$t.w1 || ' ' || m$t.w2 || ')') AS s
-         |        FROM s${t - 1}, m$t)""".stripMargin
-    s"""WITH s0 AS (SELECT doc_id, text,
-       |                   '(' || replace(text, ' ', ')(') || ')' AS s
-       |            FROM documents),
-       |${(1 to 3).map(round).mkString(",\n")},
+  query("q_token_fertility", qTokenFertility,
+    s"""WITH ${bpeMergesCte(carry = true)},
        |agg AS (
        |  SELECT d.lang,
        |         CAST(count(*) AS BIGINT) AS n_docs,
@@ -1412,8 +1375,7 @@ object TextQueries extends Module("text") {
        |SELECT lang, n_docs, n_chars, n_tok_word, n_tok_bpe,
        |       CAST(n_tok_bpe * 1000 // n_tok_word AS BIGINT) AS fertility_permille,
        |       CAST(n_chars * 1000 // n_tok_bpe AS BIGINT) AS chars_per_bpe_permille
-       |FROM agg ORDER BY lang""".stripMargin
-  })
+       |FROM agg ORDER BY lang""".stripMargin)
 
   /** Per-doc character-histogram quality stats (TextOps.charEntropyFp9):
     * the gibberish/low-diversity filter, fully in-row (sort + run-length,
@@ -1937,38 +1899,21 @@ wpres AS MATERIALIZED (SELECT w, np, unk FROM wpwk$wpMwl)"""
   }
 
   /** Three-family tokenizer comparison oracle: the unigram and WordPiece
-    * CTE blocks verbatim (shared `wrd`), plus a bp-prefixed mirror of
-    * the q_bpe_apply 3-round doc-level merge, reduced to per-family
-    * corpus totals. */
-  private def tokenizerFamiliesSql: String = {
-    def bpeRound(t: Int): String =
-      s"""bpp$t AS MATERIALIZED (
-  SELECT toks, unnest(range(1, len(toks))) AS i
-  FROM (SELECT string_split(substr(s, 2, length(s) - 2), ')(') AS toks FROM bps${t - 1})
-  WHERE len(toks) >= 2),
-bpc$t AS MATERIALIZED (
-  SELECT toks[i] AS w1, toks[i + 1] AS w2, CAST(count(*) AS BIGINT) AS c
-  FROM bpp$t GROUP BY 1, 2),
-bpm$t AS MATERIALIZED (SELECT w1, w2, c FROM bpc$t ORDER BY c DESC, w1, w2 LIMIT 1),
-bps$t AS MATERIALIZED (
-  SELECT bps${t - 1}.doc_id, bps${t - 1}.text,
-         replace(bps${t - 1}.s, '(' || bpm$t.w1 || ')(' || bpm$t.w2 || ')',
-                 '(' || bpm$t.w1 || ' ' || bpm$t.w2 || ')') AS s
-  FROM bps${t - 1}, bpm$t)"""
+    * CTE blocks verbatim (shared `wrd`), plus q_bpe_apply's 3-round
+    * doc-level merge chain, reduced to per-family corpus totals. */
+  private def tokenizerFamiliesSql: String =
     s"""WITH
 $wrdCte,
 $uniModelCtes,
 $uniNpsCtes,
 $wpModelCtes,
 $wpApplyCtes,
-bps0 AS MATERIALIZED (
-  SELECT doc_id, text, '(' || replace(text, ' ', ')(') || ')' AS s FROM documents),
-${(1 to 3).map(bpeRound).mkString(",\n")},
+${bpeMergesCte(carry = true)},
 fam AS (
   SELECT 'bpe' AS family,
          CAST(SUM(len(string_split(text, ' '))) AS BIGINT) AS n_words,
          CAST(SUM(len(string_split(substr(s, 2, length(s) - 2), ')('))) AS BIGINT) AS n_tokens
-  FROM bps3
+  FROM s3
   UNION ALL
   SELECT 'unigram' AS family,
          CAST(count(*) AS BIGINT) AS n_words,
@@ -1986,5 +1931,4 @@ fam AS (
 SELECT family, n_words, n_tokens,
        CAST(n_tokens * 1000 // n_words AS BIGINT) AS fertility_permille
 FROM fam ORDER BY family"""
-  }
 }

@@ -42,17 +42,13 @@ object Vectors {
 
   def normSqFp(a: Column): Column = dotFp(a, a)
 
-  /** Cosine of two fixed-point vectors: exact-int dot / (√nx·√ny).
-    * sqrt of each norm separately — nx*ny would overflow BIGINT.
-    * NULL (not NaN) when either vector has zero magnitude — NaN sorts
-    * ABOVE all doubles in Spark and would rank zero vectors first.
-    */
-  def cosineFp(a: Column, b: Column): Column =
-    cosineFromNorms(a, b, normSqFp(a), normSqFp(b))
-
-  /** Cosine with the norms precomputed once per vector (they are reused
+  /** Cosine of two fixed-point vectors: exact-int dot / (√na·√nb), with
+    * the squared norms precomputed once per vector (they are reused
     * across every pair the vector participates in — at corpus scale this
-    * saves an O(d) pass per comparison). */
+    * saves an O(d) pass per comparison). sqrt of each norm separately —
+    * na*nb would overflow BIGINT. NULL (not NaN) when either vector has
+    * zero magnitude — NaN sorts ABOVE all doubles in Spark and would rank
+    * zero vectors first. */
   def cosineFromNorms(a: Column, b: Column, na: Column, nb: Column): Column =
     when(na > 0 && nb > 0,
       dotFp(a, b).cast("double") / (sqrt(na.cast("double")) * sqrt(nb.cast("double"))))

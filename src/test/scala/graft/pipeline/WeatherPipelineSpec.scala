@@ -281,7 +281,7 @@ class WeatherPipelineSpec extends SparkSpec {
       WeatherPipeline.runDaily(spark, fetcher, cities, Timestamp.valueOf("2024-06-03 08:30:00"),
         Timestamp.valueOf("2024-06-03 09:00:00"), dir)
     }
-    // raw append, gate, dim write, fct write; the actions of the batch's
+    // raw write, gate, dim write, fct write; the actions of the batch's
     // cloned session reach a listener registered on the caller's
     assert(r.actions == 4, r.summary)
     assert(r.jobs <= 4 && r.tasks == r.jobs && r.shuffleBytes == 0, r.summary)
@@ -298,7 +298,9 @@ class WeatherPipelineSpec extends SparkSpec {
     assert(new java.io.File(s"$dir/landing").listFiles().count(_.getName.endsWith(".json")) >= 2)
     val landed = spark.read.schema("city STRING, raw_json STRING").json(s"$dir/landing")
     WeatherPipeline.runBatch(landed, t0, now, s"$dir/file")
-    assert(dataFiles(s"$dir/file/raw/weather") >= 2)
+    val intervals = new java.io.File(s"$dir/file/raw/weather").listFiles()
+      .filter(_.getName.startsWith("data_interval_start="))
+    assert(intervals.length == 1 && dataFiles(intervals.head.getPath) >= 2)
     assert(spark.read.parquet(s"$dir/file/marts/fct_weather_observations").count() == 3)
   }
 
@@ -322,6 +324,20 @@ class WeatherPipelineSpec extends SparkSpec {
     val fresh = java.nio.file.Files.createTempDirectory("wp-empty-fresh").toString
     WeatherPipeline.runDaily(spark, failAll, cities, t0, now, fresh, retries = 0)
     assert(!new java.io.File(s"$fresh/marts").exists())
+  }
+
+  test("raw keeps one copy of each interval: a re-run replaces that interval's raw rows") {
+    val dir = java.nio.file.Files.createTempDirectory("wp-raw").toString
+    def batch(cities: (String, String)*): DataFrame =
+      cities.map { case (c, country) => (c, payload(c, country, 18, "sunny")) }
+        .toDF("city", "raw_json")
+    val (t1, now1) = (Timestamp.valueOf("2024-06-03 08:30:00"), Timestamp.valueOf("2024-06-03 09:00:00"))
+    WeatherPipeline.runBatch(batch("Paris" -> "France", "Tokyo" -> "Japan"), t0, now, dir)
+    WeatherPipeline.runBatch(batch("Paris" -> "France"), t1, now1, dir)
+    WeatherPipeline.runBatch(batch("Paris" -> "France"), t1, now1, dir) // the day-2 retry
+    val raw = spark.read.parquet(s"$dir/raw/weather")
+    assert(raw.count() == 3)
+    assert(raw.select("id").distinct().count() == 3)
   }
 
   test("re-running a day overwrites only that extraction_date partition") {
