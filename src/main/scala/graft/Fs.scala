@@ -1,9 +1,11 @@
 package graft
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.SparkSession
 
-/** Filesystem helpers shared by the gate harnesses, probes, streaming
-  * commits and the pipeline's mart publish. */
+/** Filesystem helpers shared by the gate harnesses and probes, and the
+  * one commit protocol on Hadoop `FileSystem` behind the pipeline's
+  * tables and the streaming sinks: stage, then publish by rename. */
 object Fs {
   /** Recursive delete. Null-safe: `listFiles()` returns null on an I/O
     * error or a race with another deleter, and the delete proceeds. */
@@ -15,31 +17,74 @@ object Fs {
     f.delete()
   }
 
-  /** Stage-and-swap commit on any Hadoop `FileSystem`: replace `live`
-    * with the fully written `stage` dir by one rename, so a reader lists
-    * either the old table or the new one, never a half-written one.
-    * `live`'s parent is created if missing. The delete and the rename
-    * are two steps: a crash between them leaves `stage` complete and
-    * `live` absent. Throws if the rename fails. */
-  def publish(fs: FileSystem, stage: Path, live: Path): Unit = {
+  /** The `FileSystem` of `p` under `spark`'s Hadoop conf. */
+  def of(spark: SparkSession, p: Path): FileSystem =
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Where a commit onto `live` stages: `_stage/<name>` beside it. Spark's
+    * file listing skips `_`-prefixed names, so a stage, or one a crash
+    * left behind, is never read as part of the table dir it sits in. */
+  def stageOf(live: Path): Path = new Path(new Path(live.getParent, "_stage"), live.getName)
+
+  /** Write–publish commit of one dir: `write` fills [[stageOf]]`(live)`,
+    * which then replaces `live` by one rename. */
+  def commit(fs: FileSystem, live: Path)(write: Path => Unit): Unit =
+    staged(fs, stageOf(live), write)(publish(fs, _, live))
+
+  /** Write–publish commit of tables under `root`, each a (dir under
+    * `root`, partition column): `write` writes each table at its dir under
+    * a fresh stage root beside them, [[stageOf]]`(<root>/<uuid>)`. Only if
+    * `write` returns are the tables published, in order: a whole dir, or
+    * each staged partition dir plus `_SUCCESS`, leaving the other live
+    * partitions as they are (as a dynamic partition overwrite does). */
+  def commitTables(fs: FileSystem, root: Path, tables: Seq[(String, Option[String])])(
+      write: Path => Unit): Unit =
+    staged(fs, stageOf(new Path(root, java.util.UUID.randomUUID().toString)), write) { stage =>
+      for ((dir, partitionedBy) <- tables) {
+        val (from, to) = (new Path(stage, dir), new Path(root, dir))
+        partitionedBy match {
+          case None => publish(fs, from, to)
+          case Some(col) =>
+            for (p <- fs.listStatus(from).map(_.getPath)
+                 if p.getName.startsWith(s"$col=") || p.getName == "_SUCCESS")
+              publish(fs, p, new Path(to, p.getName))
+        }
+      }
+    }
+
+  /** Clears `stage` of what a crashed commit left there, writes and
+    * publishes it, and removes it whether those succeed or throw. */
+  private def staged(fs: FileSystem, stage: Path, write: Path => Unit)(
+      publishAll: Path => Unit): Unit = {
+    fs.delete(stage, true)
+    try {
+      write(stage)
+      publishAll(stage)
+    } finally {
+      fs.delete(stage, true)
+      // the last commit out removes the stage root; a concurrent commit's
+      // stage keeps it non-empty, and then the delete fails harmlessly
+      scala.util.Try(if (fs.listStatus(stage.getParent).isEmpty) fs.delete(stage.getParent, false))
+    }
+  }
+
+  /** Replaces `live` with the fully written `stage` dir by one rename, so
+    * a reader lists either the old dir or the new one, never a
+    * half-written one. `live`'s parent is created if missing. The delete
+    * and the rename are two steps: a crash between them leaves `stage`
+    * complete and `live` absent. Throws if the rename fails. */
+  private def publish(fs: FileSystem, stage: Path, live: Path): Unit = {
     fs.delete(live, true)
     fs.mkdirs(live.getParent)
     if (!fs.rename(stage, live))
       throw new IllegalStateException(s"publish failed: $stage -> $live")
   }
 
-  /** [[publish]] of a local `stage` dir onto a local `live` dir. */
-  def swap(stage: java.io.File, live: java.io.File): Unit =
-    publish(localFs, new Path(stage.getAbsoluteFile.toURI), new Path(live.getAbsoluteFile.toURI))
-
-  private lazy val localFs: FileSystem =
-    FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
-
   /** Root for EPHEMERAL run state (gate-harness roots, one-shot stream
     * checkpoints): tmpfs (`/dev/shm`) when present and writable, else
     * `java.io.tmpdir`. Rationale: on a host whose /tmp is disk-backed,
     * every temp checkpoint's offset/commit-log fsync and every
-    * stage-and-swap parquet commit pays the disk-writeback tax — the
+    * staged parquet commit pays the disk-writeback tax — the
     * single biggest slowdown of the streaming queries when the disk is
     * busy (measured ×4-10 on unchanged binaries). State
     * that lives exactly as long as one drain and is deleted after has

@@ -14,7 +14,6 @@ import graft.Fs
 import graft.ops.Relational
 import graft.quality.Checks
 import graft.quality.Checks._
-import graft.sources.IO
 
 /** The reference pipeline (bronze → silver → gold) re-expressed as pure
   * DataFrame functions. Reference: caphey/weather-api-automate-etl —
@@ -27,13 +26,14 @@ import graft.sources.IO
   * models' dbt tests declared as `quality.Checks` contracts
   * (`rawWeatherTests`, `dimLocationsTests`, `fctWeatherObservationsTests`).
   * `runBatch` runs a batch as one wave of four concurrent actions: the
-  * raw write, one gate over all three contracts, and the two mart
-  * writes into a stage dir; the staged marts are published only if all
-  * four succeeded. A driver-held batch (the `runDaily` path) is one
-  * partition, run interpreted, so each action is one task with no
-  * shuffle and no generated code. The fact partitions by
-  * `extraction_date`, so a daily re-run replaces one partition instead
-  * of the table.
+  * raw write and the two mart writes into one stage dir, and one gate
+  * over all three contracts; the staged raw and marts are published only
+  * if all four succeeded, so a failing batch's raw rows never land. A
+  * driver-held batch (the `runDaily` path) is one partition, run
+  * interpreted, so each action is one task with no shuffle and no
+  * generated code. Raw partitions by `data_interval_start` and the fact
+  * by `extraction_date`, so a daily re-run replaces one partition of
+  * each instead of the table.
   */
 object WeatherPipeline {
 
@@ -232,9 +232,7 @@ object WeatherPipeline {
     * (dags/weatherstack_full_pipeline.py:172) as ONE wave of four
     * concurrent actions, then a publish:
     *
-    *  - the raw write into the live `raw/weather`, partitioned by
-    *    `data_interval_start`: it replaces this interval's partition, so
-    *    a re-run or retry of an interval leaves one copy of its rows;
+    *  - the raw write, partitioned by `data_interval_start`;
     *  - the gate: ONE `Checks.assertTiers` action over the source
     *    contract (`raw_weather`, DAG step 4) and the mart contracts
     *    (`dim_locations`, `fct_weather_observations`, step 6). If a
@@ -242,19 +240,21 @@ object WeatherPipeline {
     *    failing `raw_weather.*` checks, because the DAG never runs the
     *    mart tests then; otherwise it names every failing mart check,
     *    sorted;
-    *  - the dim write and the `extraction_date`-partitioned fact write,
-    *    into a stage dir `_stage/<uuid>/marts/<table>` under `outDir`.
+    *  - the dim write and the `extraction_date`-partitioned fact write.
     *
-    * The wave waits for all four. Only if all four succeeded are the
-    * staged marts published (write–audit–publish, on the Hadoop
-    * `FileSystem` of `outDir`, see `graft.Fs.publish`): the dim replaces
-    * the live dim, and each staged fact partition replaces its live
-    * partition, leaving the others as they are, as a dynamic partition
-    * overwrite does (O(day), not O(table)). Stricter than the DAG by
-    * design: dbt writes the marts in step 5 and validates after; here
-    * the tests gate the PUBLISH, so a failing mart never goes live. The
-    * stage is deleted either way. Otherwise the first error in wave
-    * order (raw, gate, dim, fct) is thrown with the others suppressed.
+    * The three tables are written into one stage under `outDir`, each at
+    * its live path. The wave waits for all four. Only if all four
+    * succeeded are raw, dim, then fct published (write–audit–publish on
+    * the Hadoop `FileSystem` of `outDir`, `graft.Fs.commitTables`): the
+    * dim replaces the live dim, and each staged raw interval and fact
+    * partition replaces its live partition, leaving the others as they
+    * are (O(day), not O(table)). So a re-run of an interval leaves one
+    * copy of its raw rows, and a batch that fails the gate publishes
+    * nothing, raw included. Stricter than the DAG by design: dbt lands
+    * raw in step 2 and validates after; here the tests gate the PUBLISH,
+    * so a failing table never goes live. Otherwise the first error in
+    * wave order (raw, gate, dim, fct) is thrown with the others
+    * suppressed.
     *
     * A batch whose ingest optimizes to a `LocalRelation` (the driver-
     * held payloads of `runDaily`) runs in a per-batch clone of the
@@ -293,39 +293,27 @@ object WeatherPipeline {
       case None => ingested.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
     val out = new Path(outDir)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stages = new Path(out, "_stage")
-    val stage = new Path(stages, java.util.UUID.randomUUID().toString)
+    val fs = Fs.of(spark, out)
     try {
       val stg = stgWeather(raw)
-      val dim = dimLocations(stg)
-      val fct = fctWeatherObservations(stg)
-      inParallel(
-        () => IO.writePartitioned(raw, Seq("data_interval_start"), s"$outDir/raw/weather"),
-        () => Checks.assertTiers(Seq(("raw_weather", raw, rawWeatherTests)),
-          Seq(("dim_locations", dim, dimLocationsTests),
-            ("fct_weather_observations", fct, fctWeatherObservationsTests))),
-        () => dim.write.parquet(new Path(stage, DimTable).toString),
-        () => fct.write.partitionBy(FctPartition).parquet(new Path(stage, FctTable).toString))
-      Fs.publish(fs, new Path(stage, DimTable), new Path(out, DimTable))
-      // each staged partition, and the commit marker a dynamic overwrite
-      // leaves in the table dir
-      for (p <- fs.listStatus(new Path(stage, FctTable)).map(_.getPath)
-           if p.getName.startsWith(s"$FctPartition=") || p.getName == "_SUCCESS")
-        Fs.publish(fs, p, new Path(new Path(out, FctTable), p.getName))
-      Seq(DimTable, FctTable).foreach(t => spark.catalog.refreshByPath(new Path(out, t).toString))
-    } finally {
-      if (driverHeld.isEmpty) raw.unpersist()
-      fs.delete(stage, true)
-      // the last batch out removes the stage root; a concurrent batch's
-      // stage keeps it non-empty, and then the delete fails harmlessly
-      scala.util.Try(if (fs.listStatus(stages).isEmpty) fs.delete(stages, false))
-    }
+      val (dim, fct) = (dimLocations(stg), fctWeatherObservations(stg))
+      val tables = Seq(("raw/weather", raw, Some("data_interval_start")),
+        ("marts/dim_locations", dim, None),
+        ("marts/fct_weather_observations", fct, Some("extraction_date")))
+      Fs.commitTables(fs, out, tables.map { case (t, _, part) => (t, part) }) { stage =>
+        val Seq(rawWrite, dimWrite, fctWrite) = tables.map { case (t, df, part) =>
+          () => df.write.partitionBy(part.toSeq: _*).parquet(new Path(stage, t).toString)
+        }
+        inParallel(rawWrite,
+          () => Checks.assertTiers(Seq(("raw_weather", raw, rawWeatherTests)),
+            Seq(("dim_locations", dim, dimLocationsTests),
+              ("fct_weather_observations", fct, fctWeatherObservationsTests))),
+          dimWrite, fctWrite)
+      }
+      // a rename bypasses the writers' own refresh of frames cached over a table
+      tables.foreach { case (t, _, _) => spark.catalog.refreshByPath(new Path(out, t).toString) }
+    } finally if (driverHeld.isEmpty) raw.unpersist()
   }
-
-  private val DimTable = "marts/dim_locations"
-  private val FctTable = "marts/fct_weather_observations"
-  private val FctPartition = "extraction_date"
 
   /** A per-batch clone of `spark` that interprets its plans: no
     * whole-stage codegen and interpreted expressions. */

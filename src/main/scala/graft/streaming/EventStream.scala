@@ -447,26 +447,26 @@ object EventStream {
   /** Apply one micro-batch to a keyed parquet table as a MERGE
     * ([[graft.ops.Relational.upsert]] — latest-per-key within the batch,
     * keyed replace against the base). The merged table is materialized to
-    * a STAGE directory before the live directory is touched, then swapped
-    * — a crash mid-write never leaves a half table, and the merge (which
-    * READS the live directory) is fully evaluated before its input
-    * disappears. The swap is the plain-parquet stand-in for a table
-    * format's transactional commit; the merge plan is a WindowGroupLimit
-    * dedup + anti join (AQE broadcasts small batches).
+    * a stage dir before the live directory is touched, then renamed in
+    * ([[graft.Fs.commit]], on the Hadoop filesystem of `target`) — a crash
+    * mid-write never leaves a half table, and the merge (which READS the
+    * live directory) is fully evaluated before its input disappears. The
+    * rename is the plain-parquet stand-in for a table format's
+    * transactional commit; the merge plan is a WindowGroupLimit dedup +
+    * anti join (AQE broadcasts small batches).
     * Keyed merge ⇒ re-applying the same batch is a no-op (idempotent).
     */
   def upsertBatchIntoParquet(batch: DataFrame, target: String,
                              keys: Seq[String],
                              order: Seq[org.apache.spark.sql.Column]): Unit = {
     val spark = batch.sparkSession
-    val live = new java.io.File(target)
+    val live = new org.apache.hadoop.fs.Path(target)
+    val fs = graft.Fs.of(spark, live)
     val merged =
-      if (live.isDirectory)
+      if (fs.exists(live))
         graft.ops.Relational.upsert(spark.read.parquet(target), batch, keys, order)
       else graft.ops.Relational.latestPerKey(batch, keys, order)
-    val stage = new java.io.File(target + ".stage")
-    merged.write.mode("overwrite").parquet(stage.getAbsolutePath)
-    graft.Fs.swap(stage, live)
+    graft.Fs.commit(fs, live)(stage => merged.write.parquet(stage.toString))
   }
 
   /** Streaming MERGE sink — foreachBatch + [[upsertBatchIntoParquet]]:

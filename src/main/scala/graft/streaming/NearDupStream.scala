@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -23,12 +24,12 @@ import graft.dedup.Dedup
   * rows) no matter how many documents ever streamed, so every batch's
   * store check is one broadcast join. Both output tables commit
   * PER-BATCH-FILE: one partition directory per micro-batch, staged and
-  * atomically renamed (crash-safe), so a batch writes O(batch) rows no
-  * matter how much was ever admitted, and a replayed batch rewrites only
-  * its OWN directory — idempotent on top of the checkpoint's
-  * exactly-once file offsets (which also guarantee a doc id arrives in
-  * at most one batch, keeping the admitted dirs' union id-deduped
-  * without any cross-batch shuffle).
+  * renamed in by `graft.Fs.commit` (crash-safe), so a batch writes
+  * O(batch) rows no matter how much was ever admitted, and a replayed
+  * batch rewrites only its OWN directory — idempotent on top of the
+  * checkpoint's exactly-once file offsets (which also guarantee a doc id
+  * arrives in at most one batch, keeping the admitted dirs' union
+  * id-deduped without any cross-batch shuffle).
   */
 object NearDupStream {
 
@@ -60,72 +61,54 @@ object NearDupStream {
     out
   }
 
-  /** PER-BATCH FILE COMMITS: both output tables are laid out as one
-    * Hive-style partition directory per micro-batch
-    * (`<dir>/seq_batch=N/`), so a batch commits O(batch) rows — stage a
-    * sibling dot-dir, one atomic rename — instead of rewriting
-    * O(total-admitted) parquet, and whole-batch FIFO eviction is a
-    * DIRECTORY DELETE, O(1) metadata. Readers are unchanged
-    * (`spark.read.parquet(dir)` partition-discovers `seq_batch`; the
-    * store's window filter `seq_batch < N` becomes a partition-PRUNED
-    * listing), and the cross-batch admitted dedup/distinct shuffles the
-    * whole-table rewrites would pay per batch are avoided: per-batch
-    * admitted id sets are disjoint under the file source's exactly-once
-    * offsets, and an admitted SIGNATURE never recurs while in the match
-    * window (distance 0 ≤ maxDist always matches), so the union of the
-    * committed dirs IS the deduped table. Per-batch cost is therefore
-    * independent of how many documents ever streamed. */
+  /** PER-BATCH FILE COMMITS: both output tables hold one Hive-style
+    * partition dir per micro-batch, this one, so a batch commits O(batch)
+    * rows instead of rewriting O(total-admitted) parquet, and whole-batch
+    * FIFO eviction is a DIRECTORY DELETE. `spark.read.parquet(dir)`
+    * partition-discovers `seq_batch` (the store's window filter
+    * `seq_batch < N` is a partition-PRUNED listing). Per-batch admitted id
+    * sets are disjoint under the file source's exactly-once offsets, and
+    * an admitted SIGNATURE never recurs while in the match window
+    * (distance 0 ≤ maxDist always matches), so the union of the committed
+    * dirs IS the deduped table, with no cross-batch dedup shuffle. */
+  private def seqDir(dir: String, seq: Long): Path = new Path(dir, s"seq_batch=$seq")
 
-  /** Stage `df` under `<dir>/.stage_<seq>` (dot-prefixed — invisible to
-    * Spark's file listing even if a crash leaks it) and atomically swap
-    * it into the live `<dir>/seq_batch=<seq>` partition directory. The
-    * write is an ACTION, so `df` — which may read the live dirs — is
-    * fully materialized before anything moves. */
+  /** Commit `df` as the live `<dir>/seq_batch=<seq>` partition dir through
+    * [[graft.Fs.commit]]: staged beside the partition dirs, where Spark's
+    * file listing never sees it, then renamed in. The write is an ACTION,
+    * so `df`, which may read the live dirs, is fully materialized before
+    * anything moves. */
   private def commitSeqDir(df: DataFrame, dir: String, seq: Long): Unit = {
-    val base = new java.io.File(dir)
-    base.mkdirs()
-    val stage = new java.io.File(base, s".stage_$seq")
-    df.write.mode("overwrite").parquet(stage.getAbsolutePath)
-    graft.Fs.swap(stage, new java.io.File(base, s"seq_batch=$seq"))
+    val live = seqDir(dir, seq)
+    graft.Fs.commit(graft.Fs.of(df.sparkSession, live), live)(
+      stage => df.write.parquet(stage.toString))
   }
 
   /** The committed batch ids under a per-batch table dir (the
-    * `seq_batch=N` partition dirs; a crash-leaked `.stage_*` never
-    * matches). Empty when the dir does not exist — a first run. */
-  private def committedSeqs(dir: String): Seq[Long] = {
-    val fs = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-    fs.collect {
-      case f if f.isDirectory && f.getName.startsWith("seq_batch=") =>
-        f.getName.stripPrefix("seq_batch=").toLong
-    }.toSeq
-  }
-
-  /** Read a per-batch table dir with the partition column pinned to the
-    * given schema (partition-value INFERENCE would type `seq_batch` as
-    * int and break long consumers), or an empty frame before the first
-    * commit. */
-  private def readSeqTable(s: SparkSession, dir: String,
-                           schema: StructType): DataFrame =
-    if (committedSeqs(dir).nonEmpty) s.read.schema(schema).parquet(dir)
-    else s.createDataFrame(new java.util.ArrayList[Row](), schema)
+    * `seq_batch=N` partition dirs; a crash-leaked stage never matches).
+    * Empty when the dir does not exist — a first run. */
+  private def committedSeqs(fs: FileSystem, dir: String): Seq[Long] =
+    try fs.listStatus(new Path(dir)).toSeq.collect {
+      case f if f.isDirectory && f.getPath.getName.startsWith("seq_batch=") =>
+        f.getPath.getName.stripPrefix("seq_batch=").toLong
+    } catch { case _: java.io.FileNotFoundException => Seq.empty }
 
   /** Exact row count of one committed batch dir from the parquet FOOTERS
     * — driver-side file metadata, no Spark job: the trim's
     * per-retained-batch count aggregate priced one scheduling-constant
     * job per micro-batch for a model-sized answer the footers already
     * hold. O(files in the dir) opens, each reading only the footer. */
-  private def footerRowCount(dir: java.io.File): Long = {
-    val conf = new org.apache.hadoop.conf.Configuration()
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
-        !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+  private def footerRowCount(fs: FileSystem, dir: Path): Long =
+    fs.listStatus(dir)
+      .filter { f =>
+        val n = f.getPath.getName
+        f.isFile && n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+      }
       .map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf)
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, fs.getConf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRecordCount finally r.close()
       }.sum
-  }
 
   /** Collect cutover for the per-micro-batch admission (the same
     * driver-side cutover as the union-find and `maxCollectWords`
@@ -250,8 +233,8 @@ object NearDupStream {
 
   /** Signature strings of one committed store batch dir, via Spark (one
     * small scan job — replay/restart only on the cached path below). */
-  private def readSeqSigs(s: SparkSession, dir: java.io.File): Seq[String] =
-    s.read.parquet(dir.getAbsolutePath)
+  private def readSeqSigs(s: SparkSession, dir: Path): Seq[String] =
+    s.read.parquet(dir.toString)
       .select(col("simhash")).collect().map(_.getString(0)).toSeq
 
   /** Cache-through read of a retained store batch's signatures. The
@@ -263,7 +246,7 @@ object NearDupStream {
   private def storeSeqSigs(s: SparkSession, storeDir: String, seq: Long,
                            cache: scala.collection.mutable.Map[Long, Seq[String]]): Seq[String] =
     cache.getOrElseUpdate(seq,
-      readSeqSigs(s, new java.io.File(storeDir, s"seq_batch=$seq")))
+      readSeqSigs(s, seqDir(storeDir, seq)))
 
   /** Driver-side commit writes for the driver path: the rows are
     * already local, so a Spark write would pay ~180 ms of
@@ -271,11 +254,10 @@ object NearDupStream {
     * staged file with the parquet-hadoop writer instead — zero Spark
     * jobs, standard parquet (same optional int64/binary-UTF8 physical
     * types and snappy codec as the engine's own writes), so every
-    * reader (schema-pinned [[readSeqTable]], `spark.read.parquet` in
+    * reader (the schema-pinned store read, `spark.read.parquet` in
     * gates/specs, [[footerRowCount]]) is unchanged, and
     * distributed-fallback batches and driver batches can share one
-    * table dir. Same staged-dot-dir + atomic-rename contract as
-    * [[commitSeqDir]]. */
+    * table dir. The same [[graft.Fs.commit]] as [[commitSeqDir]]. */
   private val admittedMsgType = org.apache.parquet.schema.MessageTypeParser
     .parseMessageType(
       "message spark_schema { optional int64 id; optional binary simhash (UTF8); }")
@@ -283,41 +265,24 @@ object NearDupStream {
     .parseMessageType(
       "message spark_schema { optional binary simhash (UTF8); }")
 
-  private def commitSeqDirLocal(dir: String, seq: Long,
-                                schema: org.apache.parquet.schema.MessageType,
-                                groups: Iterator[org.apache.parquet.example.data.Group]): Unit = {
-    val base = new java.io.File(dir)
-    base.mkdirs()
-    val stage = new java.io.File(base, s".stage_$seq")
-    if (stage.exists()) graft.Fs.deleteRecursively(stage) // crash-leaked stage
-    stage.mkdirs()
-    val out = new java.io.File(stage,
-      s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
-    val conf = new org.apache.hadoop.conf.Configuration()
-    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(
-        new org.apache.hadoop.fs.Path(out.getAbsolutePath), conf))
-      .withType(schema)
-      .withConf(conf)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-    try groups.foreach(writer.write) finally writer.close()
-    graft.Fs.swap(stage, new java.io.File(base, s"seq_batch=$seq"))
-  }
-
-  private def commitAdmittedLocal(dir: String, seq: Long,
-                                  rows: Seq[(Long, String)]): Unit =
-    commitSeqDirLocal(dir, seq, admittedMsgType, rows.iterator.map { case (id, sig) =>
-      val g = new org.apache.parquet.example.data.simple.SimpleGroup(admittedMsgType)
-      g.append("id", id); g.append("simhash", sig); g
-    })
-
-  private def commitStoreLocal(dir: String, seq: Long, sigs: Seq[String]): Unit =
-    commitSeqDirLocal(dir, seq, storeMsgType, sigs.iterator.map { sig =>
-      val g = new org.apache.parquet.example.data.simple.SimpleGroup(storeMsgType)
-      g.append("simhash", sig); g
-    })
+  private def commitSeqDirLocal[A](fs: FileSystem, dir: String, seq: Long,
+                                   schema: org.apache.parquet.schema.MessageType, rows: Seq[A])(
+      fill: (org.apache.parquet.example.data.Group, A) => Unit): Unit =
+    graft.Fs.commit(fs, seqDir(dir, seq)) { stage =>
+      val out = new Path(stage, s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
+      val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(out, fs.getConf))
+        .withType(schema)
+        .withConf(fs.getConf)
+        .withCompressionCodec(
+          org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+        .build()
+      try rows.foreach { r =>
+        val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
+        fill(g, r)
+        writer.write(g)
+      } finally writer.close()
+    }
 
   /** 64-bit batch core: near-dup admission of one batch against a
     * 64-bit signature MATCH SET (any frame with a `simhash` column —
@@ -447,7 +412,7 @@ object NearDupStream {
     *     while the total is ≤ capacity). A near-dup of an EVICTED
     *     signature is re-admitted by design — the documented trade for
     *     boundedness.
-    *   - REPLAY (crash between the store swap and the checkpoint
+    *   - REPLAY (crash between the store commit and the checkpoint
     *     commit): the replayed batch recomputes WINDOW from rows with
     *     seq < N only — its own committed rows (seq = N) cannot shrink
     *     the window's capacity coverage — so trim(trim(S)) = trim(S)
@@ -514,25 +479,27 @@ object NearDupStream {
       val q = raw.writeStream
         .foreachBatch { (b: Dataset[Row], batchId: Long) =>
           val s = b.sparkSession
+          val storeFs = graft.Fs.of(s, new Path(storeDir))
+          val admittedFs = graft.Fs.of(s, new Path(admittedDir))
           // WINDOW selection from parquet FOOTERS: the per-older-batch
           // row counts the trim rule needs are file metadata — zero
           // Spark jobs — and the window read below is a
           // partition-PRUNED scan of exactly the retained seq dirs
-          val olderCounts = committedSeqs(storeDir).filter(_ < batchId)
-            .map(seq => (seq,
-              footerRowCount(new java.io.File(storeDir, s"seq_batch=$seq"))))
+          val storeSeqs = committedSeqs(storeFs, storeDir)
+          val olderCounts = storeSeqs.filter(_ < batchId)
+            .map(seq => (seq, footerRowCount(storeFs, seqDir(storeDir, seq))))
           val cutoff = trimCutoff(olderCounts, capacity)
           val retained = olderCounts.filter(_._1 >= cutoff)
-          val ownStoreDir = new java.io.File(storeDir, s"seq_batch=$batchId")
+          val ownStoreDir = seqDir(storeDir, batchId)
           val ownStoreRows =
-            if (ownStoreDir.isDirectory) footerRowCount(ownStoreDir) else 0L
+            if (storeSeqs.contains(batchId)) footerRowCount(storeFs, ownStoreDir) else 0L
           // REPLAY cases: no own admitted dir → first run, commit the
           // admitted rows as they are; own dir present and nothing
           // re-admitted → both commits landed, skip them; own dir present
           // with re-admissions → crash between the two commits, union
           // with the own dir, first row per id wins (O(batch))
-          val ownAdmittedDir = new java.io.File(admittedDir, s"seq_batch=$batchId")
-          val replay = ownAdmittedDir.isDirectory
+          val ownAdmittedDir = seqDir(admittedDir, batchId)
+          val replay = admittedFs.exists(ownAdmittedDir)
           // DRIVER CUTOVER: gate on the footer-counted window size (zero
           // jobs) first, then on the bounded batch-sig collect — both
           // under [[MaxCollectSigsConf]] → the whole admission runs
@@ -556,24 +523,31 @@ object NearDupStream {
                 val adm =
                   if (!replay) admitted
                   else {
-                    val prior = s.read.parquet(ownAdmittedDir.getAbsolutePath)
+                    val prior = s.read.parquet(ownAdmittedDir.toString)
                       .select(col("id"), col("simhash")).collect()
                       .map(r => (r.getLong(0), r.getString(1)))
                     val seen = scala.collection.mutable.HashSet.empty[Long]
                     (prior ++ admitted).filter(r => seen.add(r._1)).toSeq
                   }
-                commitAdmittedLocal(admittedDir, batchId, adm)
+                commitSeqDirLocal(admittedFs, admittedDir, batchId, admittedMsgType, adm) {
+                  case (g, (id, sig)) => g.append("id", id).append("simhash", sig)
+                }
                 // per-batch admitted signatures are globally distinct BY
                 // ADMISSION (a stored signature re-arriving is a
                 // distance-0 match and never re-admits; within a batch,
                 // colliding signatures cluster to one survivor), so the
                 // union of the seq dirs needs no distinct
                 val storeRows = ownSigs ++ admitted.map(_._2)
-                commitStoreLocal(storeDir, batchId, storeRows)
+                commitSeqDirLocal(storeFs, storeDir, batchId, storeMsgType, storeRows)(
+                  _.append("simhash", _))
                 sigCache(batchId) = storeRows
               }
             case None =>
-              val store = readSeqTable(s, storeDir, storeSchema)
+              // the partition column pinned to the store schema (INFERENCE
+              // would type `seq_batch` as int), or empty before a first commit
+              val store =
+                if (storeSeqs.nonEmpty) s.read.schema(storeSchema).parquet(storeDir)
+                else s.createDataFrame(new java.util.ArrayList[Row](), storeSchema)
               val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
               val window = store
                 .filter(col("seq_batch") < batchId && col("seq_batch") >= cutoff)
@@ -588,7 +562,7 @@ object NearDupStream {
                 if (!replay || !admitted.isEmpty) {
                   val adm =
                     if (!replay) admitted
-                    else s.read.parquet(ownAdmittedDir.getAbsolutePath)
+                    else s.read.parquet(ownAdmittedDir.toString)
                       .unionByName(admitted).dropDuplicates("id")
                   tagged(s, s"$tag:commit-admitted") {
                     commitSeqDir(adm, admittedDir, batchId)
@@ -608,7 +582,7 @@ object NearDupStream {
           // fell out of WINDOW_N (idempotent on replay); seqs ≥ N are
           // never candidates, so a replay leaves later batches untouched
           olderCounts.map(_._1).filter(_ < cutoff).foreach { seq =>
-            graft.Fs.deleteRecursively(new java.io.File(storeDir, s"seq_batch=$seq"))
+            storeFs.delete(seqDir(storeDir, seq), true)
             sigCache.remove(seq)
           }
         }
@@ -633,12 +607,8 @@ object NearDupStream {
     * path is pinned by NearDup64StreamSpec. */
   def runDocNearDup64GateOnce(spark: SparkSession, docsPath: String,
                               maxDist: Int, capacity: Long): DataFrame =
-    withStagedParityRun(spark, docsPath, nBatches = 2) { (landing, root) =>
-      runNearDup64StreamOnce(spark, landing.getAbsolutePath,
-        new java.io.File(root, "admitted").getAbsolutePath,
-        new java.io.File(root, "store").getAbsolutePath,
-        new java.io.File(root, "ckpt").getAbsolutePath, maxDist, capacity)
-    }
+    withStagedParityRun(spark, docsPath, nBatches = 2)(
+      runNearDup64StreamOnce(spark, _, _, _, _, maxDist, capacity))
 
   /** EVICTION gate harness: same staged lifecycle
     * as [[runDocNearDup64GateOnce]] but THREE parity batches
@@ -661,12 +631,8 @@ object NearDupStream {
                                    maxDist: Int): DataFrame = {
     val nDocs = spark.read.parquet(docsPath).count()
     val capacity = math.max(1L, nDocs / 4)
-    withStagedParityRun(spark, docsPath, nBatches = 3) { (landing, root) =>
-      runNearDup64StreamOnce(spark, landing.getAbsolutePath,
-        new java.io.File(root, "admitted").getAbsolutePath,
-        new java.io.File(root, "store").getAbsolutePath,
-        new java.io.File(root, "ckpt").getAbsolutePath, maxDist, capacity)
-    }
+    withStagedParityRun(spark, docsPath, nBatches = 3)(
+      runNearDup64StreamOnce(spark, _, _, _, _, maxDist, capacity))
   }
 
   /** GATE HARNESS for [[runNearDupStreamOnce]] — the 16-bit UNBOUNDED
@@ -683,12 +649,8 @@ object NearDupStream {
     * semantic, not a gate clamp). */
   def runDocNearDup16GateOnce(spark: SparkSession, docsPath: String,
                               maxDist: Int): DataFrame =
-    withStagedParityRun(spark, docsPath, nBatches = 2) { (landing, root) =>
-      runNearDupStreamOnce(spark, landing.getAbsolutePath,
-        new java.io.File(root, "admitted").getAbsolutePath,
-        new java.io.File(root, "store").getAbsolutePath,
-        new java.io.File(root, "ckpt").getAbsolutePath, maxDist)
-    }
+    withStagedParityRun(spark, docsPath, nBatches = 2)(
+      runNearDupStreamOnce(spark, _, _, _, _, maxDist))
 
   /** Stage `docsPath` as `nBatches` parity landing files under
     * `root/landing` (batch b = doc_id % nBatches, strictly increasing
@@ -788,13 +750,14 @@ object NearDupStream {
 
   /** Stage the parity landing (see [[stageParityLanding]], memoized per
     * (docsPath, nBatches) via [[stagedTemplate]]) under a temp root, run
-    * `body(landing, root)` — the lifecycle under test — and hand back
-    * the admitted (id, simhash) table as a local batch frame (the
-    * memory-sink-style gate fixture collect every streaming gate row
-    * uses; the temp root is deleted after). */
+    * `body(landing, admitted, store, checkpoint)` — the lifecycle under
+    * test, over dirs under that root — and hand back the admitted (id,
+    * simhash) table as a local batch frame (the memory-sink-style gate
+    * fixture collect every streaming gate row uses; the temp root is
+    * deleted after). */
   private def withStagedParityRun(spark: SparkSession, docsPath: String,
                                   nBatches: Int)
-                                 (body: (java.io.File, java.io.File) => Unit): DataFrame = {
+                                 (body: (String, String, String, String) => Unit): DataFrame = {
     // gate roots (landing + admitted + store + checkpoint) are EPHEMERAL
     // run state — tmpfs when available (Fs.ephemeralDir): the lifecycle's
     // fsync rounds against a disk-backed /tmp dominate its run time when
@@ -803,9 +766,9 @@ object NearDupStream {
     try {
       val landing = landingFromTemplate(
         stagedTemplate(spark, docsPath, nBatches), root)
-      body(landing, root)
-      val out = spark.read.parquet(new java.io.File(root, "admitted").getAbsolutePath)
-        .select(col("id"), col("simhash"))
+      def dir(name: String): String = new java.io.File(root, name).getAbsolutePath
+      body(landing.getAbsolutePath, dir("admitted"), dir("store"), dir("ckpt"))
+      val out = spark.read.parquet(dir("admitted")).select(col("id"), col("simhash"))
       val (rows, schema) = (out.collect(), out.schema)
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
     } finally graft.Fs.deleteRecursively(root)

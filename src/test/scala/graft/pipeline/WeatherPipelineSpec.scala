@@ -224,7 +224,10 @@ class WeatherPipelineSpec extends SparkSpec {
     assert(e.getMessage.contains("raw_weather.unique_id"))
     // the mart tests never ran in the DAG: only source-tier checks are named
     assert(failedChecks(e).forall(_.startsWith("raw_weather.")), e.getMessage)
-    assert(new java.io.File(s"$dir2/raw/weather").exists()) // raw landed (step 2 ran)
+    // stricter than the DAG, whose step 2 lands raw before the test: the
+    // failing batch's raw rows are staged and never published
+    assert(!new java.io.File(s"$dir2/raw").exists(),
+      "a failing staging test must publish no raw rows")
     assert(!new java.io.File(s"$dir2/marts").exists(),
       "a failing staging test must short-circuit before any mart write")
   }
@@ -241,27 +244,47 @@ class WeatherPipelineSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("wp-gate").toString
     WeatherPipeline.runBatch(payloads, t0, now, dir) // a good day
     val day1 = s"$dir/marts/fct_weather_observations/extraction_date=2024-06-02"
+    val interval = new java.io.File(s"$dir/raw/weather").listFiles()
+      .filter(_.getName.startsWith("data_interval_start=")).map(_.getPath).toSeq
+    assert(interval.size == 1)
     def names(d: String): Set[String] = new java.io.File(d).list().toSet
-    val (dimBefore, fctBefore) = (names(s"$dir/marts/dim_locations"), names(day1))
-    assert(dimBefore.exists(_.endsWith(".parquet")) && fctBefore.exists(_.endsWith(".parquet")))
-    // the same day again, failing the source tier: its marts were staged
-    // beside the gate, and none of them may replace the live ones
+    def rawRows = spark.read.parquet(interval.head).collect().toSet
+    val (dimBefore, fctBefore, rawBefore) = (names(s"$dir/marts/dim_locations"), names(day1),
+      names(interval.head))
+    val rawRowsBefore = rawRows
+    assert(Seq(dimBefore, fctBefore, rawBefore).forall(_.exists(_.endsWith(".parquet"))))
+    assert(rawRowsBefore.size == 4)
+    // the same interval again, failing the source tier: its raw rows and
+    // marts were staged beside the gate, and none may replace the live ones
     val e = intercept[IllegalArgumentException](WeatherPipeline.runBatch(dupParis, t0, now, dir))
     assert(e.getMessage.contains("raw_weather.unique_id"))
     assert(names(s"$dir/marts/dim_locations") == dimBefore)
     assert(names(day1) == fctBefore)
+    assert(names(interval.head) == rawBefore)
+    assert(rawRows == rawRowsBefore)
     assert(!new java.io.File(s"$dir/_stage").exists())
   }
 
   test("a raw-write error is thrown before the gate's, and no mart is written") {
+    def notADir(path: String): Unit = {
+      new java.io.File(path).getParentFile.mkdirs()
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(path), "not a dir")
+    }
+    // a regular file at the stage root fails every staged write
     val dir = java.nio.file.Files.createTempDirectory("wp-rawfail").toString
-    new java.io.File(s"$dir/raw").mkdirs()
-    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/raw/weather"), "not a dir")
+    notADir(s"$dir/_stage")
     // the gate fails too (duplicate raw id), in the same wave as the write
     val e = intercept[Exception](WeatherPipeline.runBatch(dupParis, t0, now, dir))
     assert(!e.getMessage.contains("data-quality check failed"), e.getMessage)
     assert(e.getSuppressed.exists(_.getMessage.contains("raw_weather.unique_id")))
     assert(!new java.io.File(s"$dir/marts").exists())
+    // a passing batch whose live raw dir is a regular file fails at the
+    // raw publish, which comes first: no mart is published either
+    val dir2 = java.nio.file.Files.createTempDirectory("wp-rawpublish").toString
+    notADir(s"$dir2/raw/weather")
+    intercept[Exception](WeatherPipeline.runBatch(payloads, t0, now, dir2))
+    assert(!new java.io.File(s"$dir2/marts").exists())
+    assert(!new java.io.File(s"$dir2/_stage").exists())
   }
 
   test("a runDaily day is single-task jobs with no shuffle and one file per mart; " +

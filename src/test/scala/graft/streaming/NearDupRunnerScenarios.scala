@@ -11,10 +11,13 @@ trait NearDupRunnerScenarios extends SparkSpec {
 
   type Runner = (String, String, String, String) => Unit
 
-  private def dirs(prefix: String): (String, String, String, String) = {
+  /** Fresh (landing, admitted, store, checkpoint) dirs, as plain paths
+    * or as `file:` URIs. */
+  private def dirs(prefix: String, uri: Boolean = false): (String, String, String, String) = {
     val root = java.nio.file.Files.createTempDirectory(prefix)
     new java.io.File(s"$root/landing").mkdirs()
-    (s"$root/landing", s"$root/admitted", s"$root/store", s"$root/ckpt")
+    val base = if (uri) root.toUri.toString.stripSuffix("/") else root.toString
+    (s"$base/landing", s"$base/admitted", s"$base/store", s"$base/ckpt")
   }
 
   private def land(landing: String, rows: Seq[(Long, String)]): Unit =
@@ -70,6 +73,20 @@ trait NearDupRunnerScenarios extends SparkSpec {
     // crash BEFORE any commit of batch 1: plain re-execution
     rm(ckpt); rm(s"$store/seq_batch=1"); rm(s"$admitted/seq_batch=1"); go()
     assert(admittedRows(admitted) == admitted0 && storeRows(store) == store0)
+    // crash DURING batch 1's commit writes: each table's stage is left
+    // holding a file that is not parquet; the replay clears it, reproduces
+    // both tables, and leaves no stage in the layout
+    rm(ckpt); rm(s"$store/seq_batch=1"); rm(s"$admitted/seq_batch=1")
+    for (dir <- Seq(admitted, store)) {
+      val stage = graft.Fs.stageOf(new org.apache.hadoop.fs.Path(s"$dir/seq_batch=1"))
+      val junk = new java.io.File(stage.toUri.getPath, "part-00000-junk.snappy.parquet")
+      assert(junk.getParentFile.mkdirs())
+      java.nio.file.Files.writeString(junk.toPath, "not parquet")
+    }
+    go()
+    assert(admittedRows(admitted) == admitted0 && storeRows(store) == store0)
+    assert(files(admitted).keySet == admittedFiles0.keySet)
+    assert(files(store).keySet == storeFiles0.keySet)
   }
 
   /** The same two-batch lifecycle through the driver path and, with the
@@ -77,8 +94,8 @@ trait NearDupRunnerScenarios extends SparkSpec {
     * commit identical admitted and store tables. */
   def overBoundFallback(run: Runner, a: String, a2: String, c: String,
                         f: String): Unit = {
-    def lifecycle(): (Set[(Long, String, Long)], Set[(String, Long)]) = {
-      val (landing, admitted, store, ckpt) = dirs("neardup-fb")
+    def lifecycle(uri: Boolean = false): (Set[(Long, String, Long)], Set[(String, Long)]) = {
+      val (landing, admitted, store, ckpt) = dirs("neardup-fb", uri)
       land(landing, Seq((1L, a), (2L, a), (3L, c)))
       run(landing, admitted, store, ckpt)
       land(landing, Seq((10L, f), (11L, c), (12L, a2)))
@@ -86,6 +103,7 @@ trait NearDupRunnerScenarios extends SparkSpec {
       (admittedRows(admitted), storeRows(store))
     }
     val viaLocal = lifecycle()
+    assert(lifecycle(uri = true) == viaLocal) // every dir given as a file: URI
     val prev = spark.conf.getOption(NearDupStream.MaxCollectSigsConf)
     spark.conf.set(NearDupStream.MaxCollectSigsConf, "0")
     try {
