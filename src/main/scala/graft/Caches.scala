@@ -33,18 +33,9 @@ object Caches {
     * at 100 TB. Serial contexts only (the builders are driver-side
     * sequential loops; Bench/Verify run queries serially). */
   def withModelLoopConf[A](spark: org.apache.spark.sql.SparkSession,
-                           width: Int)(f: => A): A = {
-    val conf = spark.conf
-    val aqe0 = conf.get("spark.sql.adaptive.enabled")
-    val sp0 = conf.get("spark.sql.shuffle.partitions")
-    conf.set("spark.sql.adaptive.enabled", "false")
-    conf.set("spark.sql.shuffle.partitions", width.toString)
-    try f
-    finally {
-      conf.set("spark.sql.adaptive.enabled", aqe0)
-      conf.set("spark.sql.shuffle.partitions", sp0)
-    }
-  }
+                           width: Int)(f: => A): A =
+    Sessions.withConf(spark, "spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.shuffle.partitions" -> width.toString)(f)
 
   private val frames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
   private val built =

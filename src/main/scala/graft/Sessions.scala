@@ -73,6 +73,31 @@ object Sessions {
     extra.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }.getOrCreate()
   }
 
+  /** Scoped conf override: set `kvs` on `spark`, run `body`, restore
+    * the previous values (unset where there were none) even on failure.
+    *
+    * Serialized per session: SQL confs are session-global mutable
+    * state, so two scopes interleaving set/restore on the same session
+    * could leave a conf wrong for one of them (or permanently, if the
+    * loser restores the winner's override as "previous"). Scopes on
+    * different sessions still run concurrently, and a scope may nest in
+    * another on the same thread. The lock map holds strong refs — fine
+    * for this library's long-lived sessions (`build` / the shared spec
+    * session). */
+  def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T =
+    confLocks.computeIfAbsent(spark, _ => new Object).synchronized {
+      val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body
+      finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+
+  private val confLocks =
+    new java.util.concurrent.ConcurrentHashMap[SparkSession, Object]()
+
   /** ONE scratch root per JVM — lazy (getOrCreate ignores configs on
     * an existing session, so a per-call dir would orphan a tmpfs dir +
     * a shutdown hook on every repeat build()).

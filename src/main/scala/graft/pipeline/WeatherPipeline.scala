@@ -3,7 +3,7 @@ package graft.pipeline
 import java.sql.Timestamp
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.bridge
@@ -31,9 +31,9 @@ import graft.quality.Checks._
   * if all four succeeded, so a failing batch's raw rows never land. A
   * driver-held batch (the `runDaily` path) is one partition, run
   * interpreted, so each action is one task with no shuffle and no
-  * generated code. Raw partitions by `data_interval_start` and the fact
-  * by `extraction_date`, so a daily re-run replaces one partition of
-  * each instead of the table.
+  * generated code. Raw and the fact both partition by
+  * `data_interval_start`, so a run replaces exactly its own interval in
+  * each. `startStream` feeds the same publish from micro-batches.
   */
 object WeatherPipeline {
 
@@ -93,7 +93,11 @@ object WeatherPipeline {
     *    verified queries deterministic (SURVEY.md §5 quarantine rule)
     */
   def ingest(payloads: DataFrame, dataIntervalStart: Timestamp,
-             now: Timestamp): DataFrame = {
+             now: Timestamp): DataFrame =
+    ingest(payloads, lit(dataIntervalStart), now)
+
+  /** [[ingest]] with each row's interval given by `interval`. */
+  private def ingest(payloads: DataFrame, interval: Column, now: Timestamp): DataFrame = {
     val j = from_json(col("raw_json"), payloadSchema)
     payloads
       .withColumn("j", j)
@@ -104,7 +108,7 @@ object WeatherPipeline {
         // (city, data_interval_start) — stable across re-runs and
         // partitionings, unlike monotonically_increasing_id. One row per
         // (city, interval) per run ⇒ unique within a batch.
-        xxhash64(coalesce(col("j.location.name"), col("city")), lit(dataIntervalStart)).as("id"),
+        xxhash64(coalesce(col("j.location.name"), col("city")), interval).as("id"),
         coalesce(col("j.location.name"), col("city")).as("city"),
         col("j.location.country").as("country"),
         col("j.current.temperature").as("temperature"),
@@ -117,7 +121,7 @@ object WeatherPipeline {
         col("j.current.uv_index").as("uv_index"),
         to_timestamp(col("j.current.observation_time"), "hh:mm a").as("observation_time"),
         lit(now).as("extracted_at"),
-        lit(dataIntervalStart).as("data_interval_start"))
+        interval.as("data_interval_start"))
   }
 
   /** Silver: dbt/models/staging/stg_weather.sql re-expressed. */
@@ -200,13 +204,27 @@ object WeatherPipeline {
     AcceptedValues("temperature_category", TemperatureCategories),
     InRange("temperature", -50, 60))
 
-  /** Structured Streaming variant (SURVEY.md §7.2-5): the SAME ingest +
-    * staging transforms run incrementally over a JSON landing directory —
-    * Spark's unified batch/stream semantics means zero operator
-    * duplication. Each micro-batch appends cleansed staging rows to a
-    * date-partitioned parquet sink, and the stream writes staging only:
-    * no raw table and no marts (aggregating marts in-stream would need
-    * output-mode complete; the sink stays append-only).
+  /** The landing rows of [[startStream]]: one fetch each, tagged with the
+    * interval it belongs to. */
+  private val landingSchema: StructType = StructType(Seq(
+    StructField("city", StringType), StructField("raw_json", StringType),
+    StructField("data_interval_start", TimestampType)))
+
+  /** Structured Streaming variant (SURVEY.md §7.2-5): [[runBatch]]'s
+    * publish driven by micro-batches of a JSON landing directory of
+    * [[landingSchema]] rows. Each micro-batch is ingested once, each row
+    * at the interval it carries. Then, for each interval with ingested
+    * rows, in interval order, the live raw rows of that interval — with
+    * the rows whose `id` the micro-batch carries replaced by its rows —
+    * go through the same gated publish as a `runBatch` of that interval:
+    * raw, dim and fct, staged and published only if the gate passes. So
+    * a later file replaces an earlier file's city in its interval, and a
+    * replayed micro-batch (`foreachBatch` is at-least-once) republishes
+    * the same rows. Duplicate ids inside a micro-batch fail the
+    * `raw_weather.unique_id` gate, which stops the query; the intervals
+    * before the failing one in that micro-batch are already published,
+    * and a replay publishes them again unchanged. The dim is `runBatch`'s:
+    * the last published interval's.
     *
     * Returns the started query; callers own the trigger/await policy
     * (tests use processAllAvailable over a static landing dir — the
@@ -214,18 +232,32 @@ object WeatherPipeline {
     */
   def startStream(spark: SparkSession,
                   landingDir: String, checkpointDir: String, outDir: String,
-                  dataIntervalStart: Timestamp, now: Timestamp):
-      org.apache.spark.sql.streaming.StreamingQuery = {
-    val landingSchema = StructType(Seq(
-      StructField("city", StringType), StructField("raw_json", StringType)))
-    val payloads = spark.readStream.schema(landingSchema).json(landingDir)
-    stgWeather(ingest(payloads, dataIntervalStart, now))
+                  now: Timestamp): org.apache.spark.sql.streaming.StreamingQuery =
+    spark.readStream.schema(landingSchema).json(landingDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
-      .partitionBy("extraction_date")
-      .outputMode("append")
-      .format("parquet")
-      .start(outDir)
+      .foreachBatch { (landed: Dataset[Row], _: Long) =>
+        val delta = ingest(landed, col("data_interval_start"), now)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val intervals = delta.select("data_interval_start").distinct().collect()
+            .map(_.getTimestamp(0)).sortBy(_.getTime)
+          for (t <- intervals) {
+            val rows = delta.filter(col("data_interval_start") === lit(t))
+            publish(liveRaw(delta.sparkSession, outDir, t)
+              .join(rows.select("id"), Seq("id"), "left_anti").unionByName(rows), outDir)
+          }
+        } finally delta.unpersist()
+      }
+      .start()
+
+  /** The published raw rows of `interval` under `outDir`, read under
+    * [[rawSchema]]. */
+  private def liveRaw(spark: SparkSession, outDir: String, interval: Timestamp): DataFrame = {
+    val dir = new Path(outDir, "raw/weather")
+    if (!Fs.of(spark, dir).exists(dir)) spark.createDataFrame(java.util.List.of[Row](), rawSchema)
+    else spark.read.schema(rawSchema).parquet(dir.toString)
+      .filter(col("data_interval_start") === lit(interval))
   }
 
   /** End-to-end batch run mirroring the DAG's task chain
@@ -240,21 +272,21 @@ object WeatherPipeline {
     *    failing `raw_weather.*` checks, because the DAG never runs the
     *    mart tests then; otherwise it names every failing mart check,
     *    sorted;
-    *  - the dim write and the `extraction_date`-partitioned fact write.
+    *  - the dim write and the fact write, partitioned like raw.
     *
     * The three tables are written into one stage under `outDir`, each at
     * its live path. The wave waits for all four. Only if all four
     * succeeded are raw, dim, then fct published (write–audit–publish on
     * the Hadoop `FileSystem` of `outDir`, `graft.Fs.commitTables`): the
-    * dim replaces the live dim, and each staged raw interval and fact
-    * partition replaces its live partition, leaving the others as they
-    * are (O(day), not O(table)). So a re-run of an interval leaves one
-    * copy of its raw rows, and a batch that fails the gate publishes
-    * nothing, raw included. Stricter than the DAG by design: dbt lands
-    * raw in step 2 and validates after; here the tests gate the PUBLISH,
-    * so a failing table never goes live. Otherwise the first error in
-    * wave order (raw, gate, dim, fct) is thrown with the others
-    * suppressed.
+    * dim replaces the live dim, and the staged interval of raw and of
+    * the fact each replaces its live partition, leaving the other
+    * intervals as they are (O(day), not O(table)). So a re-run of an
+    * interval, on any date, leaves exactly its own rows in both tables,
+    * and a batch that fails the gate publishes nothing, raw included.
+    * Stricter than the DAG by design: dbt lands raw in step 2 and
+    * validates after; here the tests gate the PUBLISH, so a failing
+    * table never goes live. Otherwise the first error in wave order
+    * (raw, gate, dim, fct) is thrown with the others suppressed.
     *
     * A batch whose ingest optimizes to a `LocalRelation` (the driver-
     * held payloads of `runDaily`) runs in a per-batch clone of the
@@ -280,9 +312,12 @@ object WeatherPipeline {
     * output root gets no `raw` or `marts` dir.
     */
   def runBatch(payloads: DataFrame, dataIntervalStart: Timestamp, now: Timestamp,
-               outDir: String): Unit = {
-    val spark = payloads.sparkSession
-    val ingested = ingest(payloads, dataIntervalStart, now)
+               outDir: String): Unit =
+    publish(ingest(payloads, dataIntervalStart, now), outDir)
+
+  /** [[runBatch]]'s wave and publish over the raw rows `ingested`. */
+  private def publish(ingested: DataFrame, outDir: String): Unit = {
+    val spark = ingested.sparkSession
     val driverHeld = ingested.queryExecution.optimizedPlan match {
       case l: LocalRelation if l.data.isEmpty => return // nothing to publish
       case l: LocalRelation => Some(l)
@@ -299,7 +334,7 @@ object WeatherPipeline {
       val (dim, fct) = (dimLocations(stg), fctWeatherObservations(stg))
       val tables = Seq(("raw/weather", raw, Some("data_interval_start")),
         ("marts/dim_locations", dim, None),
-        ("marts/fct_weather_observations", fct, Some("extraction_date")))
+        ("marts/fct_weather_observations", fct, Some("data_interval_start")))
       Fs.commitTables(fs, out, tables.map { case (t, _, part) => (t, part) }) { stage =>
         val Seq(rawWrite, dimWrite, fctWrite) = tables.map { case (t, df, part) =>
           () => df.write.partitionBy(part.toSeq: _*).parquet(new Path(stage, t).toString)

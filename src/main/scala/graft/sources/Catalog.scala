@@ -36,16 +36,11 @@ object Catalog {
       val tableOrder = spark.table(qualifiedName).columns.toSeq
       // session conf, not a write option: insertInto does not thread
       // per-write options down to the file-source insert command
-      val key = "spark.sql.sources.partitionOverwriteMode"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, "dynamic")
-      try df.select(tableOrder.map(df.col): _*)
-        .write
-        .mode("overwrite")
-        .insertInto(qualifiedName)
-      finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
+      graft.Sessions.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        df.select(tableOrder.map(df.col): _*)
+          .write
+          .mode("overwrite")
+          .insertInto(qualifiedName)
       }
     } else {
       df.write

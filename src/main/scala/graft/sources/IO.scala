@@ -96,18 +96,19 @@ object IO {
 
   /** Small-file compaction: rewrite a fragmented parquet directory into
     * ceil(bytes/targetBytes) files (floor 1). The file count comes from
-    * the directory's ACTUAL on-disk size, not a row guess, so the same
-    * call is right for wide and narrow rows; `rebalance` is a plain
-    * round-robin repartition — compaction preserves rows, not order.
+    * the directory's ACTUAL size on its Hadoop filesystem (`inPath` is a
+    * plain path or a URI), not a row guess, so the same call is right
+    * for wide and narrow rows; `rebalance` is a plain round-robin
+    * repartition — compaction preserves rows, not order.
     * Writes to `outPath` (a temp-and-swap in a real deployment; the
     * distributed rewrite itself is the expensive part at 100 TB, and it
     * parallelizes over the input files). Returns the file count. */
   def compact(spark: SparkSession, inPath: String, outPath: String,
               targetBytes: Long): Int = {
     require(targetBytes > 0, s"targetBytes=$targetBytes must be positive")
-    val dir = new java.io.File(inPath)
-    val bytes = Option(dir.listFiles()).map(_.filter(f =>
-      f.isFile && f.getName.endsWith(".parquet")).map(_.length).sum).getOrElse(0L)
+    val dir = new org.apache.hadoop.fs.Path(inPath)
+    val bytes = graft.Fs.of(spark, dir).listStatus(dir)
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet")).map(_.getLen).sum
     val nFiles = math.max(1, ((bytes + targetBytes - 1) / targetBytes).toInt)
     spark.read.parquet(inPath)
       .repartition(nFiles)

@@ -63,7 +63,7 @@ object CorpusMonitor {
     // (pinned into the checkpoint at first run, like the event streams);
     // Complete mode re-emits the full result every data batch, so the
     // trailing no-data batch is skipped (EventStream.boundedLifecycleConfs)
-    EventStream.withConf(spark, EventStream.boundedLifecycleConfs: _*) {
+    graft.Sessions.withConf(spark, EventStream.boundedLifecycleConfs: _*) {
       val schema = spark.read.parquet(landing.getAbsolutePath).schema
       val raw = spark.readStream.schema(schema).parquet(landing.getAbsolutePath)
       EventStream.drainToMemory(qualityDrift(raw), OutputMode.Complete())

@@ -7,7 +7,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-/** Structured Streaming variant of the pipeline (SURVEY.md §2.10/§7.2-5).
+/** Event-time streaming operators over the events table (SURVEY.md
+  * §2.10/§7.2-5). The weather pipeline's own stream, which publishes
+  * each micro-batch through the batch run's gated commit, is
+  * `graft.pipeline.WeatherPipeline.startStream`; this object has no
+  * table sink of its own, only lifecycles that drain to memory.
   *
   * The reference ingests on a daily schedule (batch); its raw table is
   * nonetheless an append-only event-time series (`observation_time` vs
@@ -182,32 +186,6 @@ object EventStream {
             StructField("props", StringType)))
     }
 
-  /** Scoped conf override shared by the lifecycle runners: set `kvs`,
-    * run `body`, restore the previous values (unset where there were
-    * none) even on failure, so no runner can miss a restore path.
-    *
-    * SESSION-SCOPED LOCK: SQL confs are session-global
-    * mutable state, so two lifecycles interleaving set/restore on the
-    * same session could leave `spark.sql.shuffle.partitions` or
-    * `spark.sql.adaptive.enabled` wrong for one of them (or permanently, if the
-    * loser restores the winner's override as "previous"). Every runner
-    * funnels through here, so serializing per session closes the race;
-    * lifecycles on DIFFERENT sessions still run concurrently. The lock
-    * map holds strong refs — fine for this library's long-lived
-    * singleton sessions (Sessions.build / the shared spec session). */
-  private val confLocks =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, Object]()
-  private[streaming] def withConf[T](spark: SparkSession, kvs: (String, String)*)(body: => T): T =
-    confLocks.computeIfAbsent(spark, _ => new Object).synchronized {
-      val prev = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
-      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-      try body
-      finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
-    }
-
   /** Conf set for bounded AvailableNow lifecycles whose OUTPUT does not
     * depend on the post-data watermark micro-batch: append-mode inner
     * stream-stream joins emit matches DURING the data batch (the
@@ -234,25 +212,31 @@ object EventStream {
 
   /** Stage a single driver file into its own landing DIRECTORY (the file
     * source consumes directories; at scale this is the producers' append
-    * target). Idempotent per input path, FRESHNESS-CHECKED: a staged
-    * copy whose size or mtime no longer matches the source is replaced,
-    * so regenerating a driver table never leaves the stream reading a
-    * stale tmpdir copy while the batch twin reads the fresh file (a gate
-    * mismatch that is undiagnosable until the tmpdir is purged).
-    * Shared by every streaming lifecycle harness (events + documents). */
+    * target), as `copies` files: one keeps the source's name, more are
+    * named `a_<name>`, `b_<name>`, … (in-stream dedup then has real
+    * duplicates to drop). Idempotent per (input path, prefix), FRESHNESS-CHECKED: a
+    * staged copy whose size or mtime no longer matches the source is
+    * replaced, so regenerating a driver table never leaves the stream
+    * reading a stale tmpdir copy while the batch twin reads the fresh
+    * file (a gate mismatch that is undiagnosable until the tmpdir is
+    * purged). Shared by every streaming lifecycle harness (events +
+    * documents). */
   private[streaming] def stageLanding(srcPath: String,
-                                      prefix: String = "graft_events_landing_"): java.io.File = {
+                                      prefix: String = "graft_events_landing_",
+                                      copies: Int = 1): java.io.File = {
     val src = new java.io.File(srcPath)
     val landing = new java.io.File(System.getProperty("java.io.tmpdir"),
       prefix + java.lang.Integer.toHexString(src.getAbsolutePath.hashCode))
-    val staged = new java.io.File(landing, src.getName)
-    val stale = staged.exists() &&
-      (staged.length() != src.length() || staged.lastModified() < src.lastModified())
-    if (!staged.exists() || stale) {
-      landing.mkdirs()
-      java.nio.file.Files.copy(src.toPath, staged.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      staged.setLastModified(src.lastModified())
+    for (i <- 0 until copies) {
+      val staged = new java.io.File(landing, if (copies == 1) src.getName else s"${('a' + i).toChar}_${src.getName}")
+      val stale = staged.exists() &&
+        (staged.length() != src.length() || staged.lastModified() < src.lastModified())
+      if (!staged.exists() || stale) {
+        landing.mkdirs()
+        java.nio.file.Files.copy(src.toPath, staged.toPath,
+          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        staged.setLastModified(src.lastModified())
+      }
     }
     landing
   }
@@ -306,29 +290,13 @@ object EventStream {
     // setup; the window×type state here is tiny, so size it like any
     // other small shuffle (graft.Par's floor) instead of the session
     // default (see boundedLifecycleConfs for the no-data-batch skip).
-    withConf(spark, boundedLifecycleConfs: _*) {
+    graft.Sessions.withConf(spark, boundedLifecycleConfs: _*) {
       val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
       drainToMemory(windowedCounts(batchEvents(raw))
         .select(unix_micros(col("window_start")).as("window_start_us"),
           col("event_type"), col("n_events"), col("value_cents")),
         OutputMode.Complete())
     }
-  }
-
-  /** Stage the driver file TWICE (two names) so in-stream dedup has real
-    * duplicates to drop. Idempotent per input path. */
-  private def stageDupLanding(eventsPath: String): java.io.File = {
-    val src = new java.io.File(eventsPath)
-    val landing = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_events_dup_" + java.lang.Integer.toHexString(src.getAbsolutePath.hashCode))
-    landing.mkdirs()
-    Seq("a_" + src.getName, "b_" + src.getName).foreach { n =>
-      val staged = new java.io.File(landing, n)
-      if (!staged.exists())
-        java.nio.file.Files.copy(src.toPath, staged.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    landing
   }
 
   /** Run [[dedupedEvents]] (dropDuplicatesWithinWatermark) through the
@@ -338,8 +306,8 @@ object EventStream {
     * re-admitted, so its key is evictable, which is the whole point at
     * unbounded-retention scale. */
   def runStreamDedupOnce(spark: SparkSession, eventsPath: String): DataFrame = {
-    val landing = stageDupLanding(eventsPath)
-    withConf(spark, boundedLifecycleConfs: _*) {
+    val landing = stageLanding(eventsPath, "graft_events_dup_", copies = 2)
+    graft.Sessions.withConf(spark, boundedLifecycleConfs: _*) {
       val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
       drainToMemory(dedupedEvents(batchEvents(raw)).select(col("event_id")),
         OutputMode.Append())
@@ -378,7 +346,7 @@ object EventStream {
     // keyWithIndexToValue, each side) — by far the most commit-I/O-bound
     // lifecycle in the registry, and the one a busy disk slows most
     // (10x measured). boundedLifecycleConfs halves its commit rounds.
-    withConf(spark, boundedLifecycleConfs: _*) {
+    graft.Sessions.withConf(spark, boundedLifecycleConfs: _*) {
       val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
       val ev = batchEvents(raw)
       drainToMemory(attributedPurchases(
@@ -397,7 +365,7 @@ object EventStream {
                             dim: DataFrame, dimKey: String,
                             dimAttr: String): DataFrame = {
     val landing = stageLanding(eventsPath)
-    withConf(spark, boundedLifecycleConfs: _*) {
+    graft.Sessions.withConf(spark, boundedLifecycleConfs: _*) {
       val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
       drainToMemory(enrichedWindowedCounts(batchEvents(raw), dim, dimKey, dimAttr)
         .select(unix_micros(col("window_start")).as("window_start_us"),
@@ -427,7 +395,7 @@ object EventStream {
     // final-session emission (the one lifecycle whose output DEPENDS on
     // the post-data watermark batch), so boundedLifecycleConfs minus
     // the no-data flag.
-    withConf(spark, boundedLifecycleConfs
+    graft.Sessions.withConf(spark, boundedLifecycleConfs
       .filterNot(_._1 == "spark.sql.streaming.noDataMicroBatches.enabled"): _*) {
       val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
       val ev = batchEvents(raw)
@@ -441,65 +409,6 @@ object EventStream {
           col("n_events"),
           col("total_value").cast("long").as("total_cents")),
         OutputMode.Append())
-    }
-  }
-
-  /** Apply one micro-batch to a keyed parquet table as a MERGE
-    * ([[graft.ops.Relational.upsert]] — latest-per-key within the batch,
-    * keyed replace against the base). The merged table is materialized to
-    * a stage dir before the live directory is touched, then renamed in
-    * ([[graft.Fs.commit]], on the Hadoop filesystem of `target`) — a crash
-    * mid-write never leaves a half table, and the merge (which READS the
-    * live directory) is fully evaluated before its input disappears. The
-    * rename is the plain-parquet stand-in for a table format's
-    * transactional commit; the merge plan is a WindowGroupLimit dedup +
-    * anti join (AQE broadcasts small batches).
-    * Keyed merge ⇒ re-applying the same batch is a no-op (idempotent).
-    */
-  def upsertBatchIntoParquet(batch: DataFrame, target: String,
-                             keys: Seq[String],
-                             order: Seq[org.apache.spark.sql.Column]): Unit = {
-    val spark = batch.sparkSession
-    val live = new org.apache.hadoop.fs.Path(target)
-    val fs = graft.Fs.of(spark, live)
-    val merged =
-      if (fs.exists(live))
-        graft.ops.Relational.upsert(spark.read.parquet(target), batch, keys, order)
-      else graft.ops.Relational.latestPerKey(batch, keys, order)
-    graft.Fs.commit(fs, live)(stage => merged.write.parquet(stage.toString))
-  }
-
-  /** Streaming MERGE sink — foreachBatch + [[upsertBatchIntoParquet]]:
-    * continuously maintain a latest-state-per-user table from the event
-    * landing zone. Exactly-once END TO END, twice over: the file-source
-    * checkpoint never replays a committed batch across restarts, and
-    * because the sink is a KEYED merge, a replayed batch would be
-    * idempotent anyway — the belt-and-suspenders that makes foreachBatch
-    * the operational sink for "streaming MERGE INTO" without a table
-    * format. `maxFilesPerTrigger=1` exercises one landing file per
-    * micro-batch (the rate-limiting knob).
-    */
-  def runForeachBatchUpsert(spark: SparkSession, landingDir: String,
-                            target: String, checkpoint: String,
-                            maxFilesPerTrigger: Int = 1): Unit = {
-    // Stateless foreachBatch (no watermark state) — boundedLifecycleConfs
-    // for uniformity; the no-data-batch skip is vacuous here.
-    withConf(spark, boundedLifecycleConfs: _*) {
-      val raw = spark.readStream.schema(rawEventSchema(spark, landingDir))
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
-        .parquet(landingDir)
-      val events = batchEvents(raw)
-        .select(col("user_id"), col("event_id"), col("ts"),
-          col("event_type"), col("value"))
-      val q = events.writeStream
-        .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          upsertBatchIntoParquet(b.toDF(), target, Seq("user_id"),
-            Seq(col("ts").desc, col("event_id").desc))
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
     }
   }
 }

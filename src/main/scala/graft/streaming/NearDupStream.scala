@@ -467,7 +467,7 @@ object NearDupStream {
     // harness: 69 jobs / 7.6 s with AQE, most of it 150-290 ms 1-task
     // stages). A deployment with corpus-sized batches would re-enable it
     // per batch.
-    EventStream.withConf(spark, EventStream.boundedLifecycleConfs :+
+    graft.Sessions.withConf(spark, EventStream.boundedLifecycleConfs :+
       ("spark.sql.adaptive.enabled" -> "false"): _*) {
       val raw = spark.readStream.schema(docSchema)
         .option("maxFilesPerTrigger", 1).parquet(landingDir)

@@ -160,21 +160,118 @@ class WeatherPipelineSpec extends SparkSpec {
     assert(!new java.io.File(dir, "_stage").exists())
   }
 
-  test("startStream ingests a landing directory incrementally into partitioned staging") {
+  /** Appends one JSON landing file of (city, raw_json, interval) rows. */
+  private def land(dir: String, rows: (String, String, Timestamp)*): Unit =
+    rows.toDF("city", "raw_json", "data_interval_start").coalesce(1)
+      .write.mode("append").json(dir)
+
+  private def landed(t: Timestamp, df: DataFrame): Seq[(String, String, Timestamp)] =
+    df.as[(String, String)].collect().toSeq.map { case (c, j) => (c, j, t) }
+
+  private val tableDirs = Seq("raw/weather", "marts/dim_locations", "marts/fct_weather_observations")
+
+  /** Each table's rows under `root`. */
+  private def tables(root: String): Seq[Set[org.apache.spark.sql.Row]] =
+    tableDirs.map(t => spark.read.parquet(s"$root/$t").collect().toSet)
+
+  test("startStream publishes each micro-batch through the gated commit into raw and the marts") {
     val dir = java.nio.file.Files.createTempDirectory("wp-stream").toString
-    payloads.write.mode("overwrite").json(s"$dir/landing")
-    val q = WeatherPipeline.startStream(spark, s"$dir/landing", s"$dir/ckpt", s"$dir/stg", t0, now)
+    land(s"$dir/landing", landed(t0, payloads): _*)
+    val q = WeatherPipeline.startStream(spark, s"$dir/landing", s"$dir/ckpt", s"$dir/out", now)
     q.processAllAvailable()
     // late-arriving file → next micro-batch picks it up via the checkpoint
-    Seq(("Rome", payload("Rome", "Italy", 22, "sunny"))).toDF("city", "raw_json")
-      .write.mode("append").json(s"$dir/landing")
+    land(s"$dir/landing", ("Rome", payload("Rome", "Italy", 22, "sunny"), t0))
     q.processAllAvailable()
     q.stop()
-    val stg = spark.read.parquet(s"$dir/stg")
-    assert(stg.count() == 4) // Paris, London, Tokyo + Rome (error + outlier dropped)
-    assert(stg.filter($"city_clean" === "ROME").count() == 1)
-    assert(new java.io.File(s"$dir/stg").listFiles()
-      .exists(_.getName.startsWith("extraction_date=")))
+    val raw = spark.read.parquet(s"$dir/out/raw/weather")
+    assert(raw.count() == 5) // the error payload routed out; the outlier lands in raw
+    assert(raw.filter($"city" === "Rome").count() == 1)
+    // Paris, London, Tokyo + Rome: the outlier is filtered in staging
+    assert(spark.read.parquet(s"$dir/out/marts/fct_weather_observations").count() == 4)
+    assert(new java.io.File(s"$dir/out/marts/fct_weather_observations").listFiles()
+      .exists(_.getName.startsWith("data_interval_start=")))
+  }
+
+  test("the stream's raw and marts equal runBatch over each interval's landed rows, in interval order") {
+    val dir = java.nio.file.Files.createTempDirectory("wp-stream-batch").toString
+    val t1 = Timestamp.valueOf("2024-06-03 08:30:00")
+    val files = Seq(
+      Seq(("Paris", payload("Paris", "France", 18, "sunny"), t0),
+        ("London", payload("London", "United Kingdom", -3, "light rain"), t0),
+        ("ErrCity", """{"error":{"code":615,"info":"request failed"}}""", t0)),
+      Seq(("Tokyo", payload("Tokyo", "Japan", 35, "Overcast Clouds"), t0),
+        ("Paris", payload("Paris", "France", 21, "sunny"), t1),
+        ("Rome", payload("Rome", "Italy", 22, "sunny"), t1),
+        ("Hot City", payload("Hot City", "X", 75, "Sunny"), t1)))
+    new java.io.File(s"$dir/landing").mkdirs()
+    val q = WeatherPipeline.startStream(spark, s"$dir/landing", s"$dir/ckpt", s"$dir/stream", now)
+    try files.foreach { f => land(s"$dir/landing", f: _*); q.processAllAvailable() }
+    finally q.stop()
+    assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    for ((t, rows) <- files.flatten.groupBy(_._3).toSeq.sortBy(_._1.getTime))
+      WeatherPipeline.runBatch(rows.map(r => (r._1, r._2)).toDF("city", "raw_json"), t, now,
+        s"$dir/batch")
+    tables(s"$dir/stream").zip(tables(s"$dir/batch")).zip(tableDirs).foreach {
+      case ((stream, batch), t) => assert(stream == batch, t)
+    }
+  }
+
+  test("the stream replaces a city per interval, resumes from its checkpoint, " +
+    "and a replayed micro-batch changes no table") {
+    // every dir given as a plain path and as a file: URI
+    for (uri <- Seq(false, true)) {
+      val dir = java.nio.file.Files.createTempDirectory("wp-stream-merge").toFile
+      val root = if (uri) dir.toURI.toString.stripSuffix("/") else dir.toString
+      /** Runs the stream until it has consumed every landed file; returns
+        * the input rows of each micro-batch it ran. */
+      def run(): Seq[Long] = {
+        val q = WeatherPipeline.startStream(spark, s"$root/landing", s"$root/ckpt", s"$root/out", now)
+        try q.processAllAvailable() finally q.stop()
+        q.recentProgress.map(_.numInputRows).toSeq
+      }
+      def temps(): Map[String, Int] = spark.read.parquet(s"$dir/out/raw/weather")
+        .select($"city", $"temperature").as[(String, Int)].collect().toMap
+      land(s"$root/landing", ("Paris", payload("Paris", "France", 18, "sunny"), t0),
+        ("London", payload("London", "United Kingdom", -3, "light rain"), t0))
+      assert(run().sum == 2)
+      assert(temps() == Map("Paris" -> 18, "London" -> -3))
+      // a restart processes only the new file, whose Paris replaces the first
+      land(s"$root/landing", ("Paris", payload("Paris", "France", 25, "sunny"), t0))
+      assert(run().sum == 1)
+      assert(temps() == Map("Paris" -> 25, "London" -> -3))
+      val published = tables(s"$dir/out")
+      assert(published(2).size == 2)
+      // no new file: a no-op run
+      assert(run().sum == 0)
+      assert(tables(s"$dir/out") == published)
+      // uncommit the last micro-batch: the restart replays it, changing no table
+      Seq("1", ".1.crc").foreach(n => new java.io.File(dir, s"ckpt/commits/$n").delete())
+      assert(run() == Seq(1L))
+      assert(tables(s"$dir/out") == published)
+      assert(!new java.io.File(dir, "out/_stage").exists())
+    }
+  }
+
+  test("a micro-batch that ingests no row, or fails the gate, publishes nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("wp-stream-gate").toString
+    new java.io.File(s"$dir/landing").mkdirs()
+    val q = WeatherPipeline.startStream(spark, s"$dir/landing", s"$dir/ckpt", s"$dir/out", now)
+    try {
+      land(s"$dir/landing", ("ErrCity", """{"error":{"code":615,"info":"request failed"}}""", t0),
+        ("Oslo", payload("Oslo", "Norway", 5, "sunny").take(60), t0))
+      q.processAllAvailable()
+      assert(q.recentProgress.map(_.numInputRows).sum == 2)
+      assert(!new java.io.File(s"$dir/out").exists())
+      land(s"$dir/landing", ("Paris", payload("Paris", "France", 18, "sunny"), t0))
+      q.processAllAvailable()
+      val published = tables(s"$dir/out")
+      land(s"$dir/landing", landed(t0, dupParis): _*)
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => String.valueOf(c.getMessage).contains("raw_weather.unique_id")), e)
+      assert(tables(s"$dir/out") == published)
+      assert(!new java.io.File(s"$dir/out/_stage").exists())
+    } finally q.stop()
   }
 
   test("runBatch writes raw + marts and enforces gates end-to-end") {
@@ -182,9 +279,9 @@ class WeatherPipelineSpec extends SparkSpec {
     WeatherPipeline.runBatch(payloads, t0, now, dir)
     val fct = spark.read.parquet(s"$dir/marts/fct_weather_observations")
     assert(fct.count() == 3)
-    // partitioned layout by extraction_date (at-scale daily overwrite unit)
+    // partitioned layout by data_interval_start (the daily overwrite unit)
     assert(new java.io.File(s"$dir/marts/fct_weather_observations")
-      .listFiles().exists(_.getName.startsWith("extraction_date=")))
+      .listFiles().exists(_.getName.startsWith("data_interval_start=")))
   }
 
   test("scheduled-run E2E: the full DAG chain fetch→ingest→stg→assert→marts→assert, " +
@@ -243,10 +340,11 @@ class WeatherPipelineSpec extends SparkSpec {
   test("a failed gate publishes nothing: the live marts keep their files and no stage remains") {
     val dir = java.nio.file.Files.createTempDirectory("wp-gate").toString
     WeatherPipeline.runBatch(payloads, t0, now, dir) // a good day
-    val day1 = s"$dir/marts/fct_weather_observations/extraction_date=2024-06-02"
     val interval = new java.io.File(s"$dir/raw/weather").listFiles()
       .filter(_.getName.startsWith("data_interval_start=")).map(_.getPath).toSeq
     assert(interval.size == 1)
+    val day1 = s"$dir/marts/fct_weather_observations/data_interval_start=" +
+      new java.io.File(interval.head).getName.stripPrefix("data_interval_start=")
     def names(d: String): Set[String] = new java.io.File(d).list().toSet
     def rawRows = spark.read.parquet(interval.head).collect().toSet
     val (dimBefore, fctBefore, rawBefore) = (names(s"$dir/marts/dim_locations"), names(day1),
@@ -313,7 +411,9 @@ class WeatherPipelineSpec extends SparkSpec {
     def dataFiles(d: String): Int =
       new java.io.File(d).listFiles().count(_.getName.endsWith(".parquet"))
     assert(dataFiles(s"$dir/marts/dim_locations") == 1)
-    assert(dataFiles(s"$dir/marts/fct_weather_observations/extraction_date=2024-06-03") == 1)
+    val day2 = new java.io.File(s"$dir/marts/fct_weather_observations").listFiles()
+      .filter(_.getName.startsWith("data_interval_start=2024-06-03"))
+    assert(day2.length == 1 && dataFiles(day2.head.getPath) == 1)
 
     // JSON landing files: the scan keeps one partition per file
     payloads.limit(2).write.json(s"$dir/landing")
@@ -363,20 +463,22 @@ class WeatherPipelineSpec extends SparkSpec {
     assert(raw.select("id").distinct().count() == 3)
   }
 
-  test("re-running a day overwrites only that extraction_date partition") {
+  test("re-running an interval on a later date replaces that interval's fct rows and only them") {
     val dir = java.nio.file.Files.createTempDirectory("wp-dyn").toString
-    val day2 = Timestamp.valueOf("2024-06-03 09:00:00")
-    WeatherPipeline.runBatch(payloads, t0, now, dir)   // day 1: 3 rows
-    val oneCity = Seq(("Rome", payload("Rome", "Italy", 22, "sunny")))
-      .toDF("city", "raw_json")
-    WeatherPipeline.runBatch(oneCity, t0, day2, dir)   // day 2: 1 row
-    val fct = spark.read.parquet(s"$dir/marts/fct_weather_observations")
-    // dynamic partition overwrite: day 1's partition survives the day-2 run
-    assert(fct.count() == 4)
-    assert(fct.filter($"extraction_date" === "2024-06-02").count() == 3)
-    assert(fct.filter($"extraction_date" === "2024-06-03").count() == 1)
-    // re-run day 2 with the same batch → still 1 row for that day, not 2
-    WeatherPipeline.runBatch(oneCity, t0, day2, dir)
-    assert(spark.read.parquet(s"$dir/marts/fct_weather_observations").count() == 4)
+    val (t1, day2) = (Timestamp.valueOf("2024-06-03 08:30:00"), Timestamp.valueOf("2024-06-03 09:00:00"))
+    def oneCity(c: String, country: String): DataFrame =
+      Seq((c, payload(c, country, 22, "sunny"))).toDF("city", "raw_json")
+    WeatherPipeline.runBatch(payloads, t0, now, dir)                    // interval t0: 3 rows
+    WeatherPipeline.runBatch(oneCity("Oslo", "Norway"), t1, day2, dir) // interval t1: 1 row
+    WeatherPipeline.runBatch(oneCity("Rome", "Italy"), t0, day2, dir)  // t0 again, on day 2
+    def fct = spark.read.parquet(s"$dir/marts/fct_weather_observations")
+    val raw = spark.read.parquet(s"$dir/raw/weather")
+    assert(fct.collect().toSet ==
+      WeatherPipeline.fctWeatherObservations(WeatherPipeline.stgWeather(raw)).collect().toSet)
+    assert(fct.filter($"data_interval_start" === t0).count() == 1)
+    assert(fct.filter($"data_interval_start" === t1).count() == 1)
+    // re-run t0 with the same batch → still 1 row for that interval, not 2
+    WeatherPipeline.runBatch(oneCity("Rome", "Italy"), t0, day2, dir)
+    assert(fct.count() == 2)
   }
 }

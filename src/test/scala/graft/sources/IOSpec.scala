@@ -125,9 +125,13 @@ class IOSpec extends SparkSpec {
     assert(parquetFiles(s"$root/frag") == 32)
     val fragBytes = new java.io.File(s"$root/frag").listFiles()
       .filter(_.getName.endsWith(".parquet")).map(_.length).sum
-    // target = half the data -> exactly 2 output files
+    // target = half the data -> exactly 2 output files, whether the input
+    // is named by a plain path or by a file: URI
     val n = IO.compact(spark, s"$root/frag", s"$root/out", (fragBytes + 1) / 2)
     assert(n == 2 && parquetFiles(s"$root/out") == 2)
+    val fragUri = new java.io.File(s"$root/frag").toURI.toString
+    assert(IO.compact(spark, fragUri, s"$root/out_uri", (fragBytes + 1) / 2) == n)
+    assert(parquetFiles(s"$root/out_uri") == n)
     val back = spark.read.parquet(s"$root/out").as[(Long, String)].collect().toSeq.sorted
     assert(back == (1 to 10000).map(i => (i.toLong, s"payload_$i")))
     // a target larger than the directory -> a single file

@@ -249,46 +249,26 @@ class EventStreamSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == 15)
   }
 
-  test("foreachBatch MERGE sink: latest-state table, incremental restart, idempotent") {
-    // the same scenario with every dir given as a plain path and as a
-    // file: URI: the sink commits through the Hadoop filesystem of its target
-    for (uri <- Seq(false, true)) {
-      val dir = java.nio.file.Files.createTempDirectory("stream-merge")
-      val root = if (uri) dir.toUri.toString.stripSuffix("/") else dir.toString
-      val (landing, target, ckpt) = (s"$root/landing", s"$root/state", s"$root/ckpt")
-      new java.io.File(s"$dir/landing").mkdirs()
-      def nanos(sec: Long): Long = sec * 1000000000L
-      def land(rows: Seq[(Long, Long, Long, String, Double)]): Unit =
-        rows.map { case (id, tsSec, uid, et, v) => (id, nanos(tsSec), uid, et, v, "{}") }
-          .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-          .coalesce(1).write.mode("append").parquet(landing)
-      def state(): Map[Long, Long] =
-        spark.read.parquet(target).select($"user_id", $"event_id")
-          .as[(Long, Long)].collect().toMap
-      // two landing files, maxFilesPerTrigger=1 → two micro-batches; user 1
-      // appears in both so the SECOND batch must replace the first's row
-      land(Seq((1L, 10L, 100L, "click", 1.0), (2L, 10L, 200L, "view", 2.0)))
-      land(Seq((3L, 20L, 100L, "click", 3.0)))
-      runForeachBatchUpsert(spark, landing, target, ckpt)
-      assert(state() == Map(100L -> 3L, 200L -> 2L))
-      // restart with one new file: only it is processed; a replay of the
-      // earlier batches would be invisible anyway (keyed merge, older ts)
-      land(Seq((4L, 30L, 200L, "view", 4.0), (5L, 5L, 300L, "click", 5.0)))
-      runForeachBatchUpsert(spark, landing, target, ckpt)
-      assert(state() == Map(100L -> 3L, 200L -> 4L, 300L -> 5L))
-      // no new data → no-op run
-      runForeachBatchUpsert(spark, landing, target, ckpt)
-      assert(state() == Map(100L -> 3L, 200L -> 4L, 300L -> 5L))
-      // direct replay of an already-applied batch is idempotent (the
-      // belt-and-suspenders half: keyed merge, not just checkpoint offsets)
-      val replay = Seq((3L, nanos(20L), 100L, "click", 3.0))
-        .toDF("event_id", "ts", "user_id", "event_type", "value")
-        .withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      EventStream.upsertBatchIntoParquet(replay, target, Seq("user_id"),
-        Seq($"ts".desc, $"event_id".desc))
-      assert(state() == Map(100L -> 3L, 200L -> 4L, 300L -> 5L))
-      assert(!new java.io.File(s"$dir/_stage").exists())
+  test("runStreamDedupOnce re-stages its duplicated landing when the source is regenerated") {
+    val dir = java.nio.file.Files.createTempDirectory("dedup-restage").toString
+    def write(ids: Seq[Long]): java.io.File = {
+      ids.map(i => (i, i * 1000000000L, 1L, "click", 1.0, "{}"))
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode("overwrite").parquet(s"$dir/events")
+      val part = new java.io.File(s"$dir/events").listFiles().filter(_.getName.endsWith(".parquet")).head
+      val src = new java.io.File(s"$dir/events.parquet")
+      java.nio.file.Files.move(part.toPath, src.toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      src
     }
+    def dedup(src: java.io.File): Seq[Long] =
+      runStreamDedupOnce(spark, src.getAbsolutePath).as[Long].collect().toSeq.sorted
+    assert(dedup(write(1L to 3L)) == (1L to 3L))
+    // the regenerated source differs in size: both copies must follow it
+    val src = write(10L to 20L)
+    assert(dedup(src) == (10L to 20L))
+    val copies = stageLanding(src.getAbsolutePath, "graft_events_dup_", copies = 2).listFiles()
+    assert(copies.length == 2)
+    copies.foreach(c => assert(java.nio.file.Files.mismatch(c.toPath, src.toPath) == -1, c))
   }
 
   test("runSessionizeOnce: non-final sessions emit, finals gate on the watermark") {
