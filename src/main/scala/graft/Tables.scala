@@ -21,9 +21,12 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     memo.computeIfAbsent((System.identityHashCode(spark), dir, name), { _ =>
-      val raw = spark.read.parquet(s"$dir/$name.parquet")
+      val raw = spark.read.parquet(path(dir, name))
       if (name == "events") normalizeTs(raw) else raw
     })
+
+  /** The file (or dir) table `name` of `dir` is read from. */
+  def path(dir: String, name: String): String = s"$dir/$name.parquet"
 
   // Engine-wide contract: `events.ts` surfaces as epoch-NANOS BIGINT.
   // The driver's parquet has shipped as both TIMESTAMP(NANOS) (arrives

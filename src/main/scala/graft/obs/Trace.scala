@@ -48,12 +48,16 @@ object Trace {
     extends RuntimeException(cause.getMessage, cause)
 
   /** Runs `body` with the listeners attached and returns its result with
-    * the report. The bus is drained before the report is read, so every
-    * event `body` caused is counted. A non-fatal exception from `body`
-    * is rethrown as [[Failed]]; the listeners are detached either way. */
+    * the report. The bus is drained before the listeners attach, so no
+    * event of earlier work is counted (the bus hands a queued event to
+    * every listener attached when it is delivered), and again before the
+    * report is read, so every event `body` caused is. A non-fatal
+    * exception from `body` is rethrown as [[Failed]]; the listeners are
+    * detached either way. */
   def around[A](spark: SparkSession)(body: => A): (A, Report) = {
     val sc = spark.sparkContext
     val r = new Recorder
+    Bus.drain(sc)
     sc.addSparkListener(r)
     spark.listenerManager.register(r)
     spark.streams.addListener(r.streams)

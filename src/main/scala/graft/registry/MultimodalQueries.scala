@@ -9,22 +9,16 @@ import SharedSpark._
 /** Image and audio decoding, frame sampling and media-format scans. */
 object MultimodalQueries extends Module("multimodal") {
 
-  // ORC landing copy (one-time per session+sf) — the columnar sibling.
-  private val orcDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-
+  // The ORC landing copy of orders — the columnar sibling of the CSV one,
+  // rebuilt whenever the orders files change (SharedSpark.derivedDir).
   private[graft] def orcOrdersDir(s: SparkSession, d: String): String =
-    orcDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_orders_orc_${java.lang.Integer.toHexString(d.hashCode)}").getAbsolutePath
-      if (!new java.io.File(dir, "_SUCCESS").exists())
-        t(s, d, "orders")
-          .select(col("o_orderkey"), col("o_custkey"),
-            col("o_orderpriority"), col("o_totalprice"),
-            col("o_orderdate").cast("date").as("o_date"))
-          .write.mode("overwrite").orc(dir)
-      dir
-    })
+    derivedDir(s, d, "orders_orc", "orders") { dir =>
+      t(s, d, "orders")
+        .select(col("o_orderkey"), col("o_custkey"),
+          col("o_orderpriority"), col("o_totalprice"),
+          col("o_orderdate").cast("date").as("o_date"))
+        .write.orc(dir)
+    }
 
   /** ORC source round-trip against the parquet base table. */
   private def qOrcScan(s: SparkSession, d: String): DataFrame =

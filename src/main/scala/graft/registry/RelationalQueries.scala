@@ -511,65 +511,43 @@ object RelationalQueries extends Module("relational") {
       |FROM orders ORDER BY o_custkey, o_orderdate, o_orderkey""".stripMargin)
 
   /** Time-series rollup: monthly revenue (date_trunc grain). */
-  // One year-partitioned copy of orders per (session, sf dir), written
-  // through IO.writePartitioned on first use (deterministic content, so a
-  // leftover directory from a previous JVM is equally valid). This is the
-  // layout a daily-rebuilt fact table has at scale; q_partition_prune
+  // The year-partitioned copy of orders (IO.writePartitioned), rebuilt
+  // whenever the orders files change (SharedSpark.derivedDir). This is
+  // the layout a daily-rebuilt fact table has at scale; q_partition_prune
   // reads it back WITH a partition predicate so the scan's partition
   // pruning — the single most scale-critical I/O behavior — sits under
   // the correctness gate rather than only under a plan spec.
-  private val partDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-
   private[graft] def partitionedOrdersDir(s: SparkSession, d: String): String =
-    partDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_orders_by_year_${java.lang.Integer.toHexString(d.hashCode)}").getAbsolutePath
-      if (!new java.io.File(dir, "_SUCCESS").exists())
-        graft.sources.IO.writePartitioned(
-          t(s, d, "orders").withColumn("o_year", year(col("o_orderdate"))),
-          Seq("o_year"), dir)
-      dir
-    })
+    derivedDir(s, d, "orders_by_year", "orders") { dir =>
+      graft.sources.IO.writePartitioned(
+        t(s, d, "orders").withColumn("o_year", year(col("o_orderdate"))),
+        Seq("o_year"), dir)
+    }
 
-  // Z-ordered lineitem layout, written once per (session, sfDir): rows
-  // clustered by the Morton interleave of two derived dimensions so
-  // either-dimension filters row-group-skip (IOSpec measures the skip;
-  // this registry query proves result transparency under the gate).
-  private val zorderDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-
+  // The Z-ordered lineitem layout: rows clustered by the Morton
+  // interleave of two derived dimensions so either-dimension filters
+  // row-group-skip (IOSpec measures the skip; this registry query proves
+  // result transparency under the gate).
   private[graft] def zorderedLineitemDir(s: SparkSession, d: String): String =
-    zorderDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_lineitem_zorder_${java.lang.Integer.toHexString(d.hashCode)}").getAbsolutePath
-      if (!new java.io.File(dir, "_SUCCESS").exists())
-        graft.sources.IO.writeZOrdered(
-          t(s, d, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
-            pmod(col("l_partkey"), lit(1024L)).cast("int").as("zx"),
-            pmod(col("l_suppkey"), lit(1024L)).cast("int").as("zy"),
-            col("l_quantity")),
-          "zx", "zy", bits = 10, nFiles = 16, dir)
-      dir
-    })
+    derivedDir(s, d, "lineitem_zorder", "lineitem") { dir =>
+      graft.sources.IO.writeZOrdered(
+        t(s, d, "lineitem").select(col("l_orderkey"), col("l_linenumber"),
+          pmod(col("l_partkey"), lit(1024L)).cast("int").as("zx"),
+          pmod(col("l_suppkey"), lit(1024L)).cast("int").as("zy"),
+          col("l_quantity")),
+        "zx", "zy", bits = 10, nFiles = 16, dir)
+    }
 
-  // CSV landing copy of orders (one-time per session+sf): the text-source
-  // read must round-trip schema-exactly against the parquet base table.
-  private val csvDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-
+  // The CSV landing copy of orders: the text-source read must round-trip
+  // schema-exactly against the parquet base table.
   private[graft] def csvOrdersDir(s: SparkSession, d: String): String =
-    csvDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_orders_csv_${java.lang.Integer.toHexString(d.hashCode)}").getAbsolutePath
-      if (!new java.io.File(dir, "_SUCCESS").exists())
-        t(s, d, "orders")
-          .select(col("o_orderkey"), col("o_custkey"),
-            col("o_orderpriority"), col("o_totalprice"),
-            col("o_orderdate").cast("date").as("o_date"))
-          .write.mode("overwrite").option("header", "true").csv(dir)
-      dir
-    })
+    derivedDir(s, d, "orders_csv", "orders") { dir =>
+      t(s, d, "orders")
+        .select(col("o_orderkey"), col("o_custkey"),
+          col("o_orderpriority"), col("o_totalprice"),
+          col("o_orderdate").cast("date").as("o_date"))
+        .write.option("header", "true").csv(dir)
+    }
 
   /** CSV source round-trip (schema-pinned read of the text landing copy;
     * doubles survive because Java's shortest-repr formatting parses back
@@ -587,26 +565,20 @@ object RelationalQueries extends Module("relational") {
       |       CAST(o_orderdate AS DATE) AS o_date
       |FROM orders ORDER BY o_orderkey""".stripMargin)
 
-  // Fragmented-then-compacted lineitem copy (one-time per session+sf):
-  // 32 shard files rewritten by IO.compact into size-targeted files.
-  private val compactDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-
+  // The fragmented-then-compacted lineitem copy: 32 shard files, written
+  // in the same stage, rewritten by IO.compact into size-targeted files
+  // under `compact/`; the shards are deleted before the stage publishes.
   private[graft] def compactedLineitemDir(s: SparkSession, d: String): String =
-    compactDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val tmp = System.getProperty("java.io.tmpdir")
-      val tag = java.lang.Integer.toHexString(d.hashCode)
-      val frag = new java.io.File(tmp, s"graft_li_frag_$tag").getAbsolutePath
-      val out = new java.io.File(tmp, s"graft_li_compact_$tag").getAbsolutePath
-      if (!new java.io.File(out, "_SUCCESS").exists()) {
-        t(s, d, "lineitem")
-          .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-          .repartition(32)
-          .write.mode("overwrite").parquet(frag)
-        graft.sources.IO.compact(s, frag, out, targetBytes = 64L << 20)
-      }
-      out
-    })
+    derivedDir(s, d, "lineitem_compact", "lineitem") { dir =>
+      val frag = s"$dir/frag"
+      t(s, d, "lineitem")
+        .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
+        .repartition(32)
+        .write.parquet(frag)
+      graft.sources.IO.compact(s, frag, s"$dir/compact", targetBytes = 64L << 20)
+      val p = new org.apache.hadoop.fs.Path(frag)
+      graft.Fs.of(s, p).delete(p, true)
+    } + "/compact"
 
   /** Read of the compacted layout against the base-table oracle (result
     * transparency: compaction must preserve every row exactly). */
@@ -1645,23 +1617,16 @@ object RelationalQueries extends Module("relational") {
       |       CAST(list_max(list_transform(toks, t -> length(t))) AS INTEGER) AS max_len
       |FROM t ORDER BY doc_id""".stripMargin)
 
-  // JSON-lines landing copy of orders (one-time per session+sf), the
-  // text-source sibling of csvOrdersDir.
-  private val jsonDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-
+  // The JSON-lines landing copy of orders, the text-source sibling of
+  // csvOrdersDir.
   private[graft] def jsonOrdersDir(s: SparkSession, d: String): String =
-    jsonDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_orders_json_${java.lang.Integer.toHexString(d.hashCode)}").getAbsolutePath
-      if (!new java.io.File(dir, "_SUCCESS").exists())
-        t(s, d, "orders")
-          .select(col("o_orderkey"), col("o_custkey"),
-            col("o_orderpriority"), col("o_totalprice"),
-            col("o_orderdate").cast("date").as("o_date"))
-          .write.mode("overwrite").json(dir)
-      dir
-    })
+    derivedDir(s, d, "orders_json", "orders") { dir =>
+      t(s, d, "orders")
+        .select(col("o_orderkey"), col("o_custkey"),
+          col("o_orderpriority"), col("o_totalprice"),
+          col("o_orderdate").cast("date").as("o_date"))
+        .write.json(dir)
+    }
 
   /** JSON-lines source round-trip against the parquet base table. */
   private def qJsonScan(s: SparkSession, d: String): DataFrame =
@@ -1676,31 +1641,19 @@ object RelationalQueries extends Module("relational") {
       |FROM orders ORDER BY o_orderkey""".stripMargin)
 
   // One binary FILE per document (doc-id-named synthetic image payloads),
-  // written once per (session, sf) by the executors — the landing shape
-  // of a real media corpus.
-  private val binDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-
+  // written by the executors — the landing shape of a real media corpus.
   private[graft] def binaryMediaDir(s: SparkSession, d: String): String =
-    binDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_media_bin_${java.lang.Integer.toHexString(d.hashCode)}")
-      val done = new java.io.File(dir, "_DONE")
-      if (!done.exists()) {
-        dir.mkdirs()
-        val p = dir.getAbsolutePath
-        graft.multimodal.SynthImages.packSynth(t(s, d, "documents"), "doc_id", "text")
-          .foreachPartition {
-            (rows: Iterator[graft.multimodal.Multimodal.MediaRow]) =>
-              rows.foreach { r =>
-                java.nio.file.Files.write(
-                  java.nio.file.Paths.get(p, s"doc_${r.doc_id}.bin"), r.bytes)
-              }
-          }
-        java.nio.file.Files.write(done.toPath, Array.emptyByteArray)
-      }
-      dir.getAbsolutePath
-    })
+    derivedDir(s, d, "media_bin", "documents") { dir =>
+      val p = java.nio.file.Files.createDirectories(java.nio.file.Paths.get(new java.net.URI(dir))).toString
+      graft.multimodal.SynthImages.packSynth(t(s, d, "documents"), "doc_id", "text")
+        .foreachPartition {
+          (rows: Iterator[graft.multimodal.Multimodal.MediaRow]) =>
+            rows.foreach { r =>
+              java.nio.file.Files.write(
+                java.nio.file.Paths.get(p, s"doc_${r.doc_id}.bin"), r.bytes)
+            }
+        }
+    }
 
   /** binaryFile source over the per-document media files — the ingest
     * path of an image/audio corpus: doc identity parsed from the file
@@ -1983,30 +1936,19 @@ object RelationalQueries extends Module("relational") {
   // File-backed year dim for the DPP row. It must be FILE-backed: with a
   // LocalRelation dim the selective filter constant-folds away before the
   // PartitionPruning rule looks for it, and no DPP subquery is planted.
-  private val yearDimMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-
   // testdata orders span 1995–2001; keep = {1996, 1999} so the DPP run
-  // prunes 7 partition dirs down to 2. The dim CONTENT is versioned into
-  // the directory name — a content change must never be served by a
-  // stale cross-run _SUCCESS directory.
+  // prunes 7 partition dirs down to 2. The dim reads no source, so its
+  // CONTENT is folded into the name: other constants get another dir.
   private val YearDimKeep = Set(1996, 1999)
 
   private[graft] def yearDimDir(s: SparkSession, d: String): String =
-    yearDimMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val tag = java.lang.Integer.toHexString(
-        (d, 1995 to 2001, YearDimKeep).hashCode)
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_year_dim_$tag").getAbsolutePath
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
-        import s.implicits._
-        (1995 to 2001)
-          .map(y => (y, if (YearDimKeep(y)) "keep" else "dead"))
-          .toDF("yy", "tag")
-          .coalesce(1).write.mode("overwrite").parquet(dir)
-      }
-      dir
-    })
+    derivedDir(s, d, s"year_dim_${Integer.toHexString((1995 to 2001, YearDimKeep).hashCode)}") { dir =>
+      import s.implicits._
+      (1995 to 2001)
+        .map(y => (y, if (YearDimKeep(y)) "keep" else "dead"))
+        .toDF("yy", "tag")
+        .coalesce(1).write.parquet(dir)
+    }
 
   /** DYNAMIC partition pruning under the correctness gate: the year
     * filter lives on the DIM (tag = 'keep'), not the fact — the fact
@@ -2855,10 +2797,12 @@ object RelationalQueries extends Module("relational") {
       |  ON e.user_id = o1.o_custkey AND e.ts >= o1.o_orderdate
       |ORDER BY e.event_id""".stripMargin)
 
-  // One-time bucketed saves of orders+customer on the join key (8
-  // buckets each side): repeated joins on that key read co-located
-  // buckets with NO exchange (the plan property IOSpec asserts); this
-  // registry query proves result transparency of the bucketed layout.
+  // Bucketed saves of orders+customer on the join key (8 buckets each
+  // side): repeated joins on that key read co-located buckets with NO
+  // exchange (the plan property IOSpec asserts); this registry query
+  // proves result transparency of the bucketed layout. Unlike the copies
+  // in Fs.derived's store, these are rewritten once per session: the
+  // catalog entries they register live only as long as the session.
   private val bucketedMemo =
     new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
 
@@ -2870,9 +2814,8 @@ object RelationalQueries extends Module("relational") {
       // them — drop both the entry and the location before (re)writing
       Seq(s"orders_bkt_$t0", s"customer_bkt_$t0").foreach { name =>
         s.sql(s"DROP TABLE IF EXISTS $name")
-        val loc = new java.io.File(
-          s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), name)
-        if (loc.exists()) graft.Fs.deleteRecursively(loc)
+        val loc = new org.apache.hadoop.fs.Path(s.conf.get("spark.sql.warehouse.dir"), name)
+        graft.Fs.of(s, loc).delete(loc, true)
       }
       graft.sources.IO.writeBucketed(
         t(s, d, "orders").select(col("o_orderkey"), col("o_custkey"),

@@ -85,36 +85,17 @@ object TextQueries extends Module("text") {
     (s0 +: (1 to 3).map(round)).mkString(",\n")
   }
 
-  // One-time export of documents as raw TEXT LINES ("doc_id\ttext", line
+  // The export of documents as raw TEXT LINES ("doc_id\ttext", line
   // breaks sanitized to spaces) — the native landing format of a web/LLM
-  // corpus, and the one source format the matrix was missing.
-  private val textDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), String]()
-
+  // corpus, and the one source format the matrix was missing. Rebuilt
+  // whenever the documents files change (SharedSpark.derivedDir).
   private[graft] def textLinesDir(s: SparkSession, d: String): String =
-    textDirMemo.computeIfAbsent((System.identityHashCode(s), d), _ => {
-      val tmp = System.getProperty("java.io.tmpdir")
-      // The directory tag carries a CONTENT fingerprint (row count + max
-      // doc_id), not just the path hash: a cross-run _SUCCESS sentinel
-      // alone would silently serve a stale export if the dataset at the
-      // same path were regenerated (the one cheap aggregate per JVM is
-      // the price of that staleness guard).
-      // coalesce: max() is NULL on an empty documents table and
-      // Row.getLong throws on null — a degenerate dataset dir must
-      // still export (as an empty text dir), not crash the fingerprint
-      val fpRow = t(s, d, "documents")
-        .agg(count(lit(1)).as("n"),
-          coalesce(max(col("doc_id")), lit(-1L)).as("mx")).collect()(0)
-      val tag = java.lang.Integer.toHexString(
-        (d, fpRow.getLong(0), fpRow.getLong(1)).hashCode)
-      val out = new java.io.File(tmp, s"graft_txtlines_$tag").getAbsolutePath
-      if (!new java.io.File(out, "_SUCCESS").exists())
-        spread(t(s, d, "documents"), "doc_id")
-          .select(concat(col("doc_id").cast("string"), lit("\t"),
-            regexp_replace(col("text"), "[\\t\\n\\r]", " ")).as("value"))
-          .write.mode("overwrite").text(out)
-      out
-    })
+    derivedDir(s, d, "txtlines", "documents") { dir =>
+      spread(t(s, d, "documents"), "doc_id")
+        .select(concat(col("doc_id").cast("string"), lit("\t"),
+          regexp_replace(col("text"), "[\\t\\n\\r]", " ")).as("value"))
+        .write.text(dir)
+    }
 
   /** Raw text-lines source (`spark.read.text`): one line per document,
     * id and payload split at the first tab. Result transparency is the

@@ -58,14 +58,14 @@ object CorpusMonitor {
     * Complete) and return the final frame — the q_stream_window_counts
     * lifecycle harness applied to the documents table. */
   def runQualityDriftOnce(spark: SparkSession, docsPath: String): DataFrame = {
-    val landing = EventStream.stageLanding(docsPath, "graft_docs_landing_")
+    val landing = EventStream.stageLanding(spark, docsPath, "docs_landing")
     // window×lang state is tiny — size the state shuffle accordingly
     // (pinned into the checkpoint at first run, like the event streams);
     // Complete mode re-emits the full result every data batch, so the
     // trailing no-data batch is skipped (EventStream.boundedLifecycleConfs)
     graft.Sessions.withConf(spark, EventStream.boundedLifecycleConfs: _*) {
-      val schema = spark.read.parquet(landing.getAbsolutePath).schema
-      val raw = spark.readStream.schema(schema).parquet(landing.getAbsolutePath)
+      val schema = spark.read.parquet(landing).schema
+      val raw = spark.readStream.schema(schema).parquet(landing)
       EventStream.drainToMemory(qualityDrift(raw), OutputMode.Complete())
     }
   }

@@ -2,6 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.hadoop.fs.{FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -214,32 +215,20 @@ object EventStream {
     * source consumes directories; at scale this is the producers' append
     * target), as `copies` files: one keeps the source's name, more are
     * named `a_<name>`, `b_<name>`, … (in-stream dedup then has real
-    * duplicates to drop). Idempotent per (input path, prefix), FRESHNESS-CHECKED: a
-    * staged copy whose size or mtime no longer matches the source is
-    * replaced, so regenerating a driver table never leaves the stream
-    * reading a stale tmpdir copy while the batch twin reads the fresh
-    * file (a gate mismatch that is undiagnosable until the tmpdir is
-    * purged). Shared by every streaming lifecycle harness (events +
-    * documents). */
-  private[streaming] def stageLanding(srcPath: String,
-                                      prefix: String = "graft_events_landing_",
-                                      copies: Int = 1): java.io.File = {
-    val src = new java.io.File(srcPath)
-    val landing = new java.io.File(System.getProperty("java.io.tmpdir"),
-      prefix + java.lang.Integer.toHexString(src.getAbsolutePath.hashCode))
-    for (i <- 0 until copies) {
-      val staged = new java.io.File(landing, if (copies == 1) src.getName else s"${('a' + i).toChar}_${src.getName}")
-      val stale = staged.exists() &&
-        (staged.length() != src.length() || staged.lastModified() < src.lastModified())
-      if (!staged.exists() || stale) {
-        landing.mkdirs()
-        java.nio.file.Files.copy(src.toPath, staged.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-        staged.setLastModified(src.lastModified())
-      }
-    }
-    landing
-  }
+    * duplicates to drop). The landing is a [[graft.Fs.derived]] copy of
+    * the file, so a regenerated source table gets a fresh landing (never
+    * a stale copy the batch twin would disagree with), and the dir holds
+    * exactly the copies of one call. Shared by every streaming lifecycle
+    * harness (events + documents). */
+  private[graft] def stageLanding(spark: SparkSession, srcPath: String,
+                                  name: String = "events_landing", copies: Int = 1): String =
+    graft.Fs.derived(spark, s"${name}_x$copies", Seq(srcPath)) { stage =>
+      val src = new Path(srcPath)
+      for (i <- 0 until copies)
+        FileUtil.copy(graft.Fs.of(spark, src), src, graft.Fs.of(spark, stage),
+          new Path(stage, if (copies == 1) src.getName else s"${('a' + i).toChar}_${src.getName}"),
+          false, spark.sparkContext.hadoopConfiguration)
+    }.toString
 
   /** Drain `df` once (AvailableNow) into a uniquely named memory sink in
     * `mode` and hand back the sink's final rows as a local batch frame;
@@ -247,7 +236,7 @@ object EventStream {
     * The query's TEMP checkpoint lives on the ephemeral volume
     * ([[graft.Fs.ephemeralDir]] — tmpfs when the host has one) and is
     * deleted after the drain. Spark's own no-checkpoint path creates (and
-    * deletes) a temp checkpoint under `java.io.tmpdir` — disk-backed on
+    * deletes) a temp checkpoint under the JVM temp dir — disk-backed on
     * many hosts, where its per-batch offset/commit-log fsyncs pay the
     * disk-writeback tax that dominates a streaming query's run time when
     * the disk is busy. No durability claim changes: a temp checkpoint
@@ -284,14 +273,14 @@ object EventStream {
     * tiny by construction); the aggregation itself ran distributed.
     */
   def runWindowedCountsOnce(spark: SparkSession, eventsPath: String): DataFrame = {
-    val landing = stageLanding(eventsPath)
+    val landing = stageLanding(spark, eventsPath)
     // Streaming aggregation state is partitioned by the shuffle width AT
     // FIRST RUN and every micro-batch pays per-state-partition store
     // setup; the window×type state here is tiny, so size it like any
     // other small shuffle (graft.Par's floor) instead of the session
     // default (see boundedLifecycleConfs for the no-data-batch skip).
     graft.Sessions.withConf(spark, boundedLifecycleConfs: _*) {
-      val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
+      val raw = spark.readStream.schema(rawEventSchema(spark, landing)).parquet(landing)
       drainToMemory(windowedCounts(batchEvents(raw))
         .select(unix_micros(col("window_start")).as("window_start_us"),
           col("event_type"), col("n_events"), col("value_cents")),
@@ -306,9 +295,9 @@ object EventStream {
     * re-admitted, so its key is evictable, which is the whole point at
     * unbounded-retention scale. */
   def runStreamDedupOnce(spark: SparkSession, eventsPath: String): DataFrame = {
-    val landing = stageLanding(eventsPath, "graft_events_dup_", copies = 2)
+    val landing = stageLanding(spark, eventsPath, "events_dup", copies = 2)
     graft.Sessions.withConf(spark, boundedLifecycleConfs: _*) {
-      val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
+      val raw = spark.readStream.schema(rawEventSchema(spark, landing)).parquet(landing)
       drainToMemory(dedupedEvents(batchEvents(raw)).select(col("event_id")),
         OutputMode.Append())
     }
@@ -341,13 +330,13 @@ object EventStream {
     * the bounded events file (clicks and purchases are two filtered reads
     * of the same stream) — append mode + AvailableNow. */
   def runAttributionOnce(spark: SparkSession, eventsPath: String): DataFrame = {
-    val landing = stageLanding(eventsPath)
+    val landing = stageLanding(spark, eventsPath)
     // The join keeps FOUR state stores per partition (keyToNumValues +
     // keyWithIndexToValue, each side) — by far the most commit-I/O-bound
     // lifecycle in the registry, and the one a busy disk slows most
     // (10x measured). boundedLifecycleConfs halves its commit rounds.
     graft.Sessions.withConf(spark, boundedLifecycleConfs: _*) {
-      val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
+      val raw = spark.readStream.schema(rawEventSchema(spark, landing)).parquet(landing)
       val ev = batchEvents(raw)
       drainToMemory(attributedPurchases(
         ev.filter(col("event_type") === "click"),
@@ -364,9 +353,9 @@ object EventStream {
   def runEnrichedCountsOnce(spark: SparkSession, eventsPath: String,
                             dim: DataFrame, dimKey: String,
                             dimAttr: String): DataFrame = {
-    val landing = stageLanding(eventsPath)
+    val landing = stageLanding(spark, eventsPath)
     graft.Sessions.withConf(spark, boundedLifecycleConfs: _*) {
-      val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
+      val raw = spark.readStream.schema(rawEventSchema(spark, landing)).parquet(landing)
       drainToMemory(enrichedWindowedCounts(batchEvents(raw), dim, dimKey, dimAttr)
         .select(unix_micros(col("window_start")).as("window_start_us"),
           col("segment"), col("n_events"), col("value_cents")),
@@ -389,7 +378,7 @@ object EventStream {
   def runSessionizeOnce(spark: SparkSession, eventsPath: String,
                         gapMs: Long, delayMs: Long): DataFrame = {
     import spark.implicits._
-    val landing = stageLanding(eventsPath)
+    val landing = stageLanding(spark, eventsPath)
     // NOT the no-data-batch skip: the event-time TIMEOUT fires in the
     // trailing no-data micro-batch — skipping it would suppress every
     // final-session emission (the one lifecycle whose output DEPENDS on
@@ -397,7 +386,7 @@ object EventStream {
     // the no-data flag.
     graft.Sessions.withConf(spark, boundedLifecycleConfs
       .filterNot(_._1 == "spark.sql.streaming.noDataMicroBatches.enabled"): _*) {
-      val raw = spark.readStream.schema(rawEventSchema(spark, landing.getAbsolutePath)).parquet(landing.getAbsolutePath)
+      val raw = spark.readStream.schema(rawEventSchema(spark, landing)).parquet(landing)
       val ev = batchEvents(raw)
         .withColumn("value", round(col("value") * 100))
         .select("event_id", "ts", "user_id", "event_type", "value")

@@ -652,12 +652,14 @@ object NearDupStream {
     withStagedParityRun(spark, docsPath, nBatches = 2)(
       runNearDupStreamOnce(spark, _, _, _, _, maxDist))
 
-  /** Stage `docsPath` as `nBatches` parity landing files under
-    * `root/landing` (batch b = doc_id % nBatches, strictly increasing
+  /** Stage `docsPath` as `nBatches` parity landing files `b<k>.parquet`
+    * in `landing` (batch b = doc_id % nBatches, strictly increasing
     * mtimes — the file source's oldest-first order then makes batch
     * order = parity order). One pass over documents writes all parity
-    * parts (partitionBy drops the partition column, leaving exactly
-    * docSchema); an mtime-set failure ABORTS (a silently unset mtime
+    * parts under `landing/_parts` (partitionBy drops the partition
+    * column, leaving exactly docSchema), each part is renamed into
+    * place on `landing`'s Hadoop filesystem, and `_parts` is deleted; an
+    * mtime that does not read back as set ABORTS (a silently unset mtime
     * would invert batch order — the determinism contract the oracle's
     * parity split relies on), and a parity class with no documents
     * simply lands no file. Every harness that drains a near-dup stream
@@ -673,53 +675,45 @@ object NearDupStream {
     * with a normal partitioned write (one DIRECTORY per batch) and feeds
     * the source directory-at-a-time instead. */
   private[graft] def stageParityLanding(spark: SparkSession, docsPath: String,
-                                        root: java.io.File, nBatches: Int): java.io.File = {
-    val landing = new java.io.File(root, "landing"); landing.mkdirs()
-    val docs = spark.read.parquet(docsPath).select(col("doc_id"), col("text"))
+                                        landing: Path, nBatches: Int): Unit = {
+    val fs = graft.Fs.of(spark, landing)
+    val parts = new Path(landing, "_parts")
     val t0 = 1700000000000L // any fixed base; only the ORDER matters
-    val stage = new java.io.File(root, "stage")
-    docs.withColumn("b", col("doc_id") % nBatches)
-      .coalesce(1).write.mode("overwrite").partitionBy("b")
-      .parquet(stage.getAbsolutePath)
+    spark.read.parquet(docsPath).select(col("doc_id"), col("text"))
+      .withColumn("b", col("doc_id") % nBatches)
+      .coalesce(1).write.partitionBy("b").parquet(parts.toString)
     (0 until nBatches).foreach { b =>
-      val dir = new java.io.File(stage, s"b=$b")
-      if (dir.isDirectory) {
-        val part = dir.listFiles()
+      val dir = new Path(parts, s"b=$b")
+      if (fs.exists(dir)) {
+        val part = fs.listStatus(dir).map(_.getPath)
           .filter(_.getName.endsWith(".parquet")).head
-        val target = new java.io.File(landing, s"b$b.parquet")
-        java.nio.file.Files.move(part.toPath, target.toPath)
-        require(target.setLastModified(t0 + b * 60000L),
-          s"setLastModified failed on $target; batch order would be " +
+        val target = new Path(landing, s"b$b.parquet")
+        val mtime = t0 + b * 60000L
+        if (!fs.rename(part, target))
+          throw new IllegalStateException(s"rename failed: $part -> $target")
+        fs.setTimes(target, mtime, -1)
+        require(fs.getFileStatus(target).getModificationTime == mtime,
+          s"setTimes failed on $target; batch order would be " +
             "nondeterministic — refusing to run the gate")
       }
     }
-    landing
+    fs.delete(parts, true)
   }
 
-  /** Session-lifetime memo of staged parity landings, keyed by
-    * (docsPath, nBatches): every gate RUN needs a fresh
-    * admitted/store/checkpoint root, but
-    * the staged LANDING (docs read + 1-task parity write) is a pure
-    * function of the input table, and Bench re-pays it on every pass of
-    * every near-dup row (~0.3 s × ~12 stagings per bench run at sf0.1).
-    * The memo stages once per key into a JVM-temp template dir and each
-    * run hardlink-or-copies the few landing files into its own root,
-    * re-asserting the parity mtimes. Assumes the docs table is immutable
-    * within the session (the same posture as [[graft.Caches.memo]]'s
-    * plan-keyed counts); templates are deleted on JVM exit. */
-  private val stagedTemplates =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), java.io.File]()
-
+  /** The staged parity landing of `docsPath` as a template: every gate
+    * RUN needs a fresh admitted/store/checkpoint root, but the staged
+    * LANDING (docs read + 1-task parity write) is a pure function of the
+    * input table, and Bench re-pays it on every pass of every near-dup
+    * row (~0.3 s × ~12 stagings per bench run at sf0.1). The template is
+    * a [[graft.Fs.derived]] copy of the docs files, rebuilt when they
+    * change, and sits on the ephemeral volume beside the run roots, so
+    * each run hardlinks its few landing files ([[landingFromTemplate]]). */
   private def stagedTemplate(spark: SparkSession, docsPath: String,
                              nBatches: Int): java.io.File =
-    stagedTemplates.computeIfAbsent((docsPath, nBatches), { _ =>
-      val tmplRoot = graft.Fs.ephemeralDir("graft_nd_staged_tmpl_")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        graft.Fs.deleteRecursively(tmplRoot)))
-      stageParityLanding(spark, docsPath, tmplRoot, nBatches)
-    })
+    new java.io.File(graft.Fs.derived(spark, s"nd_parity_$nBatches", Seq(docsPath))(
+      stageParityLanding(spark, docsPath, _, nBatches)).toUri)
 
-  /** Materialize the memoized template into `root/landing` for one run:
+  /** Materialize the stored template into `root/landing` for one run:
     * hardlink where the filesystem allows (same temp volume — O(1) per
     * file), copy otherwise, and re-assert each file's staged mtime (the
     * batch-order contract; link/copy preserves source mtimes on Linux
@@ -735,7 +729,7 @@ object NearDupStream {
           java.nio.file.StandardCopyOption.COPY_ATTRIBUTES)
       }
       // ALIASING CAVEAT: on the hardlink path tgt and f share one inode,
-      // so this setLastModified writes through to the memoized template
+      // so this setLastModified writes through to the stored template
       // too. Today it re-asserts the template's OWN value (benign, and
       // the assert is load-bearing — see the require) — but if a future
       // change ever needs per-run mtimes diverging from the template's,
@@ -748,8 +742,8 @@ object NearDupStream {
     landing
   }
 
-  /** Stage the parity landing (see [[stageParityLanding]], memoized per
-    * (docsPath, nBatches) via [[stagedTemplate]]) under a temp root, run
+  /** Stage the parity landing (see [[stageParityLanding]], kept per
+    * docs fingerprint by [[stagedTemplate]]) under a temp root, run
     * `body(landing, admitted, store, checkpoint)` — the lifecycle under
     * test, over dirs under that root — and hand back the admitted (id,
     * simhash) table as a local batch frame (the memory-sink-style gate

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.Sessions
+import org.apache.hadoop.fs.Path
 
 /** LONG-LIVED-STREAM SOAK for the bounded-store 64-bit near-dup
   * lifecycle (r15 verdict item 3): the gates drain 2-3 batches, which
@@ -49,15 +50,17 @@ object NearDupSoakProbe {
     val storeBound = capacity + 2 * maxBatchRows
     val root = java.nio.file.Files.createTempDirectory("nd64soak_").toFile
     try {
-      val staged = graft.streaming.NearDupStream
-        .stageParityLanding(spark, docsPath, root, nBatches)
+      val staged = new Path(new java.io.File(root, "staged").toURI)
+      val fs = graft.Fs.of(spark, staged)
+      graft.streaming.NearDupStream.stageParityLanding(spark, docsPath, staged, nBatches)
       // reveal progressively from a side dir: stageParityLanding wrote
       // b0..b(N-1) into `staged`; the live landing starts empty
       val landing = new java.io.File(root, "live"); landing.mkdirs()
       val admittedDir = new java.io.File(root, "admitted").getAbsolutePath
       val storeDir = new java.io.File(root, "store").getAbsolutePath
       val ckpt = new java.io.File(root, "ckpt").getAbsolutePath
-      val files = staged.listFiles().sortBy(_.lastModified())
+      val files = fs.listStatus(staged).filter(_.getPath.getName.endsWith(".parquet"))
+        .sortBy(_.getModificationTime).map(_.getPath)
       // the nBatches>=segments pre-check is necessary but NOT sufficient
       // (r16 advice): stageParityLanding lands NO file for an empty
       // parity class, so the STAGED count can still fall below
@@ -76,9 +79,9 @@ object NearDupSoakProbe {
       for (seg <- 1 to segments) {
         val upto = seg * files.length / segments
         files.slice(drained, upto).foreach { f =>
-          val tgt = new java.io.File(landing, f.getName)
-          java.nio.file.Files.move(f.toPath, tgt.toPath)
-          // staging mtimes survive the move; order stays parity order
+          val tgt = new Path(new Path(landing.toURI), f.getName)
+          require(fs.rename(f, tgt), s"rename failed: $f -> $tgt")
+          // staging mtimes survive the rename; order stays parity order
         }
         drained = upto
         val t0 = System.nanoTime()

@@ -36,8 +36,8 @@ class PlanInvariantsSpec extends SparkSpec {
       assert(scan.partitionFilters.mkString.contains("dynamicpruning"),
         s"no DPP filter on the fact scan: ${scan.partitionFilters}")
       // keep-years = {1996, 1999}; the fact side must read exactly those
-      val total = new java.io.File(registry.RelationalQueries.partitionedOrdersDir(spark, dir))
-        .listFiles().count(_.getName.startsWith("o_year="))
+      val byYear = new org.apache.hadoop.fs.Path(registry.RelationalQueries.partitionedOrdersDir(spark, dir))
+      val total = Fs.of(spark, byYear).listStatus(byYear).count(_.getPath.getName.startsWith("o_year="))
       val pruned = scan.metrics.get("numPartitions").map(_.value).getOrElse(-1L)
       assert(pruned == 2 && pruned < total,
         s"expected 2 of $total partitions scanned, got $pruned")

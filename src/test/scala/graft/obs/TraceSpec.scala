@@ -3,7 +3,8 @@ package graft.obs
 import java.sql.Timestamp
 
 import org.apache.spark.graft.{Bus, Listeners}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionEnd
 import org.apache.spark.sql.functions.col
 import graft.SparkSpec
 import graft.pipeline.WeatherPipeline
@@ -31,14 +32,25 @@ class TraceSpec extends SparkSpec {
 
   test("events still queued when the body returns are counted") {
     // registered first on the same queue, this listener delays every
-    // job-end delivery to the trace until well after the body returns
+    // job-end and SQL-end delivery to the trace until well after the
+    // body returns
     val slow = new SparkListener {
       override def onJobEnd(e: SparkListenerJobEnd): Unit = Thread.sleep(500)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionEnd => Thread.sleep(300)
+        case _ =>
+      }
     }
     spark.sparkContext.addSparkListener(slow)
     try {
-      val (_, r) = Trace.around(spark)(spark.range(0, 100, 1, 2).count())
-      assert(r.jobs >= 1 && r.actions == 1, r.summary)
+      def traced(): Trace.Report = Trace.around(spark)(spark.range(0, 100, 1, 2).count())._2
+      val alone = traced()
+      assert(alone.jobs >= 1 && alone.actions == 1, alone.summary)
+      // the events of an action that ended before the trace began are
+      // still queued behind `slow` when it attaches: none is the body's
+      spark.range(0, 100, 1, 2).count()
+      val after = traced()
+      assert(after.actions == 1 && after.jobs == alone.jobs, after.summary)
     } finally spark.sparkContext.removeSparkListener(slow)
   }
 

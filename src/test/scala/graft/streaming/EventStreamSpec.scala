@@ -266,9 +266,12 @@ class EventStreamSpec extends SparkSpec {
     // the regenerated source differs in size: both copies must follow it
     val src = write(10L to 20L)
     assert(dedup(src) == (10L to 20L))
-    val copies = stageLanding(src.getAbsolutePath, "graft_events_dup_", copies = 2).listFiles()
-    assert(copies.length == 2)
-    copies.foreach(c => assert(java.nio.file.Files.mismatch(c.toPath, src.toPath) == -1, c))
+    val landing = new org.apache.hadoop.fs.Path(stageLanding(spark, src.getAbsolutePath, "events_dup", copies = 2))
+    try {
+      val copies = new java.io.File(landing.toUri).listFiles().filterNot(_.getName.startsWith("."))
+      assert(copies.length == 2)
+      copies.foreach(c => assert(java.nio.file.Files.mismatch(c.toPath, src.toPath) == -1, c))
+    } finally graft.Fs.of(spark, landing).delete(landing, true)
   }
 
   test("runSessionizeOnce: non-final sessions emit, finals gate on the watermark") {
