@@ -25,10 +25,10 @@ import graft.quality.Checks._
   * Airflow task chain becomes `ingest → stg → {dim, fct}`, gated by the
   * models' dbt tests declared as `quality.Checks` contracts
   * (`rawWeatherTests`, `dimLocationsTests`, `fctWeatherObservationsTests`).
-  * `runBatch` runs a batch as one wave of four concurrent actions: the
-  * raw write and the two mart writes into one stage dir, and one gate
-  * over all three contracts; the staged raw and marts are published only
-  * if all four succeeded, so a failing batch's raw rows never land. A
+  * `runBatch` runs a batch as one wave of three concurrent actions, the
+  * raw and mart writes into one stage dir, each observing its model's
+  * contract; the staged tables are published only if all three succeeded
+  * and every contract held, so a failing batch's raw rows never land. A
   * driver-held batch (the `runDaily` path) is one partition, run
   * interpreted, so each action is one task with no shuffle and no
   * generated code. Raw and the fact both partition by
@@ -261,22 +261,18 @@ object WeatherPipeline {
   }
 
   /** End-to-end batch run mirroring the DAG's task chain
-    * (dags/weatherstack_full_pipeline.py:172) as ONE wave of four
-    * concurrent actions, then a publish:
-    *
-    *  - the raw write, partitioned by `data_interval_start`;
-    *  - the gate: ONE `Checks.assertTiers` action over the source
-    *    contract (`raw_weather`, DAG step 4) and the mart contracts
-    *    (`dim_locations`, `fct_weather_observations`, step 6). If a
-    *    source check fails, the IllegalArgumentException names only the
-    *    failing `raw_weather.*` checks, because the DAG never runs the
-    *    mart tests then; otherwise it names every failing mart check,
-    *    sorted;
-    *  - the dim write and the fact write, partitioned like raw.
-    *
-    * The three tables are written into one stage under `outDir`, each at
-    * its live path. The wave waits for all four. Only if all four
-    * succeeded are raw, dim, then fct published (write–audit–publish on
+    * (dags/weatherstack_full_pipeline.py:172) as ONE wave of three
+    * concurrent writes into one stage under `outDir`, each table at its
+    * live path: raw and the fact partitioned by `data_interval_start`,
+    * and the dim. Each write observes its model's checks over the rows it
+    * writes (`Checks.Observed`): the source contract (`raw_weather`, DAG
+    * step 4) and the mart contracts (`dim_locations`,
+    * `fct_weather_observations`, step 6). Once all three succeeded, the
+    * gate reads the observations (`Checks.assertObserved`): if a source check
+    * fails, the IllegalArgumentException names only the failing
+    * `raw_weather.*` checks, because the DAG never runs the mart tests
+    * then; otherwise it names every failing mart check, sorted. Only if
+    * it passes are raw, dim, then fct published (write–audit–publish on
     * the Hadoop `FileSystem` of `outDir`, `graft.Fs.commitTables`): the
     * dim replaces the live dim, and the staged interval of raw and of
     * the fact each replaces its live partition, leaving the other
@@ -285,8 +281,8 @@ object WeatherPipeline {
     * and a batch that fails the gate publishes nothing, raw included.
     * Stricter than the DAG by design: dbt lands raw in step 2 and
     * validates after; here the tests gate the PUBLISH, so a failing
-    * table never goes live. Otherwise the first error in wave order
-    * (raw, gate, dim, fct) is thrown with the others suppressed.
+    * table never goes live. If a write fails, no gate runs: the first
+    * error in wave order (raw, dim, fct) is thrown, the others suppressed.
     *
     * A batch whose ingest optimizes to a `LocalRelation` (the driver-
     * held payloads of `runDaily`) runs in a per-batch clone of the
@@ -298,9 +294,9 @@ object WeatherPipeline {
     * session turns artifact isolation off, as `graft.Sessions.build`
     * does; otherwise every clone's tasks get their own class loader and
     * recompile it. The batch's `raw` is that `LocalRelation`,
-    * coalesced to ONE partition and not cached: every aggregate,
-    * `Unique` check and `distinct` is then satisfied without an exchange
-    * and each action is a single task. The coalesce comes after
+    * coalesced to ONE partition and not cached: every aggregate and
+    * `distinct` is then satisfied without an exchange and each action
+    * is a single task. The coalesce comes after
     * `ingest`, not on the payload frame: over the payloads it would stop
     * `ConvertToLocalRelation` from folding `ingest` on the driver. Any
     * other batch (JSON landing files, a backfill) runs in the caller's
@@ -332,18 +328,17 @@ object WeatherPipeline {
     try {
       val stg = stgWeather(raw)
       val (dim, fct) = (dimLocations(stg), fctWeatherObservations(stg))
-      val tables = Seq(("raw/weather", raw, Some("data_interval_start")),
-        ("marts/dim_locations", dim, None),
-        ("marts/fct_weather_observations", fct, Some("data_interval_start")))
+      val rawChecks = new Checks.Observed("raw_weather", rawWeatherTests)
+      val dimChecks = new Checks.Observed("dim_locations", dimLocationsTests)
+      val fctChecks = new Checks.Observed("fct_weather_observations", fctWeatherObservationsTests)
+      val tables = Seq(("raw/weather", rawChecks.on(raw), Some("data_interval_start")),
+        ("marts/dim_locations", dimChecks.on(dim), None),
+        ("marts/fct_weather_observations", fctChecks.on(fct), Some("data_interval_start")))
       Fs.commitTables(fs, out, tables.map { case (t, _, part) => (t, part) }) { stage =>
-        val Seq(rawWrite, dimWrite, fctWrite) = tables.map { case (t, df, part) =>
+        inParallel(tables.map { case (t, df, part) =>
           () => df.write.partitionBy(part.toSeq: _*).parquet(new Path(stage, t).toString)
-        }
-        inParallel(rawWrite,
-          () => Checks.assertTiers(Seq(("raw_weather", raw, rawWeatherTests)),
-            Seq(("dim_locations", dim, dimLocationsTests),
-              ("fct_weather_observations", fct, fctWeatherObservationsTests))),
-          dimWrite, fctWrite)
+        }: _*)
+        Checks.assertObserved(Seq(rawChecks), Seq(dimChecks, fctChecks))
       }
       // a rename bypasses the writers' own refresh of frames cached over a table
       tables.foreach { case (t, _, _) => spark.catalog.refreshByPath(new Path(out, t).toString) }

@@ -1,6 +1,6 @@
 package graft.quality
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.ops.Relational
@@ -15,33 +15,45 @@ import graft.ops.Relational
   *   Checks.reportDf(df, checks)                  // (check, n_violations, passed)
   *   Checks.assertAll(("model", df, checks), ...)  // throw naming every failure
   *   Checks.assertTiers(sources, marts)           // ...of the first failing tier
+  *   val o = new Checks.Observed("model", checks)  // the same gate, riding on
+  *   o.on(df).write.parquet(p); Checks.assertObserved(Seq(o)) // a write
   *
   * Each check compiles to a violations DataFrame (the dbt "test query
-  * returns 0 rows" contract). Counting goes through `reportDf` only, so
-  * the report and the gate cannot disagree: every row-level check fuses
-  * into one conditional aggregate and each Unique adds one grouping
-  * branch; nothing reaches the driver but the counts.
+  * returns 0 rows" contract) and to one aggregate, its metric, 0 exactly
+  * when that frame is empty. `reportDf` fuses every row-level check into
+  * one conditional aggregate and adds one grouping branch per Unique;
+  * nothing reaches the driver but the counts. Both gates name their
+  * failures through [[requireFirstTier]].
   */
 object Checks {
 
   sealed trait Check {
     def name: String
     def violations(df: DataFrame): DataFrame
+    /** 0 exactly when [[violations]] is empty; an aggregate with no
+      * DISTINCT, so `Dataset.observe` accepts it. */
+    def metric: Column
   }
 
   /** A check stated as one row-level violation predicate: its violations
     * are the rows it holds for, and `reportDf` fuses every such check
-    * into ONE conditional aggregate pass. */
+    * into ONE conditional aggregate pass. Its metric counts them. */
   sealed trait RowCheck extends Check {
     def rowViolation: Column
     def violations(df: DataFrame): DataFrame = df.filter(rowViolation)
+    def metric: Column = coalesce(sum(when(rowViolation, 1L).otherwise(0L)), lit(0L))
   }
 
   /** dbt `unique` (composite keys allowed). Not a row predicate — its
-    * violation count is "number of duplicated key groups". */
+    * violation count is "number of duplicated key groups". Its metric,
+    * `count(1) - size(collect_set(struct(cols)))`, counts the rows past
+    * each key's first, NULL keys included. The set holds the frame's
+    * distinct keys, so observe it on a bounded frame: a pipeline batch
+    * has one key per city (a few on a `runDaily` day, 80k on a backfill). */
   final case class Unique(cols: Seq[String]) extends Check {
     val name = s"unique_${cols.mkString("_")}"
     def violations(df: DataFrame): DataFrame = Relational.duplicates(df, cols)
+    def metric: Column = count(lit(1)) - size(collect_set(struct(cols.map(col): _*)))
   }
 
   /** dbt `not_null`. */
@@ -80,13 +92,12 @@ object Checks {
     * its own aggregate branch, unioned — at scale the branches
     * parallelize and none reads more than its key columns. */
   def reportDf(df: DataFrame, checks: Seq[Check]): DataFrame = {
-    val fused = checks.collect { case c: RowCheck => (c.name, c.rowViolation) }
+    val fused = checks.collect { case c: RowCheck => c }
     val fusedDf =
       if (fused.isEmpty) Seq.empty[DataFrame]
       else Seq(
-        df.agg(array(fused.map { case (n, p) =>
-            struct(lit(n).as("check"),
-              coalesce(sum(when(p, 1L).otherwise(0L)), lit(0L)).as("n_violations"))
+        df.agg(array(fused.map { c =>
+            struct(lit(c.name).as("check"), c.metric.as("n_violations"))
           }: _*).as("cs"))
           .select(explode(col("cs")).as("kv"))
           .select(col("kv.check").as("check"), col("kv.n_violations").as("n_violations")))
@@ -114,10 +125,7 @@ object Checks {
     * Every tier's [[reportDf]]s are unioned, coalesced to one partition
     * and collected in ONE action. Every branch ends in a global
     * aggregate, so the coalesce merges only the branches' one-row
-    * final tasks into one task. The IllegalArgumentException names the
-    * failing `<model>.<check>`s of the FIRST failing tier only, sorted:
-    * the DAG never runs a later tier's tests once an earlier tier
-    * failed. */
+    * final tasks into one task. Throws as [[requireFirstTier]] does. */
   def assertTiers(tiers: Seq[Contract]*): Unit = {
     val failing = tiers.zipWithIndex
       .flatMap { case (tier, i) => tier.map { case (model, df, checks) =>
@@ -126,8 +134,45 @@ object Checks {
       .reduce(_.unionAll(_))
       .coalesce(1)
       .collect().map(r => (r.getInt(0), r.getString(1)))
-    val firstTier = failing.map(_._1).minOption
-    val named = failing.collect { case (i, name) if firstTier.contains(i) => name }.sorted
+    requireFirstTier(tiers.indices.map(i => failing.collect { case (`i`, name) => name }))
+  }
+
+  /** A model's contract carried by a write instead of a gate action:
+    * [[on]] adds every check's metric to the written frame as ONE
+    * `Dataset.observe`, computed in the write's own scan. Observe above
+    * any shuffle, in the result stage, which alone counts each partition
+    * once under task retry. Each instance has its own unnamed
+    * `Observation`, so concurrent runs in one session stay apart; use it
+    * for one action. */
+  final class Observed(val model: String, checks: Seq[Check]) {
+    private val observation = Observation()
+
+    def on(df: DataFrame): DataFrame = {
+      val Seq(first, more @ _*) = checks.map(c => c.metric.as(c.name))
+      df.observe(observation, first, more: _*)
+    }
+
+    /** Each check's name and metric, in contract order. Blocks until the
+      * action over [[on]]'s frame has succeeded, and forever if it
+      * failed, so call it only once that action returned. */
+    def counts: Seq[(String, Long)] = {
+      val observed = observation.get
+      checks.map(c => c.name -> observed(c.name).asInstanceOf[Long])
+    }
+  }
+
+  /** [[assertTiers]] over observed contracts, once their actions have
+    * succeeded: the same tier rule and the same message. */
+  def assertObserved(tiers: Seq[Observed]*): Unit =
+    requireFirstTier(tiers.map(_.flatMap(o =>
+      o.counts.collect { case (check, n) if n != 0L => s"${o.model}.$check" })))
+
+  /** The gate's verdict over the failing `<model>.<check>`s of each tier,
+    * tiers in DAG order: the IllegalArgumentException names the FIRST
+    * failing tier's checks only, sorted, because the DAG never runs a
+    * later tier's tests once an earlier tier failed. */
+  private def requireFirstTier(failing: Seq[Seq[String]]): Unit = {
+    val named = failing.find(_.nonEmpty).getOrElse(Nil).sorted
     require(named.isEmpty, s"data-quality check failed: ${named.mkString(", ")}")
   }
 

@@ -5,7 +5,8 @@ import java.sql.Timestamp
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan,
+  WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -125,6 +126,14 @@ class WeatherPipelineSpec extends SparkSpec {
     case other => other.children.map(codegenStages).sum
   }
 
+  /** The files every file scan in a plan reads, through adaptive wrappers. */
+  private def filesRead(p: SparkPlan): Seq[String] = p match {
+    case f: FileSourceScanExec => f.relation.location.inputFiles.toSeq
+    case a: AdaptiveSparkPlanExec => filesRead(a.executedPlan)
+    case q: QueryStageExec => filesRead(q.plan)
+    case other => other.children.flatMap(filesRead)
+  }
+
   test("end-to-end: JSON landing files → permissive source → pipeline → partitioned marts") {
     import graft.sources.IO
     import org.apache.spark.sql.types._
@@ -145,7 +154,7 @@ class WeatherPipelineSpec extends SparkSpec {
       def rows(root: String) = spark.read.parquet(s"$dir/$root/$t").collect().toSet
       assert(rows("held") == rows("wh"), t)
     }
-    assert(heldPlans.size == 4 && heldPlans.forall(codegenStages(_) == 0),
+    assert(heldPlans.size == 3 && heldPlans.forall(codegenStages(_) == 0),
       heldPlans.mkString("\n"))
     assert(filePlans.exists(codegenStages(_) > 0), filePlans.mkString("\n"))
   }
@@ -353,7 +362,7 @@ class WeatherPipelineSpec extends SparkSpec {
     assert(Seq(dimBefore, fctBefore, rawBefore).forall(_.exists(_.endsWith(".parquet"))))
     assert(rawRowsBefore.size == 4)
     // the same interval again, failing the source tier: its raw rows and
-    // marts were staged beside the gate, and none may replace the live ones
+    // marts were staged before the gate read them, and none may replace the live ones
     val e = intercept[IllegalArgumentException](WeatherPipeline.runBatch(dupParis, t0, now, dir))
     assert(e.getMessage.contains("raw_weather.unique_id"))
     assert(names(s"$dir/marts/dim_locations") == dimBefore)
@@ -371,11 +380,14 @@ class WeatherPipelineSpec extends SparkSpec {
     // a regular file at the stage root fails every staged write
     val dir = java.nio.file.Files.createTempDirectory("wp-rawfail").toString
     notADir(s"$dir/_stage")
-    // the gate fails too (duplicate raw id), in the same wave as the write
+    // the batch would fail the gate too (duplicate raw id), but the gate
+    // reads the writes' observations, and no write succeeded
     val e = intercept[Exception](WeatherPipeline.runBatch(dupParis, t0, now, dir))
-    assert(!e.getMessage.contains("data-quality check failed"), e.getMessage)
-    assert(e.getSuppressed.exists(_.getMessage.contains("raw_weather.unique_id")))
-    assert(!new java.io.File(s"$dir/marts").exists())
+    assert(!e.isInstanceOf[IllegalArgumentException], e)
+    assert((e +: e.getSuppressed.toSeq).forall(x =>
+      !String.valueOf(x.getMessage).contains("data-quality check failed")), e)
+    assert(new java.io.File(dir).list().toSeq == Seq("_stage"))
+    assert(new java.io.File(s"$dir/_stage").isFile)
     // a passing batch whose live raw dir is a regular file fails at the
     // raw publish, which comes first: no mart is published either
     val dir2 = java.nio.file.Files.createTempDirectory("wp-rawpublish").toString
@@ -385,27 +397,31 @@ class WeatherPipelineSpec extends SparkSpec {
     assert(!new java.io.File(s"$dir2/_stage").exists())
   }
 
+  private val threeCityNames = Seq("Paris", "London", "Tokyo")
+
+  /** A fetcher that serves [[threeCityNames]]. */
+  private def threeCities = new WeatherFetcher.FakeFetcher(Map(
+    "Paris" -> payload("Paris", "France", 18, "Partly sunny"),
+    "London" -> payload("London", "United Kingdom", -3, "light rain"),
+    "Tokyo" -> payload("Tokyo", "Japan", 35, "Overcast Clouds")))
+
   test("a runDaily day is single-task jobs with no shuffle and one file per mart; " +
     "a file-sourced batch keeps its scan parallelism") {
     import org.apache.spark.metrics.source.CodegenMetrics
-    import graft.pipeline.WeatherFetcher.FakeFetcher
     val dir = java.nio.file.Files.createTempDirectory("wp-shape").toString
-    val fetcher = new FakeFetcher(Map(
-      "Paris" -> payload("Paris", "France", 18, "Partly sunny"),
-      "London" -> payload("London", "United Kingdom", -3, "light rain"),
-      "Tokyo" -> payload("Tokyo", "Japan", 35, "Overcast Clouds")))
-    val cities = Seq("Paris", "London", "Tokyo")
-    WeatherPipeline.runDaily(spark, fetcher, cities, t0, now, dir) // warm-up day
+    val fetcher = threeCities
+    WeatherPipeline.runDaily(spark, fetcher, threeCityNames, t0, now, dir) // warm-up day
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // the next day, with its own interval and `now` literals
     val (_, r) = graft.obs.Trace.around(spark) {
-      WeatherPipeline.runDaily(spark, fetcher, cities, Timestamp.valueOf("2024-06-03 08:30:00"),
+      WeatherPipeline.runDaily(spark, fetcher, threeCityNames, Timestamp.valueOf("2024-06-03 08:30:00"),
         Timestamp.valueOf("2024-06-03 09:00:00"), dir)
     }
-    // raw write, gate, dim write, fct write; the actions of the batch's
-    // cloned session reach a listener registered on the caller's
-    assert(r.actions == 4, r.summary)
-    assert(r.jobs <= 4 && r.tasks == r.jobs && r.shuffleBytes == 0, r.summary)
+    // raw write, dim write, fct write, each carrying its checks; the
+    // actions of the batch's cloned session reach a listener registered
+    // on the caller's
+    assert(r.actions == 3, r.summary)
+    assert(r.jobs <= 3 && r.tasks == r.jobs && r.shuffleBytes == 0, r.summary)
     assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
       "a warm day compiled generated code")
     def dataFiles(d: String): Int =
@@ -425,6 +441,56 @@ class WeatherPipelineSpec extends SparkSpec {
       .filter(_.getName.startsWith("data_interval_start="))
     assert(intervals.length == 1 && dataFiles(intervals.head.getPath) >= 2)
     assert(spark.read.parquet(s"$dir/file/marts/fct_weather_observations").count() == 3)
+  }
+
+  test("a warm runDaily day is O(day): the same jobs and tasks after 2 and after 30 " +
+    "intervals, and no read of an earlier interval's raw or fct file") {
+    val dir = java.nio.file.Files.createTempDirectory("wp-oday").toString
+    def day(i: Int): Unit = {
+      val start = new Timestamp(t0.getTime + i * 86400000L)
+      WeatherPipeline.runDaily(spark, threeCities, threeCityNames, start,
+        new Timestamp(start.getTime + 1800000L), dir)
+    }
+    /** The trace of day `i` and the files its actions read. */
+    def traced(i: Int): (graft.obs.Trace.Report, Seq[String]) = {
+      var report: graft.obs.Trace.Report = null
+      val plans = executedPlans { report = graft.obs.Trace.around(spark)(day(i))._2 }
+      (report, plans.flatMap(filesRead))
+    }
+    (0 until 2).foreach(day)
+    val (afterTwo, readAfterTwo) = traced(2)
+    (3 until 30).foreach(day)
+    val (afterThirty, readAfterThirty) = traced(30)
+    assert(new java.io.File(s"$dir/raw/weather").list().count(_.startsWith("data_interval_start=")) == 31)
+    assert((afterTwo.jobs, afterTwo.tasks) == (afterThirty.jobs, afterThirty.tasks),
+      s"${afterTwo.summary} / ${afterThirty.summary}")
+    val history = (readAfterTwo ++ readAfterThirty).filter(f => f.contains(s"$dir/raw") ||
+      f.contains(s"$dir/marts"))
+    assert(history.isEmpty, history.mkString("\n"))
+  }
+
+  test("the file-sourced path: a raw id duplicated across landing files fails the gate " +
+    "and publishes nothing; a clean multi-file batch passes") {
+    val dir = java.nio.file.Files.createTempDirectory("wp-files").toString
+    /** Lands each frame as one JSON file under `root` and reads them back,
+      * one scan partition per file. */
+    def landFiles(root: String, files: DataFrame*): DataFrame = {
+      files.foreach(_.coalesce(1).write.mode("append").json(root))
+      val landed = spark.read.schema("city STRING, raw_json STRING").json(root)
+      assert(landed.rdd.getNumPartitions == files.size)
+      landed
+    }
+    val clean = landFiles(s"$dir/clean", payloads.limit(2), payloads.filter($"city" === "Tokyo"))
+    WeatherPipeline.runBatch(clean, t0, now, s"$dir/clean_out")
+    assert(spark.read.parquet(s"$dir/clean_out/raw/weather").count() == 3)
+    assert(spark.read.parquet(s"$dir/clean_out/marts/fct_weather_observations").count() == 3)
+    // each file's rows are unique on their own; the two Paris rows
+    // collide only once the partitions' observed keys are merged
+    def paris(temp: Int) = Seq(("Paris", payload("Paris", "France", temp, "sunny"))).toDF("city", "raw_json")
+    val dup = landFiles(s"$dir/dup", paris(18).union(payloads.filter($"city" === "London")), paris(19))
+    val e = intercept[IllegalArgumentException](WeatherPipeline.runBatch(dup, t0, now, s"$dir/dup_out"))
+    assert(failedChecks(e) == Seq("raw_weather.unique_id"), e.getMessage)
+    assert(Option(new java.io.File(s"$dir/dup_out").list()).forall(_.isEmpty))
   }
 
   test("a day on which every city is skipped publishes nothing") {

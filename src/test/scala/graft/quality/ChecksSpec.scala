@@ -71,6 +71,54 @@ class ChecksSpec extends SparkSpec {
     Checks.assertTiers(Seq(("src", ids, Seq(NotNull("id")))), Seq(("m", df.limit(2), contract)))
   }
 
+  /** `checks` observed on one write of `df`, which has run. */
+  private def observedWrite(model: String, df: org.apache.spark.sql.DataFrame,
+                            checks: Seq[Check]): Observed = {
+    val o = new Observed(model, checks)
+    o.on(df).write.format("noop").mode("overwrite").save()
+    o
+  }
+
+  private def observed(df: org.apache.spark.sql.DataFrame, checks: Seq[Check]): Map[String, Long] =
+    observedWrite("t", df, checks).counts.toMap
+
+  test("each check's observed metric is 0 exactly when reportDf counts no violation") {
+    val keys = Seq((Some(1L), "a"), (Some(1L), "b"), (None, "a"), (None, "a")).toDF("id", "city")
+    val uniques = Seq(Unique(Seq("id")), Unique(Seq("id", "city")), Unique(Seq("city")))
+    val onePerPartition = spark.createDataFrame(
+      spark.sparkContext.parallelize(df.collect().toSeq, 4), df.schema)
+    assert(onePerPartition.rdd.glom().collect().map(_.length).toSeq == Seq(1, 1, 1, 1))
+    val cases = Seq(
+      (df, contract),
+      (df.limit(2), contract),                                    // clean
+      (df.limit(0), contract),                                    // empty
+      (keys, uniques),                                            // duplicated only by a NULL key
+      (keys.limit(3), uniques),                                   // one NULL key
+      (keys.filter($"id".isNotNull), uniques),                    // composite key unique
+      (onePerPartition, contract))                                // id 3 in two partitions
+    for ((frame, checks) <- cases) {
+      val reported = counts(frame, checks).map { case (n, v, _) => n -> (v != 0L) }.toMap
+      assert(observed(frame, checks).map { case (n, v) => n -> (v != 0L) } == reported,
+        checks.map(_.name))
+    }
+    // the rows beyond the first of each key
+    assert(observed(keys, uniques) == Map("unique_id" -> 2L, "unique_id_city" -> 1L,
+      "unique_city" -> 2L))
+    assert(observed(keys.limit(3), uniques) == Map("unique_id" -> 1L, "unique_id_city" -> 0L,
+      "unique_city" -> 1L))
+  }
+
+  test("the observed gate names the same checks as assertTiers over the same tiers") {
+    val ids = Seq(1L, 1L).toDF("id")
+    def message(gate: => Unit): String = intercept[IllegalArgumentException](gate).getMessage
+    for (sources <- Seq(Seq(("src", ids, Seq(Unique(Seq("id"))))), Seq(("src", ids, Seq(NotNull("id")))))) {
+      val marts = Seq(("m", df, contract), ("clean", df.limit(2), contract))
+      val Seq(src, mts) = Seq(sources, marts).map(_.map((observedWrite _).tupled))
+      assert(message(Checks.assertObserved(src, mts)) == message(Checks.assertTiers(sources, marts)))
+    }
+    Checks.assertObserved(Seq(observedWrite("clean", df.limit(2), contract)))
+  }
+
   test("profile reports rows, nulls, distincts, and stringified min/max per column") {
     import org.apache.spark.sql.functions.col
     val data = Seq((1L, Some("a")), (2L, None), (3L, Some("a")), (4L, Some("b")))

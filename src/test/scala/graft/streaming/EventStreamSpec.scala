@@ -292,10 +292,11 @@ class EventStreamSpec extends SparkSpec {
     // parquet write made a directory — point at one part file inside it
     val part = new java.io.File(s"$dir/events.parquet").listFiles()
       .filter(_.getName.endsWith(".parquet")).head
-    val out = EventStream.runSessionizeOnce(spark, part.getAbsolutePath,
+    val out = try EventStream.runSessionizeOnce(spark, part.getAbsolutePath,
         gapMs = 10 * s, delayMs = 100 * s)
       .orderBy("user_id", "start_ms")
       .as[(Long, Long, Long, Long, Long)].collect().toSeq
+    finally graft.Fs.dropDerived(spark, Seq(part.getAbsolutePath)) // the landing outlives no source
     // watermark = 500s − 100s = 400s. Session A closed in-batch; session
     // B final but 60s + 10s < 400s → timed out and emitted; user 2's
     // session ends at 500s → 510s > 400s → held in state.

@@ -104,16 +104,14 @@ class NearDup64StreamSpec extends NearDupRunnerScenarios {
   test("evict gate harness: FIFO eviction fires (re-admission) and the trim conditional holds") {
     def runGate(rows: Seq[(Long, String)]): Set[Long] = {
       val dir = java.nio.file.Files.createTempDirectory("nd64-evict-fix").toFile
+      val p = new java.io.File(dir, "documents.parquet").getAbsolutePath
       try {
-        val p = new java.io.File(dir, "documents.parquet").getAbsolutePath
         rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(p)
         NearDupStream.runDocNearDup64EvictGateOnce(spark, p, maxDist = 3)
           .select($"id").as[Long].collect().toSet
       } finally {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-        }
-        rm(dir)
+        graft.Fs.dropDerived(spark, Seq(p)) // the parity template outlives no source
+        graft.Fs.deleteRecursively(dir)
       }
     }
     // Branch 1 — eviction FIRES: n=5 → capacity 1; batch 1 (ids 1,4,7)
