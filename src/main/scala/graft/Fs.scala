@@ -103,9 +103,9 @@ object Fs {
 
   /** `p` if it is a file, else every file under it. A recursive
     * `listStatus`, not `listFiles`: on the local filesystem the located
-    * statuses of `listFiles` load each file's permissions, by forking a
-    * process per file (3.4 ms a file, against 0.04 ms for a `listStatus`,
-    * on a 4-core x86 host with Hadoop 3.4). */
+    * statuses of `listFiles` load each file's permissions, by forking an
+    * `ls` per file (3.4 ms a file, against 0.04 ms for a `listStatus`,
+    * on a 4-core x86 host with Hadoop 3.4; `LocalFs` spares only writes). */
   private def filesUnder(fs: FileSystem, p: Path): Seq[FileStatus] =
     fs.listStatus(p).toSeq.flatMap(st => if (st.isDirectory) filesUnder(fs, st.getPath) else Seq(st))
 

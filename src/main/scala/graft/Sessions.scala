@@ -59,6 +59,11 @@ object Sessions {
       // tasks under a class loader of its own, so code generated in its
       // tasks is compiled again for every clone
       .config("spark.sql.artifact.isolation.enabled", "false")
+      // without libhadoop, the local FS forks a `chmod` per file and dir
+      // it creates: 33 processes a warm runDaily day. graft.LocalFs makes
+      // it a system call. Hadoop caches the first file: FS of a JVM for
+      // every conf, so every FS here comes from the session's conf
+      .config("spark.hadoop.fs.file.impl", classOf[LocalFs].getName)
       // SCRATCH placement: spark.local.dir —
       // shuffle files, broadcast blocks, disk-spilled cache — defaults
       // to /tmp, which is DISK-backed on this host, so every shuffle

@@ -293,7 +293,9 @@ object WeatherPipeline {
     * generate in tasks is compiled once per JVM only if the caller's
     * session turns artifact isolation off, as `graft.Sessions.build`
     * does; otherwise every clone's tasks get their own class loader and
-    * recompile it. The batch's `raw` is that `LocalRelation`,
+    * recompile it. Such a session also keeps Hadoop's forked `chmod`
+    * per file and dir the writes create (`graft.LocalFs` makes it a
+    * system call). The batch's `raw` is that `LocalRelation`,
     * coalesced to ONE partition and not cached: every aggregate and
     * `distinct` is then satisfied without an exchange and each action
     * is a single task. The coalesce comes after

@@ -443,6 +443,36 @@ class WeatherPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$dir/file/marts/fct_weather_observations").count() == 3)
   }
 
+  test("a warm runDaily day starts no OS process") {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.{RecordedEvent, RecordingFile}
+    // the recording sees the whole JVM: keep the starts made by the
+    // pipeline or the local filesystem, and run no stream beside the day
+    def ours(e: RecordedEvent): Boolean = Option(e.getStackTrace).exists(_.getFrames.asScala.exists { f =>
+      val c = f.getMethod.getType.getName
+      c.startsWith("graft.") || c.startsWith("org.apache.hadoop.fs.RawLocalFileSystem")
+    })
+    val dir = java.nio.file.Files.createTempDirectory("wp-procs").toString
+    val recording = new Recording()
+    val jfr = java.nio.file.Files.createTempFile("wp-procs", ".jfr")
+    try {
+      WeatherPipeline.runDaily(spark, threeCities, threeCityNames, t0, now, dir) // warm-up day
+      assert(spark.streams.active.isEmpty, spark.streams.active.map(_.name).mkString(", "))
+      recording.enable("jdk.ProcessStart").withStackTrace()
+      recording.start()
+      WeatherPipeline.runDaily(spark, threeCities, threeCityNames, Timestamp.valueOf("2024-06-03 08:30:00"),
+        Timestamp.valueOf("2024-06-03 09:00:00"), dir)
+      recording.stop()
+      recording.dump(jfr)
+      val commands = RecordingFile.readAllEvents(jfr).asScala.filter(ours).map(_.getString("command"))
+      assert(commands.isEmpty, commands.mkString("\n"))
+    } finally {
+      recording.close()
+      java.nio.file.Files.delete(jfr)
+      graft.Fs.deleteRecursively(new java.io.File(dir))
+    }
+  }
+
   test("a warm runDaily day is O(day): the same jobs and tasks after 2 and after 30 " +
     "intervals, and no read of an earlier interval's raw or fct file") {
     val dir = java.nio.file.Files.createTempDirectory("wp-oday").toString
