@@ -22,18 +22,9 @@ import graft.quality.Checks._
   * `dbt/models/marts/` (dim_locations.sql, fct_weather_observations.sql).
   *
   * Orchestration collapses to function composition (SURVEY.md §3.1): the
-  * Airflow task chain becomes `ingest → stg → {dim, fct}`, gated by the
-  * models' dbt tests declared as `quality.Checks` contracts
-  * (`rawWeatherTests`, `dimLocationsTests`, `fctWeatherObservationsTests`).
-  * `runBatch` runs a batch as one wave of three concurrent actions, the
-  * raw and mart writes into one stage dir, each observing its model's
-  * contract; the staged tables are published only if all three succeeded
-  * and every contract held, so a failing batch's raw rows never land. A
-  * driver-held batch (the `runDaily` path) is one partition, run
-  * interpreted, so each action is one task with no shuffle and no
-  * generated code. Raw and the fact both partition by
-  * `data_interval_start`, so a run replaces exactly its own interval in
-  * each. `startStream` feeds the same publish from micro-batches.
+  * Airflow task chain becomes the dbt graph [[models]], `raw → stg →
+  * {dim, fct}`, with each model's builder and tests. [[runBatch]]'s gated
+  * publish, which [[startStream]] feeds, and `ModelManifest` read it there.
   */
 object WeatherPipeline {
 
@@ -204,6 +195,36 @@ object WeatherPipeline {
     AcceptedValues("temperature_category", TemperatureCategories),
     InRange("temperature", -50, 60))
 
+  /** A node of the dbt graph: the relation `schema.name`, built by `build`
+    * from its `upstream`'s frame and gated on `tests`; if `written`, a table
+    * at `schema/name` under the output root, partitioned by `partitionedBy`. */
+  final case class Model(schema: String, name: String, upstream: String,
+                         build: DataFrame => DataFrame, tests: Seq[Check] = Nil,
+                         partitionedBy: Option[String] = None, written: Boolean = true) {
+    def relation: String = s"$schema.$name"
+    def path: String = s"$schema/$name"
+    /** Its tests' prefix, as dbt names them: `<source>_<table>` for the table
+      * loaded from the API (dbt's source `raw.weather`), else the model's name. */
+    def gateName: String = if (upstream == Source) s"${schema}_$name" else name
+  }
+
+  /** The API the raw rows are ingested from. */
+  private val Source = "source.weatherstack_api"
+
+  /** The graph in lineage order, upstreams first; raw heads it. */
+  val models: Seq[Model] = Seq(
+    Model("raw", "weather", Source, identity, rawWeatherTests, Some("data_interval_start")),
+    Model("staging", "stg_weather", "raw.weather", stgWeather, written = false),
+    Model("marts", "dim_locations", "staging.stg_weather", dimLocations, dimLocationsTests),
+    Model("marts", "fct_weather_observations", "staging.stg_weather", fctWeatherObservations,
+      fctWeatherObservationsTests, Some("data_interval_start")))
+
+  /** [[models]] with their frames over the source's `ingested` rows, each built once. */
+  private[pipeline] def frames(ingested: DataFrame): Seq[(Model, DataFrame)] = {
+    val built = scala.collection.mutable.Map(Source -> ingested)
+    models.map { m => val df = m.build(built(m.upstream)); built(m.relation) = df; m -> df }
+  }
+
   /** The landing rows of [[startStream]]: one fetch each, tagged with the
     * interval it belongs to. */
   private val landingSchema: StructType = StructType(Seq(
@@ -254,27 +275,26 @@ object WeatherPipeline {
   /** The published raw rows of `interval` under `outDir`, read under
     * [[rawSchema]]. */
   private def liveRaw(spark: SparkSession, outDir: String, interval: Timestamp): DataFrame = {
-    val dir = new Path(outDir, "raw/weather")
+    val dir = new Path(outDir, models.head.path)
     if (!Fs.of(spark, dir).exists(dir)) spark.createDataFrame(java.util.List.of[Row](), rawSchema)
     else spark.read.schema(rawSchema).parquet(dir.toString)
       .filter(col("data_interval_start") === lit(interval))
   }
 
   /** End-to-end batch run mirroring the DAG's task chain
-    * (dags/weatherstack_full_pipeline.py:172) as ONE wave of three
-    * concurrent writes into one stage under `outDir`, each table at its
-    * live path: raw and the fact partitioned by `data_interval_start`,
-    * and the dim. Each write observes its model's checks over the rows it
-    * writes (`Checks.Observed`): the source contract (`raw_weather`, DAG
-    * step 4) and the mart contracts (`dim_locations`,
-    * `fct_weather_observations`, step 6). Once all three succeeded, the
-    * gate reads the observations (`Checks.assertObserved`): if a source check
-    * fails, the IllegalArgumentException names only the failing
-    * `raw_weather.*` checks, because the DAG never runs the mart tests
-    * then; otherwise it names every failing mart check, sorted. Only if
-    * it passes are raw, dim, then fct published (write–audit–publish on
-    * the Hadoop `FileSystem` of `outDir`, `graft.Fs.commitTables`): the
-    * dim replaces the live dim, and the staged interval of raw and of
+    * (dags/weatherstack_full_pipeline.py:172) as ONE wave of concurrent
+    * writes into one stage under `outDir`: one per written model of
+    * [[models]], in list order, at its path and with its partitioning.
+    * Each write observes its model's tests over the rows it writes
+    * (`Checks.Observed`). Once all succeeded, the gate reads the
+    * observations (`Checks.assertObserved`) in tiers, one per schema in
+    * list order: if a source check (`raw_weather`, DAG step 4) fails, the
+    * IllegalArgumentException names only the failing `raw_weather.*`
+    * checks, because the DAG never runs the mart tests (step 6) then;
+    * otherwise it names every failing mart check, sorted. Only if it
+    * passes are the tables published, in list order (write–audit–publish
+    * on the Hadoop `FileSystem` of `outDir`, `graft.Fs.commitTables`):
+    * the dim replaces the live dim, and the staged interval of raw and of
     * the fact each replaces its live partition, leaving the other
     * intervals as they are (O(day), not O(table)). So a re-run of an
     * interval, on any date, leaves exactly its own rows in both tables,
@@ -282,7 +302,7 @@ object WeatherPipeline {
     * Stricter than the DAG by design: dbt lands raw in step 2 and
     * validates after; here the tests gate the PUBLISH, so a failing
     * table never goes live. If a write fails, no gate runs: the first
-    * error in wave order (raw, dim, fct) is thrown, the others suppressed.
+    * error in wave order is thrown, the others suppressed.
     *
     * A batch whose ingest optimizes to a `LocalRelation` (the driver-
     * held payloads of `runDaily`) runs in a per-batch clone of the
@@ -328,22 +348,19 @@ object WeatherPipeline {
     val out = new Path(outDir)
     val fs = Fs.of(spark, out)
     try {
-      val stg = stgWeather(raw)
-      val (dim, fct) = (dimLocations(stg), fctWeatherObservations(stg))
-      val rawChecks = new Checks.Observed("raw_weather", rawWeatherTests)
-      val dimChecks = new Checks.Observed("dim_locations", dimLocationsTests)
-      val fctChecks = new Checks.Observed("fct_weather_observations", fctWeatherObservationsTests)
-      val tables = Seq(("raw/weather", rawChecks.on(raw), Some("data_interval_start")),
-        ("marts/dim_locations", dimChecks.on(dim), None),
-        ("marts/fct_weather_observations", fctChecks.on(fct), Some("data_interval_start")))
-      Fs.commitTables(fs, out, tables.map { case (t, _, part) => (t, part) }) { stage =>
-        inParallel(tables.map { case (t, df, part) =>
-          () => df.write.partitionBy(part.toSeq: _*).parquet(new Path(stage, t).toString)
+      val tables = frames(raw).collect { case (m, df) if m.written =>
+        val checks = new Checks.Observed(m.gateName, m.tests)
+        (m, checks, checks.on(df))
+      }
+      Fs.commitTables(fs, out, tables.map { case (m, _, _) => (m.path, m.partitionedBy) }) { stage =>
+        inParallel(tables.map { case (m, _, df) => () =>
+          df.write.partitionBy(m.partitionedBy.toSeq: _*).parquet(new Path(stage, m.path).toString)
         }: _*)
-        Checks.assertObserved(Seq(rawChecks), Seq(dimChecks, fctChecks))
+        Checks.assertObserved(tables.map(_._1.schema).distinct.map(schema =>
+          tables.collect { case (m, checks, _) if m.schema == schema => checks }): _*)
       }
       // a rename bypasses the writers' own refresh of frames cached over a table
-      tables.foreach { case (t, _, _) => spark.catalog.refreshByPath(new Path(out, t).toString) }
+      tables.foreach { case (m, _, _) => spark.catalog.refreshByPath(new Path(out, m.path).toString) }
     } finally if (driverHeld.isEmpty) raw.unpersist()
   }
 

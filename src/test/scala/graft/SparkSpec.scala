@@ -8,6 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * suite fast (Spark startup dominates otherwise). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Runs `body` on a new dir under `java.io.tmpdir` whose name starts
+    * with `prefix`, and deletes the dir once `body` returns or throws. */
+  def withTempDir[A](prefix: String)(body: String => A): A = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(dir.toString) finally Fs.deleteRecursively(dir)
+  }
 }
 
 object SparkSpec {

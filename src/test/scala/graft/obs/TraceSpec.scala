@@ -85,19 +85,20 @@ class TraceSpec extends SparkSpec {
     val files = Seq(
       Seq(("Paris", payload("Paris", 18)), ("ErrCity", """{"error":{"code":615}}""")),
       Seq(("Tokyo", payload("Tokyo", 25)), ("Oslo", payload("Oslo", 5)), ("Rome", payload("Rome", 22))))
-    val dir = java.nio.file.Files.createTempDirectory("trace-stream").toString
-    files.foreach(rows => rows.map { case (c, j) => (c, j, t0) }
-      .toDF("city", "raw_json", "data_interval_start").coalesce(1)
-      .write.mode("append").json(s"$dir/landing"))
-    val (_, r) = Trace.around(spark) {
-      val q = WeatherPipeline.startStream(spark, s"$dir/landing", s"$dir/ckpt", s"$dir/out", now)
-      try q.processAllAvailable() finally q.stop()
+    withTempDir("trace-stream") { dir =>
+      files.foreach(rows => rows.map { case (c, j) => (c, j, t0) }
+        .toDF("city", "raw_json", "data_interval_start").coalesce(1)
+        .write.mode("append").json(s"$dir/landing"))
+      val (_, r) = Trace.around(spark) {
+        val q = WeatherPipeline.startStream(spark, s"$dir/landing", s"$dir/ckpt", s"$dir/out", now)
+        try q.processAllAvailable() finally q.stop()
+      }
+      assert(r.batches.nonEmpty)
+      assert(r.batches.map(_.numInputRows).sum == files.map(_.size).sum)
+      assert(r.batches.exists(b => b.numInputRows > 0 && b.durationMs.contains("addBatch")))
+      // the error payload is routed out
+      assert(spark.read.parquet(s"$dir/out/raw/weather").count() == 4)
+      assert(spark.read.parquet(s"$dir/out/marts/fct_weather_observations").count() == 4)
     }
-    assert(r.batches.nonEmpty)
-    assert(r.batches.map(_.numInputRows).sum == files.map(_.size).sum)
-    assert(r.batches.exists(b => b.numInputRows > 0 && b.durationMs.contains("addBatch")))
-    // the error payload is routed out
-    assert(spark.read.parquet(s"$dir/out/raw/weather").count() == 4)
-    assert(spark.read.parquet(s"$dir/out/marts/fct_weather_observations").count() == 4)
   }
 }

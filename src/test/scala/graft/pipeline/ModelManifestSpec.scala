@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.nio.file.{Files, Paths}
+
 import graft.SparkSpec
 
 class ModelManifestSpec extends SparkSpec {
@@ -26,14 +28,25 @@ class ModelManifestSpec extends SparkSpec {
     assert(byName("staging.stg_weather").tests.isEmpty)
   }
 
+  /** The expected manifest.json, byte for byte. A change to the models
+    * changes it on purpose: regenerate it from `ModelManifest.write`. */
+  private val golden = new String(
+    getClass.getResourceAsStream("manifest.json").readAllBytes(), "UTF-8")
+
   test("manifest.json is written and structurally sound") {
-    val dir = java.nio.file.Files.createTempDirectory("manifest").toString
-    ModelManifest.write(spark, dir)
-    val json = java.nio.file.Files.readString(java.nio.file.Paths.get(s"$dir/manifest.json"))
-    assert(json.startsWith("{\"models\":["))
-    assert(json.contains("\"name\":\"marts.fct_weather_observations\""))
-    assert(json.contains("\"depends_on\":[\"staging.stg_weather\"]"))
-    assert(json.contains("\"layer\":\"raw\""))
-    assert(json.contains("\"tests\":[\"unique_location_key\""))
+    withTempDir("manifest") { dir =>
+      ModelManifest.write(spark, dir)
+      assert(Files.readString(Paths.get(s"$dir/manifest.json")) == golden)
+    }
+  }
+
+  test("manifest.json is written under an output root given as a file: URI") {
+    withTempDir("manifest-uri") { dir =>
+      val uri = new java.io.File(dir).toURI.toString
+      assert(uri.startsWith("file:/"))
+      ModelManifest.write(spark, s"${uri}out")
+      assert(Files.readString(Paths.get(s"$dir/out/manifest.json")) == golden)
+      assert(!Files.exists(Paths.get("file:")))
+    }
   }
 }

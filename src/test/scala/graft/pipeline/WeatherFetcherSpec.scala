@@ -41,15 +41,16 @@ class WeatherFetcherSpec extends SparkSpec {
   }
 
   test("runDaily: fetch -> ingest -> marts end-to-end with per-city skip") {
-    val dir = java.nio.file.Files.createTempDirectory("rundaily").toString
-    val f = new WeatherFetcher.FakeFetcher(
-      Map("Paris" -> goodJson), failFirst = Map("Paris" -> 1))
-    val t0 = Timestamp.valueOf("2024-06-02 08:30:00")
-    val now = Timestamp.valueOf("2024-06-02 09:00:00")
-    val results = WeatherPipeline.runDaily(spark, f, Seq("Paris", "Gone"), t0, now, dir)
-    assert(results.count(_.rawJson.isDefined) == 1)
-    val dim = spark.read.parquet(s"$dir/marts/dim_locations")
-    assert(dim.count() == 1)
-    assert(dim.select("city").head().getString(0) == "PARIS")
+    withTempDir("rundaily") { dir =>
+      val f = new WeatherFetcher.FakeFetcher(
+        Map("Paris" -> goodJson), failFirst = Map("Paris" -> 1))
+      val t0 = Timestamp.valueOf("2024-06-02 08:30:00")
+      val now = Timestamp.valueOf("2024-06-02 09:00:00")
+      val results = WeatherPipeline.runDaily(spark, f, Seq("Paris", "Gone"), t0, now, dir)
+      assert(results.count(_.rawJson.isDefined) == 1)
+      val dim = spark.read.parquet(s"$dir/marts/dim_locations")
+      assert(dim.count() == 1)
+      assert(dim.select("city").head().getString(0) == "PARIS")
+    }
   }
 }
