@@ -1015,26 +1015,6 @@ object Dedup {
     labels
   }
 
-  /** Session conf naming the union-find collect cutover (contracted
-    * pair-table edges): under it, components resolve with a driver
-    * union-find; over it, the distributed [[connectedComponents]] runs.
-    * A 100 TB deployment pins it per cluster (driver heap ÷ ~64 B/edge
-    * is the sizing rule — see CAPACITY.md) instead of recompiling; the
-    * in-code default (2M edges ≈ 128 MB of driver pair rows) suits any
-    * multi-GB driver. Explicit `maxCollectEdges` arguments still win —
-    * the conf only fills the default (sentinel -1). */
-  val MaxCollectEdgesConf = "spark.graft.dedup.maxCollectEdges"
-  private val MaxCollectEdgesDefault = 2L * 1000 * 1000
-
-  /** Resolve a `maxCollectEdges` parameter: callers passing an explicit
-    * bound (≥ 0) keep it; the -1 sentinel reads [[MaxCollectEdgesConf]]
-    * from the frame's session (falling back to the 2M in-code default),
-    * so one session-level knob tunes every clustering route at once. */
-  private def resolveMaxCollectEdges(df: DataFrame, param: Long): Long =
-    if (param >= 0) param
-    else df.sparkSession.conf.get(MaxCollectEdgesConf,
-      MaxCollectEdgesDefault.toString).toLong
-
   /** SimHash near-dup clusters end-to-end: every doc in a ≥2-doc
     * connected component of the Hamming-≤`maxDist` graph, labeled with
     * the component's minimum doc id. Identical-signature docs are
@@ -1043,13 +1023,14 @@ object Dedup {
     * test SF this turns 222k doc-pair edges into 4.9k hash-pair edges,
     * and at 100 TB it is the difference between iterating over the corpus
     * and iterating over the (bounded, 2^16 here) signature space. The
-    * tiny contracted graph runs [[connectedComponents]]; labels expand
-    * back to docs with one join + one aggregation.
+    * tiny contracted graph resolves by driver union-find under the
+    * driver-collect bound ([[graft.Collect]]), else by
+    * [[connectedComponents]]; labels expand back to docs with one join +
+    * one aggregation.
     * Returns (id, cluster_id), cluster_id = min doc id in the component.
     */
-  def simhashClusters(sigs: DataFrame, maxDist: Int,
-                      maxCollectEdges: Long = -1L): DataFrame = {
-    val collectEdges = resolveMaxCollectEdges(sigs, maxCollectEdges)
+  def simhashClusters(sigs: DataFrame, maxDist: Int): DataFrame = {
+    val maxEdges = graft.Collect.maxRows(graft.Collect.EdgeBytes)
     // distinct signatures AS the node set: reuse the pair generator with
     // the signature string standing in for the node id
     val nodes = sigs.select(col("simhash")).distinct()
@@ -1059,11 +1040,11 @@ object Dedup {
     // quadratically with corpus size — but this node set is the DISTINCT
     // signature table, bounded by the 2^16 signature space no matter the
     // corpus, so its candidate volume is bounded by construction
-    // (≤ (maxDist+1)·2^32/2^(w+1) in the worst case) and the analytic
-    // worst-case edge guard below already decides collect vs distributed
-    // CC. Fencing here would wrongly refuse dup-sparse corpora whose
-    // distinct-signature count exceeds the fence's n at small maxDist —
-    // exactly the scale the contraction exists to serve.
+    // (≤ (maxDist+1)·2^32/2^(w+1) in the worst case) and the edge guard
+    // below already decides collect vs distributed CC. Fencing here
+    // would wrongly refuse dup-sparse corpora whose distinct-signature
+    // count exceeds the fence's n at small maxDist — exactly the scale
+    // the contraction exists to serve.
     val hashPairs = simhashNearDupPairsFromSigs(nodes, maxDist,
         maxExpectedCandidates = Long.MaxValue)
       .select(col("id_a"), col("id_b"))
@@ -1071,28 +1052,23 @@ object Dedup {
     // nodes for a 16-bit simhash, regardless of corpus size — so its
     // components are resolved with driver-side union-find (micro-
     // seconds) instead of iterated Spark jobs whose per-round scheduling
-    // constant dwarfs the data. This is the same bounded-small-side
-    // reasoning as broadcasting IVF centroids, NOT a corpus collect —
-    // but the bound DRIFTS with the parameters: widening maxDist blows
-    // up the per-node neighborhood (Σ_d C(16,d) ≈ the whole 2^16 space
-    // at maxDist 15), so the collect is guarded by the ANALYTIC
-    // worst-case edge count, decided with no extra Spark action. Above
-    // `maxCollectEdges` the same contracted graph runs the distributed
-    // [[connectedComponents]] instead — identical labels, no collect.
+    // constant dwarfs the data. The bound DRIFTS with the parameters:
+    // widening maxDist blows up the per-node neighborhood (Σ_d C(16,d)
+    // ≈ the whole 2^16 space at maxDist 15). So the ANALYTIC worst-case
+    // edge count decides first, with no extra Spark action; when it is
+    // over the driver-collect bound, the MEASURED pair count decides
+    // (a micro-batch's graph of a few edges still collects), and only a
+    // graph over the bound runs the distributed [[connectedComponents]].
     val worstCaseEdges: BigInt = {
       def choose16(d: Int): BigInt =
         (1 to d).map(i => BigInt(16 - i + 1)).product / (1 to d).map(BigInt(_)).product
       val neighborhood = (1 to maxDist).map(choose16).sum
       (BigInt(1) << 16) * neighborhood / 2
     }
-    val comp =
-      if (worstCaseEdges <= BigInt(collectEdges))
-        unionFindComp(sigs.sparkSession, hashPairs.collect())
-      else
-        connectedComponents(hashPairs)
-          .select(col("id").as("simhash"), col("cluster_id").as("comp"))
-    // the contracted label table is 2^16-bounded → always broadcast
-    expandClusterLabels(sigs, broadcast(comp))
+    if (worstCaseEdges <= BigInt(maxEdges))
+      // the contracted label table is 2^16-bounded → always broadcast
+      expandClusterLabels(sigs, broadcast(unionFindComp(sigs.sparkSession, hashPairs.collect())))
+    else clustersFromContractedPairs(sigs, hashPairs, maxEdges)
   }
 
   /** Driver union-find over a COLLECTED contracted pair table —
@@ -1134,17 +1110,16 @@ object Dedup {
       .select(col("id"), col("cluster_id"))
   }
 
-  /** MEASURED-guard clustering core shared by [[simhashClustersMeasured]]
-    * and [[simhash64Clusters]]: persist + count the contracted pair
-    * table (the count doubles as its materialization for either branch),
-    * driver union-find under `maxCollectEdges` (-1 = resolve the
-    * session conf [[MaxCollectEdgesConf]]), distributed
+  /** MEASURED-guard clustering core of [[simhashClusters]] and
+    * [[simhash64Clusters]]: persist + count the contracted pair table
+    * (the count doubles as its materialization for either branch),
+    * driver union-find at or under `maxEdges`, distributed
     * [[connectedComponents]] above it. */
   private def clustersFromContractedPairs(sigs: DataFrame, pairs: DataFrame,
-                                          maxCollectEdges: Long): DataFrame = {
+                                          maxEdges: Long): DataFrame = {
     val hashPairs = pairs
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val small = hashPairs.count() <= resolveMaxCollectEdges(sigs, maxCollectEdges)
+    val small = hashPairs.count() <= maxEdges
     val comp =
       if (small)
         broadcast(unionFindComp(sigs.sparkSession, hashPairs.collect()))
@@ -1156,35 +1131,6 @@ object Dedup {
     out
   }
 
-  /** Micro-batch variant of [[simhashClusters]] — identical labels, but
-    * the collect-vs-distributed decision uses the MEASURED contracted
-    * pair count (the [[simhash64Clusters]] guard) instead of the 16-bit
-    * analytic worst case. The analytic bound is the right guard for
-    * one-shot corpus queries (decides with zero extra Spark actions),
-    * but it prices the whole 2^16 signature space: at maxDist ≥ 2 it
-    * exceeds any sane collect cap and routes EVERY input — including a
-    * few-hundred-row streaming micro-batch whose contracted graph holds
-    * a handful of edges — to iterated distributed CC, ~12 driver jobs of
-    * scheduling constants per micro-batch (the X231 lesson, measured on
-    * the 64-bit gate: 8.5 s for a 2-batch lifecycle, ~4× its data cost).
-    * Here the pair table is persisted and counted (the count doubles as
-    * its materialization for either branch), so micro-batch-sized graphs
-    * take the driver union-find fast path and only a genuinely dense
-    * graph pays the distributed rounds.
-    * Returns (id, cluster_id), cluster_id = min doc id, rows only for
-    * docs in ≥2-doc components. */
-  def simhashClustersMeasured(sigs: DataFrame, maxDist: Int,
-                              maxCollectEdges: Long = -1L): DataFrame = {
-    val nodes = sigs.select(col("simhash")).distinct()
-      .select(col("simhash").as("id"), col("simhash"))
-    // fence off for the contracted node set (bounded by the 2^16 space —
-    // see the [[simhashClusters]] call-site note)
-    val pairs = simhashNearDupPairsFromSigs(nodes, maxDist,
-        maxExpectedCandidates = Long.MaxValue)
-      .select(col("id_a"), col("id_b"))
-    clustersFromContractedPairs(sigs, pairs, maxCollectEdges)
-  }
-
   /** 64-bit sibling of [[simhashClusters]]: near-dup clusters over a
     * (id, simhash) frame with 64-char binary-string signatures,
     * signature-CONTRACTED (one node per distinct simhash) with the same
@@ -1194,7 +1140,8 @@ object Dedup {
     * node count is corpus-dependent), so the collect is guarded by the
     * MEASURED pair count — the pair table is persisted, counted (the
     * count doubles as its materialization), and collected only when it
-    * is under `maxCollectEdges`; otherwise the same contracted graph
+    * is under the driver-collect bound ([[graft.Collect]] at
+    * [[graft.Collect.EdgeBytes]] per edge); otherwise the same contracted graph
     * runs the distributed [[connectedComponents]] with a plain (not
     * broadcast) label join. Designed for micro-batch-sized inputs
     * (streaming admission), where the contracted pair graph is small by
@@ -1202,13 +1149,13 @@ object Dedup {
     * CC round with one bounded collect.
     * Returns (id, cluster_id), cluster_id = min doc id in the component,
     * rows only for docs in ≥2-doc components. */
-  def simhash64Clusters(sigs: DataFrame, maxDist: Int,
-                        maxCollectEdges: Long = -1L): DataFrame = {
+  def simhash64Clusters(sigs: DataFrame, maxDist: Int): DataFrame = {
     val nodes = sigs.select(col("simhash")).distinct()
       .select(col("simhash").as("id"), col("simhash"))
     val pairs = simhash64NearDupPairsFromSigs(nodes, maxDist)
       .select(col("id_a"), col("id_b"))
-    clustersFromContractedPairs(sigs, pairs, maxCollectEdges)
+    clustersFromContractedPairs(sigs, pairs,
+      graft.Collect.maxRows(graft.Collect.EdgeBytes))
   }
 
   /** Duplicate-cluster REPRESENTATIVE selection by quality — "keep the

@@ -13,17 +13,16 @@ import graft.ops.Relational
   *   val checks = Seq(Unique(Seq("id")), NotNull("city"),
   *                    AcceptedValues("cat", Seq("a", "b")), InRange("t", -50, 60))
   *   Checks.reportDf(df, checks)                  // (check, n_violations, passed)
-  *   Checks.assertAll(("model", df, checks), ...)  // throw naming every failure
-  *   Checks.assertTiers(sources, marts)           // ...of the first failing tier
-  *   val o = new Checks.Observed("model", checks)  // the same gate, riding on
-  *   o.on(df).write.parquet(p); Checks.assertObserved(Seq(o)) // a write
+  *   val o = new Checks.Observed("model", checks)  // the gate, riding on a write
+  *   o.on(df).write.parquet(p)
+  *   Checks.assertObserved(Seq(o))                // throw naming every failure
   *
   * Each check compiles to a violations DataFrame (the dbt "test query
   * returns 0 rows" contract) and to one aggregate, its metric, 0 exactly
   * when that frame is empty. `reportDf` fuses every row-level check into
   * one conditional aggregate and adds one grouping branch per Unique;
-  * nothing reaches the driver but the counts. Both gates name their
-  * failures through [[requireFirstTier]].
+  * nothing reaches the driver but the counts. The gate reads the metrics
+  * a write observed and names the failures of the first failing tier.
   */
 object Checks {
 
@@ -111,32 +110,6 @@ object Checks {
       .withColumn("passed", col("n_violations") === 0L)
   }
 
-  /** A model's contract: (model name, frame, checks). */
-  type Contract = (String, DataFrame, Seq[Check])
-
-  /** Pipeline gate over one or more contracts: [[assertTiers]] with one
-    * tier, so any violation throws an IllegalArgumentException naming
-    * every failing `<model>.<check>` (mirrors the reference DAG failing
-    * on dbt test, dags/weatherstack_full_pipeline.py:147-151). */
-  def assertAll(contract: Contract, more: Contract*): Unit =
-    assertTiers(contract +: more)
-
-  /** Gate over tiers of contracts in DAG order (sources before marts).
-    * Every tier's [[reportDf]]s are unioned, coalesced to one partition
-    * and collected in ONE action. Every branch ends in a global
-    * aggregate, so the coalesce merges only the branches' one-row
-    * final tasks into one task. Throws as [[requireFirstTier]] does. */
-  def assertTiers(tiers: Seq[Contract]*): Unit = {
-    val failing = tiers.zipWithIndex
-      .flatMap { case (tier, i) => tier.map { case (model, df, checks) =>
-        reportDf(df, checks).filter(!col("passed"))
-          .select(lit(i).as("tier"), concat_ws(".", lit(model), col("check"))) } }
-      .reduce(_.unionAll(_))
-      .coalesce(1)
-      .collect().map(r => (r.getInt(0), r.getString(1)))
-    requireFirstTier(tiers.indices.map(i => failing.collect { case (`i`, name) => name }))
-  }
-
   /** A model's contract carried by a write instead of a gate action:
     * [[on]] adds every check's metric to the written frame as ONE
     * `Dataset.observe`, computed in the write's own scan. Observe above
@@ -161,18 +134,16 @@ object Checks {
     }
   }
 
-  /** [[assertTiers]] over observed contracts, once their actions have
-    * succeeded: the same tier rule and the same message. */
-  def assertObserved(tiers: Seq[Observed]*): Unit =
-    requireFirstTier(tiers.map(_.flatMap(o =>
-      o.counts.collect { case (check, n) if n != 0L => s"${o.model}.$check" })))
-
-  /** The gate's verdict over the failing `<model>.<check>`s of each tier,
-    * tiers in DAG order: the IllegalArgumentException names the FIRST
-    * failing tier's checks only, sorted, because the DAG never runs a
-    * later tier's tests once an earlier tier failed. */
-  private def requireFirstTier(failing: Seq[Seq[String]]): Unit = {
-    val named = failing.find(_.nonEmpty).getOrElse(Nil).sorted
+  /** Pipeline gate over observed contracts in tiers of DAG order (sources
+    * before marts), once their actions have succeeded. Any violation
+    * throws an IllegalArgumentException naming the FIRST failing tier's
+    * `<model>.<check>`s, sorted, because the DAG never runs a later
+    * tier's tests once an earlier tier failed (mirrors the reference DAG
+    * failing on dbt test, dags/weatherstack_full_pipeline.py:147-151). */
+  def assertObserved(tiers: Seq[Observed]*): Unit = {
+    val named = tiers.map(_.flatMap(o =>
+        o.counts.collect { case (check, n) if n != 0L => s"${o.model}.$check" }))
+      .find(_.nonEmpty).getOrElse(Nil).sorted
     require(named.isEmpty, s"data-quality check failed: ${named.mkString(", ")}")
   }
 

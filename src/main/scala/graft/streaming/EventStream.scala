@@ -187,6 +187,8 @@ object EventStream {
             StructField("props", StringType)))
     }
 
+  private val NoDataBatchesConf = "spark.sql.streaming.noDataMicroBatches.enabled"
+
   /** Conf set for bounded AvailableNow lifecycles whose OUTPUT does not
     * depend on the post-data watermark micro-batch: append-mode inner
     * stream-stream joins emit matches DURING the data batch (the
@@ -209,7 +211,7 @@ object EventStream {
     * shuffle width. */
   private[streaming] def boundedLifecycleConfs: Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> "8",
-    "spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+    NoDataBatchesConf -> "false")
 
   /** Stage a single driver file into its own landing DIRECTORY (the file
     * source consumes directories; at scale this is the producers' append
@@ -262,6 +264,26 @@ object EventStream {
     } finally spark.catalog.dropTempView(name)
   }
 
+  /** The one events lifecycle behind the `run*Once` harnesses: stage
+    * `eventsPath` as a landing of `copies` files named after `landing`,
+    * stream it under [[boundedLifecycleConfs]] (keeping the trailing
+    * no-data batch when `noDataBatch`, for event-time timeouts), apply
+    * `transform` to the [[batchEvents]] form, and [[drainToMemory]] the
+    * result in `mode`. */
+  private def drainEvents(spark: SparkSession, eventsPath: String, mode: OutputMode,
+                          landing: String = "events_landing", copies: Int = 1,
+                          noDataBatch: Boolean = false)(
+                          transform: DataFrame => DataFrame): DataFrame = {
+    val dir = stageLanding(spark, eventsPath, landing, copies)
+    val confs =
+      if (noDataBatch) boundedLifecycleConfs.filterNot(_._1 == NoDataBatchesConf)
+      else boundedLifecycleConfs
+    graft.Sessions.withConf(spark, confs: _*) {
+      val raw = spark.readStream.schema(rawEventSchema(spark, dir)).parquet(dir)
+      drainToMemory(transform(batchEvents(raw)), mode)
+    }
+  }
+
   /** Run [[windowedCounts]] through the REAL streaming engine — file
     * source → event-time window aggregation → memory sink, Trigger
     * .AvailableNow, complete mode — and hand back the final result as a
@@ -272,21 +294,16 @@ object EventStream {
     * The collected result is the windowed AGGREGATE (hours × types —
     * tiny by construction); the aggregation itself ran distributed.
     */
-  def runWindowedCountsOnce(spark: SparkSession, eventsPath: String): DataFrame = {
-    val landing = stageLanding(spark, eventsPath)
+  def runWindowedCountsOnce(spark: SparkSession, eventsPath: String): DataFrame =
     // Streaming aggregation state is partitioned by the shuffle width AT
     // FIRST RUN and every micro-batch pays per-state-partition store
     // setup; the window×type state here is tiny, so size it like any
     // other small shuffle (graft.Par's floor) instead of the session
     // default (see boundedLifecycleConfs for the no-data-batch skip).
-    graft.Sessions.withConf(spark, boundedLifecycleConfs: _*) {
-      val raw = spark.readStream.schema(rawEventSchema(spark, landing)).parquet(landing)
-      drainToMemory(windowedCounts(batchEvents(raw))
+    drainEvents(spark, eventsPath, OutputMode.Complete())(ev =>
+      windowedCounts(ev)
         .select(unix_micros(col("window_start")).as("window_start_us"),
-          col("event_type"), col("n_events"), col("value_cents")),
-        OutputMode.Complete())
-    }
-  }
+          col("event_type"), col("n_events"), col("value_cents")))
 
   /** Run [[dedupedEvents]] (dropDuplicatesWithinWatermark) through the
     * real engine over a landing directory that contains every event
@@ -294,14 +311,9 @@ object EventStream {
     * bounded by the watermark: an id older than the watermark cannot be
     * re-admitted, so its key is evictable, which is the whole point at
     * unbounded-retention scale. */
-  def runStreamDedupOnce(spark: SparkSession, eventsPath: String): DataFrame = {
-    val landing = stageLanding(spark, eventsPath, "events_dup", copies = 2)
-    graft.Sessions.withConf(spark, boundedLifecycleConfs: _*) {
-      val raw = spark.readStream.schema(rawEventSchema(spark, landing)).parquet(landing)
-      drainToMemory(dedupedEvents(batchEvents(raw)).select(col("event_id")),
-        OutputMode.Append())
-    }
-  }
+  def runStreamDedupOnce(spark: SparkSession, eventsPath: String): DataFrame =
+    drainEvents(spark, eventsPath, OutputMode.Append(), "events_dup", copies = 2)(ev =>
+      dedupedEvents(ev).select(col("event_id")))
 
   /** STREAM-STREAM inner join with an event-time range condition: each
     * purchase attributes to the same user's clicks in the preceding hour.
@@ -329,20 +341,15 @@ object EventStream {
   /** Run [[attributedPurchases]] as a real stream-stream SELF-join over
     * the bounded events file (clicks and purchases are two filtered reads
     * of the same stream) — append mode + AvailableNow. */
-  def runAttributionOnce(spark: SparkSession, eventsPath: String): DataFrame = {
-    val landing = stageLanding(spark, eventsPath)
+  def runAttributionOnce(spark: SparkSession, eventsPath: String): DataFrame =
     // The join keeps FOUR state stores per partition (keyToNumValues +
     // keyWithIndexToValue, each side) — by far the most commit-I/O-bound
     // lifecycle in the registry, and the one a busy disk slows most
     // (10x measured). boundedLifecycleConfs halves its commit rounds.
-    graft.Sessions.withConf(spark, boundedLifecycleConfs: _*) {
-      val raw = spark.readStream.schema(rawEventSchema(spark, landing)).parquet(landing)
-      val ev = batchEvents(raw)
-      drainToMemory(attributedPurchases(
+    drainEvents(spark, eventsPath, OutputMode.Append())(ev =>
+      attributedPurchases(
         ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "purchase")), OutputMode.Append())
-    }
-  }
+        ev.filter(col("event_type") === "purchase")))
 
   /** Run [[enrichedWindowedCounts]] through the real streaming engine —
     * file source → broadcast stream-static join → event-time windowed
@@ -352,16 +359,11 @@ object EventStream {
     * the same files. */
   def runEnrichedCountsOnce(spark: SparkSession, eventsPath: String,
                             dim: DataFrame, dimKey: String,
-                            dimAttr: String): DataFrame = {
-    val landing = stageLanding(spark, eventsPath)
-    graft.Sessions.withConf(spark, boundedLifecycleConfs: _*) {
-      val raw = spark.readStream.schema(rawEventSchema(spark, landing)).parquet(landing)
-      drainToMemory(enrichedWindowedCounts(batchEvents(raw), dim, dimKey, dimAttr)
+                            dimAttr: String): DataFrame =
+    drainEvents(spark, eventsPath, OutputMode.Complete())(ev =>
+      enrichedWindowedCounts(ev, dim, dimKey, dimAttr)
         .select(unix_micros(col("window_start")).as("window_start_us"),
-          col("segment"), col("n_events"), col("value_cents")),
-        OutputMode.Complete())
-    }
-  }
+          col("segment"), col("n_events"), col("value_cents")))
 
   /** Run [[sessionize]] (flatMapGroupsWithState + event-time timeout)
     * through the REAL streaming engine over the bounded events file and
@@ -378,26 +380,21 @@ object EventStream {
   def runSessionizeOnce(spark: SparkSession, eventsPath: String,
                         gapMs: Long, delayMs: Long): DataFrame = {
     import spark.implicits._
-    val landing = stageLanding(spark, eventsPath)
     // NOT the no-data-batch skip: the event-time TIMEOUT fires in the
     // trailing no-data micro-batch — skipping it would suppress every
     // final-session emission (the one lifecycle whose output DEPENDS on
-    // the post-data watermark batch), so boundedLifecycleConfs minus
-    // the no-data flag.
-    graft.Sessions.withConf(spark, boundedLifecycleConfs
-      .filterNot(_._1 == "spark.sql.streaming.noDataMicroBatches.enabled"): _*) {
-      val raw = spark.readStream.schema(rawEventSchema(spark, landing)).parquet(landing)
-      val ev = batchEvents(raw)
+    // the post-data watermark batch).
+    drainEvents(spark, eventsPath, OutputMode.Append(), noDataBatch = true) { ev =>
+      val cents = ev
         .withColumn("value", round(col("value") * 100))
         .select("event_id", "ts", "user_id", "event_type", "value")
         .as[Event]
-      drainToMemory(sessionize(ev, gapMs, s"$delayMs milliseconds")
+      sessionize(cents, gapMs, s"$delayMs milliseconds")
         .select(col("user_id"),
           unix_millis(col("session_start")).as("start_ms"),
           unix_millis(col("session_end")).as("end_ms"),
           col("n_events"),
-          col("total_value").cast("long").as("total_cents")),
-        OutputMode.Append())
+          col("total_value").cast("long").as("total_cents"))
     }
   }
 }

@@ -29,7 +29,10 @@ import graft.dedup.Dedup
   * batch rewrites only its OWN directory — idempotent on top of the
   * checkpoint's exactly-once file offsets (which also guarantee a doc id
   * arrives in at most one batch, keeping the admitted dirs' union
-  * id-deduped without any cross-batch shuffle).
+  * id-deduped without any cross-batch shuffle). When a micro-batch and
+  * its match window fit under the driver-collect bound
+  * ([[graft.Collect]]), the whole admission runs driver-side
+  * ([[admitLocal]], spec-pinned equal to the distributed path).
   */
 object NearDupStream {
 
@@ -45,12 +48,10 @@ object NearDupStream {
   def admitBatch(batch: DataFrame, storeSigs: DataFrame, maxDist: Int): DataFrame = {
     val sigs = Dedup.simhash(batch, "doc_id", "text")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // measured-guard clustering: the analytic worst-case guard prices
-    // the whole 2^16 space and sends every micro-batch — graphs of a few
-    // edges — through iterated distributed CC, ~4× the lifecycle's data
-    // cost in per-round scheduling constants; the measured pair count
-    // routes batch-sized graphs to the driver union-find instead
-    val dropped = Dedup.simhashClustersMeasured(sigs, maxDist)
+    // where the analytic 2^16 guard is over the bound, simhashClusters
+    // counts the batch's pairs, so batch-sized graphs still take the
+    // driver union-find instead of iterated distributed CC
+    val dropped = Dedup.simhashClusters(sigs, maxDist)
       .filter(col("id") =!= col("cluster_id")).select(col("id"))
     val survivors = sigs.join(dropped, Seq("id"), "left_anti")
     val matched = Dedup.simhashStoreMatches(survivors, storeSigs, maxDist)
@@ -109,28 +110,6 @@ object NearDupStream {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRecordCount finally r.close()
       }.sum
-
-  /** Collect cutover for the per-micro-batch admission (the same
-    * driver-side cutover as the union-find and `maxCollectWords`
-    * bounds): when the batch's signatures AND the match window both fit
-    * under this bound, the whole admission decision — within-batch
-    * clustering, store matching — runs driver-side ([[admitLocal]]),
-    * collapsing the ~7 Spark jobs of per-plan scheduling constants a
-    * micro-batch paid (sigCount + pair persist/count/collect +
-    * admit-materialize + broadcast builds; at sf0.1 a 2-batch drain
-    * ran 23 jobs / 2.6 s of job time) to ONE bounded
-    * collect plus the two per-batch-file commit writes. The sig table
-    * is ~(72 B)/row — the 1M default is ~75 MB of driver heap, the
-    * CAPACITY.md envelope. Above the bound (production-sized batches or
-    * windows) the distributed path below runs unchanged — it is the
-    * 100 TB path, and [[admitLocal]] is spec-pinned bit-identical to it
-    * (NearDup64StreamSpec path-vs-path). 0 disables. */
-  val MaxCollectSigsConf = "spark.graft.stream.maxCollectSigs"
-  val MaxCollectSigsDefault: Long = 1000000L
-
-  private def maxCollectSigs(s: SparkSession): Long =
-    s.conf.getOption(MaxCollectSigsConf).map(_.toLong)
-      .getOrElse(MaxCollectSigsDefault)
 
   /** Driver-side micro-batch admission — the EXACT semantics of
     * [[admitBatch]]/[[admitBatch64]] on collected rows (width-generic:
@@ -217,18 +196,6 @@ object NearDupStream {
         storeBuckets.get(b).exists(_.exists(sh => ham(h, sh) <= maxDist)))
     }.toSet
     survivors.filterNot { case (_, s) => matchedSigs(s) }
-  }
-
-  /** Bounded head-collect of one micro-batch's signature table: Some
-    * when it fits under the cutover bound (the one Spark job of the
-    * driver-path batch), None → the caller runs the distributed
-    * admission unchanged. */
-  private def collectBatchSigs(sigs: DataFrame, maxSigs: Long,
-                               tag: String): Option[Array[(Long, String)]] = {
-    val lim = math.min(maxSigs, (Int.MaxValue - 2).toLong).toInt
-    val rows = tagged(sigs.sparkSession, tag) { sigs.head(lim + 1) }
-    if (rows.length > lim) None
-    else Some(rows.map(r => (r.getLong(0), r.getString(1))))
   }
 
   /** Signature strings of one committed store batch dir, via Spark (one
@@ -501,13 +468,18 @@ object NearDupStream {
           val ownAdmittedDir = seqDir(admittedDir, batchId)
           val replay = admittedFs.exists(ownAdmittedDir)
           // DRIVER CUTOVER: gate on the footer-counted window size (zero
-          // jobs) first, then on the bounded batch-sig collect — both
-          // under [[MaxCollectSigsConf]] → the whole admission runs
-          // driver-side; either over → the distributed path.
-          val maxSigs = maxCollectSigs(s)
+          // jobs) first, then on the bounded batch-sig collect (the one
+          // Spark job of a driver-path batch) — both under the
+          // driver-collect bound → the whole admission runs driver-side
+          // ([[admitLocal]], which collapses the ~7 jobs of per-plan
+          // scheduling constants a distributed admission pays); either
+          // over → the distributed path, the 100 TB path.
+          val maxSigs = graft.Collect.maxRows(graft.Collect.SigBytes)
           val localBatch: Option[Array[(Long, String)]] =
-            if (maxSigs <= 0 || retained.map(_._2).sum + ownStoreRows > maxSigs) None
-            else collectBatchSigs(sign(b.toDF()), maxSigs, s"$tag:sigs-collect")
+            if (retained.map(_._2).sum + ownStoreRows > maxSigs) None
+            else tagged(s, s"$tag:sigs-collect") {
+              graft.Collect.head(sign(b.toDF()), maxSigs)
+            }.map(_.map(r => (r.getLong(0), r.getString(1))))
           localBatch match {
             case Some(batchSigs) =>
               val windowSigs = retained.map(_._1)

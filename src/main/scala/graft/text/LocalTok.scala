@@ -1,6 +1,6 @@
 package graft.text
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Driver-side primitives for the tokenizer train-loop cutover (r18
   * optimization round). The unigram-EM and WordPiece merge loops run
@@ -8,10 +8,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * yet as distributed jobs they cost ~19 driver jobs of scheduling and
   * Catalyst-planning constants per cold chain (measured at sf0.1:
   * 4.65 s wall, 1.03 s of stage time; the Viterbi HOF plan alone is
-  * 400 KB formatted). Under a size guard the loops run driver-side on
-  * the collected word-count table instead — the same cutover precedent
-  * as the dedup union-find (`spark.graft.dedup.maxCollectEdges`), with
-  * the distributed implementations retained verbatim above the guard.
+  * 400 KB formatted). Under the driver-collect bound
+  * ([[graft.Collect]], shared with the dedup union-find) the loops run
+  * driver-side on the collected word-count table instead, with the
+  * distributed implementations retained verbatim above it.
   *
   * Every helper here mirrors the exact Catalyst semantics of the
   * expression it replaces, so the two paths are BIT-IDENTICAL (the
@@ -26,18 +26,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     HALF_UP) (RoundBase's codegen), then the double→long cast.
   */
 private[text] object LocalTok {
-
-  /** Collect cutover for the tokenizer train loops: at or under this
-    * many DISTINCT WORDS the EM/merge loops run driver-side (the word
-    * table is ~(avg word bytes + 8)/row — the 1M default is ~50-100 MB
-    * of driver heap, the CAPACITY.md sizing). Above it the distributed
-    * loops run unchanged. Runtime-settable (specs force both paths). */
-  val MaxCollectWordsConf = "spark.graft.text.maxCollectWords"
-  val MaxCollectWordsDefault: Long = 1000000L
-
-  def maxCollectWords(s: SparkSession): Long =
-    s.conf.getOption(MaxCollectWordsConf).map(_.toLong)
-      .getOrElse(MaxCollectWordsDefault)
 
   /** Code-point chunks of a string — the unit Spark's length()/
     * substring() count. Each element is one code point (1 or 2 chars). */
@@ -84,23 +72,17 @@ private[text] object LocalTok {
   /** Code-point length — what Spark's length() returns. */
   def cpLen(s: String): Int = s.codePointCount(0, s.length)
 
-  /** The collected distinct-word table under the cutover bound, memoized
-    * per (word-table plan, bound) epoch so the four consumers (unigram
-    * train + segLen, WordPiece loop + walk) pay ONE bounded head() job
-    * on the cached wordCounts artifact. None = the vocabulary exceeds
-    * the bound (or the knob is 0/negative): callers run the distributed
-    * loops unchanged. */
+  /** The collected distinct-word table under the driver-collect bound
+    * ([[graft.Collect]] at [[graft.Collect.WordBytes]] per word),
+    * memoized per (word-table plan, bound) epoch so the four consumers
+    * (unigram train + segLen, WordPiece loop + walk) pay ONE bounded
+    * head() job on the cached wordCounts artifact. None = the vocabulary
+    * exceeds the bound: callers run the distributed loops unchanged. */
   def collectedWords(words: DataFrame): Option[Array[(String, Long)]] = {
-    val max = maxCollectWords(words.sparkSession)
+    val max = graft.Collect.maxRows(graft.Collect.WordBytes)
     graft.Caches.memo(
       ("localWords", words.queryExecution.logical.canonicalized, max)) {
-      if (max <= 0) None
-      else {
-        val lim = math.min(max, (Int.MaxValue - 2).toLong).toInt
-        val rows = words.head(lim + 1)
-        if (rows.length > lim) None
-        else Some(rows.map(r => (r.getString(0), r.getLong(1))))
-      }
+      graft.Collect.head(words, max).map(_.map(r => (r.getString(0), r.getLong(1))))
     }
   }
 

@@ -215,10 +215,10 @@ object Unigram {
       }
     }
 
-  /** Driver-side cutover (r18): at or under
-    * [[LocalTok.MaxCollectWordsConf]] distinct words the whole EM runs
-    * on the collected word table — the union-find precedent
-    * (`spark.graft.dedup.maxCollectEdges`). The distributed loop below
+  /** Driver-side cutover (r18): when the distinct words fit under the
+    * driver-collect bound ([[graft.Collect]], shared with the dedup
+    * union-find) the whole EM runs on the collected word table. The
+    * distributed loop below
     * is the 100 TB path and is BIT-IDENTICAL (TokenizerLocalSpec pins
     * path-vs-path equality including unicode, ties and fence errors);
     * the cutover removes ~19 driver jobs of scheduling/planning

@@ -85,9 +85,10 @@ object WordPiece {
         maxWordLen, minPairCount, charMinCount)
     }
 
-  /** Driver-side cutover (r18, the unigram/union-find precedent): at or
-    * under [[LocalTok.MaxCollectWordsConf]] distinct words the merge
-    * loop runs on the collected word table — bit-identical (fences,
+  /** Driver-side cutover (r18, the unigram/union-find precedent): when
+    * the distinct words fit under the driver-collect bound
+    * ([[graft.Collect]]) the merge loop runs on the collected word
+    * table — bit-identical (fences,
     * argmax tie-break in UTF-8 byte order, exact BigInt score, replace
     * fuse semantics; TokenizerLocalSpec pins path-vs-path equality).
     * None = vocabulary over the bound → distributed loop unchanged. */

@@ -329,59 +329,44 @@ class DedupSpec extends SparkSpec {
 
   test("simhashClusters wide-maxDist parameter drift falls back to distributed CC") {
     // maxDist = 15's analytic worst case (2^16 · Σ C(16,d) / 2 edges)
-    // blows past any sane collect bound, so the default must take the
-    // distributed connectedComponents path — and still produce the same
-    // labels the (explicitly unbounded) union-find path yields
+    // blows past any sane collect bound, so the guard counts the pairs
+    // and this small graph still collects; a zero bound forces the
+    // distributed connectedComponents path. Both must produce the labels
+    // the (unbounded) analytic union-find route yields
     val sigs = Dedup.simhash(docs, "doc_id", "text")
-    val viaFallback = Dedup.simhashClusters(sigs, maxDist = 15)
+    def clusters = Dedup.simhashClusters(sigs, maxDist = 15)
       .as[(Long, Long)].collect().toSet
-    val viaUnionFind = Dedup.simhashClusters(sigs, maxDist = 15,
-      maxCollectEdges = Long.MaxValue)
-      .as[(Long, Long)].collect().toSet
+    val viaFallback = graft.Collect.withMaxRows(0L)(clusters)
+    val viaUnionFind = graft.Collect.withMaxRows(Long.MaxValue)(clusters)
     assert(viaFallback == viaUnionFind)
+    assert(clusters == viaUnionFind)
     assert(viaFallback.nonEmpty) // Hamming <= 15 links nearly everything
   }
 
-  test("union-find cutover resolves from the session conf and both routes agree") {
-    // The -1 default reads spark.graft.dedup.maxCollectEdges (the r15
-    // verdict's deploy-knob ask): conf = 0 forces the distributed-CC
-    // route on a graph the in-code default would collect; conf = huge
-    // forces the driver union-find on the analytic worst case that the
-    // default routes distributed. Labels must be identical either way,
-    // and an EXPLICIT argument must still beat the conf.
-    val sigs = Dedup.simhash(docs, "doc_id", "text")
-    val default = Dedup.simhashClusters(sigs, maxDist = 1)
+  test("simhashClusters counts its pairs when the analytic guard is over the bound") {
+    // maxDist = 1's analytic worst case is 2^16 · 16 / 2 = 524,288 edges,
+    // over both bounds below, so the measured pair count decides: three
+    // contracted edges (a chain 0…00 ~ 0…01 ~ 0…11, and 1…11 ~ 1…10)
+    // fit under 3 and take the driver union-find; under 2 they run the
+    // distributed connectedComponents, whose rounds checkpoint
+    val sigs = Seq((1L, "0000000000000000"), (2L, "0000000000000001"),
+      (3L, "0000000000000011"), (4L, "1111111111111111"), (5L, "1111111111111110"),
+      (6L, "0000000000000000"), (7L, "0101010101010101")).toDF("id", "simhash")
+    def route(maxEdges: Long): (Set[(Long, Long)], Boolean) =
+      graft.Collect.withMaxRows(maxEdges) {
+        val out = Dedup.simhashClusters(sigs, maxDist = 1)
+        val checkpointed = out.queryExecution.optimizedPlan.collect {
+          case r: org.apache.spark.sql.execution.LogicalRDD => r }.nonEmpty
+        (out.as[(Long, Long)].collect().toSet, checkpointed)
+      }
+    val (viaUnionFind, ufCheckpointed) = route(3L)
+    val (viaComponents, ccCheckpointed) = route(2L)
+    assert(!ufCheckpointed && ccCheckpointed)
+    val viaDocs = Dedup.connectedComponents(
+      Dedup.simhashNearDupPairsFromSigs(sigs, maxDist = 1).select("id_a", "id_b"))
       .as[(Long, Long)].collect().toSet
-    def withConf(v: String)(body: => Set[(Long, Long)]): Set[(Long, Long)] = {
-      spark.conf.set(Dedup.MaxCollectEdgesConf, v)
-      try body finally spark.conf.unset(Dedup.MaxCollectEdgesConf)
-    }
-    // conf forces the distributed route (cutover 0 < any worst case)
-    val distributed = withConf("0") {
-      Dedup.simhashClusters(sigs, maxDist = 1).as[(Long, Long)].collect().toSet
-    }
-    assert(distributed == default)
-    // conf forces the union-find route at maxDist 15 (analytic worst
-    // case 2^16·(2^16−2)/2 ≈ 2^31 edges — over the 2M default, under
-    // the pinned 2^40)
-    val unionFind = withConf((1L << 40).toString) {
-      Dedup.simhashClusters(sigs, maxDist = 15).as[(Long, Long)].collect().toSet
-    }
-    assert(unionFind ==
-      Dedup.simhashClusters(sigs, maxDist = 15).as[(Long, Long)].collect().toSet)
-    // explicit argument wins over the conf (conf says collect-everything,
-    // the argument pins the distributed route — same labels again)
-    val explicitArg = withConf((1L << 40).toString) {
-      Dedup.simhashClusters(sigs, maxDist = 1, maxCollectEdges = 0L)
-        .as[(Long, Long)].collect().toSet
-    }
-    assert(explicitArg == default)
-    // and the measured-guard route honors the conf too
-    val measured = withConf("0") {
-      Dedup.simhashClustersMeasured(sigs, maxDist = 1)
-        .as[(Long, Long)].collect().toSet
-    }
-    assert(measured == default)
+    assert(viaUnionFind == viaComponents && viaUnionFind == viaDocs)
+    assert(viaUnionFind == Set((1L, 1L), (2L, 1L), (3L, 1L), (6L, 1L), (4L, 4L), (5L, 4L)))
   }
 
   test("chunkBounds splits bit positions evenly and covers all of them") {

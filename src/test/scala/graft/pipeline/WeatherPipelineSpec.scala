@@ -89,10 +89,16 @@ class WeatherPipelineSpec extends SparkSpec {
     val stg = WeatherPipeline.stgWeather(raw)
     val dim = WeatherPipeline.dimLocations(stg)
     val fct = WeatherPipeline.fctWeatherObservations(stg)
-    graft.quality.Checks.assertAll(
+    val observed = Seq(
       ("raw_weather", raw, WeatherPipeline.rawWeatherTests),
       ("dim_locations", dim, WeatherPipeline.dimLocationsTests),
-      ("fct_weather_observations", fct, WeatherPipeline.fctWeatherObservationsTests))
+      ("fct_weather_observations", fct, WeatherPipeline.fctWeatherObservationsTests)
+    ).map { case (model, frame, checks) =>
+      val o = new graft.quality.Checks.Observed(model, checks)
+      o.on(frame).write.format("noop").mode("overwrite").save()
+      o
+    }
+    graft.quality.Checks.assertObserved(observed)
     // inject a bad category → accepted_values must count every row
     val bad = fct.withColumn("temperature_category", lit("Scorching"))
     val n = graft.quality.Checks.reportDf(bad, WeatherPipeline.fctWeatherObservationsTests)

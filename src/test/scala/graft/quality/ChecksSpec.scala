@@ -43,34 +43,6 @@ class ChecksSpec extends SparkSpec {
     assert(Checks.reportDf(df, contract).count() == contract.size)
   }
 
-  test("assertAll passes a clean frame and names the failing check") {
-    Checks.assertAll(("clean", df.limit(2), contract)) // first two rows are clean
-    val e = intercept[IllegalArgumentException](Checks.assertAll(("t", df, contract)))
-    assert(e.getMessage.contains("t.unique_id"))
-    assert(e.getMessage.contains("t.in_range_temperature"))
-    assert(!e.getMessage.contains("temp_int_range")) // a passing check is not named
-    // one call over two models names the failures of both
-    val ids = Seq(1L, 1L).toDF("id")
-    val e2 = intercept[IllegalArgumentException](Checks.assertAll(
-      ("a", df, Seq(NotNull("city"))), ("b", ids, Seq(Unique(Seq("id"))))))
-    assert(e2.getMessage.contains("a.not_null_city") && e2.getMessage.contains("b.unique_id"))
-  }
-
-  test("assertTiers names only the first failing tier's checks") {
-    val ids = Seq(1L, 1L).toDF("id")
-    val marts = Seq(("m", df, contract))
-    // the source tier fails: the failing mart checks are not named
-    val e = intercept[IllegalArgumentException](Checks.assertTiers(
-      Seq(("src", ids, Seq(Unique(Seq("id"))))), marts))
-    assert(e.getMessage.endsWith("data-quality check failed: src.unique_id"), e.getMessage)
-    // the source tier passes: every failing mart check is named, sorted
-    val e2 = intercept[IllegalArgumentException](Checks.assertTiers(
-      Seq(("src", ids, Seq(NotNull("id")))), marts))
-    assert(e2.getMessage.endsWith("data-quality check failed: m.accepted_values_category, " +
-      "m.in_range_temperature, m.not_null_city, m.unique_id"), e2.getMessage)
-    Checks.assertTiers(Seq(("src", ids, Seq(NotNull("id")))), Seq(("m", df.limit(2), contract)))
-  }
-
   /** `checks` observed on one write of `df`, which has run. */
   private def observedWrite(model: String, df: org.apache.spark.sql.DataFrame,
                             checks: Seq[Check]): Observed = {
@@ -81,6 +53,36 @@ class ChecksSpec extends SparkSpec {
 
   private def observed(df: org.apache.spark.sql.DataFrame, checks: Seq[Check]): Map[String, Long] =
     observedWrite("t", df, checks).counts.toMap
+
+  test("assertObserved passes a clean frame and names the failing check") {
+    Checks.assertObserved(Seq(observedWrite("clean", df.limit(2), contract))) // first two rows are clean
+    val e = intercept[IllegalArgumentException](
+      Checks.assertObserved(Seq(observedWrite("t", df, contract))))
+    assert(e.getMessage.contains("t.unique_id"))
+    assert(e.getMessage.contains("t.in_range_temperature"))
+    assert(!e.getMessage.contains("temp_int_range")) // a passing check is not named
+    // one tier over two models names the failures of both
+    val ids = Seq(1L, 1L).toDF("id")
+    val e2 = intercept[IllegalArgumentException](Checks.assertObserved(Seq(
+      observedWrite("a", df, Seq(NotNull("city"))), observedWrite("b", ids, Seq(Unique(Seq("id")))))))
+    assert(e2.getMessage.contains("a.not_null_city") && e2.getMessage.contains("b.unique_id"))
+  }
+
+  test("assertObserved names only the first failing tier's checks") {
+    val ids = Seq(1L, 1L).toDF("id")
+    def marts = Seq(observedWrite("m", df, contract))
+    // the source tier fails: the failing mart checks are not named
+    val e = intercept[IllegalArgumentException](Checks.assertObserved(
+      Seq(observedWrite("src", ids, Seq(Unique(Seq("id"))))), marts))
+    assert(e.getMessage.endsWith("data-quality check failed: src.unique_id"), e.getMessage)
+    // the source tier passes: every failing mart check is named, sorted
+    val e2 = intercept[IllegalArgumentException](Checks.assertObserved(
+      Seq(observedWrite("src", ids, Seq(NotNull("id")))), marts))
+    assert(e2.getMessage.endsWith("data-quality check failed: m.accepted_values_category, " +
+      "m.in_range_temperature, m.not_null_city, m.unique_id"), e2.getMessage)
+    Checks.assertObserved(Seq(observedWrite("src", ids, Seq(NotNull("id")))),
+      Seq(observedWrite("m", df.limit(2), contract)))
+  }
 
   test("each check's observed metric is 0 exactly when reportDf counts no violation") {
     val keys = Seq((Some(1L), "a"), (Some(1L), "b"), (None, "a"), (None, "a")).toDF("id", "city")
@@ -108,13 +110,19 @@ class ChecksSpec extends SparkSpec {
       "unique_city" -> 1L))
   }
 
-  test("the observed gate names the same checks as assertTiers over the same tiers") {
+  test("the observed gate names what reportDf fails in the first failing tier") {
     val ids = Seq(1L, 1L).toDF("id")
     def message(gate: => Unit): String = intercept[IllegalArgumentException](gate).getMessage
+    /** The failing `<model>.<check>`s reportDf counts over one tier, sorted. */
+    def reported(tier: Seq[(String, org.apache.spark.sql.DataFrame, Seq[Check])]): Seq[String] =
+      tier.flatMap { case (model, frame, checks) =>
+        counts(frame, checks).collect { case (check, _, false) => s"$model.$check" } }.sorted
     for (sources <- Seq(Seq(("src", ids, Seq(Unique(Seq("id"))))), Seq(("src", ids, Seq(NotNull("id")))))) {
       val marts = Seq(("m", df, contract), ("clean", df.limit(2), contract))
       val Seq(src, mts) = Seq(sources, marts).map(_.map((observedWrite _).tupled))
-      assert(message(Checks.assertObserved(src, mts)) == message(Checks.assertTiers(sources, marts)))
+      val firstFailing = Seq(sources, marts).map(reported).find(_.nonEmpty).get
+      assert(message(Checks.assertObserved(src, mts)) ==
+        s"requirement failed: data-quality check failed: ${firstFailing.mkString(", ")}")
     }
     Checks.assertObserved(Seq(observedWrite("clean", df.limit(2), contract)))
   }

@@ -91,32 +91,34 @@ class EventStreamSpec extends SparkSpec {
   }
 
   test("readEvents consumes a parquet landing directory as a stream") {
-    val dir = java.nio.file.Files.createTempDirectory("es-files").toString
-    events.toDF().write.mode("overwrite").parquet(s"$dir/in")
-    val q = readEvents(spark, s"$dir/in", maxFilesPerTrigger = 2)
-      .groupBy("user_id").count()
-      .writeStream.format("memory").queryName("fe").outputMode("complete")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val out = spark.table("fe").orderBy("user_id").as[(Long, Long)].collect()
-    assert(out.toSeq == Seq((100L, 4L), (200L, 1L)))
+    withTempDir("es-files") { dir =>
+      events.toDF().write.mode("overwrite").parquet(s"$dir/in")
+      val q = readEvents(spark, s"$dir/in", maxFilesPerTrigger = 2)
+        .groupBy("user_id").count()
+        .writeStream.format("memory").queryName("fe").outputMode("complete")
+        .start()
+      q.processAllAvailable()
+      q.stop()
+      val out = spark.table("fe").orderBy("user_id").as[(Long, Long)].collect()
+      assert(out.toSeq == Seq((100L, 4L), (200L, 1L)))
+    }
   }
 
   test("rawEventSchema: empty landing dir falls back to the epoch-nanos pin") {
-    val dir = java.nio.file.Files.createTempDirectory("es-empty").toString
-    val schema = EventStream.rawEventSchema(spark, dir)
-    assert(schema("ts").dataType == org.apache.spark.sql.types.LongType)
-    assert(schema.fieldNames.toSet ==
-      Set("event_id", "ts", "user_id", "event_type", "value", "props"))
-    // a NOT-YET-CREATED dir (producer creates it on first write, after
-    // the stream starts) takes the same fallback instead of crashing
-    val missing = EventStream.rawEventSchema(spark, dir + "/never-created")
-    assert(missing == schema)
-    // a populated dir still infers from footers (the primary path)
-    val inferred =
-      EventStream.rawEventSchema(spark, "/root/testdata/sf0.001/events.parquet")
-    assert(inferred.fieldNames.contains("ts"))
+    withTempDir("es-empty") { dir =>
+      val schema = EventStream.rawEventSchema(spark, dir)
+      assert(schema("ts").dataType == org.apache.spark.sql.types.LongType)
+      assert(schema.fieldNames.toSet ==
+        Set("event_id", "ts", "user_id", "event_type", "value", "props"))
+      // a NOT-YET-CREATED dir (producer creates it on first write, after
+      // the stream starts) takes the same fallback instead of crashing
+      val missing = EventStream.rawEventSchema(spark, dir + "/never-created")
+      assert(missing == schema)
+      // a populated dir still infers from footers (the primary path)
+      val inferred =
+        EventStream.rawEventSchema(spark, "/root/testdata/sf0.001/events.parquet")
+      assert(inferred.fieldNames.contains("ts"))
+    }
   }
 
   test("batchEvents converts nanos ts and reads the driver table") {
@@ -216,62 +218,64 @@ class EventStreamSpec extends SparkSpec {
 
   test("checkpointed AvailableNow runs resume incrementally and stay exactly-once") {
     import org.apache.spark.sql.streaming.Trigger
-    val root = java.nio.file.Files.createTempDirectory("stream-ckpt")
-    val (landing, out, ckpt) =
-      (s"$root/landing", s"$root/out", s"$root/ckpt")
-    new java.io.File(landing).mkdirs()
-    def runOnce(): Unit = {
-      val q = spark.readStream
-        .schema("id LONG, v LONG")
-        .parquet(landing)
-        .writeStream
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    withTempDir("stream-ckpt") { root =>
+      val (landing, out, ckpt) =
+        (s"$root/landing", s"$root/out", s"$root/ckpt")
+      new java.io.File(landing).mkdirs()
+      def runOnce(): Unit = {
+        val q = spark.readStream
+          .schema("id LONG, v LONG")
+          .parquet(landing)
+          .writeStream
+          .format("parquet")
+          .option("path", out)
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .start()
+        q.awaitTermination()
+      }
+      // batch 1: ids 0..9; the run drains it and checkpoints the file log
+      (0L until 10L).map(i => (i, i * 2)).toDF("id", "v")
+        .coalesce(1).write.mode("append").parquet(landing)
+      runOnce()
+      assert(spark.read.parquet(out).count() == 10)
+      // batch 2: ids 10..14 land later; the resumed run must process ONLY
+      // the new file — replaying batch 1 would double its ids in the sink
+      (10L until 15L).map(i => (i, i * 2)).toDF("id", "v")
+        .coalesce(1).write.mode("append").parquet(landing)
+      runOnce()
+      val ids = spark.read.parquet(out).select("id").as[Long].collect().toSeq.sorted
+      assert(ids == (0L until 15L))
+      // a third run with nothing new is a no-op
+      runOnce()
+      assert(spark.read.parquet(out).count() == 15)
     }
-    // batch 1: ids 0..9; the run drains it and checkpoints the file log
-    (0L until 10L).map(i => (i, i * 2)).toDF("id", "v")
-      .coalesce(1).write.mode("append").parquet(landing)
-    runOnce()
-    assert(spark.read.parquet(out).count() == 10)
-    // batch 2: ids 10..14 land later; the resumed run must process ONLY
-    // the new file — replaying batch 1 would double its ids in the sink
-    (10L until 15L).map(i => (i, i * 2)).toDF("id", "v")
-      .coalesce(1).write.mode("append").parquet(landing)
-    runOnce()
-    val ids = spark.read.parquet(out).select("id").as[Long].collect().toSeq.sorted
-    assert(ids == (0L until 15L))
-    // a third run with nothing new is a no-op
-    runOnce()
-    assert(spark.read.parquet(out).count() == 15)
   }
 
   test("runStreamDedupOnce re-stages its duplicated landing when the source is regenerated") {
-    val dir = java.nio.file.Files.createTempDirectory("dedup-restage").toString
-    def write(ids: Seq[Long]): java.io.File = {
-      ids.map(i => (i, i * 1000000000L, 1L, "click", 1.0, "{}"))
-        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/events")
-      val part = new java.io.File(s"$dir/events").listFiles().filter(_.getName.endsWith(".parquet")).head
-      val src = new java.io.File(s"$dir/events.parquet")
-      java.nio.file.Files.move(part.toPath, src.toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      src
+    withTempDir("dedup-restage") { dir =>
+      def write(ids: Seq[Long]): java.io.File = {
+        ids.map(i => (i, i * 1000000000L, 1L, "click", 1.0, "{}"))
+          .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+          .coalesce(1).write.mode("overwrite").parquet(s"$dir/events")
+        val part = new java.io.File(s"$dir/events").listFiles().filter(_.getName.endsWith(".parquet")).head
+        val src = new java.io.File(s"$dir/events.parquet")
+        java.nio.file.Files.move(part.toPath, src.toPath, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        src
+      }
+      def dedup(src: java.io.File): Seq[Long] =
+        runStreamDedupOnce(spark, src.getAbsolutePath).as[Long].collect().toSeq.sorted
+      assert(dedup(write(1L to 3L)) == (1L to 3L))
+      // the regenerated source differs in size: both copies must follow it
+      val src = write(10L to 20L)
+      assert(dedup(src) == (10L to 20L))
+      val landing = new org.apache.hadoop.fs.Path(stageLanding(spark, src.getAbsolutePath, "events_dup", copies = 2))
+      try {
+        val copies = new java.io.File(landing.toUri).listFiles().filterNot(_.getName.startsWith("."))
+        assert(copies.length == 2)
+        copies.foreach(c => assert(java.nio.file.Files.mismatch(c.toPath, src.toPath) == -1, c))
+      } finally graft.Fs.of(spark, landing).delete(landing, true)
     }
-    def dedup(src: java.io.File): Seq[Long] =
-      runStreamDedupOnce(spark, src.getAbsolutePath).as[Long].collect().toSeq.sorted
-    assert(dedup(write(1L to 3L)) == (1L to 3L))
-    // the regenerated source differs in size: both copies must follow it
-    val src = write(10L to 20L)
-    assert(dedup(src) == (10L to 20L))
-    val landing = new org.apache.hadoop.fs.Path(stageLanding(spark, src.getAbsolutePath, "events_dup", copies = 2))
-    try {
-      val copies = new java.io.File(landing.toUri).listFiles().filterNot(_.getName.startsWith("."))
-      assert(copies.length == 2)
-      copies.foreach(c => assert(java.nio.file.Files.mismatch(c.toPath, src.toPath) == -1, c))
-    } finally graft.Fs.of(spark, landing).delete(landing, true)
   }
 
   test("runSessionizeOnce: non-final sessions emit, finals gate on the watermark") {
@@ -279,29 +283,30 @@ class EventStreamSpec extends SparkSpec {
     // FINAL session ends early enough that end + gap < maxTs − delay,
     // so the timeout batch emits it. user 2: one session ending at the
     // global max ts — must stay in state (never emitted).
-    val dir = java.nio.file.Files.createTempDirectory("sess-stream").toString
-    val s = 1000L // ms per second
-    val rows = Seq(
-      (1L, 10 * s, 1L, "c", 100.0), (2L, 12 * s, 1L, "c", 50.0), // session A: 10-12s
-      (3L, 60 * s, 1L, "c", 25.0),                               // session B: 60s
-      (4L, 500 * s, 2L, "c", 10.0)                               // user 2 @ max ts
-    ).toDF("event_id", "ts_ms", "user_id", "event_type", "value")
-      .select($"event_id", ($"ts_ms" * 1000000).as("ts"), $"user_id", $"event_type", $"value")
-    rows.coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    // stage dir trick: runSessionizeOnce stages the FILE at eventsPath;
-    // parquet write made a directory — point at one part file inside it
-    val part = new java.io.File(s"$dir/events.parquet").listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    val out = try EventStream.runSessionizeOnce(spark, part.getAbsolutePath,
-        gapMs = 10 * s, delayMs = 100 * s)
-      .orderBy("user_id", "start_ms")
-      .as[(Long, Long, Long, Long, Long)].collect().toSeq
-    finally graft.Fs.dropDerived(spark, Seq(part.getAbsolutePath)) // the landing outlives no source
-    // watermark = 500s − 100s = 400s. Session A closed in-batch; session
-    // B final but 60s + 10s < 400s → timed out and emitted; user 2's
-    // session ends at 500s → 510s > 400s → held in state.
-    assert(out == Seq(
-      (1L, 10 * s, 12 * s, 2L, 15000L), // 150.00 in cents
-      (1L, 60 * s, 60 * s, 1L, 2500L)))
+    withTempDir("sess-stream") { dir =>
+      val s = 1000L // ms per second
+      val rows = Seq(
+        (1L, 10 * s, 1L, "c", 100.0), (2L, 12 * s, 1L, "c", 50.0), // session A: 10-12s
+        (3L, 60 * s, 1L, "c", 25.0),                               // session B: 60s
+        (4L, 500 * s, 2L, "c", 10.0)                               // user 2 @ max ts
+      ).toDF("event_id", "ts_ms", "user_id", "event_type", "value")
+        .select($"event_id", ($"ts_ms" * 1000000).as("ts"), $"user_id", $"event_type", $"value")
+      rows.coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+      // stage dir trick: runSessionizeOnce stages the FILE at eventsPath;
+      // parquet write made a directory — point at one part file inside it
+      val part = new java.io.File(s"$dir/events.parquet").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val out = try EventStream.runSessionizeOnce(spark, part.getAbsolutePath,
+          gapMs = 10 * s, delayMs = 100 * s)
+        .orderBy("user_id", "start_ms")
+        .as[(Long, Long, Long, Long, Long)].collect().toSeq
+      finally graft.Fs.dropDerived(spark, Seq(part.getAbsolutePath)) // the landing outlives no source
+      // watermark = 500s − 100s = 400s. Session A closed in-batch; session
+      // B final but 60s + 10s < 400s → timed out and emitted; user 2's
+      // session ends at 500s → 510s > 400s → held in state.
+      assert(out == Seq(
+        (1L, 10 * s, 12 * s, 2L, 15000L), // 150.00 in cents
+        (1L, 60 * s, 60 * s, 1L, 2500L)))
+    }
   }
 }

@@ -35,84 +35,81 @@ class NearDup64StreamSpec extends NearDupRunnerScenarios {
   }
 
   test("bounded 64-bit stream: within-batch, cross-batch, eviction, window re-admission, replay") {
-    val root = java.nio.file.Files.createTempDirectory("neardup64-stream")
-    val (landing, admitted, store, ckpt) =
-      (s"$root/landing", s"$root/admitted", s"$root/store", s"$root/ckpt")
-    new java.io.File(landing).mkdirs()
-    def land(rows: Seq[(Long, String)]): Unit =
-      rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(landing)
-    def run(): Unit = NearDupStream.runNearDup64StreamOnce(
-      spark, landing, admitted, store, ckpt, maxDist = 5, capacity = 1)
-    def admittedIds(): Set[Long] =
-      spark.read.parquet(admitted).select($"id").as[Long].collect().toSet
-    def storeRows(): Set[(String, Long)] =
-      spark.read.parquet(store).select($"simhash", $"seq_batch")
-        .as[(String, Long)].collect().toSet
+    withTempDir("neardup64-stream") { root =>
+      val (landing, admitted, store, ckpt) =
+        (s"$root/landing", s"$root/admitted", s"$root/store", s"$root/ckpt")
+      new java.io.File(landing).mkdirs()
+      def land(rows: Seq[(Long, String)]): Unit =
+        rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(landing)
+      def run(): Unit = NearDupStream.runNearDup64StreamOnce(
+        spark, landing, admitted, store, ckpt, maxDist = 5, capacity = 1)
+      def admittedIds(): Set[Long] =
+        spark.read.parquet(admitted).select($"id").as[Long].collect().toSet
+      def storeRows(): Set[(String, Long)] =
+        spark.read.parquet(store).select($"simhash", $"seq_batch")
+          .as[(String, Long)].collect().toSet
 
-    // batch 0: exact pair (1,2) clusters within the batch (min id wins),
-    // 3 is distinct — both admitted, store = batch-0 signatures
-    land(Seq((1L, A), (2L, A), (3L, C)))
-    run()
-    assert(admittedIds() == Set(1L, 3L))
-    assert(storeRows() == Set((sig(A), 0L), (sig(C), 0L)))
+      // batch 0: exact pair (1,2) clusters within the batch (min id wins),
+      // 3 is distinct — both admitted, store = batch-0 signatures
+      land(Seq((1L, A), (2L, A), (3L, C)))
+      run()
+      assert(admittedIds() == Set(1L, 3L))
+      assert(storeRows() == Set((sig(A), 0L), (sig(C), 0L)))
 
-    // batch 1 (restart picks up only the new file): 11 is an exact dup of
-    // the admitted 3 → dropped by the CROSS-BATCH window match; 10 is new
-    land(Seq((10L, F), (11L, C)))
-    run()
-    assert(admittedIds() == Set(1L, 3L, 10L))
-    // eviction LAGS one batch: batch 0 left the match window (capacity=1
-    // is covered by batch 1 alone) but is still in storage
-    assert(storeRows() == Set((sig(A), 0L), (sig(C), 0L), (sig(F), 1L)))
+      // batch 1 (restart picks up only the new file): 11 is an exact dup of
+      // the admitted 3 → dropped by the CROSS-BATCH window match; 10 is new
+      land(Seq((10L, F), (11L, C)))
+      run()
+      assert(admittedIds() == Set(1L, 3L, 10L))
+      // eviction LAGS one batch: batch 0 left the match window (capacity=1
+      // is covered by batch 1 alone) but is still in storage
+      assert(storeRows() == Set((sig(A), 0L), (sig(C), 0L), (sig(F), 1L)))
 
-    // batch 2: new doc admitted; batch 0 now leaves STORAGE too
-    land(Seq((12L, G)))
-    run()
-    assert(admittedIds() == Set(1L, 3L, 10L, 12L))
-    assert(storeRows() == Set((sig(F), 1L), (sig(G), 2L)))
+      // batch 2: new doc admitted; batch 0 now leaves STORAGE too
+      land(Seq((12L, G)))
+      run()
+      assert(admittedIds() == Set(1L, 3L, 10L, 12L))
+      assert(storeRows() == Set((sig(F), 1L), (sig(G), 2L)))
 
-    // batch 3: 20 is a near-dup (Hamming 5) of the EVICTED doc 1 →
-    // re-admitted BY DESIGN (sliding-window semantics); 21 is an exact
-    // dup of 10 whose signature is in storage but OUTSIDE the capacity-1
-    // match window → also re-admitted (the window, not raw storage, is
-    // the match set — that asymmetry is what makes replay exact)
-    land(Seq((20L, A2), (21L, F)))
-    run()
-    assert(admittedIds() == Set(1L, 3L, 10L, 12L, 20L, 21L))
-    assert(storeRows() == Set((sig(G), 2L), (sig(A2), 3L), (sig(F), 3L)))
+      // batch 3: 20 is a near-dup (Hamming 5) of the EVICTED doc 1 →
+      // re-admitted BY DESIGN (sliding-window semantics); 21 is an exact
+      // dup of 10 whose signature is in storage but OUTSIDE the capacity-1
+      // match window → also re-admitted (the window, not raw storage, is
+      // the match set — that asymmetry is what makes replay exact)
+      land(Seq((20L, A2), (21L, F)))
+      run()
+      assert(admittedIds() == Set(1L, 3L, 10L, 12L, 20L, 21L))
+      assert(storeRows() == Set((sig(G), 2L), (sig(A2), 3L), (sig(F), 3L)))
 
-    // no new data → no-op
-    run()
-    assert(admittedIds() == Set(1L, 3L, 10L, 12L, 20L, 21L))
+      // no new data → no-op
+      run()
+      assert(admittedIds() == Set(1L, 3L, 10L, 12L, 20L, 21L))
 
-    // REPLAY of batch 3 (crash between store swap and checkpoint commit):
-    // the batch core re-runs against what the runner would reconstruct —
-    // trim(seq < 3) ∪ rows(seq = 3) — and must admit NOTHING: originally
-    // dropped docs re-drop against the same window, originally admitted
-    // docs match their own stored signatures at distance 0
-    val committed = spark.read.parquet(store)
-    val matchSet = NearDupStream.trimToCapacity(
-        committed.filter($"seq_batch" < 3), capacity = 1)
-      .select($"simhash")
-      .unionByName(committed.filter($"seq_batch" === 3).select($"simhash"))
-    val replay = NearDupStream.admitBatch64(
-      Seq((20L, A2), (21L, F)).toDF("doc_id", "text"), matchSet,
-      maxDist = 5, capacity = 1)
-    assert(replay.isEmpty)
+      // REPLAY of batch 3 (crash between store swap and checkpoint commit):
+      // the batch core re-runs against what the runner would reconstruct —
+      // trim(seq < 3) ∪ rows(seq = 3) — and must admit NOTHING: originally
+      // dropped docs re-drop against the same window, originally admitted
+      // docs match their own stored signatures at distance 0
+      val committed = spark.read.parquet(store)
+      val matchSet = NearDupStream.trimToCapacity(
+          committed.filter($"seq_batch" < 3), capacity = 1)
+        .select($"simhash")
+        .unionByName(committed.filter($"seq_batch" === 3).select($"simhash"))
+      val replay = NearDupStream.admitBatch64(
+        Seq((20L, A2), (21L, F)).toDF("doc_id", "text"), matchSet,
+        maxDist = 5, capacity = 1)
+      assert(replay.isEmpty)
+    }
   }
 
   test("evict gate harness: FIFO eviction fires (re-admission) and the trim conditional holds") {
-    def runGate(rows: Seq[(Long, String)]): Set[Long] = {
-      val dir = java.nio.file.Files.createTempDirectory("nd64-evict-fix").toFile
+    def runGate(rows: Seq[(Long, String)]): Set[Long] = withTempDir("nd64-evict-fix") { dir =>
       val p = new java.io.File(dir, "documents.parquet").getAbsolutePath
       try {
         rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(p)
         NearDupStream.runDocNearDup64EvictGateOnce(spark, p, maxDist = 3)
           .select($"id").as[Long].collect().toSet
-      } finally {
-        graft.Fs.dropDerived(spark, Seq(p)) // the parity template outlives no source
-        graft.Fs.deleteRecursively(dir)
-      }
+      } finally graft.Fs.dropDerived(spark, Seq(p)) // the parity template outlives no source
     }
     // Branch 1 — eviction FIRES: n=5 → capacity 1; batch 1 (ids 1,4,7)
     // admits 3 distinct docs ≥ capacity, so batch 2's window is batch 1

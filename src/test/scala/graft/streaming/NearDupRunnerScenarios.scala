@@ -11,14 +11,15 @@ trait NearDupRunnerScenarios extends SparkSpec {
 
   type Runner = (String, String, String, String) => Unit
 
-  /** Fresh (landing, admitted, store, checkpoint) dirs, as plain paths
-    * or as `file:` URIs. */
-  private def dirs(prefix: String, uri: Boolean = false): (String, String, String, String) = {
-    val root = java.nio.file.Files.createTempDirectory(prefix)
-    new java.io.File(s"$root/landing").mkdirs()
-    val base = if (uri) root.toUri.toString.stripSuffix("/") else root.toString
-    (s"$base/landing", s"$base/admitted", s"$base/store", s"$base/ckpt")
-  }
+  /** Runs `body` on fresh (landing, admitted, store, checkpoint) dirs,
+    * as plain paths or as `file:` URIs, and deletes them afterwards. */
+  private def withDirs[A](prefix: String, uri: Boolean = false)(
+      body: (String, String, String, String) => A): A =
+    withTempDir(prefix) { root =>
+      new java.io.File(s"$root/landing").mkdirs()
+      val base = if (uri) java.nio.file.Paths.get(root).toUri.toString.stripSuffix("/") else root
+      body(s"$base/landing", s"$base/admitted", s"$base/store", s"$base/ckpt")
+    }
 
   private def land(landing: String, rows: Seq[(Long, String)]): Unit =
     rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(landing)
@@ -38,80 +39,73 @@ trait NearDupRunnerScenarios extends SparkSpec {
     * checkpoint commit produces, without racing the engine's commit-log
     * internals. Each variant must reproduce the tables bit-for-bit, and
     * the replay over fully committed dirs must not rewrite any file. */
-  def perBatchCommitReplay(run: Runner, a: String, c: String, f: String): Unit = {
-    val (landing, admitted, store, ckpt) = dirs("neardup-replay")
-    def go(): Unit = run(landing, admitted, store, ckpt)
-    land(landing, Seq((1L, a), (3L, c)))
-    go()
-    land(landing, Seq((10L, f), (11L, c))) // 11 = exact dup of 3 → dropped cross-batch
-    go()
-    val (admitted0, store0) = (admittedRows(admitted), storeRows(store))
-    assert(admitted0.map(_._1) == Set(1L, 3L, 10L))
-    // LAYOUT: one partition dir per batch, each holding its parquet files
-    def files(dir: String): Map[String, Set[String]] =
-      new java.io.File(dir).listFiles().filter(_.isDirectory).map { d =>
-        d.getName -> d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
-      }.toMap
-    val (admittedFiles0, storeFiles0) = (files(admitted), files(store))
-    assert(admittedFiles0.keySet == Set("seq_batch=0", "seq_batch=1"))
-    assert(storeFiles0.keySet == Set("seq_batch=0", "seq_batch=1"))
-    def rm(dir: String): Unit = graft.Fs.deleteRecursively(new java.io.File(dir))
+  def perBatchCommitReplay(run: Runner, a: String, c: String, f: String): Unit =
+    withDirs("neardup-replay") { (landing, admitted, store, ckpt) =>
+      def go(): Unit = run(landing, admitted, store, ckpt)
+      land(landing, Seq((1L, a), (3L, c)))
+      go()
+      land(landing, Seq((10L, f), (11L, c))) // 11 = exact dup of 3 → dropped cross-batch
+      go()
+      val (admitted0, store0) = (admittedRows(admitted), storeRows(store))
+      assert(admitted0.map(_._1) == Set(1L, 3L, 10L))
+      // LAYOUT: one partition dir per batch, each holding its parquet files
+      def files(dir: String): Map[String, Set[String]] =
+        new java.io.File(dir).listFiles().filter(_.isDirectory).map { d =>
+          d.getName -> d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet
+        }.toMap
+      val (admittedFiles0, storeFiles0) = (files(admitted), files(store))
+      assert(admittedFiles0.keySet == Set("seq_batch=0", "seq_batch=1"))
+      assert(storeFiles0.keySet == Set("seq_batch=0", "seq_batch=1"))
+      def rm(dir: String): Unit = graft.Fs.deleteRecursively(new java.io.File(dir))
 
-    // both commits landed: every batch re-derives zero admissions
-    // (distance-0 self matches against its own seq dir), SKIPS the
-    // rewrite, and evicts nothing at or after its own seq — every
-    // parquet file stays in place
-    rm(ckpt); go()
-    assert(admittedRows(admitted) == admitted0 && storeRows(store) == store0)
-    assert(files(admitted) == admittedFiles0 && files(store) == storeFiles0)
-    // crash BETWEEN the admitted and store commits of batch 1: own
-    // admitted dir present, own store rows absent — the replay
-    // re-derives the identical admitted rows, dedups against the
-    // batch's own dir (no doubling), and recommits both dirs
-    rm(ckpt); rm(s"$store/seq_batch=1"); go()
-    assert(admittedRows(admitted) == admitted0 && storeRows(store) == store0)
-    // crash BEFORE any commit of batch 1: plain re-execution
-    rm(ckpt); rm(s"$store/seq_batch=1"); rm(s"$admitted/seq_batch=1"); go()
-    assert(admittedRows(admitted) == admitted0 && storeRows(store) == store0)
-    // crash DURING batch 1's commit writes: each table's stage is left
-    // holding a file that is not parquet; the replay clears it, reproduces
-    // both tables, and leaves no stage in the layout
-    rm(ckpt); rm(s"$store/seq_batch=1"); rm(s"$admitted/seq_batch=1")
-    for (dir <- Seq(admitted, store)) {
-      val stage = graft.Fs.stageOf(new org.apache.hadoop.fs.Path(s"$dir/seq_batch=1"))
-      val junk = new java.io.File(stage.toUri.getPath, "part-00000-junk.snappy.parquet")
-      assert(junk.getParentFile.mkdirs())
-      java.nio.file.Files.writeString(junk.toPath, "not parquet")
+      // both commits landed: every batch re-derives zero admissions
+      // (distance-0 self matches against its own seq dir), SKIPS the
+      // rewrite, and evicts nothing at or after its own seq — every
+      // parquet file stays in place
+      rm(ckpt); go()
+      assert(admittedRows(admitted) == admitted0 && storeRows(store) == store0)
+      assert(files(admitted) == admittedFiles0 && files(store) == storeFiles0)
+      // crash BETWEEN the admitted and store commits of batch 1: own
+      // admitted dir present, own store rows absent — the replay
+      // re-derives the identical admitted rows, dedups against the
+      // batch's own dir (no doubling), and recommits both dirs
+      rm(ckpt); rm(s"$store/seq_batch=1"); go()
+      assert(admittedRows(admitted) == admitted0 && storeRows(store) == store0)
+      // crash BEFORE any commit of batch 1: plain re-execution
+      rm(ckpt); rm(s"$store/seq_batch=1"); rm(s"$admitted/seq_batch=1"); go()
+      assert(admittedRows(admitted) == admitted0 && storeRows(store) == store0)
+      // crash DURING batch 1's commit writes: each table's stage is left
+      // holding a file that is not parquet; the replay clears it, reproduces
+      // both tables, and leaves no stage in the layout
+      rm(ckpt); rm(s"$store/seq_batch=1"); rm(s"$admitted/seq_batch=1")
+      for (dir <- Seq(admitted, store)) {
+        val stage = graft.Fs.stageOf(new org.apache.hadoop.fs.Path(s"$dir/seq_batch=1"))
+        val junk = new java.io.File(stage.toUri.getPath, "part-00000-junk.snappy.parquet")
+        assert(junk.getParentFile.mkdirs())
+        java.nio.file.Files.writeString(junk.toPath, "not parquet")
+      }
+      go()
+      assert(admittedRows(admitted) == admitted0 && storeRows(store) == store0)
+      assert(files(admitted).keySet == admittedFiles0.keySet)
+      assert(files(store).keySet == storeFiles0.keySet)
     }
-    go()
-    assert(admittedRows(admitted) == admitted0 && storeRows(store) == store0)
-    assert(files(admitted).keySet == admittedFiles0.keySet)
-    assert(files(store).keySet == storeFiles0.keySet)
-  }
 
   /** The same two-batch lifecycle through the driver path and, with the
-    * collect cutover disabled, through the distributed path: both must
-    * commit identical admitted and store tables. */
+    * driver-collect bound forced to 0, through the distributed path: both
+    * must commit identical admitted and store tables. */
   def overBoundFallback(run: Runner, a: String, a2: String, c: String,
                         f: String): Unit = {
-    def lifecycle(uri: Boolean = false): (Set[(Long, String, Long)], Set[(String, Long)]) = {
-      val (landing, admitted, store, ckpt) = dirs("neardup-fb", uri)
-      land(landing, Seq((1L, a), (2L, a), (3L, c)))
-      run(landing, admitted, store, ckpt)
-      land(landing, Seq((10L, f), (11L, c), (12L, a2)))
-      run(landing, admitted, store, ckpt)
-      (admittedRows(admitted), storeRows(store))
-    }
+    def lifecycle(uri: Boolean = false): (Set[(Long, String, Long)], Set[(String, Long)]) =
+      withDirs("neardup-fb", uri) { (landing, admitted, store, ckpt) =>
+        land(landing, Seq((1L, a), (2L, a), (3L, c)))
+        run(landing, admitted, store, ckpt)
+        land(landing, Seq((10L, f), (11L, c), (12L, a2)))
+        run(landing, admitted, store, ckpt)
+        (admittedRows(admitted), storeRows(store))
+      }
     val viaLocal = lifecycle()
     assert(lifecycle(uri = true) == viaLocal) // every dir given as a file: URI
-    val prev = spark.conf.getOption(NearDupStream.MaxCollectSigsConf)
-    spark.conf.set(NearDupStream.MaxCollectSigsConf, "0")
-    try {
-      val viaDistributed = lifecycle()
-      assert(viaLocal == viaDistributed)
-    } finally prev match {
-      case Some(v) => spark.conf.set(NearDupStream.MaxCollectSigsConf, v)
-      case None => spark.conf.unset(NearDupStream.MaxCollectSigsConf)
-    }
+    val viaDistributed = graft.Collect.withMaxRows(0L)(lifecycle())
+    assert(viaLocal == viaDistributed)
   }
 }

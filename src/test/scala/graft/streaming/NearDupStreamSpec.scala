@@ -27,41 +27,42 @@ class NearDupStreamSpec extends NearDupRunnerScenarios {
   }
 
   test("streaming near-dup: within-batch, cross-batch, restart, and no-op runs") {
-    val root = java.nio.file.Files.createTempDirectory("neardup-stream")
-    val (landing, admitted, store, ckpt) =
-      (s"$root/landing", s"$root/admitted", s"$root/store", s"$root/ckpt")
-    new java.io.File(landing).mkdirs()
-    def land(rows: Seq[(Long, String)]): Unit =
-      rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(landing)
-    def admittedIds(): Set[Long] =
-      spark.read.parquet(admitted).select($"id").as[Long].collect().toSet
-    def storeSigs(): Set[String] =
-      spark.read.parquet(store).select($"simhash").as[String].collect().toSet
+    withTempDir("neardup-stream") { root =>
+      val (landing, admitted, store, ckpt) =
+        (s"$root/landing", s"$root/admitted", s"$root/store", s"$root/ckpt")
+      new java.io.File(landing).mkdirs()
+      def land(rows: Seq[(Long, String)]): Unit =
+        rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(landing)
+      def admittedIds(): Set[Long] =
+        spark.read.parquet(admitted).select($"id").as[Long].collect().toSet
+      def storeSigs(): Set[String] =
+        spark.read.parquet(store).select($"simhash").as[String].collect().toSet
 
-    // batch 1: an exact pair (1,2) and a distinct doc (3) — min id survives
-    land(Seq((1L, A), (2L, A), (3L, C)))
-    NearDupStream.runNearDupStreamOnce(spark, landing, admitted, store, ckpt, maxDist = 3)
-    assert(admittedIds() == Set(1L, 3L))
-    assert(storeSigs() == Set(sig(A), sig(C)))
+      // batch 1: an exact pair (1,2) and a distinct doc (3) — min id survives
+      land(Seq((1L, A), (2L, A), (3L, C)))
+      NearDupStream.runNearDupStreamOnce(spark, landing, admitted, store, ckpt, maxDist = 3)
+      assert(admittedIds() == Set(1L, 3L))
+      assert(storeSigs() == Set(sig(A), sig(C)))
 
-    // batch 2 (restart picks up only the new file): 10 is a NEAR-dup of
-    // the admitted doc 1 (Hamming 1) → dropped against the store; 11 is
-    // an exact replay of 3 → dropped; 12 is new → admitted
-    land(Seq((10L, A2), (11L, C), (12L, F)))
-    NearDupStream.runNearDupStreamOnce(spark, landing, admitted, store, ckpt, maxDist = 3)
-    assert(admittedIds() == Set(1L, 3L, 12L))
-    assert(storeSigs() == Set(sig(A), sig(C), sig(F)))
+      // batch 2 (restart picks up only the new file): 10 is a NEAR-dup of
+      // the admitted doc 1 (Hamming 1) → dropped against the store; 11 is
+      // an exact replay of 3 → dropped; 12 is new → admitted
+      land(Seq((10L, A2), (11L, C), (12L, F)))
+      NearDupStream.runNearDupStreamOnce(spark, landing, admitted, store, ckpt, maxDist = 3)
+      assert(admittedIds() == Set(1L, 3L, 12L))
+      assert(storeSigs() == Set(sig(A), sig(C), sig(F)))
 
-    // no new data → no-op
-    NearDupStream.runNearDupStreamOnce(spark, landing, admitted, store, ckpt, maxDist = 3)
-    assert(admittedIds() == Set(1L, 3L, 12L))
+      // no new data → no-op
+      NearDupStream.runNearDupStreamOnce(spark, landing, admitted, store, ckpt, maxDist = 3)
+      assert(admittedIds() == Set(1L, 3L, 12L))
 
-    // direct replay of batch 1 through the batch core is idempotent
-    // against the store (every signature already present → nothing admitted)
-    val replay = NearDupStream.admitBatch(
-      Seq((1L, A), (2L, A), (3L, C)).toDF("doc_id", "text"),
-      spark.read.parquet(store), maxDist = 3)
-    assert(replay.isEmpty)
+      // direct replay of batch 1 through the batch core is idempotent
+      // against the store (every signature already present → nothing admitted)
+      val replay = NearDupStream.admitBatch(
+        Seq((1L, A), (2L, A), (3L, C)).toDF("doc_id", "text"),
+        spark.read.parquet(store), maxDist = 3)
+      assert(replay.isEmpty)
+    }
   }
 
   test("admitBatch with an empty store admits cluster minima only") {

@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 
 /** Bit-identity of the r18 driver-side tokenizer train-loop cutover
   * ([[LocalTok]]): for every output surface of the unigram and WordPiece
-  * chains, the LOCAL path (word table collected under
-  * `spark.graft.text.maxCollectWords`) must produce EXACTLY the rows of
-  * the DISTRIBUTED path (knob forced to 0), on corpora exercising the
+  * chains, the LOCAL path (word table collected under the
+  * driver-collect bound, [[graft.Collect]]) must produce EXACTLY the rows
+  * of the DISTRIBUTED path (bound forced to 0), on corpora exercising the
   * semantics that differ between naive JVM code and Catalyst:
   *   - supplementary characters (code-point length/substring, not
   *     UTF-16 units);
@@ -20,22 +20,18 @@ import org.apache.spark.sql.functions._
 class TokenizerLocalSpec extends SparkSpec {
   import spark.implicits._
 
-  private val Knob = LocalTok.MaxCollectWordsConf
-
   /** Collect rows of `df` as sorted value strings — exact compare. */
   private def rowsOf(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
-  /** Run `build` under both knob settings from a cold epoch each and
+  /** Run `build` under the driver's bound and a zero bound, from a cold epoch each, and
     * return (local rows, distributed rows) for each surface. */
   private def bothPaths(surfaces: => Seq[DataFrame]): (Seq[Seq[String]], Seq[Seq[String]]) = {
     graft.Caches.release()
-    spark.conf.unset(Knob)
     val local = surfaces.map(rowsOf)
     graft.Caches.release()
-    spark.conf.set(Knob, "0")
-    val dist = try surfaces.map(rowsOf)
-    finally { spark.conf.unset(Knob); graft.Caches.release() }
+    val dist = try graft.Collect.withMaxRows(0L)(surfaces.map(rowsOf))
+    finally graft.Caches.release()
     (local, dist)
   }
 
@@ -89,7 +85,6 @@ class TokenizerLocalSpec extends SparkSpec {
 
   test("local fences: same trigger, same message content as the engine fences") {
     graft.Caches.release()
-    spark.conf.unset(Knob)
     val long = Seq((1L, "a " + "x" * 17)).toDF("doc_id", "text")
     val e1 = intercept[Exception] {
       Unigram.unigramTrain(long, "doc_id", "text").collect()
@@ -114,8 +109,7 @@ class TokenizerLocalSpec extends SparkSpec {
 
   test("over-bound vocabularies fall back to the distributed path") {
     graft.Caches.release()
-    spark.conf.set(Knob, "2") // 3 distinct words > bound
-    try {
+    try graft.Collect.withMaxRows(2L) { // 3 distinct words > bound
       val docs = Seq((1L, "ab cd ef")).toDF("doc_id", "text")
       val words = Unigram.wordCounts(docs, "doc_id", "text")
       assert(LocalTok.collectedWords(words).isEmpty)
@@ -124,6 +118,6 @@ class TokenizerLocalSpec extends SparkSpec {
         maxPieceLen = 2, maxWordLen = 8, rounds = 1, minCount = 2,
         vocabSize = 10).collect()
       assert(out.nonEmpty)
-    } finally { spark.conf.unset(Knob); graft.Caches.release() }
+    } finally graft.Caches.release()
   }
 }
