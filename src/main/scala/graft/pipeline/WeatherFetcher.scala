@@ -1,6 +1,9 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Driver-side fetch seam for the reference's per-city HTTP loop
   * (reference: dags/weatherstack_full_pipeline.py:58-116 — requests.get +
@@ -51,13 +54,18 @@ object WeatherFetcher {
       FetchResult(city, out, err, attempt)
     }
 
+  /** The rows of [[payloads]]: one fetched payload per city. */
+  private val payloadRowSchema: StructType = StructType(Seq(
+    StructField("city", StringType), StructField("raw_json", StringType)))
+
   /** Successful fetches → the (city, raw_json) payload frame `ingest`
-    * consumes; skipped cities drop out (the reference's `continue`). */
-  def payloads(spark: SparkSession, results: Seq[FetchResult]): DataFrame = {
-    import spark.implicits._
-    results.collect { case FetchResult(city, Some(json), _, _) => (city, json) }
-      .toDF("city", "raw_json")
-  }
+    * consumes; skipped cities drop out (the reference's `continue`).
+    * The rows are built against [[payloadRowSchema]], with no encoder
+    * derived by reflection, and the frame is a `LocalRelation`, so
+    * `ingest` over it folds on the driver. */
+  def payloads(spark: SparkSession, results: Seq[FetchResult]): DataFrame =
+    spark.createDataFrame(results.collect { case FetchResult(city, Some(json), _, _) =>
+      Row(city, json) }.asJava, payloadRowSchema)
 
   /** Deterministic in-memory fetcher for tests/offline runs: canned
     * payload per city; `failFirst(city) = n` makes the first n attempts

@@ -320,10 +320,20 @@ object WeatherPipeline {
     * `distinct` is then satisfied without an exchange and each action
     * is a single task. The coalesce comes after
     * `ingest`, not on the payload frame: over the payloads it would stop
-    * `ConvertToLocalRelation` from folding `ingest` on the driver. Any
-    * other batch (JSON landing files, a backfill) runs in the caller's
-    * session with codegen, keeps its scan parallelism and is persisted
-    * across its consumers instead of re-parsing the payloads per action.
+    * `ConvertToLocalRelation` from folding `ingest` on the driver. Its
+    * writes run no write job: each is one collect, which fires the
+    * model's observation, and Spark's parquet writer run on the driver
+    * (`DriverWrite`), leaving one file per table or partition dir and
+    * `_SUCCESS`, as a single-task `df.write` does. A write job would
+    * ship the session's Hadoop conf (about 1,100 properties, 113 KB
+    * serialized) twice in its task binary, serialized on the scheduler
+    * thread and deserialized in the task, and its output committer would
+    * move each file through `_temporary` into the stage that the publish
+    * renames again. Any other batch (JSON
+    * landing files, a backfill, a stream's micro-batch) runs in the
+    * caller's session with codegen, keeps its scan parallelism, is
+    * persisted across its consumers instead of re-parsing the payloads
+    * per action, and writes with `df.write`.
     *
     * A driver-held batch with no rows (every city skipped) returns before
     * any action: the previous day's marts stay as they are, and a fresh
@@ -333,7 +343,12 @@ object WeatherPipeline {
                outDir: String): Unit =
     publish(ingest(payloads, dataIntervalStart, now), outDir)
 
-  /** [[runBatch]]'s wave and publish over the raw rows `ingested`. */
+  /** [[runBatch]]'s wave and publish over the raw rows `ingested`. A
+    * driver-held batch (a `LocalRelation`) writes each model with
+    * `DriverWrite`, any other with `df.write`. The driver write collects
+    * a model's rows without a `graft.Collect` bound, because they derive
+    * from the `LocalRelation`'s rows, which are on the driver already,
+    * and no model has more rows than raw. */
   private def publish(ingested: DataFrame, outDir: String): Unit = {
     val spark = ingested.sparkSession
     val driverHeld = ingested.queryExecution.optimizedPlan match {
@@ -342,19 +357,26 @@ object WeatherPipeline {
       case _ => None
     }
     val raw = driverHeld match {
-      case Some(l) => bridge.frame(interpreted(spark), l).coalesce(1)
+      case Some(l) => held(spark, l)
       case None => ingested.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    }
+    val write: (DataFrame, Path, Option[String]) => Unit = driverHeld match {
+      // every written model's rows derive from the rows of a
+      // LocalRelation already on the driver, and none has more rows than
+      // it: collecting them needs no graft.Collect bound
+      case Some(_) =>
+        val conf = bridge.hadoopConf(spark)
+        DriverWrite.parquet(_, _, _, conf)
+      case None => (df, dir, partitionedBy) =>
+        df.write.partitionBy(partitionedBy.toSeq: _*).parquet(dir.toString)
     }
     val out = new Path(outDir)
     val fs = Fs.of(spark, out)
     try {
-      val tables = frames(raw).collect { case (m, df) if m.written =>
-        val checks = new Checks.Observed(m.gateName, m.tests)
-        (m, checks, checks.on(df))
-      }
+      val tables = observed(raw)
       Fs.commitTables(fs, out, tables.map { case (m, _, _) => (m.path, m.partitionedBy) }) { stage =>
         inParallel(tables.map { case (m, _, df) => () =>
-          df.write.partitionBy(m.partitionedBy.toSeq: _*).parquet(new Path(stage, m.path).toString)
+          write(df, new Path(stage, m.path), m.partitionedBy)
         }: _*)
         Checks.assertObserved(tables.map(_._1.schema).distinct.map(schema =>
           tables.collect { case (m, checks, _) if m.schema == schema => checks }): _*)
@@ -363,6 +385,20 @@ object WeatherPipeline {
       tables.foreach { case (m, _, _) => spark.catalog.refreshByPath(new Path(out, m.path).toString) }
     } finally if (driverHeld.isEmpty) raw.unpersist()
   }
+
+  /** The written models of [[models]] over the batch's `raw` rows, each
+    * frame observing its model's tests (`Checks.Observed`) for one
+    * action. */
+  private[pipeline] def observed(raw: DataFrame): Seq[(Model, Checks.Observed, DataFrame)] =
+    frames(raw).collect { case (m, df) if m.written =>
+      val checks = new Checks.Observed(m.gateName, m.tests)
+      (m, checks, checks.on(df))
+    }
+
+  /** The rows `l` of a driver-held batch as [[publish]] runs them: in an
+    * [[interpreted]] clone of `spark`, coalesced to one partition. */
+  private[pipeline] def held(spark: SparkSession, l: LocalRelation): DataFrame =
+    bridge.frame(interpreted(spark), l).coalesce(1)
 
   /** A per-batch clone of `spark` that interprets its plans: no
     * whole-stage codegen and interpreted expressions. */

@@ -40,6 +40,17 @@ class WeatherFetcherSpec extends SparkSpec {
     assert(df.collect().map(_.getString(0)).toSeq == Seq("Paris"))
   }
 
+  test("the payload frame is driver-held: ingest over it folds to a LocalRelation") {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val f = new WeatherFetcher.FakeFetcher(Map("Paris" -> goodJson))
+    val df = WeatherFetcher.payloads(spark, WeatherFetcher.fetchAll(f, Seq("Paris"), retries = 0))
+    assert(df.schema.map(f => (f.name, f.dataType.simpleString, f.nullable)) ==
+      Seq(("city", "string", true), ("raw_json", "string", true)))
+    val t = Timestamp.valueOf("2024-06-02 08:30:00")
+    val ingested = WeatherPipeline.ingest(df, t, t).queryExecution.optimizedPlan
+    assert(ingested.isInstanceOf[LocalRelation], ingested.treeString)
+  }
+
   test("runDaily: fetch -> ingest -> marts end-to-end with per-city skip") {
     withTempDir("rundaily") { dir =>
       val f = new WeatherFetcher.FakeFetcher(

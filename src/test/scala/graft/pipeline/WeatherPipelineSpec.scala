@@ -8,6 +8,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan,
   WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.WriteFilesExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
 import graft.SparkSpec
@@ -124,21 +126,19 @@ class WeatherPipelineSpec extends SparkSpec {
     plans.asScala.toSeq
   }
 
-  /** Whole-stage codegen stages in a plan, through adaptive wrappers. */
-  private def codegenStages(p: SparkPlan): Int = p match {
-    case w: WholeStageCodegenExec => 1 + codegenStages(w.child)
-    case a: AdaptiveSparkPlanExec => codegenStages(a.executedPlan)
-    case q: QueryStageExec => codegenStages(q.plan)
-    case other => other.children.map(codegenStages).sum
-  }
+  /** Every node of a plan, through adaptive wrappers. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+    case q: QueryStageExec => nodes(q.plan)
+    case other => other.children.flatMap(nodes)
+  })
 
-  /** The files every file scan in a plan reads, through adaptive wrappers. */
-  private def filesRead(p: SparkPlan): Seq[String] = p match {
-    case f: FileSourceScanExec => f.relation.location.inputFiles.toSeq
-    case a: AdaptiveSparkPlanExec => filesRead(a.executedPlan)
-    case q: QueryStageExec => filesRead(q.plan)
-    case other => other.children.flatMap(filesRead)
-  }
+  /** Whole-stage codegen stages in a plan. */
+  private def codegenStages(p: SparkPlan): Int = nodes(p).count(_.isInstanceOf[WholeStageCodegenExec])
+
+  /** The files every file scan in a plan reads. */
+  private def filesRead(p: SparkPlan): Seq[String] =
+    nodes(p).collect { case f: FileSourceScanExec => f.relation.location.inputFiles.toSeq }.flatten
 
   test("end-to-end: JSON landing files → permissive source → pipeline → partitioned marts") {
     import graft.sources.IO
@@ -446,15 +446,23 @@ class WeatherPipelineSpec extends SparkSpec {
       WeatherPipeline.runDaily(spark, fetcher, threeCityNames, t0, now, dir) // warm-up day
       val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       // the next day, with its own interval and `now` literals
-      val (_, r) = graft.obs.Trace.around(spark) {
-        WeatherPipeline.runDaily(spark, fetcher, threeCityNames, Timestamp.valueOf("2024-06-03 08:30:00"),
-          Timestamp.valueOf("2024-06-03 09:00:00"), dir)
+      var r: graft.obs.Trace.Report = null
+      val plans = executedPlans {
+        r = graft.obs.Trace.around(spark) {
+          WeatherPipeline.runDaily(spark, fetcher, threeCityNames, Timestamp.valueOf("2024-06-03 08:30:00"),
+            Timestamp.valueOf("2024-06-03 09:00:00"), dir)
+        }._2
       }
-      // raw write, dim write, fct write, each carrying its checks; the
-      // actions of the batch's cloned session reach a listener registered
-      // on the caller's
-      assert(r.actions == 3, r.summary)
-      assert(r.jobs <= 3 && r.tasks == r.jobs && r.shuffleBytes == 0, r.summary)
+      // one collect per written model, each carrying its checks and
+      // written on the driver; the actions of the batch's cloned session
+      // reach a listener registered on the caller's
+      val written = WeatherPipeline.models.count(_.written)
+      assert(r.actions == written && plans.size == written, r.summary)
+      assert(r.jobs == written && r.tasks == r.jobs && r.shuffleBytes == 0, r.summary)
+      val writes = plans.flatMap(nodes).collect {
+        case w @ (_: DataWritingCommandExec | _: WriteFilesExec) => w.nodeName
+      }
+      assert(writes.isEmpty, plans.mkString("\n"))
       assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
         "a warm day compiled generated code")
       def dataFiles(d: String): Int =
