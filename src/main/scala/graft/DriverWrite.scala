@@ -1,4 +1,4 @@
-package graft.pipeline
+package graft
 
 import java.util.UUID
 
@@ -6,7 +6,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericInternalRow}
@@ -15,30 +15,31 @@ import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StringType, StructType}
 
-/** `df.write.partitionBy(partitionedBy).parquet(dir)` run on the driver,
-  * for a frame whose rows are already there: the rows are collected
-  * (`bridge.collectInternal`, one SQL execution, so an observation on
-  * `df` completes as it does for a write) and written with Spark's own
-  * parquet writer (`ParquetFileFormat.prepareWrite` and its
-  * `OutputWriterFactory`) on the Hadoop conf `conf`, which comes from
-  * `df`'s session (`bridge.hadoopConf`). The layout is a single-task
-  * write's: one `part-00000-<uuid>-c000.snappy.parquet` under `dir`, or
-  * one `part-00000-<uuid>.c000.snappy.parquet` under each partition dir,
+/** The one driver-side table writer: `df.write.partitionBy(partitionedBy)
+  * .parquet(dir)` for rows that are already on the driver, as Catalyst
+  * rows of `schema` (a driver-held pipeline batch collects its models
+  * with `bridge.collectInternal`; the near-dup stream's driver route
+  * holds its admitted and store rows). It runs Spark's own parquet
+  * writer (`ParquetFileFormat.prepareWrite` and its
+  * `OutputWriterFactory`) under `spark`'s SQL conf on the Hadoop conf
+  * `conf`, which comes from the same session (`bridge.hadoopConf`), and
+  * runs no Spark job. The layout is a single-task write's: one
+  * `part-00000-<uuid>-c000.snappy.parquet` under `dir`, or one
+  * `part-00000-<uuid>.c000.snappy.parquet` under each partition dir,
   * named as Spark names it (the value cast to a string in the session
   * time zone, escaped), plus `_SUCCESS` at `dir`. Unpartitioned, an
-  * empty frame still writes its one file, which carries the schema;
+  * empty row set still writes its one file, which carries the schema;
   * partitioned, it writes only `_SUCCESS`.
   *
   * What it leaves out is the write job: no task binary carrying the
   * Hadoop conf, and no output committer moving the files through
   * `_temporary`. So it suits a private stage that is published by a
-  * rename of its own (`graft.Fs.commitTables`), not a live dir.
+  * rename of its own (`Fs.commit`, `Fs.commitTables`), not a live dir.
   */
-private[pipeline] object DriverWrite {
+private[graft] object DriverWrite {
 
-  def parquet(df: DataFrame, dir: Path, partitionedBy: Option[String], conf: Configuration): Unit = {
-    val spark = df.sparkSession
-    val (schema, rows) = bridge.collectInternal(df)
+  def parquet(spark: SparkSession, schema: StructType, rows: Iterable[InternalRow], dir: Path,
+              partitionedBy: Option[String], conf: Configuration): Unit = {
     val partition = partitionedBy.map(schema.fieldIndex)
     val dataCols = schema.indices.filterNot(partition.contains)
     val dataSchema = StructType(dataCols.map(schema(_)))

@@ -1,8 +1,11 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.text.TextOps
 
 /** Deduplication operators for training-data pipelines: exact, n-gram
@@ -756,13 +759,13 @@ object Dedup {
   def simhashNearDupPairsFromSigs(sigs: DataFrame, maxDist: Int,
                                   maxExpectedCandidates: Long = 1L << 22): DataFrame = {
     require(maxDist >= 0 && maxDist < 16, s"maxDist=$maxDist out of range 0..15")
-    // SIZE FENCE (r13 SCALE study 1 made the law a measurement: this
-    // 16-bit teaching shape read 162× at ×100 corpus — quadratic — while
-    // the auto-banded 64-bit production shape read 7.54× on identical
-    // data). A deploy rule that lives only in scaladoc is not a rule, so
-    // the width's safe bound is enforced here, estimate-first like the
-    // 64-bit path's sizing: expected bucket-join candidates under uniform
-    // hashing are (maxDist+1)·n²/2^(w+1) for the narrowest chunk width
+    // SIZE FENCE: this 16-bit shape's candidate volume is quadratic in
+    // the corpus, so its safe bound is enforced here, not only stated
+    // (measured on identical data at ×100 corpus: 162× wall here against
+    // 7.54× for the auto-banded 64-bit shape, SCALE_r13.txt study 1).
+    // It is estimate-first like the 64-bit path's sizing: expected
+    // bucket-join candidates under uniform hashing are
+    // (maxDist+1)·n²/2^(w+1) for the narrowest chunk width
     // w = ⌊16/(maxDist+1)⌋ — THE quantity that goes quadratic. The
     // default cap (2^22 ≈ 4.2M candidates, ≲1 s of XOR-popcount verify
     // per 32 cores) admits every gate/bench corpus (500 docs → 12k
@@ -819,8 +822,8 @@ object Dedup {
       .distinct()
   }
 
-  /** Production band width for the 64-bit simhash (the r12 knobs-audit
-    * rule, now executable): clamp(⌈log₂ n⌉, 14, ⌊64/(maxDist+1)⌋).
+  /** Production band width for the 64-bit simhash:
+    * clamp(⌈log₂ n⌉, 14, ⌊64/(maxDist+1)⌋).
     * Holding expected in-bucket collisions ~constant needs band width
     * ≈ log₂ n bits (n/2^w docs share a bucket value in expectation —
     * the `Vectors.bitsFor` law applied to Hamming banding); the CAP is
@@ -1071,14 +1074,21 @@ object Dedup {
     else clustersFromContractedPairs(sigs, hashPairs, maxEdges)
   }
 
-  /** Driver union-find over a COLLECTED contracted pair table —
-    * union-by-min keeps every root the component's minimum node key.
-    * Callers guarantee the collect is bounded (analytic 2^16 worst case
-    * or a measured pair count). Returns the (simhash, comp) label table
-    * as a driver-local frame. */
-  private def unionFindComp(spark: org.apache.spark.sql.SparkSession,
-                            pairRows: Array[org.apache.spark.sql.Row]): DataFrame = {
-    import spark.implicits._
+  /** Driver union-find over a COLLECTED contracted pair table: the
+    * (simhash, comp) label table of [[unionByMin]] as a driver-local
+    * frame. Callers guarantee the collect is bounded (analytic 2^16
+    * worst case or a measured pair count). */
+  private def unionFindComp(spark: SparkSession, pairRows: Array[Row]): DataFrame = {
+    val comp = unionByMin(pairRows.iterator.map(r => (r.getString(0), r.getString(1))))
+    spark.createDataFrame(comp.map { case (k, c) => Row(k, c) }.toSeq.asJava,
+      StructType(Seq("simhash", "comp").map(StructField(_, StringType))))
+  }
+
+  /** The one driver union-find: the components of the graph whose edges
+    * are `pairs`, as each node seen in a pair mapped to its component's
+    * root. Union-by-min keeps every root the component's minimum node
+    * key; a node in no pair is its own root and has no entry. */
+  private[graft] def unionByMin(pairs: IterableOnce[(String, String)]): Map[String, String] = {
     val parent = scala.collection.mutable.HashMap.empty[String, String]
     def find(x: String): String = {
       var r = x
@@ -1087,11 +1097,11 @@ object Dedup {
       }
       r
     }
-    pairRows.foreach { row =>
-      val ra = find(row.getString(0)); val rb = find(row.getString(1))
+    pairs.iterator.foreach { case (a, b) =>
+      val ra = find(a); val rb = find(b)
       if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
     }
-    parent.keys.toSeq.map(k => (k, find(k))).toDF("simhash", "comp")
+    parent.keys.toSeq.map(k => k -> find(k)).toMap
   }
 
   /** Expand contracted component labels back to docs: isolated

@@ -10,7 +10,7 @@ import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
-import graft.Fs
+import graft.{DriverWrite, Fs}
 import graft.ops.Relational
 import graft.quality.Checks
 import graft.quality.Checks._
@@ -344,11 +344,13 @@ object WeatherPipeline {
     publish(ingest(payloads, dataIntervalStart, now), outDir)
 
   /** [[runBatch]]'s wave and publish over the raw rows `ingested`. A
-    * driver-held batch (a `LocalRelation`) writes each model with
-    * `DriverWrite`, any other with `df.write`. The driver write collects
-    * a model's rows without a `graft.Collect` bound, because they derive
-    * from the `LocalRelation`'s rows, which are on the driver already,
-    * and no model has more rows than raw. */
+    * driver-held batch (a `LocalRelation`) collects each model's rows
+    * with `bridge.collectInternal`, one SQL execution, so the model's
+    * observation completes as it does for a write, and writes them with
+    * `DriverWrite`; any other batch writes with `df.write`. The collect
+    * takes no `graft.Collect` bound, because the rows derive from the
+    * `LocalRelation`'s rows, which are on the driver already, and no
+    * model has more rows than raw. */
   private def publish(ingested: DataFrame, outDir: String): Unit = {
     val spark = ingested.sparkSession
     val driverHeld = ingested.queryExecution.optimizedPlan match {
@@ -366,7 +368,9 @@ object WeatherPipeline {
       // it: collecting them needs no graft.Collect bound
       case Some(_) =>
         val conf = bridge.hadoopConf(spark)
-        DriverWrite.parquet(_, _, _, conf)
+        (df, dir, partitionedBy) =>
+          val (schema, rows) = bridge.collectInternal(df)
+          DriverWrite.parquet(df.sparkSession, schema, rows, dir, partitionedBy, conf)
       case None => (df, dir, partitionedBy) =>
         df.write.partitionBy(partitionedBy.toSeq: _*).parquet(dir.toString)
     }

@@ -43,12 +43,16 @@ object Checks {
     def metric: Column = coalesce(sum(when(rowViolation, 1L).otherwise(0L)), lit(0L))
   }
 
-  /** dbt `unique` (composite keys allowed). Not a row predicate — its
-    * violation count is "number of duplicated key groups". Its metric,
-    * `count(1) - size(collect_set(struct(cols)))`, counts the rows past
-    * each key's first, NULL keys included. The set holds the frame's
-    * distinct keys, so observe it on a bounded frame: a pipeline batch
-    * has one key per city (a few on a `runDaily` day, 80k on a backfill). */
+  /** dbt `unique` (composite keys allowed). Not a row predicate, and it
+    * has two counts, which are 0 together: [[violations]], and so
+    * `reportDf`, counts the duplicated keys (dbt's `unique` rows, one per
+    * key seen more than once); its metric, and so [[Observed.counts]],
+    * counts the rows past each key's first. A key three times and
+    * another twice are 2 violations and a metric of 3. The metric is
+    * `count(1) - size(collect_set(struct(cols)))`, NULL keys included.
+    * The set holds the frame's distinct keys, so observe it on a bounded
+    * frame: a pipeline batch has one key per city (a few on a `runDaily`
+    * day, 80k on a backfill). */
   final case class Unique(cols: Seq[String]) extends Check {
     val name = s"unique_${cols.mkString("_")}"
     def violations(df: DataFrame): DataFrame = Relational.duplicates(df, cols)
@@ -125,9 +129,12 @@ object Checks {
       df.observe(observation, first, more: _*)
     }
 
-    /** Each check's name and metric, in contract order. Blocks until the
-      * action over [[on]]'s frame has succeeded, and forever if it
-      * failed, so call it only once that action returned. */
+    /** Each check's name and metric, in contract order: the violating
+      * rows of a row check, and for a [[Unique]] the rows past each
+      * key's first, not `reportDf`'s count of duplicated keys (the two
+      * are 0 together). Blocks until the action over [[on]]'s frame has
+      * succeeded, and forever if it failed, so call it only once that
+      * action returned. */
     def counts: Seq[(String, Long)] = {
       val observed = observation.get
       checks.map(c => c.name -> observed(c.name).asInstanceOf[Long])

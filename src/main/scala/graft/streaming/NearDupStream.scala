@@ -1,9 +1,13 @@
 package graft.streaming
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.dedup.Dedup
 
@@ -119,9 +123,9 @@ object NearDupStream {
     * decision set is identical regardless of band width):
     *   1. within-batch signature-CONTRACTED clustering — nodes = the
     *      distinct signatures, edges = Hamming ≤ maxDist, components by
-    *      union-find; every ≥2-doc component keeps its min doc id
-    *      (identical-signature docs share a node, so exact dups cluster
-    *      with zero edges);
+    *      `Dedup.unionByMin`; every ≥2-doc component keeps its min doc
+    *      id (identical-signature docs share a node, so exact dups
+    *      cluster with zero edges);
     *   2. store matching — a surviving doc whose signature is within
     *      `maxDist` of ANY match-set signature is dropped.
     * Returns the admitted (id, simhash) rows (input order). */
@@ -147,35 +151,19 @@ object NearDupStream {
     import scala.collection.mutable
     val distinctSigs = batch.map(_._2).distinct
     val sigHalves = distinctSigs.iterator.map(s => s -> halves(s)).toMap
-    val parent = mutable.HashMap.empty[String, String]
-    def find(x: String): String = {
-      var r = x
-      while (parent.getOrElseUpdate(r, r) != r) {
-        parent(r) = parent(parent(r)); r = parent(r)
-      }
-      r
-    }
     val buckets = mutable.HashMap.empty[(Int, String), mutable.ArrayBuffer[String]]
     distinctSigs.foreach { s =>
       bands(s).foreach(b =>
         buckets.getOrElseUpdate(b, mutable.ArrayBuffer.empty) += s)
     }
-    buckets.values.foreach { bucket =>
-      var i = 0
-      while (i < bucket.length) {
-        var j = i + 1
-        while (j < bucket.length) {
-          if (ham(sigHalves(bucket(i)), sigHalves(bucket(j))) <= maxDist) {
-            val ra = find(bucket(i)); val rb = find(bucket(j))
-            if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
-          }
-          j += 1
-        }
-        i += 1
-      }
+    val edges = buckets.valuesIterator.flatMap { bucket =>
+      bucket.indices.iterator.flatMap(i => (i + 1 until bucket.length).iterator
+        .filter(j => ham(sigHalves(bucket(i)), sigHalves(bucket(j))) <= maxDist)
+        .map(j => (bucket(i), bucket(j))))
     }
+    val root = Dedup.unionByMin(edges)
     val droppedIds = mutable.HashSet.empty[Long]
-    batch.groupBy { case (_, s) => find(s) }.values.foreach { docs =>
+    batch.groupBy { case (_, s) => root.getOrElse(s, s) }.values.foreach { docs =>
       if (docs.size > 1) {
         val minId = docs.iterator.map(_._1).min
         docs.foreach { case (id, _) => if (id != minId) droppedIds += id }
@@ -215,41 +203,22 @@ object NearDupStream {
     cache.getOrElseUpdate(seq,
       readSeqSigs(s, seqDir(storeDir, seq)))
 
-  /** Driver-side commit writes for the driver path: the rows are
-    * already local, so a Spark write would pay ~180 ms of
-    * job/committer constants per commit to produce a few KB. Write the
-    * staged file with the parquet-hadoop writer instead — zero Spark
-    * jobs, standard parquet (same optional int64/binary-UTF8 physical
-    * types and snappy codec as the engine's own writes), so every
-    * reader (the schema-pinned store read, `spark.read.parquet` in
-    * gates/specs, [[footerRowCount]]) is unchanged, and
-    * distributed-fallback batches and driver batches can share one
-    * table dir. The same [[graft.Fs.commit]] as [[commitSeqDir]]. */
-  private val admittedMsgType = org.apache.parquet.schema.MessageTypeParser
-    .parseMessageType(
-      "message spark_schema { optional int64 id; optional binary simhash (UTF8); }")
-  private val storeMsgType = org.apache.parquet.schema.MessageTypeParser
-    .parseMessageType(
-      "message spark_schema { optional binary simhash (UTF8); }")
+  /** A seq dir's columns in each table, as the driver route writes them:
+    * nullable, as Spark's parquet writer stores every column. */
+  private val admittedSchema = StructType(Seq(
+    StructField("id", LongType), StructField("simhash", StringType)))
+  private val storeSchema = StructType(Seq(StructField("simhash", StringType)))
 
-  private def commitSeqDirLocal[A](fs: FileSystem, dir: String, seq: Long,
-                                   schema: org.apache.parquet.schema.MessageType, rows: Seq[A])(
-      fill: (org.apache.parquet.example.data.Group, A) => Unit): Unit =
-    graft.Fs.commit(fs, seqDir(dir, seq)) { stage =>
-      val out = new Path(stage, s"part-00000-${java.util.UUID.randomUUID()}.snappy.parquet")
-      val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
-        .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(out, fs.getConf))
-        .withType(schema)
-        .withConf(fs.getConf)
-        .withCompressionCodec(
-          org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-        .build()
-      try rows.foreach { r =>
-        val g = new org.apache.parquet.example.data.simple.SimpleGroup(schema)
-        fill(g, r)
-        writer.write(g)
-      } finally writer.close()
-    }
+  /** [[commitSeqDir]] for rows already on the driver: the same
+    * [[graft.Fs.commit]], with the stage written by [[graft.DriverWrite]]
+    * on the batch session's Hadoop conf `conf`. Spark's file names,
+    * `_SUCCESS` and footer as the distributed route's `df.write`, and no
+    * Spark job: a write job's constants cost ~180 ms per commit for a
+    * few KB of rows. */
+  private def commitSeqDirLocal(s: SparkSession, fs: FileSystem, conf: Configuration,
+                                dir: String, seq: Long, schema: StructType,
+                                rows: Seq[InternalRow]): Unit =
+    graft.Fs.commit(fs, seqDir(dir, seq))(graft.DriverWrite.parquet(s, schema, rows, _, None, conf))
 
   /** 64-bit batch core: near-dup admission of one batch against a
     * 64-bit signature MATCH SET (any frame with a `simhash` column —
@@ -438,8 +407,9 @@ object NearDupStream {
       ("spark.sql.adaptive.enabled" -> "false"): _*) {
       val raw = spark.readStream.schema(docSchema)
         .option("maxFilesPerTrigger", 1).parquet(landingDir)
-      val storeSchema = StructType(Seq(StructField("simhash", StringType),
-        StructField("seq_batch", LongType)))
+      // the store as the distributed route reads it, its partition column
+      // pinned (INFERENCE would type `seq_batch` as int)
+      val storeTable = storeSchema.add("seq_batch", LongType)
       // per-invocation store-sig cache for the driver path (see
       // [[storeSeqSigs]]) — dead with the drain, so no cross-run state
       val sigCache = scala.collection.mutable.Map.empty[Long, Seq[String]]
@@ -501,25 +471,24 @@ object NearDupStream {
                     val seen = scala.collection.mutable.HashSet.empty[Long]
                     (prior ++ admitted).filter(r => seen.add(r._1)).toSeq
                   }
-                commitSeqDirLocal(admittedFs, admittedDir, batchId, admittedMsgType, adm) {
-                  case (g, (id, sig)) => g.append("id", id).append("simhash", sig)
-                }
+                val conf = bridge.hadoopConf(s)
+                commitSeqDirLocal(s, admittedFs, conf, admittedDir, batchId, admittedSchema,
+                  adm.map { case (id, sig) => InternalRow(id, UTF8String.fromString(sig)) })
                 // per-batch admitted signatures are globally distinct BY
                 // ADMISSION (a stored signature re-arriving is a
                 // distance-0 match and never re-admits; within a batch,
                 // colliding signatures cluster to one survivor), so the
                 // union of the seq dirs needs no distinct
                 val storeRows = ownSigs ++ admitted.map(_._2)
-                commitSeqDirLocal(storeFs, storeDir, batchId, storeMsgType, storeRows)(
-                  _.append("simhash", _))
+                commitSeqDirLocal(s, storeFs, conf, storeDir, batchId, storeSchema,
+                  storeRows.map(sig => InternalRow(UTF8String.fromString(sig))))
                 sigCache(batchId) = storeRows
               }
             case None =>
-              // the partition column pinned to the store schema (INFERENCE
-              // would type `seq_batch` as int), or empty before a first commit
+              // empty before a first commit
               val store =
-                if (storeSeqs.nonEmpty) s.read.schema(storeSchema).parquet(storeDir)
-                else s.createDataFrame(new java.util.ArrayList[Row](), storeSchema)
+                if (storeSeqs.nonEmpty) s.read.schema(storeTable).parquet(storeDir)
+                else s.createDataFrame(new java.util.ArrayList[Row](), storeTable)
               val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
               val window = store
                 .filter(col("seq_batch") < batchId && col("seq_batch") >= cutoff)

@@ -8,12 +8,14 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.graft.bridge
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
-import graft.SparkSpec
+import graft.{DriverWrite, SparkSpec}
 
 /** The driver-held write path against `df.write`: the same observed model
   * frames, written once by each, give the same tables. */
@@ -68,7 +70,9 @@ class DriverWriteSpec extends SparkSpec {
       ingested.queryExecution.optimizedPlan.asInstanceOf[LocalRelation])
     val conf = bridge.hadoopConf(spark)
     val viaDriver = WeatherPipeline.observed(raw).map { case (m, checks, df) =>
-      DriverWrite.parquet(df, new Path(s"$dir/driver/${m.path}"), m.partitionedBy, conf)
+      val (schema, rows) = bridge.collectInternal(df)
+      DriverWrite.parquet(df.sparkSession, schema, rows, new Path(s"$dir/driver/${m.path}"),
+        m.partitionedBy, conf)
       m -> checks.counts
     }
     val viaSpark = WeatherPipeline.observed(raw).map { case (m, checks, df) =>
@@ -130,6 +134,31 @@ class DriverWriteSpec extends SparkSpec {
       assert(layout(new java.io.File(s"$dir/driver/marts/dim_locations"))("").count(_.endsWith(".parquet")) == 1)
       assert(layout(new java.io.File(s"$dir/driver/marts/fct_weather_observations")) ==
         Map("" -> Seq("._SUCCESS.crc", "_SUCCESS")))
+    }
+  }
+
+  test("the near-dup admitted and store shapes, empty included: the rows-level write equals df.write") {
+    val admitted = StructType(Seq(StructField("id", LongType), StructField("simhash", StringType)))
+    val store = StructType(Seq(StructField("simhash", StringType)))
+    val conf = bridge.hadoopConf(spark)
+    withTempDir("dw-neardup") { dir =>
+      for ((name, schema, rows) <- Seq(
+             ("admitted", admitted, Seq(Row(1L, "0110100111010010"), Row(3L, "1100101000111101"))),
+             ("store", store, Seq(Row("0110100111010010"), Row("1100101000111101"))),
+             ("admitted-empty", admitted, Nil), ("store-empty", store, Nil))) {
+        val internal = rows.map(r => InternalRow.fromSeq(r.toSeq.map {
+          case v: String => UTF8String.fromString(v)
+          case v => v
+        }))
+        DriverWrite.parquet(spark, schema, internal, new Path(s"$dir/driver/$name"), None, conf)
+        spark.createDataFrame(rows.asJava, schema).coalesce(1).write.parquet(s"$dir/spark/$name")
+        val (d, s) = (new java.io.File(s"$dir/driver/$name"), new java.io.File(s"$dir/spark/$name"))
+        assert(layout(d) == layout(s), name)
+        // one schema-carrying file, even with no rows
+        assert(layout(d)("").count(_.endsWith(".parquet")) == 1, name)
+        assert(footers(spark, d) == footers(spark, s), name)
+        assert(spark.read.parquet(d.toString).collect().toSet == rows.toSet, name)
+      }
     }
   }
 }

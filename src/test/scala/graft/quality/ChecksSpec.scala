@@ -110,6 +110,13 @@ class ChecksSpec extends SparkSpec {
       "unique_city" -> 1L))
   }
 
+  test("unique: reportDf counts the duplicated keys, the observed metric the rows past each key's first") {
+    val keys = Seq("A", "A", "A", "B", "B", "C").toDF("k")
+    val unique = Seq(Unique(Seq("k")))
+    assert(counts(keys, unique) == Set(("unique_k", 2L, false)))
+    assert(observed(keys, unique) == Map("unique_k" -> 3L))
+  }
+
   test("the observed gate names what reportDf fails in the first failing tier") {
     val ids = Seq(1L, 1L).toDF("id")
     def message(gate: => Unit): String = intercept[IllegalArgumentException](gate).getMessage

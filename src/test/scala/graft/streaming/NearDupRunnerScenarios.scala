@@ -1,5 +1,9 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+
 import graft.SparkSpec
 
 /** Runner-level near-dup lifecycle scenarios shared by both signature
@@ -31,6 +35,30 @@ trait NearDupRunnerScenarios extends SparkSpec {
   private def storeRows(dir: String): Set[(String, Long)] =
     spark.read.parquet(dir).select($"simhash", $"seq_batch")
       .as[(String, Long)].collect().toSet
+
+  /** The data files of every `seq_batch=N` dir under `dir`, as (seq dir,
+    * parquet schema) pairs. Each dir must hold `_SUCCESS`, and each data
+    * file Spark's name and Spark's row metadata in its footer: the files
+    * `df.write` leaves. */
+  private def sparkFiles(dir: String): Set[(String, String)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new Path(dir)
+    val fs = root.getFileSystem(conf)
+    fs.listStatus(root).filter(_.isDirectory).toSet.flatMap { (seqDir: FileStatus) =>
+      val files = fs.listStatus(seqDir.getPath).toSeq
+      assert(files.exists(_.getPath.getName == "_SUCCESS"), seqDir.getPath)
+      files.filterNot(f => f.getPath.getName.startsWith(".") || f.getPath.getName.startsWith("_")).map { f =>
+        assert(f.getPath.getName.matches(
+          "part-[0-9]+-[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}-c000\\.snappy\\.parquet"), f.getPath)
+        val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+        try {
+          val meta = reader.getFooter.getFileMetaData
+          assert(meta.getKeyValueMetaData.containsKey("org.apache.spark.sql.parquet.row.metadata"), f.getPath)
+          seqDir.getPath.getName -> meta.getSchema.toString
+        } finally reader.close()
+      }
+    }
+  }
 
   /** Per-batch-file layout, then a replay of every crash point. A fresh
     * checkpoint reprocesses the whole landing, sending every batch back
@@ -92,16 +120,17 @@ trait NearDupRunnerScenarios extends SparkSpec {
 
   /** The same two-batch lifecycle through the driver path and, with the
     * driver-collect bound forced to 0, through the distributed path: both
-    * must commit identical admitted and store tables. */
+    * must commit identical admitted and store tables, in the files
+    * `df.write` leaves ([[sparkFiles]]) with the same parquet schemas. */
   def overBoundFallback(run: Runner, a: String, a2: String, c: String,
                         f: String): Unit = {
-    def lifecycle(uri: Boolean = false): (Set[(Long, String, Long)], Set[(String, Long)]) =
+    def lifecycle(uri: Boolean = false) =
       withDirs("neardup-fb", uri) { (landing, admitted, store, ckpt) =>
         land(landing, Seq((1L, a), (2L, a), (3L, c)))
         run(landing, admitted, store, ckpt)
         land(landing, Seq((10L, f), (11L, c), (12L, a2)))
         run(landing, admitted, store, ckpt)
-        (admittedRows(admitted), storeRows(store))
+        (admittedRows(admitted), storeRows(store), sparkFiles(admitted), sparkFiles(store))
       }
     val viaLocal = lifecycle()
     assert(lifecycle(uri = true) == viaLocal) // every dir given as a file: URI
